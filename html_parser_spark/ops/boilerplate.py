@@ -30,9 +30,11 @@ output feeds the quality/dedup tier directly.
 from __future__ import annotations
 
 import re
+from functools import partial
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
+
+from html_parser_spark.spark.pipeline import kernel_stage
 
 KILL_TAGS = frozenset(
     "nav header footer aside script style noscript form iframe".split()
@@ -177,21 +179,6 @@ def extract_main_from_root(
     }
 
 
-def main_content_udf(min_text_len: int = 25, max_link_density: float = 0.35):
-    @F.pandas_udf(MAIN_CONTENT_TYPE)
-    def _udf(html: pd.Series) -> pd.DataFrame:
-        from html_parser_spark.ops.boilerplate import extract_main
-
-        cols: dict[str, list] = {f.name: [] for f in MAIN_CONTENT_TYPE.fields}
-        for b in html:
-            r = extract_main(b, min_text_len, max_link_density)
-            for k, v in r.items():
-                cols[k].append(v)
-        return pd.DataFrame(cols, copy=False)
-
-    return _udf
-
-
 def extract_main_content(
     pages: DataFrame,
     html_col: str = "html",
@@ -200,35 +187,15 @@ def extract_main_content(
     max_html_bytes: int | None = None,
 ) -> DataFrame:
     """pages → pages + (main_text, n_blocks, n_content_blocks,
-    content_chars, boiler_chars).  ONE Arrow-batched UDF stage, no shuffle.
-
-    ``max_html_bytes``: same crawl-scale guard as the extraction kernel —
-    oversized pages route AROUND the UDF via filter+union (``when()``
-    would still evaluate the UDF for every row in the Arrow batch) and
-    come back with NULL main_text and zeroed counters."""
-    if max_html_bytes:
-        # NULL-html rows belong on the kernel side (it maps them to empty
-        # pages) — a bare length<=max predicate would drop them from BOTH
-        # branches (NULL comparison), silently losing rows
-        small = extract_main_content(
-            pages.filter(
-                F.col(html_col).isNull()
-                | (F.length(html_col) <= max_html_bytes)
-            ),
-            html_col, min_text_len, max_link_density,
-        )
-        big = pages.filter(F.length(html_col) > max_html_bytes).select(
-            *[c for c in pages.columns],
-            F.lit(None).cast("string").alias("main_text"),
-            F.lit(0).alias("n_blocks"),
-            F.lit(0).alias("n_content_blocks"),
-            F.lit(0).cast("long").alias("content_chars"),
-            F.lit(0).cast("long").alias("boiler_chars"),
-        )
-        return small.unionByName(big)
-    udf = main_content_udf(min_text_len, max_link_density)
-    out = pages.withColumn("_mc", udf(F.col(html_col)))
-    return out.select(
-        *[c for c in pages.columns],
-        *[F.col(f"_mc.{f.name}").alias(f.name) for f in MAIN_CONTENT_TYPE.fields],
+    content_chars, boiler_chars), as ONE
+    :func:`~html_parser_spark.spark.pipeline.kernel_stage`; pages over
+    ``max_html_bytes`` get NULL main_text and zeroed counters."""
+    return kernel_stage(
+        pages,
+        partial(
+            extract_main, min_text_len=min_text_len, max_link_density=max_link_density
+        ),
+        MAIN_CONTENT_TYPE,
+        max_html_bytes,
+        html_col=html_col,
     )

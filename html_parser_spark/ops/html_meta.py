@@ -18,8 +18,9 @@ from __future__ import annotations
 
 from urllib.parse import urljoin, urlparse
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
+
+from html_parser_spark.spark.pipeline import kernel_stage
 
 PAGE_META_TYPE = T.StructType(
     [
@@ -132,29 +133,13 @@ def extract_meta_from_root(root, base_url: str) -> dict:
     }
 
 
-def page_meta_udf():
-    @F.pandas_udf(PAGE_META_TYPE)
-    def _udf(url: pd.Series, html: pd.Series) -> pd.DataFrame:
-        from html_parser_spark.ops.html_meta import extract_meta
-
-        cols: dict[str, list] = {f.name: [] for f in PAGE_META_TYPE.fields}
-        for u, b in zip(url, html):
-            r = extract_meta(b, u if u is not None else "")
-            for k, v in r.items():
-                cols[k].append(v)
-        return pd.DataFrame(cols, copy=False)
-
-    return _udf
-
-
 def extract_page_meta(
     pages: DataFrame, url_col: str = "url", html_col: str = "html"
 ) -> DataFrame:
-    """pages → pages + metadata struct columns.  ONE Arrow UDF, no shuffle."""
-    out = pages.withColumn("_pm", page_meta_udf()(F.col(url_col), F.col(html_col)))
-    return out.select(
-        *[c for c in pages.columns],
-        *[F.col(f"_pm.{f.name}").alias(f.name) for f in PAGE_META_TYPE.fields],
+    """pages → pages + metadata columns, as ONE
+    :func:`~html_parser_spark.spark.pipeline.kernel_stage`."""
+    return kernel_stage(
+        pages, extract_meta, PAGE_META_TYPE, html_col=html_col, url_col=url_col
     )
 
 
@@ -214,24 +199,23 @@ def extract_page_anchors(html_bytes: bytes, base_url: str) -> list[dict]:
     return out
 
 
+def _anchors_row(html_bytes: bytes, base_url: str) -> dict:
+    return {"anchors": extract_page_anchors(html_bytes, base_url)}
+
+
 def extract_anchors(
     pages: DataFrame, url_col: str = "url", html_col: str = "html"
 ) -> DataFrame:
-    """pages → pages + ``anchors`` array<struct<href, text>>.  ONE Arrow
-    UDF, no shuffle; feeds ``anchor_text_stats``."""
-
-    @F.pandas_udf(ANCHORS_TYPE)
-    def _udf(url: pd.Series, html: pd.Series) -> pd.Series:
-        from html_parser_spark.ops.html_meta import extract_page_anchors
-
-        return pd.Series(
-            [
-                extract_page_anchors(b, u if u is not None else "")
-                for u, b in zip(url, html)
-            ]
-        )
-
-    return pages.withColumn("anchors", _udf(F.col(url_col), F.col(html_col)))
+    """pages → pages + ``anchors`` array<struct<href, text>>, as ONE
+    :func:`~html_parser_spark.spark.pipeline.kernel_stage`; feeds
+    ``anchor_text_stats``."""
+    return kernel_stage(
+        pages,
+        _anchors_row,
+        T.StructType([T.StructField("anchors", ANCHORS_TYPE)]),
+        html_col=html_col,
+        url_col=url_col,
+    )
 
 
 def anchor_text_stats(

@@ -43,8 +43,17 @@ inside an executor.  Per-page output is bounded by ``max_blocks`` /
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
+
+from html_parser_spark.spark.pipeline import kernel_stage
+
+MARKDOWN_TYPE = T.StructType(
+    [
+        T.StructField("markdown", T.StringType()),
+        T.StructField("md_chars", T.IntegerType()),
+        T.StructField("n_blocks", T.IntegerType()),
+    ]
+)
 
 _SKIP = {"script", "style", "noscript", "template", "head", "iframe", "svg"}
 _HEADINGS = {"h1": 1, "h2": 2, "h3": 3, "h4": 4, "h5": 5, "h6": 6}
@@ -216,50 +225,26 @@ def page_to_markdown(html_bytes: bytes, max_blocks: int = _MAX_LINES) -> str:
     return "\n\n".join(blocks)
 
 
+def markdown_row(html_bytes: bytes) -> dict:
+    """One page → (markdown, md_chars, n_blocks); blocks are the
+    ``\\n\\n``-separated parts, none for an empty document."""
+    md = page_to_markdown(html_bytes)
+    return {
+        "markdown": md,
+        "md_chars": len(md),
+        "n_blocks": len(md.split("\n\n")) if md else 0,
+    }
+
+
 def to_markdown(
     pages: DataFrame,
     html_col: str = "html",
     max_html_bytes: int | None = None,
 ) -> DataFrame:
-    """pages → pages + (markdown, md_chars, n_blocks): ONE Arrow UDF, zero
-    shuffle at any scale (the exact plan shape of ``extract_main_content``).
-
-    ``max_html_bytes``: same crawl-scale guard as the other page kernels —
-    oversized pages route AROUND the UDF via filter+union (``when()``
-    would still evaluate the UDF for every row in the Arrow batch) and
-    come back with NULL markdown and zeroed counters."""
-    if max_html_bytes:
-        # NULL-html rows belong on the kernel side (it maps them to empty
-        # docs) — a bare length<=max predicate would drop them from BOTH
-        # branches (NULL comparison), silently losing rows
-        small = to_markdown(
-            pages.filter(
-                F.col(html_col).isNull()
-                | (F.length(html_col) <= max_html_bytes)
-            ),
-            html_col,
-        )
-        big = pages.filter(F.length(html_col) > max_html_bytes).select(
-            *[c for c in pages.columns],
-            F.lit(None).cast("string").alias("markdown"),
-            F.lit(0).alias("md_chars"),
-            F.lit(0).alias("n_blocks"),
-        )
-        return small.unionByName(big)
-
-    @F.pandas_udf(T.StringType())
-    def _udf(html: pd.Series) -> pd.Series:
-        from html_parser_spark.ops.markdown import page_to_markdown
-
-        return html.map(page_to_markdown)
-
-    out = pages.withColumn("markdown", _udf(F.col(html_col)))
-    n_blocks = F.when(F.length("markdown") == 0, F.lit(0)).otherwise(
-        F.size(F.split("markdown", "\n\n", -1))
-    )
-    return out.select(
-        *[c for c in pages.columns],
-        "markdown",
-        F.length("markdown").alias("md_chars"),
-        n_blocks.cast("int").alias("n_blocks"),
+    """pages → pages + (markdown, md_chars, n_blocks) as ONE
+    :func:`~html_parser_spark.spark.pipeline.kernel_stage` (the plan shape
+    of ``extract_main_content``); pages over ``max_html_bytes`` get NULL
+    markdown and zeroed counters."""
+    return kernel_stage(
+        pages, markdown_row, MARKDOWN_TYPE, max_html_bytes, html_col=html_col
     )

@@ -21,10 +21,9 @@ in its CDX index for the same reason).  This module implements:
   filter+union per payload family — HTML/XML/plain through the DOM kernel
   (`spark/pipeline.py:extract_pages`), ``application/pdf`` through the
   native PDF parser (`ops/pdf.py`), everything else passed through as a
-  typed non-text row.  Filter+union (NOT a ``when()`` around the UDFs)
-  for the same reason the oversized-page guard uses it: a conditional
-  around a Python UDF still evaluates the UDF for every row in the Arrow
-  batch.  Each kernel therefore sees ONLY its own rows.
+  typed non-text row.  Filter+union, as in the oversized-page guard
+  (``spark/pipeline.py:route_oversized``): each kernel sees ONLY its own
+  rows.
 
 Scale notes (100 TB): the sniff is a handful of prefix comparisons on the
 first 1 KiB — codegen'd, no shuffle, pushdown-friendly.  The router adds
@@ -122,7 +121,12 @@ def extract_any(
     mimes → fmt='binary' passthrough rows (no text, no error — a media
     payload is data for the multimodal tier, not a parse failure)."""
     from html_parser_spark.ops.pdf import pdf_text_pages
-    from html_parser_spark.spark.pipeline import extract_pages, salted_repartition
+    from html_parser_spark.spark.pipeline import (
+        extract_pages,
+        oversized_results,
+        route_oversized,
+        salted_repartition,
+    )
 
     src = pages.select("url", "warc_ts", "html", "lang")
     if num_partitions:
@@ -138,42 +142,33 @@ def extract_any(
             max_html_bytes=max_html_bytes,
         ).withColumn("mime", F.lit(m))
         html_out = part if html_out is None else html_out.unionByName(part)
-    pdfs = src.filter(F.col("mime") == "application/pdf")
-    if max_html_bytes:
-        # same filter+union oversized guard as the HTML kernel: a
-        # pathological PDF must bound task time, not stall it
-        big_pdfs = pdfs.filter(F.length("html") > max_html_bytes).select(
+
+    def pdf_kernel(pdfs: DataFrame) -> DataFrame:
+        return pdf_text_pages(pdfs).select(
             "url",
             "warc_ts",
             "lang",
-            F.lit("oversized").alias("fmt"),
-            F.lit(None).cast("string").alias("extracted_text"),
+            F.when(F.col("pdf_text").isNotNull(), F.lit("pdf"))
+            .otherwise(F.lit("pdf_error"))
+            .alias("fmt"),
+            F.col("pdf_text").alias("extracted_text"),
             F.array().cast(_ENTRIES_T).alias("entries"),
             F.lit(0).alias("n_entries"),
-            F.length("html").alias("n_bytes_in"),
-            F.concat(
-                F.lit("oversized: "),
-                F.length("html").cast("string"),
-                F.lit(" bytes"),
+            "n_bytes_in",
+            F.when(
+                F.col("pdf_text").isNull(), F.lit("pdf parse failed")
             ).alias("error"),
             F.lit("application/pdf").alias("mime"),
         )
-        pdfs = pdfs.filter(F.length("html") <= max_html_bytes)
-    pdf_out = pdf_text_pages(pdfs).select(
-        "url",
-        "warc_ts",
-        "lang",
-        F.when(F.col("pdf_text").isNotNull(), F.lit("pdf"))
-        .otherwise(F.lit("pdf_error"))
-        .alias("fmt"),
-        F.col("pdf_text").alias("extracted_text"),
-        F.array().cast(_ENTRIES_T).alias("entries"),
-        F.lit(0).alias("n_entries"),
-        "n_bytes_in",
-        F.when(
-            F.col("pdf_text").isNull(), F.lit("pdf parse failed")
-        ).alias("error"),
-        F.lit("application/pdf").alias("mime"),
+
+    # a pathological PDF must bound task time too, not stall it
+    pdf_out = route_oversized(
+        src.filter(F.col("mime") == "application/pdf"),
+        max_html_bytes,
+        pdf_kernel,
+        lambda big: oversized_results(big).withColumn(
+            "mime", F.lit("application/pdf")
+        ),
     )
     other = src.filter(
         ~F.col("mime").isin(
@@ -191,7 +186,4 @@ def extract_any(
         F.lit(None).cast("string").alias("error"),
         "mime",
     )
-    out = html_out.unionByName(pdf_out).unionByName(other)
-    if max_html_bytes:
-        out = out.unionByName(big_pdfs)
-    return out
+    return html_out.unionByName(pdf_out).unionByName(other)

@@ -14,15 +14,16 @@ consumes the ``outlinks`` already materialized by the extract stage
 instead of re-parsing every page.
 
 Scale shape: identical to the component kernels — ONE ArrowEvalPython
-stage, zero shuffle, and the same oversized-page guard (filter + union,
-never ``when()`` around the UDF, which would still evaluate it for every
-row of the Arrow batch).
+stage, zero shuffle, and the same oversized-page guard.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from functools import partial
+
+from pyspark.sql import DataFrame, types as T
+
+from html_parser_spark.spark.pipeline import kernel_stage
 
 from .boilerplate import MAIN_CONTENT_TYPE, extract_main_from_root
 from .html_meta import PAGE_META_TYPE, extract_meta_from_root
@@ -49,23 +50,6 @@ def extract_page_full_kernel(
     return out
 
 
-def page_full_udf(min_text_len: int = 25, max_link_density: float = 0.35):
-    @F.pandas_udf(PAGE_FULL_TYPE)
-    def _udf(url: pd.Series, html: pd.Series) -> pd.DataFrame:
-        from html_parser_spark.ops.page_kernel import extract_page_full_kernel
-
-        cols: dict[str, list] = {f.name: [] for f in PAGE_FULL_TYPE.fields}
-        for u, b in zip(url, html):
-            r = extract_page_full_kernel(
-                b, u if u is not None else "", min_text_len, max_link_density
-            )
-            for k, v in r.items():
-                cols[k].append(v)
-        return pd.DataFrame(cols, copy=False)
-
-    return _udf
-
-
 def extract_page_full(
     pages: DataFrame,
     url_col: str = "url",
@@ -74,35 +58,18 @@ def extract_page_full(
     max_link_density: float = 0.35,
     max_html_bytes: int | None = None,
 ) -> DataFrame:
-    """pages → pages + main-content fields + metadata fields.  ONE Arrow
-    UDF stage, no shuffle; ``max_html_bytes`` routes oversized pages AROUND
-    the UDF via filter+union (NULL text/meta, zeroed counters)."""
-    if max_html_bytes:
-        # NULL-html rows belong on the kernel side (it maps them to empty
-        # pages); a bare length<=max predicate would drop them from BOTH
-        # branches via NULL comparison
-        small = extract_page_full(
-            pages.filter(
-                F.col(html_col).isNull() | (F.length(html_col) <= max_html_bytes)
-            ),
-            url_col, html_col, min_text_len, max_link_density,
-        )
-        zero = {"n_blocks": "int", "n_content_blocks": "int",
-                "content_chars": "long", "boiler_chars": "long",
-                "n_anchors": "int"}
-        big = pages.filter(F.length(html_col) > max_html_bytes).select(
-            *[c for c in pages.columns],
-            *[
-                (F.lit(0) if f.name in zero else F.lit(None))
-                .cast(f.dataType)
-                .alias(f.name)
-                for f in PAGE_FULL_TYPE.fields
-            ],
-        )
-        return small.unionByName(big)
-    udf = page_full_udf(min_text_len, max_link_density)
-    out = pages.withColumn("_pf", udf(F.col(url_col), F.col(html_col)))
-    return out.select(
-        *[c for c in pages.columns],
-        *[F.col(f"_pf.{f.name}").alias(f.name) for f in PAGE_FULL_TYPE.fields],
+    """pages → pages + main-content fields + metadata fields, as ONE
+    :func:`~html_parser_spark.spark.pipeline.kernel_stage`; pages over
+    ``max_html_bytes`` get NULL text/meta and zeroed counters."""
+    return kernel_stage(
+        pages,
+        partial(
+            extract_page_full_kernel,
+            min_text_len=min_text_len,
+            max_link_density=max_link_density,
+        ),
+        PAGE_FULL_TYPE,
+        max_html_bytes,
+        html_col=html_col,
+        url_col=url_col,
     )

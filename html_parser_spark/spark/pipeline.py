@@ -9,12 +9,14 @@ Physical plan (SURVEY.md §4.3):
     → sink (parquet here; Iceberg MERGE INTO in production)
 
 Everything per-document → the parse is a pure partition-parallel map; the
-only exchange is the explicit salting one.  The UDF is a single pandas UDF
-returning a struct column (Arrow-batched, no per-row Python at the Spark
-API level), honoring BASELINE.json input_hint.
+only exchange is the explicit salting one.  This kernel and the page
+kernels in ``ops/`` (main content, markdown, metadata, anchors, the fused
+page kernel) each run as one :func:`kernel_stage`.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
@@ -38,29 +40,84 @@ PARSED_TYPE = T.StructType(
 )
 
 
-@F.pandas_udf(PARSED_TYPE)
-def parse_html_udf(html: pd.Series) -> pd.DataFrame:
-    # import inside the UDF so executors resolve the package from --py-files
-    from html_parser_spark.kernel import parse_document
+def oversized_rows(
+    df: DataFrame, schema: T.StructType, fill: dict | None = None
+) -> DataFrame:
+    """``df`` + one column per ``schema`` field for pages that skip the
+    kernel: ``fill[name]`` where the caller gives one, else 0 for numeric
+    fields and NULL for the rest."""
+    fill = fill or {}
 
-    # column-wise assembly (no per-row dict scan in pd.DataFrame inference)
-    fmts, texts, entries, n_entries, errors = [], [], [], [], []
-    for b in html:
-        r = parse_document(b if b is not None else b"")
-        fmts.append(r["fmt"])
-        texts.append(r["extracted_text"])
-        entries.append(r["entries"])
-        n_entries.append(r["n_entries"])
-        errors.append(r["error"])
-    return pd.DataFrame(
-        {
-            "fmt": fmts,
-            "extracted_text": texts,
-            "entries": entries,
-            "n_entries": n_entries,
-            "error": errors,
-        },
-        copy=False,
+    def value(f: T.StructField):
+        if f.name in fill:
+            return fill[f.name]
+        return F.lit(0) if isinstance(f.dataType, T.NumericType) else F.lit(None)
+
+    return df.select(
+        *df.columns, *[value(f).cast(f.dataType).alias(f.name) for f in schema.fields]
+    )
+
+
+def route_oversized(
+    df: DataFrame,
+    max_html_bytes: int | None,
+    kernel: Callable[[DataFrame], DataFrame],
+    oversized: Callable[[DataFrame], DataFrame],
+    html_col: str = "html",
+) -> DataFrame:
+    """``kernel`` over the pages of at most ``max_html_bytes``, ``oversized``
+    over the rest, so a pathological crawl page costs one row, not a stalled
+    task.  No cap → ``kernel(df)``.
+
+    Filter+union, NOT ``when()``: a conditional around a Python UDF still
+    evaluates the UDF for every row in the Arrow batch.  NULL html goes to
+    the kernel side (kernels read it as an empty page); ``length <= cap``
+    alone is NULL for it and would drop the row from both branches."""
+    if not max_html_bytes:
+        return kernel(df)
+    fits = F.col(html_col).isNull() | (F.length(html_col) <= max_html_bytes)
+    return kernel(df.filter(fits)).unionByName(oversized(df.filter(~fits)))
+
+
+def kernel_stage(
+    df: DataFrame,
+    fn: Callable[..., dict],
+    schema: T.StructType,
+    max_html_bytes: int | None = None,
+    *,
+    html_col: str = "html",
+    url_col: str | None = None,
+    fill: dict | None = None,
+) -> DataFrame:
+    """``df`` + one column per ``schema`` field, computed per row by
+    ``fn(html)`` (or ``fn(html, url)`` when ``url_col`` is given), which
+    returns a dict keyed by the field names.  NULL html reaches ``fn`` as
+    ``b""`` and NULL url as ``""``.
+
+    ONE Arrow-batched pandas UDF returning a struct (one ArrowEvalPython
+    node, no per-row Python at the Spark API level, no shuffle), whose
+    fields are expanded next to the input columns.  ``max_html_bytes``
+    routes larger pages around it (:func:`route_oversized`); they get
+    :func:`oversized_rows` with ``fill``."""
+    names = schema.fieldNames()
+
+    @F.pandas_udf(schema)
+    def kernel(html: pd.Series, *url: pd.Series) -> pd.DataFrame:
+        rows = list(map(fn, [b if b is not None else b"" for b in html], *url))
+        return pd.DataFrame({n: [r[n] for r in rows] for n in names}, copy=False)
+
+    args = [F.col(html_col)]
+    if url_col is not None:
+        args.append(F.coalesce(F.col(url_col), F.lit("")))
+
+    def run(pages: DataFrame) -> DataFrame:
+        out = pages.withColumn("_kernel", kernel(*args))
+        return out.select(
+            *pages.columns, *[F.col(f"_kernel.{n}").alias(n) for n in names]
+        )
+
+    return route_oversized(
+        df, max_html_bytes, run, lambda d: oversized_rows(d, schema, fill), html_col
     )
 
 
@@ -77,6 +134,36 @@ def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
     return df.repartition(num_partitions, F.col("url"))
 
 
+def _results(parsed: DataFrame) -> DataFrame:
+    return parsed.select(
+        "url",
+        "warc_ts",
+        "lang",
+        "fmt",
+        "extracted_text",
+        "entries",
+        "n_entries",
+        F.length("html").alias("n_bytes_in"),
+        "error",
+    )
+
+
+def _oversized_fill() -> dict:
+    return {
+        "fmt": F.lit("oversized"),
+        "entries": F.array(),
+        "error": F.concat(
+            F.lit("oversized: "), F.length("html").cast("string"), F.lit(" bytes")
+        ),
+    }
+
+
+def oversized_results(pages: DataFrame) -> DataFrame:
+    """The results-table rows of pages routed around every kernel: fmt
+    'oversized', no text or entries, and an error note with the size."""
+    return _results(oversized_rows(pages, PARSED_TYPE, _oversized_fill()))
+
+
 def extract_pages(
     pages: DataFrame,
     num_partitions: int | None = None,
@@ -85,44 +172,19 @@ def extract_pages(
     """pages(url, warc_ts, html, text, lang) → results table (one row per url).
 
     ``max_html_bytes`` (operational guard for crawl-scale inputs): documents
-    over the cap are NOT parsed — they come back as fmt='oversized' with an
-    error note instead of stalling a task on a pathological page.  Off by
-    default so test/golden semantics are exact."""
+    over the cap are NOT parsed — they come back as
+    :func:`oversized_results` rows instead of stalling a task on a
+    pathological page.  Off by default so test/golden semantics are exact."""
+    from html_parser_spark.kernel import parse_document
+
     # project early so the scan prunes to exactly the columns we read
     src = pages.select("url", "warc_ts", "html", "lang")
     if num_partitions:
         src = salted_repartition(src, num_partitions)
-    if max_html_bytes:
-        # filter+union, NOT when(): a conditional around a Python UDF still
-        # evaluates the UDF for every row in the Arrow batch
-        small = extract_pages(src.filter(F.length("html") <= max_html_bytes))
-        big = src.filter(F.length("html") > max_html_bytes).select(
-            "url",
-            "warc_ts",
-            "lang",
-            F.lit("oversized").alias("fmt"),
-            F.lit(None).cast("string").alias("extracted_text"),
-            F.array()
-            .cast("array<struct<spelling:string,inflection:string,definitions:array<string>>>")
-            .alias("entries"),
-            F.lit(0).alias("n_entries"),
-            F.length("html").alias("n_bytes_in"),
-            F.concat(
-                F.lit("oversized: "), F.length("html").cast("string"), F.lit(" bytes")
-            ).alias("error"),
+    return _results(
+        kernel_stage(
+            src, parse_document, PARSED_TYPE, max_html_bytes, fill=_oversized_fill()
         )
-        return small.unionByName(big)
-    parsed = src.withColumn("parsed", parse_html_udf(F.col("html")))
-    return parsed.select(
-        "url",
-        "warc_ts",
-        "lang",
-        F.col("parsed.fmt").alias("fmt"),
-        F.col("parsed.extracted_text").alias("extracted_text"),
-        F.col("parsed.entries").alias("entries"),
-        F.col("parsed.n_entries").alias("n_entries"),
-        F.length("html").alias("n_bytes_in"),
-        F.col("parsed.error").alias("error"),
     )
 
 

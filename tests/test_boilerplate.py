@@ -218,17 +218,6 @@ def test_valueless_class_attr_does_not_crash():
     assert out["n_blocks"] == 1 and out["n_content_blocks"] == 1
 
 
-def test_oversized_guard_keeps_null_html(spark):
-    from html_parser_spark.ops.boilerplate import extract_main_content
-
-    rows = [(1, _page(f"<p>{LONG}</p>")), (2, None)]
-    df = spark.createDataFrame(rows, "doc_id int, html binary")
-    out = extract_main_content(df, max_html_bytes=1000)
-    got = {r["doc_id"]: r for r in out.collect()}
-    assert set(got) == {1, 2}  # NULL html must NOT vanish
-    assert got[2]["main_text"] == "" and got[2]["n_blocks"] == 0
-
-
 def test_deep_divitis_is_linear_time():
     import time
 

@@ -1,18 +1,31 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry point and contract queries of html-parser-spark.
 
-``entry(spark)`` — flagship extraction over the synthesized pages table at
-sf0.001.  ``queries()``/``oracle_sql()`` — one entry per implemented operator
-from SURVEY.md §2 + the training-data ops, DuckDB-checked at sf0.01.
+``entry(spark)`` runs the flagship extraction over the synthesized pages
+table at sf0.001.
+
+Every other query is a *contract query*: a ``q_*(spark, sf_dir)`` function
+declared once with ``@contract`` directly above it.  The declaration holds
+
+* ``oracle`` — the DuckDB SQL twin (or a zero-argument function building it)
+  that must return the same rows over the same parquet tables;
+* ``plan`` / ``must`` / ``must_not`` — optional physical-plan property: a
+  description plus substrings the executed plan must / must not contain;
+* ``plan_kwargs`` — extra arguments the plan audit calls the query with.
+
+``queries()``, ``oracle_sql()`` and ``contracts()`` are views over that one
+registry; ``tools/oracle_check.py``, ``tests/test_contract_oracle.py`` and
+``tools/plan_audit.py`` iterate it.  Adding a query is one declaration.
 
 Column names are aliased identically on both sides; floats are rounded on
-both sides (the driver hash compares values after sorting columns by name).
+both sides (the oracle hash compares values after sorting columns by name).
 """
 
 from __future__ import annotations
 
 import os
 import sys
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
+from dataclasses import dataclass
 
 _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _REPO_ROOT)
@@ -63,6 +76,64 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
+# contract registry
+
+
+@dataclass(frozen=True)
+class Contract:
+    """One contract query: the Spark function, its DuckDB twin and the plan
+    property ``tools/plan_audit.py`` asserts (``plan`` is None when the
+    query is not audited)."""
+
+    fn: Callable[..., DataFrame]
+    oracle: str | Callable[[], str]
+    plan: str | None
+    must: tuple[str, ...]
+    must_not: tuple[str, ...]
+    plan_kwargs: dict
+
+    def oracle_sql(self) -> str:
+        return self.oracle() if callable(self.oracle) else self.oracle
+
+
+_CONTRACTS: dict[str, Contract] = {}
+
+
+def contract(
+    oracle: str | Callable[[], str],
+    *,
+    plan: str | None = None,
+    must: Sequence[str] = (),
+    must_not: Sequence[str] = (),
+    plan_kwargs: dict | None = None,
+):
+    """Register the decorated ``q_*`` function under its name."""
+
+    def register(fn):
+        _CONTRACTS[fn.__name__] = Contract(
+            fn, oracle, plan, tuple(must), tuple(must_not), plan_kwargs or {}
+        )
+        return fn
+
+    return register
+
+
+def contracts() -> dict[str, Contract]:
+    """Every registered contract query, by name, in declaration order."""
+    return dict(_CONTRACTS)
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """name -> ``fn(spark, sf_dir)`` for every contract query."""
+    return {name: c.fn for name, c in _CONTRACTS.items()}
+
+
+def oracle_sql() -> dict[str, str]:
+    """name -> DuckDB SQL over the same parquet tables, for every query."""
+    return {name: c.oracle_sql() for name, c in _CONTRACTS.items()}
+
+
+# --------------------------------------------------------------------------
 # helpers
 
 
@@ -77,6 +148,17 @@ def _tbl(spark, sf_dir, name):
 # --- relational operator analogs (SURVEY.md §2.5/§2.6) --------------------
 
 
+@contract(
+    oracle="""
+        SELECT l_orderkey, l_linenumber, l_quantity,
+               l_extendedprice * (1 - l_discount) AS revenue
+        FROM lineitem
+        WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_discount > 0.05
+    """,
+    plan="predicate pushdown + column pruning",
+    must=["PushedFilters: [IsNotNull(l_shipdate)", "*(1)"],
+    must_not=["Exchange"],  # pure scan+filter+project: no shuffle at all
+)
 def q_filter_project(spark, sf_dir):
     """S1/S2 — predicate + projection with pushdown-friendly shape."""
     li = _tbl(spark, sf_dir, "lineitem")
@@ -92,6 +174,20 @@ def q_filter_project(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        SELECT l_returnflag, l_linestatus,
+               round(sum(l_quantity), 2) AS sum_qty,
+               round(sum(l_extendedprice), 2) AS sum_base_price,
+               round(avg(l_discount), 4) AS avg_disc,
+               count(*) AS count_order
+        FROM lineitem
+        WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+        GROUP BY l_returnflag, l_linestatus
+    """,
+    plan="map-side partial aggregation before the exchange",
+    must=["HashAggregate", "PushedFilters: [IsNotNull(l_shipdate)"],
+)
 def q_agg_pricing(spark, sf_dir):
     """M15-style flag/stat aggregation (TPC-H Q1 shape: map-side partial agg)."""
     li = _tbl(spark, sf_dir, "lineitem")
@@ -107,6 +203,19 @@ def q_agg_pricing(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        SELECT r_name, count(*) AS customers,
+               round(sum(c_acctbal), 2) AS total_acctbal
+        FROM customer
+        JOIN nation ON c_nationkey = n_nationkey
+        JOIN region ON n_regionkey = r_regionkey
+        GROUP BY r_name
+    """,
+    plan="broadcast dims, partial agg",
+    must=["BroadcastHashJoin", "HashAggregate", "*("],
+    must_not=["SortMergeJoin"],
+)
 def q_dim_broadcast_join(spark, sf_dir):
     """F4 analog — broadcast map-side join against small dimensions."""
     c = _tbl(spark, sf_dir, "customer")
@@ -123,6 +232,20 @@ def q_dim_broadcast_join(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        WITH w AS (
+          SELECT o_custkey, o_totalprice,
+                 lag(o_totalprice) OVER (
+                   PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+                 ) AS prev_price
+          FROM orders
+        )
+        SELECT o_custkey, count(*) AS violations
+        FROM w WHERE prev_price IS NOT NULL AND o_totalprice < prev_price
+        GROUP BY o_custkey
+    """,
+)
 def q_window_order_check(spark, sf_dir):
     """M14 — lag-over-order violation check (alphabetical-order analog)."""
     o = _tbl(spark, sf_dir, "orders")
@@ -135,6 +258,15 @@ def q_window_order_check(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        SELECT o_custkey, count(*) AS n_orders,
+               string_agg(o_orderstatus || '@' || strftime(o_orderdate, '%Y-%m-%d'),
+                          ',' ORDER BY o_orderdate, o_orderkey) AS status_seq
+        FROM orders
+        GROUP BY o_custkey
+    """,
+)
 def q_merge_by_key(spark, sf_dir):
     """M1 — merge-by-spelling analog: order-preserving group-fold of order
     statuses per customer (concat of date-ordered statuses)."""
@@ -154,6 +286,14 @@ def q_merge_by_key(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        SELECT p_partkey, p_name, round(p_retailprice, 2) AS price
+        FROM part
+        ORDER BY p_retailprice DESC, p_partkey ASC
+        LIMIT 10
+    """,
+)
 def q_topk(spark, sf_dir):
     """S3/top-k — deterministic sort + limit."""
     p = _tbl(spark, sf_dir, "part")
@@ -167,18 +307,44 @@ def q_topk(spark, sf_dir):
 # --- training-data ops over documents -------------------------------------
 
 
+@contract(
+    oracle="""
+        SELECT md5(text) AS h, count(*) AS dup_count,
+               min(doc_id) AS canonical_id
+        FROM documents GROUP BY md5(text)
+    """,
+)
 def q_exact_dedup(spark, sf_dir):
     from html_parser_spark.ops.dedup import exact_duplicates
 
     return exact_duplicates(_docs(spark, sf_dir))
 
 
+@contract(
+    oracle="""
+        SELECT doc_id,
+               md5(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS fingerprint,
+               len(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS norm_len
+        FROM documents
+    """,
+)
 def q_fingerprint(spark, sf_dir):
     from html_parser_spark.ops.text import fingerprint
 
     return fingerprint(_docs(spark, sf_dir))
 
 
+@contract(
+    oracle="""
+        SELECT doc_id,
+               CASE WHEN len(trim(text)) = 0 THEN 0
+                    ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens,
+               len(regexp_extract_all(text,
+                   ' ?[A-Za-zА-Яа-яЁё]+| ?[0-9]+| ?[^ A-Za-zА-Яа-яЁё0-9]+'))
+                 AS n_bpe_tokens
+        FROM documents
+    """,
+)
 def q_token_stats(spark, sf_dir):
     """Token counting, both ways the brief names: whitespace + BPE-ish regex."""
     from html_parser_spark.ops.text import bpe_token_count, token_count
@@ -191,6 +357,32 @@ def q_token_stats(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        WITH t AS (
+          SELECT doc_id,
+                 lower(regexp_replace(text, '\\s+', ' ', 'g')) AS tx
+          FROM documents WHERE doc_id < 60
+        ),
+        h AS (
+          SELECT doc_id,
+                 list_transform(
+                   list_transform(range(1, greatest(len(tx) - 7, 0) + 1),
+                                  i -> substr(tx, CAST(i AS INT), 8)),
+                   g -> md5(g)) AS hs
+          FROM t
+        ),
+        m AS (
+          SELECT doc_id,
+                 CASE WHEN len(hs) >= 4 THEN
+                   list_transform(range(1, len(hs) - 3 + 1),
+                     i -> list_min(hs[CAST(i AS INT):CAST(i + 3 AS INT)]))
+                 ELSE hs END AS mins
+          FROM h
+        )
+        SELECT doc_id, unnest(list_distinct(mins)) AS fingerprint FROM m
+    """,
+)
 def q_winnow_fingerprint(spark, sf_dir):
     """Winnowing (rolling k-gram window minima) — the edit-robust
     fingerprint; bounded id range keeps the row count oracle-friendly."""
@@ -201,12 +393,71 @@ def q_winnow_fingerprint(spark, sf_dir):
     )
 
 
+_STOP = ["the", "a", "of", "and", "to", "in"]
+_STOP_SUM = " + ".join(
+    f"(len(string_split(' ' || text || ' ', ' {w} ')) - 1)" for w in _STOP
+)
+
+
+@contract(
+    oracle=f"""
+        WITH f AS (
+          SELECT doc_id, lang, text,
+                 len(text) AS n_chars_m,
+                 CASE WHEN len(trim(text)) = 0 THEN 0
+                      ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens,
+                 ({_STOP_SUM}) AS n_stopwords
+          FROM documents
+        )
+        SELECT doc_id, lang, n_chars_m, n_tokens, n_stopwords,
+               CASE WHEN n_tokens > 0
+                    THEN round((n_chars_m - (n_tokens - 1)) / CAST(n_tokens AS DOUBLE), 4)
+                    ELSE 0.0 END AS mean_token_len,
+               CASE WHEN n_tokens > 0
+                    THEN round(n_stopwords / CAST(n_tokens AS DOUBLE), 4)
+                    ELSE 0.0 END AS stopword_ratio,
+               CASE WHEN n_chars_m > 0
+                    THEN floor((n_chars_m - len(regexp_replace(text,
+                           '[.,;:!?''"()-]', '', 'g')))
+                         / CAST(n_chars_m AS DOUBLE) * 10000 + 0.5) / 10000
+                    ELSE 0.0 END AS punct_ratio,
+               round(least(1.0, n_tokens / 100.0) *
+                     (1.0 - CASE WHEN n_tokens > 0
+                                 THEN round(n_stopwords / CAST(n_tokens AS DOUBLE), 4)
+                                 ELSE 0.0 END), 4) AS quality_score
+        FROM f
+    """,
+)
 def q_quality_score(spark, sf_dir):
     from html_parser_spark.ops.text import quality_features
 
     return quality_features(_docs(spark, sf_dir))
 
 
+@contract(
+    oracle="""
+        WITH toks AS (
+          SELECT doc_id,
+                 unnest(list_filter(
+                   regexp_split_to_array(lower(text), '\\s+'),
+                   x -> len(x) > 0)) AS term
+          FROM documents
+        ),
+        tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
+        dfc AS (SELECT term, count(DISTINCT doc_id) AS df
+                FROM toks GROUP BY 1),
+        n AS (SELECT count(DISTINCT doc_id) AS n FROM documents),
+        scored AS (
+          SELECT tf.doc_id, tf.term,
+                 round(tf.tf * ln((n.n + 1.0) / (dfc.df + 1.0)), 4) AS score
+          FROM tf JOIN dfc USING (term) CROSS JOIN n
+        )
+        SELECT doc_id, term, score, rank FROM (
+          SELECT *, row_number() OVER (PARTITION BY doc_id
+                    ORDER BY score DESC, term ASC) AS rank
+          FROM scored) WHERE rank <= 5
+    """,
+)
 def q_tfidf(spark, sf_dir):
     """Per-doc top-5 TF-IDF terms (corpus-relevance weighting for training-
     data filtering).  Rank uses the ROUNDED score so cross-engine ln() ulps
@@ -216,6 +467,27 @@ def q_tfidf(spark, sf_dir):
     return tfidf_top_terms(_docs(spark, sf_dir), k=5)
 
 
+@contract(
+    oracle="""
+        WITH b AS (
+          SELECT doc_id, text,
+                 (strpos('0123456789abcdef',
+                         substring(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16
+                 + strpos('0123456789abcdef',
+                          substring(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1
+                   AS bucket
+          FROM documents
+        )
+        SELECT CASE WHEN bucket < 205 THEN 'train'
+                    WHEN bucket < 230 THEN 'valid'
+                    ELSE 'test' END AS split,
+               count(*) AS n_docs,
+               min(doc_id) AS min_doc,
+               max(doc_id) AS max_doc,
+               CAST(sum(len(text)) AS BIGINT) AS total_chars
+        FROM b GROUP BY 1
+    """,
+)
 def q_data_split(spark, sf_dir):
     """Deterministic hash-based train/valid/test assignment (the reproducible
     corpus-split primitive: same doc → same split on every run and engine —
@@ -233,6 +505,47 @@ def q_data_split(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        WITH s AS (
+          SELECT doc_id,
+                 (strpos('0123456789abcdef',
+                         substring(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16
+                 + strpos('0123456789abcdef',
+                          substring(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1
+                   AS bucket,
+                 regexp_split_to_array(trim(text), '\\s+') AS w
+          FROM documents
+        ), sp AS (
+          SELECT doc_id,
+                 CASE WHEN bucket < 205 THEN 'train'
+                      WHEN bucket < 230 THEN 'valid' ELSE 'test' END AS split,
+                 list_distinct(CASE WHEN len(w) >= 8 THEN
+                   list_transform(generate_series(1, len(w) - 7),
+                                  i -> array_to_string(list_slice(w, i, i + 7), ' '))
+                 ELSE [] END) AS sh
+          FROM s
+        ), train_sh AS (
+          SELECT DISTINCT md5(unnest(sh)) AS hsh FROM sp WHERE split = 'train'
+        ), test_docs AS (
+          SELECT doc_id, CAST(len(sh) AS BIGINT) AS n_shingles FROM sp
+          WHERE split = 'test' AND len(sh) > 0
+        ), test_sh AS (
+          SELECT doc_id, md5(unnest(sh)) AS hsh FROM sp WHERE split = 'test'
+        ), hits AS (
+          SELECT doc_id, count(*) AS contaminated FROM test_sh
+          WHERE hsh IN (SELECT hsh FROM train_sh) GROUP BY doc_id
+        )
+        SELECT t.doc_id, t.n_shingles,
+               CAST(coalesce(h.contaminated, 0) AS BIGINT) AS contaminated,
+               round(coalesce(h.contaminated, 0) / t.n_shingles, 4)
+                 AS contaminated_frac
+        FROM test_docs t LEFT JOIN hits h USING (doc_id)
+    """,
+    plan="train-shingle SEMI-join on md5 keys, no nested loop",
+    must=["LeftSemi"],
+    must_not=["BroadcastNestedLoopJoin", "CartesianProduct"],
+)
 def q_contamination(spark, sf_dir):
     """Train→test n-gram contamination audit (GPT-3 appendix C / Gopher
     §A.2): for each test-split doc, the fraction of its distinct 8-word
@@ -243,6 +556,47 @@ def q_contamination(spark, sf_dir):
     return contamination_check(_docs(spark, sf_dir), shingle_k=8)
 
 
+@contract(
+    oracle="""
+        WITH t AS (
+          SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
+          FROM documents
+        ), tok AS (
+          SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens, unnest(w) AS tok
+          FROM t
+        ), wc AS (
+          SELECT doc_id, n_tokens, tok, count(*) AS c
+          FROM tok GROUP BY 1, 2, 3
+        ), top AS (
+          SELECT doc_id, n_tokens, tok AS top_word,
+                 round(c / n_tokens, 4) AS top_word_frac,
+                 row_number() OVER (PARTITION BY doc_id
+                                    ORDER BY c DESC, tok ASC) AS rn
+          FROM wc
+        ), bg AS (
+          SELECT doc_id,
+                 CASE WHEN len(w) >= 2 THEN
+                   list_transform(generate_series(1, len(w) - 1),
+                                  i -> w[i] || ' ' || w[i + 1])
+                 ELSE [] END AS gs
+          FROM t
+        ), bgc AS (
+          SELECT doc_id, g, count(*) AS c
+          FROM (SELECT doc_id, unnest(gs) AS g FROM bg) GROUP BY 1, 2
+        ), dup AS (
+          SELECT doc_id,
+                 round(sum(CASE WHEN c > 1 THEN c ELSE 0 END) / sum(c), 4)
+                   AS dup_bigram_frac
+          FROM bgc GROUP BY doc_id
+        )
+        SELECT top.doc_id, top.n_tokens, top.top_word, top.top_word_frac,
+               coalesce(dup.dup_bigram_frac, 0.0) AS dup_bigram_frac
+        FROM top LEFT JOIN dup USING (doc_id) WHERE rn = 1
+    """,
+    plan="exploded token aggs combine map-side (partial HashAggregate)",
+    must=["HashAggregate", "partial_count"],
+    must_not=["BroadcastNestedLoopJoin", "CartesianProduct"],
+)
 def q_repetition(spark, sf_dir):
     """Gopher-style repetition filter features: top-token fraction and
     duplicate-bigram occurrence fraction per document (Rae et al. §A.1.1).
@@ -253,6 +607,63 @@ def q_repetition(spark, sf_dir):
     return repetition_stats(_docs(spark, sf_dir))
 
 
+_MINHASH_CTE = """
+WITH toks AS (
+  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
+  FROM documents
+), sh AS (
+  SELECT doc_id,
+         CASE WHEN len(t) >= 3 THEN
+           list_transform(range(1, len(t) - 1),
+                          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
+         ELSE [] END AS shingles
+  FROM toks
+)
+SELECT doc_id,
+       list_min(list_transform(shingles, s -> md5('0|' || s))) AS sig_0,
+       list_min(list_transform(shingles, s -> md5('1|' || s))) AS sig_1,
+       list_min(list_transform(shingles, s -> md5('2|' || s))) AS sig_2,
+       list_min(list_transform(shingles, s -> md5('3|' || s))) AS sig_3
+FROM sh
+"""
+
+
+@contract(
+    oracle=f"""
+        WITH RECURSIVE sigs AS ({_MINHASH_CTE}),
+        bands AS (
+          SELECT doc_id, 0 AS band_id, sig_0 || '|' || sig_1 AS band_key FROM sigs
+          UNION ALL
+          SELECT doc_id, 1 AS band_id, sig_2 || '|' || sig_3 AS band_key FROM sigs
+        ),
+        pairs AS (
+          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+          FROM bands a JOIN bands b
+            ON a.band_id = b.band_id AND a.band_key = b.band_key
+           AND a.doc_id < b.doc_id
+          GROUP BY 1, 2
+        ),
+        sym AS (
+          SELECT doc_a AS v, doc_b AS u FROM pairs
+          UNION
+          SELECT doc_b, doc_a FROM pairs
+        ),
+        reach(v, lbl) AS (
+          SELECT DISTINCT v, v FROM sym
+          UNION
+          SELECT s.v, r.lbl FROM sym s JOIN reach r ON r.v = s.u
+        ),
+        losers AS (
+          SELECT v AS doc_id FROM reach GROUP BY v HAVING v <> min(lbl)
+        )
+        SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
+        FROM documents
+        WHERE doc_id NOT IN (SELECT doc_id FROM losers)
+    """,
+    plan="loser set dropped via ANTI-join (broadcastable)",
+    must=["LeftAnti"],
+    must_not=["CartesianProduct"],
+)
 def q_dedup_survivors(spark, sf_dir):
     """The deduplicated corpus (what actually ships to training): LSH
     near-dup components → drop non-canonical members via LEFT ANTI join,
@@ -264,6 +675,26 @@ def q_dedup_survivors(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        WITH t AS (
+          SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
+          FROM documents
+        ), c AS (
+          SELECT doc_id, w,
+                 unnest(generate_series(
+                   0, CAST(ceil(len(w) / 32.0) AS BIGINT) - 1)) AS chunk_idx
+          FROM t
+        )
+        SELECT doc_id, chunk_idx,
+               least(CAST(32 AS BIGINT), len(w) - chunk_idx * 32)
+                 AS n_chunk_tokens,
+               array_to_string(
+                 list_slice(w, chunk_idx * 32 + 1, chunk_idx * 32 + 32), ' ')
+                 AS chunk_text
+        FROM c
+    """,
+)
 def q_chunk_plan(spark, sf_dir):
     """Context-window chunking (sequence prep): one row per fixed-size token
     chunk per document — narrow ops only (split/sequence/explode/slice), no
@@ -273,6 +704,25 @@ def q_chunk_plan(spark, sf_dir):
     return chunk_plan(_docs(spark, sf_dir), chunk_tokens=32)
 
 
+def _pii_scan_oracle() -> str:
+    from html_parser_spark.ops.text import PII_PATTERNS
+
+    pii_counts = ",\n               ".join(
+        f"CAST(len(regexp_extract_all(text, '{pat}')) AS BIGINT) AS n_{name}"
+        for name, pat in PII_PATTERNS.items()
+    )
+    pii_total = " + ".join(
+        f"len(regexp_extract_all(text, '{pat}'))" for pat in PII_PATTERNS.values()
+    )
+    return f"""
+        SELECT doc_id,
+               {pii_counts},
+               CAST({pii_total} AS BIGINT) AS pii_total
+        FROM documents
+    """
+
+
+@contract(oracle=_pii_scan_oracle)
 def q_pii_scan(spark, sf_dir):
     """Per-document PII match counts (email/ipv4/long-digit-run) via
     dialect-portable regexes — the scrub-before-training audit.  Zero matches
@@ -283,6 +733,16 @@ def q_pii_scan(spark, sf_dir):
     return pii_scan(_docs(spark, sf_dir))
 
 
+@contract(
+    oracle="""
+        SELECT event_type,
+               round(quantile_cont(value, 0.5), 4) AS p50,
+               round(quantile_cont(value, 0.95), 4) AS p95,
+               round(quantile_cont(value, 0.99), 4) AS p99,
+               count(*) AS n_events
+        FROM events GROUP BY event_type
+    """,
+)
 def q_percentiles(spark, sf_dir):
     """Exact grouped percentiles (p50/p95/p99) over the events stream —
     the latency-SLO battery; Spark's exact `percentile` vs DuckDB
@@ -296,12 +756,33 @@ def q_percentiles(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        SELECT lang, count(*) AS docs,
+               floor((CAST(sum(len(text)) AS DOUBLE) / count(*)) * 100 + 0.5)
+                 / 100 AS avg_chars,
+               floor((CAST(sum(CASE WHEN len(trim(text)) = 0 THEN 0
+                           ELSE len(regexp_split_to_array(trim(text), '\\s+'))
+                           END) AS DOUBLE) / count(*)) * 100 + 0.5)
+                 / 100 AS avg_tokens,
+               CAST(sum(CASE WHEN regexp_matches(text, 'spark')
+                        THEN 1 ELSE 0 END) AS BIGINT)
+                 AS docs_with_spark
+        FROM documents GROUP BY lang
+    """,
+)
 def q_lang_profile(spark, sf_dir):
     from html_parser_spark.ops.text import lang_profile
 
     return lang_profile(_docs(spark, sf_dir))
 
 
+@contract(
+    oracle=_MINHASH_CTE,
+    plan="pure JVM expressions, zero Python",
+    must=["Project"],
+    must_not=["ArrowEvalPython", "BatchEvalPython"],
+)
 def q_minhash_sig(spark, sf_dir):
     from html_parser_spark.ops.dedup import minhash_signature
 
@@ -315,12 +796,61 @@ def q_minhash_sig(spark, sf_dir):
     )
 
 
+@contract(
+    oracle=f"""
+        WITH sigs AS ({_MINHASH_CTE}),
+        bands AS (
+          SELECT doc_id, 0 AS band_id, sig_0 || '|' || sig_1 AS band_key FROM sigs
+          UNION ALL
+          SELECT doc_id, 1 AS band_id, sig_2 || '|' || sig_3 AS band_key FROM sigs
+        )
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_bands
+        FROM bands a JOIN bands b
+          ON a.band_id = b.band_id AND a.band_key = b.band_key
+         AND a.doc_id < b.doc_id
+        GROUP BY a.doc_id, b.doc_id
+    """,
+)
 def q_near_dup_pairs(spark, sf_dir):
     from html_parser_spark.ops.dedup import lsh_near_duplicates
 
     return lsh_near_duplicates(_docs(spark, sf_dir), num_hashes=4, bands=2)
 
 
+@contract(
+    oracle=f"""
+        WITH RECURSIVE sigs AS ({_MINHASH_CTE}),
+        bands AS (
+          SELECT doc_id, 0 AS band_id, sig_0 || '|' || sig_1 AS band_key FROM sigs
+          UNION ALL
+          SELECT doc_id, 1 AS band_id, sig_2 || '|' || sig_3 AS band_key FROM sigs
+        ),
+        pairs AS (
+          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+          FROM bands a JOIN bands b
+            ON a.band_id = b.band_id AND a.band_key = b.band_key
+           AND a.doc_id < b.doc_id
+          GROUP BY 1, 2
+        ),
+        sym AS (
+          SELECT doc_a AS v, doc_b AS u FROM pairs
+          UNION
+          SELECT doc_b, doc_a FROM pairs
+        ),
+        reach(v, lbl) AS (
+          SELECT DISTINCT v, v FROM sym
+          UNION
+          SELECT s.v, r.lbl FROM sym s JOIN reach r ON r.v = s.u
+        ),
+        labels AS (
+          SELECT v AS doc_id, min(lbl) AS cluster_id FROM reach GROUP BY v
+        )
+        SELECT doc_id, cluster_id,
+               count(*) OVER (PARTITION BY cluster_id) AS cluster_size,
+               CAST(doc_id = cluster_id AS INT) AS is_canonical
+        FROM labels
+    """,
+)
 def q_dup_clusters(spark, sf_dir):
     """Near-dup CLUSTERING (the dedup endgame): transitive components over
     the LSH pair graph via min-label propagation (O(diameter) BSP rounds,
@@ -331,12 +861,117 @@ def q_dup_clusters(spark, sf_dir):
     return near_dup_components(_docs(spark, sf_dir), num_hashes=4, bands=2)
 
 
+@contract(
+    oracle="""
+        WITH scored AS (
+          SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                 round(list_dot_product(q.embedding, c.embedding) /
+                       (sqrt(list_dot_product(q.embedding, q.embedding)) *
+                        sqrt(list_dot_product(c.embedding, c.embedding))), 4) AS cosine
+          FROM embeddings q JOIN embeddings c ON q.vec_id < 10
+           AND c.vec_id != q.vec_id
+        ), ranked AS (
+          SELECT query_id, neighbor_id, cosine,
+                 row_number() OVER (PARTITION BY query_id
+                                    ORDER BY cosine DESC, neighbor_id ASC) AS rank
+          FROM scored
+        )
+        SELECT query_id, neighbor_id, cosine, rank
+        FROM ranked WHERE rank <= 5
+    """,
+    plan="broadcast query set + per-query window topk",
+    must=["BroadcastNestedLoopJoin", "Window"],
+    must_not=["CartesianProduct"],
+)
 def q_cosine_topk(spark, sf_dir):
     from html_parser_spark.ops.similarity import cosine_topk
 
     return cosine_topk(_tbl(spark, sf_dir, "embeddings"), query_ids_below=10, k=5)
 
 
+@contract(
+    oracle="""
+        -- one Lloyd iteration over the seed centroids, then probe+rerank.
+        -- Cluster means sum through DECIMAL(30,15): order-independent and
+        -- bit-identical with Spark's decimal-summed means.
+        WITH e AS (SELECT vec_id, embedding FROM embeddings),
+        seed AS (SELECT vec_id AS cent_id,
+                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
+                 FROM e WHERE vec_id < 16),
+        asg0 AS (
+          SELECT vec_id, cent_id, embedding FROM (
+            SELECT a.vec_id, c.cent_id, a.embedding,
+                   row_number() OVER (PARTITION BY a.vec_id ORDER BY
+                     (list_dot_product(a.embedding, c.cv) /
+                      (sqrt(list_dot_product(a.embedding, a.embedding)) *
+                       sqrt(list_dot_product(c.cv, c.cv)))) DESC,
+                     c.cent_id ASC) AS rn
+            FROM e a CROSS JOIN seed c) WHERE rn = 1
+        ),
+        ex AS (
+          SELECT cent_id,
+                 unnest(range(1, len(embedding) + 1)) AS pos,
+                 unnest(list_transform(embedding, x -> CAST(x AS DOUBLE)))
+                   AS val
+          FROM asg0
+        ),
+        sums AS (
+          SELECT cent_id, pos,
+                 sum(CAST(val AS DECIMAL(30,15))) AS s, count(*) AS c
+          FROM ex GROUP BY 1, 2
+        ),
+        refined AS (
+          SELECT cent_id, list(CAST(s AS DOUBLE) / c ORDER BY pos) AS cv
+          FROM sums GROUP BY cent_id
+        ),
+        cents AS (
+          SELECT s.cent_id, coalesce(r.cv, s.cv) AS cv
+          FROM seed s LEFT JOIN refined r USING (cent_id)
+        ),
+        assign AS (
+          SELECT vec_id, cent_id FROM (
+            SELECT a.vec_id, c.cent_id,
+                   row_number() OVER (PARTITION BY a.vec_id ORDER BY
+                     (list_dot_product(a.embedding, c.cv) /
+                      (sqrt(list_dot_product(a.embedding, a.embedding)) *
+                       sqrt(list_dot_product(c.cv, c.cv)))) DESC,
+                     c.cent_id ASC) AS rn
+            FROM e a CROSS JOIN cents c) WHERE rn = 1
+        ),
+        q AS (SELECT vec_id AS query_id, embedding AS qv
+              FROM e WHERE vec_id < 5),
+        probes AS (
+          SELECT query_id, qv, cent_id FROM (
+            SELECT q.query_id, q.qv, c.cent_id,
+                   row_number() OVER (PARTITION BY q.query_id ORDER BY
+                     (list_dot_product(q.qv, c.cv) /
+                      (sqrt(list_dot_product(q.qv, q.qv)) *
+                       sqrt(list_dot_product(c.cv, c.cv)))) DESC,
+                     c.cent_id ASC) AS rn
+            FROM q CROSS JOIN cents c) WHERE rn <= 4
+        ),
+        cand AS (
+          SELECT p.query_id, p.qv, a.vec_id
+          FROM probes p JOIN assign a USING (cent_id)
+          WHERE a.vec_id != p.query_id
+        ),
+        scored AS (
+          SELECT c.query_id, c.vec_id AS neighbor_id,
+                 round(list_dot_product(c.qv, e.embedding) /
+                       (sqrt(list_dot_product(c.qv, c.qv)) *
+                        sqrt(list_dot_product(e.embedding, e.embedding))), 4)
+                   AS cosine
+          FROM cand c JOIN e ON c.vec_id = e.vec_id
+        )
+        SELECT query_id, neighbor_id, cosine, rank FROM (
+          SELECT *, row_number() OVER (PARTITION BY query_id
+                    ORDER BY cosine DESC, neighbor_id ASC) AS rank
+          FROM scored) WHERE rank <= 5
+    """,
+    plan="broadcast centroid probe + equi-join on inverted lists",
+    must=["BroadcastNestedLoopJoin", "Join"],  # tiny centroid set broadcast
+    must_not=["CartesianProduct"],
+)
 def q_ivf_topk(spark, sf_dir):
     """IVF ANN (brief §extras names IVF explicitly): seed centroids refined
     by ONE Lloyd iteration (decimal-exact cluster means, so the trained
@@ -350,6 +985,55 @@ def q_ivf_topk(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- symbolic replay of the SQ8 kernel: floor(x*127/max|x|) int8
+        -- quantization, exact integer dot/norms (values <= 64*127^2 so
+        -- DOUBLE carries them exactly), one float division at the end.
+        WITH q AS (
+          SELECT vec_id,
+                 CASE WHEN list_max(list_transform(embedding,
+                            x -> abs(CAST(x AS DOUBLE)))) = 0
+                      THEN list_transform(embedding, x -> 0.0)
+                      ELSE list_transform(embedding,
+                             x -> floor(CAST(x AS DOUBLE) * 127.0 /
+                                  list_max(list_transform(embedding,
+                                    y -> abs(CAST(y AS DOUBLE))))))
+                 END AS qvecd
+          FROM embeddings
+        ), n AS (
+          SELECT vec_id, qvecd,
+                 CAST(list_dot_product(qvecd, qvecd) AS BIGINT) AS n2
+          FROM q
+        ), scored AS (
+          SELECT qn.vec_id AS query_id, cn.vec_id AS neighbor_id,
+                 CAST(list_dot_product(qn.qvecd, cn.qvecd) AS BIGINT)
+                   AS qdot,
+                 CASE WHEN qn.n2 = 0 OR cn.n2 = 0 THEN 0.0
+                      ELSE round(list_dot_product(qn.qvecd, cn.qvecd) /
+                           (sqrt(CAST(qn.n2 AS DOUBLE)) *
+                            sqrt(CAST(cn.n2 AS DOUBLE))), 4)
+                 END AS cosine_q
+          FROM n qn JOIN n cn
+            ON qn.vec_id < 10 AND cn.vec_id != qn.vec_id
+        ), ranked AS (
+          SELECT query_id, neighbor_id, qdot, cosine_q,
+                 row_number() OVER (PARTITION BY query_id
+                   ORDER BY cosine_q DESC, neighbor_id ASC) AS rank
+          FROM scored
+        )
+        SELECT query_id, neighbor_id, qdot, cosine_q, rank
+        FROM ranked WHERE rank <= 5
+    """,
+    plan=(
+        "SQ8 ANN: quantization is a pure-codegen projection (int8 payload = 4x less "
+        "broadcast/shuffle bytes than float32); pair scan = ONE "
+        "BroadcastNestedLoopJoin against the tiny quantized query side, per-query "
+        "top-k via partial WindowGroupLimit; zero Python"
+    ),
+    must=["BroadcastNestedLoopJoin", "WindowGroupLimit"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "SortMergeJoin"],
+)
 def q_quantized_topk(spark, sf_dir):
     """int8-quantized cosine top-k (ops/similarity.quantized_topk): the 4x
     storage/shuffle-cut ANN path.  Quantization (floor(x*127/max|x|)), the
@@ -360,6 +1044,76 @@ def q_quantized_topk(spark, sf_dir):
     return quantized_topk(_tbl(spark, sf_dir, "embeddings"), query_ids_below=10, k=5)
 
 
+@contract(
+    oracle="""
+        -- recall@5 of the int8 path vs exact float cosine: both top-k
+        -- sets re-derived symbolically, overlap counted, ppm by
+        -- integral divide (no float in the metric).
+        WITH exact_scored AS (
+          SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                 round(list_dot_product(q.embedding, c.embedding) /
+                       (sqrt(list_dot_product(q.embedding, q.embedding)) *
+                        sqrt(list_dot_product(c.embedding, c.embedding))), 4)
+                   AS cosine
+          FROM embeddings q JOIN embeddings c ON q.vec_id < 10
+           AND c.vec_id != q.vec_id
+        ), exact_topk AS (
+          SELECT query_id, neighbor_id FROM (
+            SELECT query_id, neighbor_id,
+                   row_number() OVER (PARTITION BY query_id
+                     ORDER BY cosine DESC, neighbor_id ASC) AS rank
+            FROM exact_scored) WHERE rank <= 5
+        ), qz AS (
+          SELECT vec_id,
+                 CASE WHEN list_max(list_transform(embedding,
+                            x -> abs(CAST(x AS DOUBLE)))) = 0
+                      THEN list_transform(embedding, x -> 0.0)
+                      ELSE list_transform(embedding,
+                             x -> floor(CAST(x AS DOUBLE) * 127.0 /
+                                  list_max(list_transform(embedding,
+                                    y -> abs(CAST(y AS DOUBLE))))))
+                 END AS qvecd
+          FROM embeddings
+        ), n AS (
+          SELECT vec_id, qvecd,
+                 CAST(list_dot_product(qvecd, qvecd) AS BIGINT) AS n2
+          FROM qz
+        ), quant_topk AS (
+          SELECT query_id, neighbor_id FROM (
+            SELECT query_id, neighbor_id,
+                   row_number() OVER (PARTITION BY query_id
+                     ORDER BY cosine_q DESC, neighbor_id ASC) AS rank
+            FROM (
+              SELECT qn.vec_id AS query_id, cn.vec_id AS neighbor_id,
+                     CASE WHEN qn.n2 = 0 OR cn.n2 = 0 THEN 0.0
+                          ELSE round(list_dot_product(qn.qvecd, cn.qvecd) /
+                               (sqrt(CAST(qn.n2 AS DOUBLE)) *
+                                sqrt(CAST(cn.n2 AS DOUBLE))), 4)
+                     END AS cosine_q
+              FROM n qn JOIN n cn
+                ON qn.vec_id < 10 AND cn.vec_id != qn.vec_id)
+            ) WHERE rank <= 5
+        ), hits AS (
+          SELECT e.query_id, count(*) AS overlap
+          FROM exact_topk e JOIN quant_topk t
+            ON e.query_id = t.query_id AND e.neighbor_id = t.neighbor_id
+          GROUP BY 1
+        ), qids AS (SELECT DISTINCT query_id FROM exact_topk)
+        SELECT q.query_id,
+               CAST(coalesce(h.overlap, 0) AS BIGINT) AS overlap,
+               CAST(coalesce(h.overlap, 0) * 1000000 // 5 AS BIGINT)
+                 AS recall_ppm
+        FROM qids q LEFT JOIN hits h ON q.query_id = h.query_id
+    """,
+    plan=(
+        "the SQ8 release gate: both top-k branches end in WindowGroupLimit before "
+        "their shuffles, the overlap is a broadcast equi-join of two k*|Q|-row sides, "
+        "the ppm an integral divide; zero Python, no cartesian residue beyond the two "
+        "bounded query-side broadcasts"
+    ),
+    must=["WindowGroupLimit", "BroadcastHashJoin"],
+    must_not=["ArrowEvalPython", "BatchEvalPython"],
+)
 def q_quantization_recall(spark, sf_dir):
     """Recall@k of the int8 path vs exact float cosine (ops/similarity.
     quantization_recall) — the release gate before switching a 10^12-vector
@@ -370,6 +1124,22 @@ def q_quantization_recall(spark, sf_dir):
     return quantization_recall(_tbl(spark, sf_dir, "embeddings"), query_ids_below=10, k=5)
 
 
+@contract(
+    oracle="""
+        -- list_dot_product (double accumulation) not list_cosine_similarity
+        -- (float32) so the arithmetic is bit-identical with Spark's
+        WITH e AS (SELECT * FROM embeddings WHERE vec_id < 150),
+        scored AS (
+          SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+                 round(list_dot_product(a.embedding, b.embedding) /
+                       (sqrt(list_dot_product(a.embedding, a.embedding)) *
+                        sqrt(list_dot_product(b.embedding, b.embedding))), 4)
+                   AS cosine
+          FROM e a JOIN e b ON a.vec_id < b.vec_id
+        )
+        SELECT vec_a, vec_b, cosine FROM scored WHERE cosine >= 0.35
+    """,
+)
 def q_embedding_near_dup(spark, sf_dir):
     """Embedding-cosine near-dup pairs (exact baseline on a bounded id range;
     the n_planes>0 LSH-bucketed variant is the scale path)."""
@@ -380,6 +1150,42 @@ def q_embedding_near_dup(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- replicates the deterministic md5-parity hyperplanes, the bucket
+        -- equi-join, and the in-bucket exact cosine of the scale path
+        WITH e AS (SELECT * FROM embeddings WHERE vec_id < 300),
+        planes AS (
+          SELECT p, list_transform(range(0, 64), d ->
+            CASE WHEN (strpos('0123456789abcdef',
+                       substring(md5(p || '_' || d), 6, 1)) - 1) % 2 = 1
+                 THEN 1.0 ELSE -1.0 END) AS plane
+          FROM (SELECT unnest(range(0, 2)) AS p)
+        ), signs AS (
+          SELECT e.vec_id, pl.p,
+                 CASE WHEN list_dot_product(e.embedding, pl.plane) >= 0
+                      THEN '1' ELSE '0' END AS bit
+          FROM e CROSS JOIN planes pl
+        ), buckets AS (
+          SELECT vec_id, string_agg(bit, '' ORDER BY p) AS bucket
+          FROM signs GROUP BY vec_id
+        ), be AS (
+          SELECT e.vec_id, e.embedding, b.bucket
+          FROM e JOIN buckets b USING (vec_id)
+        ), scored AS (
+          SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+                 round(list_dot_product(a.embedding, b.embedding) /
+                       (sqrt(list_dot_product(a.embedding, a.embedding)) *
+                        sqrt(list_dot_product(b.embedding, b.embedding))), 4)
+                   AS cosine
+          FROM be a JOIN be b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
+        )
+        SELECT vec_a, vec_b, cosine FROM scored WHERE cosine >= 0.3
+    """,
+    plan="bucket EQUI-join (the scale default), no nested loop",
+    must=["Join"],
+    must_not=["BroadcastNestedLoopJoin", "CartesianProduct"],
+)
 def q_embedding_near_dup_lsh(spark, sf_dir):
     """The DEFAULT (scale) path of embedding near-dup: hyperplane-LSH bucket
     join → exact cosine inside buckets only.  The oracle replicates the
@@ -391,6 +1197,25 @@ def q_embedding_near_dup_lsh(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        WITH toks AS (
+          SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
+          FROM documents WHERE doc_id < 40
+        ), sh AS (
+          SELECT doc_id, list_distinct(t) AS s
+          FROM toks
+        ), scored AS (
+          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                 round(CASE WHEN len(list_distinct(a.s || b.s)) > 0
+                       THEN len(list_intersect(a.s, b.s)) /
+                            CAST(len(list_distinct(a.s || b.s)) AS DOUBLE)
+                       ELSE 0.0 END, 4) AS jaccard
+          FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+        )
+        SELECT doc_a, doc_b, jaccard FROM scored WHERE jaccard >= 0.5
+    """,
+)
 def q_ngram_jaccard(spark, sf_dir):
     from html_parser_spark.ops.dedup import ngram_jaccard_pairs
 
@@ -399,6 +1224,49 @@ def q_ngram_jaccard(spark, sf_dir):
     return ngram_jaccard_pairs(_docs(spark, sf_dir), shingle_k=1, threshold=0.5, id_limit=40)
 
 
+@contract(
+    oracle=f"""
+        WITH sigs AS ({_MINHASH_CTE}),
+        bands AS (
+          SELECT doc_id, 0 AS band_id, sig_0 || '|' || sig_1 AS band_key FROM sigs
+          UNION ALL
+          SELECT doc_id, 1 AS band_id, sig_2 || '|' || sig_3 AS band_key FROM sigs
+        ),
+        pairs AS (
+          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+          FROM bands a JOIN bands b
+            ON a.band_id = b.band_id AND a.band_key = b.band_key
+           AND a.doc_id < b.doc_id
+          GROUP BY 1, 2
+        ),
+        toks2 AS (
+          SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
+          FROM documents
+        ),
+        sh2 AS (
+          SELECT doc_id,
+                 CASE WHEN len(t) >= 3 THEN
+                   list_distinct(list_transform(range(1, len(t) - 1),
+                                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
+                 ELSE [] END AS s
+          FROM toks2
+        ),
+        scored AS (
+          SELECT p.doc_a, p.doc_b,
+                 round(CASE WHEN len(list_distinct(a.s || b.s)) > 0
+                       THEN len(list_intersect(a.s, b.s)) /
+                            CAST(len(list_distinct(a.s || b.s)) AS DOUBLE)
+                       ELSE 0.0 END, 4) AS jaccard
+          FROM pairs p
+          JOIN sh2 a ON p.doc_a = a.doc_id
+          JOIN sh2 b ON p.doc_b = b.doc_id
+        )
+        SELECT doc_a, doc_b, jaccard FROM scored WHERE jaccard >= 0.1
+    """,
+    plan="LSH candidates verified via equi-joins, no self cross-join",
+    must=["Join"],
+    must_not=["BroadcastNestedLoopJoin", "CartesianProduct"],
+)
 def q_jaccard_verify(spark, sf_dir):
     """The scale composition: LSH banding generates candidate pairs, exact
     n-gram Jaccard verifies them via two equi-joins (no self-join anywhere)."""
@@ -409,18 +1277,75 @@ def q_jaccard_verify(spark, sf_dir):
     return ngram_jaccard_pairs(docs, shingle_k=3, threshold=0.1, candidates=cands)
 
 
+@contract(
+    oracle="""
+        -- nibble-expand md5 hex to the 60-bit string, majority-vote per bit
+        WITH toks AS (
+          SELECT doc_id, list_distinct(regexp_split_to_array(trim(text), '\\s+')) AS t
+          FROM documents
+        ), tok AS (
+          SELECT doc_id, unnest(t) AS w, len(t) AS n FROM toks
+        ), tokbits AS (
+          SELECT doc_id, n,
+                 array_to_string(list_transform(range(1, 16), i ->
+                   ['0000','0001','0010','0011','0100','0101','0110','0111',
+                    '1000','1001','1010','1011','1100','1101','1110','1111']
+                   [strpos('0123456789abcdef', substring(md5(w), i, 1))]), '') AS tb
+          FROM tok
+        ), votes AS (
+          SELECT doc_id, b.b AS b, any_value(n) AS n,
+                 sum(CAST(substring(tb, CAST(b.b AS INT), 1) AS INT)) AS s
+          FROM tokbits, (SELECT unnest(range(1, 61)) AS b) b
+          GROUP BY doc_id, b.b
+        )
+        SELECT doc_id,
+               string_agg(CASE WHEN s >= n / 2.0 THEN '1' ELSE '0' END,
+                          '' ORDER BY b) AS simhash
+        FROM votes GROUP BY doc_id
+    """,
+)
 def q_simhash(spark, sf_dir):
     from html_parser_spark.ops.dedup import simhash
 
     return simhash(_docs(spark, sf_dir))
 
 
+@contract(
+    oracle="""
+        WITH planes AS (
+          SELECT p, list_transform(range(0, 64), d ->
+            CASE WHEN (strpos('0123456789abcdef',
+                       substring(md5(p || '_' || d), 6, 1)) - 1) % 2 = 1
+                 THEN 1.0 ELSE -1.0 END) AS plane
+          FROM (SELECT unnest(range(0, 4)) AS p)
+        ), signs AS (
+          SELECT e.vec_id, pl.p,
+                 CASE WHEN list_dot_product(e.embedding, pl.plane) >= 0
+                      THEN '1' ELSE '0' END AS bit
+          FROM embeddings e CROSS JOIN planes pl
+        ), buckets AS (
+          SELECT vec_id, string_agg(bit, '' ORDER BY p) AS bucket
+          FROM signs GROUP BY vec_id
+        )
+        SELECT bucket, count(*) AS vectors FROM buckets GROUP BY bucket
+    """,
+)
 def q_lsh_buckets(spark, sf_dir):
     from html_parser_spark.ops.similarity import bucket_histogram
 
     return bucket_histogram(_tbl(spark, sf_dir, "embeddings"), n_planes=4)
 
 
+@contract(
+    oracle="""
+        SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
+               event_type,
+               count(*) AS n_events,
+               round(sum(value), 2) AS sum_value
+        FROM events
+        GROUP BY 1, 2
+    """,
+)
 def q_event_windows(spark, sf_dir):
     """Tumbling-window aggregation over the events stream table (the batch
     twin of the Structured Streaming job in html_parser_spark/streaming)."""
@@ -436,6 +1361,28 @@ def q_event_windows(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        WITH o AS (
+          SELECT user_id, ts, event_id, value,
+                 CASE WHEN lag(ts) OVER w IS NULL
+                      OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
+                      THEN 1 ELSE 0 END AS new_session
+          FROM events
+          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        ), s AS (
+          SELECT user_id, value,
+                 sum(new_session) OVER (PARTITION BY user_id
+                                        ORDER BY ts, event_id) AS session_idx
+          FROM o
+        )
+        SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
+               count(*) AS n_events,
+               CAST(round(sum(CAST(value AS DECIMAL(18,6))), 2) AS DOUBLE)
+                 AS session_value
+        FROM s GROUP BY user_id, session_idx
+    """,
+)
 def q_sessionize(spark, sf_dir):
     """Sessionization: a new session starts after a >30min gap per user —
     lag + cumulative sum window (classical stream-ish operator, batch twin)."""
@@ -465,6 +1412,21 @@ def q_sessionize(spark, sf_dir):
 # --- the parse kernel itself (rows-only unless oracle provided) -----------
 
 
+@contract(
+    oracle="""
+        -- symbolic reconstruction of the P20 innerText-flatten over the
+        -- deterministic synthetic format-A template (pages.py): per-line
+        -- whitespace runs collapse to one space, line tails are stripped
+        SELECT 'https://synth.example/' || lang || '/' || doc_id || '-0.html' AS url,
+               'A' AS fmt,
+               1 AS n_entries,
+               rtrim(regexp_replace(
+                 'DOC' || doc_id || ' сущ. ' || substr(text, 1, 2000) ||
+                 '♦ ' || substr(text, 1, 80) || ' перен. ' || substr(text, 81, 200),
+                 ' {2,}', ' ', 'g')) AS extracted_text
+        FROM documents
+    """,
+)
 def q_extract_text(spark, sf_dir):
     """The fused extraction UDF over deterministic synthetic pages.  The
     oracle reconstructs extracted_text symbolically from documents.text —
@@ -480,6 +1442,27 @@ def q_extract_text(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        SELECT nationkey FROM (
+          SELECT DISTINCT c_nationkey AS nationkey FROM customer
+          EXCEPT
+          SELECT DISTINCT s_nationkey AS nationkey FROM supplier
+        )
+        UNION ALL
+        SELECT nationkey + 1000 AS nationkey FROM (
+          SELECT DISTINCT s_nationkey AS nationkey FROM supplier
+          EXCEPT
+          SELECT DISTINCT c_nationkey AS nationkey FROM customer
+        )
+        UNION ALL
+        SELECT nationkey + 2000 AS nationkey FROM (
+          SELECT DISTINCT c_nationkey AS nationkey FROM customer
+          INTERSECT
+          SELECT DISTINCT s_nationkey AS nationkey FROM supplier
+        )
+    """,
+)
 def q_set_ops(spark, sf_dir):
     """Set operators (absent from the reference — §2.6 — provided for engine
     completeness): nations that have customers but no suppliers, via EXCEPT."""
@@ -501,6 +1484,16 @@ def q_set_ops(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        SELECT coalesce(o_orderstatus, 'ALL') AS status,
+               coalesce(o_orderpriority, 'ALL') AS priority,
+               count(*) AS n,
+               round(sum(o_totalprice), 2) AS total
+        FROM orders
+        GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
+    """,
+)
 def q_rollup(spark, sf_dir):
     """Hierarchical aggregation (ROLLUP) over orders — grouping-set coverage."""
     o = _tbl(spark, sf_dir, "orders")
@@ -516,6 +1509,18 @@ def q_rollup(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        SELECT doc_id,
+               upper(substr(text, 1, 10)) AS head_upper,
+               len(replace(text, ' ', '')) AS len_no_spaces,
+               CASE WHEN strpos(text, 'spark') IS NULL THEN 0
+                    ELSE strpos(text, 'spark') END AS spark_pos,
+               reverse(substr(text, 1, 8)) AS head_rev,
+               array_to_string(string_split(substr(text, 1, 20), ' '), '-') AS dashed
+        FROM documents
+    """,
+)
 def q_string_battery(spark, sf_dir):
     """String-function battery over documents (portable subset)."""
     d = _docs(spark, sf_dir)
@@ -530,6 +1535,16 @@ def q_string_battery(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        SELECT year(o_orderdate) AS y, month(o_orderdate) AS m,
+               count(*) AS orders,
+               round(avg(o_totalprice), 2) AS avg_price,
+               min(dayofmonth(o_orderdate)) AS first_dom
+        FROM orders
+        GROUP BY 1, 2
+    """,
+)
 def q_date_battery(spark, sf_dir):
     """Date-function battery over orders (year/month/dow aggregation)."""
     o = _tbl(spark, sf_dir, "orders")
@@ -547,6 +1562,25 @@ def q_date_battery(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        WITH ev AS (
+          SELECT event_id, user_id AS custkey, ts FROM events WHERE event_id < 2000
+        ), matched AS (
+          SELECT e.event_id, e.custkey, e.ts,
+                 -- composite scalar key: latest date, then max orderkey
+                 -- (orderkeys < 1e6 at test scales)
+                 max_by(o.o_orderkey,
+                        CAST(epoch(o.o_orderdate) AS BIGINT) * 1000000
+                        + o.o_orderkey) AS o_orderkey,
+                 max(o.o_orderdate) AS asof_time
+          FROM ev e JOIN orders o
+            ON o.o_custkey = e.custkey AND o.o_orderdate <= e.ts
+          GROUP BY e.event_id, e.custkey, e.ts
+        )
+        SELECT event_id, custkey, ts, o_orderkey, asof_time FROM matched
+    """,
+)
 def q_asof_join(spark, sf_dir):
     """As-of join (custom operator, ops/asof.py): each event matched to the
     user's latest order at-or-before the event time."""
@@ -574,6 +1608,19 @@ def q_asof_join(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        SELECT l.l_orderkey AS orderkey,
+               count(*) AS lines_in_window,
+               max(l.l_linenumber) AS max_line
+        FROM lineitem l
+        JOIN orders o
+          ON o.o_orderkey = l.l_orderkey
+         AND epoch(l.l_shipdate) >= epoch(o.o_orderdate)
+         AND epoch(l.l_shipdate) <= epoch(o.o_orderdate) + 30 * 86400
+        GROUP BY l.l_orderkey
+    """,
+)
 def q_range_join(spark, sf_dir):
     """Bucketized range join (ops/rangejoin.py): line items shipping inside
     their order's 30-day window, aggregated per order for a bounded result."""
@@ -600,6 +1647,22 @@ def q_range_join(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        WITH hourly AS (
+          SELECT date_trunc('hour', ts) AS h, event_type,
+                 count(*) AS n, sum(CAST(value AS DECIMAL(18,6))) AS s
+          FROM events GROUP BY 1, 2
+        )
+        SELECT CAST(date_trunc('day', h) AS TIMESTAMP) AS day, event_type,
+               CAST(sum(n) AS BIGINT) AS n_events,
+               CAST(round(sum(s), 2) AS DOUBLE) AS sum_value,
+               floor((CAST(sum(s) AS DOUBLE) / sum(n)) * 100 + 0.5) / 100
+                 AS avg_value,
+               count(*) AS hours_active
+        FROM hourly GROUP BY 1, 2
+    """,
+)
 def q_hypertable_rollup(spark, sf_dir):
     """Hypertable-style continuous aggregate: hourly buckets reaggregated to
     daily — the two-level rollup pattern where the fine resolution is the
@@ -632,6 +1695,29 @@ def q_hypertable_rollup(spark, sf_dir):
     return daily
 
 
+@contract(
+    oracle="""
+        -- 3-block pages: per-line collapse+trim (textflat's inner_text
+        -- line processing), blocks concatenated with no separator, final
+        -- 2+-whitespace collapse (the reduce+replaceAll of P20)
+        WITH base AS (
+          SELECT doc_id, lang,
+            trim(regexp_replace(
+              'DOC' || doc_id || ' сущ. ' || substr(text, 1, 2000),
+              '\\s+', ' ', 'g')) AS l1,
+            trim(regexp_replace(
+              '♦ ' || substr(text, 1, 80) || ' перен. ' || substr(text, 81, 200),
+              '\\s+', ' ', 'g')) AS l2
+          FROM documents
+        )
+        SELECT 'https://synth.example/' || lang || '/' || doc_id || '-0.html' AS url,
+               'A' AS fmt,
+               3 AS n_entries,
+               regexp_replace(repeat(l1 || l2, 3), '\\s{2,}', ' ', 'g')
+                 AS extracted_text
+        FROM base
+    """,
+)
 def q_extract_text_rich(spark, sf_dir):
     """The extraction kernel over MULTI-paragraph pages (3 entry blocks per
     page): the oracle reconstructs the innerText flatten symbolically with
@@ -648,6 +1734,43 @@ def q_extract_text_rich(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- reconstruct the expected main content symbolically: the two
+        -- real paragraphs survive iff >= 25 collapsed chars (the inline
+        -- 'details' anchor adds 8), the heading is promoted iff the
+        -- following paragraph is content, everything else (header, nav,
+        -- sidebar, promo, aside, footer) is boilerplate by construction
+        WITH b AS (
+          SELECT doc_id,
+                 trim(regexp_replace(substr(text, 1, 300),
+                      '\\s+', ' ', 'g')) AS bt1,
+                 trim(regexp_replace(substr(text, 301, 200) || ' details',
+                      '\\s+', ' ', 'g')) AS bt2
+          FROM documents
+        ), k AS (
+          SELECT doc_id,
+                 list_filter([
+                   CASE WHEN length(bt1) >= 25
+                        THEN 'Section DOC' || doc_id END,
+                   CASE WHEN length(bt1) >= 25 THEN bt1 END,
+                   CASE WHEN length(bt2) >= 25 THEN bt2 END
+                 ], x -> x IS NOT NULL) AS kept
+          FROM b
+        )
+        SELECT doc_id,
+               array_to_string(kept, chr(10)) AS main_text,
+               CAST(4 AS INTEGER) AS n_blocks,
+               CAST(len(kept) AS INTEGER) AS n_content_blocks,
+               CAST(COALESCE(list_aggregate(
+                      list_transform(kept, x -> length(x)), 'sum'),
+                    0) AS BIGINT) AS content_chars
+        FROM k
+    """,
+    plan="boilerplate strip is ONE Arrow UDF stage, zero shuffle",
+    must=["ArrowEvalPython"],
+    must_not=["Exchange", "Join", "Window"],
+)
 def q_main_content(spark, sf_dir):
     """Boilerplate removal (jusText-style) over synthesized crawl pages:
     header/nav/aside/footer/sidebar furniture plus a link-dense promo block
@@ -698,6 +1821,73 @@ def q_main_content(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- replay the COMPOSED flagship pipeline symbolically:
+        -- noindex exclusion (doc_id % 5 = 0 pages carry the meta tag),
+        -- latest-capture election (the vNEW body wins on warc_ts),
+        -- jusText block rules (paragraph kept iff >= 25 collapsed
+        -- chars; heading promoted iff its paragraph is content), and
+        -- the repetition quality gate (n_tokens >= 5, top-word and
+        -- dup-bigram fractions, round-4 like the Spark op).  The
+        -- near-dup survivor stage is a designed pass-through: the
+        -- injected per-doc u<id> token sits in every 3-gram shingle,
+        -- so no two docs can share an LSH band; the final set is the
+        -- gate's, row for row.
+        WITH b AS (
+          SELECT doc_id, lang,
+                 trim(regexp_replace(substr(text, 1, 300), '\\s+',
+                      ' u' || doc_id || ' ', 'g')) AS bt
+          FROM documents
+          WHERE doc_id % 5 <> 0
+        ), ft AS (
+          SELECT doc_id, lang,
+                 array_to_string(list_filter([
+                   CASE WHEN length(bt) >= 25
+                        THEN 'Doc ' || doc_id || ' vNEW' END,
+                   CASE WHEN length(bt) >= 25 THEN bt END
+                 ], x -> x IS NOT NULL), chr(10)) AS text
+          FROM b
+        ), t AS (
+          SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
+          FROM ft
+        ), tok AS (
+          SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens,
+                 unnest(w) AS tok
+          FROM t
+        ), wc AS (
+          SELECT doc_id, n_tokens, tok, count(*) AS c
+          FROM tok GROUP BY 1, 2, 3
+        ), top AS (
+          SELECT doc_id, n_tokens, round(max(c) / n_tokens, 4)
+                   AS top_word_frac
+          FROM wc GROUP BY doc_id, n_tokens
+        ), bg AS (
+          SELECT doc_id,
+                 CASE WHEN len(w) >= 2 THEN
+                   list_transform(generate_series(1, len(w) - 1),
+                                  i -> w[i] || ' ' || w[i + 1])
+                 ELSE [] END AS gs
+          FROM t
+        ), bgc AS (
+          SELECT doc_id, g, count(*) AS c
+          FROM (SELECT doc_id, unnest(gs) AS g FROM bg) GROUP BY 1, 2
+        ), dup AS (
+          SELECT doc_id,
+                 round(sum(CASE WHEN c > 1 THEN c ELSE 0 END) / sum(c), 4)
+                   AS dup_bigram_frac
+          FROM bgc GROUP BY doc_id
+        ), gate AS (
+          SELECT top.doc_id
+          FROM top LEFT JOIN dup USING (doc_id)
+          WHERE n_tokens >= 5 AND top_word_frac <= 0.5
+            AND coalesce(dup_bigram_frac, 0.0) <= 0.9
+        )
+        SELECT ft.text, ft.lang,
+               CAST(length(ft.text) AS BIGINT) AS n_chars
+        FROM ft JOIN gate USING (doc_id)
+    """,
+)
 def q_flagship_curate(spark, sf_dir):
     """End-to-end contract row for the COMPOSED pipeline: runs the real
     ``jobs/flagship_job.main()`` (extract → graph → curate, the same
@@ -806,6 +1996,38 @@ def q_flagship_curate(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- rebuild every metadata field symbolically: titles/descriptions
+        -- are whitespace-collapsed substrings of text, canonical and the
+        -- second outlink are root-relative hrefs resolved against the
+        -- page url, og:title exists only for even doc_ids, the mailto:
+        -- anchor counts toward n_anchors but emits no edge
+        SELECT doc_id,
+               'https://www.site' || (doc_id % 10) || '.com/pages/'
+                   || doc_id || '.html' AS url,
+               'Doc ' || doc_id || ' :: '
+                   || trim(regexp_replace(substr(text, 1, 40),
+                           '\\s+', ' ', 'g')) AS title,
+               trim(regexp_replace(substr(text, 1, 80),
+                    '\\s+', ' ', 'g')) AS description,
+               'https://www.site' || (doc_id % 10) || '.com/d/'
+                   || doc_id AS canonical,
+               CASE WHEN doc_id % 2 = 0 THEN 'OG ' || doc_id END
+                   AS og_title,
+               'utf-8' AS charset,
+               array_to_string(
+                   ['https://h' || (doc_id % 40) || '.example.com/p'
+                        || doc_id,
+                    'https://www.site' || (doc_id % 10) || '.com/local/'
+                        || ((doc_id * 3) % 7)], '|') AS outlinks,
+               CAST(3 AS INTEGER) AS n_anchors
+        FROM documents
+    """,
+    plan="metadata/outlink extraction is ONE Arrow UDF, zero shuffle",
+    must=["ArrowEvalPython"],
+    must_not=["Exchange", "Join", "Window"],
+)
 def q_html_meta(spark, sf_dir):
     """Page-identity metadata + outlink extraction (ops/html_meta.py) over
     synthesized crawl pages: title/description whitespace collapse, relative
@@ -883,6 +2105,58 @@ def _synth_host_edges(docs):
     )
 
 
+def _pagerank_oracle_sql(iterations: int = 3) -> str:
+    """Unrolled-CTE replica of ops/linkgraph.pagerank_fixed_point over the
+    q_pagerank synthetic graph.  Every step is 64-bit integer arithmetic
+    (``//`` floor division, positive operands), so the chain is bit-exact
+    against Spark regardless of shuffle/aggregation order."""
+    S, num, den = 10**12, 85, 100
+    parts = [f"""e0 AS (
+  SELECT doc_id % 40 AS s, (doc_id * 7 + 3) % 40 AS t FROM documents
+  UNION ALL
+  SELECT doc_id % 40, (doc_id * 13 + 11) % 45 FROM documents
+), edges AS (
+  SELECT 'h' || s AS src, 'h' || t AS dst, CAST(COUNT(*) AS BIGINT) AS weight
+  FROM e0 WHERE s <> t GROUP BY 1, 2
+), nodes AS (
+  SELECT src AS node FROM edges UNION SELECT dst FROM edges
+), nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes
+), outw AS (
+  SELECT src, CAST(SUM(weight) AS BIGINT) AS w_out FROM edges GROUP BY src
+), r0 AS (
+  SELECT node, CAST({S} // n AS BIGINT) AS rank FROM nodes, nn
+)"""]
+    for k in range(iterations):
+        parts.append(f""", d{k} AS (
+  SELECT CAST(COALESCE(SUM(rank), 0) AS BIGINT) AS dang
+  FROM r{k} WHERE node NOT IN (SELECT src FROM outw)
+), c{k} AS (
+  SELECT e.dst AS node,
+         CAST(SUM((r.rank * e.weight) // o.w_out) AS BIGINT) AS in_sum
+  FROM edges e
+  JOIN r{k} r ON r.node = e.src
+  JOIN outw o ON o.src = e.src
+  GROUP BY e.dst
+), r{k + 1} AS (
+  SELECT n.node,
+         CAST(({den - num} * {S}) // ({den} * nn.n)
+              + ({num} * (COALESCE(c.in_sum, 0) + d{k}.dang // nn.n)) // {den}
+              AS BIGINT) AS rank
+  FROM nodes n LEFT JOIN c{k} c ON c.node = n.node, nn, d{k}
+)""")
+    return "WITH " + "".join(parts) + f"\nSELECT node, rank FROM r{iterations}"
+
+
+@contract(
+    oracle=_pagerank_oracle_sql(3),
+    plan=(
+        "edge/rank equi-joins + partial-agg sums; dangling mass is a 1-row broadcast, "
+        "never a cross join over nodes"
+    ),
+    must=["HashAggregate", "Join"],
+    must_not=["CartesianProduct"],
+    plan_kwargs={"checkpoint": False},
+)
 def q_pagerank(spark, sf_dir, checkpoint=True):
     """Host-level PageRank in fixed-point integer arithmetic
     (ops/linkgraph.py): a synthetic 45-host graph derived from doc_id
@@ -902,6 +2176,22 @@ def q_pagerank(spark, sf_dir, checkpoint=True):
     )
 
 
+@contract(
+    oracle="""
+        -- expected = DuckDB's OWN nfc_normalize (utf8proc) over the
+        -- invisible-stripped text: ZWSP + soft hyphen vanish (2
+        -- invisibles), the decomposed e+U+0301 must compose to é —
+        -- cross-engine Unicode-normalization equality, not regex echo
+        SELECT doc_id,
+               CAST(2 AS BIGINT) AS n_invisibles,
+               nfc_normalize(text || ' e' || chr(769) || 'tude fin')
+                   AS clean_text
+        FROM documents
+    """,
+    plan="invisible strip JVM-side, ONE Arrow NFC stage, zero shuffle",
+    must=["ArrowEvalPython"],
+    must_not=["Exchange", "Join", "Window"],
+)
 def q_text_clean(spark, sf_dir):
     """Unicode web-text cleanup (ops/text.py): plant a zero-width space,
     a soft hyphen, and a DECOMPOSED e+combining-acute after each document's
@@ -929,6 +2219,28 @@ def q_text_clean(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- re-derive the exploded sitemap rows: index hosts emit one
+        -- child-sitemap loc, urlset hosts two page locs (whitespace
+        -- around the second loc must be trimmed by the parser)
+        SELECT 's' || (doc_id % 10) AS host, 'sitemap' AS kind,
+               'https://s' || (doc_id % 10) || '.com/child' || doc_id
+                   || '.xml' AS loc
+        FROM documents WHERE doc_id % 20 = 0
+        UNION ALL
+        SELECT 's' || (doc_id % 10), 'url',
+               'https://s' || (doc_id % 10) || '.com/p' || doc_id
+        FROM documents WHERE doc_id % 20 <> 0
+        UNION ALL
+        SELECT 's' || (doc_id % 10), 'url',
+               'https://s' || (doc_id % 10) || '.com/q' || doc_id
+        FROM documents WHERE doc_id % 20 <> 0
+    """,
+    plan="regexp_extract_all + narrow explode, zero Python/shuffle",
+    must=["Generate"],
+    must_not=["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join"],
+)
 def q_sitemap(spark, sf_dir):
     """Sitemap parsing (ops/web.sitemap_urls): most hosts publish a urlset
     with two page entries (one whitespace-padded), every 20th doc publishes
@@ -957,6 +2269,25 @@ def q_sitemap(spark, sf_dir):
     return sitemap_urls(maps).select("host", "kind", "loc")
 
 
+@contract(
+    oracle="""
+        -- closed-form expected identity: P6 -> ppm, P5 -> pgm (both
+        -- 8-bit with the synthesized dims), the NOTIMG quarter -> NULLs
+        SELECT doc_id,
+               CASE doc_id % 4 WHEN 3 THEN NULL
+                    WHEN 2 THEN 'pgm' ELSE 'ppm' END AS format,
+               CAST(CASE WHEN doc_id % 4 = 3 THEN 0
+                    ELSE doc_id % 300 + 1 END AS INTEGER) AS width,
+               CAST(CASE WHEN doc_id % 4 = 3 THEN 0
+                    ELSE doc_id % 200 + 1 END AS INTEGER) AS height,
+               CAST(CASE WHEN doc_id % 4 = 3 THEN 0
+                    ELSE 8 END AS INTEGER) AS bit_depth
+        FROM documents
+    """,
+    plan="ONE Arrow header-sniff stage, zero shuffle",
+    must=["ArrowEvalPython"],
+    must_not=["Exchange", "Join", "Window"],
+)
 def q_image_headers(spark, sf_dir):
     """Real media-identity parsing (ops/multimodal.parse_image_header):
     three quarters of docs carry a PPM/PGM payload (ASCII header —
@@ -992,6 +2323,34 @@ def q_image_headers(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- the same 16-bit md5-prefix bucket via strpos arithmetic;
+        -- thresholds = fraction * 65536 (en 25%, zh 75%, de 50%,
+        -- es/fr dropped)
+        WITH b AS (
+          SELECT doc_id, lang,
+                 md5('strat' || CAST(doc_id AS VARCHAR)) AS h
+          FROM documents
+        ), v AS (
+          SELECT doc_id, lang,
+                 (strpos('0123456789abcdef', substring(h, 1, 1)) - 1) * 4096
+               + (strpos('0123456789abcdef', substring(h, 2, 1)) - 1) * 256
+               + (strpos('0123456789abcdef', substring(h, 3, 1)) - 1) * 16
+               + (strpos('0123456789abcdef', substring(h, 4, 1)) - 1)
+                   AS bucket
+          FROM b
+        )
+        SELECT doc_id, lang FROM v
+        WHERE bucket < CASE lang WHEN 'en' THEN 16384
+                                 WHEN 'zh' THEN 49152
+                                 WHEN 'de' THEN 32768
+                                 ELSE 0 END
+    """,
+    plan="pure per-row hash filter, zero shuffle",
+    must=["Filter"],
+    must_not=["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join", "Window"],
+)
 def q_stratified_sample(spark, sf_dir):
     """Deterministic per-stratum corpus sampling
     (ops/corpus.stratified_sample): keep a doc iff its 16-bit md5-prefix
@@ -1007,6 +2366,33 @@ def q_stratified_sample(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- same whitespace tokenization as q_tfidf; both counters in
+        -- one GROUP BY; rank = count desc, term asc over the top 50
+        WITH toks AS (
+          SELECT doc_id,
+                 unnest(list_filter(
+                   regexp_split_to_array(lower(text), '\\s+'),
+                   x -> len(x) > 0)) AS term
+          FROM documents
+        ), v AS (
+          SELECT term, count(*) AS term_count,
+                 count(DISTINCT doc_id) AS doc_count
+          FROM toks GROUP BY term
+        )
+        SELECT term, term_count, doc_count,
+               row_number() OVER (ORDER BY term_count DESC, term ASC)
+                 AS rank
+        FROM v ORDER BY term_count DESC, term ASC LIMIT 50
+    """,
+    plan=(
+        "partial-agg groupBy + distributed TakeOrdered (no full-vocab single-partition "
+        "sort)"
+    ),
+    must=["HashAggregate", "TakeOrderedAndProject"],
+    must_not=["ArrowEvalPython", "BatchEvalPython"],
+)
 def q_vocab(spark, sf_dir):
     """Corpus vocabulary builder (ops/corpus.build_vocab): top-50 terms
     with occurrence + document-frequency counts and a deterministic rank
@@ -1051,6 +2437,53 @@ def _bpe_seed_merges() -> list[tuple[str, str]]:
     return train_bpe(_BPE_SEED_FREQS, n_merges=_BPE_SEED_N_MERGES)
 
 
+def _bpe_word_sql() -> str:
+    # Symbolic BPE encode: a word becomes '‖c1‖‖c2‖…‖</w>‖' and each merge
+    # (a,b) is a left-to-right replace of '‖a‖‖b‖' with '‖ab‖', applied in
+    # rank order (innermost = rank 0).  The merge literals are ASCII from
+    # the fixed seed table, so no SQL-quoting hazard; the delimiter char is
+    # stripped from the input on BOTH engines.
+    bpe_word = (
+        "list_aggregate(list_transform(regexp_split_to_array(w, ''),"
+        " c -> '‖' || c || '‖'), 'string_agg', '') || '‖</w>‖'"
+    )
+    for _a, _b in _bpe_seed_merges():
+        bpe_word = f"replace({bpe_word}, '‖{_a}‖‖{_b}‖', '‖{_a}{_b}‖')"
+    return bpe_word
+
+
+@contract(
+    oracle=lambda: f"""
+        WITH d AS (
+          SELECT doc_id,
+                 list_filter(
+                   regexp_split_to_array(
+                     lower(trim(replace(text, '‖', ''))), '\\s+'),
+                   x -> len(x) > 0) AS words
+          FROM documents
+        ), s AS (
+          SELECT doc_id,
+                 CAST(len(words) AS BIGINT) AS n_words,
+                 coalesce(list_aggregate(
+                   list_transform(words, w -> {_bpe_word_sql()}),
+                   'string_agg', ''), '') AS stream
+          FROM d
+        )
+        SELECT doc_id, n_words,
+               CAST((len(stream) - len(replace(stream, '‖', ''))) // 2
+                    AS BIGINT) AS n_tokens,
+               CASE WHEN stream = '' THEN ''
+                    ELSE replace(trim(stream, '‖'), '‖‖', ' ')
+               END AS bpe_text
+        FROM s
+    """,
+    plan=(
+        "learned-subword corpus encode: scan → single mapInPandas (merges in the "
+        "closure), zero shuffle"
+    ),
+    must=["MapInPandas"],
+    must_not=["Exchange", "Window", "Join", "BatchEvalPython"],
+)
 def q_bpe_encode(spark, sf_dir):
     """Learned-subword (BPE) corpus encoding (ops/bpe.bpe_encode): apply a
     deterministic seed-trained merge list to every document — ONE
@@ -1073,6 +2506,45 @@ def q_bpe_encode(spark, sf_dir):
     return bpe_encode(docs, _bpe_seed_merges())
 
 
+@contract(
+    oracle=lambda: f"""
+        -- same symbolic encode as q_bpe_encode, aggregated per lang;
+        -- fertility = one double division of two exact integer sums
+        WITH d AS (
+          SELECT doc_id, lang,
+                 list_filter(
+                   regexp_split_to_array(
+                     lower(trim(replace(text, '‖', ''))), '\\s+'),
+                   x -> len(x) > 0) AS words
+          FROM documents
+        ), s AS (
+          SELECT doc_id, lang,
+                 CAST(len(words) AS BIGINT) AS n_words,
+                 coalesce(list_aggregate(
+                   list_transform(words, w -> {_bpe_word_sql()}),
+                   'string_agg', ''), '') AS stream
+          FROM d
+        ), t AS (
+          SELECT lang, n_words,
+                 CAST((len(stream) - len(replace(stream, '‖', ''))) // 2
+                      AS BIGINT) AS n_tokens
+          FROM s
+        )
+        SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+               CAST(sum(n_words) AS BIGINT) AS n_words,
+               CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
+               CASE WHEN sum(n_words) > 0 THEN
+                 round(CAST(sum(n_tokens) AS DOUBLE) / sum(n_words), 4)
+               END AS fertility
+        FROM t GROUP BY lang
+    """,
+    plan=(
+        "tokenizer-fit audit: ONE mapInPandas encode + ONE partial-agg groupBy (no "
+        "Window, no cartesian)"
+    ),
+    must=["MapInPandas", "HashAggregate"],
+    must_not=["Window", "CartesianProduct", "BatchEvalPython"],
+)
 def q_bpe_fertility(spark, sf_dir):
     """Per-language BPE fertility audit (ops/bpe.fertility_by_group):
     subword pieces per word under the seed-trained merges — ONE encode
@@ -1087,6 +2559,59 @@ def q_bpe_fertility(spark, sf_dir):
     return fertility_by_group(docs, _bpe_seed_merges())
 
 
+@contract(
+    oracle="""
+        -- symbolic replay of every C4 rule over the same closed-form
+        -- multi-line pages: split/trim, terminal punctuation, >=3
+        -- words, no 'javascript'; page: no lorem ipsum, no brace,
+        -- >=3 kept lines
+        WITH src AS (
+          SELECT doc_id,
+            'This is a fine opening line number ' || doc_id || '.'
+              || chr(10) ||
+            'too short.' || chr(10) ||
+            'Please enable javascript to continue.' || chr(10) ||
+            'no terminal punctuation here' || chr(10) ||
+            repeat('Another perfectly good line indeed.' || chr(10),
+                   CAST(doc_id % 5 AS INT)) ||
+            CASE WHEN doc_id % 17 = 0
+                 THEN 'We sprinkle Lorem Ipsum here.' || chr(10)
+                 ELSE '' END ||
+            CASE WHEN doc_id % 13 = 0
+                 THEN 'function() { return 1; }' || chr(10)
+                 ELSE '' END ||
+            'closing line with a full stop.' AS text
+          FROM documents
+        ), l AS (
+          SELECT doc_id, text,
+                 list_transform(string_split(text, chr(10)),
+                                x -> trim(x)) AS lines
+          FROM src
+        ), k AS (
+          SELECT doc_id, text, lines,
+                 list_filter(lines, x ->
+                   regexp_matches(x, '[.!?"”]$')
+                   AND len(regexp_split_to_array(x, '\\s+')) >= 3
+                   AND NOT contains(lower(x), 'javascript')) AS kept
+          FROM l
+        )
+        SELECT doc_id,
+               CAST(len(lines) AS BIGINT) AS n_lines_in,
+               CAST(len(kept) AS BIGINT) AS n_lines_kept,
+               (NOT contains(lower(text), 'lorem ipsum')
+                AND NOT contains(text, '{')
+                AND len(kept) >= 3) AS page_keep,
+               array_to_string(kept, chr(10)) AS clean_text
+        FROM k
+    """,
+    plan=(
+        "C4 line cleaning is pure codegen (split/filter/join inside one projection): "
+        "zero shuffle, zero Python"
+    ),
+    must=["*(1)"],
+    must_not=["Exchange", "Window", "Join", "ArrowEvalPython", "BatchEvalPython",
+              "Generate"],
+)
 def q_c4_lines(spark, sf_dir):
     """C4 line-level cleaning (ops/text.c4_line_filter, Raffel et al.
     §2.2): multi-line pages synthesized in closed form — a good opening
@@ -1123,6 +2648,42 @@ def q_c4_lines(spark, sf_dir):
     return c4_line_filter(pages, min_words_per_line=3, min_kept_lines=3)
 
 
+@contract(
+    oracle="""
+        -- identical sentinel-injection split: terminal punct +
+        -- whitespace becomes punct + U+241E, split, trim, drop empty
+        WITH src AS (
+          SELECT doc_id,
+                 'First sentence number ' || doc_id
+                   || ' here.  Second one follows!   Is this the third? '
+                   || text || '.' AS t
+          FROM documents
+        ), sp AS (
+          SELECT doc_id,
+                 list_filter(
+                   list_transform(
+                     string_split(
+                       regexp_replace(trim(t), '([.!?])\\s+', '\\1␞', 'g'),
+                       '␞'),
+                     x -> trim(x)),
+                   x -> len(x) > 0) AS sents
+          FROM src
+        )
+        SELECT doc_id,
+               CAST(unnest(generate_series(0, len(sents) - 1)) AS BIGINT)
+                 AS sent_idx,
+               unnest(sents) AS sentence,
+               CAST(len(regexp_split_to_array(unnest(sents), '\\s+'))
+                    AS BIGINT) AS n_sent_tokens
+        FROM sp
+    """,
+    plan=(
+        "sentence segmentation is narrow replace/split/explode: zero shuffle, zero "
+        "Python"
+    ),
+    must=["Generate"],
+    must_not=["Exchange", "Window", "Join", "ArrowEvalPython", "BatchEvalPython"],
+)
 def q_sentence_split(spark, sf_dir):
     """Sentence segmentation (ops/text.sentence_split): pages synthesized
     with a closed-form 4-sentence shape (declarative + exclamation +
@@ -1143,6 +2704,63 @@ def q_sentence_split(spark, sf_dir):
     return sentence_split(docs.select("doc_id", text.alias("text")))
 
 
+@contract(
+    oracle="""
+        -- RE2 script classes over the same closed-form mixed-script
+        -- text; dominant = alphabetically first script at the max
+        WITH src AS (
+          SELECT doc_id,
+                 CASE WHEN doc_id % 97 = 0 THEN '0123 4567 !!'
+                      ELSE text
+                        || repeat(' привет мир', CAST(doc_id % 40 AS INT))
+                        || CASE WHEN doc_id % 3 = 1 THEN ' γειά σου κόσμε'
+                                WHEN doc_id % 3 = 2 THEN ' 你好世界 こんにちは'
+                                ELSE '' END
+                 END AS t
+          FROM documents
+        ), c AS (
+          SELECT doc_id,
+                 CAST(len(regexp_extract_all(t, '\\p{Arabic}')) AS BIGINT)
+                   AS n_arabic,
+                 CAST(len(regexp_extract_all(t,
+                   '[\\p{Han}\\p{Hiragana}\\p{Katakana}\\p{Hangul}]'))
+                   AS BIGINT) AS n_cjk,
+                 CAST(len(regexp_extract_all(t, '\\p{Cyrillic}')) AS BIGINT)
+                   AS n_cyrillic,
+                 CAST(len(regexp_extract_all(t, '\\p{Greek}')) AS BIGINT)
+                   AS n_greek,
+                 CAST(len(regexp_extract_all(t, '\\p{Latin}')) AS BIGINT)
+                   AS n_latin
+          FROM src
+        )
+        SELECT doc_id, n_arabic, n_cjk, n_cyrillic, n_greek, n_latin,
+               n_arabic + n_cjk + n_cyrillic + n_greek + n_latin
+                 AS n_script_chars,
+               CASE WHEN n_arabic + n_cjk + n_cyrillic + n_greek
+                         + n_latin = 0 THEN NULL
+                    WHEN n_arabic = greatest(n_arabic, n_cjk, n_cyrillic,
+                                             n_greek, n_latin)
+                      THEN 'arabic'
+                    WHEN n_cjk = greatest(n_arabic, n_cjk, n_cyrillic,
+                                          n_greek, n_latin) THEN 'cjk'
+                    WHEN n_cyrillic = greatest(n_arabic, n_cjk,
+                                               n_cyrillic, n_greek,
+                                               n_latin) THEN 'cyrillic'
+                    WHEN n_greek = greatest(n_arabic, n_cjk, n_cyrillic,
+                                            n_greek, n_latin)
+                      THEN 'greek'
+                    ELSE 'latin'
+               END AS dominant_script
+        FROM c
+    """,
+    plan=(
+        "script routing is pure codegen (five regexp_counts in one projection): zero "
+        "shuffle, zero Python"
+    ),
+    must=["*(1)"],
+    must_not=["Exchange", "Window", "Join", "ArrowEvalPython", "BatchEvalPython",
+              "Generate"],
+)
 def q_script_profile(spark, sf_dir):
     """Unicode-script routing (ops/text.script_profile): docs synthesized
     with mixed scripts in closed form — a Cyrillic phrase repeated
@@ -1169,6 +2787,45 @@ def q_script_profile(spark, sf_dir):
     return script_profile(docs.select("doc_id", text.alias("text")))
 
 
+@contract(
+    oracle="""
+        -- same distinct-md5-shingle construction as the minhash CTE,
+        -- then: docs-per-shingle count, per-doc novel fold, LEFT
+        -- JOIN back so shingle-less docs report 0 / NULL
+        WITH toks AS (
+          SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
+          FROM documents
+        ), sh AS (
+          SELECT doc_id,
+                 CASE WHEN len(t) >= 3 THEN
+                   list_distinct(list_transform(range(1, len(t) - 1),
+                     i -> md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2])))
+                 ELSE [] END AS hs
+          FROM toks
+        ), e AS (
+          SELECT doc_id, unnest(hs) AS h FROM sh
+        ), cnt AS (
+          SELECT h, count(*) AS docs FROM e GROUP BY h
+        ), nov AS (
+          SELECT e.doc_id, count(*) AS n_shingles,
+                 sum(CASE WHEN cnt.docs = 1 THEN 1 ELSE 0 END) AS n_novel
+          FROM e JOIN cnt USING (h) GROUP BY e.doc_id
+        )
+        SELECT t.doc_id,
+               CAST(coalesce(nov.n_shingles, 0) AS BIGINT) AS n_shingles,
+               CAST(coalesce(nov.n_novel, 0) AS BIGINT) AS n_novel,
+               CASE WHEN coalesce(nov.n_shingles, 0) > 0 THEN
+                 round(CAST(nov.n_novel AS DOUBLE) / nov.n_shingles, 4)
+               END AS novelty
+        FROM toks t LEFT JOIN nov USING (doc_id)
+    """,
+    plan=(
+        "diversity diagnostic: md5-hashed shingles before the shuffle, ONE groupBy per "
+        "direction, no window, no Python, no cartesian"
+    ),
+    must=["HashAggregate", "Generate"],
+    must_not=["Window", "CartesianProduct", "ArrowEvalPython", "BatchEvalPython"],
+)
 def q_ngram_novelty(spark, sf_dir):
     """Per-doc n-gram novelty (ops/corpus.ngram_novelty): fraction of a
     doc's distinct 3-shingles that occur in NO other document — the
@@ -1181,6 +2838,55 @@ def q_ngram_novelty(spark, sf_dir):
     return ngram_novelty(_docs(spark, sf_dir).select("doc_id", "text"))
 
 
+@contract(
+    oracle="""
+        -- α=0.5 temperature mixing: w_k = isqrt(c_k) (exact below
+        -- 2^52), S = Σ w (integer — order-independent), threshold_k =
+        -- least(65536, (65536·T·w_k) // (S·c_k)) in pure integer
+        -- arithmetic; kept = docs whose 16-bit md5('mix'||id) bucket
+        -- clears the threshold
+        WITH c AS (
+          SELECT lang AS stratum, count(*) AS n_docs,
+                 CAST(floor(sqrt(count(*))) AS BIGINT) AS w
+          FROM documents GROUP BY lang
+        ), s AS (
+          SELECT CAST(sum(w) AS BIGINT) AS s_tot,
+                 CAST(sum(n_docs) AS BIGINT) AS t_tot
+          FROM c
+        ), plan AS (
+          SELECT stratum, n_docs,
+                 least(65536,
+                       (65536::HUGEINT * t_tot * w) // (s_tot * n_docs))
+                   AS threshold
+          FROM c, s
+        ), b AS (
+          SELECT lang AS stratum,
+                 (strpos('0123456789abcdef', substring(h, 1, 1)) - 1) * 4096
+               + (strpos('0123456789abcdef', substring(h, 2, 1)) - 1) * 256
+               + (strpos('0123456789abcdef', substring(h, 3, 1)) - 1) * 16
+               + (strpos('0123456789abcdef', substring(h, 4, 1)) - 1)
+                   AS bucket
+          FROM (SELECT lang, md5('mix' || CAST(doc_id AS VARCHAR)) AS h
+                FROM documents)
+        ), k AS (
+          SELECT b.stratum, count(*) AS kept
+          FROM b JOIN plan USING (stratum)
+          WHERE b.bucket < plan.threshold
+          GROUP BY b.stratum
+        )
+        SELECT plan.stratum, CAST(plan.n_docs AS BIGINT) AS n_docs,
+               CAST(plan.threshold AS BIGINT) AS threshold,
+               CAST(COALESCE(k.kept, 0) AS BIGINT) AS kept
+        FROM plan LEFT JOIN k USING (stratum)
+    """,
+    plan=(
+        "partial-agg stratum counts, 1-row broadcast denominator, tiny threshold dim "
+        "broadcast back onto docs"
+    ),
+    must=["HashAggregate", "BroadcastNestedLoopJoin", "BroadcastHashJoin"],
+    must_not=["CartesianProduct", "SortMergeJoin", "ArrowEvalPython",
+              "BatchEvalPython"],
+)
 def q_temperature_mix(spark, sf_dir):
     """Temperature-based mixture rebalancing (ops/corpus.temperature_mix_plan,
     the XLM-R/mT5 α-sampling rule at α=0.5): per-language sampling
@@ -1194,6 +2900,72 @@ def q_temperature_mix(spark, sf_dir):
     return temperature_mix_plan(docs, alpha_pct=50)
 
 
+@contract(
+    oracle="""
+        -- hashed NB vote classifier: 4096 md5 buckets over token
+        -- occurrences, votes = sign of the Laplace log-odds via exact
+        -- integer cross-products ((pos+1)(N+B) vs (neg+1)(P+B)),
+        -- trained on the md5-split train docs with label lang='en',
+        -- scored over every doc (unseen buckets vote 0)
+        WITH tok AS (
+          SELECT doc_id,
+                 unnest(list_filter(
+                   regexp_split_to_array(lower(text), '\\s+'),
+                   x -> len(x) > 0)) AS tok
+          FROM documents
+        ), feats AS (
+          SELECT doc_id,
+                 ((strpos('0123456789abcdef', substring(h, 1, 1)) - 1) * 4096
+                + (strpos('0123456789abcdef', substring(h, 2, 1)) - 1) * 256
+                + (strpos('0123456789abcdef', substring(h, 3, 1)) - 1) * 16
+                + (strpos('0123456789abcdef', substring(h, 4, 1)) - 1))
+                   % 4096 AS bucket
+          FROM (SELECT doc_id, md5('feat' || tok) AS h FROM tok)
+        ), lab AS (
+          SELECT doc_id,
+                 CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
+          FROM documents
+          WHERE (strpos('0123456789abcdef',
+                        substring(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16
+              + strpos('0123456789abcdef',
+                       substring(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1
+                < 205
+        ), cells AS (
+          SELECT bucket,
+                 CAST(sum(y) AS BIGINT) AS pos,
+                 CAST(sum(1 - y) AS BIGINT) AS neg
+          FROM feats JOIN lab USING (doc_id)
+          GROUP BY bucket
+        ), tot AS (
+          SELECT CAST(sum(pos) AS BIGINT) AS p_tot,
+                 CAST(sum(neg) AS BIGINT) AS n_tot
+          FROM cells
+        ), votes AS (
+          SELECT bucket,
+                 CASE WHEN (pos + 1)::HUGEINT * (n_tot + 4096)
+                         > (neg + 1)::HUGEINT * (p_tot + 4096) THEN 1
+                      WHEN (pos + 1)::HUGEINT * (n_tot + 4096)
+                         < (neg + 1)::HUGEINT * (p_tot + 4096) THEN -1
+                      ELSE 0 END AS vote
+          FROM cells, tot
+        ), scored AS (
+          SELECT f.doc_id,
+                 CAST(sum(COALESCE(v.vote, 0)) AS BIGINT) AS score
+          FROM feats f LEFT JOIN votes v USING (bucket)
+          GROUP BY f.doc_id
+        )
+        SELECT d.doc_id, s.score,
+               CAST(s.score > 0 AS INTEGER) AS pred,
+               CAST(d.lang = 'en' AS INTEGER) AS actual
+        FROM scored s JOIN documents d USING (doc_id)
+    """,
+    plan=(
+        "pure JVM hashing/explode, broadcast model, partial-agg train + score "
+        "groupBys, zero Python"
+    ),
+    must=["HashAggregate", "BroadcastHashJoin"],
+    must_not=["CartesianProduct", "ArrowEvalPython", "BatchEvalPython"],
+)
 def q_doc_classifier(spark, sf_dir):
     """Hashed-feature Naive-Bayes vote classifier (ops/classify): train
     per-bucket evidence votes (sign of the Laplace log-odds via exact
@@ -1221,6 +2993,35 @@ def q_doc_classifier(spark, sf_dir):
     ).select("doc_id", "score", "pred", "actual")
 
 
+@contract(
+    oracle="""
+        -- all four expected <tr> rows per synthesized page in closed
+        -- form: t0r0 = header with colspan-2 repetition, t0r1 =
+        -- whitespace-collapsed data cells, t1r0 = host row whose first
+        -- cell text CONTAINS the nested table's text ('x' || 'in<d>'),
+        -- t2r0 = the nested table's own single row
+        WITH d AS (
+          SELECT doc_id,
+                 'https://t.example.org/' || CAST(doc_id AS VARCHAR) AS url,
+                 CAST(doc_id AS VARCHAR) AS s
+          FROM documents
+        )
+        SELECT url, 0 AS table_idx, 0 AS row_idx, TRUE AS is_header,
+               2 AS n_cells, 'hdr ' || s || '|' || 'hdr ' || s AS cells
+        FROM d
+        UNION ALL
+        SELECT url, 0, 1, FALSE, 2,
+               'a ' || s || '|' || 'b ' || CAST(doc_id % 7 AS VARCHAR)
+        FROM d
+        UNION ALL
+        SELECT url, 1, 0, FALSE, 2, 'xin' || s || '|' || 'y' FROM d
+        UNION ALL
+        SELECT url, 2, 0, FALSE, 1, 'in' || s FROM d
+    """,
+    plan="ONE Arrow table-walk stage + narrow explode, zero shuffle",
+    must=["ArrowEvalPython", "Generate"],
+    must_not=["Exchange", "BatchEvalPython", "SortMergeJoin"],
+)
 def q_table_extract(spark, sf_dir):
     """HTML table extraction (ops/tables.py) over synthesized crawl pages:
     one output row per <tr>, tables numbered in document order with nested
@@ -1257,6 +3058,25 @@ def q_table_extract(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- recompute the per-url accounting straight from documents;
+        -- matching md5 per url == the WET conversion-record
+        -- writer->reader round-trip preserved every text byte
+        SELECT 'https://d' || (doc_id % 20) || '.example.org/doc/' || doc_id
+                 AS url,
+               strftime(TIMESTAMP '2024-01-01 00:00:00' + to_seconds(doc_id),
+                        '%Y-%m-%dT%H:%M:%SZ') AS warc_date,
+               CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+               md5(text) AS body_md5,
+               'conversion' AS warc_type,
+               'text/plain' AS content_type
+        FROM documents
+    """,
+    plan="WET sidecar read is the same shuffle-free scan → single mapInPandas",
+    must=["MapInPandas"],
+    must_not=["Exchange", "Window"],
+)
 def q_wet_roundtrip(spark, sf_dir):
     """WET sidecar sink (Common Crawl's ``*.warc.wet.gz`` extracted-text
     format, sources/warc.write_wet_files): synthesize per-doc extracted
@@ -1301,6 +3121,32 @@ def q_wet_roundtrip(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- every WAT field in closed form per synthesized page:
+        -- title T<d>, description D<d>, the deduped outlink (two
+        -- anchors share one href -> outlinks[1] IS NULL), n_anchors
+        -- counts both; conversion framing fields are constants
+        SELECT 'https://d' || (doc_id % 20) || '.example.org/doc/' || doc_id
+                 AS url,
+               strftime(TIMESTAMP '2024-01-01 00:00:00' + to_seconds(doc_id),
+                        '%Y-%m-%dT%H:%M:%SZ') AS warc_date,
+               'metadata' AS warc_type,
+               'application/json' AS content_type,
+               'T' || doc_id AS title,
+               'D' || doc_id AS description,
+               'https://out.example.org/p' || doc_id AS outlink0,
+               CAST(NULL AS VARCHAR) AS outlink1,
+               2 AS n_anchors
+        FROM documents
+    """,
+    plan=(
+        "WAT sidecar read: shuffle-free scan → single mapInPandas, JSON fields "
+        "re-extracted JVM-side"
+    ),
+    must=["MapInPandas"],
+    must_not=["Exchange", "Window"],
+)
 def q_wat_roundtrip(spark, sf_dir):
     """WAT sidecar sink (Common Crawl's ``*.warc.wat.gz`` JSON metadata
     format, sources/warc.write_wat_files): synthesize pages whose title /
@@ -1358,6 +3204,33 @@ def q_wat_roundtrip(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- every expected (host, sitemap_url) row in closed form per
+        -- body family: 0 = one line inside a UA group, 1 = two
+        -- case-variant lines (inline comment stripped), 2 = none,
+        -- 3 = indented, no space after the colon
+        WITH d AS (
+          SELECT doc_id, 'h' || doc_id || '.example.org' AS host,
+                 CAST(doc_id AS VARCHAR) AS s, doc_id % 4 AS fam
+          FROM documents
+        )
+        SELECT host, 'https://s.example.org/map' || s || '.xml' AS sitemap_url
+          FROM d WHERE fam = 0
+        UNION ALL
+        SELECT host, 'https://s.example.org/a' || s || '.xml' FROM d WHERE fam = 1
+        UNION ALL
+        SELECT host, 'https://s.example.org/b' || s || '.xml' FROM d WHERE fam = 1
+        UNION ALL
+        SELECT host, 'https://s.example.org/c' || s || '.xml' FROM d WHERE fam = 3
+    """,
+    plan=(
+        "group-independent directive: regexp + narrow explode, zero "
+        "Python/shuffle/window"
+    ),
+    must=["Generate"],
+    must_not=["Exchange", "ArrowEvalPython", "BatchEvalPython", "Window", "Join"],
+)
 def q_robots_sitemaps(spark, sf_dir):
     """Sitemap discovery from robots.txt (ops/robots.robots_sitemaps — the
     RFC 9309 §2.3 group-independent directive): four body families built
@@ -1388,6 +3261,36 @@ def q_robots_sitemaps(spark, sf_dir):
     return robots_sitemaps(robots)
 
 
+@contract(
+    oracle="""
+        -- the sequential semantics the distributed prefix-sum must
+        -- reproduce exactly: global running byte sum in doc_id order,
+        -- exclusive offsets, integer shard division
+        WITH s AS (
+          SELECT doc_id,
+                 CAST(octet_length(encode(COALESCE(text, ''))) AS BIGINT)
+                   AS n_bytes
+          FROM documents
+        )
+        SELECT doc_id, n_bytes,
+               CAST(COALESCE(sum(n_bytes) OVER (
+                      ORDER BY doc_id
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+                    ), 0) AS BIGINT) AS start_offset,
+               CAST(COALESCE(sum(n_bytes) OVER (
+                      ORDER BY doc_id
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+                    ), 0) // 262144 AS BIGINT) AS shard_id
+        FROM s
+    """,
+    plan=(
+        "distributed prefix-sum: range exchange + PARTITIONED local-cumsum window + "
+        "tiny offsets broadcast (never a global single-partition window over the "
+        "corpus)"
+    ),
+    must=["Window", "BroadcastHashJoin"],
+    must_not=["CartesianProduct", "SortMergeJoin", "ArrowEvalPython"],
+)
 def q_pack_shards(spark, sf_dir):
     """Byte-balanced shard packing for training export
     (ops/corpus.pack_shards): docs ordered by id, running byte offsets via
@@ -1402,6 +3305,51 @@ def q_pack_shards(spark, sf_dir):
     return pack_shards(docs, shard_bytes=262144, num_partitions=8)
 
 
+@contract(
+    oracle="""
+        -- sequential packing semantics: global running slot sum in
+        -- doc_id order (n_tokens + 1 EOD slot per doc), one row per
+        -- sequence the doc's slot span [start, start+n_slots) covers
+        WITH t AS (
+          SELECT doc_id,
+                 CAST(len(list_filter(
+                   regexp_split_to_array(trim(coalesce(text, '')), '\\s+'),
+                   x -> len(x) > 0)) + 1 AS BIGINT) AS n_slots
+          FROM documents
+        ), o AS (
+          SELECT doc_id, n_slots,
+                 CAST(COALESCE(sum(n_slots) OVER (
+                   ORDER BY doc_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+                 ), 0) AS BIGINT) AS start_offset
+          FROM t
+        ), e AS (
+          SELECT doc_id, n_slots, start_offset,
+                 unnest(generate_series(start_offset // 128,
+                                        (start_offset + n_slots - 1) // 128))
+                   AS seq_id
+          FROM o
+        )
+        SELECT CAST(seq_id AS BIGINT) AS seq_id, doc_id,
+               CAST(greatest(start_offset, seq_id * 128) - seq_id * 128
+                    AS BIGINT) AS seq_off,
+               CAST(greatest(start_offset, seq_id * 128) - start_offset
+                    AS BIGINT) AS doc_off,
+               CAST(least(start_offset + n_slots, (seq_id + 1) * 128)
+                    - greatest(start_offset, seq_id * 128)
+                    AS BIGINT) AS slice_len,
+               least(start_offset + n_slots, (seq_id + 1) * 128)
+                 = start_offset + n_slots AS eod
+        FROM e
+    """,
+    plan=(
+        "concat-and-split packing: same distributed prefix-sum as pack_shards, then a "
+        "narrow Generate fan-out (no extra shuffle, no Python stage)"
+    ),
+    must=["Window", "BroadcastHashJoin", "Generate"],
+    must_not=["CartesianProduct", "SortMergeJoin", "ArrowEvalPython",
+              "BatchEvalPython"],
+)
 def q_pack_sequences(spark, sf_dir):
     """GPT-style concat-and-split sequence packing
     (ops/corpus.pack_sequences): every doc's whitespace tokens + one EOD
@@ -1417,6 +3365,56 @@ def q_pack_sequences(spark, sf_dir):
     return pack_sequences(docs, seq_len=128, num_partitions=8)
 
 
+@contract(
+    oracle="""
+        -- execute the packing plan symbolically: per-doc slot array
+        -- (tokens + EOD marker), global running offsets, list_slice
+        -- per covered sequence, reassembled in seq_off order
+        WITH t AS (
+          SELECT doc_id,
+                 list_append(list_filter(
+                   regexp_split_to_array(trim(coalesce(text, '')), '\\s+'),
+                   x -> len(x) > 0), '<|eod|>') AS slots
+          FROM documents
+        ), o AS (
+          SELECT doc_id, slots,
+                 CAST(len(slots) AS BIGINT) AS n_slots,
+                 CAST(COALESCE(sum(len(slots)) OVER (
+                   ORDER BY doc_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+                 ), 0) AS BIGINT) AS start_offset
+          FROM t
+        ), e AS (
+          SELECT doc_id, slots, n_slots, start_offset,
+                 unnest(generate_series(start_offset // 128,
+                                        (start_offset + n_slots - 1) // 128))
+                   AS seq_id
+          FROM o
+        ), s AS (
+          SELECT seq_id,
+                 greatest(start_offset, seq_id * 128) - seq_id * 128
+                   AS seq_off,
+                 least(start_offset + n_slots, (seq_id + 1) * 128)
+                   - greatest(start_offset, seq_id * 128) AS slice_len,
+                 array_to_string(list_slice(slots,
+                   greatest(start_offset, seq_id * 128) - start_offset + 1,
+                   least(start_offset + n_slots, (seq_id + 1) * 128)
+                     - start_offset), ' ') AS piece
+          FROM e
+        )
+        SELECT CAST(seq_id AS BIGINT) AS seq_id,
+               CAST(sum(slice_len) AS BIGINT) AS n_slots,
+               string_agg(piece, ' ' ORDER BY seq_off) AS seq_text
+        FROM s GROUP BY seq_id
+    """,
+    plan=(
+        "plan execution: ONE doc_id equi-join + ONE groupBy(seq_id) over pre-sliced "
+        "pieces (per-group payload bounded by seq_len; no Python stage, no cartesian)"
+    ),
+    must=["Window", "Join"],
+    must_not=["CartesianProduct", "BroadcastNestedLoopJoin", "ArrowEvalPython",
+              "BatchEvalPython"],
+)
 def q_seq_materialize(spark, sf_dir):
     """Packed-dataset writer (ops/corpus.materialize_sequences): execute
     the q_pack_sequences plan — slice each doc's token+EOD slot array per
@@ -1432,6 +3430,34 @@ def q_seq_materialize(spark, sf_dir):
     return materialize_sequences(docs, plan)
 
 
+@contract(
+    oracle="""
+        -- expected SURT key per family, stated in closed form:
+        -- reversed host labels, www stripped, port dropped, empty
+        -- path -> '/', query params sorted, relative ids lowercased
+        SELECT doc_id,
+               CASE doc_id % 6
+                 WHEN 0 THEN 'HTTP://WWW.Example.COM/A/B' || doc_id || '?b=2&a=1'
+                 WHEN 1 THEN 'https://sub.test.co.uk/path' || doc_id
+                 WHEN 2 THEN 'https://Example.org'
+                 WHEN 3 THEN 'relative/ID/' || doc_id
+                 WHEN 4 THEN 'http://h.example.net:8080/x' || doc_id
+                 ELSE 'https://example.com/Q' || doc_id || '?Z=9'
+               END AS raw_url,
+               CASE doc_id % 6
+                 WHEN 0 THEN 'com,example)/a/b' || doc_id || '?a=1&b=2'
+                 WHEN 1 THEN 'uk,co,test,sub)/path' || doc_id
+                 WHEN 2 THEN 'org,example)/'
+                 WHEN 3 THEN 'relative/id/' || doc_id
+                 WHEN 4 THEN 'net,example,h)/x' || doc_id
+                 ELSE 'com,example)/q' || doc_id || '?z=9'
+               END AS surt
+        FROM documents
+    """,
+    plan="CDX sort-key derivation is pure codegen, zero shuffle/Python",
+    must=["*(1)"],
+    must_not=["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join"],
+)
 def q_surt_key(spark, sf_dir):
     """SURT capture-index keys (ops/web.surt_key — the sort key CDX
     indexes range-scan by): six url families built in closed form from
@@ -1456,6 +3482,26 @@ def q_surt_key(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- closed-form 64-bit hashes: ascending gradient -> every
+        -- right neighbor brighter -> all ones = -1 signed; 9-wide
+        -- checkerboard -> 10101010 per row = 0xAAAA.. signed; PPM
+        -- descending gradient -> strict '>' never fires -> 0;
+        -- non-image -> decoded 0, hash coalesced to 0
+        SELECT doc_id,
+               CAST(CASE WHEN doc_id % 4 IN (0, 1, 2) THEN 1 ELSE 0 END
+                    AS INTEGER) AS decoded,
+               CAST(CASE doc_id % 4
+                      WHEN 0 THEN -1
+                      WHEN 1 THEN -6148914691236517206
+                      ELSE 0 END AS BIGINT) AS dhash
+        FROM documents
+    """,
+    plan="ONE Arrow pixel-decode stage, zero shuffle",
+    must=["ArrowEvalPython"],
+    must_not=["Exchange", "Join", "Window"],
+)
 def q_image_dhash(spark, sf_dir):
     """Perceptual dHash over real decoded PNM pixels
     (ops/multimodal.dhash64): ascending-gradient PGMs hash to all-ones
@@ -1501,6 +3547,25 @@ def q_image_dhash(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- per-host page counts x closed-form delays: hosts 0-4 carry
+        -- wildcard Crawl-delay 2..6, host 5's mybot group (7) beats
+        -- its '*' group (3), hosts 6-9 default to 1
+        WITH d AS (SELECT doc_id % 10 AS h FROM documents),
+        c AS (SELECT h, count(*) AS n FROM d GROUP BY h)
+        SELECT 'h' || h || '.example.org' AS host,
+               CAST(n AS BIGINT) AS n_pages,
+               CAST(CASE WHEN h < 5 THEN 2 + h WHEN h = 5 THEN 7
+                         ELSE 1 END AS INTEGER) AS crawl_delay_sec,
+               CAST(n * (CASE WHEN h < 5 THEN 2 + h WHEN h = 5 THEN 7
+                              ELSE 1 END) AS BIGINT) AS est_fetch_sec
+        FROM c
+    """,
+    plan="ONE partial-agg groupBy over pages, tiny delay dim broadcast",
+    must=["HashAggregate", "BroadcastHashJoin"],
+    must_not=["CartesianProduct", "SortMergeJoin"],
+)
 def q_crawl_plan(spark, sf_dir):
     """Politeness cost model (ops/robots.crawl_delays + fetch_plan):
     per-host page counts × the host's Crawl-delay (agent-specific group
@@ -1536,6 +3601,37 @@ def q_crawl_plan(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- closed-form expected fields per payload family: k=0 WAV
+        -- mono/16-bit (1000ms declared data), k=1 WAV stereo/8-bit
+        -- (500ms), k=2 MP3 MPEG1-L3 128kbps stereo (sample rate by
+        -- doc_id%3, ID3v2-prefixed on even ids — same parse either
+        -- way), k=3 non-audio blob -> NULL format, zeroed numerics
+        SELECT doc_id,
+               CASE WHEN doc_id % 4 IN (0, 1) THEN 'wav'
+                    WHEN doc_id % 4 = 2 THEN 'mp3' END AS format,
+               CAST(CASE doc_id % 4 WHEN 0 THEN 1 WHEN 1 THEN 2
+                         WHEN 2 THEN 2 ELSE 0 END AS INTEGER) AS channels,
+               CAST(CASE WHEN doc_id % 4 IN (0, 1)
+                              THEN ([8000, 22050, 44100])[(doc_id % 3) + 1]
+                         WHEN doc_id % 4 = 2
+                              THEN ([44100, 48000, 32000])[(doc_id % 3) + 1]
+                         ELSE 0 END AS INTEGER) AS sample_rate,
+               CAST(CASE doc_id % 4 WHEN 0 THEN 16 WHEN 1 THEN 8
+                         ELSE 0 END AS INTEGER) AS bits_per_sample,
+               CAST(CASE WHEN doc_id % 4 IN (0, 1)
+                              THEN ([128, 352, 705])[(doc_id % 3) + 1]
+                         WHEN doc_id % 4 = 2 THEN 128
+                         ELSE 0 END AS INTEGER) AS bitrate_kbps,
+               CAST(CASE doc_id % 4 WHEN 0 THEN 1000 WHEN 1 THEN 500
+                         ELSE 0 END AS INTEGER) AS duration_ms
+        FROM documents
+    """,
+    plan="ONE Arrow header-sniff stage, zero shuffle",
+    must=["ArrowEvalPython"],
+    must_not=["Exchange", "Join", "Window"],
+)
 def q_audio_headers(spark, sf_dir):
     """Real audio-identity parsing (ops/multimodal.parse_audio_header):
     WAV/RIFF chunk walk (channels, sample rate, bit depth, byte-rate
@@ -1602,6 +3698,53 @@ def q_audio_headers(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- closed-form flags: k=0 not-found title+body, k=3 standalone
+        -- 404 in the title, k=2 parked phrase, k=7 decorated
+        -- not-found title (true positive); k=5/6 are ADVERSARIAL hard
+        -- negatives — short pages titled 'Forbidden City' / 'Coming
+        -- Soon Movies 2026' whose titles contain phrase words
+        -- followed by real content, so the segment-anchored title
+        -- rule must NOT flag them; soft404 requires the SHORT body
+        -- in every case (real soft-404s are short); k in (1,4) clean
+        -- (corpus text has no error phrase or digit — verified
+        -- offline); blen COALESCEd so a future NULL-text doc matches
+        -- the Spark-side coalesce('') instead of NULL-compare
+        WITH f AS (
+          SELECT doc_id, doc_id % 8 AS k,
+                 CASE doc_id % 8
+                   WHEN 0 THEN 'Page not found'
+                   WHEN 3 THEN 'Error 404 - doc v' || (doc_id % 7)
+                   WHEN 5 THEN 'Forbidden City'
+                   WHEN 6 THEN 'Coming Soon Movies 2026'
+                   WHEN 7 THEN 'Oops! Page not found | site'
+                   ELSE 'Doc v' || (doc_id % 7)
+                 END AS title,
+                 CASE WHEN doc_id % 8 = 0 THEN 23
+                      WHEN doc_id % 8 = 2
+                           THEN 16 + least(100, COALESCE(length(text), 0))
+                      WHEN doc_id % 8 = 5 THEN 30
+                      WHEN doc_id % 8 = 6 THEN 16
+                      WHEN doc_id % 8 = 7 THEN 23
+                      ELSE COALESCE(length(text), 0) END AS blen
+          FROM documents
+        )
+        SELECT doc_id, title,
+               CAST(CASE WHEN k IN (0, 3, 7) THEN 1 ELSE 0 END
+                    AS INTEGER) AS title_404,
+               CAST(CASE WHEN k IN (0, 2) THEN 1 ELSE 0 END
+                    AS INTEGER) AS body_404,
+               CAST(CASE WHEN blen < 512 THEN 1 ELSE 0 END
+                    AS INTEGER) AS short_body,
+               CAST(CASE WHEN k IN (0, 2, 3, 7) AND blen < 512 THEN 1
+                         ELSE 0 END AS INTEGER) AS soft404
+        FROM f
+    """,
+    plan="pure codegen phrase flags, zero shuffle",
+    must=["Project"],
+    must_not=["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join"],
+)
 def q_soft404(spark, sf_dir):
     """Soft-404 detection (ops/web.soft_404_flags): eight page families —
     classic not-found, normal, parked-domain (short + phrase), a 404 title
@@ -1645,6 +3788,49 @@ def q_soft404(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- same trigram + top-50 profile CTEs as q_lang_id, then two
+        -- integer rollups: distinct grams per doc, grams the doc's OWN
+        -- language profile knows
+        WITH t AS (
+          SELECT doc_id, lang,
+                 lower(regexp_replace(text, '\\s+', ' ', 'g')) AS tx
+          FROM documents
+        ),
+        g AS (
+          SELECT doc_id, lang,
+                 unnest(list_distinct(list_transform(
+                   range(1, greatest(len(tx) - 2, 0) + 1),
+                   i -> substr(tx, CAST(i AS INT), 3)))) AS gram
+          FROM t
+        ),
+        counts AS (SELECT lang, gram, count(*) AS c FROM g GROUP BY 1, 2),
+        prof AS (
+          SELECT lang, gram FROM (
+            SELECT lang, gram,
+                   row_number() OVER (PARTITION BY lang
+                                      ORDER BY c DESC, gram) AS rank
+            FROM counts)
+          WHERE rank <= 50
+        ),
+        tot AS (
+          SELECT doc_id, lang, CAST(COUNT(*) AS BIGINT) AS n_grams
+          FROM g GROUP BY 1, 2
+        ),
+        kn AS (
+          SELECT g.doc_id, CAST(COUNT(*) AS BIGINT) AS n_known
+          FROM g JOIN prof p ON p.lang = g.lang AND p.gram = g.gram
+          GROUP BY 1
+        )
+        SELECT tot.doc_id, tot.lang, tot.n_grams,
+               CAST(COALESCE(kn.n_known, 0) AS BIGINT) AS n_known
+        FROM tot LEFT JOIN kn ON kn.doc_id = tot.doc_id
+    """,
+    plan="tiny profile BROADCAST into the gram join",
+    must=["BroadcastHashJoin", "HashAggregate"],
+    must_not=["CartesianProduct", "ArrowEvalPython", "BatchEvalPython"],
+)
 def q_familiarity(spark, sf_dir):
     """Trigram-familiarity perplexity proxy (ops/text.trigram_familiarity):
     per doc, how many of its distinct trigrams its own language profile
@@ -1664,6 +3850,28 @@ def q_familiarity(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- closed-form expected blocks: block 0 is the valid object
+        -- with the cycling @type, block 1 (odd docs) is the malformed
+        -- '{broken' whose parsed fields are NULL
+        SELECT doc_id, CAST(0 AS INTEGER) AS block_idx,
+               '{"@context": "https://schema.org", "@type": "'
+                 || CASE doc_id % 3 WHEN 0 THEN 'Article'
+                    WHEN 1 THEN 'Product' ELSE 'Event' END
+                 || '", "name": "doc ' || doc_id || '"}' AS raw_json,
+               CASE doc_id % 3 WHEN 0 THEN 'Article'
+                    WHEN 1 THEN 'Product' ELSE 'Event' END AS schema_type,
+               'https://schema.org' AS schema_context
+        FROM documents
+        UNION ALL
+        SELECT doc_id, CAST(1 AS INTEGER), '{broken', NULL, NULL
+        FROM documents WHERE doc_id % 2 = 1
+    """,
+    plan="ld+json block cut + get_json_object, zero Python/shuffle",
+    must=["Generate"],
+    must_not=["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join"],
+)
 def q_jsonld(spark, sf_dir):
     """schema.org JSON-LD extraction (ops/html_meta.jsonld_blocks): every
     doc carries one valid block (@type cycling Article/Product/Event), odd
@@ -1699,6 +3907,31 @@ def q_jsonld(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- closed-form expected feed entries: two RSS items for even
+        -- doc_ids (second lacks pubDate -> NULL), one Atom entry for
+        -- odd; channel/feed titles never leak
+        SELECT doc_id, 'f' || doc_id || '.example' AS host,
+               'rss' AS kind, 'Item ' || doc_id || ' a' AS title,
+               'https://f' || doc_id || '.example/1' AS link,
+               'D' || doc_id AS published
+        FROM documents WHERE doc_id % 2 = 0
+        UNION ALL
+        SELECT doc_id, 'f' || doc_id || '.example', 'rss',
+               'Item ' || doc_id || ' b',
+               'https://f' || doc_id || '.example/2', NULL
+        FROM documents WHERE doc_id % 2 = 0
+        UNION ALL
+        SELECT doc_id, 'f' || doc_id || '.example', 'atom',
+               'Entry ' || doc_id,
+               'https://f' || doc_id || '.example/e', 'P' || doc_id
+        FROM documents WHERE doc_id % 2 = 1
+    """,
+    plan="RSS/Atom block-cut + field extraction, zero Python/shuffle",
+    must=["Generate"],
+    must_not=["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join"],
+)
 def q_feed(spark, sf_dir):
     """RSS/Atom feed parsing (ops/web.feed_entries): even doc_ids publish a
     two-item RSS feed (second item missing pubDate), odd ones a one-entry
@@ -1733,6 +3966,26 @@ def q_feed(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- closed-form EXPECTED diff: %10==0 added, %10==1 removed,
+        -- %5==2 changed (body edited), everything else unchanged
+        SELECT 'https://c' || (doc_id % 10) || '.com/d' || doc_id AS url,
+               CASE WHEN doc_id % 10 = 0 THEN 'added'
+                    WHEN doc_id % 10 = 1 THEN 'removed'
+                    WHEN doc_id % 5 = 2 THEN 'changed'
+                    ELSE 'unchanged' END AS status,
+               CASE WHEN doc_id % 10 = 0 THEN NULL
+                    ELSE md5(text) END AS old_md5,
+               CASE WHEN doc_id % 10 = 1 THEN NULL
+                    WHEN doc_id % 5 = 2 THEN md5(text || ' v2')
+                    ELSE md5(text) END AS new_md5
+        FROM documents
+    """,
+    plan="md5 below the join: the exchange carries digests, not page bodies",
+    must=["md5", "Join"],
+    must_not=["CartesianProduct", "BroadcastNestedLoopJoin", "Window"],
+)
 def q_crawl_diff(spark, sf_dir):
     """Incremental-crawl diff (ops/web.crawl_diff): synthetic old/new
     snapshots with disjoint url tails (every 10th doc is new-only, every
@@ -1758,6 +4011,33 @@ def q_crawl_diff(spark, sf_dir):
     return crawl_diff(old, new)
 
 
+@contract(
+    oracle="""
+        -- re-derive the exploded (src_host, dst, text) anchor rows
+        -- symbolically (the mailto decoy never appears) and aggregate:
+        -- occurrences, distinct source hosts, sorted distinct labels
+        WITH a AS (
+          SELECT 'www.site' || (doc_id % 10) || '.com' AS src_host,
+                 'https://t' || (doc_id % 25) || '.example/' AS dst,
+                 'anchor t' || (doc_id % 25) || ' v' || (doc_id % 3) AS text
+          FROM documents
+          UNION ALL
+          SELECT 'www.site' || (doc_id % 10) || '.com',
+                 'https://t' || ((doc_id + 7) % 25) || '.example/',
+                 'anchor t' || ((doc_id + 7) % 25) || ' v' || (doc_id % 3)
+          FROM documents
+        )
+        SELECT dst,
+               CAST(COUNT(*) AS BIGINT) AS n_anchors,
+               CAST(COUNT(DISTINCT src_host) AS BIGINT) AS n_src_hosts,
+               array_to_string(list_sort(list_distinct(list(text))), '|')
+                   AS anchor_texts
+        FROM a GROUP BY dst
+    """,
+    plan="one Arrow kernel, explode, ONE partial-agg groupBy",
+    must=["ArrowEvalPython", "Generate", "HashAggregate"],
+    must_not=["Window", "CartesianProduct", "BroadcastNestedLoopJoin"],
+)
 def q_anchor_stats(spark, sf_dir):
     """Anchor-text aggregation (ops/html_meta.py): what the web SAYS about
     each target url.  Every doc links to two rotating targets with a
@@ -1798,6 +4078,36 @@ def q_anchor_stats(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- closed-form EXPECTED verdicts (checks the robots parser +
+        -- precedence engine): low hosts block only the bare /private
+        -- kind (the /private/ok kind is rescued by the longer allow),
+        -- high hosts block only /public, the root path matches nothing,
+        -- and the badbot group must not leak into agent '*'
+        SELECT doc_id,
+               'https://h' || (doc_id % 20) || '.example' ||
+               CASE doc_id % 4
+                 WHEN 0 THEN '/public/p' || doc_id
+                 WHEN 1 THEN '/private/p' || doc_id
+                 WHEN 2 THEN '/private/ok/p' || doc_id
+                 ELSE '/'
+               END AS url,
+               CAST(CASE
+                 WHEN doc_id % 20 < 10
+                      THEN CASE WHEN doc_id % 4 = 1 THEN 0 ELSE 1 END
+                 ELSE CASE WHEN doc_id % 4 = 0 THEN 0 ELSE 1 END
+               END AS INTEGER) AS allowed
+        FROM documents
+    """,
+    plan=(
+        "verdict is host equi-join + partial-agg max; the only Window is the per-host "
+        "rule parse, never over pages"
+    ),
+    must=["HashAggregate", "Join"],
+    must_not=["CartesianProduct", "BroadcastNestedLoopJoin", "ArrowEvalPython",
+              "BatchEvalPython"],
+)
 def q_robots(spark, sf_dir):
     """robots.txt politeness (ops/robots.py): 20 synthetic hosts, two policy
     families (low hosts disallow /private with a longer /private/ok allow;
@@ -1839,6 +4149,46 @@ def q_robots(spark, sf_dir):
     return out.select("doc_id", "url", F.col("allowed").cast("int").alias("allowed"))
 
 
+@contract(
+    oracle="""
+        -- same synthetic edges as q_pagerank; degrees/weights are
+        -- integer aggregates, reciprocity is a self-join on the
+        -- reversed pair — replicated verbatim
+        WITH e0 AS (
+          SELECT doc_id % 40 AS s, (doc_id * 7 + 3) % 40 AS t
+          FROM documents
+          UNION ALL
+          SELECT doc_id % 40, (doc_id * 13 + 11) % 45 FROM documents
+        ), edges AS (
+          SELECT 'h' || s AS src, 'h' || t AS dst,
+                 CAST(COUNT(*) AS BIGINT) AS weight
+          FROM e0 WHERE s <> t GROUP BY 1, 2
+        ), o AS (
+          SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS out_degree,
+                 CAST(SUM(weight) AS BIGINT) AS out_weight
+          FROM edges GROUP BY src
+        ), i AS (
+          SELECT dst AS node, CAST(COUNT(*) AS BIGINT) AS in_degree,
+                 CAST(SUM(weight) AS BIGINT) AS in_weight
+          FROM edges GROUP BY dst
+        ), r AS (
+          SELECT e.src AS node, CAST(COUNT(*) AS BIGINT) AS reciprocal_edges
+          FROM edges e JOIN edges x ON x.src = e.dst AND x.dst = e.src
+          GROUP BY e.src
+        )
+        SELECT COALESCE(o.node, i.node) AS node,
+               COALESCE(out_degree, 0) AS out_degree,
+               COALESCE(in_degree, 0) AS in_degree,
+               COALESCE(out_weight, 0) AS out_weight,
+               COALESCE(in_weight, 0) AS in_weight,
+               COALESCE(reciprocal_edges, 0) AS reciprocal_edges
+        FROM o FULL OUTER JOIN i ON o.node = i.node
+        LEFT JOIN r ON r.node = COALESCE(o.node, i.node)
+    """,
+    plan="partial-agg degree rollups + reversed-pair equi-join",
+    must=["HashAggregate", "Join"],
+    must_not=["CartesianProduct", "BroadcastNestedLoopJoin", "Window"],
+)
 def q_graph_stats(spark, sf_dir):
     """Link-farm signals (ops/linkgraph.host_graph_stats) over the
     q_pagerank synthetic graph: degrees, weights, and reciprocity per
@@ -1850,6 +4200,17 @@ def q_graph_stats(spark, sf_dir):
     return host_graph_stats(edges)
 
 
+@contract(
+    oracle=f"""
+        SELECT node, rank,
+               CAST((1000000 * rank) // (SELECT SUM(rank) FROM (
+        {_pagerank_oracle_sql(3)}
+        ) t) AS BIGINT) AS quota
+        FROM (
+        {_pagerank_oracle_sql(3)}
+        ) pr
+    """,
+)
 def q_crawl_budget(spark, sf_dir, checkpoint=True):
     """Frontier prioritization (ops/linkgraph.crawl_budget): a 1M-page
     crawl budget split proportionally to the fixed-point PageRank of the
@@ -1864,6 +4225,87 @@ def q_crawl_budget(spark, sf_dir, checkpoint=True):
     )
 
 
+@contract(
+    oracle="""
+        -- replicate every Gopher rule in the same integer arithmetic:
+        -- occurrence counts via length-difference, line/word filters via
+        -- list_filter + regexp, stop-word hits as 8 list_contains CASEs
+        WITH g AS (
+          SELECT doc_id,
+                 regexp_split_to_array(trim(text), '\\s+') AS toks,
+                 string_split(text, chr(10)) AS lines,
+                 CAST(length(regexp_replace(text, '\\s+', '', 'g'))
+                      AS BIGINT) AS word_chars,
+                 CAST(length(text) - length(replace(text, '#', ''))
+                      AS BIGINT)
+                 + CAST(length(text) - length(replace(text, '…', ''))
+                      AS BIGINT)
+                 + CAST((length(text) - length(replace(text, '...', '')))
+                        // 3 AS BIGINT) AS symbols
+          FROM documents
+        ), m AS (
+          SELECT doc_id, word_chars, symbols,
+                 CAST(len(toks) AS BIGINT) AS n_words,
+                 CAST(len(lines) AS BIGINT) AS n_lines,
+                 CAST(len(list_filter(lines,
+                      x -> regexp_matches(ltrim(x), '^[•*-]')))
+                      AS BIGINT) AS bullet_lines,
+                 CAST(len(list_filter(lines,
+                      x -> regexp_matches(rtrim(x), '(\\.\\.\\.|…)$')))
+                      AS BIGINT) AS ellipsis_lines,
+                 CAST(len(list_filter(toks,
+                      x -> regexp_matches(x, '[A-Za-z]')))
+                      AS BIGINT) AS alpha_words,
+                 (CASE WHEN list_contains(list_transform(toks,
+                       x -> lower(x)), 'the') THEN 1 ELSE 0 END
+                  + CASE WHEN list_contains(list_transform(toks,
+                       x -> lower(x)), 'be') THEN 1 ELSE 0 END
+                  + CASE WHEN list_contains(list_transform(toks,
+                       x -> lower(x)), 'to') THEN 1 ELSE 0 END
+                  + CASE WHEN list_contains(list_transform(toks,
+                       x -> lower(x)), 'of') THEN 1 ELSE 0 END
+                  + CASE WHEN list_contains(list_transform(toks,
+                       x -> lower(x)), 'and') THEN 1 ELSE 0 END
+                  + CASE WHEN list_contains(list_transform(toks,
+                       x -> lower(x)), 'that') THEN 1 ELSE 0 END
+                  + CASE WHEN list_contains(list_transform(toks,
+                       x -> lower(x)), 'have') THEN 1 ELSE 0 END
+                  + CASE WHEN list_contains(list_transform(toks,
+                       x -> lower(x)), 'with') THEN 1 ELSE 0 END
+                 ) AS stop_hits
+          FROM g
+        )
+        SELECT doc_id, n_words, word_chars, n_lines,
+               CAST(CASE WHEN n_words >= 30 AND n_words <= 100000
+                    THEN 1 ELSE 0 END AS INTEGER) AS keep_word_count,
+               CAST(CASE WHEN word_chars >= 3 * n_words
+                         AND word_chars <= 10 * n_words
+                    THEN 1 ELSE 0 END AS INTEGER) AS keep_mean_len,
+               CAST(CASE WHEN 10 * symbols <= n_words
+                    THEN 1 ELSE 0 END AS INTEGER) AS keep_symbol_ratio,
+               CAST(CASE WHEN 10 * bullet_lines <= 9 * n_lines
+                    THEN 1 ELSE 0 END AS INTEGER) AS keep_bullets,
+               CAST(CASE WHEN 10 * ellipsis_lines <= 3 * n_lines
+                    THEN 1 ELSE 0 END AS INTEGER) AS keep_ellipsis_lines,
+               CAST(CASE WHEN 5 * alpha_words >= 4 * n_words
+                    THEN 1 ELSE 0 END AS INTEGER) AS keep_alpha,
+               CAST(CASE WHEN stop_hits >= 2
+                    THEN 1 ELSE 0 END AS INTEGER) AS keep_stopwords,
+               CAST(CASE WHEN n_words >= 30 AND n_words <= 100000
+                         AND word_chars >= 3 * n_words
+                         AND word_chars <= 10 * n_words
+                         AND 10 * symbols <= n_words
+                         AND 10 * bullet_lines <= 9 * n_lines
+                         AND 10 * ellipsis_lines <= 3 * n_lines
+                         AND 5 * alpha_words >= 4 * n_words
+                         AND stop_hits >= 2
+                    THEN 1 ELSE 0 END AS INTEGER) AS keep
+        FROM m
+    """,
+    plan="full rule battery is pure JVM codegen, zero shuffle",
+    must=["Project"],
+    must_not=["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join"],
+)
 def q_gopher(spark, sf_dir):
     """Gopher quality-rule battery (ops/gopher.py) over documents: all seven
     published rules with INTEGER-arithmetic thresholds (10*symbols <=
@@ -1884,6 +4326,41 @@ def q_gopher(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        WITH t AS (
+          SELECT doc_id, lang,
+                 lower(regexp_replace(text, '\\s+', ' ', 'g')) AS tx
+          FROM documents
+        ),
+        g AS (
+          SELECT doc_id, lang,
+                 unnest(list_distinct(list_transform(
+                   range(1, greatest(len(tx) - 2, 0) + 1),
+                   i -> substr(tx, CAST(i AS INT), 3)))) AS gram
+          FROM t
+        ),
+        counts AS (SELECT lang, gram, count(*) AS c FROM g GROUP BY 1, 2),
+        prof AS (
+          SELECT lang, gram, 50 - rank + 1 AS weight FROM (
+            SELECT lang, gram,
+                   row_number() OVER (PARTITION BY lang
+                                      ORDER BY c DESC, gram) AS rank
+            FROM counts)
+          WHERE rank <= 50
+        ),
+        scored AS (
+          SELECT g.doc_id, p.lang,
+                 CAST(sum(p.weight) AS BIGINT) AS score
+          FROM g JOIN prof p ON g.gram = p.gram
+          GROUP BY 1, 2
+        )
+        SELECT doc_id, lang AS pred_lang, score FROM (
+          SELECT *, row_number() OVER (PARTITION BY doc_id
+                                       ORDER BY score DESC, lang) AS rn
+          FROM scored) WHERE rn = 1
+    """,
+)
 def q_lang_id(spark, sf_dir):
     """n-gram language-ID (brief §extras): train per-language trigram
     profiles on the corpus, classify every document by weighted-overlap
@@ -1895,6 +4372,28 @@ def q_lang_id(spark, sf_dir):
     return classify_language(docs, profiles)
 
 
+@contract(
+    oracle="""
+        -- regenerate ops/multimodal.synth_media_df(300) exactly: payload
+        -- is 'MEDIA' || md5(media_id) x8, kind cycles image/audio/video
+        WITH m AS (
+          SELECT r.range AS media_id,
+                 r.range % 50 AS doc_id,
+                 (['image','audio','video'])[CAST(r.range % 3 AS INT) + 1]
+                   AS kind,
+                 'MEDIA' || repeat(md5(CAST(r.range AS VARCHAR)), 8)
+                   AS payload,
+                 CAST(r.range * 10 AS INT) AS duration_ms
+          FROM range(0, 300) r
+        )
+        SELECT kind,
+               count(*) AS n_media,
+               CAST(sum(len(payload)) AS BIGINT) AS total_bytes,
+               count(DISTINCT doc_id) AS n_docs,
+               max(duration_ms) AS max_duration_ms
+        FROM m GROUP BY kind
+    """,
+)
 def q_media_meta(spark, sf_dir):
     """Multimodal source plumbing: per-kind stats over the deterministic
     media table (payload is a pure function of media_id, so DuckDB can
@@ -1910,6 +4409,41 @@ def q_media_meta(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        WITH t AS (
+          SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
+          FROM documents
+        ), c AS (
+          SELECT doc_id, w,
+                 unnest(generate_series(
+                   0, CAST(ceil(len(w) / 10.0) AS BIGINT) - 1)) AS chunk_idx
+          FROM t
+        ), s AS (
+          SELECT doc_id, chunk_idx,
+                 array_to_string(
+                   list_slice(w, chunk_idx * 10 + 1, chunk_idx * 10 + 10), ' ')
+                   AS chunk_text
+          FROM c
+        ), k AS (
+          SELECT doc_id, chunk_idx, chunk_text,
+                 row_number() OVER (PARTITION BY chunk_text
+                                    ORDER BY doc_id, chunk_idx) = 1 AS kept
+          FROM s
+        )
+        SELECT doc_id,
+               CAST(sum(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT)
+                 AS n_spans_kept,
+               CAST(sum(CASE WHEN kept THEN 0 ELSE 1 END) AS BIGINT)
+                 AS n_spans_dropped,
+               coalesce(string_agg(CASE WHEN kept THEN chunk_text END,
+                                   ' ' ORDER BY chunk_idx), '') AS clean_text
+        FROM k GROUP BY doc_id
+    """,
+    plan="groupBy-min + hash join on span hashes, no window over spans",
+    must=["HashAggregate", "Join"],
+    must_not=["Window", "CartesianProduct", "BroadcastNestedLoopJoin"],
+)
 def q_span_dedup(spark, sf_dir):
     """C4-style span-level dedup: every repeated 10-token span keeps only
     its first (doc_id, idx) occurrence; docs are reassembled from surviving
@@ -1920,6 +4454,54 @@ def q_span_dedup(spark, sf_dir):
     return span_dedup(_docs(spark, sf_dir), span_tokens=10)
 
 
+@contract(
+    oracle="""
+        WITH docs AS (
+          SELECT doc_id, source AS host,
+                 replace(text, ' ', chr(10)) AS text
+          FROM documents
+        ), lines AS (
+          SELECT doc_id, host, md5(trim(line)) AS h
+          FROM (SELECT doc_id, host,
+                       unnest(string_split(text, chr(10))) AS line
+                FROM docs) q
+          WHERE trim(line) <> ''
+        ), hp AS (
+          SELECT host, count(*) AS host_pages FROM docs GROUP BY host
+        ), lp AS (
+          SELECT host, h, count(DISTINCT doc_id) AS line_pages
+          FROM lines GROUP BY host, h
+        ), boiler AS (
+          SELECT lp.host, list(lp.h) AS hs
+          FROM lp JOIN hp USING (host)
+          WHERE lp.line_pages >= 2
+            AND lp.line_pages * 100 >= hp.host_pages * 60
+          GROUP BY lp.host
+        )
+        SELECT d.doc_id,
+               CAST(len(string_split(d.text, chr(10))) AS BIGINT)
+                 AS n_lines,
+               CAST(len(list_filter(string_split(d.text, chr(10)),
+                    x -> trim(x) <> '' AND
+                         list_contains(coalesce(b.hs, []), md5(trim(x)))))
+                    AS BIGINT) AS n_lines_removed,
+               -- duckdb's array_to_string of an EMPTY list is NULL;
+               -- Spark's concat_ws is '' — coalesce to the Spark shape
+               coalesce(array_to_string(
+                 list_filter(string_split(d.text, chr(10)),
+                   x -> trim(x) = '' OR
+                        NOT list_contains(coalesce(b.hs, []),
+                                          md5(trim(x)))),
+                 chr(10)), '') AS clean_text
+        FROM docs d LEFT JOIN boiler b USING (host)
+    """,
+    plan=(
+        "partial-agg line counts + equi-joins, no window over line text, no forced "
+        "broadcast of the per-host dim"
+    ),
+    must=["HashAggregate", "Join"],
+    must_not=["Window", "CartesianProduct", "BroadcastNestedLoopJoin"],
+)
 def q_host_line_dedup(spark, sf_dir):
     """CCNet-style per-host repeated-line removal: a line recurring on >=2
     pages and >=60% of a host's pages is site furniture and is stripped
@@ -1936,6 +4518,28 @@ def q_host_line_dedup(spark, sf_dir):
     return host_line_dedup(docs, min_pages=2, pct_pages=60)
 
 
+@contract(
+    oracle="""
+        -- EXPECTED flags in closed form (the robots meta is a pure
+        -- function of doc_id%5) — checks the DOM kernel's extraction
+        -- + the JVM REP-token interpretation, not a second parser
+        SELECT doc_id,
+               CASE doc_id % 5
+                 WHEN 0 THEN 'noindex, follow'
+                 WHEN 1 THEN 'none'
+                 WHEN 2 THEN 'index, nofollow'
+                 WHEN 3 THEN NULL
+                 ELSE 'max-snippet:-1, noindex' END AS robots,
+               CASE WHEN doc_id % 5 IN (0, 1, 4) THEN 1 ELSE 0 END
+                 AS noindex,
+               CASE WHEN doc_id % 5 IN (1, 2) THEN 1 ELSE 0 END
+                 AS nofollow
+        FROM documents
+    """,
+    plan="ONE Arrow meta kernel + JVM REP-token flags, no shuffle at all",
+    must=["ArrowEvalPython"],
+    must_not=["Exchange", "Window", "CartesianProduct"],
+)
 def q_noindex_gate(spark, sf_dir):
     """Page-level REP gate: <meta name=robots> through the DOM kernel
     (lowercased raw directive) + JVM token interpretation — 'none' implies
@@ -1973,6 +4577,40 @@ def q_noindex_gate(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        WITH b AS (
+          SELECT 'https://r' || (doc_id % 10) || '.com/p' || doc_id
+                   AS url,
+                 1704067200 + doc_id + 3 * 604800 AS last_ts,
+                 CASE WHEN doc_id % 3 = 0 THEN 3
+                      WHEN doc_id % 3 = 1 THEN 0
+                      ELSE 1 END AS ch
+          FROM documents
+        ), e AS (
+          SELECT url, last_ts, ch,
+                 least(greatest(1814400 // greatest(ch, 1), 86400),
+                       2592000) AS est
+          FROM b
+        )
+        SELECT url,
+               CAST(4 AS BIGINT) AS n_captures,
+               CAST(ch AS BIGINT) AS n_changes,
+               CAST(last_ts AS BIGINT) AS last_ts,
+               CAST(est AS BIGINT) AS est_change_sec,
+               CAST(last_ts + est AS BIGINT) AS next_due_ts,
+               CAST(1709251200 - (last_ts + est) AS BIGINT)
+                 AS overdue_sec
+        FROM e
+    """,
+    plan=(
+        "digests below the exchange, ONE partial-agg groupBy(url), zip_with change "
+        "counting instead of a window (the synth's 4-row capture crossJoin is fixture "
+        "construction, not the op)"
+    ),
+    must=["md5", "HashAggregate"],
+    must_not=["Window"],
+)
 def q_recrawl_priority(spark, sf_dir):
     """Change-rate recrawl scheduling over a synthesized 4-capture weekly
     history per url: doc_id%3 picks the body-churn pattern (every capture /
@@ -2044,6 +4682,23 @@ def _synth_urls(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- EXPECTED parse output in closed form (urls are pure functions
+        -- of doc_id/source/lang) — checks Spark's parse_url, not a
+        -- second parser
+        SELECT doc_id,
+               CASE WHEN doc_id % 2 = 0 THEN 'https' ELSE 'http' END AS scheme,
+               'w' || (doc_id % 7) || '.' || source || '.example.' ||
+                 (['org','net','com'])[(doc_id % 3) + 1] AS host,
+               '/a/' || (doc_id % 5) || '/p' || doc_id AS path,
+               CASE WHEN doc_id % 4 = 0
+                    THEN 'q=' || doc_id || '&lang=' || lang END AS "query",
+               'example.' || (['org','net','com'])[(doc_id % 3) + 1]
+                 AS registered_domain
+        FROM documents
+    """,
+)
 def q_url_parts(spark, sf_dir):
     """URL decomposition (web-curation op): Spark's JVM ``parse_url`` per
     part vs the oracle's closed-form expected values — a real check of the
@@ -2056,6 +4711,22 @@ def q_url_parts(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        WITH u AS (
+          SELECT 'w' || (doc_id % 7) || '.' || source || '.example.' ||
+                   (['org','net','com'])[(doc_id % 3) + 1] AS host,
+                 octet_length(encode(text)) AS nb
+          FROM documents
+        )
+        SELECT host,
+               CAST(count(*) AS BIGINT) AS n_docs,
+               CAST(sum(nb) AS BIGINT) AS total_bytes,
+               round(count(*) / CAST((SELECT count(*) FROM documents) AS DOUBLE),
+                     4) AS doc_share
+        FROM u GROUP BY host
+    """,
+)
 def q_domain_stats(spark, sf_dir):
     """Per-host crawl accounting (the domain-skew audit): one shuffle with
     map-side partials; corpus share from a window over the tiny aggregate."""
@@ -2065,6 +4736,26 @@ def q_domain_stats(spark, sf_dir):
     return domain_stats(parts, bytes_col="html")
 
 
+@contract(
+    oracle="""
+        WITH u AS (
+          SELECT lang,
+                 'w' || (doc_id % 7) || '.' || source || '.example.' ||
+                   (['org','net','com'])[(doc_id % 3) + 1] AS host
+          FROM documents
+        ),
+        top2 AS (
+          SELECT host FROM u GROUP BY host
+          ORDER BY count(*) DESC, host ASC LIMIT 2
+        )
+        SELECT lang, CAST(count(*) AS BIGINT) AS n_docs_kept
+        FROM u WHERE host NOT IN (SELECT host FROM top2)
+        GROUP BY lang
+    """,
+    plan="blocklist dropped via broadcast LEFT ANTI join",
+    must=["LeftAnti", "BroadcastHashJoin"],
+    must_not=["CartesianProduct"],
+)
 def q_blocklist(spark, sf_dir):
     """Broadcast LEFT ANTI blocklist filter: drop the two dominant hosts
     (deterministic tie-break), report per-lang survivor counts."""
@@ -2085,6 +4776,32 @@ def q_blocklist(spark, sf_dir):
     return kept.groupBy("lang").agg(F.count("*").alias("n_docs_kept"))
 
 
+@contract(
+    oracle="""
+        -- expected registered domain per suffix branch, in closed form
+        -- (k=6 private-section github.io keeps the user label; k=7 is
+        -- a bare public suffix with no registrable part)
+        SELECT doc_id,
+               CASE WHEN doc_id % 8 = 7 THEN 'co.uk'
+                    ELSE 'h' || doc_id ||
+                      (['.blogs.example.com', '.example.co.uk',
+                        '.shop.example.com.au', '.example.unknowntld',
+                        '.www.example.com.br', '.portal.example.gob.mx',
+                        '.github.io'])[(doc_id % 8) + 1]
+               END AS host,
+               CASE doc_id % 8
+                 WHEN 0 THEN 'example.com'
+                 WHEN 1 THEN 'example.co.uk'
+                 WHEN 2 THEN 'example.com.au'
+                 WHEN 3 THEN 'example.unknowntld'
+                 WHEN 4 THEN 'example.com.br'
+                 WHEN 5 THEN 'example.gob.mx'
+                 WHEN 6 THEN 'h' || doc_id || '.github.io'
+                 ELSE 'co.uk'
+               END AS registered_domain
+        FROM documents
+    """,
+)
 def q_psl_domain(spark, sf_dir):
     """Registered domain via longest public-suffix match against the
     bundled ~1.9k-entry PSL snapshot (codegen literal array probe, zero
@@ -2118,6 +4835,29 @@ def q_psl_domain(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- expected canonical form in closed form from doc_id
+        SELECT doc_id,
+               (CASE WHEN doc_id % 2 = 0 THEN 'HTTPS' ELSE 'http' END)
+               || '://W' || (doc_id % 7) || '.' || upper(source)
+               || '.Example.' || (['org','net','com'])[(doc_id % 3) + 1]
+               || (CASE WHEN doc_id % 4 = 0
+                        THEN CASE WHEN doc_id % 2 = 0 THEN ':443' ELSE ':80' END
+                        WHEN doc_id % 4 = 1 THEN ':8080' ELSE '' END)
+               || (CASE WHEN doc_id % 6 = 0 THEN '' ELSE '/a/p' || doc_id END)
+               || (CASE WHEN doc_id % 3 = 0 THEN '?q=' || doc_id ELSE '' END)
+               || (CASE WHEN doc_id % 5 = 0 THEN '#s' ELSE '' END) AS raw_url,
+               (CASE WHEN doc_id % 2 = 0 THEN 'https' ELSE 'http' END)
+               || '://w' || (doc_id % 7) || '.' || lower(source)
+               || '.example.' || (['org','net','com'])[(doc_id % 3) + 1]
+               || (CASE WHEN doc_id % 4 = 1 THEN ':8080' ELSE '' END)
+               || (CASE WHEN doc_id % 6 = 0 THEN '/' ELSE '/a/p' || doc_id END)
+               || (CASE WHEN doc_id % 3 = 0 THEN '?q=' || doc_id ELSE '' END)
+                 AS canonical_url
+        FROM documents
+    """,
+)
 def q_url_canon(spark, sf_dir):
     """URL canonicalization for crawl-level url dedup: messy urls (mixed
     case, default ports, fragments, empty paths) are built in closed form
@@ -2159,6 +4899,20 @@ def q_url_canon(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- newest of the 3 synthesized captures is capture 2 (+2 days)
+        SELECT 'https://example.org/doc/' || doc_id AS url,
+               strftime(TIMESTAMP '2024-01-01 00:00:00'
+                        + to_seconds(doc_id + 172800),
+                        '%Y-%m-%dT%H:%M:%SZ') AS warc_date,
+               md5(text || ' v2') AS body_md5
+        FROM documents
+    """,
+    plan="struct-max with map-side partial agg, no capture window",
+    must=["partial_max"],
+    must_not=["Window"],
+)
 def q_latest_capture(spark, sf_dir):
     """Crawl-capture dedup: 3 captures per url a day apart; keep the newest
     (groupBy-max over a struct — partial-agg, no window sort)."""
@@ -2183,6 +4937,49 @@ def q_latest_capture(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- replay the election as a window rank: self-canonical first,
+        -- then newest, then url/body ascending (total order)
+        WITH c AS (
+          SELECT 'https://ex.org/g' || (doc_id // 4) || '/v' || (doc_id % 4)
+                   AS url,
+                 CASE WHEN doc_id % 4 = 3 THEN NULL
+                      WHEN (doc_id // 4) % 2 = 0
+                        THEN 'https://ex.org/g' || (doc_id // 4) || '/v0'
+                      ELSE 'https://ex.org/g' || (doc_id // 4) || '/vX'
+                 END AS canonical,
+                 TIMESTAMP '2024-01-01 00:00:00' + to_seconds(doc_id * 3600)
+                   AS warc_ts,
+                 md5(text) AS body
+          FROM documents
+        ), g AS (
+          SELECT coalesce(canonical, url) AS canonical_url, url, warc_ts,
+                 body,
+                 count(*) OVER (PARTITION BY coalesce(canonical, url))
+                   AS n_captures,
+                 row_number() OVER (
+                   PARTITION BY coalesce(canonical, url)
+                   ORDER BY CASE WHEN url = coalesce(canonical, url)
+                                 THEN 0 ELSE 1 END,
+                            warc_ts DESC, url, body
+                 ) AS rn
+          FROM c
+        )
+        SELECT canonical_url, CAST(n_captures AS BIGINT) AS n_captures,
+               url, strftime(warc_ts, '%Y-%m-%dT%H:%M:%SZ') AS warc_date,
+               body
+        FROM g WHERE rn = 1
+    """,
+    plan=(
+        "rel=canonical election: ONE struct-min groupBy with partial aggregation "
+        "(SortAggregate — struct min is not hashable; no window over captures, no "
+        "Python stage)"
+    ),
+    must=["Aggregate"],
+    must_not=["Window", "CartesianProduct", "ArrowEvalPython", "BatchEvalPython",
+              "Join"],
+)
 def q_canonical_dedup(spark, sf_dir):
     """rel=canonical capture election (ops/web.canonical_dedup): 4
     captures per group — three variants declaring a canonical plus a
@@ -2223,6 +5020,53 @@ def q_canonical_dedup(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- per-label centroid: DECIMAL(30,15) sums (order-independent,
+        -- matching Spark's decimal-summed means bit-for-bit), then
+        -- cosine distance + top-10 rank per label
+        WITH e AS (
+          SELECT vec_id, label,
+                 unnest(range(1, len(embedding) + 1)) AS pos,
+                 unnest(list_transform(embedding, x -> CAST(x AS DOUBLE)))
+                   AS val
+          FROM embeddings
+        ), c AS (
+          SELECT label, pos,
+                 CAST(sum(CAST(CAST(val AS DOUBLE) AS DECIMAL(30,15)))
+                      AS DOUBLE) / count(*) AS m
+          FROM e GROUP BY label, pos
+        ), cv AS (
+          SELECT label, list(m ORDER BY pos) AS cv FROM c GROUP BY label
+        ), s AS (
+          SELECT a.label, a.vec_id,
+                 round(1 - list_dot_product(
+                     list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
+                     cv.cv)
+                   / (sqrt(list_dot_product(
+                        list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
+                        list_transform(a.embedding, x -> CAST(x AS DOUBLE))))
+                      * sqrt(list_dot_product(cv.cv, cv.cv))),
+                   4) AS centroid_dist
+          FROM embeddings a JOIN cv ON a.label = cv.label
+        ), r AS (
+          SELECT label, vec_id, centroid_dist,
+                 row_number() OVER (
+                   PARTITION BY label
+                   ORDER BY centroid_dist DESC, vec_id ASC
+                 ) AS rank
+          FROM s
+        )
+        SELECT label, vec_id, centroid_dist, rank FROM r WHERE rank <= 10
+    """,
+    plan=(
+        "prototypicality pruning: broadcast centroid dim join + WindowGroupLimit top-k "
+        "per label (vectors never shuffle for the join; no Python stage)"
+    ),
+    must=["BroadcastHashJoin", "WindowGroupLimit"],
+    must_not=["CartesianProduct", "SortMergeJoin", "ArrowEvalPython",
+              "BatchEvalPython"],
+)
 def q_centroid_outliers(spark, sf_dir):
     """Prototypicality pruning (ops/similarity.centroid_outliers): per-label
     centroid via DECIMAL(30,15)-summed means (order-independent,
@@ -2235,6 +5079,30 @@ def q_centroid_outliers(spark, sf_dir):
     return centroid_outliers(_tbl(spark, sf_dir, "embeddings"), k=10)
 
 
+@contract(
+    oracle="""
+        -- identical deterministic ranking: md5('cap1' || doc_id)
+        -- within each synthesized host, keep rank <= 20
+        WITH c AS (
+          SELECT doc_id, 'h' || (doc_id % 7) AS host FROM documents
+        ), r AS (
+          SELECT doc_id, host,
+                 row_number() OVER (
+                   PARTITION BY host
+                   ORDER BY md5('cap1' || doc_id), doc_id
+                 ) AS host_rank
+          FROM c
+        )
+        SELECT doc_id, host, CAST(host_rank AS BIGINT) AS host_rank
+        FROM r WHERE host_rank <= 20
+    """,
+    plan=(
+        "diversification cap: rank<=N rewritten to WindowGroupLimit (map-side top-N "
+        "per host before the shuffle; no Python stage)"
+    ),
+    must=["WindowGroupLimit"],
+    must_not=["CartesianProduct", "ArrowEvalPython", "BatchEvalPython", "Join"],
+)
 def q_domain_cap(spark, sf_dir):
     """Domain diversification cap (ops/web.domain_cap): at most 20 docs
     per synthesized host (7 hosts over documents), selected by a
@@ -2256,6 +5124,25 @@ def q_domain_cap(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- recompute the per-url accounting straight from documents;
+        -- matching md5 per url == the WARC writer->reader round-trip
+        -- preserved every body byte
+        SELECT 'https://d' || (doc_id % 20) || '.example.org/doc/' || doc_id
+                 AS url,
+               strftime(TIMESTAMP '2024-01-01 00:00:00' + to_seconds(doc_id),
+                        '%Y-%m-%dT%H:%M:%SZ') AS warc_date,
+               CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+               md5(text) AS body_md5,
+               CAST(200 AS INTEGER) AS http_status,
+               'text/html; charset=utf-8' AS content_type
+        FROM documents
+    """,
+    plan="WARC ingest is a shuffle-free scan → single mapInPandas",
+    must=["MapInPandas"],
+    must_not=["Exchange", "Window"],  # the READ side must not shuffle
+)
 def q_warc_roundtrip(spark, sf_dir):
     """WARC source+sink (Common-Crawl container format): synthesize a crawl
     from the documents table, write it as per-record-gzip ``.warc.gz`` part
@@ -2298,6 +5185,47 @@ def q_warc_roundtrip(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- re-derive every record's seekable extent in closed form: the
+        -- serialized record is a pure function of (url, html bytes), so
+        -- its length is byte arithmetic (uuid=36, date=20 are fixed
+        -- width) and its offset is the running sum in doc_id file order
+        WITH p AS (
+          SELECT doc_id,
+                 'https://d' || (doc_id % 20) || '.example.org/doc/'
+                   || doc_id AS url,
+                 CAST(octet_length(encode(text)) AS BIGINT) AS hl
+          FROM documents
+        ), r AS (
+          SELECT doc_id, url,
+                 CAST(octet_length(encode(
+                   e'HTTP/1.1 200 OK\\r\\nContent-Type: text/html; '
+                   || e'charset=utf-8\\r\\nContent-Length: '
+                   || CAST(hl AS VARCHAR) || e'\\r\\n\\r\\n'
+                 )) AS BIGINT) + hl AS http_len
+          FROM p
+        ), s AS (
+          SELECT doc_id, url,
+                 CAST(octet_length(encode(
+                   e'WARC/1.0\\r\\nWARC-Type: response\\r\\n'
+                   || 'WARC-Record-ID: <urn:uuid:' || repeat('x', 36)
+                   || e'>\\r\\nWARC-Date: ' || repeat('x', 20)
+                   || e'\\r\\nWARC-Target-URI: ' || url
+                   || e'\\r\\nContent-Type: application/http; '
+                   || e'msgtype=response\\r\\nContent-Length: '
+                   || CAST(http_len AS VARCHAR) || e'\\r\\n\\r\\n'
+                 )) AS BIGINT) + http_len + 4 AS rec_length
+          FROM r
+        )
+        SELECT url,
+               CAST(COALESCE(SUM(rec_length) OVER (ORDER BY doc_id
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+                    0) AS BIGINT) AS rec_offset,
+               CAST(rec_length AS BIGINT) AS rec_length
+        FROM s
+    """,
+)
 def q_warc_index(spark, sf_dir):
     """CDX-style record index over an uncompressed WARC: write the synthetic
     crawl as ONE sorted ``.warc`` part, read it back with per-record seekable
@@ -2334,6 +5262,33 @@ def q_warc_index(spark, sf_dir):
     return w.select("url", "rec_offset", "rec_length")
 
 
+@contract(
+    oracle="""
+        -- every CDXJ field restated in closed form from documents —
+        -- never reading the shards — so the match proves the format
+        -- write -> range-sorted shards -> parse -> casts end-to-end
+        SELECT 'org,example,s' || (doc_id % 9) || ')/p/' || doc_id
+                 AS key,
+               strftime(TIMESTAMP '2024-01-01 00:00:00'
+                          + to_seconds(doc_id), '%Y%m%d%H%M%S') AS ts14,
+               'https://s' || (doc_id % 9) || '.example.org/p/' || doc_id
+                 AS url,
+               'text/html' AS mime,
+               CAST(200 + doc_id % 3 AS INTEGER) AS status,
+               md5(text) AS digest,
+               CAST(octet_length(encode(text)) AS BIGINT) AS length,
+               CAST(doc_id * 1000 AS BIGINT) AS "offset",
+               'part-0000' || (doc_id % 2) || '.warc.gz' AS filename
+        FROM documents
+    """,
+    plan=(
+        "CDXJ read is a parallel text scan + JVM regexp/from_json projection: zero "
+        "Python, zero shuffle (the ONE range exchange is paid at WRITE time, off this "
+        "plan)"
+    ),
+    must=["from_json"],
+    must_not=["Exchange", "ArrowEvalPython", "BatchEvalPython", "Window"],
+)
 def q_cdxj_roundtrip(spark, sf_dir):
     """CDXJ capture index (sources/cdx.py): write sorted ``cdx-*.gz``
     shards + cluster.idx from synthesized captures, read them back through
@@ -2376,6 +5331,28 @@ def q_cdxj_roundtrip(spark, sf_dir):
     return read_cdxj(spark, os.path.join(out, "cdx-*.gz"))
 
 
+@contract(
+    oracle="""
+        -- expected extraction restated symbolically from the SOURCE
+        -- text (writer input), never from the PDF bytes — a hash match
+        -- proves the binary parse (objects, FlateDecode, 4 operator
+        -- styles, escapes, UTF-16BE, kerning, line assembly) round-trips
+        SELECT doc_id,
+               '1.4' AS pdf_version,
+               CAST(2 AS INTEGER) AS n_pages,
+               CAST(length(substr(text, 1, 120)) + 2 AS INTEGER)
+                 AS n_chars,
+               substr(text, 1, 40) || chr(10) || substr(text, 41, 40)
+                 || chr(10) || substr(text, 81, 40) AS pdf_text
+        FROM documents
+    """,
+    plan=(
+        "PDF binary parse: fixture-writer UDF + ONE Arrow extract stage back-to-back "
+        "in the same pipeline, zero shuffle"
+    ),
+    must=["ArrowEvalPython"],
+    must_not=["Exchange", "BatchEvalPython", "Window", "Join"],
+)
 def q_pdf_text(spark, sf_dir):
     """Native PDF text extraction (ops/pdf.py — the north rule's
     "PDF/layout parse" leg): each doc's text becomes a real 2-page PDF via
@@ -2404,6 +5381,35 @@ def q_pdf_text(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- expected label per payload family in closed form — the match
+        -- proves every magic-byte branch + the html tag scan + the
+        -- binary-byte text/plain split fire on REAL bytes
+        SELECT doc_id,
+               CASE doc_id % 12
+                 WHEN 0 THEN 'application/pdf'
+                 WHEN 1 THEN 'image/png'
+                 WHEN 2 THEN 'image/gif'
+                 WHEN 3 THEN 'image/jpeg'
+                 WHEN 4 THEN 'audio/wav'
+                 WHEN 5 THEN 'application/gzip'
+                 WHEN 6 THEN 'application/zip'
+                 WHEN 7 THEN 'text/html'
+                 WHEN 8 THEN 'text/xml'
+                 WHEN 9 THEN 'text/plain'
+                 WHEN 10 THEN 'audio/mpeg'
+                 ELSE 'application/octet-stream'
+               END AS mime
+        FROM documents
+    """,
+    plan=(
+        "magic-byte sniff is pure JVM codegen: no Python stage, no shuffle, fused into "
+        "the scan's stage"
+    ),
+    must=["codegen id"],
+    must_not=["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join"],
+)
 def q_mime_sniff(spark, sf_dir):
     """Magic-byte content-type sniffing (ops/mime.mime_sniff — the router
     gate in front of the mixed-corpus extractor): 12 payload families
@@ -2438,6 +5444,95 @@ def q_mime_sniff(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- full semantic replay: overlapping 8-token windows -> md5 ->
+        -- global min-occurrence election -> gaps-and-islands interval
+        -- merge -> token cut -> ordered reassembly
+        WITH base AS (
+          SELECT doc_id,
+                 'cookie banner accept all our terms and privacy policy today '
+                 || text
+                 || CASE WHEN doc_id % 3 = 0
+                      THEN ' subscribe to our newsletter for more updates daily'
+                      ELSE '' END AS t
+          FROM documents
+        ),
+        docs2 AS (
+          SELECT doc_id, regexp_split_to_array(trim(t), '\\s+') AS arr
+          FROM base
+        ),
+        grams AS (
+          SELECT doc_id, CAST(u.i AS BIGINT) AS pos,
+                 md5(array_to_string(arr[u.i+1 : u.i+8], ' ')) AS h
+          FROM docs2,
+               LATERAL (SELECT unnest(range(0, len(arr) - 7)) AS i) AS u
+          WHERE len(arr) >= 8
+        ),
+        firsts AS (
+          SELECT h, count(*) AS c,
+                 min(doc_id * 1000000 + pos) AS mk
+          FROM grams GROUP BY h
+        ),
+        dups AS (
+          SELECT g.doc_id, g.pos AS s, g.pos + 8 AS e
+          FROM grams g JOIN firsts f USING (h)
+          WHERE f.c > 1 AND g.doc_id * 1000000 + g.pos <> f.mk
+        ),
+        flag AS (
+          SELECT doc_id, s, e,
+                 CASE WHEN s > coalesce(max(e) OVER (
+                          PARTITION BY doc_id ORDER BY s, e
+                          ROWS BETWEEN UNBOUNDED PRECEDING
+                                   AND 1 PRECEDING), -1)
+                      THEN 1 ELSE 0 END AS ng
+          FROM dups
+        ),
+        grp AS (
+          SELECT doc_id, s, e,
+                 sum(ng) OVER (PARTITION BY doc_id ORDER BY s, e
+                               ROWS BETWEEN UNBOUNDED PRECEDING
+                                        AND CURRENT ROW) AS gid
+          FROM flag
+        ),
+        islands AS (
+          SELECT doc_id, min(s) AS s, max(e) AS e
+          FROM grp GROUP BY doc_id, gid
+        ),
+        toks AS (
+          SELECT doc_id,
+                 CAST(generate_subscripts(arr, 1) - 1 AS BIGINT) AS i,
+                 unnest(arr) AS tok
+          FROM docs2
+        ),
+        kept AS (
+          SELECT t.doc_id, t.i, t.tok
+          FROM toks t LEFT JOIN islands v
+            ON t.doc_id = v.doc_id AND t.i >= v.s AND t.i < v.e
+          WHERE v.doc_id IS NULL
+        )
+        SELECT d.doc_id,
+               CAST(len(d.arr) AS BIGINT) AS n_tokens,
+               CAST(len(d.arr) - coalesce(kc.nk, 0) AS BIGINT)
+                 AS n_dropped,
+               CAST(coalesce(iv.n_iv, 0) AS BIGINT) AS n_intervals,
+               coalesce(kt.txt, '') AS clean_text
+        FROM docs2 d
+        LEFT JOIN (SELECT doc_id, count(*) AS n_iv FROM islands
+                   GROUP BY doc_id) iv USING (doc_id)
+        LEFT JOIN (SELECT doc_id, count(*) AS nk FROM kept
+                   GROUP BY doc_id) kc USING (doc_id)
+        LEFT JOIN (SELECT doc_id, string_agg(tok, ' ' ORDER BY i) AS txt
+                   FROM kept GROUP BY doc_id) kt USING (doc_id)
+    """,
+    plan=(
+        "overlapping-window dedup: groupBy(md5) with map-side partials + equi-joins; "
+        "interval merge is a JVM aggregate over per-doc arrays — no Window, no Python, "
+        "no cartesian"
+    ),
+    must=["HashAggregate"],
+    must_not=["Window", "ArrowEvalPython", "BatchEvalPython", "CartesianProduct"],
+)
 def q_exact_substring(spark, sf_dir):
     """Exact-substring dedup (ops/corpus.exact_substring_dedup — Lee et
     al. 2022): overlapping 8-token windows, keep-first, interval merge.
@@ -2466,6 +5561,15 @@ def q_exact_substring(spark, sf_dir):
     return exact_substring_dedup(docs, window_tokens=8)
 
 
+@contract(
+    oracle="""
+        SELECT 'https://synth.example/' || lang || '/' || doc_id || '-0.html' AS url,
+               1 AS n_entries,
+               'DOC' || doc_id AS headword,
+               1 AS n_defs
+        FROM documents
+    """,
+)
 def q_extract_entries(spark, sf_dir):
     """Entry-struct check over the synthetic extraction: headword + counts."""
     _ship_package(spark)
@@ -2482,6 +5586,15 @@ def q_extract_entries(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        SELECT 'https://synth.example/' || lang || '/' || doc_id || '-0.html' AS url,
+               1 AS n_expressions,
+               'DOC' || doc_id AS spelling0,
+               'сущ.' AS tag0
+        FROM documents
+    """,
+)
 def q_migrate_v21(spark, sf_dir):
     """The fused v1→v2.1 migration UDF over synthetic pages: per-url
     expression count + first spelling variant + harvested first tag."""
@@ -2503,6 +5616,54 @@ def q_migrate_v21(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- rebuild the expected markdown symbolically: every block is a
+        -- deterministic function of doc_id and collapsed text slices;
+        -- the blockquote is the one block that can collapse to empty
+        -- (and must then be DROPPED, like the kernel does)
+        WITH c AS (
+          SELECT doc_id,
+                 trim(regexp_replace(substr(text, 1, 60),
+                      '\\s+', ' ', 'g')) AS c1,
+                 trim(regexp_replace(substr(text, 61, 30),
+                      '\\s+', ' ', 'g')) AS c2,
+                 trim(regexp_replace(substr(text, 91, 30),
+                      '\\s+', ' ', 'g')) AS c3,
+                 trim(regexp_replace(substr(text, 121, 20),
+                      '\\s+', ' ', 'g')) AS c4
+          FROM documents
+        ), b AS (
+          SELECT doc_id,
+                 list_filter([
+                   '# Doc ' || doc_id,
+                   trim(c1 || ' **bold' || doc_id || '** and [link '
+                        || doc_id || '](https://x.org/' || doc_id
+                        || ').'),
+                   '- ' || trim('alpha ' || c2) || chr(10)
+                       || '- beta *it' || doc_id || '*' || chr(10)
+                       || '  - nested ' || doc_id,
+                   CASE WHEN c3 <> '' THEN '> ' || c3 END,
+                   '```' || chr(10) || 'code  ' || doc_id || chr(10)
+                       || '  line2' || chr(10) || '```',
+                   '1. first' || chr(10) || '2. second ' || doc_id,
+                   '| k | v |' || chr(10) || '| --- | --- |' || chr(10)
+                       || '| ' || doc_id || ' | ' || c4 || ' |',
+                   '---'
+                 ], x -> x IS NOT NULL) AS blocks
+          FROM c
+        )
+        SELECT 'https://md.example.org/' || doc_id AS url,
+               array_to_string(blocks, chr(10) || chr(10)) AS markdown,
+               CAST(length(array_to_string(blocks, chr(10) || chr(10)))
+                    AS INTEGER) AS md_chars,
+               CAST(len(blocks) AS INTEGER) AS n_blocks
+        FROM b
+    """,
+    plan="ONE Arrow markdown-render stage, zero shuffle",
+    must=["ArrowEvalPython"],
+    must_not=["Exchange", "BatchEvalPython", "Window", "Join"],
+)
 def q_markdown(spark, sf_dir):
     """HTML→Markdown conversion (ops/markdown.py) over synthesized pages
     exercising every block family: heading, paragraph with bold/link
@@ -2560,6 +5721,42 @@ def q_markdown(spark, sf_dir):
     return to_markdown(pages).select("url", "markdown", "md_chars", "n_blocks")
 
 
+@contract(
+    oracle="""
+        -- the payload is a pure function of doc_id % 41, so the digest
+        -- groups ARE the % 41 groups; original = min (ts, url), replayed
+        -- with a window (ties on ts are real: ts is doc_id % 7 days)
+        WITH caps AS (
+          SELECT 'https://w' || (doc_id % 5) || '.example.org/p'
+                     || doc_id AS url,
+                 TIMESTAMP '2024-01-01 00:00:00'
+                     + (doc_id % 7) * INTERVAL 1 DAY AS ts,
+                 doc_id % 41 AS grp
+          FROM documents
+        ), w AS (
+          SELECT url, ts,
+                 row_number() OVER win AS rn,
+                 first_value(url) OVER win AS furl,
+                 first_value(ts) OVER win AS fts
+          FROM caps
+          WINDOW win AS (PARTITION BY grp ORDER BY ts, url)
+        )
+        SELECT url,
+               strftime(ts, '%Y-%m-%dT%H:%M:%SZ') AS warc_date,
+               (rn > 1) AS is_revisit,
+               CASE WHEN rn > 1 THEN furl END AS refers_to_url,
+               CASE WHEN rn > 1 THEN strftime(fts, '%Y-%m-%dT%H:%M:%SZ')
+                    END AS refers_to_date
+        FROM w
+    """,
+    plan=(
+        "digest dedup: ONE sha1 shuffle (map-side partial_min of the (ts,url) struct; "
+        "SortAggregate — struct min is not hash-aggregable) + equi-join back, no "
+        "window, zero Python"
+    ),
+    must=["partial_min", "Exchange hashpartitioning(payload_digest"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct"],
+)
 def q_warc_revisit(spark, sf_dir):
     """WARC 1.1 revisit classification (sources/warc.revisit_plan): the
     digest-dedup plan web archives use to store each payload once.  41
@@ -2600,6 +5797,53 @@ def q_warc_revisit(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- paragraphs = the 5-token chunk_plan tiles (same tiling the
+        -- q_chunk_plan oracle proves), then global keep-first by the
+        -- (doc_id, pos) struct minimum and ordered reassembly
+        WITH t AS (
+          SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
+          FROM documents
+        ), c AS (
+          SELECT doc_id, w,
+                 unnest(generate_series(
+                   0, CAST(ceil(len(w) / 5.0) AS BIGINT) - 1)) AS pos
+          FROM t
+        ), paras AS (
+          SELECT doc_id, pos,
+                 array_to_string(
+                   list_slice(w, pos * 5 + 1, pos * 5 + 5), ' ') AS para
+          FROM c
+        ), ph AS (
+          SELECT doc_id, pos, para, md5(trim(para)) AS h
+          FROM paras WHERE trim(para) <> ''
+        ), firsts AS (
+          SELECT h, min(struct_pack(doc_id := doc_id, pos := pos)) AS fmin
+          FROM ph GROUP BY h
+        ), flagged AS (
+          SELECT ph.doc_id, ph.pos, ph.para,
+                 struct_pack(doc_id := ph.doc_id, pos := ph.pos) = f.fmin
+                   AS kept
+          FROM ph JOIN firsts f USING (h)
+        )
+        SELECT doc_id,
+               count(*) AS n_paras,
+               CAST(sum(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT)
+                 AS n_paras_kept,
+               coalesce(string_agg(CASE WHEN kept THEN para END,
+                                   chr(10) || chr(10) ORDER BY pos), '')
+                 AS clean_text
+        FROM flagged GROUP BY doc_id
+    """,
+    plan=(
+        "global keep-first: groupBy(md5(para)) with map-side partial_min of the "
+        "(doc_id,pos) struct + equi-join back on the 16-byte hash; NEVER a window over "
+        "paragraph text (zipfian hot paragraphs), zero Python"
+    ),
+    must=["partial_min", "Exchange hashpartitioning(h#"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct"],
+)
 def q_paragraph_dedup(spark, sf_dir):
     """Global exact paragraph dedup (RefinedWeb §G.2 / Dolma paragraph
     pass): the sf corpus is single-line, so paragraphs are synthesized as
@@ -2622,6 +5866,78 @@ def q_paragraph_dedup(spark, sf_dir):
     return paragraph_dedup(para_docs)
 
 
+@contract(
+    oracle="""
+        -- SemDeDup: the q_ivf_topk training/assignment CTE (one Lloyd
+        -- iteration, DECIMAL(30,15) means — bit-identical with Spark),
+        -- then in-cluster pairs only; drop-if-lower-id-duplicate at
+        -- round(cosine,4) >= 0.35
+        WITH e AS (SELECT vec_id, embedding FROM embeddings),
+        seed AS (SELECT vec_id AS cent_id,
+                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
+                 FROM e WHERE vec_id < 16),
+        asg0 AS (
+          SELECT vec_id, cent_id, embedding FROM (
+            SELECT a.vec_id, c.cent_id, a.embedding,
+                   row_number() OVER (PARTITION BY a.vec_id ORDER BY
+                     (list_dot_product(a.embedding, c.cv) /
+                      (sqrt(list_dot_product(a.embedding, a.embedding)) *
+                       sqrt(list_dot_product(c.cv, c.cv)))) DESC,
+                     c.cent_id ASC) AS rn
+            FROM e a CROSS JOIN seed c) WHERE rn = 1
+        ),
+        ex AS (
+          SELECT cent_id,
+                 unnest(range(1, len(embedding) + 1)) AS pos,
+                 unnest(list_transform(embedding, x -> CAST(x AS DOUBLE)))
+                   AS val
+          FROM asg0
+        ),
+        sums AS (
+          SELECT cent_id, pos,
+                 sum(CAST(val AS DECIMAL(30,15))) AS s, count(*) AS c
+          FROM ex GROUP BY 1, 2
+        ),
+        refined AS (
+          SELECT cent_id, list(CAST(s AS DOUBLE) / c ORDER BY pos) AS cv
+          FROM sums GROUP BY cent_id
+        ),
+        cents AS (
+          SELECT s.cent_id, coalesce(r.cv, s.cv) AS cv
+          FROM seed s LEFT JOIN refined r USING (cent_id)
+        ),
+        assign AS (
+          SELECT vec_id, cent_id FROM (
+            SELECT a.vec_id, c.cent_id,
+                   row_number() OVER (PARTITION BY a.vec_id ORDER BY
+                     (list_dot_product(a.embedding, c.cv) /
+                      (sqrt(list_dot_product(a.embedding, a.embedding)) *
+                       sqrt(list_dot_product(c.cv, c.cv)))) DESC,
+                     c.cent_id ASC) AS rn
+            FROM e a CROSS JOIN cents c) WHERE rn = 1
+        ),
+        sides AS (
+          SELECT a.vec_id, a.cent_id, e.embedding,
+                 sqrt(list_dot_product(e.embedding, e.embedding)) AS nrm
+          FROM assign a JOIN e USING (vec_id)
+        ),
+        dropped AS (
+          SELECT DISTINCT y.vec_id
+          FROM sides x JOIN sides y
+            ON x.cent_id = y.cent_id AND x.vec_id < y.vec_id
+          WHERE round(list_dot_product(x.embedding, y.embedding) /
+                      (x.nrm * y.nrm), 4) >= 0.35
+        )
+        SELECT a.vec_id, a.cent_id, (d.vec_id IS NULL) AS kept
+        FROM assign a LEFT JOIN dropped d USING (vec_id)
+    """,
+    plan=(
+        "SemDeDup: broadcast centroids (tiny trained set), cluster-bounded pair scan "
+        "as an EQUI-join on cent_id — never an all-pairs cartesian; zero Python"
+    ),
+    must=["BroadcastExchange", "Exchange hashpartitioning(cent_id"],
+    must_not=["CartesianProduct", "ArrowEvalPython", "BatchEvalPython"],
+)
 def q_semantic_dedup(spark, sf_dir):
     """SemDeDup (Abbas et al. 2023) over the embeddings table: centroids
     Lloyd-trained for ONE iteration (decimal-exact means — bit-reproducible
@@ -2639,6 +5955,45 @@ def q_semantic_dedup(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- EXPECTED charset + decoded text in closed form (each body is
+        -- a pure function of doc_id%7) — checks the JVM sniff chain and
+        -- the Arrow decode kernel without a second decoder
+        WITH x AS (
+          SELECT doc_id,
+                 CASE doc_id % 7
+                   WHEN 0 THEN 'utf-8'
+                   WHEN 1 THEN 'windows-1251'
+                   WHEN 2 THEN 'koi8-r'
+                   WHEN 3 THEN 'utf-8'
+                   WHEN 4 THEN 'windows-1252'
+                   WHEN 5 THEN 'windows-1252'
+                   ELSE 'utf-16le' END AS charset,
+                 CASE doc_id % 7
+                   WHEN 0 THEN 'привет мир #' || doc_id
+                   WHEN 1 THEN '<html><head><meta charset="windows-1251">'
+                               || '</head><body>привет мир #' || doc_id
+                               || '</body></html>'
+                   WHEN 2 THEN '<?xml version=''1.0'' encoding=''koi8-r''?>'
+                               || '<d>мир #' || doc_id || '</d>'
+                   WHEN 3 THEN 'naïve café #' || doc_id
+                   WHEN 4 THEN 'café premium #' || doc_id
+                   WHEN 5 THEN '<meta http-equiv="Content-Type" content='
+                               || '"text/html; charset=latin-1"><p>déjà #'
+                               || doc_id
+                   ELSE 'utf16 text #' || doc_id END AS text
+          FROM documents
+        )
+        SELECT doc_id, charset, text, length(text) AS n_chars FROM x
+    """,
+    plan=(
+        "charset sniff is pure JVM codegen fused into the scan projection; decode is "
+        "ONE Arrow kernel; zero shuffle"
+    ),
+    must=["ArrowEvalPython"],
+    must_not=["Exchange", "BatchEvalPython", "Window", "Join"],
+)
 def q_charset(spark, sf_dir):
     """Charset sniff + decode battery (ops/encoding.py): seven body
     families by doc_id%7 — UTF-8 BOM, <meta> cp1251, <?xml koi8-r,
@@ -2706,6 +6061,23 @@ def q_charset(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        WITH toks AS (
+          SELECT doc_id,
+                 unnest(regexp_split_to_array(trim(text), '\\s+')) AS term
+          FROM documents
+        )
+        SELECT term, doc_id, count(*) AS tf
+        FROM toks WHERE term <> '' GROUP BY term, doc_id
+    """,
+    plan=(
+        "FLAT (term, doc_id, tf) rows: explode + ONE partial-agg groupBy; never "
+        "collect_list posting arrays, zero Python"
+    ),
+    must=["HashAggregate", "Exchange hashpartitioning(term"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct"],
+)
 def q_inverted_index(spark, sf_dir):
     """Flat inverted index (term, doc_id, tf) — posting lists as rows,
     never collect_list arrays (a stopword's posting list at 100 TB is
@@ -2715,6 +6087,31 @@ def q_inverted_index(spark, sf_dir):
     return inverted_index(_docs(spark, sf_dir))
 
 
+@contract(
+    oracle="""
+        WITH toks AS (
+          SELECT doc_id,
+                 unnest(regexp_split_to_array(trim(text), '\\s+')) AS term
+          FROM documents
+        ), idx AS (
+          SELECT term, doc_id, count(*) AS tf
+          FROM toks WHERE term <> '' GROUP BY term, doc_id
+        ), scored AS (
+          SELECT doc_id, count(DISTINCT term) AS n_terms,
+                 CAST(sum(tf) AS BIGINT) AS score
+          FROM idx WHERE term IN ('table', 'spark')
+          GROUP BY doc_id HAVING count(DISTINCT term) = 2
+        )
+        SELECT doc_id, n_terms, score FROM scored
+        ORDER BY score DESC, doc_id LIMIT 10
+    """,
+    plan=(
+        "conjunctive query: IN-filter before the agg, top-k via TakeOrderedAndProject "
+        "(per-partition heaps), never a global Sort"
+    ),
+    must=["TakeOrderedAndProject"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct"],
+)
 def q_keyword_search(spark, sf_dir):
     """Conjunctive keyword query over the inverted index: docs containing
     BOTH 'table' AND 'spark', integer tf ranking, doc_id tie-break,
@@ -2725,6 +6122,54 @@ def q_keyword_search(spark, sf_dir):
     return keyword_search(idx, ["table", "spark"], k=10)
 
 
+@contract(
+    oracle="""
+        -- the Bloom filter's exact bit arithmetic replayed: salted-md5
+        -- 32-bit positions, 62-bit words (1<<63 overflows DuckDB's
+        -- signed BIGINT — both engines cap the in-word shift at 61)
+        WITH seen AS (
+          SELECT 'https://s' || (doc_id % 50) || '.com/p' || doc_id AS url
+          FROM documents WHERE doc_id < 400
+        ), spos AS (
+          SELECT list_reduce(list_transform(range(1, 9), j ->
+                   CAST(strpos('0123456789abcdef',
+                        substring(md5(url || '_' || i), j, 1)) - 1
+                        AS BIGINT)),
+                 (a, b) -> a * 16 + b) % 65536 AS p
+          FROM (SELECT url, unnest(range(0, 5)) AS i FROM seen)
+        ), words AS (
+          SELECT p // 62 AS word_idx,
+                 bit_or(CAST(1 AS BIGINT) << CAST(p % 62 AS INT)) AS word
+          FROM spos GROUP BY 1
+        ), cand AS (
+          SELECT 'https://s' || (doc_id % 50) || '.com/p' || doc_id AS url
+          FROM documents
+        ), cpos AS (
+          SELECT url,
+                 list_reduce(list_transform(range(1, 9), j ->
+                   CAST(strpos('0123456789abcdef',
+                        substring(md5(url || '_' || i), j, 1)) - 1
+                        AS BIGINT)),
+                 (a, b) -> a * 16 + b) % 65536 AS p
+          FROM (SELECT url, unnest(range(0, 5)) AS i FROM cand)
+        ), cj AS (
+          SELECT c.url,
+                 CASE WHEN w.word IS NOT NULL AND
+                      (w.word & (CAST(1 AS BIGINT)
+                                 << CAST(c.p % 62 AS INT))) <> 0
+                      THEN 1 ELSE 0 END AS hit
+          FROM cpos c LEFT JOIN words w ON c.p // 62 = w.word_idx
+        )
+        SELECT url, min(hit) = 1 AS maybe_seen FROM cj GROUP BY url
+    """,
+    plan=(
+        "distributed bitset: bit_or partial aggregation into (word_idx, word) rows, "
+        "probe is an equi-join on word_idx (AQE broadcasts the tiny bitset), zero "
+        "Python"
+    ),
+    must=["bit_or", "Exchange hashpartitioning(word_idx"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct"],
+)
 def q_bloom_seen(spark, sf_dir):
     """Bloom-filter crawl seen-set: build a 65536-bit filter over the
     first 400 synthetic URLs (salted-md5 positions, 62-bit words — both
@@ -2746,6 +6191,65 @@ def q_bloom_seen(spark, sf_dir):
     return bloom_probe(bits, cand, m_bits=65536, k_hashes=5)
 
 
+def _hits_oracle_sql(iterations: int = 3) -> str:
+    """Unrolled-CTE replica of ops/linkgraph.hits_fixed_point over the
+    q_pagerank/q_hits synthetic graph: identical half-step rescales in
+    HUGEINT (Spark rides DECIMAL(38,0) — same exact-integer semantics),
+    ``//`` floor division on strictly non-negative operands, so the chain
+    is bit-exact regardless of shuffle/aggregation order."""
+    S = 10**12
+    parts = [f"""e0 AS (
+  SELECT doc_id % 40 AS s, (doc_id * 7 + 3) % 40 AS t FROM documents
+  UNION ALL
+  SELECT doc_id % 40, (doc_id * 13 + 11) % 45 FROM documents
+), edges AS (
+  SELECT 'h' || s AS src, 'h' || t AS dst, CAST(COUNT(*) AS BIGINT) AS weight
+  FROM e0 WHERE s <> t GROUP BY 1, 2
+), nodes AS (
+  SELECT src AS node FROM edges UNION SELECT dst FROM edges
+), nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes
+), h0 AS (
+  SELECT node, CAST({S} // n AS BIGINT) AS hub FROM nodes, nn
+)"""]
+    for k in range(iterations):
+        parts.append(f""", ar{k} AS (
+  SELECT e.dst AS node, SUM(CAST(h.hub AS HUGEINT) * e.weight) AS raw
+  FROM edges e JOIN h{k} h ON h.node = e.src GROUP BY e.dst
+), at{k} AS (SELECT COALESCE(SUM(raw), 0) AS t FROM ar{k}
+), a{k + 1} AS (
+  SELECT n.node,
+         CAST(CASE WHEN t.t > 0
+                   THEN (COALESCE(r.raw, 0) * {S}) // t.t
+                   ELSE 0 END AS BIGINT) AS auth
+  FROM nodes n LEFT JOIN ar{k} r ON r.node = n.node, at{k} t
+), hr{k} AS (
+  SELECT e.src AS node, SUM(CAST(a.auth AS HUGEINT) * e.weight) AS raw
+  FROM edges e JOIN a{k + 1} a ON a.node = e.dst GROUP BY e.src
+), ht{k} AS (SELECT COALESCE(SUM(raw), 0) AS t FROM hr{k}
+), h{k + 1} AS (
+  SELECT n.node,
+         CAST(CASE WHEN t.t > 0
+                   THEN (COALESCE(r.raw, 0) * {S}) // t.t
+                   ELSE 0 END AS BIGINT) AS hub
+  FROM nodes n LEFT JOIN hr{k} r ON r.node = n.node, ht{k} t
+)""")
+    return (
+        "WITH " + "".join(parts)
+        + f"\nSELECT a.node, a.auth, h.hub"
+        f"\nFROM a{iterations} a JOIN h{iterations} h ON h.node = a.node"
+    )
+
+
+@contract(
+    oracle=_hits_oracle_sql(3),
+    plan=(
+        "HITS half-steps are edge⋈rank equi-joins with partial-agg sums; rescale "
+        "totals ride 1-row broadcasts, never a window or cartesian over nodes"
+    ),
+    must=["HashAggregate", "BroadcastNestedLoopJoin"],
+    must_not=["CartesianProduct", "Window", "ArrowEvalPython", "BatchEvalPython"],
+    plan_kwargs={"checkpoint": False},
+)
 def q_hits(spark, sf_dir, checkpoint=True):
     """Weighted HITS hubs/authorities in fixed-point integer arithmetic
     (ops/linkgraph.hits_fixed_point) over the shared synthetic 45-host
@@ -2766,6 +6270,37 @@ def q_hits(spark, sf_dir, checkpoint=True):
     )
 
 
+@contract(
+    oracle="""
+        -- closed-form replay of the synthesized hreflang triples: every
+        -- page of cluster g declares en/de/fr + x-default, so
+        -- cluster_id = min(href set ∪ {url}) = the /de/ variant
+        -- (alphabetically first), n_variants = 4, self_hreflang = the
+        -- page's own path language.  If the Spark side misparsed ANY
+        -- quoting/order/case variant or kept a decoy link, rows or
+        -- values diverge and the hash fails.
+        SELECT
+          'https://ex' || ((doc_id // 3) % 7) || '.com/de/'
+            || (doc_id // 3) AS cluster_id,
+          'https://ex' || ((doc_id // 3) % 7) || '.com/'
+            || CASE doc_id % 3 WHEN 0 THEN 'en' WHEN 1 THEN 'de'
+               ELSE 'fr' END
+            || '/' || (doc_id // 3) AS url,
+          CASE doc_id % 3 WHEN 0 THEN 'en' WHEN 1 THEN 'de'
+            ELSE 'fr' END AS self_hreflang,
+          CAST(4 AS BIGINT) AS n_variants
+        FROM documents
+    """,
+    plan=(
+        "link extraction is pure JVM regexp + narrow explode; clustering + "
+        "self-language fold into ONE partial-agg groupBy(url) over ONE links scan "
+        "(string-buffered min → SortAggregate, still partial before the exchange); the "
+        "per-cluster min key needs NO graph iteration and NO join"
+    ),
+    must=["Generate", "SortAggregate"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "CartesianProduct", "Window",
+              "Join"],
+)
 def q_hreflang(spark, sf_dir):
     """hreflang translation-cluster extraction (ops/web.hreflang_links +
     hreflang_clusters) over synthesized multilingual page triples: doc_id
@@ -2837,6 +6372,67 @@ def q_hreflang(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- full margin-mining replay: identical in-row float cosine
+        -- (sequential reduction — bit-exact cross-engine), then pure
+        -- scaled-BIGINT top-k means, margins and mutual-best election.
+        WITH x AS (
+          SELECT vec_id AS src_id, embedding AS xv FROM embeddings
+          WHERE vec_id < 80 AND vec_id % 2 = 0
+        ), y AS (
+          SELECT vec_id AS dst_id, embedding AS yv FROM embeddings
+          WHERE vec_id < 80 AND vec_id % 2 = 1
+        ), scored AS (
+          SELECT src_id, dst_id,
+                 CAST(round(round(list_dot_product(xv, yv) /
+                      (sqrt(list_dot_product(xv, xv)) *
+                       sqrt(list_dot_product(yv, yv))), 4) * 10000)
+                      AS BIGINT) AS cos_e4
+          FROM x CROSS JOIN y
+        ), pos AS (SELECT * FROM scored WHERE cos_e4 > 0
+        ), kx AS (
+          SELECT src_id, CAST(SUM(cos_e4) AS BIGINT) AS sum_x_e4,
+                 CAST(COUNT(*) AS BIGINT) AS kx
+          FROM (SELECT *, row_number() OVER (PARTITION BY src_id
+                  ORDER BY cos_e4 DESC, dst_id ASC) AS r FROM pos)
+          WHERE r <= 3 GROUP BY src_id
+        ), ky AS (
+          SELECT dst_id, CAST(SUM(cos_e4) AS BIGINT) AS sum_y_e4,
+                 CAST(COUNT(*) AS BIGINT) AS ky
+          FROM (SELECT *, row_number() OVER (PARTITION BY dst_id
+                  ORDER BY cos_e4 DESC, src_id ASC) AS r FROM pos)
+          WHERE r <= 3 GROUP BY dst_id
+        ), m AS (
+          SELECT p.src_id, p.dst_id, p.cos_e4,
+                 CAST((p.cos_e4 * 2 * kx.kx * ky.ky * 10000)
+                      // (kx.sum_x_e4 * ky.ky + ky.sum_y_e4 * kx.kx)
+                      AS BIGINT) AS margin_e4
+          FROM pos p JOIN kx USING (src_id) JOIN ky USING (dst_id)
+        ), fwd AS (
+          SELECT src_id, dst_id, cos_e4, margin_e4
+          FROM (SELECT m.*, row_number() OVER (PARTITION BY src_id
+                  ORDER BY margin_e4 DESC, dst_id ASC) AS r FROM m)
+          WHERE r = 1
+        ), bwd AS (
+          SELECT src_id, dst_id
+          FROM (SELECT src_id, dst_id, row_number() OVER (
+                  PARTITION BY dst_id
+                  ORDER BY margin_e4 DESC, src_id ASC) AS r FROM m)
+          WHERE r = 1
+        )
+        SELECT f.src_id, f.dst_id, f.cos_e4, f.margin_e4
+        FROM fwd f JOIN bwd b
+          ON b.src_id = f.src_id AND b.dst_id = f.dst_id
+        WHERE f.margin_e4 >= 9000
+    """,
+    plan=(
+        "margin mining: broadcast pair generation (candidates equi-join at scale), "
+        "in-row JVM cosine, bounded per-id windows, zero Python"
+    ),
+    must=["BroadcastNestedLoopJoin", "Window"],
+    must_not=["CartesianProduct", "ArrowEvalPython", "BatchEvalPython"],
+)
 def q_bitext_mine(spark, sf_dir):
     """Margin-based bitext mining (ops/similarity.bitext_margin_mine,
     Artetxe & Schwenk 2019): even vec_ids < 80 are the source side, odd
@@ -2860,6 +6456,74 @@ def q_bitext_mine(spark, sf_dir):
     )
 
 
+@contract(
+    oracle="""
+        -- replay the incremental gate over the same portable md5-min
+        -- MinHash family (_MINHASH_CTE): index = bands of doc_id < 300,
+        -- batch = doc_id >= 300; min existing id on cross matches, then
+        -- min-unmatched-id-per-bucket inside the batch.
+        WITH toks AS (
+          SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
+          FROM documents
+        ), sh AS (
+          SELECT doc_id,
+                 CASE WHEN len(t) >= 3 THEN
+                   list_transform(range(1, len(t) - 1),
+                                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
+                 ELSE [] END AS shingles
+          FROM toks
+        ), sig AS (
+          SELECT doc_id,
+                 list_min(list_transform(shingles, s -> md5('0|' || s))) AS s0,
+                 list_min(list_transform(shingles, s -> md5('1|' || s))) AS s1,
+                 list_min(list_transform(shingles, s -> md5('2|' || s))) AS s2,
+                 list_min(list_transform(shingles, s -> md5('3|' || s))) AS s3
+          FROM sh
+        ), bands AS (
+          SELECT doc_id, 0 AS band_id, s0 || '|' || s1 AS band_key FROM sig
+          UNION ALL
+          SELECT doc_id, 1, s2 || '|' || s3 FROM sig
+        ), ex AS (
+          SELECT doc_id AS ex_id, band_id, band_key FROM bands
+          WHERE doc_id < 300
+        ), nb AS (
+          SELECT * FROM bands WHERE doc_id >= 300
+        ), exm AS (
+          SELECT n.doc_id, MIN(e.ex_id) AS ex_dup_of
+          FROM nb n JOIN ex e USING (band_id, band_key)
+          GROUP BY n.doc_id
+        ), un AS (
+          SELECT * FROM nb
+          WHERE doc_id NOT IN (SELECT doc_id FROM exm)
+        ), bmin AS (
+          SELECT band_id, band_key, MIN(doc_id) AS bucket_min
+          FROM un GROUP BY 1, 2
+        ), bd AS (
+          SELECT u.doc_id, MIN(b.bucket_min) AS batch_dup_of
+          FROM un u JOIN bmin b USING (band_id, band_key)
+          GROUP BY u.doc_id
+        )
+        SELECT d.doc_id,
+               CAST(exm.ex_dup_of IS NULL
+                    AND (bd.batch_dup_of IS NULL
+                         OR bd.batch_dup_of = d.doc_id) AS INTEGER)
+                 AS keep,
+               CAST(exm.ex_dup_of IS NOT NULL AS INTEGER)
+                 AS matched_existing,
+               CAST(COALESCE(exm.ex_dup_of,
+                    CASE WHEN bd.batch_dup_of <> d.doc_id
+                         THEN bd.batch_dup_of END, -1) AS BIGINT) AS dup_of
+        FROM (SELECT doc_id FROM documents WHERE doc_id >= 300) d
+        LEFT JOIN exm ON exm.doc_id = d.doc_id
+        LEFT JOIN bd ON bd.doc_id = d.doc_id
+    """,
+    plan=(
+        "batch bands equi-join the persisted index on uniform (band_id, band_key); min "
+        "elections are partial-agg groupBys; no window, no cartesian, zero Python"
+    ),
+    must=["Generate", "HashAggregate"],
+    must_not=["CartesianProduct", "Window", "ArrowEvalPython", "BatchEvalPython"],
+)
 def q_incremental_dedup(spark, sf_dir):
     """Incremental near-dup gate (ops/dedup.incremental_lsh_dedup): docs
     with doc_id < 300 are the already-deduped corpus, represented ONLY by
@@ -2885,1903 +6549,6 @@ def q_incremental_dedup(spark, sf_dir):
         # -1 sentinel for "no duplicate": a NULL BIGINT would ride DuckDB's
         # pandas path as float NaN and false-fail the strict hash
         F.coalesce(F.col("dup_of"), F.lit(-1)).cast("long").alias("dup_of"),
-    )
-
-
-def q_lm_score(spark, sf_dir):
-    """Stupid-backoff trigram LM, trained AND scored on `documents`
-    (ops/lm.py): the CCNet-style count-based model-fit signal, integer-
-    exact (scaled `div` arithmetic, BIGINT sums — no float log, no
-    order-dependent float SUM).  Two partial-agg groupBys train; three
-    LEFT equi-joins score; the oracle replays the identical counts and
-    the identical BIGINT expressions symbolically."""
-    from html_parser_spark.ops.lm import score_stupid_backoff, train_stupid_backoff
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    model = train_stupid_backoff(docs, n=3)
-    return score_stupid_backoff(docs, model, n=3)
-
-
-def q_lm_buckets(spark, sf_dir):
-    """CCNet head/middle/tail perplexity bucketing (ops/lm.py): per-lang
-    thirds over the trigram-LM per-token fit, assigned through a
-    per-(lang, score) HISTOGRAM cumulative + equi-join — no window ever
-    partitions over documents, and score ties share a bucket so the
-    assignment is shuffle-order independent.  The oracle replays the
-    same histogram arithmetic."""
-    from html_parser_spark.ops.lm import (
-        perplexity_buckets,
-        score_stupid_backoff,
-        train_stupid_backoff,
-    )
-
-    d = _docs(spark, sf_dir)
-    docs = d.select("doc_id", "text")
-    model = train_stupid_backoff(docs, n=3)
-    scored = score_stupid_backoff(docs, model, n=3)
-    return perplexity_buckets(scored, d.select("doc_id", "lang"), buckets=3)
-
-
-def q_bm25(spark, sf_dir):
-    """BM25 top-20 retrieval over the corpus (ops/search.bm25_topk):
-    Okapi weighting with k1=1.2, b=0.75 carried as exact rationals and a
-    log-free rational Robertson idf, so every score is one BIGINT
-    expression — bit-identical across engines.  Plan: IN-filtered index
-    scan, broadcast term stats + 1-row totals, TakeOrderedAndProject
-    top-k.  The oracle rebuilds the index and evaluates the identical
-    integer arithmetic."""
-    from html_parser_spark.ops.search import bm25_topk
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    return bm25_topk(docs, ["data", "fast", "query"], k=20)
-
-
-def q_pmi(spark, sf_dir):
-    """Top-50 PMI collocations (ops/text.pmi_bigrams): adjacent-pair
-    association ranked by the unlogged scaled ratio
-    c_xy*N*scale div (c_x*c_y) — monotone in PMI, integer-exact.  One
-    explode per direction, partial-agg groupBys, min-count prune BEFORE
-    the unigram joins, TakeOrderedAndProject."""
-    from html_parser_spark.ops.text import pmi_bigrams
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    return pmi_bigrams(docs, min_count=5, k=50)
-
-
-def q_label_prop(spark, sf_dir, checkpoint=True):
-    """Deterministic synchronous label-propagation communities
-    (ops/linkgraph.label_propagation) over the shared synthetic 45-host
-    graph: symmetrized weights, 3 iterations, most-weighted neighbor
-    label with (weight DESC, label ASC) tie-break — BIGINT-exact, so the
-    oracle's unrolled row_number CTEs hash-match the Spark min-struct
-    election exactly.  The community split of PageRank/HITS's rank
-    family: mirror farms and template rings cluster here."""
-    from html_parser_spark.ops.linkgraph import label_propagation
-
-    docs = _docs(spark, sf_dir)
-    return label_propagation(
-        _synth_host_edges(docs), iterations=3, checkpoint=checkpoint
-    )
-
-
-def q_dsir(spark, sf_dir):
-    """DSIR importance selection (ops/classify.dsir_*, Xie et al. 2023):
-    hashed-unigram importance weights toward the non-English docs as the
-    target distribution, per-bucket floor(log2 ratio) via exact integer
-    bit-length (no float log, no order-dependent float sum), doc weight
-    = Σ bucket weights, deterministic top-30% keep through the bounded
-    weight-histogram cumulative.  Returns (doc_id, weight, keep)."""
-    from html_parser_spark.ops.classify import (
-        dsir_bucket_weights,
-        dsir_doc_weights,
-        dsir_select,
-        hashed_features,
-    )
-
-    d = _docs(spark, sf_dir)
-    feats = hashed_features(d.select("doc_id", "text"))
-    target = d.where(F.col("lang") != "en").select("doc_id")
-    weights = dsir_bucket_weights(feats, target)
-    return dsir_select(dsir_doc_weights(feats, weights), keep_pct=30)
-
-
-def q_readability(spark, sf_dir):
-    """Readability / lexical-diversity profile (ops/text.
-    readability_profile): word/sentence/syllable-group counts, scaled
-    type-token ratio, floored Flesch-Kincaid-x100 — the model-free
-    quality-feature family, one pure-codegen projection, zero shuffle.
-    The oracle evaluates the identical regexp counts and BIGINT
-    divisions."""
-    from html_parser_spark.ops.text import readability_profile
-
-    return readability_profile(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
-def q_hll_distinct(spark, sf_dir):
-    """HyperLogLog distinct sketch (ops/sketch.hll_*, Flajolet 2007):
-    per-lang register tables built from two disjoint corpus halves, then
-    MERGED (union → groupBy max — the lossless HLL merge) and estimated
-    with the fixed-order BIGINT raw-HLL expression.  The crawl-ledger
-    primitive: distinct-url counts per group whose shuffle is bounded by
-    |groups|·m register cells, not by corpus size, and whose per-segment
-    sketches union without touching raw keys.  The oracle replays the
-    identical md5 buckets/ranks on the FULL corpus — valid because
-    union-max ≡ global max (the merge-equals-rebuild identity the unit
-    test pins)."""
-    from html_parser_spark.ops.sketch import hll_estimate, hll_merge, hll_registers
-
-    d = _docs(spark, sf_dir)
-    even = hll_registers(d.where(F.col("doc_id") % 2 == 0), "doc_id", ("lang",), m=64)
-    odd = hll_registers(d.where(F.col("doc_id") % 2 == 1), "doc_id", ("lang",), m=64)
-    return hll_estimate(hll_merge(even, odd, ("lang",)), ("lang",), m=64)
-
-
-def q_heavy_hitters(spark, sf_dir):
-    """Count-min frequency sketch (ops/sketch.count_min_*, Cormode &
-    Muthukrishnan 2005): the full token frequency table compressed into
-    4×1024 BIGINT cells (ONE partial-agg groupBy whose exchange is
-    bounded by the sketch size), then point-estimated for the probe set
-    (distinct tokens of docs 0-9) with the broadcast sketch.  Returns
-    (item, est, exact_cnt) so the never-underestimate guarantee is in
-    the checked values; the oracle replays the identical md5 cell
-    addressing and min-over-rows."""
-    from html_parser_spark.ops.sketch import count_min_build, count_min_query
-
-    toks = (
-        _docs(spark, sf_dir)
-        .select(
-            "doc_id",
-            F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok"),
-        )
-        .filter(F.length("tok") > 0)
-    )
-    sk = count_min_build(toks, "tok", depth=4, width=1024)
-    probes = toks.where(F.col("doc_id") < 10).select("tok").distinct()
-    est = count_min_query(sk, probes, "tok", depth=4, width=1024)
-    truth = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("exact_cnt"))
-    return est.join(truth, est["item"] == truth["tok"]).select(
-        "item", "est", "exact_cnt"
-    )
-
-
-def q_corpus_shuffle(spark, sf_dir):
-    """Deterministic pre-training corpus shuffle (ops/sketch.
-    corpus_shuffle): shard + within-shard position keyed by
-    md5(seed||doc_id) — the reproducible, resumable alternative to
-    ORDER BY rand() before training-shard writes.  The within-shard rank
-    window partitions BY SHARD (parallel, per-task bounded by the
-    file-sized shard); the oracle replays the identical key, shard mod,
-    and row_number total order."""
-    from html_parser_spark.ops.sketch import corpus_shuffle
-
-    return corpus_shuffle(_docs(spark, sf_dir), "doc_id", n_shards=8, seed="r5")
-
-
-def q_vocab_growth(spark, sf_dir):
-    """Heaps'-law vocabulary-growth curve (ops/corpus.vocab_growth):
-    (n_tokens, n_distinct) at six corpus-prefix points — the
-    tokenizer-budget / OCR-noise diagnostic.  ONE groupBy(tok) min is
-    the only corpus-sized shuffle; per-doc aggregates bucket to their
-    covering threshold via a pure array-filter projection and the
-    cumulative window runs over the 6-row curve frame only.  The oracle
-    counts the same prefixes directly."""
-    from html_parser_spark.ops.corpus import vocab_growth
-
-    return vocab_growth(
-        _docs(spark, sf_dir).select("doc_id", "text"),
-        thresholds=[9, 24, 49, 99, 249, 499],
-    )
-
-
-def q_dist_drift(spark, sf_dir):
-    """Crawl-snapshot distribution drift (ops/corpus.distribution_drift):
-    per-language share delta (ppm, integer-exact IntegralDivide) between
-    two snapshots carved deterministically from the documents table by
-    doc_id parity — the crawl-monitoring op (TVD = Σ delta_ppm / 2·10⁶).
-    Two partial-agg groupBys + a tiny full-outer bucket join + the 1-row
-    broadcast-totals crossJoin; nothing corpus-sized past the scans."""
-    from html_parser_spark.ops.corpus import distribution_drift
-
-    docs = _docs(spark, sf_dir).select("doc_id", "lang")
-    return distribution_drift(
-        docs.where(F.col("doc_id") % 2 == 0),
-        docs.where(F.col("doc_id") % 2 == 1),
-        bucket_col="lang",
-    ).withColumnRenamed("bucket", "lang")
-
-
-def q_freq_spectrum(spark, sf_dir):
-    """Token frequency-of-frequencies spectrum + Good-Turing hapax mass
-    (ops/corpus.freq_spectrum): n_types / ppm shares at freq 1..8.  The
-    synthetic corpus has only ~31 distinct unigrams (min freq 26 at
-    sf0.01 — an empty f≤8 head), so the query feeds the op word-TRIGRAM
-    shingle tokens ('w1_w2_w3', whitespace-joined), which carry a real
-    Zipf tail (9,424 hapaxes at sf0.01).  ONE corpus-sized
-    groupBy(tok); the spectrum groupBy and the totals crossJoin are
-    ≤8-row / 1-row frames.  Oracle replays the identical shingling,
-    tokenization, and integer division in DuckDB."""
-    from html_parser_spark.ops.corpus import freq_spectrum
-
-    shingled = (
-        _docs(spark, sf_dir)
-        .select(
-            F.expr(
-                r"filter(split(lower(text), '\\s+'), x -> length(x) > 0)"
-            ).alias("w")
-        )
-        .select(
-            F.expr(
-                "array_join(CASE WHEN size(w) >= 3"
-                " THEN transform(sequence(0, size(w) - 3),"
-                "      i -> concat(w[i], '_', w[i+1], '_', w[i+2]))"
-                " ELSE CAST(array() AS array<string>) END, ' ')"
-            ).alias("text")
-        )
-    )
-    return freq_spectrum(shingled, max_freq=8)
-
-
-def q_mojibake(spark, sf_dir):
-    """Encoding-damage score (ops/encoding.mojibake_score): double-encoded
-    UTF-8 signatures + U+FFFD counts per doc, ppm of chars.  The synthetic
-    corpus is clean, so the query plants deterministic damage first
-    (doc_id%5==0 gets a 'Ã©â€™' suffix, doc_id%11==0 a replacement char) —
-    the oracle plants the identical damage.  ONE codegen projection,
-    zero shuffle, zero Python."""
-    from html_parser_spark.ops.encoding import mojibake_score
-
-    docs = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(F.col("doc_id") % 5 == 0, F.lit(" Ã©â€™")).otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 11 == 0, F.lit(" �")).otherwise(F.lit("")),
-        ).alias("text"),
-    )
-    return mojibake_score(docs)
-
-
-def q_shard_manifest(spark, sf_dir):
-    """Release-integrity manifest (ops/corpus.shard_manifest): per-shard
-    row counts, char totals, and the two order-insensitive content
-    digests (bit_xor + DECIMAL-summed mod 2^61-1) a data release ships
-    for shard-for-shard reproducibility checks.  Shards carved
-    deterministically by doc_id mod 7.  ONE partial-agg groupBy(shard)
-    — the exchange carries ≤7 rows after map-side combine; zero Python,
-    no join, no window."""
-    from html_parser_spark.ops.corpus import shard_manifest
-
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", (F.col("doc_id") % 7).alias("shard"), "text"
-    )
-    return shard_manifest(docs)
-
-
-def q_token_prf(spark, sf_dir):
-    """Extraction-QA metric (ops/text.token_prf): per-doc token-multiset
-    precision/recall/F1 (exact multiset-Dice, ppm IntegralDivide)
-    between a deterministically perturbed extraction and the reference
-    text — drops tokens whose md5 starts with '0' (content-keyed, no
-    positional lambda so both engines replay it) and appends a noise
-    token for doc_id%3==0.  Two explode→partial-agg groupBys, ONE
-    (doc, tok) equi-join, ONE groupBy(doc) fold; no window, no Python."""
-    from html_parser_spark.ops.text import token_prf
-
-    pairs = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.expr(
-            r"concat(array_join(filter(filter(split(lower(text), '\\s+'),"
-            r" x -> length(x) > 0), x -> substring(md5(x), 1, 1) != '0'),"
-            r" ' '), CASE WHEN doc_id % 3 = 0 THEN ' zzz-noise' ELSE '' END)"
-        ).alias("got_text"),
-        F.col("text").alias("ref_text"),
-    )
-    return token_prf(pairs)
-
-
-def q_exact_quantiles(spark, sf_dir):
-    """Exact type-1 per-lang token-count quantiles (ops/corpus.
-    exact_quantiles): smallest value covering q·N, cross-multiplied
-    integer test (no division) — the engine-portable percentile_approx
-    replacement.  ONE partial-agg groupBy(lang, v) histogram (exchange
-    bounded by distinct token counts), cumulative window over the
-    bounded histogram (never over documents), |qs|-row fan-out, bounded
-    min-struct groupBy."""
-    from html_parser_spark.ops.corpus import exact_quantiles
-
-    docs = _docs(spark, sf_dir).select(
-        "lang",
-        F.size(
-            F.filter(
-                F.split(F.lower(F.col("text")), r"\s+"),
-                lambda x: F.length(x) > 0,
-            )
-        ).cast("long").alias("n_tokens"),
-    )
-    return exact_quantiles(
-        docs, "n_tokens", (250_000, 500_000, 900_000, 990_000),
-        group_col="lang",
-    )
-
-
-def q_containment(spark, sf_dir):
-    """Shingle CONTAINMENT dedup (ops/dedup.containment_candidates +
-    containment_pairs) — the asymmetric complement of Jaccard resemblance
-    (Broder 1997): quote / wrapped-page / sub-document detection.  The
-    FULL scale path is oracle-checked end-to-end: inverted-shingle
-    postings, stop-shingle df cap (≤5), common≥2 candidate pairs, then
-    exact two-equi-join verification in integer basis points (no float
-    division anywhere — bit-exact across engines)."""
-    from html_parser_spark.ops.dedup import (
-        containment_candidates,
-        containment_pairs,
-    )
-
-    docs = _docs(spark, sf_dir)
-    cands = containment_candidates(docs, shingle_k=3, max_df=5, min_common=2)
-    return containment_pairs(
-        docs, shingle_k=3, min_containment_bp=300, candidates=cands
-    )
-
-
-def q_trustrank(spark, sf_dir, checkpoint=True):
-    """TrustRank (Gyöngyi et al., VLDB 2004) in fixed-point integer
-    arithmetic (ops/linkgraph.trustrank_fixed_point) over the shared
-    synthetic 45-host graph: teleport + dangling mass flow ONLY to the 6
-    seed hosts h0,h7,…,h35, so hosts unreachable from the seeds score
-    exactly 0 (spam demotion).  Same bit-exact integer discipline as
-    q_pagerank — the DuckDB oracle's unrolled seed-gated CTEs hash-match
-    EXACTLY."""
-    docs = _docs(spark, sf_dir)
-    from html_parser_spark.ops.linkgraph import trustrank_fixed_point
-
-    edges = _synth_host_edges(docs)
-    seeds = spark.createDataFrame(
-        [(f"h{i}",) for i in range(0, 40, 7)], ["node"]
-    )
-    return trustrank_fixed_point(
-        edges, seeds, iterations=3, checkpoint=checkpoint
-    ).select("node", F.col("rank").cast("long").alias("rank"))
-
-
-def q_dom_templates(spark, sf_dir):
-    """Template clustering (ops/web.template_clusters): md5 over the
-    ordered opening-tag sequence groups pages by CMS template regardless
-    of text content — the extraction-QA / drift-monitoring view of a
-    crawl.  Pages are synthesized with two independent structural bits
-    (og:title meta on even doc_ids, a <b> promo on doc_id%5==0) so each
-    host carries 4 template clusters; the oracle rebuilds the identical
-    html and recomputes the signature with DuckDB's own regexp+md5 — a
-    hash match is a cross-engine tag-tokenization equality proof."""
-    from html_parser_spark.ops.web import template_clusters
-
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-    did = d.cast("string")
-    url = F.concat(
-        F.lit("http://t"), (d % 4).cast("string"), F.lit(".example.com/p"), did
-    )
-    html = F.concat(
-        F.lit("<html><head><title>"),
-        F.substring("text", 1, 30),
-        F.lit("</title>"),
-        F.when(
-            d % 2 == 0, F.lit('<meta property="og:title" content="x">')
-        ).otherwise(F.lit("")),
-        F.lit("</head><body><p>"),
-        F.substring("text", 1, 60),
-        F.lit("</p>"),
-        F.when(d % 5 == 0, F.lit("<b>promo</b>")).otherwise(F.lit("")),
-        F.lit("</body></html>"),
-    )
-    pages = docs.select(url.alias("url"), html.alias("html"))
-    return template_clusters(pages, min_pages=2)
-
-
-def q_url_templates(spark, sf_dir):
-    """URL path-template mining (ops/web.url_templates): hex runs ≥16
-    chars collapse to {hex} (content hashes), digit runs to {n} — the
-    crawler-trap / crawl-budget view of the frontier.  Urls are pure
-    functions of doc_id (a /h/<md5> branch on doc_id%3==0, an
-    /a/<n>/p<n> branch otherwise) so the oracle states the same urls and
-    applies the same two collapse regexes (both plain character classes —
-    identical under Java regex and RE2)."""
-    from html_parser_spark.ops.web import url_templates
-
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-    did = d.cast("string")
-    path = F.when(d % 3 == 0, F.concat(F.lit("/h/"), F.md5(did))).otherwise(
-        F.concat(F.lit("/a/"), (d % 5).cast("string"), F.lit("/p"), did)
-    )
-    url = F.concat(
-        F.lit("https://u"), (d % 4).cast("string"), F.lit(".example.com"), path
-    )
-    return url_templates(docs.select(url.alias("url")), min_urls=2)
-
-
-def q_click_depth(spark, sf_dir, checkpoint=True):
-    """Seed click-depth BFS (ops/linkgraph.seed_distance) over the shared
-    synthetic 45-host graph with the TrustRank seed list (h0,h7,...,h35):
-    exact minimum hop distance from any seed, frontier-only relaxation
-    (hop h joins only the hosts first reached at h-1 against the edge
-    list, never the settled set).  Hosts beyond max_hops are absent —
-    at corpus scale the unreachable set is the majority and
-    materializing "infinity" rows would be the expensive way to spell a
-    filter.  The DuckDB oracle unrolls the same BFS as per-hop CTEs
-    (frontier = successors of the previous frontier minus everything
-    settled); integer hop labels make the hash match exact across
-    engines."""
-    docs = _docs(spark, sf_dir)
-    from html_parser_spark.ops.linkgraph import seed_distance
-
-    edges = _synth_host_edges(docs)
-    seeds = spark.createDataFrame(
-        [(f"h{i}",) for i in range(0, 40, 7)], ["node"]
-    )
-    return seed_distance(edges, seeds, max_hops=3, checkpoint=checkpoint)
-
-
-def q_pub_dates(spark, sf_dir):
-    """Publication-date extraction (ops/web.publication_dates): the
-    regexp priority chain meta > time > jsonld > url-path over pages
-    synthesized from doc_id arithmetic.  Pins, one per failure mode:
-    doc_id%8==1 pages carry BOTH a meta tag and a time tag (meta must
-    win); doc_id%4==0 && %10==0 pages carry a regex-valid but
-    calendar-invalid meta date (2023-02-30 — pub_src says 'meta', date
-    is NULL, and Spark's to_date must agree with DuckDB's TRY_CAST);
-    doc_id%4==2 && %7==0 pages carry a month-13 jsonld date the shape
-    regex itself rejects (falls through to the url rule);  doc_id%3==0
-    urls embed a /YYYY/MM/DD/ permalink with a DIFFERENT year so the
-    priority order is observable.  The oracle rebuilds the identical
-    html+url in SQL and replays the same four regexes through DuckDB's
-    RE2 — a hash match is a cross-engine regex-semantics equality
-    proof."""
-    from html_parser_spark.ops.web import publication_dates
-
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-    did = d.cast("string")
-    mm = F.lpad((d % 12 + 1).cast("string"), 2, "0")
-    dd = F.lpad((d % 28 + 1).cast("string"), 2, "0")
-    iso = F.concat((d % 9 + 2015).cast("string"), F.lit("-"), mm,
-                   F.lit("-"), dd)
-    meta_iso = F.when(d % 10 == 0, F.lit("2023-02-30")).otherwise(iso)
-    meta_tag = F.concat(
-        F.lit('<meta property="article:published_time" content="'),
-        meta_iso, F.lit('T08:30:00Z">'),
-    )
-    k = d % 4
-    html = F.concat(
-        F.lit("<html><head>"),
-        F.when(k == 0, meta_tag)
-        .when((k == 1) & (d % 8 == 1),
-              F.lit('<meta property="article:published_time" '
-                    'content="1999-12-31T00:00:00Z">'))
-        .otherwise(F.lit("")),
-        F.lit("</head><body>"),
-        F.when(k == 1, F.concat(F.lit('<time datetime="'), iso,
-                                F.lit('">then</time>')))
-        .when(k == 2, F.concat(
-            F.lit('<script type="application/ld+json">'
-                  '{"@type":"Article","datePublished": "'),
-            F.when(d % 7 == 0, F.lit("2023-13-05")).otherwise(iso),
-            F.lit('"}</script>'),
-        ))
-        .otherwise(F.lit("<p>plain</p>")),
-        F.lit("</body></html>"),
-    )
-    upath = F.when(
-        d % 3 == 0,
-        F.concat(F.lit("/"), (d % 5 + 2005).cast("string"), F.lit("/"), mm,
-                 F.lit("/"), dd, F.lit("/p"), did),
-    ).otherwise(F.concat(F.lit("/p"), did))
-    url = F.concat(
-        F.lit("https://s"), (d % 10).cast("string"), F.lit(".example.com"),
-        upath,
-    )
-    pages = docs.select(
-        url.alias("url"), F.encode(html, "UTF-8").alias("html")
-    )
-    return publication_dates(pages)
-
-
-
-def q_concentration(spark, sf_dir):
-    """Corpus byte-concentration profile (ops/corpus.concentration_profile)
-    over a synthetic skewed host layout: per-host byte totals bucket by
-    integer bit-length (log2 magnitude), cumulative-from-the-top shares in
-    exact ppm — the "top hosts hold X% of the bytes" release-audit table
-    without a global host sort.  Host h0 carries a 64x weight multiplier
-    so multiple magnitude buckets are occupied.  All-integer arithmetic
-    (length(bin(x)) both engines, IntegralDivide ppm) — hash-exact."""
-    from html_parser_spark.ops.corpus import concentration_profile
-
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-    sized = docs.select(
-        F.concat(F.lit("h"), (d % 37).cast("string")).alias("host"),
-        (
-            F.length("text").cast("long")
-            * F.when(d % 37 == 0, F.lit(64)).otherwise(d % 13 + 1)
-        ).alias("n_bytes"),
-    )
-    return concentration_profile(sized, "host", "n_bytes")
-
-def q_code_profile(spark, sf_dir):
-    """Code-vs-prose routing profile (ops/text.code_profile): per-doc
-    non-blank line count, code-line count (terminator / indentation /
-    declaration-keyword signals), exact integer code_ppm.  doc_id%3==0
-    docs get a 4-line code block (plus a blank line that must NOT count)
-    appended so both classes are populated; the oracle replays the three
-    detector regexes verbatim through DuckDB's RE2 over the identically
-    augmented text — a hash match proves the line split, blank-line
-    rule, and regex semantics agree across engines."""
-    from html_parser_spark.ops.text import code_profile
-
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-    code_block = (
-        "\nimport os\n    x = 1;\ncall();\n\nplain words here"
-    )
-    aug = docs.select(
-        "doc_id",
-        F.when(d % 3 == 0, F.concat(F.col("text"), F.lit(code_block)))
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    return code_profile(aug)
-
-def q_bpe_roundtrip(spark, sf_dir):
-    """Tokenizer release-QA (ops/bpe.bpe_decode + bpe_roundtrip_check):
-    decode∘encode identity over the whole corpus.  Encode splits on
-    whitespace, lowercases, and marks word ends with </w>, so decode is
-    closed-form (drop inter-token spaces, </w> → space, trim) and MUST
-    reconstruct the whitespace-normalized lowercased source exactly.
-    The oracle states the identity property itself (every doc_id, ok =
-    TRUE): a Spark-side decode defect (dropped marker, wrong join order,
-    symbol damage) emits false rows and hash-mismatches."""
-    from html_parser_spark.ops.bpe import bpe_encode, bpe_roundtrip_check
-
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", F.regexp_replace("text", "‖", "").alias("text")
-    )
-    return bpe_roundtrip_check(docs, bpe_encode(docs, _bpe_seed_merges()))
-
-
-def q_cocitation(spark, sf_dir):
-    """Co-citation related hosts (ops/linkgraph.cocitation_pairs) over the
-    shared synthetic graph: hosts are related when the same third hosts
-    link to both (Dean & Henzinger 1999).  max_out_degree=8 actually
-    prunes the synthetic graph's widest citers (the stop-shingle df cap
-    of the graph), min_common=2; Jaccard over in-link sets in integer
-    basis points, in-degrees defined over the SAME capped postings.  The
-    oracle replays postings/cap/pair-join/degree-join verbatim —
-    hash-exact."""
-    docs = _docs(spark, sf_dir)
-    from html_parser_spark.ops.linkgraph import cocitation_pairs
-
-    edges = _synth_host_edges(docs)
-    return cocitation_pairs(edges, min_common=2, max_out_degree=8)
-
-def q_norm_dedup(spark, sf_dir):
-    """Normalized exact dedup (ops/dedup.normalized_duplicates): the
-    RefinedWeb/CCNet tier between byte-identical and MinHash — lowercase
-    + strip-all-non-alphanumerics + md5, so re-punctuated / re-flowed
-    syndication copies collapse.  Each doc gets a mangled twin at
-    doc_id+10000 (spaces → '---', trailing ' ...!!!') that must land in
-    the SAME group with the original as min-id canonical; the oracle
-    rebuilds the twins and the identical normalization chain in SQL."""
-    from html_parser_spark.ops.dedup import normalized_duplicates
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    twins = docs.select(
-        (F.col("doc_id") + 10000).alias("doc_id"),
-        F.concat(
-            F.regexp_replace("text", " ", "---"), F.lit(" ...!!!")
-        ).alias("text"),
-    )
-    return normalized_duplicates(docs.unionByName(twins))
-
-
-def q_dedup_prf(spark, sf_dir):
-    """Dedup-QA pair precision/recall (ops/dedup.dedup_prf) over
-    arithmetically labeled pairs: labels = (i, i+300) for i<200;
-    predictions drop every i%5==0 (misses), arrive REVERSED (orientation
-    canonicalization pinned), are emitted twice for i%11==0 (distinct
-    pinned), and add false pairs (i, i+301) for i%7==0 plus a self-pair
-    (7,7) that must be filtered.  One row of exact ppm metrics; the
-    oracle replays the same arithmetic and the multiset-Dice f1."""
-    from html_parser_spark.ops.dedup import dedup_prf
-
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-    labeled = docs.filter(d < 200).select(
-        d.alias("a"), (d + 300).alias("b")
-    )
-    hits = docs.filter((d < 200) & (d % 5 != 0)).select(
-        (d + 300).alias("a"), d.alias("b")
-    )
-    dups = docs.filter((d < 200) & (d % 5 != 0) & (d % 11 == 0)).select(
-        (d + 300).alias("a"), d.alias("b")
-    )
-    fps = docs.filter((d < 200) & (d % 7 == 0)).select(
-        d.alias("a"), (d + 301).alias("b")
-    )
-    selfp = docs.filter(d == 7).select(d.alias("a"), d.alias("b"))
-    predicted = hits.unionByName(dups).unionByName(fps).unionByName(selfp)
-    return dedup_prf(predicted, labeled)
-
-def q_gate_ablation(spark, sf_dir):
-    """Quality-gate ablation table (ops/gopher.gate_ablation) over the
-    Gopher battery: per rule, how many docs it kills and how many it
-    ALONE kills (its marginal value — the C4/Gopher/RefinedWeb release
-    table and the threshold-tuning signal).  All 15 counters accumulate
-    in ONE map-side aggregate; the oracle replays the full flag
-    arithmetic (the q_gopher CTEs) and the same FILTER aggregations per
-    rule — hash-exact integer ppm."""
-    from html_parser_spark.ops.gopher import gate_ablation, gopher_rules
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    return gate_ablation(gopher_rules(docs, min_words=30))
-
-def _boiler_docs(spark, sf_dir):
-    """Shared synthesis for q_frequent_lines / q_strip_lines: every doc
-    gains a web-wide footer (all 20 hosts), even doc_ids a CMS credit
-    (10 hosts), host h3 a single-host notice (below min_hosts — must NOT
-    be mined).  ONE builder so the two queries and their oracles can
-    never desynchronize."""
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-    t = F.concat(
-        F.col("text"),
-        F.lit("\nCopyright 2024 Example"),
-        F.when(d % 2 == 0, F.lit("\nPowered by ExampleCMS")).otherwise(
-            F.lit("")
-        ),
-        F.when(d % 20 == 3, F.lit("\nRare site notice")).otherwise(
-            F.lit("")
-        ),
-    )
-    return docs.select(
-        "doc_id",
-        F.concat(F.lit("h"), (d % 20).cast("string")).alias("host"),
-        t.alias("text"),
-    )
-
-
-def q_frequent_lines(spark, sf_dir):
-    """Global boilerplate-line mining (ops/corpus.frequent_lines): lines
-    repeated across >= 3 DISTINCT hosts — the cross-host complement of
-    host_line_dedup and the CCNet-style global blocklist dictionary.
-    The (host, line) distinct runs BEFORE counting so a mega-host can't
-    vote a line in alone; the single-host 'Rare site notice' plant must
-    stay out.  The oracle replays explode/trim/distinct/count verbatim."""
-    from html_parser_spark.ops.corpus import frequent_lines
-
-    return frequent_lines(_boiler_docs(spark, sf_dir), min_hosts=3)
-
-
-def q_strip_lines(spark, sf_dir):
-    """Blocklist application (ops/corpus.strip_frequent_lines): mine the
-    >= 3-host lines, then strip them from every doc preserving order and
-    the raw (untrimmed) form of survivors.  The oracle mines the same
-    blocklist symbolically and filters the line arrays in DuckDB — a
-    hash match proves the mine+strip composition end-to-end (including
-    that the single-host plant survives on host h3's pages)."""
-    from html_parser_spark.ops.corpus import (
-        frequent_lines,
-        strip_frequent_lines,
-    )
-
-    aug = _boiler_docs(spark, sf_dir)
-    bl = frequent_lines(aug, min_hosts=3)
-    return strip_frequent_lines(aug, bl)
-
-def q_redirects(spark, sf_dir):
-    """Redirect-chain resolution (ops/web.resolve_redirects): 4-hop
-    synthetic chains u(4k)->u(4k+1)->u(4k+2)->u(4k+3) from doc_id
-    arithmetic, a planted 2-cycle x0<->x1 that must report
-    resolved=false at the hop cap, and a duplicate-capture edge
-    (u0 -> u9 next to u0 -> u1) pinning the deterministic min-dst
-    election.  The oracle unrolls the same per-hop LEFT joins —
-    hash-exact."""
-    from html_parser_spark.ops.web import resolve_redirects
-
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-    did = d.cast("string")
-    chain = docs.filter(d % 4 < 3).select(
-        F.concat(F.lit("u"), did).alias("src"),
-        F.concat(F.lit("u"), (d + 1).cast("string")).alias("dst"),
-    )
-    spec = (
-        docs.filter(d == 0)
-        .select(F.lit("x0").alias("src"), F.lit("x1").alias("dst"))
-        .unionByName(
-            docs.filter(d == 1).select(
-                F.lit("x1").alias("src"), F.lit("x0").alias("dst")
-            )
-        )
-        .unionByName(
-            docs.filter(d == 2).select(
-                F.lit("u0").alias("src"), F.lit("u9").alias("dst")
-            )
-        )
-    )
-    return resolve_redirects(chain.unionByName(spec), max_hops=5)
-
-
-def q_url_survival(spark, sf_dir):
-    """URL survival by birth cohort (ops/web.url_survival): each doc's url
-    is born at snap doc_id%3 and lives doc_id%4 extra snapshots (explode of
-    sequence(birth, birth+span)); even docs carry a duplicate birth-snap
-    capture to pin the DISTINCT.  The oracle re-derives the cohort table
-    from the same arithmetic via generate_series — hash-exact, including
-    the integral-divide survival_ppm."""
-    from html_parser_spark.ops.web import url_survival
-
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-    url = F.concat(F.lit("https://h"), (d % 7).cast("string"),
-                   F.lit(".com/p"), d.cast("string"))
-    birth = (d % 3).cast("long")
-    span = (d % 4).cast("long")
-    caps = docs.select(
-        url.alias("url"), F.explode(F.sequence(birth, birth + span)).alias("snap")
-    )
-    dup = docs.filter(d % 2 == 0).select(url.alias("url"), birth.alias("snap"))
-    return url_survival(caps.unionByName(dup))
-
-
-def q_sitemap_coverage(spark, sf_dir):
-    """Sitemap-vs-crawl coverage audit (ops/web.sitemap_coverage): hosts
-    s0..s4 declare every doc_id%3!=0 url, the crawl fetched every even
-    one — so both/declared-only/crawled-only all occur on every host.
-    The oracle replays the tag-union + flag-merge + host rollup in SQL;
-    hash match pins the host parse and the nullif-guarded ppm."""
-    from html_parser_spark.ops.web import sitemap_coverage
-
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-    url = F.concat(F.lit("https://s"), (d % 5).cast("string"),
-                   F.lit(".example/page/"), d.cast("string"))
-    declared = docs.filter(d % 3 != 0).select(url.alias("url"))
-    crawled = docs.filter(d % 2 == 0).select(url.alias("url"))
-    return sitemap_coverage(declared, crawled)
-
-
-def q_reciprocity(spark, sf_dir):
-    """Link reciprocity (ops/linkgraph.reciprocity): ring hosts h0..h9 with
-    +1 and +3 forward families, back-edges only below h5, and planted
-    self-loops that must be dropped — out_n/reciprocated_n then differ
-    per host (500000 / 666666 / 333333 / 0 ppm bands).  The oracle
-    replays the distinct + reversed self-join + rollup — hash-exact."""
-    from html_parser_spark.ops.linkgraph import reciprocity
-
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-
-    def h(expr):
-        return F.concat(F.lit("h"), expr.cast("string"))
-
-    fwd = docs.select(h(d % 10).alias("src"), h((d + 1) % 10).alias("dst"))
-    fwd2 = docs.select(h(d % 10).alias("src"), h((d + 3) % 10).alias("dst"))
-    back = docs.filter(d % 10 < 5).select(
-        h((d + 1) % 10).alias("src"), h(d % 10).alias("dst")
-    )
-    loops = docs.filter(d % 7 == 0).select(
-        h(d % 10).alias("src"), h(d % 10).alias("dst")
-    )
-    edges = fwd.unionByName(fwd2).unionByName(back).unionByName(loops)
-    return reciprocity(edges)
-
-
-def q_fuzzy_pairs(spark, sf_dir):
-    """Blocked edit-distance fuzzy matching (ops/dedup.edit_distance_pairs):
-    quads of keys rec<k>{'',a,ab,zzzz} — within a quad the distances are
-    1/2/1/4+, and the suffixes deliberately straddle the length-band
-    blocking boundary so the oracle must replay the SAME blocking to
-    hash-match (the recall heuristic is part of the pinned contract)."""
-    from html_parser_spark.ops.dedup import edit_distance_pairs
-
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-    suffix = (
-        F.when(d % 4 == 1, "a")
-        .when(d % 4 == 2, "ab")
-        .when(d % 4 == 3, "zzzz")
-        .otherwise("")
-    )
-    key = F.concat(F.lit("rec"), F.expr("doc_id div 4").cast("string"), suffix)
-    return edit_distance_pairs(
-        docs.select("doc_id", key.alias("title")), max_dist=2
-    )
-
-
-def q_text_outlinks(spark, sf_dir):
-    """Plain-text URL mining (ops/html_meta.text_outlinks) for WET-style
-    corpora: two urls per doc with trailing '.'/')' artifacts that the
-    trim must remove; the oracle replays the identical RE2-compatible
-    regexes on the identically rebuilt text — hash-exact."""
-    from html_parser_spark.ops.html_meta import text_outlinks
-
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-    text = F.concat(
-        F.col("text"),
-        F.lit(" See https://ref"), (d % 20).cast("string"),
-        F.lit(".example/a/"), d.cast("string"),
-        F.lit(". Also (http://mirror"), (d % 5).cast("string"),
-        F.lit(".test/p)."),
-    )
-    return text_outlinks(docs.select("doc_id", text.alias("text")))
-
-
-def q_mixture_plan(spark, sf_dir):
-    """Training-mixture epoch planner (ops/corpus.mixture_plan): sources
-    src0..src3 with arithmetic token counts, weights demanding src0-2 plus
-    a phantom src9 (absent from the corpus — must surface as a loud
-    NULL-epochs row, not a crash), src3 present but unweighted.  The
-    oracle replays the aggregate + full-outer join + integral divides."""
-    from html_parser_spark.ops.corpus import mixture_plan
-
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-    src = docs.select(
-        F.concat(F.lit("src"), (d % 4).cast("string")).alias("lang"),
-        ((d % 50) + 1).cast("long").alias("n_tokens"),
-    )
-    out = mixture_plan(
-        src,
-        {"src0": 500000, "src1": 300000, "src2": 150000, "src9": 50000},
-        target_total_tokens=2500000,
-    )
-    # driver-canonicalizer safety: a NULL in a BIGINT column rides pandas as
-    # float64 on the oracle side (400000000 vs 400000000.0 hash split) —
-    # serialize the absent-source sentinel as -1 in BOTH engines
-    return out.withColumn(
-        "epochs_ppm", F.coalesce(F.col("epochs_ppm"), F.lit(-1).cast("long"))
-    )
-
-
-def q_reordered_dedup(spark, sf_dir):
-    """Order-insensitive duplicate groups (ops/dedup.reordered_duplicates):
-    each doc gets a word-REVERSED twin (must group, multiset identical)
-    and a one-token-appended mutant (must NOT group).  The oracle rebuilds
-    the same three variants and replays tokenize → binary sort → md5 in
-    SQL — hash match pins the multiset-key semantics cross-engine."""
-    from html_parser_spark.ops.dedup import reordered_duplicates
-
-    docs = _docs(spark, sf_dir)
-    toks = F.filter(
-        F.split(F.trim(F.col("text")), r"\s+"), lambda x: F.length(x) > 0
-    )
-    twin = docs.select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.array_join(F.reverse(toks), " ").alias("text"),
-    )
-    mutant = docs.select(
-        (F.col("doc_id") + 2000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zzzmutant")).alias("text"),
-    )
-    allv = docs.select("doc_id", "text").unionByName(twin).unionByName(mutant)
-    return reordered_duplicates(allv)
-
-
-def q_robots_audit(spark, sf_dir):
-    """Per-host robots-compliance audit (ops/robots.compliance_audit) over
-    the q_robots policy synthesis (20 hosts, two policy families, decoy
-    badbot group, four path kinds).  The oracle aggregates the CLOSED-FORM
-    expected verdicts per host — hash match checks the whole robots
-    machinery AND the rollup arithmetic."""
-    from html_parser_spark.ops.robots import compliance_audit, parse_robots
-
-    docs = _docs(spark, sf_dir)
-    hostn = F.col("doc_id") % 20
-    host = F.concat(F.lit("h"), hostn.cast("string"), F.lit(".example"))
-    robots = (
-        docs.select(hostn.alias("hn")).distinct().select(
-            F.concat(F.lit("h"), F.col("hn").cast("string"),
-                     F.lit(".example")).alias("host"),
-            F.concat(
-                F.lit("# synthetic policy\nUser-agent: *\n"),
-                F.when(
-                    F.col("hn") < 10,
-                    F.lit("Disallow: /private\nAllow: /private/ok\n"),
-                ).otherwise(F.lit("Disallow: /public\n")),
-                F.lit("\nUser-agent: badbot\nDisallow: /\n"),
-            ).alias("body"),
-        )
-    )
-    kind = F.col("doc_id") % 4
-    path = (
-        F.when(kind == 0, F.concat(F.lit("/public/p"), F.col("doc_id").cast("string")))
-        .when(kind == 1, F.concat(F.lit("/private/p"), F.col("doc_id").cast("string")))
-        .when(kind == 2, F.concat(F.lit("/private/ok/p"), F.col("doc_id").cast("string")))
-        .otherwise(F.lit("/"))
-    )
-    pages = docs.select(
-        "doc_id", F.concat(F.lit("https://"), host, path).alias("url")
-    )
-    return compliance_audit(pages, parse_robots(robots))
-
-
-def q_bowtie(spark, sf_dir, checkpoint=True, max_hops=8):
-    """Bowtie decomposition (ops/linkgraph.bowtie_profile, Broder 2000):
-    3-ring SCC around the pivot, a 2-hop OUT chain, a corpus-scaled IN fan
-    (one in-host per doc_id%10==3), and a disconnected island that must be
-    ABSENT.  NULL dists serialize as -1 (BIGINT/pandas float64 hazard).
-    The oracle states the expected regions/distances in closed form —
-    the BFS core itself is oracle-replayed hop-by-hop in q_click_depth."""
-    from html_parser_spark.ops.linkgraph import bowtie_profile
-
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-
-    def lit_edge(k, s, t):
-        return docs.filter(d == k).select(
-            F.lit(s).alias("src"), F.lit(t).alias("dst")
-        )
-
-    fan = docs.filter(d % 10 == 3).select(
-        F.concat(F.lit("in"), d.cast("string")).alias("src"),
-        F.lit("core0").alias("dst"),
-    )
-    edges = (
-        lit_edge(0, "core0", "core1")
-        .unionByName(lit_edge(1, "core1", "core2"))
-        .unionByName(lit_edge(2, "core2", "core0"))
-        .unionByName(lit_edge(3, "core0", "out0"))
-        .unionByName(lit_edge(4, "out0", "out1"))
-        .unionByName(lit_edge(5, "isl0", "isl1"))
-        .unionByName(fan)
-    )
-    out = bowtie_profile(edges, "core0", max_hops=max_hops, checkpoint=checkpoint)
-    return out.select(
-        "node",
-        "region",
-        F.coalesce(F.col("fwd_dist"), F.lit(-1)).cast("long").alias("fwd_dist"),
-        F.coalesce(F.col("bwd_dist"), F.lit(-1)).cast("long").alias("bwd_dist"),
-    )
-
-
-def q_mirrors(spark, sf_dir):
-    """Mirror detection by shared paths (ops/web.mirror_candidates, Bharat
-    & Broder 1999): m0 serves /p0../p29, m1 the even half, m2 a disjoint
-    tree, and 150 g-hosts share /common which the df cap (100) must drop
-    (leaving the g-hosts posting-less).  The oracle replays postings →
-    cap → pair join → Jaccard bp in SQL — hash-exact."""
-    from html_parser_spark.ops.web import mirror_candidates
-
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-    u_m0 = docs.select(
-        F.concat(F.lit("https://m0.example/p"), (d % 30).cast("string")).alias("url")
-    )
-    u_m1 = docs.filter(d % 2 == 0).select(
-        F.concat(F.lit("https://m1.example/p"), (d % 30).cast("string")).alias("url")
-    )
-    u_m2 = docs.select(
-        F.concat(F.lit("https://m2.example/q"), (d % 20).cast("string")).alias("url")
-    )
-    u_m3 = docs.select(
-        F.concat(F.lit("https://m3.example/p"), (d % 10).cast("string")).alias("url")
-    )
-    u_g = docs.select(
-        F.concat(F.lit("https://g"), (d % 150).cast("string"),
-                 F.lit(".example/common")).alias("url")
-    )
-    pages = (
-        u_m0.unionByName(u_m1).unionByName(u_m2)
-        .unionByName(u_m3).unionByName(u_g)
-    )
-    return mirror_candidates(pages, df_cap=100, min_shared=2)
-
-
-def q_term_blocklist(spark, sf_dir):
-    """C4-style doc-level term blocklist (ops/text.term_blocklist_flags):
-    planted terms with case + punctuation boundaries (doc_id%7 / %13) and
-    an embedded-substring decoy (%5) that must NOT match — token-level
-    word-boundary semantics are the pinned contract.  The oracle replays
-    tokenize → distinct → intersect → sort in SQL — hash-exact."""
-    from html_parser_spark.ops.text import term_blocklist_flags
-
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-    text = F.concat(
-        F.col("text"),
-        F.when(d % 7 == 0, F.lit(" nastyTerm.")).otherwise(F.lit("")),
-        F.when(d % 13 == 0, F.lit(" NASTYTERM2")).otherwise(F.lit("")),
-        F.when(d % 5 == 0, F.lit(" embnastytermded")).otherwise(F.lit("")),
-    )
-    return term_blocklist_flags(
-        docs.select("doc_id", text.alias("text")),
-        ["NastyTerm", "nastyterm2"],
-    )
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Ordered so the driver's 50-query CORRECTNESS window rotates coverage.
-
-    The driver checks the FIRST 50 entries of this dict each round
-    (verified in rounds 3 and 4: CORRECTNESS keys == first 50 names in
-    order).  Round-5 window, built mechanically from the driver-row
-    history (CORRECTNESS_r01..r04):
-
-      1. the 14 queries that have NEVER had a driver-green row — the 3
-         whose array-typed output columns crashed the driver's pandas
-         canonicalizer in round 4 (now serialized via array_join, fixed
-         this round) + the 11 round-4 overflow queries that landed past
-         the window;
-      2. q_flagship_curate — NEW this round: the composed
-         extract→graph→curate pipeline (jobs/flagship_job.py) as one
-         driver-checked contract row;
-      3. the 11 other round-5 additions (trigram-LM scoring + CCNet
-         bucketing, BM25 retrieval, PMI collocations, HITS, hreflang
-         clusters, bitext mining, incremental LSH dedup, readability
-         profile, label-propagation communities, DSIR selection) — this
-         is the FINAL round, so their only chance at a driver row is
-         this window;
-      4. the 10 sketch/diagnostic ops added in the final continuation
-         sessions (HLL distinct, count-min heavy hitters, deterministic
-         corpus shuffle, vocab-growth curve, distribution drift,
-         frequency spectrum, mojibake score, shard manifest, token
-         P/R/F1, exact quantiles) — never driver-exposed, so they take
-         window slots;
-      4b. the 4 final-session ops (shingle-containment dedup, TrustRank,
-         DOM template clustering, URL template mining) — never
-         driver-exposed, so they take window slots;
-      5. 10 round-3-green veterans, the longest-unexposed cohort, in
-         their registry order (q_simhash / q_lsh_buckets /
-         q_event_windows / q_sessionize / q_asof_join / q_range_join /
-         q_extract_text / q_ivf_topk / q_cosine_topk / q_dup_clusters
-         were displaced past the window by item 4; all ten hold
-         driver-green round-3 rows).
-
-    Everything past position 50 carries a driver-green row from round 3
-    (the 14 remaining veterans) or round 4 (all 47 round-4-green rows) and
-    stays green on the strict local oracle (tools/oracle_check.py).
-    
-
-    Round-5 build session: 51 never-driver-exposed queries now compete for
-    the 50 slots; q_strip_lines (51) and q_redirects (52)
-    are the deliberate odd ones out — q_strip_lines's mining half
-    q_frequent_lines IS exposed, and both are pinned by the strict local
-    oracle (hash-exact) and unit tests.
-
-    Final continuation session: q_quantized_topk / q_quantization_recall /
-    q_url_survival / q_sitemap_coverage / q_reciprocity / q_fuzzy_pairs /
-    q_text_outlinks / q_mixture_plan / q_reordered_dedup / q_robots_audit /
-    q_bowtie / q_mirrors / q_term_blocklist land at positions 53-65 (the
-    window was already over-subscribed by never-exposed queries, so they
-    stay past-window by construction); all thirteen are pinned hash-exact
-    by the strict local oracle (tools/oracle_check.py) plus unit tests
-    and plan-audit sections.  Registry: 161 contract queries, 161
-    oracles.
-    """
-    return {
-        # -- never driver-green (3 canonicalizer-crash fixes first) --
-        "q_html_meta": q_html_meta,
-        "q_anchor_stats": q_anchor_stats,
-        "q_table_extract": q_table_extract,
-        "q_keyword_search": q_keyword_search,
-        "q_wat_roundtrip": q_wat_roundtrip,
-        "q_seq_materialize": q_seq_materialize,
-        "q_canonical_dedup": q_canonical_dedup,
-        "q_domain_cap": q_domain_cap,
-        "q_centroid_outliers": q_centroid_outliers,
-        "q_bpe_fertility": q_bpe_fertility,
-        "q_c4_lines": q_c4_lines,
-        "q_ngram_novelty": q_ngram_novelty,
-        "q_script_profile": q_script_profile,
-        "q_sentence_split": q_sentence_split,
-        # -- new in round 5: the composed end-to-end pipeline --
-        "q_flagship_curate": q_flagship_curate,
-        # -- new in round 5: LM scoring / retrieval / collocations,
-        #    link analysis, translation mining, incremental dedup (this
-        #    is the FINAL window — nothing rotates in later, so every
-        #    never-exposed query sits inside it) --
-        "q_lm_score": q_lm_score,
-        "q_lm_buckets": q_lm_buckets,
-        "q_bm25": q_bm25,
-        "q_pmi": q_pmi,
-        "q_hits": q_hits,
-        "q_hreflang": q_hreflang,
-        "q_bitext_mine": q_bitext_mine,
-        "q_incremental_dedup": q_incremental_dedup,
-        "q_readability": q_readability,
-        "q_label_prop": q_label_prop,
-        "q_dsir": q_dsir,
-        # -- final-continuation-session ops (never driver-exposed) --
-        "q_hll_distinct": q_hll_distinct,
-        "q_heavy_hitters": q_heavy_hitters,
-        "q_corpus_shuffle": q_corpus_shuffle,
-        "q_vocab_growth": q_vocab_growth,
-        "q_dist_drift": q_dist_drift,
-        "q_freq_spectrum": q_freq_spectrum,
-        "q_mojibake": q_mojibake,
-        "q_shard_manifest": q_shard_manifest,
-        "q_token_prf": q_token_prf,
-        "q_exact_quantiles": q_exact_quantiles,
-        # -- final-session ops (never driver-exposed): containment dedup,
-        #    TrustRank, template clustering, URL template mining --
-        "q_containment": q_containment,
-        "q_trustrank": q_trustrank,
-        "q_dom_templates": q_dom_templates,
-        "q_url_templates": q_url_templates,
-        "q_click_depth": q_click_depth,
-        "q_pub_dates": q_pub_dates,
-        "q_concentration": q_concentration,
-        "q_code_profile": q_code_profile,
-        "q_bpe_roundtrip": q_bpe_roundtrip,
-        "q_cocitation": q_cocitation,
-        "q_norm_dedup": q_norm_dedup,
-        "q_dedup_prf": q_dedup_prf,
-        "q_gate_ablation": q_gate_ablation,
-        "q_frequent_lines": q_frequent_lines,
-        "q_strip_lines": q_strip_lines,
-        "q_redirects": q_redirects,
-        "q_quantized_topk": q_quantized_topk,
-        "q_quantization_recall": q_quantization_recall,
-        "q_url_survival": q_url_survival,
-        "q_sitemap_coverage": q_sitemap_coverage,
-        "q_reciprocity": q_reciprocity,
-        "q_fuzzy_pairs": q_fuzzy_pairs,
-        "q_text_outlinks": q_text_outlinks,
-        "q_mixture_plan": q_mixture_plan,
-        "q_reordered_dedup": q_reordered_dedup,
-        "q_robots_audit": q_robots_audit,
-        "q_bowtie": q_bowtie,
-        "q_mirrors": q_mirrors,
-        "q_term_blocklist": q_term_blocklist,
-        # -- longest-unexposed veterans (driver-green in round 3, pushed
-        #    past the window by the round-4 additions) --
-        "q_filter_project": q_filter_project,
-        "q_agg_pricing": q_agg_pricing,
-        "q_window_order_check": q_window_order_check,
-        "q_merge_by_key": q_merge_by_key,
-        "q_exact_dedup": q_exact_dedup,
-        "q_token_stats": q_token_stats,
-        "q_quality_score": q_quality_score,
-        "q_tfidf": q_tfidf,
-        "q_data_split": q_data_split,
-        "q_contamination": q_contamination,
-        # ---------------- driver window ends here (position 50) ---------
-        # (displaced by the final-session ops; driver-green in round 3)
-        "q_chunk_plan": q_chunk_plan,
-        "q_pii_scan": q_pii_scan,
-        "q_minhash_sig": q_minhash_sig,
-        "q_near_dup_pairs": q_near_dup_pairs,
-        # (displaced by the sketch/diagnostic ops; driver-green in round 3)
-        "q_dup_clusters": q_dup_clusters,
-        "q_cosine_topk": q_cosine_topk,
-        "q_ivf_topk": q_ivf_topk,
-        "q_simhash": q_simhash,
-        "q_lsh_buckets": q_lsh_buckets,
-        "q_event_windows": q_event_windows,
-        "q_sessionize": q_sessionize,
-        "q_asof_join": q_asof_join,
-        "q_range_join": q_range_join,
-        "q_extract_text": q_extract_text,
-        "q_lang_id": q_lang_id,
-        "q_span_dedup": q_span_dedup,
-        "q_url_parts": q_url_parts,
-        # -- round-3-green veterans that did not fit (22) --
-        "q_url_canon": q_url_canon,
-        "q_dim_broadcast_join": q_dim_broadcast_join,
-        "q_topk": q_topk,
-        "q_fingerprint": q_fingerprint,
-        "q_winnow_fingerprint": q_winnow_fingerprint,
-        "q_lang_profile": q_lang_profile,
-        "q_repetition": q_repetition,
-        "q_dedup_survivors": q_dedup_survivors,
-        "q_percentiles": q_percentiles,
-        "q_embedding_near_dup": q_embedding_near_dup,
-        "q_embedding_near_dup_lsh": q_embedding_near_dup_lsh,
-        "q_ngram_jaccard": q_ngram_jaccard,
-        "q_jaccard_verify": q_jaccard_verify,
-        "q_set_ops": q_set_ops,
-        "q_hypertable_rollup": q_hypertable_rollup,
-        "q_rollup": q_rollup,
-        "q_string_battery": q_string_battery,
-        "q_date_battery": q_date_battery,
-        "q_extract_text_rich": q_extract_text_rich,
-        "q_media_meta": q_media_meta,
-        "q_domain_stats": q_domain_stats,
-        "q_blocklist": q_blocklist,
-        # -- round-4-green rows (all 47, freshest exposure) --
-        "q_extract_entries": q_extract_entries,
-        "q_migrate_v21": q_migrate_v21,
-        "q_main_content": q_main_content,
-        "q_pagerank": q_pagerank,
-        "q_gopher": q_gopher,
-        "q_robots": q_robots,
-        "q_warc_roundtrip": q_warc_roundtrip,
-        "q_warc_index": q_warc_index,
-        "q_latest_capture": q_latest_capture,
-        "q_sitemap": q_sitemap,
-        "q_crawl_diff": q_crawl_diff,
-        "q_text_clean": q_text_clean,
-        "q_crawl_budget": q_crawl_budget,
-        "q_graph_stats": q_graph_stats,
-        "q_feed": q_feed,
-        "q_jsonld": q_jsonld,
-        "q_familiarity": q_familiarity,
-        "q_soft404": q_soft404,
-        "q_image_headers": q_image_headers,
-        "q_markdown": q_markdown,
-        "q_warc_revisit": q_warc_revisit,
-        "q_paragraph_dedup": q_paragraph_dedup,
-        "q_semantic_dedup": q_semantic_dedup,
-        "q_charset": q_charset,
-        "q_inverted_index": q_inverted_index,
-        "q_bloom_seen": q_bloom_seen,
-        "q_audio_headers": q_audio_headers,
-        "q_image_dhash": q_image_dhash,
-        "q_stratified_sample": q_stratified_sample,
-        "q_vocab": q_vocab,
-        "q_crawl_plan": q_crawl_plan,
-        "q_temperature_mix": q_temperature_mix,
-        "q_doc_classifier": q_doc_classifier,
-        "q_wet_roundtrip": q_wet_roundtrip,
-        "q_surt_key": q_surt_key,
-        "q_pack_shards": q_pack_shards,
-        "q_robots_sitemaps": q_robots_sitemaps,
-        "q_psl_domain": q_psl_domain,
-        "q_host_line_dedup": q_host_line_dedup,
-        "q_noindex_gate": q_noindex_gate,
-        "q_recrawl_priority": q_recrawl_priority,
-        "q_cdxj_roundtrip": q_cdxj_roundtrip,
-        "q_pdf_text": q_pdf_text,
-        "q_mime_sniff": q_mime_sniff,
-        "q_exact_substring": q_exact_substring,
-        "q_bpe_encode": q_bpe_encode,
-        "q_pack_sequences": q_pack_sequences,
-    }
-
-
-_STOP = ["the", "a", "of", "and", "to", "in"]
-_STOP_SUM = " + ".join(
-    f"(len(string_split(' ' || text || ' ', ' {w} ')) - 1)" for w in _STOP
-)
-
-_MINHASH_CTE = """
-WITH toks AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
-  FROM documents
-), sh AS (
-  SELECT doc_id,
-         CASE WHEN len(t) >= 3 THEN
-           list_transform(range(1, len(t) - 1),
-                          i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-         ELSE [] END AS shingles
-  FROM toks
-)
-SELECT doc_id,
-       list_min(list_transform(shingles, s -> md5('0|' || s))) AS sig_0,
-       list_min(list_transform(shingles, s -> md5('1|' || s))) AS sig_1,
-       list_min(list_transform(shingles, s -> md5('2|' || s))) AS sig_2,
-       list_min(list_transform(shingles, s -> md5('3|' || s))) AS sig_3
-FROM sh
-"""
-
-
-_PUB_DATES_ORACLE = r"""
-WITH syn AS (
-  SELECT
-    'https://s' || (doc_id % 10) || '.example.com' ||
-      CASE WHEN doc_id % 3 = 0
-           THEN '/' || (doc_id % 5 + 2005) || '/' ||
-                lpad(CAST(doc_id % 12 + 1 AS VARCHAR), 2, '0') || '/' ||
-                lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') ||
-                '/p' || doc_id
-           ELSE '/p' || doc_id END AS url,
-    '<html><head>' ||
-      CASE WHEN doc_id % 4 = 0 THEN
-             '<meta property="article:published_time" content="' ||
-             CASE WHEN doc_id % 10 = 0 THEN '2023-02-30'
-                  ELSE (doc_id % 9 + 2015) || '-' ||
-                       lpad(CAST(doc_id % 12 + 1 AS VARCHAR), 2, '0') ||
-                       '-' ||
-                       lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') END ||
-             'T08:30:00Z">'
-           WHEN doc_id % 4 = 1 AND doc_id % 8 = 1 THEN
-             '<meta property="article:published_time" content="1999-12-31T00:00:00Z">'
-           ELSE '' END ||
-    '</head><body>' ||
-      CASE WHEN doc_id % 4 = 1 THEN
-             '<time datetime="' ||
-             (doc_id % 9 + 2015) || '-' ||
-             lpad(CAST(doc_id % 12 + 1 AS VARCHAR), 2, '0') || '-' ||
-             lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') ||
-             '">then</time>'
-           WHEN doc_id % 4 = 2 THEN
-             '<script type="application/ld+json">{"@type":"Article","datePublished": "' ||
-             CASE WHEN doc_id % 7 = 0 THEN '2023-13-05'
-                  ELSE (doc_id % 9 + 2015) || '-' ||
-                       lpad(CAST(doc_id % 12 + 1 AS VARCHAR), 2, '0') ||
-                       '-' ||
-                       lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') END ||
-             '"}</script>'
-           ELSE '<p>plain</p>' END ||
-    '</body></html>' AS html
-  FROM documents
-), hits AS (
-  SELECT url,
-    regexp_extract(html,
-      '<meta[^>]*property="article:published_time"[^>]*content="((?:19|20)\d\d-(?:0[1-9]|1[0-2])-(?:0[1-9]|[12]\d|3[01]))', 1) AS m_meta,
-    regexp_extract(html,
-      '<time[^>]*datetime="((?:19|20)\d\d-(?:0[1-9]|1[0-2])-(?:0[1-9]|[12]\d|3[01]))', 1) AS m_time,
-    regexp_extract(html,
-      '"datePublished"\s*:\s*"((?:19|20)\d\d-(?:0[1-9]|1[0-2])-(?:0[1-9]|[12]\d|3[01]))', 1) AS m_jsonld,
-    regexp_extract(url,
-      '/((?:19|20)\d\d)/(0[1-9]|1[0-2])/(0[1-9]|[12]\d|3[01])(?:/|$)', 1) AS g1,
-    regexp_extract(url,
-      '/((?:19|20)\d\d)/(0[1-9]|1[0-2])/(0[1-9]|[12]\d|3[01])(?:/|$)', 2) AS g2,
-    regexp_extract(url,
-      '/((?:19|20)\d\d)/(0[1-9]|1[0-2])/(0[1-9]|[12]\d|3[01])(?:/|$)', 3) AS g3
-  FROM syn
-), chain AS (
-  SELECT url,
-    CASE WHEN m_meta <> '' THEN m_meta
-         WHEN m_time <> '' THEN m_time
-         WHEN m_jsonld <> '' THEN m_jsonld
-         WHEN g1 <> '' THEN g1 || '-' || g2 || '-' || g3 END AS raw,
-    CASE WHEN m_meta <> '' THEN 'meta'
-         WHEN m_time <> '' THEN 'time'
-         WHEN m_jsonld <> '' THEN 'jsonld'
-         WHEN g1 <> '' THEN 'url'
-         ELSE 'none' END AS pub_src
-  FROM hits
-)
-SELECT url, strftime(TRY_CAST(raw AS DATE), '%Y-%m-%d') AS pub_date, pub_src
-FROM chain
-"""
-
-
-_CONCENTRATION_ORACLE = r"""
-WITH t AS (
-  SELECT 'h' || (doc_id % 37) AS k,
-         CAST(length(text) AS BIGINT) *
-         (CASE WHEN doc_id % 37 = 0 THEN 64 ELSE doc_id % 13 + 1 END) AS sz
-  FROM documents
-), totals AS (
-  SELECT k, CAST(SUM(sz) AS BIGINT) AS total FROM t GROUP BY k
-  HAVING SUM(sz) > 0
-), b AS (
-  SELECT CAST(length(regexp_replace(bin(total), '^0+', '')) AS INTEGER)
-           AS bucket,
-         CAST(COUNT(*) AS BIGINT) AS n_keys,
-         CAST(SUM(total) AS BIGINT) AS bucket_total
-  FROM totals GROUP BY 1
-), c AS (
-  SELECT bucket, n_keys, bucket_total,
-         CAST(SUM(n_keys) OVER (ORDER BY bucket DESC) AS BIGINT)
-           AS cum_keys,
-         CAST(SUM(bucket_total) OVER (ORDER BY bucket DESC) AS BIGINT)
-           AS cum_total
-  FROM b
-), g AS (
-  SELECT CAST(SUM(n_keys) AS BIGINT) AS gk,
-         CAST(SUM(bucket_total) AS BIGINT) AS gt
-  FROM b
-)
-SELECT bucket, n_keys, bucket_total, cum_keys, cum_total,
-       CAST((cum_keys * 1000000) // gk AS BIGINT) AS cum_keys_ppm,
-       CAST((cum_total * 1000000) // gt AS BIGINT) AS cum_total_ppm
-FROM c, g
-"""
-
-
-_CODE_PROFILE_ORACLE = r"""
-WITH aug AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 3 = 0
-              THEN text || chr(10) || 'import os' || chr(10) ||
-                   '    x = 1;' || chr(10) || 'call();' || chr(10) ||
-                   chr(10) || 'plain words here'
-              ELSE text END AS t
-  FROM documents
-), l AS (
-  SELECT doc_id, unnest(string_split(t, chr(10))) AS line FROM aug
-), nb AS (
-  SELECT doc_id, line FROM l WHERE trim(line) <> ''
-), agg AS (
-  SELECT doc_id,
-         CAST(COUNT(*) AS BIGINT) AS n_lines,
-         CAST(COUNT(*) FILTER (WHERE
-              regexp_matches(line, '[;{}]\s*$')
-           OR regexp_matches(line, '^(	|    )')
-           OR regexp_matches(line,
-              '^\s*(def |class |function |#include|import |from |return |var |const |let |public |private |for \(|while \(|if \()')
-         ) AS BIGINT) AS code_lines
-  FROM nb GROUP BY doc_id
-)
-SELECT d.doc_id,
-       COALESCE(a.n_lines, 0) AS n_lines,
-       COALESCE(a.code_lines, 0) AS code_lines,
-       CAST(CASE WHEN COALESCE(a.n_lines, 0) > 0
-                 THEN (a.code_lines * 1000000) // a.n_lines
-                 ELSE 0 END AS BIGINT) AS code_ppm
-FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
-"""
-
-
-_BPE_ROUNDTRIP_ORACLE = """
-SELECT doc_id, TRUE AS ok FROM documents
-"""
-
-_COCITATION_ORACLE = r"""
-WITH e0 AS (
-  SELECT doc_id % 40 AS s, (doc_id * 7 + 3) % 40 AS t FROM documents
-  UNION ALL
-  SELECT doc_id % 40, (doc_id * 13 + 11) % 45 FROM documents
-), edges AS (
-  SELECT DISTINCT 'h' || s AS src, 'h' || t AS dst FROM e0 WHERE s <> t
-), deg AS (
-  SELECT src, COUNT(*) AS d FROM edges GROUP BY src
-), posts AS (
-  SELECT e.src, e.dst FROM edges e JOIN deg USING (src) WHERE deg.d <= 8
-), indeg AS (
-  SELECT dst, CAST(COUNT(*) AS BIGINT) AS deg FROM posts GROUP BY dst
-), pairs AS (
-  SELECT a.dst AS host_a, b.dst AS host_b,
-         CAST(COUNT(*) AS BIGINT) AS common
-  FROM posts a JOIN posts b ON a.src = b.src AND a.dst < b.dst
-  GROUP BY 1, 2 HAVING COUNT(*) >= 2
-)
-SELECT p.host_a, p.host_b, p.common,
-       CAST((p.common * 10000) // (ia.deg + ib.deg - p.common) AS BIGINT)
-         AS jaccard_bp
-FROM pairs p
-JOIN indeg ia ON ia.dst = p.host_a
-JOIN indeg ib ON ib.dst = p.host_b
-"""
-
-
-_NORM_DEDUP_ORACLE = r"""
-WITH u AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 10000,
-         replace(text, ' ', '---') || ' ...!!!'
-  FROM documents
-), k AS (
-  SELECT doc_id,
-         md5(regexp_replace(lower(text), '[^a-z0-9]+', '', 'g')) AS h
-  FROM u
-)
-SELECT h, CAST(COUNT(*) AS BIGINT) AS dup_count,
-       MIN(doc_id) AS canonical_id
-FROM k GROUP BY h
-"""
-
-_DEDUP_PRF_ORACLE = r"""
-WITH labeled AS (
-  SELECT doc_id AS _a, doc_id + 300 AS _b FROM documents WHERE doc_id < 200
-), pred AS (
-  SELECT DISTINCT LEAST(a, b) AS _a, GREATEST(a, b) AS _b FROM (
-    SELECT doc_id + 300 AS a, doc_id AS b FROM documents
-    WHERE doc_id < 200 AND doc_id % 5 <> 0
-    UNION ALL
-    SELECT doc_id + 300, doc_id FROM documents
-    WHERE doc_id < 200 AND doc_id % 5 <> 0 AND doc_id % 11 = 0
-    UNION ALL
-    SELECT doc_id, doc_id + 301 FROM documents
-    WHERE doc_id < 200 AND doc_id % 7 = 0
-  ) t WHERE a <> b
-), tp AS (
-  SELECT COUNT(*) AS tp FROM pred p JOIN labeled l
-    ON p._a = l._a AND p._b = l._b
-), c AS (
-  SELECT CAST((SELECT COUNT(*) FROM pred) AS BIGINT) AS n_pred,
-         CAST((SELECT COUNT(*) FROM labeled) AS BIGINT) AS n_labeled,
-         CAST((SELECT tp FROM tp) AS BIGINT) AS tp
-)
-SELECT n_pred, n_labeled, tp,
-       CAST(CASE WHEN n_pred > 0 THEN (tp * 1000000) // n_pred
-                 ELSE 0 END AS BIGINT) AS precision_ppm,
-       CAST(CASE WHEN n_labeled > 0 THEN (tp * 1000000) // n_labeled
-                 ELSE 0 END AS BIGINT) AS recall_ppm,
-       CAST(CASE WHEN n_pred + n_labeled > 0
-                 THEN (2 * tp * 1000000) // (n_pred + n_labeled)
-                 ELSE 0 END AS BIGINT) AS f1_ppm
-FROM c
-"""
-
-
-_GATE_ABLATION_ORACLE = r"""
-            WITH g AS (
-              SELECT doc_id,
-                     regexp_split_to_array(trim(text), '\s+') AS toks,
-                     string_split(text, chr(10)) AS lines,
-                     CAST(length(regexp_replace(text, '\s+', '', 'g'))
-                          AS BIGINT) AS word_chars,
-                     CAST(length(text) - length(replace(text, '#', ''))
-                          AS BIGINT)
-                     + CAST(length(text) - length(replace(text, '…', ''))
-                          AS BIGINT)
-                     + CAST((length(text) - length(replace(text, '...', '')))
-                            // 3 AS BIGINT) AS symbols
-              FROM documents
-            ), m AS (
-              SELECT doc_id, word_chars, symbols,
-                     CAST(len(toks) AS BIGINT) AS n_words,
-                     CAST(len(lines) AS BIGINT) AS n_lines,
-                     CAST(len(list_filter(lines,
-                          x -> regexp_matches(ltrim(x), '^[•*-]')))
-                          AS BIGINT) AS bullet_lines,
-                     CAST(len(list_filter(lines,
-                          x -> regexp_matches(rtrim(x), '(\.\.\.|…)$')))
-                          AS BIGINT) AS ellipsis_lines,
-                     CAST(len(list_filter(toks,
-                          x -> regexp_matches(x, '[A-Za-z]')))
-                          AS BIGINT) AS alpha_words,
-                     len(list_filter(['the','be','to','of','and','that',
-                                      'have','with'],
-                          w -> list_contains(list_transform(toks,
-                               x -> lower(x)), w))) AS stop_hits
-              FROM g
-            ), f AS (
-              SELECT (n_words >= 30 AND n_words <= 100000) AS r0,
-                     (word_chars >= 3 * n_words AND word_chars <= 10 * n_words) AS r1,
-                     (10 * symbols <= n_words) AS r2,
-                     (10 * bullet_lines <= 9 * n_lines) AS r3,
-                     (10 * ellipsis_lines <= 3 * n_lines) AS r4,
-                     (5 * alpha_words >= 4 * n_words) AS r5,
-                     (stop_hits >= 2) AS r6
-              FROM m
-            ), t AS (
-              SELECT CAST(COUNT(*) AS BIGINT) AS total FROM f
-            ), k AS (
-              SELECT 'keep_word_count' AS rule,
-                     CAST(COUNT(*) FILTER (WHERE NOT r0) AS BIGINT)
-                       AS kills,
-                     CAST(COUNT(*) FILTER (WHERE NOT r0 AND r1 AND r2 AND r3 AND r4 AND r5 AND r6)
-                          AS BIGINT) AS unique_kills
-              FROM f
-              UNION ALL
-              SELECT 'keep_mean_len' AS rule,
-                     CAST(COUNT(*) FILTER (WHERE NOT r1) AS BIGINT)
-                       AS kills,
-                     CAST(COUNT(*) FILTER (WHERE NOT r1 AND r0 AND r2 AND r3 AND r4 AND r5 AND r6)
-                          AS BIGINT) AS unique_kills
-              FROM f
-              UNION ALL
-              SELECT 'keep_symbol_ratio' AS rule,
-                     CAST(COUNT(*) FILTER (WHERE NOT r2) AS BIGINT)
-                       AS kills,
-                     CAST(COUNT(*) FILTER (WHERE NOT r2 AND r0 AND r1 AND r3 AND r4 AND r5 AND r6)
-                          AS BIGINT) AS unique_kills
-              FROM f
-              UNION ALL
-              SELECT 'keep_bullets' AS rule,
-                     CAST(COUNT(*) FILTER (WHERE NOT r3) AS BIGINT)
-                       AS kills,
-                     CAST(COUNT(*) FILTER (WHERE NOT r3 AND r0 AND r1 AND r2 AND r4 AND r5 AND r6)
-                          AS BIGINT) AS unique_kills
-              FROM f
-              UNION ALL
-              SELECT 'keep_ellipsis_lines' AS rule,
-                     CAST(COUNT(*) FILTER (WHERE NOT r4) AS BIGINT)
-                       AS kills,
-                     CAST(COUNT(*) FILTER (WHERE NOT r4 AND r0 AND r1 AND r2 AND r3 AND r5 AND r6)
-                          AS BIGINT) AS unique_kills
-              FROM f
-              UNION ALL
-              SELECT 'keep_alpha' AS rule,
-                     CAST(COUNT(*) FILTER (WHERE NOT r5) AS BIGINT)
-                       AS kills,
-                     CAST(COUNT(*) FILTER (WHERE NOT r5 AND r0 AND r1 AND r2 AND r3 AND r4 AND r6)
-                          AS BIGINT) AS unique_kills
-              FROM f
-              UNION ALL
-              SELECT 'keep_stopwords' AS rule,
-                     CAST(COUNT(*) FILTER (WHERE NOT r6) AS BIGINT)
-                       AS kills,
-                     CAST(COUNT(*) FILTER (WHERE NOT r6 AND r0 AND r1 AND r2 AND r3 AND r4 AND r5)
-                          AS BIGINT) AS unique_kills
-              FROM f
-            )
-            SELECT rule, kills, unique_kills,
-                   CAST(CASE WHEN total > 0
-                        THEN (kills * 1000000) // total ELSE 0 END
-                        AS BIGINT) AS kills_ppm,
-                   CAST(CASE WHEN total > 0
-                        THEN (unique_kills * 1000000) // total ELSE 0 END
-                        AS BIGINT) AS unique_kills_ppm
-            FROM k, t
-"""
-
-
-_BOILER_AUG_CTE = """
-aug AS (
-  SELECT doc_id, 'h' || (doc_id % 20) AS host,
-         text || chr(10) || 'Copyright 2024 Example' ||
-         CASE WHEN doc_id % 2 = 0
-              THEN chr(10) || 'Powered by ExampleCMS' ELSE '' END ||
-         CASE WHEN doc_id % 20 = 3
-              THEN chr(10) || 'Rare site notice' ELSE '' END AS t
-  FROM documents
-), hl AS (
-  SELECT DISTINCT host, trim(line) AS line FROM (
-    SELECT host, unnest(string_split(t, chr(10))) AS line FROM aug
-  ) q WHERE trim(line) <> ''
-), bl AS (
-  SELECT line, CAST(COUNT(*) AS BIGINT) AS n_hosts
-  FROM hl GROUP BY line HAVING COUNT(*) >= 3
-)"""
-
-_FREQUENT_LINES_ORACLE = (
-    "WITH " + _BOILER_AUG_CTE + "\nSELECT line, n_hosts FROM bl"
-)
-
-_STRIP_LINES_ORACLE = (
-    "WITH " + _BOILER_AUG_CTE + """, bll AS (
-  SELECT list(line) AS arr FROM bl
-)
-SELECT a.doc_id,
-       array_to_string(
-         list_filter(string_split(a.t, chr(10)),
-                     x -> NOT list_contains(bll.arr, trim(x))),
-         chr(10)) AS text
-FROM aug a, bll
-"""
-)
-
-
-_REDIRECTS_ORACLE = """WITH e0 AS (
-  SELECT 'u' || doc_id AS src, 'u' || (doc_id + 1) AS dst
-  FROM documents WHERE doc_id % 4 < 3
-  UNION ALL SELECT 'x0', 'x1' FROM documents WHERE doc_id = 0
-  UNION ALL SELECT 'x1', 'x0' FROM documents WHERE doc_id = 1
-  UNION ALL SELECT 'u0', 'u9' FROM documents WHERE doc_id = 2
-), m AS (
-  SELECT src, MIN(dst) AS dst FROM e0 GROUP BY src
-), s1 AS (
-  SELECT src AS url, dst AS cur, 1 AS hops FROM m
-), s2 AS (
-  SELECT s.url, COALESCE(m.dst, s.cur) AS cur,
-         s.hops + CASE WHEN m.dst IS NULL THEN 0 ELSE 1 END AS hops
-  FROM s1 s LEFT JOIN m ON m.src = s.cur
-), s3 AS (
-  SELECT s.url, COALESCE(m.dst, s.cur) AS cur,
-         s.hops + CASE WHEN m.dst IS NULL THEN 0 ELSE 1 END AS hops
-  FROM s2 s LEFT JOIN m ON m.src = s.cur
-), s4 AS (
-  SELECT s.url, COALESCE(m.dst, s.cur) AS cur,
-         s.hops + CASE WHEN m.dst IS NULL THEN 0 ELSE 1 END AS hops
-  FROM s3 s LEFT JOIN m ON m.src = s.cur
-), s5 AS (
-  SELECT s.url, COALESCE(m.dst, s.cur) AS cur,
-         s.hops + CASE WHEN m.dst IS NULL THEN 0 ELSE 1 END AS hops
-  FROM s4 s LEFT JOIN m ON m.src = s.cur
-)
-SELECT s.url AS src, s.cur AS final_url, CAST(s.hops AS INTEGER) AS hops,
-       s.cur NOT IN (SELECT src FROM m) AS resolved
-FROM s5 s"""
-
-
-def _seed_distance_oracle_sql(max_hops: int = 3) -> str:
-    """Unrolled-CTE replica of ops/linkgraph.seed_distance over the shared
-    synthetic graph with the TrustRank seed list: per-hop frontier CTEs
-    (successors of the previous frontier, minus everything already
-    settled).  Integer hop labels — exact across engines."""
-    seed_values = ", ".join(f"('h{i}')" for i in range(0, 40, 7))
-    parts = [f"""e0 AS (
-  SELECT doc_id % 40 AS s, (doc_id * 7 + 3) % 40 AS t FROM documents
-  UNION ALL
-  SELECT doc_id % 40, (doc_id * 13 + 11) % 45 FROM documents
-), edges AS (
-  SELECT DISTINCT 'h' || s AS src, 'h' || t AS dst FROM e0 WHERE s <> t
-), nodes AS (
-  SELECT src AS node FROM edges UNION SELECT dst FROM edges
-), seeds AS (SELECT * FROM (VALUES {seed_values}) sv(node)
-), d0 AS (
-  SELECT n.node, CAST(0 AS INTEGER) AS dist
-  FROM nodes n JOIN seeds s ON s.node = n.node
-), f0 AS (SELECT node FROM d0)"""]
-    for h in range(1, max_hops + 1):
-        parts.append(f""", f{h} AS (
-  SELECT DISTINCT e.dst AS node
-  FROM edges e JOIN f{h - 1} f ON f.node = e.src
-  WHERE e.dst NOT IN (SELECT node FROM d{h - 1})
-), d{h} AS (
-  SELECT node, dist FROM d{h - 1}
-  UNION ALL SELECT node, CAST({h} AS INTEGER) FROM f{h}
-)""")
-    return "WITH " + "".join(parts) + f"\nSELECT node, dist FROM d{max_hops}"
-
-
-def _pagerank_oracle_sql(iterations: int = 3) -> str:
-    """Unrolled-CTE replica of ops/linkgraph.pagerank_fixed_point over the
-    q_pagerank synthetic graph.  Every step is 64-bit integer arithmetic
-    (``//`` floor division, positive operands), so the chain is bit-exact
-    against Spark regardless of shuffle/aggregation order."""
-    S, num, den = 10**12, 85, 100
-    parts = [f"""e0 AS (
-  SELECT doc_id % 40 AS s, (doc_id * 7 + 3) % 40 AS t FROM documents
-  UNION ALL
-  SELECT doc_id % 40, (doc_id * 13 + 11) % 45 FROM documents
-), edges AS (
-  SELECT 'h' || s AS src, 'h' || t AS dst, CAST(COUNT(*) AS BIGINT) AS weight
-  FROM e0 WHERE s <> t GROUP BY 1, 2
-), nodes AS (
-  SELECT src AS node FROM edges UNION SELECT dst FROM edges
-), nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes
-), outw AS (
-  SELECT src, CAST(SUM(weight) AS BIGINT) AS w_out FROM edges GROUP BY src
-), r0 AS (
-  SELECT node, CAST({S} // n AS BIGINT) AS rank FROM nodes, nn
-)"""]
-    for k in range(iterations):
-        parts.append(f""", d{k} AS (
-  SELECT CAST(COALESCE(SUM(rank), 0) AS BIGINT) AS dang
-  FROM r{k} WHERE node NOT IN (SELECT src FROM outw)
-), c{k} AS (
-  SELECT e.dst AS node,
-         CAST(SUM((r.rank * e.weight) // o.w_out) AS BIGINT) AS in_sum
-  FROM edges e
-  JOIN r{k} r ON r.node = e.src
-  JOIN outw o ON o.src = e.src
-  GROUP BY e.dst
-), r{k + 1} AS (
-  SELECT n.node,
-         CAST(({den - num} * {S}) // ({den} * nn.n)
-              + ({num} * (COALESCE(c.in_sum, 0) + d{k}.dang // nn.n)) // {den}
-              AS BIGINT) AS rank
-  FROM nodes n LEFT JOIN c{k} c ON c.node = n.node, nn, d{k}
-)""")
-    return "WITH " + "".join(parts) + f"\nSELECT node, rank FROM r{iterations}"
-
-
-def _trustrank_oracle_sql(iterations: int = 3) -> str:
-    """Unrolled-CTE replica of ops/linkgraph.trustrank_fixed_point over the
-    shared synthetic graph with seeds h0,h7,…,h35: the pagerank chain with
-    N replaced by the seed count m and the teleport base + dangling
-    redistribution gated to seed rows.  All-BIGINT ``//`` floor division on
-    non-negative operands — bit-exact regardless of shuffle order."""
-    S, num, den = 10**12, 85, 100
-    seed_values = ", ".join(f"('h{i}')" for i in range(0, 40, 7))
-    parts = [f"""e0 AS (
-  SELECT doc_id % 40 AS s, (doc_id * 7 + 3) % 40 AS t FROM documents
-  UNION ALL
-  SELECT doc_id % 40, (doc_id * 13 + 11) % 45 FROM documents
-), edges AS (
-  SELECT 'h' || s AS src, 'h' || t AS dst, CAST(COUNT(*) AS BIGINT) AS weight
-  FROM e0 WHERE s <> t GROUP BY 1, 2
-), nodes AS (
-  SELECT src AS node FROM edges UNION SELECT dst FROM edges
-), seeds AS (SELECT * FROM (VALUES {seed_values}) sv(node)
-), sn AS (
-  SELECT n.node FROM nodes n JOIN seeds s ON s.node = n.node
-), mm AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM sn
-), flagged AS (
-  SELECT n.node,
-         CASE WHEN s.node IS NOT NULL THEN 1 ELSE 0 END AS seed
-  FROM nodes n LEFT JOIN sn s ON s.node = n.node
-), outw AS (
-  SELECT src, CAST(SUM(weight) AS BIGINT) AS w_out FROM edges GROUP BY src
-), r0 AS (
-  SELECT node, seed,
-         CAST(CASE WHEN seed = 1 THEN {S} // m ELSE 0 END AS BIGINT) AS rank
-  FROM flagged, mm
-)"""]
-    for k in range(iterations):
-        parts.append(f""", d{k} AS (
-  SELECT CAST(COALESCE(SUM(rank), 0) AS BIGINT) AS dang
-  FROM r{k} WHERE node NOT IN (SELECT src FROM outw)
-), c{k} AS (
-  SELECT e.dst AS node,
-         CAST(SUM((r.rank * e.weight) // o.w_out) AS BIGINT) AS in_sum
-  FROM edges e
-  JOIN r{k} r ON r.node = e.src
-  JOIN outw o ON o.src = e.src
-  GROUP BY e.dst
-), r{k + 1} AS (
-  SELECT f.node, f.seed,
-         CAST(CASE WHEN f.seed = 1
-                   THEN ({den - num} * {S}) // ({den} * mm.m) ELSE 0 END
-              + ({num} * (COALESCE(c.in_sum, 0)
-                          + f.seed * (d{k}.dang // mm.m))) // {den}
-              AS BIGINT) AS rank
-  FROM flagged f LEFT JOIN c{k} c ON c.node = f.node, mm, d{k}
-)""")
-    return "WITH " + "".join(parts) + f"\nSELECT node, rank FROM r{iterations}"
-
-
-def _hits_oracle_sql(iterations: int = 3) -> str:
-    """Unrolled-CTE replica of ops/linkgraph.hits_fixed_point over the
-    q_pagerank/q_hits synthetic graph: identical half-step rescales in
-    HUGEINT (Spark rides DECIMAL(38,0) — same exact-integer semantics),
-    ``//`` floor division on strictly non-negative operands, so the chain
-    is bit-exact regardless of shuffle/aggregation order."""
-    S = 10**12
-    parts = [f"""e0 AS (
-  SELECT doc_id % 40 AS s, (doc_id * 7 + 3) % 40 AS t FROM documents
-  UNION ALL
-  SELECT doc_id % 40, (doc_id * 13 + 11) % 45 FROM documents
-), edges AS (
-  SELECT 'h' || s AS src, 'h' || t AS dst, CAST(COUNT(*) AS BIGINT) AS weight
-  FROM e0 WHERE s <> t GROUP BY 1, 2
-), nodes AS (
-  SELECT src AS node FROM edges UNION SELECT dst FROM edges
-), nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes
-), h0 AS (
-  SELECT node, CAST({S} // n AS BIGINT) AS hub FROM nodes, nn
-)"""]
-    for k in range(iterations):
-        parts.append(f""", ar{k} AS (
-  SELECT e.dst AS node, SUM(CAST(h.hub AS HUGEINT) * e.weight) AS raw
-  FROM edges e JOIN h{k} h ON h.node = e.src GROUP BY e.dst
-), at{k} AS (SELECT COALESCE(SUM(raw), 0) AS t FROM ar{k}
-), a{k + 1} AS (
-  SELECT n.node,
-         CAST(CASE WHEN t.t > 0
-                   THEN (COALESCE(r.raw, 0) * {S}) // t.t
-                   ELSE 0 END AS BIGINT) AS auth
-  FROM nodes n LEFT JOIN ar{k} r ON r.node = n.node, at{k} t
-), hr{k} AS (
-  SELECT e.src AS node, SUM(CAST(a.auth AS HUGEINT) * e.weight) AS raw
-  FROM edges e JOIN a{k + 1} a ON a.node = e.dst GROUP BY e.src
-), ht{k} AS (SELECT COALESCE(SUM(raw), 0) AS t FROM hr{k}
-), h{k + 1} AS (
-  SELECT n.node,
-         CAST(CASE WHEN t.t > 0
-                   THEN (COALESCE(r.raw, 0) * {S}) // t.t
-                   ELSE 0 END AS BIGINT) AS hub
-  FROM nodes n LEFT JOIN hr{k} r ON r.node = n.node, ht{k} t
-)""")
-    return (
-        "WITH " + "".join(parts)
-        + f"\nSELECT a.node, a.auth, h.hub"
-        f"\nFROM a{iterations} a JOIN h{iterations} h ON h.node = a.node"
-    )
-
-
-def _lpa_oracle_sql(iterations: int = 3) -> str:
-    """Unrolled-CTE replica of ops/linkgraph.label_propagation over the
-    shared synthetic host graph: symmetrize + sum weights, then per
-    iteration the identical BIGINT label-weight sums with the
-    (weight DESC, label ASC) winner election — row_number here, a
-    min-struct there, same total order, so the hash matches exactly."""
-    parts = ["""e0 AS (
-  SELECT doc_id % 40 AS s, (doc_id * 7 + 3) % 40 AS t FROM documents
-  UNION ALL
-  SELECT doc_id % 40, (doc_id * 13 + 11) % 45 FROM documents
-), edges AS (
-  SELECT 'h' || s AS src, 'h' || t AS dst, CAST(COUNT(*) AS BIGINT) AS weight
-  FROM e0 WHERE s <> t GROUP BY 1, 2
-), sym AS (
-  SELECT src, dst, CAST(SUM(weight) AS BIGINT) AS weight FROM (
-    SELECT src, dst, weight FROM edges
-    UNION ALL
-    SELECT dst, src, weight FROM edges
-  ) GROUP BY src, dst
-), nodes AS (
-  SELECT DISTINCT src AS node FROM sym
-), l0 AS (
-  SELECT node, node AS label FROM nodes
-)"""]
-    for k in range(iterations):
-        parts.append(f""", c{k} AS (
-  SELECT s.src, l.label, CAST(SUM(s.weight) AS BIGINT) AS w
-  FROM sym s JOIN l{k} l ON l.node = s.dst GROUP BY s.src, l.label
-), w{k} AS (
-  SELECT src, label FROM (
-    SELECT src, label,
-           row_number() OVER (PARTITION BY src
-                              ORDER BY w DESC, label ASC) AS rn
-    FROM c{k}) t WHERE rn = 1
-), l{k + 1} AS (
-  SELECT n.node, COALESCE(w{k}.label, n.node) AS label
-  FROM nodes n LEFT JOIN w{k} ON w{k}.src = n.node
-)""")
-    return (
-        "WITH "
-        + "".join(parts)
-        + f"\nSELECT node, label AS community FROM l{iterations}"
     )
 
 
@@ -4861,3803 +6628,2881 @@ _LM_CTES = """toks AS (
               FROM sc GROUP BY doc_id
             )"""
 
-_LM_SCORE_SQL = f"""
-            WITH {_LM_CTES}
-            SELECT toks.doc_id,
-                   CAST(coalesce(agg.n_tokens, 0) AS BIGINT) AS n_tokens,
-                   CAST(coalesce(agg.sum_score, 0) AS BIGINT) AS sum_score,
-                   CAST(coalesce(agg.hits3, 0) AS BIGINT) AS hits3,
-                   CAST(coalesce(agg.hits2, 0) AS BIGINT) AS hits2,
-                   CAST(coalesce(agg.hits1, 0) AS BIGINT) AS hits1,
-                   CAST(coalesce(agg.oov, 0) AS BIGINT) AS oov,
-                   CAST(CASE WHEN coalesce(agg.n_tokens, 0) > 0
-                        THEN agg.sum_score // agg.n_tokens
-                        ELSE 0 END AS BIGINT) AS avg_score
-            FROM toks LEFT JOIN agg USING (doc_id)
-        """
 
-_LM_BUCKETS_SQL = f"""
-            WITH {_LM_CTES}, base AS (
-              SELECT toks.doc_id,
-                     CAST(CASE WHEN coalesce(agg.n_tokens, 0) > 0
-                          THEN agg.sum_score // agg.n_tokens
-                          ELSE 0 END AS BIGINT) AS avg_score
-              FROM toks LEFT JOIN agg USING (doc_id)
-            ), s AS (
-              SELECT base.doc_id, d.lang, base.avg_score
-              FROM base JOIN documents d USING (doc_id)
-            ), hist AS (
-              SELECT lang, avg_score, CAST(count(*) AS BIGINT) AS nn
-              FROM s GROUP BY lang, avg_score
-            ), cum AS (
-              SELECT lang, avg_score,
-                     CAST(coalesce(sum(nn) OVER (
-                       PARTITION BY lang ORDER BY avg_score DESC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                     ), 0) AS BIGINT) AS better,
-                     CAST(sum(nn) OVER (PARTITION BY lang) AS BIGINT) AS tot
-              FROM hist
-            )
-            SELECT s.doc_id, s.lang, s.avg_score,
-                   CASE least(2, (better * 3) // tot)
-                     WHEN 0 THEN 'head' WHEN 1 THEN 'middle'
-                     ELSE 'tail' END AS bucket
-            FROM s JOIN cum USING (lang, avg_score)
-        """
+@contract(
+    oracle=f"""
+        WITH {_LM_CTES}
+        SELECT toks.doc_id,
+               CAST(coalesce(agg.n_tokens, 0) AS BIGINT) AS n_tokens,
+               CAST(coalesce(agg.sum_score, 0) AS BIGINT) AS sum_score,
+               CAST(coalesce(agg.hits3, 0) AS BIGINT) AS hits3,
+               CAST(coalesce(agg.hits2, 0) AS BIGINT) AS hits2,
+               CAST(coalesce(agg.hits1, 0) AS BIGINT) AS hits1,
+               CAST(coalesce(agg.oov, 0) AS BIGINT) AS oov,
+               CAST(CASE WHEN coalesce(agg.n_tokens, 0) > 0
+                    THEN agg.sum_score // agg.n_tokens
+                    ELSE 0 END AS BIGINT) AS avg_score
+        FROM toks LEFT JOIN agg USING (doc_id)
+    """,
+    plan=(
+        "trigram LM train (partial-agg groupBys) + score (three LEFT equi-joins on "
+        "(ctx, tok)); integer div scoring, zero Python, no window, no cartesian"
+    ),
+    must=["HashAggregate", "Generate"],
+    must_not=["CartesianProduct", "Window", "ArrowEvalPython", "BatchEvalPython"],
+)
+def q_lm_score(spark, sf_dir):
+    """Stupid-backoff trigram LM, trained AND scored on `documents`
+    (ops/lm.py): the CCNet-style count-based model-fit signal, integer-
+    exact (scaled `div` arithmetic, BIGINT sums — no float log, no
+    order-dependent float SUM).  Two partial-agg groupBys train; three
+    LEFT equi-joins score; the oracle replays the identical counts and
+    the identical BIGINT expressions symbolically."""
+    from html_parser_spark.ops.lm import score_stupid_backoff, train_stupid_backoff
+
+    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    model = train_stupid_backoff(docs, n=3)
+    return score_stupid_backoff(docs, model, n=3)
 
 
-def oracle_sql() -> dict[str, str]:
+@contract(
+    oracle=f"""
+        WITH {_LM_CTES}, base AS (
+          SELECT toks.doc_id,
+                 CAST(CASE WHEN coalesce(agg.n_tokens, 0) > 0
+                      THEN agg.sum_score // agg.n_tokens
+                      ELSE 0 END AS BIGINT) AS avg_score
+          FROM toks LEFT JOIN agg USING (doc_id)
+        ), s AS (
+          SELECT base.doc_id, d.lang, base.avg_score
+          FROM base JOIN documents d USING (doc_id)
+        ), hist AS (
+          SELECT lang, avg_score, CAST(count(*) AS BIGINT) AS nn
+          FROM s GROUP BY lang, avg_score
+        ), cum AS (
+          SELECT lang, avg_score,
+                 CAST(coalesce(sum(nn) OVER (
+                   PARTITION BY lang ORDER BY avg_score DESC
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+                 ), 0) AS BIGINT) AS better,
+                 CAST(sum(nn) OVER (PARTITION BY lang) AS BIGINT) AS tot
+          FROM hist
+        )
+        SELECT s.doc_id, s.lang, s.avg_score,
+               CASE least(2, (better * 3) // tot)
+                 WHEN 0 THEN 'head' WHEN 1 THEN 'middle'
+                 ELSE 'tail' END AS bucket
+        FROM s JOIN cum USING (lang, avg_score)
+    """,
+    plan=(
+        "CCNet bucketing: the only Window runs over the per-(lang, score) HISTOGRAM "
+        "(bounded by the score scale), never over documents; assignment joins back by "
+        "equi-key"
+    ),
+    must=["Window", "HashAggregate"],
+    must_not=["CartesianProduct", "ArrowEvalPython", "BatchEvalPython"],
+)
+def q_lm_buckets(spark, sf_dir):
+    """CCNet head/middle/tail perplexity bucketing (ops/lm.py): per-lang
+    thirds over the trigram-LM per-token fit, assigned through a
+    per-(lang, score) HISTOGRAM cumulative + equi-join — no window ever
+    partitions over documents, and score ties share a bucket so the
+    assignment is shuffle-order independent.  The oracle replays the
+    same histogram arithmetic."""
+    from html_parser_spark.ops.lm import (
+        perplexity_buckets,
+        score_stupid_backoff,
+        train_stupid_backoff,
+    )
+
+    d = _docs(spark, sf_dir)
+    docs = d.select("doc_id", "text")
+    model = train_stupid_backoff(docs, n=3)
+    scored = score_stupid_backoff(docs, model, n=3)
+    return perplexity_buckets(scored, d.select("doc_id", "lang"), buckets=3)
+
+
+@contract(
+    oracle="""
+        -- rebuild the inverted index + doc lengths over the same
+        -- whitespace tokens, then the IDENTICAL BIGINT arithmetic:
+        -- rational Robertson idf, fraction-cleared tf saturation
+        WITH toks AS (
+          SELECT doc_id,
+                 list_filter(regexp_split_to_array(trim(text), '\\s+'),
+                             x -> x <> '') AS t
+          FROM documents
+        ), dls AS (
+          SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks
+        ), tot AS (
+          SELECT CAST(count(*) AS BIGINT) AS n_docs,
+                 CAST(sum(dl) AS BIGINT) AS total_dl
+          FROM dls
+        ), ev AS (
+          SELECT doc_id, unnest(t) AS term FROM toks
+        ), idx AS (
+          SELECT term, doc_id, CAST(count(*) AS BIGINT) AS tf
+          FROM ev WHERE term IN ('data', 'fast', 'query')
+          GROUP BY term, doc_id
+        ), stats AS (
+          SELECT term, CAST(count(*) AS BIGINT) AS df_docs
+          FROM idx GROUP BY term
+        ), scored AS (
+          SELECT idx.doc_id, idx.term,
+                 (((2 * n_docs - 2 * df_docs + 1) * 1000000)
+                    // (2 * df_docs + 1))
+                 * ((tf * 22 * total_dl * 1000000)
+                    // (10 * tf * total_dl + 3 * total_dl
+                        + 9 * dl * n_docs))
+                 // 1000000 AS s
+          FROM idx
+          JOIN stats USING (term)
+          JOIN dls USING (doc_id)
+          CROSS JOIN tot
+        )
+        SELECT doc_id,
+               CAST(count(DISTINCT term) AS BIGINT) AS n_terms,
+               CAST(sum(s) AS BIGINT) AS score
+        FROM scored GROUP BY doc_id
+        ORDER BY score DESC, doc_id ASC LIMIT 20
+    """,
+    plan=(
+        "IN-filtered index scan, broadcast term stats + 1-row totals, "
+        "TakeOrderedAndProject top-k (no global sort), zero Python"
+    ),
+    must=["TakeOrderedAndProject", "BroadcastNestedLoopJoin"],
+    must_not=["CartesianProduct", "Window", "ArrowEvalPython", "BatchEvalPython"],
+)
+def q_bm25(spark, sf_dir):
+    """BM25 top-20 retrieval over the corpus (ops/search.bm25_topk):
+    Okapi weighting with k1=1.2, b=0.75 carried as exact rationals and a
+    log-free rational Robertson idf, so every score is one BIGINT
+    expression — bit-identical across engines.  Plan: IN-filtered index
+    scan, broadcast term stats + 1-row totals, TakeOrderedAndProject
+    top-k.  The oracle rebuilds the index and evaluates the identical
+    integer arithmetic."""
+    from html_parser_spark.ops.search import bm25_topk
+
+    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    return bm25_topk(docs, ["data", "fast", "query"], k=20)
+
+
+@contract(
+    oracle="""
+        -- unigram + adjacent-pair counts over the same tokens, then
+        -- the identical scaled integer division; min_count prune
+        WITH toks AS (
+          SELECT doc_id,
+                 list_filter(regexp_split_to_array(trim(text), '\\s+'),
+                             x -> x <> '') AS t
+          FROM documents
+        ), n AS (
+          SELECT CAST(coalesce(sum(len(t)), 0) AS BIGINT) AS n_tokens
+          FROM toks
+        ), uni AS (
+          SELECT w, CAST(count(*) AS BIGINT) AS c
+          FROM (SELECT unnest(t) AS w FROM toks) GROUP BY w
+        ), pr AS (
+          SELECT p.w1, p.w2, CAST(count(*) AS BIGINT) AS c_xy
+          FROM (
+            SELECT unnest(list_transform(range(1, len(t)),
+                     i -> {'w1': t[i], 'w2': t[i + 1]}),
+                   recursive := true)
+            FROM toks WHERE len(t) >= 2
+          ) AS p
+          GROUP BY p.w1, p.w2
+          HAVING count(*) >= 5
+        )
+        SELECT pr.w1, pr.w2, pr.c_xy,
+               ux.c AS c_x, uy.c AS c_y,
+               (pr.c_xy * n_tokens * 10000) // (ux.c * uy.c)
+                 AS pmi_scaled
+        FROM pr
+        JOIN uni ux ON ux.w = pr.w1
+        JOIN uni uy ON uy.w = pr.w2
+        CROSS JOIN n
+        ORDER BY pmi_scaled DESC, pr.w1 ASC, pr.w2 ASC LIMIT 50
+    """,
+    plan=(
+        "pair counts min-count-pruned BEFORE the unigram joins; TakeOrderedAndProject "
+        "top-k; zero Python, no window"
+    ),
+    must=["TakeOrderedAndProject", "HashAggregate"],
+    must_not=["CartesianProduct", "Window", "ArrowEvalPython", "BatchEvalPython"],
+)
+def q_pmi(spark, sf_dir):
+    """Top-50 PMI collocations (ops/text.pmi_bigrams): adjacent-pair
+    association ranked by the unlogged scaled ratio
+    c_xy*N*scale div (c_x*c_y) — monotone in PMI, integer-exact.  One
+    explode per direction, partial-agg groupBys, min-count prune BEFORE
+    the unigram joins, TakeOrderedAndProject."""
+    from html_parser_spark.ops.text import pmi_bigrams
+
+    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    return pmi_bigrams(docs, min_count=5, k=50)
+
+
+def _lpa_oracle_sql(iterations: int = 3) -> str:
+    """Unrolled-CTE replica of ops/linkgraph.label_propagation over the
+    shared synthetic host graph: symmetrize + sum weights, then per
+    iteration the identical BIGINT label-weight sums with the
+    (weight DESC, label ASC) winner election — row_number here, a
+    min-struct there, same total order, so the hash matches exactly."""
+    parts = ["""e0 AS (
+  SELECT doc_id % 40 AS s, (doc_id * 7 + 3) % 40 AS t FROM documents
+  UNION ALL
+  SELECT doc_id % 40, (doc_id * 13 + 11) % 45 FROM documents
+), edges AS (
+  SELECT 'h' || s AS src, 'h' || t AS dst, CAST(COUNT(*) AS BIGINT) AS weight
+  FROM e0 WHERE s <> t GROUP BY 1, 2
+), sym AS (
+  SELECT src, dst, CAST(SUM(weight) AS BIGINT) AS weight FROM (
+    SELECT src, dst, weight FROM edges
+    UNION ALL
+    SELECT dst, src, weight FROM edges
+  ) GROUP BY src, dst
+), nodes AS (
+  SELECT DISTINCT src AS node FROM sym
+), l0 AS (
+  SELECT node, node AS label FROM nodes
+)"""]
+    for k in range(iterations):
+        parts.append(f""", c{k} AS (
+  SELECT s.src, l.label, CAST(SUM(s.weight) AS BIGINT) AS w
+  FROM sym s JOIN l{k} l ON l.node = s.dst GROUP BY s.src, l.label
+), w{k} AS (
+  SELECT src, label FROM (
+    SELECT src, label,
+           row_number() OVER (PARTITION BY src
+                              ORDER BY w DESC, label ASC) AS rn
+    FROM c{k}) t WHERE rn = 1
+), l{k + 1} AS (
+  SELECT n.node, COALESCE(w{k}.label, n.node) AS label
+  FROM nodes n LEFT JOIN w{k} ON w{k}.src = n.node
+)""")
+    return (
+        "WITH "
+        + "".join(parts)
+        + f"\nSELECT node, label AS community FROM l{iterations}"
+    )
+
+
+@contract(
+    oracle=_lpa_oracle_sql(3),
+    plan=(
+        "LPA iterations are edges⋈labels equi-joins + partial-agg min-struct "
+        "elections; no window, no cartesian, zero Python"
+    ),
+    must=["HashAggregate"],
+    must_not=["CartesianProduct", "Window", "ArrowEvalPython", "BatchEvalPython"],
+    plan_kwargs={"checkpoint": False},
+)
+def q_label_prop(spark, sf_dir, checkpoint=True):
+    """Deterministic synchronous label-propagation communities
+    (ops/linkgraph.label_propagation) over the shared synthetic 45-host
+    graph: symmetrized weights, 3 iterations, most-weighted neighbor
+    label with (weight DESC, label ASC) tie-break — BIGINT-exact, so the
+    oracle's unrolled row_number CTEs hash-match the Spark min-struct
+    election exactly.  The community split of PageRank/HITS's rank
+    family: mirror farms and template rings cluster here."""
+    from html_parser_spark.ops.linkgraph import label_propagation
+
+    docs = _docs(spark, sf_dir)
+    return label_propagation(
+        _synth_host_edges(docs), iterations=3, checkpoint=checkpoint
+    )
+
+
+@contract(
+    oracle="""
+        -- DSIR replica: same 4096 md5 buckets as the NB oracle,
+        -- target = lang <> 'en'; per-bucket floor(log2 ratio) via
+        -- bin() bit length on the identical clamped integer ratio;
+        -- top-30% keep through the weight-histogram cumulative
+        WITH tok AS (
+          SELECT doc_id,
+                 unnest(list_filter(
+                   regexp_split_to_array(lower(text), '\\s+'),
+                   x -> len(x) > 0)) AS tok
+          FROM documents
+        ), feats AS (
+          SELECT doc_id,
+                 ((strpos('0123456789abcdef', substring(h, 1, 1)) - 1) * 4096
+                + (strpos('0123456789abcdef', substring(h, 2, 1)) - 1) * 256
+                + (strpos('0123456789abcdef', substring(h, 3, 1)) - 1) * 16
+                + (strpos('0123456789abcdef', substring(h, 4, 1)) - 1))
+                   % 4096 AS bucket
+          FROM (SELECT doc_id, md5('feat' || tok) AS h FROM tok)
+        ), cells AS (
+          SELECT bucket,
+                 CAST(sum(CASE WHEN d.lang <> 'en' THEN 1 ELSE 0 END)
+                   AS BIGINT) AS cnt_t,
+                 CAST(sum(CASE WHEN d.lang <> 'en' THEN 0 ELSE 1 END)
+                   AS BIGINT) AS cnt_r
+          FROM feats f JOIN documents d USING (doc_id)
+          GROUP BY bucket
+        ), tot AS (
+          SELECT CAST(sum(cnt_t) AS BIGINT) AS tot_t,
+                 CAST(sum(cnt_r) AS BIGINT) AS tot_r
+          FROM cells
+        ), wts AS (
+          SELECT bucket,
+                 CAST(length(bin(CAST(greatest(least(
+                   ((cnt_t + 1) * (tot_r + 4096) * 1048576)
+                     // ((cnt_r + 1) * (tot_t + 4096)),
+                   4611686018427387904), 1) AS BIGINT))) - 1 - 20
+                   AS BIGINT) AS w
+          FROM cells, tot
+        ), dw AS (
+          SELECT f.doc_id,
+                 CAST(coalesce(sum(w.w), 0) AS BIGINT) AS weight
+          FROM feats f LEFT JOIN wts w USING (bucket)
+          GROUP BY f.doc_id
+        ), hist AS (
+          SELECT weight, CAST(count(*) AS BIGINT) AS n
+          FROM dw GROUP BY weight
+        ), cum AS (
+          SELECT weight,
+                 CAST(coalesce(sum(n) OVER (
+                   ORDER BY weight DESC
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+                 ), 0) AS BIGINT) AS better,
+                 CAST(sum(n) OVER () AS BIGINT) AS tot
+          FROM hist
+        )
+        SELECT dw.doc_id, dw.weight,
+               CAST(CASE WHEN better * 100 < 30 * tot
+                    THEN 1 ELSE 0 END AS INT) AS keep
+        FROM dw JOIN cum USING (weight)
+    """,
+    plan=(
+        "importance weights: ONE groupBy(bucket) + 1-row broadcast totals; doc weights "
+        "via broadcast model join; the only Window runs over the bounded weight "
+        "histogram; zero Python, no cartesian product"
+    ),
+    must=["HashAggregate", "Window"],
+    must_not=["CartesianProduct", "ArrowEvalPython", "BatchEvalPython"],
+)
+def q_dsir(spark, sf_dir):
+    """DSIR importance selection (ops/classify.dsir_*, Xie et al. 2023):
+    hashed-unigram importance weights toward the non-English docs as the
+    target distribution, per-bucket floor(log2 ratio) via exact integer
+    bit-length (no float log, no order-dependent float sum), doc weight
+    = Σ bucket weights, deterministic top-30% keep through the bounded
+    weight-histogram cumulative.  Returns (doc_id, weight, keep)."""
+    from html_parser_spark.ops.classify import (
+        dsir_bucket_weights,
+        dsir_doc_weights,
+        dsir_select,
+        hashed_features,
+    )
+
+    d = _docs(spark, sf_dir)
+    feats = hashed_features(d.select("doc_id", "text"))
+    target = d.where(F.col("lang") != "en").select("doc_id")
+    weights = dsir_bucket_weights(feats, target)
+    return dsir_select(dsir_doc_weights(feats, weights), keep_pct=30)
+
+
+@contract(
+    oracle="""
+        -- identical regexp counts + floored BIGINT divisions; the
+        -- [.!?]+ / vowel-group runs count maximal matches in both
+        -- engines (greedy +), so the counts agree exactly
+        WITH toks AS (
+          SELECT doc_id, text,
+                 list_filter(regexp_split_to_array(trim(text), '\\s+'),
+                             x -> x <> '') AS t
+          FROM documents
+        ), c AS (
+          SELECT doc_id,
+                 CAST(len(t) AS BIGINT) AS n_words,
+                 CAST(CASE WHEN len(t) > 0 THEN greatest(
+                   len(regexp_extract_all(text, '[.!?]+')), 1)
+                   ELSE 0 END AS BIGINT) AS n_sentences,
+                 CAST(len(regexp_extract_all(text, '[aeiouyAEIOUY]+'))
+                   AS BIGINT) AS n_syllable_groups,
+                 CAST(len(list_distinct(t)) AS BIGINT) AS n_distinct
+          FROM toks
+        )
+        SELECT doc_id, n_words, n_sentences, n_syllable_groups,
+               CAST(CASE WHEN n_words > 0
+                    THEN (n_distinct * 10000) // n_words
+                    ELSE 0 END AS BIGINT) AS ttr_x10000,
+               CAST(CASE WHEN n_words > 0
+                    THEN (39 * n_words) // n_sentences
+                         + (1180 * n_syllable_groups) // n_words - 1559
+                    ELSE 0 END AS BIGINT) AS fk_x100
+        FROM c
+    """,
+    plan=(
+        "readability/lexical profile is ONE pure-codegen projection: zero shuffle, "
+        "zero Python"
+    ),
+    must=["*(1)"],
+    must_not=["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join", "Window"],
+)
+def q_readability(spark, sf_dir):
+    """Readability / lexical-diversity profile (ops/text.
+    readability_profile): word/sentence/syllable-group counts, scaled
+    type-token ratio, floored Flesch-Kincaid-x100 — the model-free
+    quality-feature family, one pure-codegen projection, zero shuffle.
+    The oracle evaluates the identical regexp counts and BIGINT
+    divisions."""
+    from html_parser_spark.ops.text import readability_profile
+
+    return readability_profile(_docs(spark, sf_dir).select("doc_id", "text"))
+
+
+@contract(
+    oracle="""
+        -- identical md5 bucket/rank registers replayed on the FULL
+        -- corpus (valid: the Spark side merges two halves, and
+        -- union-max == global max — the lossless-merge identity),
+        -- then the identical fixed-order BIGINT raw-HLL estimate
+        -- (t = alpha_m·m² pre-scaled, S includes 2^33 per untouched
+        -- register)
+        WITH h AS (
+          SELECT lang, md5('hll:' || CAST(doc_id AS VARCHAR)) AS h
+          FROM documents
+        ), br AS (
+          SELECT lang,
+                 CAST('0x' || substring(h, 1, 2) AS BIGINT) % 64 AS bucket,
+                 CAST('0x' || substring(h, 3, 8) AS BIGINT) AS r32
+          FROM h
+        ), regs AS (
+          SELECT lang, bucket,
+                 CAST(max(CASE WHEN r32 = 0 THEN 33
+                          ELSE 33 - length(bin(r32)) END) AS BIGINT) AS reg
+          FROM br GROUP BY lang, bucket
+        ), pg AS (
+          SELECT lang,
+                 CAST(sum(CAST(1 AS BIGINT) << CAST(33 - reg AS INT))
+                   AS BIGINT) AS s_present,
+                 CAST(count(*) AS BIGINT) AS n_present
+          FROM regs GROUP BY lang
+        )
+        SELECT lang,
+               CAST((CAST(2905 AS BIGINT) * CAST(8589934592 AS BIGINT))
+                    // (s_present
+                        + (64 - n_present) * CAST(8589934592 AS BIGINT))
+                 AS BIGINT) AS est_distinct,
+               CAST(64 - n_present AS BIGINT) AS zero_registers
+        FROM pg
+    """,
+    plan=(
+        "HLL registers: partial-agg groupBy max (the exchange is bounded by |groups|·m "
+        "register cells, never by corpus size), union-max merge, pure-codegen "
+        "estimate; zero Python, no join, no window"
+    ),
+    must=["HashAggregate"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Join", "Window",
+              "CartesianProduct"],
+)
+def q_hll_distinct(spark, sf_dir):
+    """HyperLogLog distinct sketch (ops/sketch.hll_*, Flajolet 2007):
+    per-lang register tables built from two disjoint corpus halves, then
+    MERGED (union → groupBy max — the lossless HLL merge) and estimated
+    with the fixed-order BIGINT raw-HLL expression.  The crawl-ledger
+    primitive: distinct-url counts per group whose shuffle is bounded by
+    |groups|·m register cells, not by corpus size, and whose per-segment
+    sketches union without touching raw keys.  The oracle replays the
+    identical md5 buckets/ranks on the FULL corpus — valid because
+    union-max ≡ global max (the merge-equals-rebuild identity the unit
+    test pins)."""
+    from html_parser_spark.ops.sketch import hll_estimate, hll_merge, hll_registers
+
+    d = _docs(spark, sf_dir)
+    even = hll_registers(d.where(F.col("doc_id") % 2 == 0), "doc_id", ("lang",), m=64)
+    odd = hll_registers(d.where(F.col("doc_id") % 2 == 1), "doc_id", ("lang",), m=64)
+    return hll_estimate(hll_merge(even, odd, ("lang",)), ("lang",), m=64)
+
+
+@contract(
+    oracle="""
+        -- identical 4x1024 count-min cells (md5 cell addressing),
+        -- min-over-rows point estimates for the probe tokens of
+        -- docs 0-9, joined to the exact counts so the
+        -- never-underestimate guarantee sits in the hashed values
+        WITH toks AS (
+          SELECT doc_id,
+                 unnest(list_filter(
+                   regexp_split_to_array(lower(text), '\\s+'),
+                   x -> len(x) > 0)) AS tok
+          FROM documents
+        ), cells AS (
+          SELECT j AS row,
+                 CAST('0x' || substring(
+                   md5('cms:' || CAST(j AS VARCHAR) || ':' || tok), 1, 8)
+                   AS BIGINT) % 1024 AS col,
+                 CAST(count(*) AS BIGINT) AS cnt
+          FROM toks CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS j)
+          GROUP BY 1, 2
+        ), probes AS (
+          SELECT DISTINCT tok AS item FROM toks WHERE doc_id < 10
+        ), addr AS (
+          SELECT item, j AS row,
+                 CAST('0x' || substring(
+                   md5('cms:' || CAST(j AS VARCHAR) || ':' || item), 1, 8)
+                   AS BIGINT) % 1024 AS col
+          FROM probes CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS j)
+        ), est AS (
+          SELECT item, CAST(min(coalesce(c.cnt, 0)) AS BIGINT) AS est
+          FROM addr a LEFT JOIN cells c USING (row, col)
+          GROUP BY item
+        ), truth AS (
+          SELECT tok, CAST(count(*) AS BIGINT) AS exact_cnt
+          FROM toks GROUP BY tok
+        )
+        SELECT e.item, e.est, t.exact_cnt
+        FROM est e JOIN truth t ON e.item = t.tok
+    """,
+    plan=(
+        "count-min build is ONE partial-agg groupBy over ≤ depth·width cells; the "
+        "probe lookup joins the tiny sketch broadcast; zero Python, no cartesian "
+        "product"
+    ),
+    must=["HashAggregate", "BroadcastHashJoin"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "CartesianProduct"],
+)
+def q_heavy_hitters(spark, sf_dir):
+    """Count-min frequency sketch (ops/sketch.count_min_*, Cormode &
+    Muthukrishnan 2005): the full token frequency table compressed into
+    4×1024 BIGINT cells (ONE partial-agg groupBy whose exchange is
+    bounded by the sketch size), then point-estimated for the probe set
+    (distinct tokens of docs 0-9) with the broadcast sketch.  Returns
+    (item, est, exact_cnt) so the never-underestimate guarantee is in
+    the checked values; the oracle replays the identical md5 cell
+    addressing and min-over-rows."""
+    from html_parser_spark.ops.sketch import count_min_build, count_min_query
+
+    toks = (
+        _docs(spark, sf_dir)
+        .select(
+            "doc_id",
+            F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok"),
+        )
+        .filter(F.length("tok") > 0)
+    )
+    sk = count_min_build(toks, "tok", depth=4, width=1024)
+    probes = toks.where(F.col("doc_id") < 10).select("tok").distinct()
+    est = count_min_query(sk, probes, "tok", depth=4, width=1024)
+    truth = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("exact_cnt"))
+    return est.join(truth, est["item"] == truth["tok"]).select(
+        "item", "est", "exact_cnt"
+    )
+
+
+@contract(
+    oracle="""
+        -- identical md5 shuffle key, shard mod, and within-shard
+        -- row_number total order (skey is unique per doc_id; doc_id
+        -- appended as the formal tie-break in both engines)
+        WITH k AS (
+          SELECT doc_id,
+                 md5('shuf:r5:' || CAST(doc_id AS VARCHAR)) AS skey
+          FROM documents
+        )
+        SELECT doc_id,
+               CAST('0x' || substring(skey, 1, 4) AS BIGINT) % 8 AS shard,
+               CAST(row_number() OVER (
+                 PARTITION BY CAST('0x' || substring(skey, 1, 4) AS BIGINT) % 8
+                 ORDER BY skey, doc_id) AS BIGINT) AS pos
+        FROM k
+    """,
+    plan=(
+        "deterministic shuffle: ONE hash exchange on the shard key + a window "
+        "partitioned BY SHARD (parallel across shards, per-task bounded by the "
+        "file-sized shard); never a single-partition window, zero Python"
+    ),
+    must=["Window", "hashpartitioning(shard"],
+    must_not=["SinglePartition", "ArrowEvalPython", "BatchEvalPython"],
+)
+def q_corpus_shuffle(spark, sf_dir):
+    """Deterministic pre-training corpus shuffle (ops/sketch.
+    corpus_shuffle): shard + within-shard position keyed by
+    md5(seed||doc_id) — the reproducible, resumable alternative to
+    ORDER BY rand() before training-shard writes.  The within-shard rank
+    window partitions BY SHARD (parallel, per-task bounded by the
+    file-sized shard); the oracle replays the identical key, shard mod,
+    and row_number total order."""
+    from html_parser_spark.ops.sketch import corpus_shuffle
+
+    return corpus_shuffle(_docs(spark, sf_dir), "doc_id", n_shards=8, seed="r5")
+
+
+@contract(
+    oracle="""
+        -- the curve counted directly per prefix: total occurrences
+        -- with doc_id <= t, distinct tokens whose FIRST doc <= t
+        -- (identical lowercase whitespace tokenization)
+        WITH toks AS (
+          SELECT doc_id,
+                 unnest(list_filter(
+                   regexp_split_to_array(lower(text), '\\s+'),
+                   x -> len(x) > 0)) AS tok
+          FROM documents
+        ), firsts AS (
+          SELECT tok, min(doc_id) AS first_doc FROM toks GROUP BY tok
+        ), thr AS (
+          SELECT unnest([9, 24, 49, 99, 249, 499]) AS threshold
+        )
+        SELECT CAST(t.threshold AS BIGINT) AS threshold,
+               CAST((SELECT count(*) FROM toks
+                     WHERE doc_id <= t.threshold) AS BIGINT) AS n_tokens,
+               CAST((SELECT count(*) FROM firsts
+                     WHERE first_doc <= t.threshold) AS BIGINT)
+                 AS n_distinct
+        FROM thr t
+    """,
+    plan=(
+        "Heaps'-law curve: ONE corpus-sized partial-agg groupBy(tok) min (bounded by "
+        "distinct tokens); threshold bucketing is a pure array-filter projection (no "
+        "join against a threshold table); the only window runs over the "
+        "|thresholds|-row curve frame (bounded by construction, like "
+        "_running_offsets); zero Python, no cartesian product"
+    ),
+    must=["HashAggregate", "Window"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "CartesianProduct"],
+)
+def q_vocab_growth(spark, sf_dir):
+    """Heaps'-law vocabulary-growth curve (ops/corpus.vocab_growth):
+    (n_tokens, n_distinct) at six corpus-prefix points — the
+    tokenizer-budget / OCR-noise diagnostic.  ONE groupBy(tok) min is
+    the only corpus-sized shuffle; per-doc aggregates bucket to their
+    covering threshold via a pure array-filter projection and the
+    cumulative window runs over the 6-row curve frame only.  The oracle
+    counts the same prefixes directly."""
+    from html_parser_spark.ops.corpus import vocab_growth
+
+    return vocab_growth(
+        _docs(spark, sf_dir).select("doc_id", "text"),
+        thresholds=[9, 24, 49, 99, 249, 499],
+    )
+
+
+@contract(
+    oracle="""
+        -- identical parity split, bucket counts, and ppm integer
+        -- division (// ≡ Spark div on non-negative operands)
+        WITH a AS (SELECT lang, count(*) AS n_a FROM documents
+                   WHERE doc_id % 2 = 0 GROUP BY lang),
+             b AS (SELECT lang, count(*) AS n_b FROM documents
+                   WHERE doc_id % 2 = 1 GROUP BY lang),
+             j AS (SELECT coalesce(a.lang, b.lang) AS lang,
+                          coalesce(a.n_a, 0) AS n_a,
+                          coalesce(b.n_b, 0) AS n_b
+                   FROM a FULL OUTER JOIN b ON a.lang = b.lang),
+             t AS (SELECT sum(n_a) AS ta, sum(n_b) AS tb FROM j),
+             s AS (SELECT j.lang, j.n_a, j.n_b,
+                          coalesce((j.n_a * 1000000) // nullif(t.ta, 0), 0)
+                            AS share_a_ppm,
+                          coalesce((j.n_b * 1000000) // nullif(t.tb, 0), 0)
+                            AS share_b_ppm
+                   FROM j, t)
+        SELECT lang,
+               CAST(n_a AS BIGINT) AS n_a,
+               CAST(n_b AS BIGINT) AS n_b,
+               CAST(share_a_ppm AS BIGINT) AS share_a_ppm,
+               CAST(share_b_ppm AS BIGINT) AS share_b_ppm,
+               CAST(abs(share_a_ppm - share_b_ppm) AS BIGINT)
+                 AS delta_ppm
+        FROM s
+    """,
+    plan=(
+        "snapshot drift: TWO partial-agg groupBys (each exchange bounded by |buckets| "
+        "after map-side combine), a full-outer join on the tiny bucket frame, and the "
+        "1-row broadcast-totals crossJoin; zero Python, no corpus-sized join, no window"
+    ),
+    must=["HashAggregate"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "CartesianProduct", "Window"],
+)
+def q_dist_drift(spark, sf_dir):
+    """Crawl-snapshot distribution drift (ops/corpus.distribution_drift):
+    per-language share delta (ppm, integer-exact IntegralDivide) between
+    two snapshots carved deterministically from the documents table by
+    doc_id parity — the crawl-monitoring op (TVD = Σ delta_ppm / 2·10⁶).
+    Two partial-agg groupBys + a tiny full-outer bucket join + the 1-row
+    broadcast-totals crossJoin; nothing corpus-sized past the scans."""
+    from html_parser_spark.ops.corpus import distribution_drift
+
+    docs = _docs(spark, sf_dir).select("doc_id", "lang")
+    return distribution_drift(
+        docs.where(F.col("doc_id") % 2 == 0),
+        docs.where(F.col("doc_id") % 2 == 1),
+        bucket_col="lang",
+    ).withColumnRenamed("bucket", "lang")
+
+
+@contract(
+    oracle="""
+        -- identical word-trigram shingling ('w1_w2_w3' tokens) and
+        -- tokenization (lowercase, \\s+ split, drop empty), spectrum
+        -- head at freq<=8, ppm vs FULL vocab/token totals
+        WITH w AS (
+          SELECT list_filter(
+                   regexp_split_to_array(lower(text), '\\s+'),
+                   x -> len(x) > 0) AS w
+          FROM documents
+        ), toks AS (
+          SELECT unnest(list_transform(range(1, len(w) - 1),
+                   i -> w[i] || '_' || w[i+1] || '_' || w[i+2])) AS tok
+          FROM w
+          WHERE len(w) >= 3
+        ), freqs AS (
+          SELECT tok, count(*) AS cnt FROM toks GROUP BY tok
+        ), tot AS (
+          SELECT count(*) AS n_ty, sum(cnt) AS n_to FROM freqs
+        ), spec AS (
+          SELECT cnt AS freq, count(*) AS n_types FROM freqs
+          WHERE cnt <= 8 GROUP BY cnt
+        )
+        SELECT CAST(s.freq AS BIGINT) AS freq,
+               CAST(s.n_types AS BIGINT) AS n_types,
+               CAST(s.freq * s.n_types AS BIGINT) AS n_tokens,
+               CAST(coalesce((s.n_types * 1000000) // t.n_ty, 0)
+                 AS BIGINT) AS types_ppm,
+               CAST(coalesce((s.freq * s.n_types * 1000000) // t.n_to,
+                 0) AS BIGINT) AS tokens_ppm
+        FROM spec s, tot t
+    """,
+    plan=(
+        "frequency-of-frequencies: ONE corpus-sized partial-agg groupBy(tok) (bounded "
+        "by distinct shingles), then a ≤8-row spectrum groupBy and the 1-row "
+        "broadcast-totals crossJoin; shingling is a pure codegen array projection; "
+        "zero Python, no window"
+    ),
+    must=["HashAggregate", "BroadcastNestedLoopJoin"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "CartesianProduct", "Window"],
+)
+def q_freq_spectrum(spark, sf_dir):
+    """Token frequency-of-frequencies spectrum + Good-Turing hapax mass
+    (ops/corpus.freq_spectrum): n_types / ppm shares at freq 1..8.  The
+    synthetic corpus has only ~31 distinct unigrams (min freq 26 at
+    sf0.01 — an empty f≤8 head), so the query feeds the op word-TRIGRAM
+    shingle tokens ('w1_w2_w3', whitespace-joined), which carry a real
+    Zipf tail (9,424 hapaxes at sf0.01).  ONE corpus-sized
+    groupBy(tok); the spectrum groupBy and the totals crossJoin are
+    ≤8-row / 1-row frames.  Oracle replays the identical shingling,
+    tokenization, and integer division in DuckDB."""
+    from html_parser_spark.ops.corpus import freq_spectrum
+
+    shingled = (
+        _docs(spark, sf_dir)
+        .select(
+            F.expr(
+                r"filter(split(lower(text), '\\s+'), x -> length(x) > 0)"
+            ).alias("w")
+        )
+        .select(
+            F.expr(
+                "array_join(CASE WHEN size(w) >= 3"
+                " THEN transform(sequence(0, size(w) - 3),"
+                "      i -> concat(w[i], '_', w[i+1], '_', w[i+2]))"
+                " ELSE CAST(array() AS array<string>) END, ' ')"
+            ).alias("text")
+        )
+    )
+    return freq_spectrum(shingled, max_freq=8)
+
+
+def _mojibake_oracle() -> str:
     from html_parser_spark.ops.encoding import MOJIBAKE_RE
-    from html_parser_spark.ops.text import PII_PATTERNS
 
-    pii_counts = ",\n                   ".join(
-        f"CAST(len(regexp_extract_all(text, '{pat}')) AS BIGINT) AS n_{name}"
-        for name, pat in PII_PATTERNS.items()
+    return f"""
+        -- identical planted damage, literal-codepoint signature class
+        -- (compiled by RE2 here, Java regex on the Spark side), and
+        -- ppm IntegralDivide with the same null-to-zero fold
+        WITH d AS (
+          SELECT doc_id,
+                 text
+                   || (CASE WHEN doc_id % 5 = 0
+                            THEN ' Ã©â€™' ELSE '' END)
+                   || (CASE WHEN doc_id % 11 = 0
+                            THEN ' �' ELSE '' END) AS text
+          FROM documents
+        ), c AS (
+          SELECT doc_id,
+                 CAST(length(text) AS BIGINT) AS n_chars,
+                 CAST(len(regexp_extract_all(text, '{MOJIBAKE_RE}'))
+                   AS BIGINT) AS n_double_encoded,
+                 CAST(len(regexp_extract_all(text, '�'))
+                   AS BIGINT) AS n_replacement
+          FROM d
+        )
+        SELECT doc_id, n_chars, n_double_encoded, n_replacement,
+               CAST(coalesce(
+                 ((n_double_encoded + n_replacement) * 1000000)
+                   // nullif(n_chars, 0), 0) AS BIGINT) AS mojibake_ppm
+        FROM c
+    """
+
+
+@contract(
+    oracle=_mojibake_oracle,
+    plan=(
+        "encoding-damage score: ONE whole-stage-codegen projection (two regexp_counts "
+        "+ length + IntegralDivide) fused into the scan; zero shuffle, zero Python, no "
+        "join, no window"
+    ),
+    must=["Project"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Exchange", "Join", "Window",
+              "HashAggregate"],
+)
+def q_mojibake(spark, sf_dir):
+    """Encoding-damage score (ops/encoding.mojibake_score): double-encoded
+    UTF-8 signatures + U+FFFD counts per doc, ppm of chars.  The synthetic
+    corpus is clean, so the query plants deterministic damage first
+    (doc_id%5==0 gets a 'Ã©â€™' suffix, doc_id%11==0 a replacement char) —
+    the oracle plants the identical damage.  ONE codegen projection,
+    zero shuffle, zero Python."""
+    from html_parser_spark.ops.encoding import mojibake_score
+
+    docs = _docs(spark, sf_dir).select(
+        "doc_id",
+        F.concat(
+            F.col("text"),
+            F.when(F.col("doc_id") % 5 == 0, F.lit(" Ã©â€™")).otherwise(F.lit("")),
+            F.when(F.col("doc_id") % 11 == 0, F.lit(" �")).otherwise(F.lit("")),
+        ).alias("text"),
     )
-    pii_total = " + ".join(
-        f"len(regexp_extract_all(text, '{pat}'))" for pat in PII_PATTERNS.values()
+    return mojibake_score(docs)
+
+
+@contract(
+    oracle="""
+        -- identical per-doc 60-bit md5 hash (Spark conv(..,16,10) ≡
+        -- '0x' CAST), bit_xor and HUGEINT-summed mod 2^61-1 digests
+        WITH d AS (
+          SELECT doc_id % 7 AS shard,
+                 CAST(length(text) AS BIGINT) AS n,
+                 CAST('0x' || substring(
+                   md5(CAST(doc_id AS VARCHAR) || chr(31) || text),
+                   1, 15) AS BIGINT) AS h
+          FROM documents
+        )
+        SELECT CAST(shard AS BIGINT) AS shard,
+               CAST(count(*) AS BIGINT) AS n_docs,
+               CAST(sum(n) AS BIGINT) AS n_chars,
+               CAST(bit_xor(h) AS BIGINT) AS xor_digest,
+               CAST(sum(h) % 2305843009213693951 AS BIGINT)
+                 AS sum_digest
+        FROM d GROUP BY shard
+    """,
+    plan=(
+        "release-integrity manifest: ONE partial-agg groupBy(shard) whose exchange "
+        "carries ≤|shards| rows after map-side combine (count/sum/bit_xor all "
+        "combine); digests are order-insensitive so the result is "
+        "partition-independent; zero Python, no join, no window"
+    ),
+    must=["HashAggregate"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Join", "Window",
+              "CartesianProduct"],
+)
+def q_shard_manifest(spark, sf_dir):
+    """Release-integrity manifest (ops/corpus.shard_manifest): per-shard
+    row counts, char totals, and the two order-insensitive content
+    digests (bit_xor + DECIMAL-summed mod 2^61-1) a data release ships
+    for shard-for-shard reproducibility checks.  Shards carved
+    deterministically by doc_id mod 7.  ONE partial-agg groupBy(shard)
+    — the exchange carries ≤7 rows after map-side combine; zero Python,
+    no join, no window."""
+    from html_parser_spark.ops.corpus import shard_manifest
+
+    docs = _docs(spark, sf_dir).select(
+        "doc_id", (F.col("doc_id") % 7).alias("shard"), "text"
     )
-    # Symbolic BPE encode: a word becomes '‖c1‖‖c2‖…‖</w>‖' and each merge
-    # (a,b) is a left-to-right replace of '‖a‖‖b‖' with '‖ab‖', applied in
-    # rank order (innermost = rank 0).  The merge literals are ASCII from
-    # the fixed seed table, so no SQL-quoting hazard; the delimiter char is
-    # stripped from the input on BOTH engines.
-    bpe_word = (
-        "list_aggregate(list_transform(regexp_split_to_array(w, ''),"
-        " c -> '‖' || c || '‖'), 'string_agg', '') || '‖</w>‖'"
+    return shard_manifest(docs)
+
+
+@contract(
+    oracle="""
+        -- identical content-keyed perturbation (md5-prefix token drop
+        -- + noise token), multiset-min overlap, and ppm divisions
+        WITH p AS (
+          SELECT doc_id,
+                 array_to_string(list_filter(list_filter(
+                   regexp_split_to_array(lower(text), '\\s+'),
+                   x -> len(x) > 0),
+                   x -> substring(md5(x), 1, 1) <> '0'), ' ')
+                 || (CASE WHEN doc_id % 3 = 0
+                          THEN ' zzz-noise' ELSE '' END) AS got_text,
+                 text AS ref_text
+          FROM documents
+        ), gt AS (
+          SELECT doc_id, tok, count(*) AS c_got FROM (
+            SELECT doc_id, unnest(list_filter(
+              regexp_split_to_array(lower(got_text), '\\s+'),
+              x -> len(x) > 0)) AS tok FROM p)
+          GROUP BY doc_id, tok
+        ), rt AS (
+          SELECT doc_id, tok, count(*) AS c_ref FROM (
+            SELECT doc_id, unnest(list_filter(
+              regexp_split_to_array(lower(ref_text), '\\s+'),
+              x -> len(x) > 0)) AS tok FROM p)
+          GROUP BY doc_id, tok
+        ), j AS (
+          SELECT coalesce(gt.doc_id, rt.doc_id) AS doc_id,
+                 coalesce(gt.c_got, 0) AS c_got,
+                 coalesce(rt.c_ref, 0) AS c_ref
+          FROM gt FULL OUTER JOIN rt
+            ON gt.doc_id = rt.doc_id AND gt.tok = rt.tok
+        ), f AS (
+          SELECT doc_id, sum(c_got) AS n_got, sum(c_ref) AS n_ref,
+                 sum(least(c_got, c_ref)) AS overlap
+          FROM j GROUP BY doc_id
+        )
+        SELECT d.doc_id,
+               CAST(coalesce(f.n_got, 0) AS BIGINT) AS n_got,
+               CAST(coalesce(f.n_ref, 0) AS BIGINT) AS n_ref,
+               CAST(coalesce(f.overlap, 0) AS BIGINT) AS overlap,
+               CAST(coalesce((f.overlap * 1000000)
+                 // nullif(f.n_got, 0), 0) AS BIGINT) AS precision_ppm,
+               CAST(coalesce((f.overlap * 1000000)
+                 // nullif(f.n_ref, 0), 0) AS BIGINT) AS recall_ppm,
+               CAST(coalesce((2 * f.overlap * 1000000)
+                 // nullif(f.n_got + f.n_ref, 0), 0) AS BIGINT)
+                 AS f1_ppm
+        FROM (SELECT DISTINCT doc_id FROM documents) d
+        LEFT JOIN f ON d.doc_id = f.doc_id
+    """,
+    plan=(
+        "extraction-QA P/R/F1: two explode→partial-agg groupBy(doc, tok) counts, ONE "
+        "(doc, tok) equi-join (both sides pre-aggregated), ONE groupBy(doc) fold; "
+        "every shuffle keyed by doc_id(+tok) so skew is bounded by the longest "
+        "document; zero Python, no window, no cartesian product"
+    ),
+    must=["HashAggregate"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct"],
+)
+def q_token_prf(spark, sf_dir):
+    """Extraction-QA metric (ops/text.token_prf): per-doc token-multiset
+    precision/recall/F1 (exact multiset-Dice, ppm IntegralDivide)
+    between a deterministically perturbed extraction and the reference
+    text — drops tokens whose md5 starts with '0' (content-keyed, no
+    positional lambda so both engines replay it) and appends a noise
+    token for doc_id%3==0.  Two explode→partial-agg groupBys, ONE
+    (doc, tok) equi-join, ONE groupBy(doc) fold; no window, no Python."""
+    from html_parser_spark.ops.text import token_prf
+
+    pairs = _docs(spark, sf_dir).select(
+        "doc_id",
+        F.expr(
+            r"concat(array_join(filter(filter(split(lower(text), '\\s+'),"
+            r" x -> length(x) > 0), x -> substring(md5(x), 1, 1) != '0'),"
+            r" ' '), CASE WHEN doc_id % 3 = 0 THEN ' zzz-noise' ELSE '' END)"
+        ).alias("got_text"),
+        F.col("text").alias("ref_text"),
     )
-    for _a, _b in _bpe_seed_merges():
-        bpe_word = f"replace({bpe_word}, '‖{_a}‖‖{_b}‖', '‖{_a}{_b}‖')"
-    return {
-        "q_bpe_encode": f"""
-            WITH d AS (
-              SELECT doc_id,
-                     list_filter(
-                       regexp_split_to_array(
-                         lower(trim(replace(text, '‖', ''))), '\\s+'),
-                       x -> len(x) > 0) AS words
-              FROM documents
-            ), s AS (
-              SELECT doc_id,
-                     CAST(len(words) AS BIGINT) AS n_words,
-                     coalesce(list_aggregate(
-                       list_transform(words, w -> {bpe_word}),
-                       'string_agg', ''), '') AS stream
-              FROM d
+    return token_prf(pairs)
+
+
+@contract(
+    oracle="""
+        -- identical tokenization, histogram cumulative, and the
+        -- cross-multiplied covering test (no division anywhere)
+        WITH d AS (
+          SELECT lang,
+                 len(list_filter(
+                   regexp_split_to_array(lower(text), '\\s+'),
+                   x -> len(x) > 0)) AS v
+          FROM documents
+        ), h AS (
+          SELECT lang, v, count(*) AS n FROM d GROUP BY lang, v
+        ), c AS (
+          SELECT lang, v,
+                 sum(n) OVER (PARTITION BY lang ORDER BY v) AS n_le,
+                 sum(n) OVER (PARTITION BY lang) AS total
+          FROM h
+        ), q AS (
+          SELECT unnest([250000, 500000, 900000, 990000]) AS q_ppm
+        ), cov AS (
+          SELECT c.lang, q.q_ppm, c.v, c.n_le, c.total
+          FROM c, q
+          WHERE c.n_le * 1000000 >= q.q_ppm * c.total
+        ), best AS (
+          SELECT lang, q_ppm, min(v) AS value
+          FROM cov GROUP BY lang, q_ppm
+        )
+        SELECT b.lang,
+               CAST(b.q_ppm AS BIGINT) AS q_ppm,
+               CAST(b.value AS BIGINT) AS value,
+               CAST(c.n_le AS BIGINT) AS n_le,
+               CAST(c.total AS BIGINT) AS total
+        FROM best b JOIN c ON b.lang = c.lang AND b.value = c.v
+    """,
+    plan=(
+        "exact type-1 quantiles: ONE corpus-sized partial-agg groupBy(lang, v) "
+        "histogram (exchange bounded by distinct values per group); the cumulative "
+        "window partitions by lang over that bounded histogram — never over documents, "
+        "never SinglePartition; |qs|-row fan-out + bounded min-struct groupBy; zero "
+        "Python"
+    ),
+    must=["HashAggregate", "Window", "hashpartitioning(lang"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "SinglePartition",
+              "CartesianProduct"],
+)
+def q_exact_quantiles(spark, sf_dir):
+    """Exact type-1 per-lang token-count quantiles (ops/corpus.
+    exact_quantiles): smallest value covering q·N, cross-multiplied
+    integer test (no division) — the engine-portable percentile_approx
+    replacement.  ONE partial-agg groupBy(lang, v) histogram (exchange
+    bounded by distinct token counts), cumulative window over the
+    bounded histogram (never over documents), |qs|-row fan-out, bounded
+    min-struct groupBy."""
+    from html_parser_spark.ops.corpus import exact_quantiles
+
+    docs = _docs(spark, sf_dir).select(
+        "lang",
+        F.size(
+            F.filter(
+                F.split(F.lower(F.col("text")), r"\s+"),
+                lambda x: F.length(x) > 0,
             )
-            SELECT doc_id, n_words,
-                   CAST((len(stream) - len(replace(stream, '‖', ''))) // 2
-                        AS BIGINT) AS n_tokens,
-                   CASE WHEN stream = '' THEN ''
-                        ELSE replace(trim(stream, '‖'), '‖‖', ' ')
-                   END AS bpe_text
-            FROM s
-        """,
-        "q_filter_project": """
-            SELECT l_orderkey, l_linenumber, l_quantity,
-                   l_extendedprice * (1 - l_discount) AS revenue
-            FROM lineitem
-            WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_discount > 0.05
-        """,
-        "q_agg_pricing": """
-            SELECT l_returnflag, l_linestatus,
-                   round(sum(l_quantity), 2) AS sum_qty,
-                   round(sum(l_extendedprice), 2) AS sum_base_price,
-                   round(avg(l_discount), 4) AS avg_disc,
-                   count(*) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-            GROUP BY l_returnflag, l_linestatus
-        """,
-        "q_dim_broadcast_join": """
-            SELECT r_name, count(*) AS customers,
-                   round(sum(c_acctbal), 2) AS total_acctbal
-            FROM customer
-            JOIN nation ON c_nationkey = n_nationkey
-            JOIN region ON n_regionkey = r_regionkey
-            GROUP BY r_name
-        """,
-        "q_window_order_check": """
-            WITH w AS (
-              SELECT o_custkey, o_totalprice,
-                     lag(o_totalprice) OVER (
-                       PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                     ) AS prev_price
-              FROM orders
-            )
-            SELECT o_custkey, count(*) AS violations
-            FROM w WHERE prev_price IS NOT NULL AND o_totalprice < prev_price
-            GROUP BY o_custkey
-        """,
-        "q_merge_by_key": """
-            SELECT o_custkey, count(*) AS n_orders,
-                   string_agg(o_orderstatus || '@' || strftime(o_orderdate, '%Y-%m-%d'),
-                              ',' ORDER BY o_orderdate, o_orderkey) AS status_seq
-            FROM orders
-            GROUP BY o_custkey
-        """,
-        "q_topk": """
-            SELECT p_partkey, p_name, round(p_retailprice, 2) AS price
-            FROM part
-            ORDER BY p_retailprice DESC, p_partkey ASC
-            LIMIT 10
-        """,
-        "q_exact_dedup": """
-            SELECT md5(text) AS h, count(*) AS dup_count,
-                   min(doc_id) AS canonical_id
-            FROM documents GROUP BY md5(text)
-        """,
-        "q_fingerprint": """
-            SELECT doc_id,
-                   md5(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS fingerprint,
-                   len(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS norm_len
-            FROM documents
-        """,
-        "q_winnow_fingerprint": """
-            WITH t AS (
-              SELECT doc_id,
-                     lower(regexp_replace(text, '\\s+', ' ', 'g')) AS tx
-              FROM documents WHERE doc_id < 60
-            ),
-            h AS (
-              SELECT doc_id,
-                     list_transform(
-                       list_transform(range(1, greatest(len(tx) - 7, 0) + 1),
-                                      i -> substr(tx, CAST(i AS INT), 8)),
-                       g -> md5(g)) AS hs
-              FROM t
-            ),
-            m AS (
-              SELECT doc_id,
-                     CASE WHEN len(hs) >= 4 THEN
-                       list_transform(range(1, len(hs) - 3 + 1),
-                         i -> list_min(hs[CAST(i AS INT):CAST(i + 3 AS INT)]))
-                     ELSE hs END AS mins
-              FROM h
-            )
-            SELECT doc_id, unnest(list_distinct(mins)) AS fingerprint FROM m
-        """,
-        "q_token_stats": """
-            SELECT doc_id,
-                   CASE WHEN len(trim(text)) = 0 THEN 0
-                        ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens,
-                   len(regexp_extract_all(text,
-                       ' ?[A-Za-zА-Яа-яЁё]+| ?[0-9]+| ?[^ A-Za-zА-Яа-яЁё0-9]+'))
-                     AS n_bpe_tokens
-            FROM documents
-        """,
-        "q_quality_score": f"""
-            WITH f AS (
-              SELECT doc_id, lang, text,
-                     len(text) AS n_chars_m,
-                     CASE WHEN len(trim(text)) = 0 THEN 0
-                          ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens,
-                     ({_STOP_SUM}) AS n_stopwords
-              FROM documents
-            )
-            SELECT doc_id, lang, n_chars_m, n_tokens, n_stopwords,
-                   CASE WHEN n_tokens > 0
-                        THEN round((n_chars_m - (n_tokens - 1)) / CAST(n_tokens AS DOUBLE), 4)
-                        ELSE 0.0 END AS mean_token_len,
-                   CASE WHEN n_tokens > 0
-                        THEN round(n_stopwords / CAST(n_tokens AS DOUBLE), 4)
-                        ELSE 0.0 END AS stopword_ratio,
-                   CASE WHEN n_chars_m > 0
-                        THEN floor((n_chars_m - len(regexp_replace(text,
-                               '[.,;:!?''"()-]', '', 'g')))
-                             / CAST(n_chars_m AS DOUBLE) * 10000 + 0.5) / 10000
-                        ELSE 0.0 END AS punct_ratio,
-                   round(least(1.0, n_tokens / 100.0) *
-                         (1.0 - CASE WHEN n_tokens > 0
-                                     THEN round(n_stopwords / CAST(n_tokens AS DOUBLE), 4)
-                                     ELSE 0.0 END), 4) AS quality_score
-            FROM f
-        """,
-        "q_lang_profile": """
-            SELECT lang, count(*) AS docs,
-                   floor((CAST(sum(len(text)) AS DOUBLE) / count(*)) * 100 + 0.5)
-                     / 100 AS avg_chars,
-                   floor((CAST(sum(CASE WHEN len(trim(text)) = 0 THEN 0
-                               ELSE len(regexp_split_to_array(trim(text), '\\s+'))
-                               END) AS DOUBLE) / count(*)) * 100 + 0.5)
-                     / 100 AS avg_tokens,
-                   CAST(sum(CASE WHEN regexp_matches(text, 'spark')
-                            THEN 1 ELSE 0 END) AS BIGINT)
-                     AS docs_with_spark
-            FROM documents GROUP BY lang
-        """,
-        "q_tfidf": """
-            WITH toks AS (
-              SELECT doc_id,
-                     unnest(list_filter(
-                       regexp_split_to_array(lower(text), '\\s+'),
-                       x -> len(x) > 0)) AS term
-              FROM documents
-            ),
-            tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-            dfc AS (SELECT term, count(DISTINCT doc_id) AS df
-                    FROM toks GROUP BY 1),
-            n AS (SELECT count(DISTINCT doc_id) AS n FROM documents),
-            scored AS (
-              SELECT tf.doc_id, tf.term,
-                     round(tf.tf * ln((n.n + 1.0) / (dfc.df + 1.0)), 4) AS score
-              FROM tf JOIN dfc USING (term) CROSS JOIN n
-            )
-            SELECT doc_id, term, score, rank FROM (
-              SELECT *, row_number() OVER (PARTITION BY doc_id
-                        ORDER BY score DESC, term ASC) AS rank
-              FROM scored) WHERE rank <= 5
-        """,
-        "q_data_split": """
-            WITH b AS (
-              SELECT doc_id, text,
-                     (strpos('0123456789abcdef',
-                             substring(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16
-                     + strpos('0123456789abcdef',
-                              substring(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1
-                       AS bucket
-              FROM documents
-            )
-            SELECT CASE WHEN bucket < 205 THEN 'train'
-                        WHEN bucket < 230 THEN 'valid'
-                        ELSE 'test' END AS split,
-                   count(*) AS n_docs,
-                   min(doc_id) AS min_doc,
-                   max(doc_id) AS max_doc,
-                   CAST(sum(len(text)) AS BIGINT) AS total_chars
-            FROM b GROUP BY 1
-        """,
-        "q_contamination": """
-            WITH s AS (
-              SELECT doc_id,
-                     (strpos('0123456789abcdef',
-                             substring(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16
-                     + strpos('0123456789abcdef',
-                              substring(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1
-                       AS bucket,
-                     regexp_split_to_array(trim(text), '\\s+') AS w
-              FROM documents
-            ), sp AS (
-              SELECT doc_id,
-                     CASE WHEN bucket < 205 THEN 'train'
-                          WHEN bucket < 230 THEN 'valid' ELSE 'test' END AS split,
-                     list_distinct(CASE WHEN len(w) >= 8 THEN
-                       list_transform(generate_series(1, len(w) - 7),
-                                      i -> array_to_string(list_slice(w, i, i + 7), ' '))
-                     ELSE [] END) AS sh
-              FROM s
-            ), train_sh AS (
-              SELECT DISTINCT md5(unnest(sh)) AS hsh FROM sp WHERE split = 'train'
-            ), test_docs AS (
-              SELECT doc_id, CAST(len(sh) AS BIGINT) AS n_shingles FROM sp
-              WHERE split = 'test' AND len(sh) > 0
-            ), test_sh AS (
-              SELECT doc_id, md5(unnest(sh)) AS hsh FROM sp WHERE split = 'test'
-            ), hits AS (
-              SELECT doc_id, count(*) AS contaminated FROM test_sh
-              WHERE hsh IN (SELECT hsh FROM train_sh) GROUP BY doc_id
-            )
-            SELECT t.doc_id, t.n_shingles,
-                   CAST(coalesce(h.contaminated, 0) AS BIGINT) AS contaminated,
-                   round(coalesce(h.contaminated, 0) / t.n_shingles, 4)
-                     AS contaminated_frac
-            FROM test_docs t LEFT JOIN hits h USING (doc_id)
-        """,
-        "q_repetition": """
-            WITH t AS (
-              SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
-              FROM documents
-            ), tok AS (
-              SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens, unnest(w) AS tok
-              FROM t
-            ), wc AS (
-              SELECT doc_id, n_tokens, tok, count(*) AS c
-              FROM tok GROUP BY 1, 2, 3
-            ), top AS (
-              SELECT doc_id, n_tokens, tok AS top_word,
-                     round(c / n_tokens, 4) AS top_word_frac,
-                     row_number() OVER (PARTITION BY doc_id
-                                        ORDER BY c DESC, tok ASC) AS rn
-              FROM wc
-            ), bg AS (
-              SELECT doc_id,
-                     CASE WHEN len(w) >= 2 THEN
-                       list_transform(generate_series(1, len(w) - 1),
-                                      i -> w[i] || ' ' || w[i + 1])
-                     ELSE [] END AS gs
-              FROM t
-            ), bgc AS (
-              SELECT doc_id, g, count(*) AS c
-              FROM (SELECT doc_id, unnest(gs) AS g FROM bg) GROUP BY 1, 2
-            ), dup AS (
-              SELECT doc_id,
-                     round(sum(CASE WHEN c > 1 THEN c ELSE 0 END) / sum(c), 4)
-                       AS dup_bigram_frac
-              FROM bgc GROUP BY doc_id
-            )
-            SELECT top.doc_id, top.n_tokens, top.top_word, top.top_word_frac,
-                   coalesce(dup.dup_bigram_frac, 0.0) AS dup_bigram_frac
-            FROM top LEFT JOIN dup USING (doc_id) WHERE rn = 1
-        """,
-        "q_dedup_survivors": f"""
-            WITH RECURSIVE sigs AS ({_MINHASH_CTE}),
-            bands AS (
-              SELECT doc_id, 0 AS band_id, sig_0 || '|' || sig_1 AS band_key FROM sigs
-              UNION ALL
-              SELECT doc_id, 1 AS band_id, sig_2 || '|' || sig_3 AS band_key FROM sigs
-            ),
-            pairs AS (
-              SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-              FROM bands a JOIN bands b
-                ON a.band_id = b.band_id AND a.band_key = b.band_key
-               AND a.doc_id < b.doc_id
-              GROUP BY 1, 2
-            ),
-            sym AS (
-              SELECT doc_a AS v, doc_b AS u FROM pairs
-              UNION
-              SELECT doc_b, doc_a FROM pairs
-            ),
-            reach(v, lbl) AS (
-              SELECT DISTINCT v, v FROM sym
-              UNION
-              SELECT s.v, r.lbl FROM sym s JOIN reach r ON r.v = s.u
-            ),
-            losers AS (
-              SELECT v AS doc_id FROM reach GROUP BY v HAVING v <> min(lbl)
-            )
-            SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
-            FROM documents
-            WHERE doc_id NOT IN (SELECT doc_id FROM losers)
-        """,
-        "q_chunk_plan": """
-            WITH t AS (
-              SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
-              FROM documents
-            ), c AS (
-              SELECT doc_id, w,
-                     unnest(generate_series(
-                       0, CAST(ceil(len(w) / 32.0) AS BIGINT) - 1)) AS chunk_idx
-              FROM t
-            )
-            SELECT doc_id, chunk_idx,
-                   least(CAST(32 AS BIGINT), len(w) - chunk_idx * 32)
-                     AS n_chunk_tokens,
-                   array_to_string(
-                     list_slice(w, chunk_idx * 32 + 1, chunk_idx * 32 + 32), ' ')
-                     AS chunk_text
-            FROM c
-        """,
-        "q_pii_scan": f"""
-            SELECT doc_id,
-                   {pii_counts},
-                   CAST({pii_total} AS BIGINT) AS pii_total
-            FROM documents
-        """,
-        "q_percentiles": """
-            SELECT event_type,
-                   round(quantile_cont(value, 0.5), 4) AS p50,
-                   round(quantile_cont(value, 0.95), 4) AS p95,
-                   round(quantile_cont(value, 0.99), 4) AS p99,
-                   count(*) AS n_events
-            FROM events GROUP BY event_type
-        """,
-        "q_minhash_sig": _MINHASH_CTE,
-        "q_ngram_jaccard": """
-            WITH toks AS (
-              SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
-              FROM documents WHERE doc_id < 40
-            ), sh AS (
-              SELECT doc_id, list_distinct(t) AS s
-              FROM toks
-            ), scored AS (
-              SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     round(CASE WHEN len(list_distinct(a.s || b.s)) > 0
-                           THEN len(list_intersect(a.s, b.s)) /
-                                CAST(len(list_distinct(a.s || b.s)) AS DOUBLE)
-                           ELSE 0.0 END, 4) AS jaccard
-              FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-            )
-            SELECT doc_a, doc_b, jaccard FROM scored WHERE jaccard >= 0.5
-        """,
-        "q_lsh_buckets": """
-            WITH planes AS (
-              SELECT p, list_transform(range(0, 64), d ->
-                CASE WHEN (strpos('0123456789abcdef',
-                           substring(md5(p || '_' || d), 6, 1)) - 1) % 2 = 1
-                     THEN 1.0 ELSE -1.0 END) AS plane
-              FROM (SELECT unnest(range(0, 4)) AS p)
-            ), signs AS (
-              SELECT e.vec_id, pl.p,
-                     CASE WHEN list_dot_product(e.embedding, pl.plane) >= 0
-                          THEN '1' ELSE '0' END AS bit
-              FROM embeddings e CROSS JOIN planes pl
-            ), buckets AS (
-              SELECT vec_id, string_agg(bit, '' ORDER BY p) AS bucket
-              FROM signs GROUP BY vec_id
-            )
-            SELECT bucket, count(*) AS vectors FROM buckets GROUP BY bucket
-        """,
-        "q_event_windows": """
-            SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
-                   event_type,
-                   count(*) AS n_events,
-                   round(sum(value), 2) AS sum_value
-            FROM events
-            GROUP BY 1, 2
-        """,
-        "q_sessionize": """
-            WITH o AS (
-              SELECT user_id, ts, event_id, value,
-                     CASE WHEN lag(ts) OVER w IS NULL
-                          OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-                          THEN 1 ELSE 0 END AS new_session
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            ), s AS (
-              SELECT user_id, value,
-                     sum(new_session) OVER (PARTITION BY user_id
-                                            ORDER BY ts, event_id) AS session_idx
-              FROM o
-            )
-            SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
-                   count(*) AS n_events,
-                   CAST(round(sum(CAST(value AS DECIMAL(18,6))), 2) AS DOUBLE)
-                     AS session_value
-            FROM s GROUP BY user_id, session_idx
-        """,
-        "q_extract_entries": """
-            SELECT 'https://synth.example/' || lang || '/' || doc_id || '-0.html' AS url,
-                   1 AS n_entries,
-                   'DOC' || doc_id AS headword,
-                   1 AS n_defs
-            FROM documents
-        """,
-        "q_migrate_v21": """
-            SELECT 'https://synth.example/' || lang || '/' || doc_id || '-0.html' AS url,
-                   1 AS n_expressions,
-                   'DOC' || doc_id AS spelling0,
-                   'сущ.' AS tag0
-            FROM documents
-        """,
-        "q_near_dup_pairs": f"""
-            WITH sigs AS ({_MINHASH_CTE}),
-            bands AS (
-              SELECT doc_id, 0 AS band_id, sig_0 || '|' || sig_1 AS band_key FROM sigs
-              UNION ALL
-              SELECT doc_id, 1 AS band_id, sig_2 || '|' || sig_3 AS band_key FROM sigs
-            )
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_bands
-            FROM bands a JOIN bands b
-              ON a.band_id = b.band_id AND a.band_key = b.band_key
-             AND a.doc_id < b.doc_id
-            GROUP BY a.doc_id, b.doc_id
-        """,
-        "q_dup_clusters": f"""
-            WITH RECURSIVE sigs AS ({_MINHASH_CTE}),
-            bands AS (
-              SELECT doc_id, 0 AS band_id, sig_0 || '|' || sig_1 AS band_key FROM sigs
-              UNION ALL
-              SELECT doc_id, 1 AS band_id, sig_2 || '|' || sig_3 AS band_key FROM sigs
-            ),
-            pairs AS (
-              SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-              FROM bands a JOIN bands b
-                ON a.band_id = b.band_id AND a.band_key = b.band_key
-               AND a.doc_id < b.doc_id
-              GROUP BY 1, 2
-            ),
-            sym AS (
-              SELECT doc_a AS v, doc_b AS u FROM pairs
-              UNION
-              SELECT doc_b, doc_a FROM pairs
-            ),
-            reach(v, lbl) AS (
-              SELECT DISTINCT v, v FROM sym
-              UNION
-              SELECT s.v, r.lbl FROM sym s JOIN reach r ON r.v = s.u
-            ),
-            labels AS (
-              SELECT v AS doc_id, min(lbl) AS cluster_id FROM reach GROUP BY v
-            )
-            SELECT doc_id, cluster_id,
-                   count(*) OVER (PARTITION BY cluster_id) AS cluster_size,
-                   CAST(doc_id = cluster_id AS INT) AS is_canonical
-            FROM labels
-        """,
-        "q_jaccard_verify": f"""
-            WITH sigs AS ({_MINHASH_CTE}),
-            bands AS (
-              SELECT doc_id, 0 AS band_id, sig_0 || '|' || sig_1 AS band_key FROM sigs
-              UNION ALL
-              SELECT doc_id, 1 AS band_id, sig_2 || '|' || sig_3 AS band_key FROM sigs
-            ),
-            pairs AS (
-              SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-              FROM bands a JOIN bands b
-                ON a.band_id = b.band_id AND a.band_key = b.band_key
-               AND a.doc_id < b.doc_id
-              GROUP BY 1, 2
-            ),
-            toks2 AS (
-              SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
-              FROM documents
-            ),
-            sh2 AS (
-              SELECT doc_id,
-                     CASE WHEN len(t) >= 3 THEN
-                       list_distinct(list_transform(range(1, len(t) - 1),
-                                     i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-                     ELSE [] END AS s
-              FROM toks2
-            ),
-            scored AS (
-              SELECT p.doc_a, p.doc_b,
-                     round(CASE WHEN len(list_distinct(a.s || b.s)) > 0
-                           THEN len(list_intersect(a.s, b.s)) /
-                                CAST(len(list_distinct(a.s || b.s)) AS DOUBLE)
-                           ELSE 0.0 END, 4) AS jaccard
-              FROM pairs p
-              JOIN sh2 a ON p.doc_a = a.doc_id
-              JOIN sh2 b ON p.doc_b = b.doc_id
-            )
-            SELECT doc_a, doc_b, jaccard FROM scored WHERE jaccard >= 0.1
-        """,
-        "q_cosine_topk": """
-            WITH scored AS (
-              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                     round(list_dot_product(q.embedding, c.embedding) /
-                           (sqrt(list_dot_product(q.embedding, q.embedding)) *
-                            sqrt(list_dot_product(c.embedding, c.embedding))), 4) AS cosine
-              FROM embeddings q JOIN embeddings c ON q.vec_id < 10
-               AND c.vec_id != q.vec_id
-            ), ranked AS (
-              SELECT query_id, neighbor_id, cosine,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY cosine DESC, neighbor_id ASC) AS rank
-              FROM scored
-            )
-            SELECT query_id, neighbor_id, cosine, rank
-            FROM ranked WHERE rank <= 5
-        """,
-        "q_quantized_topk": """
-            -- symbolic replay of the SQ8 kernel: floor(x*127/max|x|) int8
-            -- quantization, exact integer dot/norms (values <= 64*127^2 so
-            -- DOUBLE carries them exactly), one float division at the end.
-            WITH q AS (
-              SELECT vec_id,
-                     CASE WHEN list_max(list_transform(embedding,
-                                x -> abs(CAST(x AS DOUBLE)))) = 0
-                          THEN list_transform(embedding, x -> 0.0)
-                          ELSE list_transform(embedding,
-                                 x -> floor(CAST(x AS DOUBLE) * 127.0 /
-                                      list_max(list_transform(embedding,
-                                        y -> abs(CAST(y AS DOUBLE))))))
-                     END AS qvecd
-              FROM embeddings
-            ), n AS (
-              SELECT vec_id, qvecd,
-                     CAST(list_dot_product(qvecd, qvecd) AS BIGINT) AS n2
-              FROM q
-            ), scored AS (
-              SELECT qn.vec_id AS query_id, cn.vec_id AS neighbor_id,
-                     CAST(list_dot_product(qn.qvecd, cn.qvecd) AS BIGINT)
-                       AS qdot,
-                     CASE WHEN qn.n2 = 0 OR cn.n2 = 0 THEN 0.0
-                          ELSE round(list_dot_product(qn.qvecd, cn.qvecd) /
-                               (sqrt(CAST(qn.n2 AS DOUBLE)) *
-                                sqrt(CAST(cn.n2 AS DOUBLE))), 4)
-                     END AS cosine_q
-              FROM n qn JOIN n cn
-                ON qn.vec_id < 10 AND cn.vec_id != qn.vec_id
-            ), ranked AS (
-              SELECT query_id, neighbor_id, qdot, cosine_q,
-                     row_number() OVER (PARTITION BY query_id
-                       ORDER BY cosine_q DESC, neighbor_id ASC) AS rank
-              FROM scored
-            )
-            SELECT query_id, neighbor_id, qdot, cosine_q, rank
-            FROM ranked WHERE rank <= 5
-        """,
-        "q_quantization_recall": """
-            -- recall@5 of the int8 path vs exact float cosine: both top-k
-            -- sets re-derived symbolically, overlap counted, ppm by
-            -- integral divide (no float in the metric).
-            WITH exact_scored AS (
-              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                     round(list_dot_product(q.embedding, c.embedding) /
-                           (sqrt(list_dot_product(q.embedding, q.embedding)) *
-                            sqrt(list_dot_product(c.embedding, c.embedding))), 4)
-                       AS cosine
-              FROM embeddings q JOIN embeddings c ON q.vec_id < 10
-               AND c.vec_id != q.vec_id
-            ), exact_topk AS (
-              SELECT query_id, neighbor_id FROM (
-                SELECT query_id, neighbor_id,
-                       row_number() OVER (PARTITION BY query_id
-                         ORDER BY cosine DESC, neighbor_id ASC) AS rank
-                FROM exact_scored) WHERE rank <= 5
-            ), qz AS (
-              SELECT vec_id,
-                     CASE WHEN list_max(list_transform(embedding,
-                                x -> abs(CAST(x AS DOUBLE)))) = 0
-                          THEN list_transform(embedding, x -> 0.0)
-                          ELSE list_transform(embedding,
-                                 x -> floor(CAST(x AS DOUBLE) * 127.0 /
-                                      list_max(list_transform(embedding,
-                                        y -> abs(CAST(y AS DOUBLE))))))
-                     END AS qvecd
-              FROM embeddings
-            ), n AS (
-              SELECT vec_id, qvecd,
-                     CAST(list_dot_product(qvecd, qvecd) AS BIGINT) AS n2
-              FROM qz
-            ), quant_topk AS (
-              SELECT query_id, neighbor_id FROM (
-                SELECT query_id, neighbor_id,
-                       row_number() OVER (PARTITION BY query_id
-                         ORDER BY cosine_q DESC, neighbor_id ASC) AS rank
-                FROM (
-                  SELECT qn.vec_id AS query_id, cn.vec_id AS neighbor_id,
-                         CASE WHEN qn.n2 = 0 OR cn.n2 = 0 THEN 0.0
-                              ELSE round(list_dot_product(qn.qvecd, cn.qvecd) /
-                                   (sqrt(CAST(qn.n2 AS DOUBLE)) *
-                                    sqrt(CAST(cn.n2 AS DOUBLE))), 4)
-                         END AS cosine_q
-                  FROM n qn JOIN n cn
-                    ON qn.vec_id < 10 AND cn.vec_id != qn.vec_id)
-                ) WHERE rank <= 5
-            ), hits AS (
-              SELECT e.query_id, count(*) AS overlap
-              FROM exact_topk e JOIN quant_topk t
-                ON e.query_id = t.query_id AND e.neighbor_id = t.neighbor_id
-              GROUP BY 1
-            ), qids AS (SELECT DISTINCT query_id FROM exact_topk)
-            SELECT q.query_id,
-                   CAST(coalesce(h.overlap, 0) AS BIGINT) AS overlap,
-                   CAST(coalesce(h.overlap, 0) * 1000000 // 5 AS BIGINT)
-                     AS recall_ppm
-            FROM qids q LEFT JOIN hits h ON q.query_id = h.query_id
-        """,
-        "q_ivf_topk": """
-            -- one Lloyd iteration over the seed centroids, then probe+rerank.
-            -- Cluster means sum through DECIMAL(30,15): order-independent and
-            -- bit-identical with Spark's decimal-summed means.
-            WITH e AS (SELECT vec_id, embedding FROM embeddings),
-            seed AS (SELECT vec_id AS cent_id,
-                            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-                     FROM e WHERE vec_id < 16),
-            asg0 AS (
-              SELECT vec_id, cent_id, embedding FROM (
-                SELECT a.vec_id, c.cent_id, a.embedding,
-                       row_number() OVER (PARTITION BY a.vec_id ORDER BY
-                         (list_dot_product(a.embedding, c.cv) /
-                          (sqrt(list_dot_product(a.embedding, a.embedding)) *
-                           sqrt(list_dot_product(c.cv, c.cv)))) DESC,
-                         c.cent_id ASC) AS rn
-                FROM e a CROSS JOIN seed c) WHERE rn = 1
-            ),
-            ex AS (
-              SELECT cent_id,
-                     unnest(range(1, len(embedding) + 1)) AS pos,
-                     unnest(list_transform(embedding, x -> CAST(x AS DOUBLE)))
-                       AS val
-              FROM asg0
-            ),
-            sums AS (
-              SELECT cent_id, pos,
-                     sum(CAST(val AS DECIMAL(30,15))) AS s, count(*) AS c
-              FROM ex GROUP BY 1, 2
-            ),
-            refined AS (
-              SELECT cent_id, list(CAST(s AS DOUBLE) / c ORDER BY pos) AS cv
-              FROM sums GROUP BY cent_id
-            ),
-            cents AS (
-              SELECT s.cent_id, coalesce(r.cv, s.cv) AS cv
-              FROM seed s LEFT JOIN refined r USING (cent_id)
-            ),
-            assign AS (
-              SELECT vec_id, cent_id FROM (
-                SELECT a.vec_id, c.cent_id,
-                       row_number() OVER (PARTITION BY a.vec_id ORDER BY
-                         (list_dot_product(a.embedding, c.cv) /
-                          (sqrt(list_dot_product(a.embedding, a.embedding)) *
-                           sqrt(list_dot_product(c.cv, c.cv)))) DESC,
-                         c.cent_id ASC) AS rn
-                FROM e a CROSS JOIN cents c) WHERE rn = 1
-            ),
-            q AS (SELECT vec_id AS query_id, embedding AS qv
-                  FROM e WHERE vec_id < 5),
-            probes AS (
-              SELECT query_id, qv, cent_id FROM (
-                SELECT q.query_id, q.qv, c.cent_id,
-                       row_number() OVER (PARTITION BY q.query_id ORDER BY
-                         (list_dot_product(q.qv, c.cv) /
-                          (sqrt(list_dot_product(q.qv, q.qv)) *
-                           sqrt(list_dot_product(c.cv, c.cv)))) DESC,
-                         c.cent_id ASC) AS rn
-                FROM q CROSS JOIN cents c) WHERE rn <= 4
-            ),
-            cand AS (
-              SELECT p.query_id, p.qv, a.vec_id
-              FROM probes p JOIN assign a USING (cent_id)
-              WHERE a.vec_id != p.query_id
-            ),
-            scored AS (
-              SELECT c.query_id, c.vec_id AS neighbor_id,
-                     round(list_dot_product(c.qv, e.embedding) /
-                           (sqrt(list_dot_product(c.qv, c.qv)) *
-                            sqrt(list_dot_product(e.embedding, e.embedding))), 4)
-                       AS cosine
-              FROM cand c JOIN e ON c.vec_id = e.vec_id
-            )
-            SELECT query_id, neighbor_id, cosine, rank FROM (
-              SELECT *, row_number() OVER (PARTITION BY query_id
-                        ORDER BY cosine DESC, neighbor_id ASC) AS rank
-              FROM scored) WHERE rank <= 5
-        """,
-        "q_embedding_near_dup": """
-            -- list_dot_product (double accumulation) not list_cosine_similarity
-            -- (float32) so the arithmetic is bit-identical with Spark's
-            WITH e AS (SELECT * FROM embeddings WHERE vec_id < 150),
-            scored AS (
-              SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                     round(list_dot_product(a.embedding, b.embedding) /
-                           (sqrt(list_dot_product(a.embedding, a.embedding)) *
-                            sqrt(list_dot_product(b.embedding, b.embedding))), 4)
-                       AS cosine
-              FROM e a JOIN e b ON a.vec_id < b.vec_id
-            )
-            SELECT vec_a, vec_b, cosine FROM scored WHERE cosine >= 0.35
-        """,
-        "q_embedding_near_dup_lsh": """
-            -- replicates the deterministic md5-parity hyperplanes, the bucket
-            -- equi-join, and the in-bucket exact cosine of the scale path
-            WITH e AS (SELECT * FROM embeddings WHERE vec_id < 300),
-            planes AS (
-              SELECT p, list_transform(range(0, 64), d ->
-                CASE WHEN (strpos('0123456789abcdef',
-                           substring(md5(p || '_' || d), 6, 1)) - 1) % 2 = 1
-                     THEN 1.0 ELSE -1.0 END) AS plane
-              FROM (SELECT unnest(range(0, 2)) AS p)
-            ), signs AS (
-              SELECT e.vec_id, pl.p,
-                     CASE WHEN list_dot_product(e.embedding, pl.plane) >= 0
-                          THEN '1' ELSE '0' END AS bit
-              FROM e CROSS JOIN planes pl
-            ), buckets AS (
-              SELECT vec_id, string_agg(bit, '' ORDER BY p) AS bucket
-              FROM signs GROUP BY vec_id
-            ), be AS (
-              SELECT e.vec_id, e.embedding, b.bucket
-              FROM e JOIN buckets b USING (vec_id)
-            ), scored AS (
-              SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                     round(list_dot_product(a.embedding, b.embedding) /
-                           (sqrt(list_dot_product(a.embedding, a.embedding)) *
-                            sqrt(list_dot_product(b.embedding, b.embedding))), 4)
-                       AS cosine
-              FROM be a JOIN be b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-            )
-            SELECT vec_a, vec_b, cosine FROM scored WHERE cosine >= 0.3
-        """,
-        "q_hypertable_rollup": """
-            WITH hourly AS (
-              SELECT date_trunc('hour', ts) AS h, event_type,
-                     count(*) AS n, sum(CAST(value AS DECIMAL(18,6))) AS s
-              FROM events GROUP BY 1, 2
-            )
-            SELECT CAST(date_trunc('day', h) AS TIMESTAMP) AS day, event_type,
-                   CAST(sum(n) AS BIGINT) AS n_events,
-                   CAST(round(sum(s), 2) AS DOUBLE) AS sum_value,
-                   floor((CAST(sum(s) AS DOUBLE) / sum(n)) * 100 + 0.5) / 100
-                     AS avg_value,
-                   count(*) AS hours_active
-            FROM hourly GROUP BY 1, 2
-        """,
-        "q_range_join": """
-            SELECT l.l_orderkey AS orderkey,
-                   count(*) AS lines_in_window,
-                   max(l.l_linenumber) AS max_line
-            FROM lineitem l
-            JOIN orders o
-              ON o.o_orderkey = l.l_orderkey
-             AND epoch(l.l_shipdate) >= epoch(o.o_orderdate)
-             AND epoch(l.l_shipdate) <= epoch(o.o_orderdate) + 30 * 86400
-            GROUP BY l.l_orderkey
-        """,
-        "q_asof_join": """
-            WITH ev AS (
-              SELECT event_id, user_id AS custkey, ts FROM events WHERE event_id < 2000
-            ), matched AS (
-              SELECT e.event_id, e.custkey, e.ts,
-                     -- composite scalar key: latest date, then max orderkey
-                     -- (orderkeys < 1e6 at test scales)
-                     max_by(o.o_orderkey,
-                            CAST(epoch(o.o_orderdate) AS BIGINT) * 1000000
-                            + o.o_orderkey) AS o_orderkey,
-                     max(o.o_orderdate) AS asof_time
-              FROM ev e JOIN orders o
-                ON o.o_custkey = e.custkey AND o.o_orderdate <= e.ts
-              GROUP BY e.event_id, e.custkey, e.ts
-            )
-            SELECT event_id, custkey, ts, o_orderkey, asof_time FROM matched
-        """,
-        "q_set_ops": """
-            SELECT nationkey FROM (
-              SELECT DISTINCT c_nationkey AS nationkey FROM customer
-              EXCEPT
-              SELECT DISTINCT s_nationkey AS nationkey FROM supplier
-            )
+        ).cast("long").alias("n_tokens"),
+    )
+    return exact_quantiles(
+        docs, "n_tokens", (250_000, 500_000, 900_000, 990_000),
+        group_col="lang",
+    )
+
+
+@contract(
+    oracle="""
+        -- identical shingle postings, df≤5 stop-shingle cap, common≥2
+        -- candidate pairs, then exact intersect sizes in integer basis
+        -- points (floor division, no floats anywhere)
+        WITH toks AS (
+          SELECT doc_id,
+                 regexp_split_to_array(trim(text), '\\s+') AS t
+          FROM documents
+        ), sh AS (
+          SELECT doc_id,
+                 list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
+                                for i in range(1, len(t) - 1)]) AS s
+          FROM toks
+        ), ex AS (
+          SELECT doc_id, unnest(s) AS g FROM sh
+        ), rare AS (
+          SELECT g FROM ex GROUP BY g HAVING COUNT(*) <= 5
+        ), exf AS (
+          SELECT e.doc_id, e.g FROM ex e JOIN rare USING (g)
+        ), cand AS (
+          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+          FROM exf a JOIN exf b
+            ON a.g = b.g AND a.doc_id < b.doc_id
+          GROUP BY 1, 2 HAVING COUNT(*) >= 2
+        ), ver AS (
+          SELECT c.doc_a, c.doc_b,
+                 CAST(len(list_intersect(sa.s, sb.s)) AS BIGINT) AS common,
+                 CAST(len(sa.s) AS BIGINT) AS na,
+                 CAST(len(sb.s) AS BIGINT) AS nb
+          FROM cand c
+          JOIN sh sa ON sa.doc_id = c.doc_a
+          JOIN sh sb ON sb.doc_id = c.doc_b
+        )
+        SELECT doc_a, doc_b, common,
+               CAST(CASE WHEN na > 0 THEN (common * 10000) // na
+                    ELSE 0 END AS BIGINT) AS cont_a_in_b_bp,
+               CAST(CASE WHEN nb > 0 THEN (common * 10000) // nb
+                    ELSE 0 END AS BIGINT) AS cont_b_in_a_bp
+        FROM ver
+        WHERE GREATEST(
+                CASE WHEN na > 0 THEN (common * 10000) // na ELSE 0 END,
+                CASE WHEN nb > 0 THEN (common * 10000) // nb ELSE 0 END
+              ) >= 300
+    """,
+    plan=(
+        "containment dedup: inverted-shingle postings with the df-cap semi-join "
+        "pruning stop-shingles BEFORE the posting self-join (per-shingle fan-out ≤ "
+        "max_df²), candidate groupBy with map-side partials, then two equi-joins for "
+        "exact verification — no cartesian product, zero Python, no window"
+    ),
+    must=["HashAggregate"],
+    must_not=["CartesianProduct", "ArrowEvalPython", "BatchEvalPython", "Window"],
+)
+def q_containment(spark, sf_dir):
+    """Shingle CONTAINMENT dedup (ops/dedup.containment_candidates +
+    containment_pairs) — the asymmetric complement of Jaccard resemblance
+    (Broder 1997): quote / wrapped-page / sub-document detection.  The
+    FULL scale path is oracle-checked end-to-end: inverted-shingle
+    postings, stop-shingle df cap (≤5), common≥2 candidate pairs, then
+    exact two-equi-join verification in integer basis points (no float
+    division anywhere — bit-exact across engines)."""
+    from html_parser_spark.ops.dedup import (
+        containment_candidates,
+        containment_pairs,
+    )
+
+    docs = _docs(spark, sf_dir)
+    cands = containment_candidates(docs, shingle_k=3, max_df=5, min_common=2)
+    return containment_pairs(
+        docs, shingle_k=3, min_containment_bp=300, candidates=cands
+    )
+
+
+def _trustrank_oracle_sql(iterations: int = 3) -> str:
+    """Unrolled-CTE replica of ops/linkgraph.trustrank_fixed_point over the
+    shared synthetic graph with seeds h0,h7,…,h35: the pagerank chain with
+    N replaced by the seed count m and the teleport base + dangling
+    redistribution gated to seed rows.  All-BIGINT ``//`` floor division on
+    non-negative operands — bit-exact regardless of shuffle order."""
+    S, num, den = 10**12, 85, 100
+    seed_values = ", ".join(f"('h{i}')" for i in range(0, 40, 7))
+    parts = [f"""e0 AS (
+  SELECT doc_id % 40 AS s, (doc_id * 7 + 3) % 40 AS t FROM documents
+  UNION ALL
+  SELECT doc_id % 40, (doc_id * 13 + 11) % 45 FROM documents
+), edges AS (
+  SELECT 'h' || s AS src, 'h' || t AS dst, CAST(COUNT(*) AS BIGINT) AS weight
+  FROM e0 WHERE s <> t GROUP BY 1, 2
+), nodes AS (
+  SELECT src AS node FROM edges UNION SELECT dst FROM edges
+), seeds AS (SELECT * FROM (VALUES {seed_values}) sv(node)
+), sn AS (
+  SELECT n.node FROM nodes n JOIN seeds s ON s.node = n.node
+), mm AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM sn
+), flagged AS (
+  SELECT n.node,
+         CASE WHEN s.node IS NOT NULL THEN 1 ELSE 0 END AS seed
+  FROM nodes n LEFT JOIN sn s ON s.node = n.node
+), outw AS (
+  SELECT src, CAST(SUM(weight) AS BIGINT) AS w_out FROM edges GROUP BY src
+), r0 AS (
+  SELECT node, seed,
+         CAST(CASE WHEN seed = 1 THEN {S} // m ELSE 0 END AS BIGINT) AS rank
+  FROM flagged, mm
+)"""]
+    for k in range(iterations):
+        parts.append(f""", d{k} AS (
+  SELECT CAST(COALESCE(SUM(rank), 0) AS BIGINT) AS dang
+  FROM r{k} WHERE node NOT IN (SELECT src FROM outw)
+), c{k} AS (
+  SELECT e.dst AS node,
+         CAST(SUM((r.rank * e.weight) // o.w_out) AS BIGINT) AS in_sum
+  FROM edges e
+  JOIN r{k} r ON r.node = e.src
+  JOIN outw o ON o.src = e.src
+  GROUP BY e.dst
+), r{k + 1} AS (
+  SELECT f.node, f.seed,
+         CAST(CASE WHEN f.seed = 1
+                   THEN ({den - num} * {S}) // ({den} * mm.m) ELSE 0 END
+              + ({num} * (COALESCE(c.in_sum, 0)
+                          + f.seed * (d{k}.dang // mm.m))) // {den}
+              AS BIGINT) AS rank
+  FROM flagged f LEFT JOIN c{k} c ON c.node = f.node, mm, d{k}
+)""")
+    return "WITH " + "".join(parts) + f"\nSELECT node, rank FROM r{iterations}"
+
+
+@contract(
+    oracle=_trustrank_oracle_sql(3),
+    plan=(
+        "seeded propagation: per-iteration edge⋈rank equi-join + groupBy(dst) partials "
+        "exactly like q_pagerank; the seed flag is ONE broadcast-sized semi-join at "
+        "init and the 1-row dangling aggregate rides an explicit broadcast, never a "
+        "cross join over nodes; zero Python, no window"
+    ),
+    must=["HashAggregate", "Join"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct"],
+    plan_kwargs={"checkpoint": False},
+)
+def q_trustrank(spark, sf_dir, checkpoint=True):
+    """TrustRank (Gyöngyi et al., VLDB 2004) in fixed-point integer
+    arithmetic (ops/linkgraph.trustrank_fixed_point) over the shared
+    synthetic 45-host graph: teleport + dangling mass flow ONLY to the 6
+    seed hosts h0,h7,…,h35, so hosts unreachable from the seeds score
+    exactly 0 (spam demotion).  Same bit-exact integer discipline as
+    q_pagerank — the DuckDB oracle's unrolled seed-gated CTEs hash-match
+    EXACTLY."""
+    docs = _docs(spark, sf_dir)
+    from html_parser_spark.ops.linkgraph import trustrank_fixed_point
+
+    edges = _synth_host_edges(docs)
+    seeds = spark.createDataFrame(
+        [(f"h{i}",) for i in range(0, 40, 7)], ["node"]
+    )
+    return trustrank_fixed_point(
+        edges, seeds, iterations=3, checkpoint=checkpoint
+    ).select("node", F.col("rank").cast("long").alias("rank"))
+
+
+@contract(
+    oracle="""
+        -- identical page synthesis, then DuckDB's own regexp+md5
+        -- recompute the structural signature: a hash match proves the
+        -- tag tokenization and signature agree across engines
+        WITH pages AS (
+          SELECT 'http://t' || (doc_id % 4) || '.example.com/p' || doc_id
+                   AS url,
+                 '<html><head><title>' || substring(text, 1, 30)
+                 || '</title>'
+                 || CASE WHEN doc_id % 2 = 0
+                         THEN '<meta property="og:title" content="x">'
+                         ELSE '' END
+                 || '</head><body><p>' || substring(text, 1, 60)
+                 || '</p>'
+                 || CASE WHEN doc_id % 5 = 0
+                         THEN '<b>promo</b>' ELSE '' END
+                 || '</body></html>' AS html
+          FROM documents
+        ), tagged AS (
+          SELECT url,
+                 regexp_extract(url, '^http://([^/]+)', 1) AS host,
+                 regexp_extract_all(lower(html),
+                                    '<([a-z][a-z0-9]*)', 1) AS tags
+          FROM pages
+        )
+        SELECT host,
+               md5(array_to_string(tags, ',')) AS template_sig,
+               CAST(COUNT(*) AS BIGINT) AS n_pages,
+               CAST(MIN(len(tags)) AS BIGINT) AS n_tags,
+               MIN(url) AS example_url
+        FROM tagged
+        GROUP BY host, template_sig
+        HAVING COUNT(*) >= 2
+    """,
+    plan=(
+        "template clustering: the md5 structural signature is a pure-codegen "
+        "projection (shuffle key is 32 bytes regardless of page size), then ONE "
+        "groupBy(host, sig) with map-side partial aggregation (SortAggregate here: "
+        "min(string) has no mutable hash buffer — the partial_* before the exchange is "
+        "the property that matters); zero Python, no join, no window"
+    ),
+    must=["partial_count(1)", "Exchange hashpartitioning(host", "*("],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Join", "Window",
+              "CartesianProduct"],
+)
+def q_dom_templates(spark, sf_dir):
+    """Template clustering (ops/web.template_clusters): md5 over the
+    ordered opening-tag sequence groups pages by CMS template regardless
+    of text content — the extraction-QA / drift-monitoring view of a
+    crawl.  Pages are synthesized with two independent structural bits
+    (og:title meta on even doc_ids, a <b> promo on doc_id%5==0) so each
+    host carries 4 template clusters; the oracle rebuilds the identical
+    html and recomputes the signature with DuckDB's own regexp+md5 — a
+    hash match is a cross-engine tag-tokenization equality proof."""
+    from html_parser_spark.ops.web import template_clusters
+
+    docs = _docs(spark, sf_dir)
+    d = F.col("doc_id")
+    did = d.cast("string")
+    url = F.concat(
+        F.lit("http://t"), (d % 4).cast("string"), F.lit(".example.com/p"), did
+    )
+    html = F.concat(
+        F.lit("<html><head><title>"),
+        F.substring("text", 1, 30),
+        F.lit("</title>"),
+        F.when(
+            d % 2 == 0, F.lit('<meta property="og:title" content="x">')
+        ).otherwise(F.lit("")),
+        F.lit("</head><body><p>"),
+        F.substring("text", 1, 60),
+        F.lit("</p>"),
+        F.when(d % 5 == 0, F.lit("<b>promo</b>")).otherwise(F.lit("")),
+        F.lit("</body></html>"),
+    )
+    pages = docs.select(url.alias("url"), html.alias("html"))
+    return template_clusters(pages, min_pages=2)
+
+
+@contract(
+    oracle="""
+        -- identical url synthesis; the same two collapse regexes
+        -- (plain character classes — Java regex ≡ RE2) applied with
+        -- the global flag
+        WITH urls AS (
+          SELECT 'u' || (doc_id % 4) || '.example.com' AS host,
+                 CASE WHEN doc_id % 3 = 0
+                      THEN '/h/' || md5(CAST(doc_id AS VARCHAR))
+                      ELSE '/a/' || (doc_id % 5) || '/p' || doc_id
+                 END AS path
+          FROM documents
+        ), t AS (
+          SELECT host,
+                 regexp_replace(
+                   regexp_replace(path, '[0-9a-f]{16,}', '{hex}', 'g'),
+                   '[0-9]+', '{n}', 'g') AS path_template,
+                 'https://' || host || path AS url
+          FROM urls
+        )
+        SELECT host, path_template,
+               CAST(COUNT(*) AS BIGINT) AS n_urls,
+               MIN(url) AS example_url
+        FROM t
+        GROUP BY host, path_template
+        HAVING COUNT(*) >= 2
+    """,
+    plan=(
+        "URL template mining: pure-codegen collapse regexes + ONE groupBy(host, "
+        "template) with map-side partial aggregation (SortAggregate: min(string) "
+        "buffer, partial_* before the exchange); zero Python, no join, no window"
+    ),
+    must=["partial_count(1)", "Exchange hashpartitioning(host", "*("],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Join", "Window",
+              "CartesianProduct"],
+)
+def q_url_templates(spark, sf_dir):
+    """URL path-template mining (ops/web.url_templates): hex runs ≥16
+    chars collapse to {hex} (content hashes), digit runs to {n} — the
+    crawler-trap / crawl-budget view of the frontier.  Urls are pure
+    functions of doc_id (a /h/<md5> branch on doc_id%3==0, an
+    /a/<n>/p<n> branch otherwise) so the oracle states the same urls and
+    applies the same two collapse regexes (both plain character classes —
+    identical under Java regex and RE2)."""
+    from html_parser_spark.ops.web import url_templates
+
+    docs = _docs(spark, sf_dir)
+    d = F.col("doc_id")
+    did = d.cast("string")
+    path = F.when(d % 3 == 0, F.concat(F.lit("/h/"), F.md5(did))).otherwise(
+        F.concat(F.lit("/a/"), (d % 5).cast("string"), F.lit("/p"), did)
+    )
+    url = F.concat(
+        F.lit("https://u"), (d % 4).cast("string"), F.lit(".example.com"), path
+    )
+    return url_templates(docs.select(url.alias("url")), min_urls=2)
+
+
+def _seed_distance_oracle_sql(max_hops: int = 3) -> str:
+    """Unrolled-CTE replica of ops/linkgraph.seed_distance over the shared
+    synthetic graph with the TrustRank seed list: per-hop frontier CTEs
+    (successors of the previous frontier, minus everything already
+    settled).  Integer hop labels — exact across engines."""
+    seed_values = ", ".join(f"('h{i}')" for i in range(0, 40, 7))
+    parts = [f"""e0 AS (
+  SELECT doc_id % 40 AS s, (doc_id * 7 + 3) % 40 AS t FROM documents
+  UNION ALL
+  SELECT doc_id % 40, (doc_id * 13 + 11) % 45 FROM documents
+), edges AS (
+  SELECT DISTINCT 'h' || s AS src, 'h' || t AS dst FROM e0 WHERE s <> t
+), nodes AS (
+  SELECT src AS node FROM edges UNION SELECT dst FROM edges
+), seeds AS (SELECT * FROM (VALUES {seed_values}) sv(node)
+), d0 AS (
+  SELECT n.node, CAST(0 AS INTEGER) AS dist
+  FROM nodes n JOIN seeds s ON s.node = n.node
+), f0 AS (SELECT node FROM d0)"""]
+    for h in range(1, max_hops + 1):
+        parts.append(f""", f{h} AS (
+  SELECT DISTINCT e.dst AS node
+  FROM edges e JOIN f{h - 1} f ON f.node = e.src
+  WHERE e.dst NOT IN (SELECT node FROM d{h - 1})
+), d{h} AS (
+  SELECT node, dist FROM d{h - 1}
+  UNION ALL SELECT node, CAST({h} AS INTEGER) FROM f{h}
+)""")
+    return "WITH " + "".join(parts) + f"\nSELECT node, dist FROM d{max_hops}"
+
+
+@contract(
+    oracle=_seed_distance_oracle_sql(3),
+    plan=(
+        "seed BFS: per-hop frontier⋈edges equi-join + partial-agg distinct + left-anti "
+        "against the settled set; the frontier (not hosts×edges) bounds every hop's "
+        "shuffle; zero Python, no window, no cartesian product"
+    ),
+    must=["HashAggregate", "Join"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct"],
+    plan_kwargs={"checkpoint": False},
+)
+def q_click_depth(spark, sf_dir, checkpoint=True):
+    """Seed click-depth BFS (ops/linkgraph.seed_distance) over the shared
+    synthetic 45-host graph with the TrustRank seed list (h0,h7,...,h35):
+    exact minimum hop distance from any seed, frontier-only relaxation
+    (hop h joins only the hosts first reached at h-1 against the edge
+    list, never the settled set).  Hosts beyond max_hops are absent —
+    at corpus scale the unreachable set is the majority and
+    materializing "infinity" rows would be the expensive way to spell a
+    filter.  The DuckDB oracle unrolls the same BFS as per-hop CTEs
+    (frontier = successors of the previous frontier minus everything
+    settled); integer hop labels make the hash match exact across
+    engines."""
+    docs = _docs(spark, sf_dir)
+    from html_parser_spark.ops.linkgraph import seed_distance
+
+    edges = _synth_host_edges(docs)
+    seeds = spark.createDataFrame(
+        [(f"h{i}",) for i in range(0, 40, 7)], ["node"]
+    )
+    return seed_distance(edges, seeds, max_hops=3, checkpoint=checkpoint)
+
+
+@contract(
+    oracle=r"""
+        WITH syn AS (
+          SELECT
+            'https://s' || (doc_id % 10) || '.example.com' ||
+              CASE WHEN doc_id % 3 = 0
+                   THEN '/' || (doc_id % 5 + 2005) || '/' ||
+                        lpad(CAST(doc_id % 12 + 1 AS VARCHAR), 2, '0') || '/' ||
+                        lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') ||
+                        '/p' || doc_id
+                   ELSE '/p' || doc_id END AS url,
+            '<html><head>' ||
+              CASE WHEN doc_id % 4 = 0 THEN
+                     '<meta property="article:published_time" content="' ||
+                     CASE WHEN doc_id % 10 = 0 THEN '2023-02-30'
+                          ELSE (doc_id % 9 + 2015) || '-' ||
+                               lpad(CAST(doc_id % 12 + 1 AS VARCHAR), 2, '0') ||
+                               '-' ||
+                               lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') END ||
+                     'T08:30:00Z">'
+                   WHEN doc_id % 4 = 1 AND doc_id % 8 = 1 THEN
+                     '<meta property="article:published_time" content="1999-12-31T00:00:00Z">'
+                   ELSE '' END ||
+            '</head><body>' ||
+              CASE WHEN doc_id % 4 = 1 THEN
+                     '<time datetime="' ||
+                     (doc_id % 9 + 2015) || '-' ||
+                     lpad(CAST(doc_id % 12 + 1 AS VARCHAR), 2, '0') || '-' ||
+                     lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') ||
+                     '">then</time>'
+                   WHEN doc_id % 4 = 2 THEN
+                     '<script type="application/ld+json">{"@type":"Article","datePublished": "' ||
+                     CASE WHEN doc_id % 7 = 0 THEN '2023-13-05'
+                          ELSE (doc_id % 9 + 2015) || '-' ||
+                               lpad(CAST(doc_id % 12 + 1 AS VARCHAR), 2, '0') ||
+                               '-' ||
+                               lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') END ||
+                     '"}</script>'
+                   ELSE '<p>plain</p>' END ||
+            '</body></html>' AS html
+          FROM documents
+        ), hits AS (
+          SELECT url,
+            regexp_extract(html,
+              '<meta[^>]*property="article:published_time"[^>]*content="((?:19|20)\d\d-(?:0[1-9]|1[0-2])-(?:0[1-9]|[12]\d|3[01]))', 1) AS m_meta,
+            regexp_extract(html,
+              '<time[^>]*datetime="((?:19|20)\d\d-(?:0[1-9]|1[0-2])-(?:0[1-9]|[12]\d|3[01]))', 1) AS m_time,
+            regexp_extract(html,
+              '"datePublished"\s*:\s*"((?:19|20)\d\d-(?:0[1-9]|1[0-2])-(?:0[1-9]|[12]\d|3[01]))', 1) AS m_jsonld,
+            regexp_extract(url,
+              '/((?:19|20)\d\d)/(0[1-9]|1[0-2])/(0[1-9]|[12]\d|3[01])(?:/|$)', 1) AS g1,
+            regexp_extract(url,
+              '/((?:19|20)\d\d)/(0[1-9]|1[0-2])/(0[1-9]|[12]\d|3[01])(?:/|$)', 2) AS g2,
+            regexp_extract(url,
+              '/((?:19|20)\d\d)/(0[1-9]|1[0-2])/(0[1-9]|[12]\d|3[01])(?:/|$)', 3) AS g3
+          FROM syn
+        ), chain AS (
+          SELECT url,
+            CASE WHEN m_meta <> '' THEN m_meta
+                 WHEN m_time <> '' THEN m_time
+                 WHEN m_jsonld <> '' THEN m_jsonld
+                 WHEN g1 <> '' THEN g1 || '-' || g2 || '-' || g3 END AS raw,
+            CASE WHEN m_meta <> '' THEN 'meta'
+                 WHEN m_time <> '' THEN 'time'
+                 WHEN m_jsonld <> '' THEN 'jsonld'
+                 WHEN g1 <> '' THEN 'url'
+                 ELSE 'none' END AS pub_src
+          FROM hits
+        )
+        SELECT url, strftime(TRY_CAST(raw AS DATE), '%Y-%m-%d') AS pub_date, pub_src
+        FROM chain
+    """,
+    plan=(
+        "publication-date extraction: the whole regexp priority chain is ONE "
+        "pure-codegen projection over the page scan — zero shuffle, zero Python, no "
+        "join, no window"
+    ),
+    must=["*("],
+    must_not=["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join", "Window",
+              "CartesianProduct"],
+)
+def q_pub_dates(spark, sf_dir):
+    """Publication-date extraction (ops/web.publication_dates): the
+    regexp priority chain meta > time > jsonld > url-path over pages
+    synthesized from doc_id arithmetic.  Pins, one per failure mode:
+    doc_id%8==1 pages carry BOTH a meta tag and a time tag (meta must
+    win); doc_id%4==0 && %10==0 pages carry a regex-valid but
+    calendar-invalid meta date (2023-02-30 — pub_src says 'meta', date
+    is NULL, and Spark's to_date must agree with DuckDB's TRY_CAST);
+    doc_id%4==2 && %7==0 pages carry a month-13 jsonld date the shape
+    regex itself rejects (falls through to the url rule);  doc_id%3==0
+    urls embed a /YYYY/MM/DD/ permalink with a DIFFERENT year so the
+    priority order is observable.  The oracle rebuilds the identical
+    html+url in SQL and replays the same four regexes through DuckDB's
+    RE2 — a hash match is a cross-engine regex-semantics equality
+    proof."""
+    from html_parser_spark.ops.web import publication_dates
+
+    docs = _docs(spark, sf_dir)
+    d = F.col("doc_id")
+    did = d.cast("string")
+    mm = F.lpad((d % 12 + 1).cast("string"), 2, "0")
+    dd = F.lpad((d % 28 + 1).cast("string"), 2, "0")
+    iso = F.concat((d % 9 + 2015).cast("string"), F.lit("-"), mm,
+                   F.lit("-"), dd)
+    meta_iso = F.when(d % 10 == 0, F.lit("2023-02-30")).otherwise(iso)
+    meta_tag = F.concat(
+        F.lit('<meta property="article:published_time" content="'),
+        meta_iso, F.lit('T08:30:00Z">'),
+    )
+    k = d % 4
+    html = F.concat(
+        F.lit("<html><head>"),
+        F.when(k == 0, meta_tag)
+        .when((k == 1) & (d % 8 == 1),
+              F.lit('<meta property="article:published_time" '
+                    'content="1999-12-31T00:00:00Z">'))
+        .otherwise(F.lit("")),
+        F.lit("</head><body>"),
+        F.when(k == 1, F.concat(F.lit('<time datetime="'), iso,
+                                F.lit('">then</time>')))
+        .when(k == 2, F.concat(
+            F.lit('<script type="application/ld+json">'
+                  '{"@type":"Article","datePublished": "'),
+            F.when(d % 7 == 0, F.lit("2023-13-05")).otherwise(iso),
+            F.lit('"}</script>'),
+        ))
+        .otherwise(F.lit("<p>plain</p>")),
+        F.lit("</body></html>"),
+    )
+    upath = F.when(
+        d % 3 == 0,
+        F.concat(F.lit("/"), (d % 5 + 2005).cast("string"), F.lit("/"), mm,
+                 F.lit("/"), dd, F.lit("/p"), did),
+    ).otherwise(F.concat(F.lit("/p"), did))
+    url = F.concat(
+        F.lit("https://s"), (d % 10).cast("string"), F.lit(".example.com"),
+        upath,
+    )
+    pages = docs.select(
+        url.alias("url"), F.encode(html, "UTF-8").alias("html")
+    )
+    return publication_dates(pages)
+
+
+@contract(
+    oracle=r"""
+        WITH t AS (
+          SELECT 'h' || (doc_id % 37) AS k,
+                 CAST(length(text) AS BIGINT) *
+                 (CASE WHEN doc_id % 37 = 0 THEN 64 ELSE doc_id % 13 + 1 END) AS sz
+          FROM documents
+        ), totals AS (
+          SELECT k, CAST(SUM(sz) AS BIGINT) AS total FROM t GROUP BY k
+          HAVING SUM(sz) > 0
+        ), b AS (
+          SELECT CAST(length(regexp_replace(bin(total), '^0+', '')) AS INTEGER)
+                   AS bucket,
+                 CAST(COUNT(*) AS BIGINT) AS n_keys,
+                 CAST(SUM(total) AS BIGINT) AS bucket_total
+          FROM totals GROUP BY 1
+        ), c AS (
+          SELECT bucket, n_keys, bucket_total,
+                 CAST(SUM(n_keys) OVER (ORDER BY bucket DESC) AS BIGINT)
+                   AS cum_keys,
+                 CAST(SUM(bucket_total) OVER (ORDER BY bucket DESC) AS BIGINT)
+                   AS cum_total
+          FROM b
+        ), g AS (
+          SELECT CAST(SUM(n_keys) AS BIGINT) AS gk,
+                 CAST(SUM(bucket_total) AS BIGINT) AS gt
+          FROM b
+        )
+        SELECT bucket, n_keys, bucket_total, cum_keys, cum_total,
+               CAST((cum_keys * 1000000) // gk AS BIGINT) AS cum_keys_ppm,
+               CAST((cum_total * 1000000) // gt AS BIGINT) AS cum_total_ppm
+        FROM c, g
+    """,
+    plan=(
+        "magnitude-bucket Lorenz profile: per-key totals with map-side partials, "
+        "second groupBy bounded by <=63 bit-length buckets, cumulative window + 1-row "
+        "broadcast grand totals over that bounded histogram (the SinglePartition "
+        "window is over <=63 rows by construction — same class as pack_shards' P-row "
+        "offsets); zero Python, no cartesian product over data"
+    ),
+    must=["HashAggregate", "Window", "BroadcastNestedLoopJoin"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "SortMergeJoin"],
+)
+def q_concentration(spark, sf_dir):
+    """Corpus byte-concentration profile (ops/corpus.concentration_profile)
+    over a synthetic skewed host layout: per-host byte totals bucket by
+    integer bit-length (log2 magnitude), cumulative-from-the-top shares in
+    exact ppm — the "top hosts hold X% of the bytes" release-audit table
+    without a global host sort.  Host h0 carries a 64x weight multiplier
+    so multiple magnitude buckets are occupied.  All-integer arithmetic
+    (length(bin(x)) both engines, IntegralDivide ppm) — hash-exact."""
+    from html_parser_spark.ops.corpus import concentration_profile
+
+    docs = _docs(spark, sf_dir)
+    d = F.col("doc_id")
+    sized = docs.select(
+        F.concat(F.lit("h"), (d % 37).cast("string")).alias("host"),
+        (
+            F.length("text").cast("long")
+            * F.when(d % 37 == 0, F.lit(64)).otherwise(d % 13 + 1)
+        ).alias("n_bytes"),
+    )
+    return concentration_profile(sized, "host", "n_bytes")
+
+
+@contract(
+    oracle=r"""
+        WITH aug AS (
+          SELECT doc_id,
+                 CASE WHEN doc_id % 3 = 0
+                      THEN text || chr(10) || 'import os' || chr(10) ||
+                           '    x = 1;' || chr(10) || 'call();' || chr(10) ||
+                           chr(10) || 'plain words here'
+                      ELSE text END AS t
+          FROM documents
+        ), l AS (
+          SELECT doc_id, unnest(string_split(t, chr(10))) AS line FROM aug
+        ), nb AS (
+          SELECT doc_id, line FROM l WHERE trim(line) <> ''
+        ), agg AS (
+          SELECT doc_id,
+                 CAST(COUNT(*) AS BIGINT) AS n_lines,
+                 CAST(COUNT(*) FILTER (WHERE
+                      regexp_matches(line, '[;{}]\s*$')
+                   OR regexp_matches(line, '^(	|    )')
+                   OR regexp_matches(line,
+                      '^\s*(def |class |function |#include|import |from |return |var |const |let |public |private |for \(|while \(|if \()')
+                 ) AS BIGINT) AS code_lines
+          FROM nb GROUP BY doc_id
+        )
+        SELECT d.doc_id,
+               COALESCE(a.n_lines, 0) AS n_lines,
+               COALESCE(a.code_lines, 0) AS code_lines,
+               CAST(CASE WHEN COALESCE(a.n_lines, 0) > 0
+                         THEN (a.code_lines * 1000000) // a.n_lines
+                         ELSE 0 END AS BIGINT) AS code_ppm
+        FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
+    """,
+    plan=(
+        "code-vs-prose routing: split + two higher-order array filters + integer ppm, "
+        "ONE pure-codegen projection over the scan — zero shuffle, zero Python, no "
+        "join, no window"
+    ),
+    must=["*("],
+    must_not=["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join", "Window",
+              "CartesianProduct"],
+)
+def q_code_profile(spark, sf_dir):
+    """Code-vs-prose routing profile (ops/text.code_profile): per-doc
+    non-blank line count, code-line count (terminator / indentation /
+    declaration-keyword signals), exact integer code_ppm.  doc_id%3==0
+    docs get a 4-line code block (plus a blank line that must NOT count)
+    appended so both classes are populated; the oracle replays the three
+    detector regexes verbatim through DuckDB's RE2 over the identically
+    augmented text — a hash match proves the line split, blank-line
+    rule, and regex semantics agree across engines."""
+    from html_parser_spark.ops.text import code_profile
+
+    docs = _docs(spark, sf_dir)
+    d = F.col("doc_id")
+    code_block = (
+        "\nimport os\n    x = 1;\ncall();\n\nplain words here"
+    )
+    aug = docs.select(
+        "doc_id",
+        F.when(d % 3 == 0, F.concat(F.col("text"), F.lit(code_block)))
+        .otherwise(F.col("text"))
+        .alias("text"),
+    )
+    return code_profile(aug)
+
+
+@contract(
+    oracle="""
+        SELECT doc_id, TRUE AS ok FROM documents
+    """,
+    plan=(
+        "tokenizer decode QA: ONE MapInPandas encode stage, pure-codegen decode (two "
+        "replaces), ONE doc_id equi-join for the identity check; no window, no "
+        "cartesian product"
+    ),
+    must=["MapInPandas", "Join"],
+    must_not=["CartesianProduct", "Window", "BatchEvalPython"],
+)
+def q_bpe_roundtrip(spark, sf_dir):
+    """Tokenizer release-QA (ops/bpe.bpe_decode + bpe_roundtrip_check):
+    decode∘encode identity over the whole corpus.  Encode splits on
+    whitespace, lowercases, and marks word ends with </w>, so decode is
+    closed-form (drop inter-token spaces, </w> → space, trim) and MUST
+    reconstruct the whitespace-normalized lowercased source exactly.
+    The oracle states the identity property itself (every doc_id, ok =
+    TRUE): a Spark-side decode defect (dropped marker, wrong join order,
+    symbol damage) emits false rows and hash-mismatches."""
+    from html_parser_spark.ops.bpe import bpe_encode, bpe_roundtrip_check
+
+    docs = _docs(spark, sf_dir).select(
+        "doc_id", F.regexp_replace("text", "‖", "").alias("text")
+    )
+    return bpe_roundtrip_check(docs, bpe_encode(docs, _bpe_seed_merges()))
+
+
+@contract(
+    oracle=r"""
+        WITH e0 AS (
+          SELECT doc_id % 40 AS s, (doc_id * 7 + 3) % 40 AS t FROM documents
+          UNION ALL
+          SELECT doc_id % 40, (doc_id * 13 + 11) % 45 FROM documents
+        ), edges AS (
+          SELECT DISTINCT 'h' || s AS src, 'h' || t AS dst FROM e0 WHERE s <> t
+        ), deg AS (
+          SELECT src, COUNT(*) AS d FROM edges GROUP BY src
+        ), posts AS (
+          SELECT e.src, e.dst FROM edges e JOIN deg USING (src) WHERE deg.d <= 8
+        ), indeg AS (
+          SELECT dst, CAST(COUNT(*) AS BIGINT) AS deg FROM posts GROUP BY dst
+        ), pairs AS (
+          SELECT a.dst AS host_a, b.dst AS host_b,
+                 CAST(COUNT(*) AS BIGINT) AS common
+          FROM posts a JOIN posts b ON a.src = b.src AND a.dst < b.dst
+          GROUP BY 1, 2 HAVING COUNT(*) >= 2
+        )
+        SELECT p.host_a, p.host_b, p.common,
+               CAST((p.common * 10000) // (ia.deg + ib.deg - p.common) AS BIGINT)
+                 AS jaccard_bp
+        FROM pairs p
+        JOIN indeg ia ON ia.dst = p.host_a
+        JOIN indeg ib ON ib.dst = p.host_b
+    """,
+    plan=(
+        "related-hosts mining: distinct postings, out-degree df-cap semi-join pruning "
+        "directory hosts BEFORE the posting self-join (fan-out <= cap^2 per citer), "
+        "pair groupBy with map-side partials, two bounded degree joins; zero Python, "
+        "no window, no cartesian product"
+    ),
+    must=["HashAggregate", "Join"],
+    must_not=["CartesianProduct", "ArrowEvalPython", "BatchEvalPython", "Window"],
+)
+def q_cocitation(spark, sf_dir):
+    """Co-citation related hosts (ops/linkgraph.cocitation_pairs) over the
+    shared synthetic graph: hosts are related when the same third hosts
+    link to both (Dean & Henzinger 1999).  max_out_degree=8 actually
+    prunes the synthetic graph's widest citers (the stop-shingle df cap
+    of the graph), min_common=2; Jaccard over in-link sets in integer
+    basis points, in-degrees defined over the SAME capped postings.  The
+    oracle replays postings/cap/pair-join/degree-join verbatim —
+    hash-exact."""
+    docs = _docs(spark, sf_dir)
+    from html_parser_spark.ops.linkgraph import cocitation_pairs
+
+    edges = _synth_host_edges(docs)
+    return cocitation_pairs(edges, min_common=2, max_out_degree=8)
+
+
+@contract(
+    oracle=r"""
+        WITH u AS (
+          SELECT doc_id, text FROM documents
+          UNION ALL
+          SELECT doc_id + 10000,
+                 replace(text, ' ', '---') || ' ...!!!'
+          FROM documents
+        ), k AS (
+          SELECT doc_id,
+                 md5(regexp_replace(lower(text), '[^a-z0-9]+', '', 'g')) AS h
+          FROM u
+        )
+        SELECT h, CAST(COUNT(*) AS BIGINT) AS dup_count,
+               MIN(doc_id) AS canonical_id
+        FROM k GROUP BY h
+    """,
+    plan=(
+        "normalized exact dedup: the 32-byte md5 key is a pure-codegen projection "
+        "(lower + strip-all before the shuffle), ONE groupBy(h) with map-side partial "
+        "aggregation, min-id survivor election; zero Python, no join, no window"
+    ),
+    must=["HashAggregate", "Exchange hashpartitioning(h"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Join", "Window",
+              "CartesianProduct"],
+)
+def q_norm_dedup(spark, sf_dir):
+    """Normalized exact dedup (ops/dedup.normalized_duplicates): the
+    RefinedWeb/CCNet tier between byte-identical and MinHash — lowercase
+    + strip-all-non-alphanumerics + md5, so re-punctuated / re-flowed
+    syndication copies collapse.  Each doc gets a mangled twin at
+    doc_id+10000 (spaces → '---', trailing ' ...!!!') that must land in
+    the SAME group with the original as min-id canonical; the oracle
+    rebuilds the twins and the identical normalization chain in SQL."""
+    from html_parser_spark.ops.dedup import normalized_duplicates
+
+    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    twins = docs.select(
+        (F.col("doc_id") + 10000).alias("doc_id"),
+        F.concat(
+            F.regexp_replace("text", " ", "---"), F.lit(" ...!!!")
+        ).alias("text"),
+    )
+    return normalized_duplicates(docs.unionByName(twins))
+
+
+@contract(
+    oracle=r"""
+        WITH labeled AS (
+          SELECT doc_id AS _a, doc_id + 300 AS _b FROM documents WHERE doc_id < 200
+        ), pred AS (
+          SELECT DISTINCT LEAST(a, b) AS _a, GREATEST(a, b) AS _b FROM (
+            SELECT doc_id + 300 AS a, doc_id AS b FROM documents
+            WHERE doc_id < 200 AND doc_id % 5 <> 0
             UNION ALL
-            SELECT nationkey + 1000 AS nationkey FROM (
-              SELECT DISTINCT s_nationkey AS nationkey FROM supplier
-              EXCEPT
-              SELECT DISTINCT c_nationkey AS nationkey FROM customer
-            )
+            SELECT doc_id + 300, doc_id FROM documents
+            WHERE doc_id < 200 AND doc_id % 5 <> 0 AND doc_id % 11 = 0
             UNION ALL
-            SELECT nationkey + 2000 AS nationkey FROM (
-              SELECT DISTINCT c_nationkey AS nationkey FROM customer
-              INTERSECT
-              SELECT DISTINCT s_nationkey AS nationkey FROM supplier
-            )
-        """,
-        "q_rollup": """
-            SELECT coalesce(o_orderstatus, 'ALL') AS status,
-                   coalesce(o_orderpriority, 'ALL') AS priority,
-                   count(*) AS n,
-                   round(sum(o_totalprice), 2) AS total
-            FROM orders
-            GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-        """,
-        "q_string_battery": """
-            SELECT doc_id,
-                   upper(substr(text, 1, 10)) AS head_upper,
-                   len(replace(text, ' ', '')) AS len_no_spaces,
-                   CASE WHEN strpos(text, 'spark') IS NULL THEN 0
-                        ELSE strpos(text, 'spark') END AS spark_pos,
-                   reverse(substr(text, 1, 8)) AS head_rev,
-                   array_to_string(string_split(substr(text, 1, 20), ' '), '-') AS dashed
-            FROM documents
-        """,
-        "q_date_battery": """
-            SELECT year(o_orderdate) AS y, month(o_orderdate) AS m,
-                   count(*) AS orders,
-                   round(avg(o_totalprice), 2) AS avg_price,
-                   min(dayofmonth(o_orderdate)) AS first_dom
-            FROM orders
-            GROUP BY 1, 2
-        """,
-        "q_simhash": """
-            -- nibble-expand md5 hex to the 60-bit string, majority-vote per bit
-            WITH toks AS (
-              SELECT doc_id, list_distinct(regexp_split_to_array(trim(text), '\\s+')) AS t
-              FROM documents
-            ), tok AS (
-              SELECT doc_id, unnest(t) AS w, len(t) AS n FROM toks
-            ), tokbits AS (
-              SELECT doc_id, n,
-                     array_to_string(list_transform(range(1, 16), i ->
-                       ['0000','0001','0010','0011','0100','0101','0110','0111',
-                        '1000','1001','1010','1011','1100','1101','1110','1111']
-                       [strpos('0123456789abcdef', substring(md5(w), i, 1))]), '') AS tb
-              FROM tok
-            ), votes AS (
-              SELECT doc_id, b.b AS b, any_value(n) AS n,
-                     sum(CAST(substring(tb, CAST(b.b AS INT), 1) AS INT)) AS s
-              FROM tokbits, (SELECT unnest(range(1, 61)) AS b) b
-              GROUP BY doc_id, b.b
-            )
-            SELECT doc_id,
-                   string_agg(CASE WHEN s >= n / 2.0 THEN '1' ELSE '0' END,
-                              '' ORDER BY b) AS simhash
-            FROM votes GROUP BY doc_id
-        """,
-        "q_extract_text": """
-            -- symbolic reconstruction of the P20 innerText-flatten over the
-            -- deterministic synthetic format-A template (pages.py): per-line
-            -- whitespace runs collapse to one space, line tails are stripped
-            SELECT 'https://synth.example/' || lang || '/' || doc_id || '-0.html' AS url,
-                   'A' AS fmt,
-                   1 AS n_entries,
-                   rtrim(regexp_replace(
-                     'DOC' || doc_id || ' сущ. ' || substr(text, 1, 2000) ||
-                     '♦ ' || substr(text, 1, 80) || ' перен. ' || substr(text, 81, 200),
-                     ' {2,}', ' ', 'g')) AS extracted_text
-            FROM documents
-        """,
-        "q_extract_text_rich": """
-            -- 3-block pages: per-line collapse+trim (textflat's inner_text
-            -- line processing), blocks concatenated with no separator, final
-            -- 2+-whitespace collapse (the reduce+replaceAll of P20)
-            WITH base AS (
-              SELECT doc_id, lang,
-                trim(regexp_replace(
-                  'DOC' || doc_id || ' сущ. ' || substr(text, 1, 2000),
-                  '\\s+', ' ', 'g')) AS l1,
-                trim(regexp_replace(
-                  '♦ ' || substr(text, 1, 80) || ' перен. ' || substr(text, 81, 200),
-                  '\\s+', ' ', 'g')) AS l2
-              FROM documents
-            )
-            SELECT 'https://synth.example/' || lang || '/' || doc_id || '-0.html' AS url,
-                   'A' AS fmt,
-                   3 AS n_entries,
-                   regexp_replace(repeat(l1 || l2, 3), '\\s{2,}', ' ', 'g')
-                     AS extracted_text
-            FROM base
-        """,
-        "q_span_dedup": """
-            WITH t AS (
-              SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
-              FROM documents
-            ), c AS (
-              SELECT doc_id, w,
-                     unnest(generate_series(
-                       0, CAST(ceil(len(w) / 10.0) AS BIGINT) - 1)) AS chunk_idx
-              FROM t
-            ), s AS (
-              SELECT doc_id, chunk_idx,
-                     array_to_string(
-                       list_slice(w, chunk_idx * 10 + 1, chunk_idx * 10 + 10), ' ')
-                       AS chunk_text
-              FROM c
-            ), k AS (
-              SELECT doc_id, chunk_idx, chunk_text,
-                     row_number() OVER (PARTITION BY chunk_text
-                                        ORDER BY doc_id, chunk_idx) = 1 AS kept
-              FROM s
-            )
-            SELECT doc_id,
-                   CAST(sum(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT)
-                     AS n_spans_kept,
-                   CAST(sum(CASE WHEN kept THEN 0 ELSE 1 END) AS BIGINT)
-                     AS n_spans_dropped,
-                   coalesce(string_agg(CASE WHEN kept THEN chunk_text END,
-                                       ' ' ORDER BY chunk_idx), '') AS clean_text
-            FROM k GROUP BY doc_id
-        """,
-        "q_host_line_dedup": """
-            WITH docs AS (
-              SELECT doc_id, source AS host,
-                     replace(text, ' ', chr(10)) AS text
-              FROM documents
-            ), lines AS (
-              SELECT doc_id, host, md5(trim(line)) AS h
-              FROM (SELECT doc_id, host,
-                           unnest(string_split(text, chr(10))) AS line
-                    FROM docs) q
-              WHERE trim(line) <> ''
-            ), hp AS (
-              SELECT host, count(*) AS host_pages FROM docs GROUP BY host
-            ), lp AS (
-              SELECT host, h, count(DISTINCT doc_id) AS line_pages
-              FROM lines GROUP BY host, h
-            ), boiler AS (
-              SELECT lp.host, list(lp.h) AS hs
-              FROM lp JOIN hp USING (host)
-              WHERE lp.line_pages >= 2
-                AND lp.line_pages * 100 >= hp.host_pages * 60
-              GROUP BY lp.host
-            )
-            SELECT d.doc_id,
-                   CAST(len(string_split(d.text, chr(10))) AS BIGINT)
-                     AS n_lines,
-                   CAST(len(list_filter(string_split(d.text, chr(10)),
-                        x -> trim(x) <> '' AND
-                             list_contains(coalesce(b.hs, []), md5(trim(x)))))
-                        AS BIGINT) AS n_lines_removed,
-                   -- duckdb's array_to_string of an EMPTY list is NULL;
-                   -- Spark's concat_ws is '' — coalesce to the Spark shape
-                   coalesce(array_to_string(
-                     list_filter(string_split(d.text, chr(10)),
-                       x -> trim(x) = '' OR
-                            NOT list_contains(coalesce(b.hs, []),
-                                              md5(trim(x)))),
-                     chr(10)), '') AS clean_text
-            FROM docs d LEFT JOIN boiler b USING (host)
-        """,
-        "q_paragraph_dedup": """
-            -- paragraphs = the 5-token chunk_plan tiles (same tiling the
-            -- q_chunk_plan oracle proves), then global keep-first by the
-            -- (doc_id, pos) struct minimum and ordered reassembly
-            WITH t AS (
-              SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
-              FROM documents
-            ), c AS (
-              SELECT doc_id, w,
-                     unnest(generate_series(
-                       0, CAST(ceil(len(w) / 5.0) AS BIGINT) - 1)) AS pos
-              FROM t
-            ), paras AS (
-              SELECT doc_id, pos,
-                     array_to_string(
-                       list_slice(w, pos * 5 + 1, pos * 5 + 5), ' ') AS para
-              FROM c
-            ), ph AS (
-              SELECT doc_id, pos, para, md5(trim(para)) AS h
-              FROM paras WHERE trim(para) <> ''
-            ), firsts AS (
-              SELECT h, min(struct_pack(doc_id := doc_id, pos := pos)) AS fmin
-              FROM ph GROUP BY h
-            ), flagged AS (
-              SELECT ph.doc_id, ph.pos, ph.para,
-                     struct_pack(doc_id := ph.doc_id, pos := ph.pos) = f.fmin
-                       AS kept
-              FROM ph JOIN firsts f USING (h)
-            )
-            SELECT doc_id,
-                   count(*) AS n_paras,
-                   CAST(sum(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT)
-                     AS n_paras_kept,
-                   coalesce(string_agg(CASE WHEN kept THEN para END,
-                                       chr(10) || chr(10) ORDER BY pos), '')
-                     AS clean_text
-            FROM flagged GROUP BY doc_id
-        """,
-        "q_semantic_dedup": """
-            -- SemDeDup: the q_ivf_topk training/assignment CTE (one Lloyd
-            -- iteration, DECIMAL(30,15) means — bit-identical with Spark),
-            -- then in-cluster pairs only; drop-if-lower-id-duplicate at
-            -- round(cosine,4) >= 0.35
-            WITH e AS (SELECT vec_id, embedding FROM embeddings),
-            seed AS (SELECT vec_id AS cent_id,
-                            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-                     FROM e WHERE vec_id < 16),
-            asg0 AS (
-              SELECT vec_id, cent_id, embedding FROM (
-                SELECT a.vec_id, c.cent_id, a.embedding,
-                       row_number() OVER (PARTITION BY a.vec_id ORDER BY
-                         (list_dot_product(a.embedding, c.cv) /
-                          (sqrt(list_dot_product(a.embedding, a.embedding)) *
-                           sqrt(list_dot_product(c.cv, c.cv)))) DESC,
-                         c.cent_id ASC) AS rn
-                FROM e a CROSS JOIN seed c) WHERE rn = 1
-            ),
-            ex AS (
-              SELECT cent_id,
-                     unnest(range(1, len(embedding) + 1)) AS pos,
-                     unnest(list_transform(embedding, x -> CAST(x AS DOUBLE)))
-                       AS val
-              FROM asg0
-            ),
-            sums AS (
-              SELECT cent_id, pos,
-                     sum(CAST(val AS DECIMAL(30,15))) AS s, count(*) AS c
-              FROM ex GROUP BY 1, 2
-            ),
-            refined AS (
-              SELECT cent_id, list(CAST(s AS DOUBLE) / c ORDER BY pos) AS cv
-              FROM sums GROUP BY cent_id
-            ),
-            cents AS (
-              SELECT s.cent_id, coalesce(r.cv, s.cv) AS cv
-              FROM seed s LEFT JOIN refined r USING (cent_id)
-            ),
-            assign AS (
-              SELECT vec_id, cent_id FROM (
-                SELECT a.vec_id, c.cent_id,
-                       row_number() OVER (PARTITION BY a.vec_id ORDER BY
-                         (list_dot_product(a.embedding, c.cv) /
-                          (sqrt(list_dot_product(a.embedding, a.embedding)) *
-                           sqrt(list_dot_product(c.cv, c.cv)))) DESC,
-                         c.cent_id ASC) AS rn
-                FROM e a CROSS JOIN cents c) WHERE rn = 1
-            ),
-            sides AS (
-              SELECT a.vec_id, a.cent_id, e.embedding,
-                     sqrt(list_dot_product(e.embedding, e.embedding)) AS nrm
-              FROM assign a JOIN e USING (vec_id)
-            ),
-            dropped AS (
-              SELECT DISTINCT y.vec_id
-              FROM sides x JOIN sides y
-                ON x.cent_id = y.cent_id AND x.vec_id < y.vec_id
-              WHERE round(list_dot_product(x.embedding, y.embedding) /
-                          (x.nrm * y.nrm), 4) >= 0.35
-            )
-            SELECT a.vec_id, a.cent_id, (d.vec_id IS NULL) AS kept
-            FROM assign a LEFT JOIN dropped d USING (vec_id)
-        """,
-        "q_charset": """
-            -- EXPECTED charset + decoded text in closed form (each body is
-            -- a pure function of doc_id%7) — checks the JVM sniff chain and
-            -- the Arrow decode kernel without a second decoder
-            WITH x AS (
-              SELECT doc_id,
-                     CASE doc_id % 7
-                       WHEN 0 THEN 'utf-8'
-                       WHEN 1 THEN 'windows-1251'
-                       WHEN 2 THEN 'koi8-r'
-                       WHEN 3 THEN 'utf-8'
-                       WHEN 4 THEN 'windows-1252'
-                       WHEN 5 THEN 'windows-1252'
-                       ELSE 'utf-16le' END AS charset,
-                     CASE doc_id % 7
-                       WHEN 0 THEN 'привет мир #' || doc_id
-                       WHEN 1 THEN '<html><head><meta charset="windows-1251">'
-                                   || '</head><body>привет мир #' || doc_id
-                                   || '</body></html>'
-                       WHEN 2 THEN '<?xml version=''1.0'' encoding=''koi8-r''?>'
-                                   || '<d>мир #' || doc_id || '</d>'
-                       WHEN 3 THEN 'naïve café #' || doc_id
-                       WHEN 4 THEN 'café premium #' || doc_id
-                       WHEN 5 THEN '<meta http-equiv="Content-Type" content='
-                                   || '"text/html; charset=latin-1"><p>déjà #'
-                                   || doc_id
-                       ELSE 'utf16 text #' || doc_id END AS text
-              FROM documents
-            )
-            SELECT doc_id, charset, text, length(text) AS n_chars FROM x
-        """,
-        "q_inverted_index": """
-            WITH toks AS (
-              SELECT doc_id,
-                     unnest(regexp_split_to_array(trim(text), '\\s+')) AS term
-              FROM documents
-            )
-            SELECT term, doc_id, count(*) AS tf
-            FROM toks WHERE term <> '' GROUP BY term, doc_id
-        """,
-        "q_keyword_search": """
-            WITH toks AS (
-              SELECT doc_id,
-                     unnest(regexp_split_to_array(trim(text), '\\s+')) AS term
-              FROM documents
-            ), idx AS (
-              SELECT term, doc_id, count(*) AS tf
-              FROM toks WHERE term <> '' GROUP BY term, doc_id
-            ), scored AS (
-              SELECT doc_id, count(DISTINCT term) AS n_terms,
-                     CAST(sum(tf) AS BIGINT) AS score
-              FROM idx WHERE term IN ('table', 'spark')
-              GROUP BY doc_id HAVING count(DISTINCT term) = 2
-            )
-            SELECT doc_id, n_terms, score FROM scored
-            ORDER BY score DESC, doc_id LIMIT 10
-        """,
-        "q_bloom_seen": """
-            -- the Bloom filter's exact bit arithmetic replayed: salted-md5
-            -- 32-bit positions, 62-bit words (1<<63 overflows DuckDB's
-            -- signed BIGINT — both engines cap the in-word shift at 61)
-            WITH seen AS (
-              SELECT 'https://s' || (doc_id % 50) || '.com/p' || doc_id AS url
-              FROM documents WHERE doc_id < 400
-            ), spos AS (
-              SELECT list_reduce(list_transform(range(1, 9), j ->
-                       CAST(strpos('0123456789abcdef',
-                            substring(md5(url || '_' || i), j, 1)) - 1
-                            AS BIGINT)),
-                     (a, b) -> a * 16 + b) % 65536 AS p
-              FROM (SELECT url, unnest(range(0, 5)) AS i FROM seen)
-            ), words AS (
-              SELECT p // 62 AS word_idx,
-                     bit_or(CAST(1 AS BIGINT) << CAST(p % 62 AS INT)) AS word
-              FROM spos GROUP BY 1
-            ), cand AS (
-              SELECT 'https://s' || (doc_id % 50) || '.com/p' || doc_id AS url
-              FROM documents
-            ), cpos AS (
-              SELECT url,
-                     list_reduce(list_transform(range(1, 9), j ->
-                       CAST(strpos('0123456789abcdef',
-                            substring(md5(url || '_' || i), j, 1)) - 1
-                            AS BIGINT)),
-                     (a, b) -> a * 16 + b) % 65536 AS p
-              FROM (SELECT url, unnest(range(0, 5)) AS i FROM cand)
-            ), cj AS (
-              SELECT c.url,
-                     CASE WHEN w.word IS NOT NULL AND
-                          (w.word & (CAST(1 AS BIGINT)
-                                     << CAST(c.p % 62 AS INT))) <> 0
-                          THEN 1 ELSE 0 END AS hit
-              FROM cpos c LEFT JOIN words w ON c.p // 62 = w.word_idx
-            )
-            SELECT url, min(hit) = 1 AS maybe_seen FROM cj GROUP BY url
-        """,
-        "q_noindex_gate": """
-            -- EXPECTED flags in closed form (the robots meta is a pure
-            -- function of doc_id%5) — checks the DOM kernel's extraction
-            -- + the JVM REP-token interpretation, not a second parser
-            SELECT doc_id,
-                   CASE doc_id % 5
-                     WHEN 0 THEN 'noindex, follow'
-                     WHEN 1 THEN 'none'
-                     WHEN 2 THEN 'index, nofollow'
-                     WHEN 3 THEN NULL
-                     ELSE 'max-snippet:-1, noindex' END AS robots,
-                   CASE WHEN doc_id % 5 IN (0, 1, 4) THEN 1 ELSE 0 END
-                     AS noindex,
-                   CASE WHEN doc_id % 5 IN (1, 2) THEN 1 ELSE 0 END
-                     AS nofollow
-            FROM documents
-        """,
-        "q_recrawl_priority": """
-            WITH b AS (
-              SELECT 'https://r' || (doc_id % 10) || '.com/p' || doc_id
-                       AS url,
-                     1704067200 + doc_id + 3 * 604800 AS last_ts,
-                     CASE WHEN doc_id % 3 = 0 THEN 3
-                          WHEN doc_id % 3 = 1 THEN 0
-                          ELSE 1 END AS ch
-              FROM documents
-            ), e AS (
-              SELECT url, last_ts, ch,
-                     least(greatest(1814400 // greatest(ch, 1), 86400),
-                           2592000) AS est
-              FROM b
-            )
-            SELECT url,
-                   CAST(4 AS BIGINT) AS n_captures,
-                   CAST(ch AS BIGINT) AS n_changes,
-                   CAST(last_ts AS BIGINT) AS last_ts,
-                   CAST(est AS BIGINT) AS est_change_sec,
-                   CAST(last_ts + est AS BIGINT) AS next_due_ts,
-                   CAST(1709251200 - (last_ts + est) AS BIGINT)
-                     AS overdue_sec
-            FROM e
-        """,
-        "q_cdxj_roundtrip": """
-            -- every CDXJ field restated in closed form from documents —
-            -- never reading the shards — so the match proves the format
-            -- write -> range-sorted shards -> parse -> casts end-to-end
-            SELECT 'org,example,s' || (doc_id % 9) || ')/p/' || doc_id
-                     AS key,
-                   strftime(TIMESTAMP '2024-01-01 00:00:00'
-                              + to_seconds(doc_id), '%Y%m%d%H%M%S') AS ts14,
-                   'https://s' || (doc_id % 9) || '.example.org/p/' || doc_id
-                     AS url,
-                   'text/html' AS mime,
-                   CAST(200 + doc_id % 3 AS INTEGER) AS status,
-                   md5(text) AS digest,
-                   CAST(octet_length(encode(text)) AS BIGINT) AS length,
-                   CAST(doc_id * 1000 AS BIGINT) AS "offset",
-                   'part-0000' || (doc_id % 2) || '.warc.gz' AS filename
-            FROM documents
-        """,
-        "q_pdf_text": """
-            -- expected extraction restated symbolically from the SOURCE
-            -- text (writer input), never from the PDF bytes — a hash match
-            -- proves the binary parse (objects, FlateDecode, 4 operator
-            -- styles, escapes, UTF-16BE, kerning, line assembly) round-trips
-            SELECT doc_id,
-                   '1.4' AS pdf_version,
-                   CAST(2 AS INTEGER) AS n_pages,
-                   CAST(length(substr(text, 1, 120)) + 2 AS INTEGER)
-                     AS n_chars,
-                   substr(text, 1, 40) || chr(10) || substr(text, 41, 40)
-                     || chr(10) || substr(text, 81, 40) AS pdf_text
-            FROM documents
-        """,
-        "q_mime_sniff": """
-            -- expected label per payload family in closed form — the match
-            -- proves every magic-byte branch + the html tag scan + the
-            -- binary-byte text/plain split fire on REAL bytes
-            SELECT doc_id,
-                   CASE doc_id % 12
-                     WHEN 0 THEN 'application/pdf'
-                     WHEN 1 THEN 'image/png'
-                     WHEN 2 THEN 'image/gif'
-                     WHEN 3 THEN 'image/jpeg'
-                     WHEN 4 THEN 'audio/wav'
-                     WHEN 5 THEN 'application/gzip'
-                     WHEN 6 THEN 'application/zip'
-                     WHEN 7 THEN 'text/html'
-                     WHEN 8 THEN 'text/xml'
-                     WHEN 9 THEN 'text/plain'
-                     WHEN 10 THEN 'audio/mpeg'
-                     ELSE 'application/octet-stream'
-                   END AS mime
-            FROM documents
-        """,
-        "q_exact_substring": """
-            -- full semantic replay: overlapping 8-token windows -> md5 ->
-            -- global min-occurrence election -> gaps-and-islands interval
-            -- merge -> token cut -> ordered reassembly
-            WITH base AS (
-              SELECT doc_id,
-                     'cookie banner accept all our terms and privacy policy today '
-                     || text
-                     || CASE WHEN doc_id % 3 = 0
-                          THEN ' subscribe to our newsletter for more updates daily'
-                          ELSE '' END AS t
-              FROM documents
-            ),
-            docs2 AS (
-              SELECT doc_id, regexp_split_to_array(trim(t), '\\s+') AS arr
-              FROM base
-            ),
-            grams AS (
-              SELECT doc_id, CAST(u.i AS BIGINT) AS pos,
-                     md5(array_to_string(arr[u.i+1 : u.i+8], ' ')) AS h
-              FROM docs2,
-                   LATERAL (SELECT unnest(range(0, len(arr) - 7)) AS i) AS u
-              WHERE len(arr) >= 8
-            ),
-            firsts AS (
-              SELECT h, count(*) AS c,
-                     min(doc_id * 1000000 + pos) AS mk
-              FROM grams GROUP BY h
-            ),
-            dups AS (
-              SELECT g.doc_id, g.pos AS s, g.pos + 8 AS e
-              FROM grams g JOIN firsts f USING (h)
-              WHERE f.c > 1 AND g.doc_id * 1000000 + g.pos <> f.mk
-            ),
-            flag AS (
-              SELECT doc_id, s, e,
-                     CASE WHEN s > coalesce(max(e) OVER (
-                              PARTITION BY doc_id ORDER BY s, e
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                                       AND 1 PRECEDING), -1)
-                          THEN 1 ELSE 0 END AS ng
-              FROM dups
-            ),
-            grp AS (
-              SELECT doc_id, s, e,
-                     sum(ng) OVER (PARTITION BY doc_id ORDER BY s, e
-                                   ROWS BETWEEN UNBOUNDED PRECEDING
-                                            AND CURRENT ROW) AS gid
-              FROM flag
-            ),
-            islands AS (
-              SELECT doc_id, min(s) AS s, max(e) AS e
-              FROM grp GROUP BY doc_id, gid
-            ),
-            toks AS (
-              SELECT doc_id,
-                     CAST(generate_subscripts(arr, 1) - 1 AS BIGINT) AS i,
-                     unnest(arr) AS tok
-              FROM docs2
-            ),
-            kept AS (
-              SELECT t.doc_id, t.i, t.tok
-              FROM toks t LEFT JOIN islands v
-                ON t.doc_id = v.doc_id AND t.i >= v.s AND t.i < v.e
-              WHERE v.doc_id IS NULL
-            )
-            SELECT d.doc_id,
-                   CAST(len(d.arr) AS BIGINT) AS n_tokens,
-                   CAST(len(d.arr) - coalesce(kc.nk, 0) AS BIGINT)
-                     AS n_dropped,
-                   CAST(coalesce(iv.n_iv, 0) AS BIGINT) AS n_intervals,
-                   coalesce(kt.txt, '') AS clean_text
-            FROM docs2 d
-            LEFT JOIN (SELECT doc_id, count(*) AS n_iv FROM islands
-                       GROUP BY doc_id) iv USING (doc_id)
-            LEFT JOIN (SELECT doc_id, count(*) AS nk FROM kept
-                       GROUP BY doc_id) kc USING (doc_id)
-            LEFT JOIN (SELECT doc_id, string_agg(tok, ' ' ORDER BY i) AS txt
-                       FROM kept GROUP BY doc_id) kt USING (doc_id)
-        """,
-        "q_url_parts": """
-            -- EXPECTED parse output in closed form (urls are pure functions
-            -- of doc_id/source/lang) — checks Spark's parse_url, not a
-            -- second parser
-            SELECT doc_id,
-                   CASE WHEN doc_id % 2 = 0 THEN 'https' ELSE 'http' END AS scheme,
-                   'w' || (doc_id % 7) || '.' || source || '.example.' ||
-                     (['org','net','com'])[(doc_id % 3) + 1] AS host,
-                   '/a/' || (doc_id % 5) || '/p' || doc_id AS path,
-                   CASE WHEN doc_id % 4 = 0
-                        THEN 'q=' || doc_id || '&lang=' || lang END AS "query",
-                   'example.' || (['org','net','com'])[(doc_id % 3) + 1]
-                     AS registered_domain
-            FROM documents
-        """,
-        "q_domain_stats": """
-            WITH u AS (
-              SELECT 'w' || (doc_id % 7) || '.' || source || '.example.' ||
-                       (['org','net','com'])[(doc_id % 3) + 1] AS host,
-                     octet_length(encode(text)) AS nb
-              FROM documents
-            )
-            SELECT host,
-                   CAST(count(*) AS BIGINT) AS n_docs,
-                   CAST(sum(nb) AS BIGINT) AS total_bytes,
-                   round(count(*) / CAST((SELECT count(*) FROM documents) AS DOUBLE),
-                         4) AS doc_share
-            FROM u GROUP BY host
-        """,
-        "q_blocklist": """
-            WITH u AS (
-              SELECT lang,
-                     'w' || (doc_id % 7) || '.' || source || '.example.' ||
-                       (['org','net','com'])[(doc_id % 3) + 1] AS host
-              FROM documents
-            ),
-            top2 AS (
-              SELECT host FROM u GROUP BY host
-              ORDER BY count(*) DESC, host ASC LIMIT 2
-            )
-            SELECT lang, CAST(count(*) AS BIGINT) AS n_docs_kept
-            FROM u WHERE host NOT IN (SELECT host FROM top2)
-            GROUP BY lang
-        """,
-        "q_psl_domain": """
-            -- expected registered domain per suffix branch, in closed form
-            -- (k=6 private-section github.io keeps the user label; k=7 is
-            -- a bare public suffix with no registrable part)
-            SELECT doc_id,
-                   CASE WHEN doc_id % 8 = 7 THEN 'co.uk'
-                        ELSE 'h' || doc_id ||
-                          (['.blogs.example.com', '.example.co.uk',
-                            '.shop.example.com.au', '.example.unknowntld',
-                            '.www.example.com.br', '.portal.example.gob.mx',
-                            '.github.io'])[(doc_id % 8) + 1]
-                   END AS host,
-                   CASE doc_id % 8
-                     WHEN 0 THEN 'example.com'
-                     WHEN 1 THEN 'example.co.uk'
-                     WHEN 2 THEN 'example.com.au'
-                     WHEN 3 THEN 'example.unknowntld'
-                     WHEN 4 THEN 'example.com.br'
-                     WHEN 5 THEN 'example.gob.mx'
-                     WHEN 6 THEN 'h' || doc_id || '.github.io'
-                     ELSE 'co.uk'
-                   END AS registered_domain
-            FROM documents
-        """,
-        "q_url_canon": """
-            -- expected canonical form in closed form from doc_id
-            SELECT doc_id,
-                   (CASE WHEN doc_id % 2 = 0 THEN 'HTTPS' ELSE 'http' END)
-                   || '://W' || (doc_id % 7) || '.' || upper(source)
-                   || '.Example.' || (['org','net','com'])[(doc_id % 3) + 1]
-                   || (CASE WHEN doc_id % 4 = 0
-                            THEN CASE WHEN doc_id % 2 = 0 THEN ':443' ELSE ':80' END
-                            WHEN doc_id % 4 = 1 THEN ':8080' ELSE '' END)
-                   || (CASE WHEN doc_id % 6 = 0 THEN '' ELSE '/a/p' || doc_id END)
-                   || (CASE WHEN doc_id % 3 = 0 THEN '?q=' || doc_id ELSE '' END)
-                   || (CASE WHEN doc_id % 5 = 0 THEN '#s' ELSE '' END) AS raw_url,
-                   (CASE WHEN doc_id % 2 = 0 THEN 'https' ELSE 'http' END)
-                   || '://w' || (doc_id % 7) || '.' || lower(source)
-                   || '.example.' || (['org','net','com'])[(doc_id % 3) + 1]
-                   || (CASE WHEN doc_id % 4 = 1 THEN ':8080' ELSE '' END)
-                   || (CASE WHEN doc_id % 6 = 0 THEN '/' ELSE '/a/p' || doc_id END)
-                   || (CASE WHEN doc_id % 3 = 0 THEN '?q=' || doc_id ELSE '' END)
-                     AS canonical_url
-            FROM documents
-        """,
-        "q_canonical_dedup": """
-            -- replay the election as a window rank: self-canonical first,
-            -- then newest, then url/body ascending (total order)
-            WITH c AS (
-              SELECT 'https://ex.org/g' || (doc_id // 4) || '/v' || (doc_id % 4)
-                       AS url,
-                     CASE WHEN doc_id % 4 = 3 THEN NULL
-                          WHEN (doc_id // 4) % 2 = 0
-                            THEN 'https://ex.org/g' || (doc_id // 4) || '/v0'
-                          ELSE 'https://ex.org/g' || (doc_id // 4) || '/vX'
-                     END AS canonical,
-                     TIMESTAMP '2024-01-01 00:00:00' + to_seconds(doc_id * 3600)
-                       AS warc_ts,
-                     md5(text) AS body
-              FROM documents
-            ), g AS (
-              SELECT coalesce(canonical, url) AS canonical_url, url, warc_ts,
-                     body,
-                     count(*) OVER (PARTITION BY coalesce(canonical, url))
-                       AS n_captures,
-                     row_number() OVER (
-                       PARTITION BY coalesce(canonical, url)
-                       ORDER BY CASE WHEN url = coalesce(canonical, url)
-                                     THEN 0 ELSE 1 END,
-                                warc_ts DESC, url, body
-                     ) AS rn
-              FROM c
-            )
-            SELECT canonical_url, CAST(n_captures AS BIGINT) AS n_captures,
-                   url, strftime(warc_ts, '%Y-%m-%dT%H:%M:%SZ') AS warc_date,
-                   body
-            FROM g WHERE rn = 1
-        """,
-        "q_sentence_split": """
-            -- identical sentinel-injection split: terminal punct +
-            -- whitespace becomes punct + U+241E, split, trim, drop empty
-            WITH src AS (
-              SELECT doc_id,
-                     'First sentence number ' || doc_id
-                       || ' here.  Second one follows!   Is this the third? '
-                       || text || '.' AS t
-              FROM documents
-            ), sp AS (
-              SELECT doc_id,
-                     list_filter(
-                       list_transform(
-                         string_split(
-                           regexp_replace(trim(t), '([.!?])\\s+', '\\1␞', 'g'),
-                           '␞'),
-                         x -> trim(x)),
-                       x -> len(x) > 0) AS sents
-              FROM src
-            )
-            SELECT doc_id,
-                   CAST(unnest(generate_series(0, len(sents) - 1)) AS BIGINT)
-                     AS sent_idx,
-                   unnest(sents) AS sentence,
-                   CAST(len(regexp_split_to_array(unnest(sents), '\\s+'))
-                        AS BIGINT) AS n_sent_tokens
-            FROM sp
-        """,
-        "q_script_profile": """
-            -- RE2 script classes over the same closed-form mixed-script
-            -- text; dominant = alphabetically first script at the max
-            WITH src AS (
-              SELECT doc_id,
-                     CASE WHEN doc_id % 97 = 0 THEN '0123 4567 !!'
-                          ELSE text
-                            || repeat(' привет мир', CAST(doc_id % 40 AS INT))
-                            || CASE WHEN doc_id % 3 = 1 THEN ' γειά σου κόσμε'
-                                    WHEN doc_id % 3 = 2 THEN ' 你好世界 こんにちは'
-                                    ELSE '' END
-                     END AS t
-              FROM documents
-            ), c AS (
-              SELECT doc_id,
-                     CAST(len(regexp_extract_all(t, '\\p{Arabic}')) AS BIGINT)
-                       AS n_arabic,
-                     CAST(len(regexp_extract_all(t,
-                       '[\\p{Han}\\p{Hiragana}\\p{Katakana}\\p{Hangul}]'))
-                       AS BIGINT) AS n_cjk,
-                     CAST(len(regexp_extract_all(t, '\\p{Cyrillic}')) AS BIGINT)
-                       AS n_cyrillic,
-                     CAST(len(regexp_extract_all(t, '\\p{Greek}')) AS BIGINT)
-                       AS n_greek,
-                     CAST(len(regexp_extract_all(t, '\\p{Latin}')) AS BIGINT)
-                       AS n_latin
-              FROM src
-            )
-            SELECT doc_id, n_arabic, n_cjk, n_cyrillic, n_greek, n_latin,
-                   n_arabic + n_cjk + n_cyrillic + n_greek + n_latin
-                     AS n_script_chars,
-                   CASE WHEN n_arabic + n_cjk + n_cyrillic + n_greek
-                             + n_latin = 0 THEN NULL
-                        WHEN n_arabic = greatest(n_arabic, n_cjk, n_cyrillic,
-                                                 n_greek, n_latin)
-                          THEN 'arabic'
-                        WHEN n_cjk = greatest(n_arabic, n_cjk, n_cyrillic,
-                                              n_greek, n_latin) THEN 'cjk'
-                        WHEN n_cyrillic = greatest(n_arabic, n_cjk,
-                                                   n_cyrillic, n_greek,
-                                                   n_latin) THEN 'cyrillic'
-                        WHEN n_greek = greatest(n_arabic, n_cjk, n_cyrillic,
-                                                n_greek, n_latin)
-                          THEN 'greek'
-                        ELSE 'latin'
-                   END AS dominant_script
-            FROM c
-        """,
-        "q_lm_score": _LM_SCORE_SQL,
-        "q_lm_buckets": _LM_BUCKETS_SQL,
-        "q_readability": """
-            -- identical regexp counts + floored BIGINT divisions; the
-            -- [.!?]+ / vowel-group runs count maximal matches in both
-            -- engines (greedy +), so the counts agree exactly
-            WITH toks AS (
-              SELECT doc_id, text,
-                     list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                                 x -> x <> '') AS t
-              FROM documents
-            ), c AS (
-              SELECT doc_id,
-                     CAST(len(t) AS BIGINT) AS n_words,
-                     CAST(CASE WHEN len(t) > 0 THEN greatest(
-                       len(regexp_extract_all(text, '[.!?]+')), 1)
-                       ELSE 0 END AS BIGINT) AS n_sentences,
-                     CAST(len(regexp_extract_all(text, '[aeiouyAEIOUY]+'))
-                       AS BIGINT) AS n_syllable_groups,
-                     CAST(len(list_distinct(t)) AS BIGINT) AS n_distinct
-              FROM toks
-            )
-            SELECT doc_id, n_words, n_sentences, n_syllable_groups,
-                   CAST(CASE WHEN n_words > 0
-                        THEN (n_distinct * 10000) // n_words
-                        ELSE 0 END AS BIGINT) AS ttr_x10000,
-                   CAST(CASE WHEN n_words > 0
-                        THEN (39 * n_words) // n_sentences
-                             + (1180 * n_syllable_groups) // n_words - 1559
-                        ELSE 0 END AS BIGINT) AS fk_x100
-            FROM c
-        """,
-        "q_hll_distinct": """
-            -- identical md5 bucket/rank registers replayed on the FULL
-            -- corpus (valid: the Spark side merges two halves, and
-            -- union-max == global max — the lossless-merge identity),
-            -- then the identical fixed-order BIGINT raw-HLL estimate
-            -- (t = alpha_m·m² pre-scaled, S includes 2^33 per untouched
-            -- register)
-            WITH h AS (
-              SELECT lang, md5('hll:' || CAST(doc_id AS VARCHAR)) AS h
-              FROM documents
-            ), br AS (
-              SELECT lang,
-                     CAST('0x' || substring(h, 1, 2) AS BIGINT) % 64 AS bucket,
-                     CAST('0x' || substring(h, 3, 8) AS BIGINT) AS r32
-              FROM h
-            ), regs AS (
-              SELECT lang, bucket,
-                     CAST(max(CASE WHEN r32 = 0 THEN 33
-                              ELSE 33 - length(bin(r32)) END) AS BIGINT) AS reg
-              FROM br GROUP BY lang, bucket
-            ), pg AS (
-              SELECT lang,
-                     CAST(sum(CAST(1 AS BIGINT) << CAST(33 - reg AS INT))
-                       AS BIGINT) AS s_present,
-                     CAST(count(*) AS BIGINT) AS n_present
-              FROM regs GROUP BY lang
-            )
-            SELECT lang,
-                   CAST((CAST(2905 AS BIGINT) * CAST(8589934592 AS BIGINT))
-                        // (s_present
-                            + (64 - n_present) * CAST(8589934592 AS BIGINT))
-                     AS BIGINT) AS est_distinct,
-                   CAST(64 - n_present AS BIGINT) AS zero_registers
-            FROM pg
-        """,
-        "q_heavy_hitters": """
-            -- identical 4x1024 count-min cells (md5 cell addressing),
-            -- min-over-rows point estimates for the probe tokens of
-            -- docs 0-9, joined to the exact counts so the
-            -- never-underestimate guarantee sits in the hashed values
-            WITH toks AS (
-              SELECT doc_id,
-                     unnest(list_filter(
-                       regexp_split_to_array(lower(text), '\\s+'),
-                       x -> len(x) > 0)) AS tok
-              FROM documents
-            ), cells AS (
-              SELECT j AS row,
-                     CAST('0x' || substring(
-                       md5('cms:' || CAST(j AS VARCHAR) || ':' || tok), 1, 8)
-                       AS BIGINT) % 1024 AS col,
-                     CAST(count(*) AS BIGINT) AS cnt
-              FROM toks CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS j)
-              GROUP BY 1, 2
-            ), probes AS (
-              SELECT DISTINCT tok AS item FROM toks WHERE doc_id < 10
-            ), addr AS (
-              SELECT item, j AS row,
-                     CAST('0x' || substring(
-                       md5('cms:' || CAST(j AS VARCHAR) || ':' || item), 1, 8)
-                       AS BIGINT) % 1024 AS col
-              FROM probes CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS j)
-            ), est AS (
-              SELECT item, CAST(min(coalesce(c.cnt, 0)) AS BIGINT) AS est
-              FROM addr a LEFT JOIN cells c USING (row, col)
-              GROUP BY item
-            ), truth AS (
-              SELECT tok, CAST(count(*) AS BIGINT) AS exact_cnt
-              FROM toks GROUP BY tok
-            )
-            SELECT e.item, e.est, t.exact_cnt
-            FROM est e JOIN truth t ON e.item = t.tok
-        """,
-        "q_vocab_growth": """
-            -- the curve counted directly per prefix: total occurrences
-            -- with doc_id <= t, distinct tokens whose FIRST doc <= t
-            -- (identical lowercase whitespace tokenization)
-            WITH toks AS (
-              SELECT doc_id,
-                     unnest(list_filter(
-                       regexp_split_to_array(lower(text), '\\s+'),
-                       x -> len(x) > 0)) AS tok
-              FROM documents
-            ), firsts AS (
-              SELECT tok, min(doc_id) AS first_doc FROM toks GROUP BY tok
-            ), thr AS (
-              SELECT unnest([9, 24, 49, 99, 249, 499]) AS threshold
-            )
-            SELECT CAST(t.threshold AS BIGINT) AS threshold,
-                   CAST((SELECT count(*) FROM toks
-                         WHERE doc_id <= t.threshold) AS BIGINT) AS n_tokens,
-                   CAST((SELECT count(*) FROM firsts
-                         WHERE first_doc <= t.threshold) AS BIGINT)
-                     AS n_distinct
-            FROM thr t
-        """,
-        "q_dist_drift": """
-            -- identical parity split, bucket counts, and ppm integer
-            -- division (// ≡ Spark div on non-negative operands)
-            WITH a AS (SELECT lang, count(*) AS n_a FROM documents
-                       WHERE doc_id % 2 = 0 GROUP BY lang),
-                 b AS (SELECT lang, count(*) AS n_b FROM documents
-                       WHERE doc_id % 2 = 1 GROUP BY lang),
-                 j AS (SELECT coalesce(a.lang, b.lang) AS lang,
-                              coalesce(a.n_a, 0) AS n_a,
-                              coalesce(b.n_b, 0) AS n_b
-                       FROM a FULL OUTER JOIN b ON a.lang = b.lang),
-                 t AS (SELECT sum(n_a) AS ta, sum(n_b) AS tb FROM j),
-                 s AS (SELECT j.lang, j.n_a, j.n_b,
-                              coalesce((j.n_a * 1000000) // nullif(t.ta, 0), 0)
-                                AS share_a_ppm,
-                              coalesce((j.n_b * 1000000) // nullif(t.tb, 0), 0)
-                                AS share_b_ppm
-                       FROM j, t)
-            SELECT lang,
-                   CAST(n_a AS BIGINT) AS n_a,
-                   CAST(n_b AS BIGINT) AS n_b,
-                   CAST(share_a_ppm AS BIGINT) AS share_a_ppm,
-                   CAST(share_b_ppm AS BIGINT) AS share_b_ppm,
-                   CAST(abs(share_a_ppm - share_b_ppm) AS BIGINT)
-                     AS delta_ppm
-            FROM s
-        """,
-        "q_freq_spectrum": """
-            -- identical word-trigram shingling ('w1_w2_w3' tokens) and
-            -- tokenization (lowercase, \\s+ split, drop empty), spectrum
-            -- head at freq<=8, ppm vs FULL vocab/token totals
-            WITH w AS (
-              SELECT list_filter(
-                       regexp_split_to_array(lower(text), '\\s+'),
-                       x -> len(x) > 0) AS w
-              FROM documents
-            ), toks AS (
-              SELECT unnest(list_transform(range(1, len(w) - 1),
-                       i -> w[i] || '_' || w[i+1] || '_' || w[i+2])) AS tok
-              FROM w
-              WHERE len(w) >= 3
-            ), freqs AS (
-              SELECT tok, count(*) AS cnt FROM toks GROUP BY tok
-            ), tot AS (
-              SELECT count(*) AS n_ty, sum(cnt) AS n_to FROM freqs
-            ), spec AS (
-              SELECT cnt AS freq, count(*) AS n_types FROM freqs
-              WHERE cnt <= 8 GROUP BY cnt
-            )
-            SELECT CAST(s.freq AS BIGINT) AS freq,
-                   CAST(s.n_types AS BIGINT) AS n_types,
-                   CAST(s.freq * s.n_types AS BIGINT) AS n_tokens,
-                   CAST(coalesce((s.n_types * 1000000) // t.n_ty, 0)
-                     AS BIGINT) AS types_ppm,
-                   CAST(coalesce((s.freq * s.n_types * 1000000) // t.n_to,
-                     0) AS BIGINT) AS tokens_ppm
-            FROM spec s, tot t
-        """,
-        "q_mojibake": f"""
-            -- identical planted damage, literal-codepoint signature class
-            -- (compiled by RE2 here, Java regex on the Spark side), and
-            -- ppm IntegralDivide with the same null-to-zero fold
-            WITH d AS (
-              SELECT doc_id,
-                     text
-                       || (CASE WHEN doc_id % 5 = 0
-                                THEN ' Ã©â€™' ELSE '' END)
-                       || (CASE WHEN doc_id % 11 = 0
-                                THEN ' �' ELSE '' END) AS text
-              FROM documents
-            ), c AS (
-              SELECT doc_id,
-                     CAST(length(text) AS BIGINT) AS n_chars,
-                     CAST(len(regexp_extract_all(text, '{MOJIBAKE_RE}'))
-                       AS BIGINT) AS n_double_encoded,
-                     CAST(len(regexp_extract_all(text, '�'))
-                       AS BIGINT) AS n_replacement
-              FROM d
-            )
-            SELECT doc_id, n_chars, n_double_encoded, n_replacement,
-                   CAST(coalesce(
-                     ((n_double_encoded + n_replacement) * 1000000)
-                       // nullif(n_chars, 0), 0) AS BIGINT) AS mojibake_ppm
-            FROM c
-        """,
-        "q_exact_quantiles": """
-            -- identical tokenization, histogram cumulative, and the
-            -- cross-multiplied covering test (no division anywhere)
-            WITH d AS (
-              SELECT lang,
-                     len(list_filter(
-                       regexp_split_to_array(lower(text), '\\s+'),
-                       x -> len(x) > 0)) AS v
-              FROM documents
-            ), h AS (
-              SELECT lang, v, count(*) AS n FROM d GROUP BY lang, v
-            ), c AS (
-              SELECT lang, v,
-                     sum(n) OVER (PARTITION BY lang ORDER BY v) AS n_le,
-                     sum(n) OVER (PARTITION BY lang) AS total
-              FROM h
-            ), q AS (
-              SELECT unnest([250000, 500000, 900000, 990000]) AS q_ppm
-            ), cov AS (
-              SELECT c.lang, q.q_ppm, c.v, c.n_le, c.total
-              FROM c, q
-              WHERE c.n_le * 1000000 >= q.q_ppm * c.total
-            ), best AS (
-              SELECT lang, q_ppm, min(v) AS value
-              FROM cov GROUP BY lang, q_ppm
-            )
-            SELECT b.lang,
-                   CAST(b.q_ppm AS BIGINT) AS q_ppm,
-                   CAST(b.value AS BIGINT) AS value,
-                   CAST(c.n_le AS BIGINT) AS n_le,
-                   CAST(c.total AS BIGINT) AS total
-            FROM best b JOIN c ON b.lang = c.lang AND b.value = c.v
-        """,
-        "q_containment": """
-            -- identical shingle postings, df≤5 stop-shingle cap, common≥2
-            -- candidate pairs, then exact intersect sizes in integer basis
-            -- points (floor division, no floats anywhere)
-            WITH toks AS (
-              SELECT doc_id,
-                     regexp_split_to_array(trim(text), '\\s+') AS t
-              FROM documents
-            ), sh AS (
-              SELECT doc_id,
-                     list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                                    for i in range(1, len(t) - 1)]) AS s
-              FROM toks
-            ), ex AS (
-              SELECT doc_id, unnest(s) AS g FROM sh
-            ), rare AS (
-              SELECT g FROM ex GROUP BY g HAVING COUNT(*) <= 5
-            ), exf AS (
-              SELECT e.doc_id, e.g FROM ex e JOIN rare USING (g)
-            ), cand AS (
-              SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-              FROM exf a JOIN exf b
-                ON a.g = b.g AND a.doc_id < b.doc_id
-              GROUP BY 1, 2 HAVING COUNT(*) >= 2
-            ), ver AS (
-              SELECT c.doc_a, c.doc_b,
-                     CAST(len(list_intersect(sa.s, sb.s)) AS BIGINT) AS common,
-                     CAST(len(sa.s) AS BIGINT) AS na,
-                     CAST(len(sb.s) AS BIGINT) AS nb
-              FROM cand c
-              JOIN sh sa ON sa.doc_id = c.doc_a
-              JOIN sh sb ON sb.doc_id = c.doc_b
-            )
-            SELECT doc_a, doc_b, common,
-                   CAST(CASE WHEN na > 0 THEN (common * 10000) // na
-                        ELSE 0 END AS BIGINT) AS cont_a_in_b_bp,
-                   CAST(CASE WHEN nb > 0 THEN (common * 10000) // nb
-                        ELSE 0 END AS BIGINT) AS cont_b_in_a_bp
-            FROM ver
-            WHERE GREATEST(
-                    CASE WHEN na > 0 THEN (common * 10000) // na ELSE 0 END,
-                    CASE WHEN nb > 0 THEN (common * 10000) // nb ELSE 0 END
-                  ) >= 300
-        """,
-        "q_trustrank": _trustrank_oracle_sql(3),
-        "q_click_depth": _seed_distance_oracle_sql(3),
-        "q_pub_dates": _PUB_DATES_ORACLE,
-        "q_concentration": _CONCENTRATION_ORACLE,
-        "q_code_profile": _CODE_PROFILE_ORACLE,
-        "q_bpe_roundtrip": _BPE_ROUNDTRIP_ORACLE,
-        "q_cocitation": _COCITATION_ORACLE,
-        "q_norm_dedup": _NORM_DEDUP_ORACLE,
-        "q_dedup_prf": _DEDUP_PRF_ORACLE,
-        "q_gate_ablation": _GATE_ABLATION_ORACLE,
-        "q_frequent_lines": _FREQUENT_LINES_ORACLE,
-        "q_strip_lines": _STRIP_LINES_ORACLE,
-        "q_redirects": _REDIRECTS_ORACLE,
-        "q_url_survival": """
-            -- re-derive the capture stream from the same doc_id arithmetic
-            -- (the even-doc duplicate birth capture is subsumed by DISTINCT,
-            -- exactly as in the Spark op), then cohort counts + integral-
-            -- divide survival ppm.
-            WITH caps AS (
-              SELECT DISTINCT
-                     'https://h' || CAST(doc_id % 7 AS VARCHAR) ||
-                       '.com/p' || CAST(doc_id AS VARCHAR) AS url,
-                     CAST(s AS BIGINT) AS snap
-              FROM documents,
-                   unnest(generate_series(doc_id % 3,
-                                          doc_id % 3 + doc_id % 4)) AS t(s)
-            ), birth AS (
-              SELECT url, min(snap) AS birth_snap FROM caps GROUP BY 1
-            ), aged AS (
-              SELECT b.birth_snap, c.snap - b.birth_snap AS age
-              FROM caps c JOIN birth b ON c.url = b.url
-            ), counts AS (
-              SELECT birth_snap, age, CAST(count(*) AS BIGINT) AS n_urls
-              FROM aged GROUP BY 1, 2
-            ), cohort AS (
-              SELECT birth_snap AS _b, n_urls AS _size
-              FROM counts WHERE age = 0
-            )
-            SELECT birth_snap, age, n_urls,
-                   CAST(n_urls * 1000000 // _size AS BIGINT) AS survival_ppm
-            FROM counts JOIN cohort ON birth_snap = _b
-        """,
-        "q_term_blocklist": """
-            -- identical text rebuild, token-level match replay: lowercase,
-            -- split on non-alnum runs, distinct, intersect with the sorted
-            -- term list, first hit for explainability.
-            WITH src AS (
-              SELECT doc_id,
-                     text ||
-                     CASE WHEN doc_id % 7 = 0 THEN ' nastyTerm.' ELSE '' END ||
-                     CASE WHEN doc_id % 13 = 0 THEN ' NASTYTERM2' ELSE '' END ||
-                     CASE WHEN doc_id % 5 = 0 THEN ' embnastytermded'
-                          ELSE '' END AS text
-              FROM documents
-            ), hits AS (
-              SELECT doc_id,
-                     list_sort(list_intersect(
-                       list_distinct(list_filter(
-                         regexp_split_to_array(lower(coalesce(text, '')),
-                                               '[^a-z0-9]+'),
-                         x -> length(x) > 0)),
-                       ['nastyterm', 'nastyterm2'])) AS h
-              FROM src
-            )
-            SELECT doc_id, len(h) > 0 AS blocked,
-                   coalesce(h[1], '') AS blocked_term
-            FROM hits
-        """,
-        "q_bowtie": """
-            -- closed-form expected regions/distances around pivot core0:
-            -- ring SCC (hand-traced fwd/bwd hops), OUT chain, corpus-
-            -- scaled IN fan (doc_id%10==3), island absent; -1 = unreached.
-            SELECT node, region, CAST(fwd_dist AS BIGINT) AS fwd_dist,
-                   CAST(bwd_dist AS BIGINT) AS bwd_dist
-            FROM (
-              SELECT 'core0' AS node, 'SCC' AS region, 0 AS fwd_dist,
-                     0 AS bwd_dist FROM documents WHERE doc_id = 0
-              UNION ALL
-              SELECT 'core1', 'SCC', 1, 2 FROM documents WHERE doc_id = 1
-              UNION ALL
-              SELECT 'core2', 'SCC', 2, 1 FROM documents WHERE doc_id = 2
-              UNION ALL
-              SELECT 'out0', 'OUT', 1, -1 FROM documents WHERE doc_id = 3
-              UNION ALL
-              SELECT 'out1', 'OUT', 2, -1 FROM documents WHERE doc_id = 4
-              UNION ALL
-              SELECT 'in' || CAST(doc_id AS VARCHAR), 'IN', -1, 1
-              FROM documents WHERE doc_id % 10 = 3
-            )
-        """,
-        "q_mirrors": """
-            -- postings -> df cap -> pair join -> Jaccard bp, replayed.
-            WITH urls AS (
-              SELECT 'm0.example' AS host,
-                     '/p' || CAST(doc_id % 30 AS VARCHAR) AS path
-              FROM documents
-              UNION ALL
-              SELECT 'm1.example', '/p' || CAST(doc_id % 30 AS VARCHAR)
-              FROM documents WHERE doc_id % 2 = 0
-              UNION ALL
-              SELECT 'm2.example', '/q' || CAST(doc_id % 20 AS VARCHAR)
-              FROM documents
-              UNION ALL
-              SELECT 'm3.example', '/p' || CAST(doc_id % 10 AS VARCHAR)
-              FROM documents
-              UNION ALL
-              SELECT 'g' || CAST(doc_id % 150 AS VARCHAR) || '.example',
-                     '/common'
-              FROM documents
-            ), postings AS (
-              SELECT DISTINCT host, path FROM urls
-            ), capped AS (
-              SELECT p.host, p.path FROM postings p
-              JOIN (SELECT path FROM postings
-                    GROUP BY path HAVING count(*) <= 100) ok
-                ON p.path = ok.path
-            ), sizes AS (
-              SELECT host, CAST(count(*) AS BIGINT) AS n
-              FROM capped GROUP BY 1
-            ), pairs AS (
-              SELECT a.host AS host_a, b.host AS host_b,
-                     CAST(count(*) AS BIGINT) AS shared_paths
-              FROM capped a JOIN capped b
-                ON a.path = b.path AND a.host < b.host
-              GROUP BY 1, 2 HAVING count(*) >= 2
-            )
-            SELECT host_a, host_b, shared_paths,
-                   CAST(shared_paths * 10000 //
-                        (sa.n + sb.n - shared_paths) AS BIGINT) AS jaccard_bp
-            FROM pairs
-            JOIN sizes sa ON host_a = sa.host
-            JOIN sizes sb ON host_b = sb.host
-        """,
-        "q_reordered_dedup": """
-            -- rebuild original + reversed twin + appended mutant, then
-            -- tokenize -> binary sort -> md5 -> group.
-            WITH base AS (
-              SELECT doc_id, text FROM documents
-              UNION ALL
-              SELECT doc_id + 1000000,
-                     array_to_string(list_reverse(
-                       list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                                   x -> length(x) > 0)), ' ')
-              FROM documents
-              UNION ALL
-              SELECT doc_id + 2000000, text || ' zzzmutant' FROM documents
-            ), keyed AS (
-              SELECT doc_id,
-                     md5(array_to_string(list_sort(
-                       list_filter(regexp_split_to_array(trim(coalesce(text, '')),
-                                                         '\\s+'),
-                                   x -> length(x) > 0)), ' ')) AS h
-              FROM base
-            )
-            SELECT h, count(*) AS dup_count, min(doc_id) AS canonical_id
-            FROM keyed GROUP BY h
-        """,
-        "q_robots_audit": """
-            -- closed-form expected verdicts aggregated per host:
-            -- low hosts (hn < 10) disallow kind 1 (/private, with the
-            -- /private/ok carve-out = kind 2 allowed); high hosts
-            -- disallow kind 0 (/public); root (kind 3) always allowed.
-            WITH d AS (
-              SELECT doc_id % 20 AS hn, doc_id % 4 AS kind FROM documents
-            ), agg AS (
-              SELECT 'h' || CAST(hn AS VARCHAR) || '.example' AS host,
-                     CAST(count(*) AS BIGINT) AS crawled_n,
-                     CAST(sum(CASE WHEN (hn < 10 AND kind = 1)
-                                     OR (hn >= 10 AND kind = 0)
-                              THEN 1 ELSE 0 END) AS BIGINT) AS disallowed_n
-              FROM d GROUP BY 1
-            )
-            SELECT host, crawled_n, disallowed_n,
-                   CAST(disallowed_n * 1000000 // crawled_n AS BIGINT)
-                     AS disallowed_ppm
-            FROM agg
-        """,
-        "q_mixture_plan": """
-            -- per-source token totals, full-outer join against the demanded
-            -- weights, planned tokens + epochs by integral divide.
-            WITH avail AS (
-              SELECT 'src' || CAST(doc_id % 4 AS VARCHAR) AS source,
-                     CAST(sum(doc_id % 50 + 1) AS BIGINT) AS n_tokens
-              FROM documents GROUP BY 1
-            ), w(source, weight_ppm) AS (
-              VALUES ('src0', 500000), ('src1', 300000),
-                     ('src2', 150000), ('src9', 50000)
-            ), j AS (
-              SELECT coalesce(a.source, w.source) AS source,
-                     CAST(coalesce(a.n_tokens, 0) AS BIGINT) AS n_tokens,
-                     CAST(coalesce(w.weight_ppm, 0) AS BIGINT) AS weight_ppm
-              FROM avail a FULL OUTER JOIN w ON a.source = w.source
-            ), p AS (
-              SELECT source, n_tokens, weight_ppm,
-                     CAST(2500000 * weight_ppm // 1000000 AS BIGINT)
-                       AS planned_tokens
-              FROM j
-            )
-            SELECT source, n_tokens, weight_ppm, planned_tokens,
-                   CAST(coalesce(planned_tokens * 1000000 //
-                        nullif(n_tokens, 0), -1) AS BIGINT) AS epochs_ppm,
-                   coalesce(planned_tokens * 1000000 //
-                            nullif(n_tokens, 0) > 1000000, false) AS repeated
-            FROM p
-        """,
-        "q_fuzzy_pairs": """
-            -- identical key synthesis, identical (first char, length-band)
-            -- blocking, triangle filter, exact Levenshtein <= 2.
-            WITH keyed AS (
-              SELECT doc_id AS _id,
-                     'rec' || CAST(doc_id // 4 AS VARCHAR) ||
-                       CASE doc_id % 4 WHEN 1 THEN 'a' WHEN 2 THEN 'ab'
-                            WHEN 3 THEN 'zzzz' ELSE '' END AS _key
-              FROM documents
-            ), blk AS (
-              SELECT _id, _key,
-                     substr(_key, 1, 1) || '|' ||
-                       CAST(length(_key) // 8 AS VARCHAR) AS _blk
-              FROM keyed
-            )
-            SELECT a._id AS id_a, b._id AS id_b,
-                   CAST(levenshtein(a._key, b._key) AS INT) AS dist
-            FROM blk a JOIN blk b ON a._blk = b._blk AND a._id < b._id
-            WHERE levenshtein(a._key, b._key) <= 2
-        """,
-        "q_text_outlinks": """
-            -- identical text rebuild, identical RE2 url class + trailing
-            -- punctuation trim + length floor.
-            WITH src AS (
-              SELECT doc_id,
-                     text || ' See https://ref' ||
-                       CAST(doc_id % 20 AS VARCHAR) || '.example/a/' ||
-                       CAST(doc_id AS VARCHAR) || '. Also (http://mirror' ||
-                       CAST(doc_id % 5 AS VARCHAR) || '.test/p).' AS text
-              FROM documents
-            ), ex AS (
-              SELECT doc_id,
-                     regexp_replace(
-                       unnest(regexp_extract_all(text,
-                         'https?://[^\\s<>"'')]+', 0)),
-                       '[.,;:!?]+$', '') AS url
-              FROM src
-            )
-            SELECT doc_id, url FROM ex WHERE length(url) > 8
-        """,
-        "q_reciprocity": """
-            -- distinct directed host edges (self-loops dropped), reversed
-            -- self-join, per-host rollup with integral-divide ppm.
-            WITH raw AS (
-              SELECT 'h' || CAST(doc_id % 10 AS VARCHAR) AS src,
-                     'h' || CAST((doc_id + 1) % 10 AS VARCHAR) AS dst
-              FROM documents
-              UNION ALL
-              SELECT 'h' || CAST(doc_id % 10 AS VARCHAR),
-                     'h' || CAST((doc_id + 3) % 10 AS VARCHAR)
-              FROM documents
-              UNION ALL
-              SELECT 'h' || CAST((doc_id + 1) % 10 AS VARCHAR),
-                     'h' || CAST(doc_id % 10 AS VARCHAR)
-              FROM documents WHERE doc_id % 10 < 5
-              UNION ALL
-              SELECT 'h' || CAST(doc_id % 10 AS VARCHAR),
-                     'h' || CAST(doc_id % 10 AS VARCHAR)
-              FROM documents WHERE doc_id % 7 = 0
-            ), e AS (
-              SELECT DISTINCT src, dst FROM raw WHERE src != dst
-            ), j AS (
-              SELECT a.src, CASE WHEN b.src IS NULL THEN 0 ELSE 1 END AS _back
-              FROM e a LEFT JOIN e b ON a.src = b.dst AND a.dst = b.src
-            )
-            SELECT src AS host,
-                   CAST(count(*) AS BIGINT) AS out_n,
-                   CAST(sum(_back) AS BIGINT) AS reciprocated_n,
-                   CAST(sum(_back) * 1000000 // count(*) AS BIGINT)
-                     AS reciprocity_ppm
-            FROM j GROUP BY 1
-        """,
-        "q_sitemap_coverage": """
-            -- tag-union + flag-merge + host rollup, replayed in SQL.
-            WITH urls AS (
-              SELECT doc_id,
-                     'https://s' || CAST(doc_id % 5 AS VARCHAR) ||
-                       '.example/page/' || CAST(doc_id AS VARCHAR) AS url
-              FROM documents
-            ), tagged AS (
-              SELECT url, 1 AS _d, 0 AS _c FROM urls WHERE doc_id % 3 != 0
-              UNION ALL
-              SELECT url, 0 AS _d, 1 AS _c FROM urls WHERE doc_id % 2 = 0
-            ), per_url AS (
-              SELECT url, max(_d) AS _d, max(_c) AS _c FROM tagged GROUP BY 1
-            ), agg AS (
-              SELECT lower(regexp_extract(url,
-                       '^[a-z][a-z0-9+.-]*://([^/?#]+)', 1)) AS host,
-                     CAST(sum(_d) AS BIGINT) AS declared_n,
-                     CAST(sum(_c) AS BIGINT) AS crawled_n,
-                     CAST(sum(_d * _c) AS BIGINT) AS both_n
-              FROM per_url GROUP BY 1
-            )
-            SELECT host, declared_n, crawled_n, both_n,
-                   declared_n - both_n AS declared_only_n,
-                   crawled_n - both_n AS crawled_only_n,
-                   CAST(coalesce(both_n * 1000000 //
-                        nullif(declared_n, 0), 0) AS BIGINT) AS coverage_ppm
-            FROM agg
-        """,
-        "q_dom_templates": """
-            -- identical page synthesis, then DuckDB's own regexp+md5
-            -- recompute the structural signature: a hash match proves the
-            -- tag tokenization and signature agree across engines
-            WITH pages AS (
-              SELECT 'http://t' || (doc_id % 4) || '.example.com/p' || doc_id
-                       AS url,
-                     '<html><head><title>' || substring(text, 1, 30)
-                     || '</title>'
-                     || CASE WHEN doc_id % 2 = 0
-                             THEN '<meta property="og:title" content="x">'
-                             ELSE '' END
-                     || '</head><body><p>' || substring(text, 1, 60)
-                     || '</p>'
-                     || CASE WHEN doc_id % 5 = 0
-                             THEN '<b>promo</b>' ELSE '' END
-                     || '</body></html>' AS html
-              FROM documents
-            ), tagged AS (
-              SELECT url,
-                     regexp_extract(url, '^http://([^/]+)', 1) AS host,
-                     regexp_extract_all(lower(html),
-                                        '<([a-z][a-z0-9]*)', 1) AS tags
-              FROM pages
-            )
-            SELECT host,
-                   md5(array_to_string(tags, ',')) AS template_sig,
-                   CAST(COUNT(*) AS BIGINT) AS n_pages,
-                   CAST(MIN(len(tags)) AS BIGINT) AS n_tags,
-                   MIN(url) AS example_url
-            FROM tagged
-            GROUP BY host, template_sig
-            HAVING COUNT(*) >= 2
-        """,
-        "q_url_templates": """
-            -- identical url synthesis; the same two collapse regexes
-            -- (plain character classes — Java regex ≡ RE2) applied with
-            -- the global flag
-            WITH urls AS (
-              SELECT 'u' || (doc_id % 4) || '.example.com' AS host,
-                     CASE WHEN doc_id % 3 = 0
-                          THEN '/h/' || md5(CAST(doc_id AS VARCHAR))
-                          ELSE '/a/' || (doc_id % 5) || '/p' || doc_id
-                     END AS path
-              FROM documents
-            ), t AS (
-              SELECT host,
-                     regexp_replace(
-                       regexp_replace(path, '[0-9a-f]{16,}', '{hex}', 'g'),
-                       '[0-9]+', '{n}', 'g') AS path_template,
-                     'https://' || host || path AS url
-              FROM urls
-            )
-            SELECT host, path_template,
-                   CAST(COUNT(*) AS BIGINT) AS n_urls,
-                   MIN(url) AS example_url
-            FROM t
-            GROUP BY host, path_template
-            HAVING COUNT(*) >= 2
-        """,
-        "q_token_prf": """
-            -- identical content-keyed perturbation (md5-prefix token drop
-            -- + noise token), multiset-min overlap, and ppm divisions
-            WITH p AS (
-              SELECT doc_id,
-                     array_to_string(list_filter(list_filter(
-                       regexp_split_to_array(lower(text), '\\s+'),
-                       x -> len(x) > 0),
-                       x -> substring(md5(x), 1, 1) <> '0'), ' ')
-                     || (CASE WHEN doc_id % 3 = 0
-                              THEN ' zzz-noise' ELSE '' END) AS got_text,
-                     text AS ref_text
-              FROM documents
-            ), gt AS (
-              SELECT doc_id, tok, count(*) AS c_got FROM (
-                SELECT doc_id, unnest(list_filter(
-                  regexp_split_to_array(lower(got_text), '\\s+'),
-                  x -> len(x) > 0)) AS tok FROM p)
-              GROUP BY doc_id, tok
-            ), rt AS (
-              SELECT doc_id, tok, count(*) AS c_ref FROM (
-                SELECT doc_id, unnest(list_filter(
-                  regexp_split_to_array(lower(ref_text), '\\s+'),
-                  x -> len(x) > 0)) AS tok FROM p)
-              GROUP BY doc_id, tok
-            ), j AS (
-              SELECT coalesce(gt.doc_id, rt.doc_id) AS doc_id,
-                     coalesce(gt.c_got, 0) AS c_got,
-                     coalesce(rt.c_ref, 0) AS c_ref
-              FROM gt FULL OUTER JOIN rt
-                ON gt.doc_id = rt.doc_id AND gt.tok = rt.tok
-            ), f AS (
-              SELECT doc_id, sum(c_got) AS n_got, sum(c_ref) AS n_ref,
-                     sum(least(c_got, c_ref)) AS overlap
-              FROM j GROUP BY doc_id
-            )
-            SELECT d.doc_id,
-                   CAST(coalesce(f.n_got, 0) AS BIGINT) AS n_got,
-                   CAST(coalesce(f.n_ref, 0) AS BIGINT) AS n_ref,
-                   CAST(coalesce(f.overlap, 0) AS BIGINT) AS overlap,
-                   CAST(coalesce((f.overlap * 1000000)
-                     // nullif(f.n_got, 0), 0) AS BIGINT) AS precision_ppm,
-                   CAST(coalesce((f.overlap * 1000000)
-                     // nullif(f.n_ref, 0), 0) AS BIGINT) AS recall_ppm,
-                   CAST(coalesce((2 * f.overlap * 1000000)
-                     // nullif(f.n_got + f.n_ref, 0), 0) AS BIGINT)
-                     AS f1_ppm
-            FROM (SELECT DISTINCT doc_id FROM documents) d
-            LEFT JOIN f ON d.doc_id = f.doc_id
-        """,
-        "q_shard_manifest": """
-            -- identical per-doc 60-bit md5 hash (Spark conv(..,16,10) ≡
-            -- '0x' CAST), bit_xor and HUGEINT-summed mod 2^61-1 digests
-            WITH d AS (
-              SELECT doc_id % 7 AS shard,
-                     CAST(length(text) AS BIGINT) AS n,
-                     CAST('0x' || substring(
-                       md5(CAST(doc_id AS VARCHAR) || chr(31) || text),
-                       1, 15) AS BIGINT) AS h
-              FROM documents
-            )
-            SELECT CAST(shard AS BIGINT) AS shard,
-                   CAST(count(*) AS BIGINT) AS n_docs,
-                   CAST(sum(n) AS BIGINT) AS n_chars,
-                   CAST(bit_xor(h) AS BIGINT) AS xor_digest,
-                   CAST(sum(h) % 2305843009213693951 AS BIGINT)
-                     AS sum_digest
-            FROM d GROUP BY shard
-        """,
-        "q_corpus_shuffle": """
-            -- identical md5 shuffle key, shard mod, and within-shard
-            -- row_number total order (skey is unique per doc_id; doc_id
-            -- appended as the formal tie-break in both engines)
-            WITH k AS (
-              SELECT doc_id,
-                     md5('shuf:r5:' || CAST(doc_id AS VARCHAR)) AS skey
-              FROM documents
-            )
-            SELECT doc_id,
-                   CAST('0x' || substring(skey, 1, 4) AS BIGINT) % 8 AS shard,
-                   CAST(row_number() OVER (
-                     PARTITION BY CAST('0x' || substring(skey, 1, 4) AS BIGINT) % 8
-                     ORDER BY skey, doc_id) AS BIGINT) AS pos
-            FROM k
-        """,
-        "q_bm25": """
-            -- rebuild the inverted index + doc lengths over the same
-            -- whitespace tokens, then the IDENTICAL BIGINT arithmetic:
-            -- rational Robertson idf, fraction-cleared tf saturation
-            WITH toks AS (
-              SELECT doc_id,
-                     list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                                 x -> x <> '') AS t
-              FROM documents
-            ), dls AS (
-              SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks
-            ), tot AS (
-              SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                     CAST(sum(dl) AS BIGINT) AS total_dl
-              FROM dls
-            ), ev AS (
-              SELECT doc_id, unnest(t) AS term FROM toks
-            ), idx AS (
-              SELECT term, doc_id, CAST(count(*) AS BIGINT) AS tf
-              FROM ev WHERE term IN ('data', 'fast', 'query')
-              GROUP BY term, doc_id
-            ), stats AS (
-              SELECT term, CAST(count(*) AS BIGINT) AS df_docs
-              FROM idx GROUP BY term
-            ), scored AS (
-              SELECT idx.doc_id, idx.term,
-                     (((2 * n_docs - 2 * df_docs + 1) * 1000000)
-                        // (2 * df_docs + 1))
-                     * ((tf * 22 * total_dl * 1000000)
-                        // (10 * tf * total_dl + 3 * total_dl
-                            + 9 * dl * n_docs))
-                     // 1000000 AS s
-              FROM idx
-              JOIN stats USING (term)
-              JOIN dls USING (doc_id)
-              CROSS JOIN tot
-            )
-            SELECT doc_id,
-                   CAST(count(DISTINCT term) AS BIGINT) AS n_terms,
-                   CAST(sum(s) AS BIGINT) AS score
-            FROM scored GROUP BY doc_id
-            ORDER BY score DESC, doc_id ASC LIMIT 20
-        """,
-        "q_pmi": """
-            -- unigram + adjacent-pair counts over the same tokens, then
-            -- the identical scaled integer division; min_count prune
-            WITH toks AS (
-              SELECT doc_id,
-                     list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                                 x -> x <> '') AS t
-              FROM documents
-            ), n AS (
-              SELECT CAST(coalesce(sum(len(t)), 0) AS BIGINT) AS n_tokens
-              FROM toks
-            ), uni AS (
-              SELECT w, CAST(count(*) AS BIGINT) AS c
-              FROM (SELECT unnest(t) AS w FROM toks) GROUP BY w
-            ), pr AS (
-              SELECT p.w1, p.w2, CAST(count(*) AS BIGINT) AS c_xy
-              FROM (
-                SELECT unnest(list_transform(range(1, len(t)),
-                         i -> {'w1': t[i], 'w2': t[i + 1]}),
-                       recursive := true)
-                FROM toks WHERE len(t) >= 2
-              ) AS p
-              GROUP BY p.w1, p.w2
-              HAVING count(*) >= 5
-            )
-            SELECT pr.w1, pr.w2, pr.c_xy,
-                   ux.c AS c_x, uy.c AS c_y,
-                   (pr.c_xy * n_tokens * 10000) // (ux.c * uy.c)
-                     AS pmi_scaled
-            FROM pr
-            JOIN uni ux ON ux.w = pr.w1
-            JOIN uni uy ON uy.w = pr.w2
-            CROSS JOIN n
-            ORDER BY pmi_scaled DESC, pr.w1 ASC, pr.w2 ASC LIMIT 50
-        """,
-        "q_ngram_novelty": """
-            -- same distinct-md5-shingle construction as the minhash CTE,
-            -- then: docs-per-shingle count, per-doc novel fold, LEFT
-            -- JOIN back so shingle-less docs report 0 / NULL
-            WITH toks AS (
-              SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
-              FROM documents
-            ), sh AS (
-              SELECT doc_id,
-                     CASE WHEN len(t) >= 3 THEN
-                       list_distinct(list_transform(range(1, len(t) - 1),
-                         i -> md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2])))
-                     ELSE [] END AS hs
-              FROM toks
-            ), e AS (
-              SELECT doc_id, unnest(hs) AS h FROM sh
-            ), cnt AS (
-              SELECT h, count(*) AS docs FROM e GROUP BY h
-            ), nov AS (
-              SELECT e.doc_id, count(*) AS n_shingles,
-                     sum(CASE WHEN cnt.docs = 1 THEN 1 ELSE 0 END) AS n_novel
-              FROM e JOIN cnt USING (h) GROUP BY e.doc_id
-            )
-            SELECT t.doc_id,
-                   CAST(coalesce(nov.n_shingles, 0) AS BIGINT) AS n_shingles,
-                   CAST(coalesce(nov.n_novel, 0) AS BIGINT) AS n_novel,
-                   CASE WHEN coalesce(nov.n_shingles, 0) > 0 THEN
-                     round(CAST(nov.n_novel AS DOUBLE) / nov.n_shingles, 4)
-                   END AS novelty
-            FROM toks t LEFT JOIN nov USING (doc_id)
-        """,
-        "q_c4_lines": """
-            -- symbolic replay of every C4 rule over the same closed-form
-            -- multi-line pages: split/trim, terminal punctuation, >=3
-            -- words, no 'javascript'; page: no lorem ipsum, no brace,
-            -- >=3 kept lines
-            WITH src AS (
-              SELECT doc_id,
-                'This is a fine opening line number ' || doc_id || '.'
-                  || chr(10) ||
-                'too short.' || chr(10) ||
-                'Please enable javascript to continue.' || chr(10) ||
-                'no terminal punctuation here' || chr(10) ||
-                repeat('Another perfectly good line indeed.' || chr(10),
-                       CAST(doc_id % 5 AS INT)) ||
-                CASE WHEN doc_id % 17 = 0
-                     THEN 'We sprinkle Lorem Ipsum here.' || chr(10)
-                     ELSE '' END ||
-                CASE WHEN doc_id % 13 = 0
-                     THEN 'function() { return 1; }' || chr(10)
-                     ELSE '' END ||
-                'closing line with a full stop.' AS text
-              FROM documents
-            ), l AS (
-              SELECT doc_id, text,
-                     list_transform(string_split(text, chr(10)),
-                                    x -> trim(x)) AS lines
-              FROM src
-            ), k AS (
-              SELECT doc_id, text, lines,
-                     list_filter(lines, x ->
-                       regexp_matches(x, '[.!?"”]$')
-                       AND len(regexp_split_to_array(x, '\\s+')) >= 3
-                       AND NOT contains(lower(x), 'javascript')) AS kept
-              FROM l
-            )
-            SELECT doc_id,
-                   CAST(len(lines) AS BIGINT) AS n_lines_in,
-                   CAST(len(kept) AS BIGINT) AS n_lines_kept,
-                   (NOT contains(lower(text), 'lorem ipsum')
-                    AND NOT contains(text, '{')
-                    AND len(kept) >= 3) AS page_keep,
-                   array_to_string(kept, chr(10)) AS clean_text
-            FROM k
-        """,
-        "q_bpe_fertility": f"""
-            -- same symbolic encode as q_bpe_encode, aggregated per lang;
-            -- fertility = one double division of two exact integer sums
-            WITH d AS (
-              SELECT doc_id, lang,
-                     list_filter(
-                       regexp_split_to_array(
-                         lower(trim(replace(text, '‖', ''))), '\\s+'),
-                       x -> len(x) > 0) AS words
-              FROM documents
-            ), s AS (
-              SELECT doc_id, lang,
-                     CAST(len(words) AS BIGINT) AS n_words,
-                     coalesce(list_aggregate(
-                       list_transform(words, w -> {bpe_word}),
-                       'string_agg', ''), '') AS stream
-              FROM d
-            ), t AS (
-              SELECT lang, n_words,
-                     CAST((len(stream) - len(replace(stream, '‖', ''))) // 2
-                          AS BIGINT) AS n_tokens
-              FROM s
-            )
-            SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-                   CAST(sum(n_words) AS BIGINT) AS n_words,
-                   CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-                   CASE WHEN sum(n_words) > 0 THEN
-                     round(CAST(sum(n_tokens) AS DOUBLE) / sum(n_words), 4)
-                   END AS fertility
-            FROM t GROUP BY lang
-        """,
-        "q_centroid_outliers": """
-            -- per-label centroid: DECIMAL(30,15) sums (order-independent,
-            -- matching Spark's decimal-summed means bit-for-bit), then
-            -- cosine distance + top-10 rank per label
-            WITH e AS (
-              SELECT vec_id, label,
-                     unnest(range(1, len(embedding) + 1)) AS pos,
-                     unnest(list_transform(embedding, x -> CAST(x AS DOUBLE)))
-                       AS val
-              FROM embeddings
-            ), c AS (
-              SELECT label, pos,
-                     CAST(sum(CAST(CAST(val AS DOUBLE) AS DECIMAL(30,15)))
-                          AS DOUBLE) / count(*) AS m
-              FROM e GROUP BY label, pos
-            ), cv AS (
-              SELECT label, list(m ORDER BY pos) AS cv FROM c GROUP BY label
-            ), s AS (
-              SELECT a.label, a.vec_id,
-                     round(1 - list_dot_product(
-                         list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
-                         cv.cv)
-                       / (sqrt(list_dot_product(
-                            list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
-                            list_transform(a.embedding, x -> CAST(x AS DOUBLE))))
-                          * sqrt(list_dot_product(cv.cv, cv.cv))),
-                       4) AS centroid_dist
-              FROM embeddings a JOIN cv ON a.label = cv.label
-            ), r AS (
-              SELECT label, vec_id, centroid_dist,
-                     row_number() OVER (
-                       PARTITION BY label
-                       ORDER BY centroid_dist DESC, vec_id ASC
-                     ) AS rank
-              FROM s
-            )
-            SELECT label, vec_id, centroid_dist, rank FROM r WHERE rank <= 10
-        """,
-        "q_domain_cap": """
-            -- identical deterministic ranking: md5('cap1' || doc_id)
-            -- within each synthesized host, keep rank <= 20
-            WITH c AS (
-              SELECT doc_id, 'h' || (doc_id % 7) AS host FROM documents
-            ), r AS (
-              SELECT doc_id, host,
-                     row_number() OVER (
-                       PARTITION BY host
-                       ORDER BY md5('cap1' || doc_id), doc_id
-                     ) AS host_rank
-              FROM c
-            )
-            SELECT doc_id, host, CAST(host_rank AS BIGINT) AS host_rank
-            FROM r WHERE host_rank <= 20
-        """,
-        "q_latest_capture": """
-            -- newest of the 3 synthesized captures is capture 2 (+2 days)
-            SELECT 'https://example.org/doc/' || doc_id AS url,
-                   strftime(TIMESTAMP '2024-01-01 00:00:00'
-                            + to_seconds(doc_id + 172800),
-                            '%Y-%m-%dT%H:%M:%SZ') AS warc_date,
-                   md5(text || ' v2') AS body_md5
-            FROM documents
-        """,
-        "q_warc_roundtrip": """
-            -- recompute the per-url accounting straight from documents;
-            -- matching md5 per url == the WARC writer->reader round-trip
-            -- preserved every body byte
-            SELECT 'https://d' || (doc_id % 20) || '.example.org/doc/' || doc_id
-                     AS url,
-                   strftime(TIMESTAMP '2024-01-01 00:00:00' + to_seconds(doc_id),
-                            '%Y-%m-%dT%H:%M:%SZ') AS warc_date,
-                   CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-                   md5(text) AS body_md5,
-                   CAST(200 AS INTEGER) AS http_status,
-                   'text/html; charset=utf-8' AS content_type
-            FROM documents
-        """,
-        "q_warc_index": """
-            -- re-derive every record's seekable extent in closed form: the
-            -- serialized record is a pure function of (url, html bytes), so
-            -- its length is byte arithmetic (uuid=36, date=20 are fixed
-            -- width) and its offset is the running sum in doc_id file order
-            WITH p AS (
-              SELECT doc_id,
-                     'https://d' || (doc_id % 20) || '.example.org/doc/'
-                       || doc_id AS url,
-                     CAST(octet_length(encode(text)) AS BIGINT) AS hl
-              FROM documents
-            ), r AS (
-              SELECT doc_id, url,
-                     CAST(octet_length(encode(
-                       e'HTTP/1.1 200 OK\\r\\nContent-Type: text/html; '
-                       || e'charset=utf-8\\r\\nContent-Length: '
-                       || CAST(hl AS VARCHAR) || e'\\r\\n\\r\\n'
-                     )) AS BIGINT) + hl AS http_len
-              FROM p
-            ), s AS (
-              SELECT doc_id, url,
-                     CAST(octet_length(encode(
-                       e'WARC/1.0\\r\\nWARC-Type: response\\r\\n'
-                       || 'WARC-Record-ID: <urn:uuid:' || repeat('x', 36)
-                       || e'>\\r\\nWARC-Date: ' || repeat('x', 20)
-                       || e'\\r\\nWARC-Target-URI: ' || url
-                       || e'\\r\\nContent-Type: application/http; '
-                       || e'msgtype=response\\r\\nContent-Length: '
-                       || CAST(http_len AS VARCHAR) || e'\\r\\n\\r\\n'
-                     )) AS BIGINT) + http_len + 4 AS rec_length
-              FROM r
-            )
-            SELECT url,
-                   CAST(COALESCE(SUM(rec_length) OVER (ORDER BY doc_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                        0) AS BIGINT) AS rec_offset,
-                   CAST(rec_length AS BIGINT) AS rec_length
-            FROM s
-        """,
-        "q_main_content": """
-            -- reconstruct the expected main content symbolically: the two
-            -- real paragraphs survive iff >= 25 collapsed chars (the inline
-            -- 'details' anchor adds 8), the heading is promoted iff the
-            -- following paragraph is content, everything else (header, nav,
-            -- sidebar, promo, aside, footer) is boilerplate by construction
-            WITH b AS (
-              SELECT doc_id,
-                     trim(regexp_replace(substr(text, 1, 300),
-                          '\\s+', ' ', 'g')) AS bt1,
-                     trim(regexp_replace(substr(text, 301, 200) || ' details',
-                          '\\s+', ' ', 'g')) AS bt2
-              FROM documents
-            ), k AS (
-              SELECT doc_id,
-                     list_filter([
-                       CASE WHEN length(bt1) >= 25
-                            THEN 'Section DOC' || doc_id END,
-                       CASE WHEN length(bt1) >= 25 THEN bt1 END,
-                       CASE WHEN length(bt2) >= 25 THEN bt2 END
-                     ], x -> x IS NOT NULL) AS kept
-              FROM b
-            )
-            SELECT doc_id,
-                   array_to_string(kept, chr(10)) AS main_text,
-                   CAST(4 AS INTEGER) AS n_blocks,
-                   CAST(len(kept) AS INTEGER) AS n_content_blocks,
-                   CAST(COALESCE(list_aggregate(
-                          list_transform(kept, x -> length(x)), 'sum'),
-                        0) AS BIGINT) AS content_chars
-            FROM k
-        """,
-        "q_flagship_curate": """
-            -- replay the COMPOSED flagship pipeline symbolically:
-            -- noindex exclusion (doc_id % 5 = 0 pages carry the meta tag),
-            -- latest-capture election (the vNEW body wins on warc_ts),
-            -- jusText block rules (paragraph kept iff >= 25 collapsed
-            -- chars; heading promoted iff its paragraph is content), and
-            -- the repetition quality gate (n_tokens >= 5, top-word and
-            -- dup-bigram fractions, round-4 like the Spark op).  The
-            -- near-dup survivor stage is a designed pass-through: the
-            -- injected per-doc u<id> token sits in every 3-gram shingle,
-            -- so no two docs can share an LSH band; the final set is the
-            -- gate's, row for row.
-            WITH b AS (
-              SELECT doc_id, lang,
-                     trim(regexp_replace(substr(text, 1, 300), '\\s+',
-                          ' u' || doc_id || ' ', 'g')) AS bt
-              FROM documents
-              WHERE doc_id % 5 <> 0
-            ), ft AS (
-              SELECT doc_id, lang,
-                     array_to_string(list_filter([
-                       CASE WHEN length(bt) >= 25
-                            THEN 'Doc ' || doc_id || ' vNEW' END,
-                       CASE WHEN length(bt) >= 25 THEN bt END
-                     ], x -> x IS NOT NULL), chr(10)) AS text
-              FROM b
-            ), t AS (
-              SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
-              FROM ft
-            ), tok AS (
-              SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens,
-                     unnest(w) AS tok
-              FROM t
-            ), wc AS (
-              SELECT doc_id, n_tokens, tok, count(*) AS c
-              FROM tok GROUP BY 1, 2, 3
-            ), top AS (
-              SELECT doc_id, n_tokens, round(max(c) / n_tokens, 4)
-                       AS top_word_frac
-              FROM wc GROUP BY doc_id, n_tokens
-            ), bg AS (
-              SELECT doc_id,
-                     CASE WHEN len(w) >= 2 THEN
-                       list_transform(generate_series(1, len(w) - 1),
-                                      i -> w[i] || ' ' || w[i + 1])
-                     ELSE [] END AS gs
-              FROM t
-            ), bgc AS (
-              SELECT doc_id, g, count(*) AS c
-              FROM (SELECT doc_id, unnest(gs) AS g FROM bg) GROUP BY 1, 2
-            ), dup AS (
-              SELECT doc_id,
-                     round(sum(CASE WHEN c > 1 THEN c ELSE 0 END) / sum(c), 4)
-                       AS dup_bigram_frac
-              FROM bgc GROUP BY doc_id
-            ), gate AS (
-              SELECT top.doc_id
-              FROM top LEFT JOIN dup USING (doc_id)
-              WHERE n_tokens >= 5 AND top_word_frac <= 0.5
-                AND coalesce(dup_bigram_frac, 0.0) <= 0.9
-            )
-            SELECT ft.text, ft.lang,
-                   CAST(length(ft.text) AS BIGINT) AS n_chars
-            FROM ft JOIN gate USING (doc_id)
-        """,
-        "q_html_meta": """
-            -- rebuild every metadata field symbolically: titles/descriptions
-            -- are whitespace-collapsed substrings of text, canonical and the
-            -- second outlink are root-relative hrefs resolved against the
-            -- page url, og:title exists only for even doc_ids, the mailto:
-            -- anchor counts toward n_anchors but emits no edge
-            SELECT doc_id,
-                   'https://www.site' || (doc_id % 10) || '.com/pages/'
-                       || doc_id || '.html' AS url,
-                   'Doc ' || doc_id || ' :: '
-                       || trim(regexp_replace(substr(text, 1, 40),
-                               '\\s+', ' ', 'g')) AS title,
-                   trim(regexp_replace(substr(text, 1, 80),
-                        '\\s+', ' ', 'g')) AS description,
-                   'https://www.site' || (doc_id % 10) || '.com/d/'
-                       || doc_id AS canonical,
-                   CASE WHEN doc_id % 2 = 0 THEN 'OG ' || doc_id END
-                       AS og_title,
-                   'utf-8' AS charset,
-                   array_to_string(
-                       ['https://h' || (doc_id % 40) || '.example.com/p'
-                            || doc_id,
-                        'https://www.site' || (doc_id % 10) || '.com/local/'
-                            || ((doc_id * 3) % 7)], '|') AS outlinks,
-                   CAST(3 AS INTEGER) AS n_anchors
-            FROM documents
-        """,
-        "q_pagerank": _pagerank_oracle_sql(3),
-        "q_graph_stats": """
-            -- same synthetic edges as q_pagerank; degrees/weights are
-            -- integer aggregates, reciprocity is a self-join on the
-            -- reversed pair — replicated verbatim
-            WITH e0 AS (
-              SELECT doc_id % 40 AS s, (doc_id * 7 + 3) % 40 AS t
-              FROM documents
-              UNION ALL
-              SELECT doc_id % 40, (doc_id * 13 + 11) % 45 FROM documents
-            ), edges AS (
-              SELECT 'h' || s AS src, 'h' || t AS dst,
-                     CAST(COUNT(*) AS BIGINT) AS weight
-              FROM e0 WHERE s <> t GROUP BY 1, 2
-            ), o AS (
-              SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS out_degree,
-                     CAST(SUM(weight) AS BIGINT) AS out_weight
-              FROM edges GROUP BY src
-            ), i AS (
-              SELECT dst AS node, CAST(COUNT(*) AS BIGINT) AS in_degree,
-                     CAST(SUM(weight) AS BIGINT) AS in_weight
-              FROM edges GROUP BY dst
-            ), r AS (
-              SELECT e.src AS node, CAST(COUNT(*) AS BIGINT) AS reciprocal_edges
-              FROM edges e JOIN edges x ON x.src = e.dst AND x.dst = e.src
-              GROUP BY e.src
-            )
-            SELECT COALESCE(o.node, i.node) AS node,
-                   COALESCE(out_degree, 0) AS out_degree,
-                   COALESCE(in_degree, 0) AS in_degree,
-                   COALESCE(out_weight, 0) AS out_weight,
-                   COALESCE(in_weight, 0) AS in_weight,
-                   COALESCE(reciprocal_edges, 0) AS reciprocal_edges
-            FROM o FULL OUTER JOIN i ON o.node = i.node
-            LEFT JOIN r ON r.node = COALESCE(o.node, i.node)
-        """,
-        "q_crawl_budget": (
-            "SELECT node, rank,\n"
-            "       CAST((1000000 * rank) // (SELECT SUM(rank) FROM (\n"
-            + _pagerank_oracle_sql(3)
-            + "\n) t) AS BIGINT) AS quota\nFROM (\n"
-            + _pagerank_oracle_sql(3)
-            + "\n) pr"
+            SELECT doc_id, doc_id + 301 FROM documents
+            WHERE doc_id < 200 AND doc_id % 7 = 0
+          ) t WHERE a <> b
+        ), tp AS (
+          SELECT COUNT(*) AS tp FROM pred p JOIN labeled l
+            ON p._a = l._a AND p._b = l._b
+        ), c AS (
+          SELECT CAST((SELECT COUNT(*) FROM pred) AS BIGINT) AS n_pred,
+                 CAST((SELECT COUNT(*) FROM labeled) AS BIGINT) AS n_labeled,
+                 CAST((SELECT tp FROM tp) AS BIGINT) AS tp
+        )
+        SELECT n_pred, n_labeled, tp,
+               CAST(CASE WHEN n_pred > 0 THEN (tp * 1000000) // n_pred
+                         ELSE 0 END AS BIGINT) AS precision_ppm,
+               CAST(CASE WHEN n_labeled > 0 THEN (tp * 1000000) // n_labeled
+                         ELSE 0 END AS BIGINT) AS recall_ppm,
+               CAST(CASE WHEN n_pred + n_labeled > 0
+                         THEN (2 * tp * 1000000) // (n_pred + n_labeled)
+                         ELSE 0 END AS BIGINT) AS f1_ppm
+        FROM c
+    """,
+    plan=(
+        "dedup-QA pair P/R: canonicalize + distinct on both (small) pair tables, ONE "
+        "pair equi-join, three 1-row counts stitched by broadcast cross joins (1-row "
+        "sides only); zero Python, no window"
+    ),
+    must=["HashAggregate", "Join"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Window"],
+)
+def q_dedup_prf(spark, sf_dir):
+    """Dedup-QA pair precision/recall (ops/dedup.dedup_prf) over
+    arithmetically labeled pairs: labels = (i, i+300) for i<200;
+    predictions drop every i%5==0 (misses), arrive REVERSED (orientation
+    canonicalization pinned), are emitted twice for i%11==0 (distinct
+    pinned), and add false pairs (i, i+301) for i%7==0 plus a self-pair
+    (7,7) that must be filtered.  One row of exact ppm metrics; the
+    oracle replays the same arithmetic and the multiset-Dice f1."""
+    from html_parser_spark.ops.dedup import dedup_prf
+
+    docs = _docs(spark, sf_dir)
+    d = F.col("doc_id")
+    labeled = docs.filter(d < 200).select(
+        d.alias("a"), (d + 300).alias("b")
+    )
+    hits = docs.filter((d < 200) & (d % 5 != 0)).select(
+        (d + 300).alias("a"), d.alias("b")
+    )
+    dups = docs.filter((d < 200) & (d % 5 != 0) & (d % 11 == 0)).select(
+        (d + 300).alias("a"), d.alias("b")
+    )
+    fps = docs.filter((d < 200) & (d % 7 == 0)).select(
+        d.alias("a"), (d + 301).alias("b")
+    )
+    selfp = docs.filter(d == 7).select(d.alias("a"), d.alias("b"))
+    predicted = hits.unionByName(dups).unionByName(fps).unionByName(selfp)
+    return dedup_prf(predicted, labeled)
+
+
+@contract(
+    oracle=r"""
+        WITH g AS (
+          SELECT doc_id,
+                 regexp_split_to_array(trim(text), '\s+') AS toks,
+                 string_split(text, chr(10)) AS lines,
+                 CAST(length(regexp_replace(text, '\s+', '', 'g'))
+                      AS BIGINT) AS word_chars,
+                 CAST(length(text) - length(replace(text, '#', ''))
+                      AS BIGINT)
+                 + CAST(length(text) - length(replace(text, '…', ''))
+                      AS BIGINT)
+                 + CAST((length(text) - length(replace(text, '...', '')))
+                        // 3 AS BIGINT) AS symbols
+          FROM documents
+        ), m AS (
+          SELECT doc_id, word_chars, symbols,
+                 CAST(len(toks) AS BIGINT) AS n_words,
+                 CAST(len(lines) AS BIGINT) AS n_lines,
+                 CAST(len(list_filter(lines,
+                      x -> regexp_matches(ltrim(x), '^[•*-]')))
+                      AS BIGINT) AS bullet_lines,
+                 CAST(len(list_filter(lines,
+                      x -> regexp_matches(rtrim(x), '(\.\.\.|…)$')))
+                      AS BIGINT) AS ellipsis_lines,
+                 CAST(len(list_filter(toks,
+                      x -> regexp_matches(x, '[A-Za-z]')))
+                      AS BIGINT) AS alpha_words,
+                 len(list_filter(['the','be','to','of','and','that',
+                                  'have','with'],
+                      w -> list_contains(list_transform(toks,
+                           x -> lower(x)), w))) AS stop_hits
+          FROM g
+        ), f AS (
+          SELECT (n_words >= 30 AND n_words <= 100000) AS r0,
+                 (word_chars >= 3 * n_words AND word_chars <= 10 * n_words) AS r1,
+                 (10 * symbols <= n_words) AS r2,
+                 (10 * bullet_lines <= 9 * n_lines) AS r3,
+                 (10 * ellipsis_lines <= 3 * n_lines) AS r4,
+                 (5 * alpha_words >= 4 * n_words) AS r5,
+                 (stop_hits >= 2) AS r6
+          FROM m
+        ), t AS (
+          SELECT CAST(COUNT(*) AS BIGINT) AS total FROM f
+        ), k AS (
+          SELECT 'keep_word_count' AS rule,
+                 CAST(COUNT(*) FILTER (WHERE NOT r0) AS BIGINT)
+                   AS kills,
+                 CAST(COUNT(*) FILTER (WHERE NOT r0 AND r1 AND r2 AND r3 AND r4 AND r5 AND r6)
+                      AS BIGINT) AS unique_kills
+          FROM f
+          UNION ALL
+          SELECT 'keep_mean_len' AS rule,
+                 CAST(COUNT(*) FILTER (WHERE NOT r1) AS BIGINT)
+                   AS kills,
+                 CAST(COUNT(*) FILTER (WHERE NOT r1 AND r0 AND r2 AND r3 AND r4 AND r5 AND r6)
+                      AS BIGINT) AS unique_kills
+          FROM f
+          UNION ALL
+          SELECT 'keep_symbol_ratio' AS rule,
+                 CAST(COUNT(*) FILTER (WHERE NOT r2) AS BIGINT)
+                   AS kills,
+                 CAST(COUNT(*) FILTER (WHERE NOT r2 AND r0 AND r1 AND r3 AND r4 AND r5 AND r6)
+                      AS BIGINT) AS unique_kills
+          FROM f
+          UNION ALL
+          SELECT 'keep_bullets' AS rule,
+                 CAST(COUNT(*) FILTER (WHERE NOT r3) AS BIGINT)
+                   AS kills,
+                 CAST(COUNT(*) FILTER (WHERE NOT r3 AND r0 AND r1 AND r2 AND r4 AND r5 AND r6)
+                      AS BIGINT) AS unique_kills
+          FROM f
+          UNION ALL
+          SELECT 'keep_ellipsis_lines' AS rule,
+                 CAST(COUNT(*) FILTER (WHERE NOT r4) AS BIGINT)
+                   AS kills,
+                 CAST(COUNT(*) FILTER (WHERE NOT r4 AND r0 AND r1 AND r2 AND r3 AND r5 AND r6)
+                      AS BIGINT) AS unique_kills
+          FROM f
+          UNION ALL
+          SELECT 'keep_alpha' AS rule,
+                 CAST(COUNT(*) FILTER (WHERE NOT r5) AS BIGINT)
+                   AS kills,
+                 CAST(COUNT(*) FILTER (WHERE NOT r5 AND r0 AND r1 AND r2 AND r3 AND r4 AND r6)
+                      AS BIGINT) AS unique_kills
+          FROM f
+          UNION ALL
+          SELECT 'keep_stopwords' AS rule,
+                 CAST(COUNT(*) FILTER (WHERE NOT r6) AS BIGINT)
+                   AS kills,
+                 CAST(COUNT(*) FILTER (WHERE NOT r6 AND r0 AND r1 AND r2 AND r3 AND r4 AND r5)
+                      AS BIGINT) AS unique_kills
+          FROM f
+        )
+        SELECT rule, kills, unique_kills,
+               CAST(CASE WHEN total > 0
+                    THEN (kills * 1000000) // total ELSE 0 END
+                    AS BIGINT) AS kills_ppm,
+               CAST(CASE WHEN total > 0
+                    THEN (unique_kills * 1000000) // total ELSE 0 END
+                    AS BIGINT) AS unique_kills_ppm
+        FROM k, t
+    """,
+    plan=(
+        "per-rule funnel: all 15 counters in ONE aggregate with map-side partials "
+        "(partial_count/partial_sum before a 1-row-per-partition exchange), then the "
+        "|R|-row stack fan-out + ppm projection; zero Python, no join, no window, no "
+        "per-rule pass"
+    ),
+    must=["HashAggregate", "partial_count(1)", "Generate"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Join", "Window",
+              "CartesianProduct"],
+)
+def q_gate_ablation(spark, sf_dir):
+    """Quality-gate ablation table (ops/gopher.gate_ablation) over the
+    Gopher battery: per rule, how many docs it kills and how many it
+    ALONE kills (its marginal value — the C4/Gopher/RefinedWeb release
+    table and the threshold-tuning signal).  All 15 counters accumulate
+    in ONE map-side aggregate; the oracle replays the full flag
+    arithmetic (the q_gopher CTEs) and the same FILTER aggregations per
+    rule — hash-exact integer ppm."""
+    from html_parser_spark.ops.gopher import gate_ablation, gopher_rules
+
+    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    return gate_ablation(gopher_rules(docs, min_words=30))
+
+def _boiler_docs(spark, sf_dir):
+    """Shared synthesis for q_frequent_lines / q_strip_lines: every doc
+    gains a web-wide footer (all 20 hosts), even doc_ids a CMS credit
+    (10 hosts), host h3 a single-host notice (below min_hosts — must NOT
+    be mined).  ONE builder so the two queries and their oracles can
+    never desynchronize."""
+    docs = _docs(spark, sf_dir)
+    d = F.col("doc_id")
+    t = F.concat(
+        F.col("text"),
+        F.lit("\nCopyright 2024 Example"),
+        F.when(d % 2 == 0, F.lit("\nPowered by ExampleCMS")).otherwise(
+            F.lit("")
         ),
-        "q_text_clean": """
-            -- expected = DuckDB's OWN nfc_normalize (utf8proc) over the
-            -- invisible-stripped text: ZWSP + soft hyphen vanish (2
-            -- invisibles), the decomposed e+U+0301 must compose to é —
-            -- cross-engine Unicode-normalization equality, not regex echo
-            SELECT doc_id,
-                   CAST(2 AS BIGINT) AS n_invisibles,
-                   nfc_normalize(text || ' e' || chr(769) || 'tude fin')
-                       AS clean_text
-            FROM documents
-        """,
-        "q_sitemap": """
-            -- re-derive the exploded sitemap rows: index hosts emit one
-            -- child-sitemap loc, urlset hosts two page locs (whitespace
-            -- around the second loc must be trimmed by the parser)
-            SELECT 's' || (doc_id % 10) AS host, 'sitemap' AS kind,
-                   'https://s' || (doc_id % 10) || '.com/child' || doc_id
-                       || '.xml' AS loc
-            FROM documents WHERE doc_id % 20 = 0
-            UNION ALL
-            SELECT 's' || (doc_id % 10), 'url',
-                   'https://s' || (doc_id % 10) || '.com/p' || doc_id
-            FROM documents WHERE doc_id % 20 <> 0
-            UNION ALL
-            SELECT 's' || (doc_id % 10), 'url',
-                   'https://s' || (doc_id % 10) || '.com/q' || doc_id
-            FROM documents WHERE doc_id % 20 <> 0
-        """,
-        "q_image_headers": """
-            -- closed-form expected identity: P6 -> ppm, P5 -> pgm (both
-            -- 8-bit with the synthesized dims), the NOTIMG quarter -> NULLs
-            SELECT doc_id,
-                   CASE doc_id % 4 WHEN 3 THEN NULL
-                        WHEN 2 THEN 'pgm' ELSE 'ppm' END AS format,
-                   CAST(CASE WHEN doc_id % 4 = 3 THEN 0
-                        ELSE doc_id % 300 + 1 END AS INTEGER) AS width,
-                   CAST(CASE WHEN doc_id % 4 = 3 THEN 0
-                        ELSE doc_id % 200 + 1 END AS INTEGER) AS height,
-                   CAST(CASE WHEN doc_id % 4 = 3 THEN 0
-                        ELSE 8 END AS INTEGER) AS bit_depth
-            FROM documents
-        """,
-        "q_soft404": """
-            -- closed-form flags: k=0 not-found title+body, k=3 standalone
-            -- 404 in the title, k=2 parked phrase, k=7 decorated
-            -- not-found title (true positive); k=5/6 are ADVERSARIAL hard
-            -- negatives — short pages titled 'Forbidden City' / 'Coming
-            -- Soon Movies 2026' whose titles contain phrase words
-            -- followed by real content, so the segment-anchored title
-            -- rule must NOT flag them; soft404 requires the SHORT body
-            -- in every case (real soft-404s are short); k in (1,4) clean
-            -- (corpus text has no error phrase or digit — verified
-            -- offline); blen COALESCEd so a future NULL-text doc matches
-            -- the Spark-side coalesce('') instead of NULL-compare
-            WITH f AS (
-              SELECT doc_id, doc_id % 8 AS k,
-                     CASE doc_id % 8
-                       WHEN 0 THEN 'Page not found'
-                       WHEN 3 THEN 'Error 404 - doc v' || (doc_id % 7)
-                       WHEN 5 THEN 'Forbidden City'
-                       WHEN 6 THEN 'Coming Soon Movies 2026'
-                       WHEN 7 THEN 'Oops! Page not found | site'
-                       ELSE 'Doc v' || (doc_id % 7)
-                     END AS title,
-                     CASE WHEN doc_id % 8 = 0 THEN 23
-                          WHEN doc_id % 8 = 2
-                               THEN 16 + least(100, COALESCE(length(text), 0))
-                          WHEN doc_id % 8 = 5 THEN 30
-                          WHEN doc_id % 8 = 6 THEN 16
-                          WHEN doc_id % 8 = 7 THEN 23
-                          ELSE COALESCE(length(text), 0) END AS blen
-              FROM documents
+        F.when(d % 20 == 3, F.lit("\nRare site notice")).otherwise(
+            F.lit("")
+        ),
+    )
+    return docs.select(
+        "doc_id",
+        F.concat(F.lit("h"), (d % 20).cast("string")).alias("host"),
+        t.alias("text"),
+    )
+
+
+_BOILER_AUG_CTE = """
+aug AS (
+  SELECT doc_id, 'h' || (doc_id % 20) AS host,
+         text || chr(10) || 'Copyright 2024 Example' ||
+         CASE WHEN doc_id % 2 = 0
+              THEN chr(10) || 'Powered by ExampleCMS' ELSE '' END ||
+         CASE WHEN doc_id % 20 = 3
+              THEN chr(10) || 'Rare site notice' ELSE '' END AS t
+  FROM documents
+), hl AS (
+  SELECT DISTINCT host, trim(line) AS line FROM (
+    SELECT host, unnest(string_split(t, chr(10))) AS line FROM aug
+  ) q WHERE trim(line) <> ''
+), bl AS (
+  SELECT line, CAST(COUNT(*) AS BIGINT) AS n_hosts
+  FROM hl GROUP BY line HAVING COUNT(*) >= 3
+)"""
+
+
+@contract(
+    oracle=f"WITH {_BOILER_AUG_CTE}\nSELECT line, n_hosts FROM bl",
+    plan=(
+        "global boilerplate mining: explode + trim projection, (host, line) distinct "
+        "with map-side partials BEFORE the host-count groupBy (a mega-host votes "
+        "once); zero Python, no join, no window"
+    ),
+    must=["HashAggregate"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Join", "Window",
+              "CartesianProduct"],
+)
+def q_frequent_lines(spark, sf_dir):
+    """Global boilerplate-line mining (ops/corpus.frequent_lines): lines
+    repeated across >= 3 DISTINCT hosts — the cross-host complement of
+    host_line_dedup and the CCNet-style global blocklist dictionary.
+    The (host, line) distinct runs BEFORE counting so a mega-host can't
+    vote a line in alone; the single-host 'Rare site notice' plant must
+    stay out.  The oracle replays explode/trim/distinct/count verbatim."""
+    from html_parser_spark.ops.corpus import frequent_lines
+
+    return frequent_lines(_boiler_docs(spark, sf_dir), min_hosts=3)
+
+
+@contract(
+    oracle=f"""
+        WITH {_BOILER_AUG_CTE}, bll AS (
+          SELECT list(line) AS arr FROM bl
+        )
+        SELECT a.doc_id,
+               array_to_string(
+                 list_filter(string_split(a.t, chr(10)),
+                             x -> NOT list_contains(bll.arr, trim(x))),
+                 chr(10)) AS text
+        FROM aug a, bll
+    """,
+    plan=(
+        "blocklist application: posexplode, ONE left-anti join against the BROADCAST "
+        "blocklist, groupBy (doc_id) reassembly via sort_array over per-doc structs "
+        "(never a corpus-wide window); zero Python"
+    ),
+    must=["BroadcastHashJoin", "LeftAnti", "HashAggregate"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct",
+              "SortMergeJoin"],
+)
+def q_strip_lines(spark, sf_dir):
+    """Blocklist application (ops/corpus.strip_frequent_lines): mine the
+    >= 3-host lines, then strip them from every doc preserving order and
+    the raw (untrimmed) form of survivors.  The oracle mines the same
+    blocklist symbolically and filters the line arrays in DuckDB — a
+    hash match proves the mine+strip composition end-to-end (including
+    that the single-host plant survives on host h3's pages)."""
+    from html_parser_spark.ops.corpus import (
+        frequent_lines,
+        strip_frequent_lines,
+    )
+
+    aug = _boiler_docs(spark, sf_dir)
+    bl = frequent_lines(aug, min_hosts=3)
+    return strip_frequent_lines(aug, bl)
+
+
+@contract(
+    oracle="""
+        WITH e0 AS (
+          SELECT 'u' || doc_id AS src, 'u' || (doc_id + 1) AS dst
+          FROM documents WHERE doc_id % 4 < 3
+          UNION ALL SELECT 'x0', 'x1' FROM documents WHERE doc_id = 0
+          UNION ALL SELECT 'x1', 'x0' FROM documents WHERE doc_id = 1
+          UNION ALL SELECT 'u0', 'u9' FROM documents WHERE doc_id = 2
+        ), m AS (
+          SELECT src, MIN(dst) AS dst FROM e0 GROUP BY src
+        ), s1 AS (
+          SELECT src AS url, dst AS cur, 1 AS hops FROM m
+        ), s2 AS (
+          SELECT s.url, COALESCE(m.dst, s.cur) AS cur,
+                 s.hops + CASE WHEN m.dst IS NULL THEN 0 ELSE 1 END AS hops
+          FROM s1 s LEFT JOIN m ON m.src = s.cur
+        ), s3 AS (
+          SELECT s.url, COALESCE(m.dst, s.cur) AS cur,
+                 s.hops + CASE WHEN m.dst IS NULL THEN 0 ELSE 1 END AS hops
+          FROM s2 s LEFT JOIN m ON m.src = s.cur
+        ), s4 AS (
+          SELECT s.url, COALESCE(m.dst, s.cur) AS cur,
+                 s.hops + CASE WHEN m.dst IS NULL THEN 0 ELSE 1 END AS hops
+          FROM s3 s LEFT JOIN m ON m.src = s.cur
+        ), s5 AS (
+          SELECT s.url, COALESCE(m.dst, s.cur) AS cur,
+                 s.hops + CASE WHEN m.dst IS NULL THEN 0 ELSE 1 END AS hops
+          FROM s4 s LEFT JOIN m ON m.src = s.cur
+        )
+        SELECT s.url AS src, s.cur AS final_url, CAST(s.hops AS INTEGER) AS hops,
+               s.cur NOT IN (SELECT src FROM m) AS resolved
+        FROM s5 s
+    """,
+    plan=(
+        "redirect resolution: groupBy-min next-hop map, per-hop state⋈map equi-join "
+        "(state = one row per redirecting source, never per page), lineage truncated "
+        "per hop; zero Python, no window, no cartesian product"
+    ),
+    must=["HashAggregate", "Join"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct"],
+)
+def q_redirects(spark, sf_dir):
+    """Redirect-chain resolution (ops/web.resolve_redirects): 4-hop
+    synthetic chains u(4k)->u(4k+1)->u(4k+2)->u(4k+3) from doc_id
+    arithmetic, a planted 2-cycle x0<->x1 that must report
+    resolved=false at the hop cap, and a duplicate-capture edge
+    (u0 -> u9 next to u0 -> u1) pinning the deterministic min-dst
+    election.  The oracle unrolls the same per-hop LEFT joins —
+    hash-exact."""
+    from html_parser_spark.ops.web import resolve_redirects
+
+    docs = _docs(spark, sf_dir)
+    d = F.col("doc_id")
+    did = d.cast("string")
+    chain = docs.filter(d % 4 < 3).select(
+        F.concat(F.lit("u"), did).alias("src"),
+        F.concat(F.lit("u"), (d + 1).cast("string")).alias("dst"),
+    )
+    spec = (
+        docs.filter(d == 0)
+        .select(F.lit("x0").alias("src"), F.lit("x1").alias("dst"))
+        .unionByName(
+            docs.filter(d == 1).select(
+                F.lit("x1").alias("src"), F.lit("x0").alias("dst")
             )
-            SELECT doc_id, title,
-                   CAST(CASE WHEN k IN (0, 3, 7) THEN 1 ELSE 0 END
-                        AS INTEGER) AS title_404,
-                   CAST(CASE WHEN k IN (0, 2) THEN 1 ELSE 0 END
-                        AS INTEGER) AS body_404,
-                   CAST(CASE WHEN blen < 512 THEN 1 ELSE 0 END
-                        AS INTEGER) AS short_body,
-                   CAST(CASE WHEN k IN (0, 2, 3, 7) AND blen < 512 THEN 1
-                             ELSE 0 END AS INTEGER) AS soft404
-            FROM f
-        """,
-        "q_stratified_sample": """
-            -- the same 16-bit md5-prefix bucket via strpos arithmetic;
-            -- thresholds = fraction * 65536 (en 25%, zh 75%, de 50%,
-            -- es/fr dropped)
-            WITH b AS (
-              SELECT doc_id, lang,
-                     md5('strat' || CAST(doc_id AS VARCHAR)) AS h
-              FROM documents
-            ), v AS (
-              SELECT doc_id, lang,
-                     (strpos('0123456789abcdef', substring(h, 1, 1)) - 1) * 4096
-                   + (strpos('0123456789abcdef', substring(h, 2, 1)) - 1) * 256
-                   + (strpos('0123456789abcdef', substring(h, 3, 1)) - 1) * 16
-                   + (strpos('0123456789abcdef', substring(h, 4, 1)) - 1)
-                       AS bucket
-              FROM b
+        )
+        .unionByName(
+            docs.filter(d == 2).select(
+                F.lit("u0").alias("src"), F.lit("u9").alias("dst")
             )
-            SELECT doc_id, lang FROM v
-            WHERE bucket < CASE lang WHEN 'en' THEN 16384
-                                     WHEN 'zh' THEN 49152
-                                     WHEN 'de' THEN 32768
-                                     ELSE 0 END
-        """,
-        "q_vocab": """
-            -- same whitespace tokenization as q_tfidf; both counters in
-            -- one GROUP BY; rank = count desc, term asc over the top 50
-            WITH toks AS (
-              SELECT doc_id,
-                     unnest(list_filter(
-                       regexp_split_to_array(lower(text), '\\s+'),
-                       x -> len(x) > 0)) AS term
-              FROM documents
-            ), v AS (
-              SELECT term, count(*) AS term_count,
-                     count(DISTINCT doc_id) AS doc_count
-              FROM toks GROUP BY term
-            )
-            SELECT term, term_count, doc_count,
-                   row_number() OVER (ORDER BY term_count DESC, term ASC)
-                     AS rank
-            FROM v ORDER BY term_count DESC, term ASC LIMIT 50
-        """,
-        "q_image_dhash": """
-            -- closed-form 64-bit hashes: ascending gradient -> every
-            -- right neighbor brighter -> all ones = -1 signed; 9-wide
-            -- checkerboard -> 10101010 per row = 0xAAAA.. signed; PPM
-            -- descending gradient -> strict '>' never fires -> 0;
-            -- non-image -> decoded 0, hash coalesced to 0
-            SELECT doc_id,
-                   CAST(CASE WHEN doc_id % 4 IN (0, 1, 2) THEN 1 ELSE 0 END
-                        AS INTEGER) AS decoded,
-                   CAST(CASE doc_id % 4
-                          WHEN 0 THEN -1
-                          WHEN 1 THEN -6148914691236517206
-                          ELSE 0 END AS BIGINT) AS dhash
-            FROM documents
-        """,
-        "q_crawl_plan": """
-            -- per-host page counts x closed-form delays: hosts 0-4 carry
-            -- wildcard Crawl-delay 2..6, host 5's mybot group (7) beats
-            -- its '*' group (3), hosts 6-9 default to 1
-            WITH d AS (SELECT doc_id % 10 AS h FROM documents),
-            c AS (SELECT h, count(*) AS n FROM d GROUP BY h)
-            SELECT 'h' || h || '.example.org' AS host,
-                   CAST(n AS BIGINT) AS n_pages,
-                   CAST(CASE WHEN h < 5 THEN 2 + h WHEN h = 5 THEN 7
-                             ELSE 1 END AS INTEGER) AS crawl_delay_sec,
-                   CAST(n * (CASE WHEN h < 5 THEN 2 + h WHEN h = 5 THEN 7
-                                  ELSE 1 END) AS BIGINT) AS est_fetch_sec
-            FROM c
-        """,
-        "q_temperature_mix": """
-            -- α=0.5 temperature mixing: w_k = isqrt(c_k) (exact below
-            -- 2^52), S = Σ w (integer — order-independent), threshold_k =
-            -- least(65536, (65536·T·w_k) // (S·c_k)) in pure integer
-            -- arithmetic; kept = docs whose 16-bit md5('mix'||id) bucket
-            -- clears the threshold
-            WITH c AS (
-              SELECT lang AS stratum, count(*) AS n_docs,
-                     CAST(floor(sqrt(count(*))) AS BIGINT) AS w
-              FROM documents GROUP BY lang
-            ), s AS (
-              SELECT CAST(sum(w) AS BIGINT) AS s_tot,
-                     CAST(sum(n_docs) AS BIGINT) AS t_tot
-              FROM c
-            ), plan AS (
-              SELECT stratum, n_docs,
-                     least(65536,
-                           (65536::HUGEINT * t_tot * w) // (s_tot * n_docs))
-                       AS threshold
-              FROM c, s
-            ), b AS (
-              SELECT lang AS stratum,
-                     (strpos('0123456789abcdef', substring(h, 1, 1)) - 1) * 4096
-                   + (strpos('0123456789abcdef', substring(h, 2, 1)) - 1) * 256
-                   + (strpos('0123456789abcdef', substring(h, 3, 1)) - 1) * 16
-                   + (strpos('0123456789abcdef', substring(h, 4, 1)) - 1)
-                       AS bucket
-              FROM (SELECT lang, md5('mix' || CAST(doc_id AS VARCHAR)) AS h
-                    FROM documents)
-            ), k AS (
-              SELECT b.stratum, count(*) AS kept
-              FROM b JOIN plan USING (stratum)
-              WHERE b.bucket < plan.threshold
-              GROUP BY b.stratum
-            )
-            SELECT plan.stratum, CAST(plan.n_docs AS BIGINT) AS n_docs,
-                   CAST(plan.threshold AS BIGINT) AS threshold,
-                   CAST(COALESCE(k.kept, 0) AS BIGINT) AS kept
-            FROM plan LEFT JOIN k USING (stratum)
-        """,
-        "q_doc_classifier": """
-            -- hashed NB vote classifier: 4096 md5 buckets over token
-            -- occurrences, votes = sign of the Laplace log-odds via exact
-            -- integer cross-products ((pos+1)(N+B) vs (neg+1)(P+B)),
-            -- trained on the md5-split train docs with label lang='en',
-            -- scored over every doc (unseen buckets vote 0)
-            WITH tok AS (
-              SELECT doc_id,
-                     unnest(list_filter(
-                       regexp_split_to_array(lower(text), '\\s+'),
-                       x -> len(x) > 0)) AS tok
-              FROM documents
-            ), feats AS (
-              SELECT doc_id,
-                     ((strpos('0123456789abcdef', substring(h, 1, 1)) - 1) * 4096
-                    + (strpos('0123456789abcdef', substring(h, 2, 1)) - 1) * 256
-                    + (strpos('0123456789abcdef', substring(h, 3, 1)) - 1) * 16
-                    + (strpos('0123456789abcdef', substring(h, 4, 1)) - 1))
-                       % 4096 AS bucket
-              FROM (SELECT doc_id, md5('feat' || tok) AS h FROM tok)
-            ), lab AS (
-              SELECT doc_id,
-                     CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-              FROM documents
-              WHERE (strpos('0123456789abcdef',
-                            substring(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16
-                  + strpos('0123456789abcdef',
-                           substring(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1
-                    < 205
-            ), cells AS (
-              SELECT bucket,
-                     CAST(sum(y) AS BIGINT) AS pos,
-                     CAST(sum(1 - y) AS BIGINT) AS neg
-              FROM feats JOIN lab USING (doc_id)
-              GROUP BY bucket
-            ), tot AS (
-              SELECT CAST(sum(pos) AS BIGINT) AS p_tot,
-                     CAST(sum(neg) AS BIGINT) AS n_tot
-              FROM cells
-            ), votes AS (
-              SELECT bucket,
-                     CASE WHEN (pos + 1)::HUGEINT * (n_tot + 4096)
-                             > (neg + 1)::HUGEINT * (p_tot + 4096) THEN 1
-                          WHEN (pos + 1)::HUGEINT * (n_tot + 4096)
-                             < (neg + 1)::HUGEINT * (p_tot + 4096) THEN -1
-                          ELSE 0 END AS vote
-              FROM cells, tot
-            ), scored AS (
-              SELECT f.doc_id,
-                     CAST(sum(COALESCE(v.vote, 0)) AS BIGINT) AS score
-              FROM feats f LEFT JOIN votes v USING (bucket)
-              GROUP BY f.doc_id
-            )
-            SELECT d.doc_id, s.score,
-                   CAST(s.score > 0 AS INTEGER) AS pred,
-                   CAST(d.lang = 'en' AS INTEGER) AS actual
-            FROM scored s JOIN documents d USING (doc_id)
-        """,
-        "q_table_extract": """
-            -- all four expected <tr> rows per synthesized page in closed
-            -- form: t0r0 = header with colspan-2 repetition, t0r1 =
-            -- whitespace-collapsed data cells, t1r0 = host row whose first
-            -- cell text CONTAINS the nested table's text ('x' || 'in<d>'),
-            -- t2r0 = the nested table's own single row
-            WITH d AS (
-              SELECT doc_id,
-                     'https://t.example.org/' || CAST(doc_id AS VARCHAR) AS url,
-                     CAST(doc_id AS VARCHAR) AS s
-              FROM documents
-            )
-            SELECT url, 0 AS table_idx, 0 AS row_idx, TRUE AS is_header,
-                   2 AS n_cells, 'hdr ' || s || '|' || 'hdr ' || s AS cells
-            FROM d
-            UNION ALL
-            SELECT url, 0, 1, FALSE, 2,
-                   'a ' || s || '|' || 'b ' || CAST(doc_id % 7 AS VARCHAR)
-            FROM d
-            UNION ALL
-            SELECT url, 1, 0, FALSE, 2, 'xin' || s || '|' || 'y' FROM d
-            UNION ALL
-            SELECT url, 2, 0, FALSE, 1, 'in' || s FROM d
-        """,
-        "q_wat_roundtrip": """
-            -- every WAT field in closed form per synthesized page:
-            -- title T<d>, description D<d>, the deduped outlink (two
-            -- anchors share one href -> outlinks[1] IS NULL), n_anchors
-            -- counts both; conversion framing fields are constants
-            SELECT 'https://d' || (doc_id % 20) || '.example.org/doc/' || doc_id
-                     AS url,
-                   strftime(TIMESTAMP '2024-01-01 00:00:00' + to_seconds(doc_id),
-                            '%Y-%m-%dT%H:%M:%SZ') AS warc_date,
-                   'metadata' AS warc_type,
-                   'application/json' AS content_type,
-                   'T' || doc_id AS title,
-                   'D' || doc_id AS description,
-                   'https://out.example.org/p' || doc_id AS outlink0,
-                   CAST(NULL AS VARCHAR) AS outlink1,
-                   2 AS n_anchors
-            FROM documents
-        """,
-        "q_robots_sitemaps": """
-            -- every expected (host, sitemap_url) row in closed form per
-            -- body family: 0 = one line inside a UA group, 1 = two
-            -- case-variant lines (inline comment stripped), 2 = none,
-            -- 3 = indented, no space after the colon
-            WITH d AS (
-              SELECT doc_id, 'h' || doc_id || '.example.org' AS host,
-                     CAST(doc_id AS VARCHAR) AS s, doc_id % 4 AS fam
-              FROM documents
-            )
-            SELECT host, 'https://s.example.org/map' || s || '.xml' AS sitemap_url
-              FROM d WHERE fam = 0
-            UNION ALL
-            SELECT host, 'https://s.example.org/a' || s || '.xml' FROM d WHERE fam = 1
-            UNION ALL
-            SELECT host, 'https://s.example.org/b' || s || '.xml' FROM d WHERE fam = 1
-            UNION ALL
-            SELECT host, 'https://s.example.org/c' || s || '.xml' FROM d WHERE fam = 3
-        """,
-        "q_pack_shards": """
-            -- the sequential semantics the distributed prefix-sum must
-            -- reproduce exactly: global running byte sum in doc_id order,
-            -- exclusive offsets, integer shard division
-            WITH s AS (
-              SELECT doc_id,
-                     CAST(octet_length(encode(COALESCE(text, ''))) AS BIGINT)
-                       AS n_bytes
-              FROM documents
-            )
-            SELECT doc_id, n_bytes,
-                   CAST(COALESCE(sum(n_bytes) OVER (
-                          ORDER BY doc_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                        ), 0) AS BIGINT) AS start_offset,
-                   CAST(COALESCE(sum(n_bytes) OVER (
-                          ORDER BY doc_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                        ), 0) // 262144 AS BIGINT) AS shard_id
-            FROM s
-        """,
-        "q_pack_sequences": """
-            -- sequential packing semantics: global running slot sum in
-            -- doc_id order (n_tokens + 1 EOD slot per doc), one row per
-            -- sequence the doc's slot span [start, start+n_slots) covers
-            WITH t AS (
-              SELECT doc_id,
-                     CAST(len(list_filter(
-                       regexp_split_to_array(trim(coalesce(text, '')), '\\s+'),
-                       x -> len(x) > 0)) + 1 AS BIGINT) AS n_slots
-              FROM documents
-            ), o AS (
-              SELECT doc_id, n_slots,
-                     CAST(COALESCE(sum(n_slots) OVER (
-                       ORDER BY doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                     ), 0) AS BIGINT) AS start_offset
-              FROM t
-            ), e AS (
-              SELECT doc_id, n_slots, start_offset,
-                     unnest(generate_series(start_offset // 128,
-                                            (start_offset + n_slots - 1) // 128))
-                       AS seq_id
-              FROM o
-            )
-            SELECT CAST(seq_id AS BIGINT) AS seq_id, doc_id,
-                   CAST(greatest(start_offset, seq_id * 128) - seq_id * 128
-                        AS BIGINT) AS seq_off,
-                   CAST(greatest(start_offset, seq_id * 128) - start_offset
-                        AS BIGINT) AS doc_off,
-                   CAST(least(start_offset + n_slots, (seq_id + 1) * 128)
-                        - greatest(start_offset, seq_id * 128)
-                        AS BIGINT) AS slice_len,
-                   least(start_offset + n_slots, (seq_id + 1) * 128)
-                     = start_offset + n_slots AS eod
-            FROM e
-        """,
-        "q_seq_materialize": """
-            -- execute the packing plan symbolically: per-doc slot array
-            -- (tokens + EOD marker), global running offsets, list_slice
-            -- per covered sequence, reassembled in seq_off order
-            WITH t AS (
-              SELECT doc_id,
-                     list_append(list_filter(
-                       regexp_split_to_array(trim(coalesce(text, '')), '\\s+'),
-                       x -> len(x) > 0), '<|eod|>') AS slots
-              FROM documents
-            ), o AS (
-              SELECT doc_id, slots,
-                     CAST(len(slots) AS BIGINT) AS n_slots,
-                     CAST(COALESCE(sum(len(slots)) OVER (
-                       ORDER BY doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                     ), 0) AS BIGINT) AS start_offset
-              FROM t
-            ), e AS (
-              SELECT doc_id, slots, n_slots, start_offset,
-                     unnest(generate_series(start_offset // 128,
-                                            (start_offset + n_slots - 1) // 128))
-                       AS seq_id
-              FROM o
-            ), s AS (
-              SELECT seq_id,
-                     greatest(start_offset, seq_id * 128) - seq_id * 128
-                       AS seq_off,
-                     least(start_offset + n_slots, (seq_id + 1) * 128)
-                       - greatest(start_offset, seq_id * 128) AS slice_len,
-                     array_to_string(list_slice(slots,
-                       greatest(start_offset, seq_id * 128) - start_offset + 1,
-                       least(start_offset + n_slots, (seq_id + 1) * 128)
-                         - start_offset), ' ') AS piece
-              FROM e
-            )
-            SELECT CAST(seq_id AS BIGINT) AS seq_id,
-                   CAST(sum(slice_len) AS BIGINT) AS n_slots,
-                   string_agg(piece, ' ' ORDER BY seq_off) AS seq_text
-            FROM s GROUP BY seq_id
-        """,
-        "q_surt_key": """
-            -- expected SURT key per family, stated in closed form:
-            -- reversed host labels, www stripped, port dropped, empty
-            -- path -> '/', query params sorted, relative ids lowercased
-            SELECT doc_id,
-                   CASE doc_id % 6
-                     WHEN 0 THEN 'HTTP://WWW.Example.COM/A/B' || doc_id || '?b=2&a=1'
-                     WHEN 1 THEN 'https://sub.test.co.uk/path' || doc_id
-                     WHEN 2 THEN 'https://Example.org'
-                     WHEN 3 THEN 'relative/ID/' || doc_id
-                     WHEN 4 THEN 'http://h.example.net:8080/x' || doc_id
-                     ELSE 'https://example.com/Q' || doc_id || '?Z=9'
-                   END AS raw_url,
-                   CASE doc_id % 6
-                     WHEN 0 THEN 'com,example)/a/b' || doc_id || '?a=1&b=2'
-                     WHEN 1 THEN 'uk,co,test,sub)/path' || doc_id
-                     WHEN 2 THEN 'org,example)/'
-                     WHEN 3 THEN 'relative/id/' || doc_id
-                     WHEN 4 THEN 'net,example,h)/x' || doc_id
-                     ELSE 'com,example)/q' || doc_id || '?z=9'
-                   END AS surt
-            FROM documents
-        """,
-        "q_wet_roundtrip": """
-            -- recompute the per-url accounting straight from documents;
-            -- matching md5 per url == the WET conversion-record
-            -- writer->reader round-trip preserved every text byte
-            SELECT 'https://d' || (doc_id % 20) || '.example.org/doc/' || doc_id
-                     AS url,
-                   strftime(TIMESTAMP '2024-01-01 00:00:00' + to_seconds(doc_id),
-                            '%Y-%m-%dT%H:%M:%SZ') AS warc_date,
-                   CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-                   md5(text) AS body_md5,
-                   'conversion' AS warc_type,
-                   'text/plain' AS content_type
-            FROM documents
-        """,
-        "q_markdown": """
-            -- rebuild the expected markdown symbolically: every block is a
-            -- deterministic function of doc_id and collapsed text slices;
-            -- the blockquote is the one block that can collapse to empty
-            -- (and must then be DROPPED, like the kernel does)
-            WITH c AS (
-              SELECT doc_id,
-                     trim(regexp_replace(substr(text, 1, 60),
-                          '\\s+', ' ', 'g')) AS c1,
-                     trim(regexp_replace(substr(text, 61, 30),
-                          '\\s+', ' ', 'g')) AS c2,
-                     trim(regexp_replace(substr(text, 91, 30),
-                          '\\s+', ' ', 'g')) AS c3,
-                     trim(regexp_replace(substr(text, 121, 20),
-                          '\\s+', ' ', 'g')) AS c4
-              FROM documents
-            ), b AS (
-              SELECT doc_id,
-                     list_filter([
-                       '# Doc ' || doc_id,
-                       trim(c1 || ' **bold' || doc_id || '** and [link '
-                            || doc_id || '](https://x.org/' || doc_id
-                            || ').'),
-                       '- ' || trim('alpha ' || c2) || chr(10)
-                           || '- beta *it' || doc_id || '*' || chr(10)
-                           || '  - nested ' || doc_id,
-                       CASE WHEN c3 <> '' THEN '> ' || c3 END,
-                       '```' || chr(10) || 'code  ' || doc_id || chr(10)
-                           || '  line2' || chr(10) || '```',
-                       '1. first' || chr(10) || '2. second ' || doc_id,
-                       '| k | v |' || chr(10) || '| --- | --- |' || chr(10)
-                           || '| ' || doc_id || ' | ' || c4 || ' |',
-                       '---'
-                     ], x -> x IS NOT NULL) AS blocks
-              FROM c
-            )
-            SELECT 'https://md.example.org/' || doc_id AS url,
-                   array_to_string(blocks, chr(10) || chr(10)) AS markdown,
-                   CAST(length(array_to_string(blocks, chr(10) || chr(10)))
-                        AS INTEGER) AS md_chars,
-                   CAST(len(blocks) AS INTEGER) AS n_blocks
-            FROM b
-        """,
-        "q_warc_revisit": """
-            -- the payload is a pure function of doc_id % 41, so the digest
-            -- groups ARE the % 41 groups; original = min (ts, url), replayed
-            -- with a window (ties on ts are real: ts is doc_id % 7 days)
-            WITH caps AS (
-              SELECT 'https://w' || (doc_id % 5) || '.example.org/p'
-                         || doc_id AS url,
-                     TIMESTAMP '2024-01-01 00:00:00'
-                         + (doc_id % 7) * INTERVAL 1 DAY AS ts,
-                     doc_id % 41 AS grp
-              FROM documents
-            ), w AS (
-              SELECT url, ts,
-                     row_number() OVER win AS rn,
-                     first_value(url) OVER win AS furl,
-                     first_value(ts) OVER win AS fts
-              FROM caps
-              WINDOW win AS (PARTITION BY grp ORDER BY ts, url)
-            )
-            SELECT url,
-                   strftime(ts, '%Y-%m-%dT%H:%M:%SZ') AS warc_date,
-                   (rn > 1) AS is_revisit,
-                   CASE WHEN rn > 1 THEN furl END AS refers_to_url,
-                   CASE WHEN rn > 1 THEN strftime(fts, '%Y-%m-%dT%H:%M:%SZ')
-                        END AS refers_to_date
-            FROM w
-        """,
-        "q_audio_headers": """
-            -- closed-form expected fields per payload family: k=0 WAV
-            -- mono/16-bit (1000ms declared data), k=1 WAV stereo/8-bit
-            -- (500ms), k=2 MP3 MPEG1-L3 128kbps stereo (sample rate by
-            -- doc_id%3, ID3v2-prefixed on even ids — same parse either
-            -- way), k=3 non-audio blob -> NULL format, zeroed numerics
-            SELECT doc_id,
-                   CASE WHEN doc_id % 4 IN (0, 1) THEN 'wav'
-                        WHEN doc_id % 4 = 2 THEN 'mp3' END AS format,
-                   CAST(CASE doc_id % 4 WHEN 0 THEN 1 WHEN 1 THEN 2
-                             WHEN 2 THEN 2 ELSE 0 END AS INTEGER) AS channels,
-                   CAST(CASE WHEN doc_id % 4 IN (0, 1)
-                                  THEN ([8000, 22050, 44100])[(doc_id % 3) + 1]
-                             WHEN doc_id % 4 = 2
-                                  THEN ([44100, 48000, 32000])[(doc_id % 3) + 1]
-                             ELSE 0 END AS INTEGER) AS sample_rate,
-                   CAST(CASE doc_id % 4 WHEN 0 THEN 16 WHEN 1 THEN 8
-                             ELSE 0 END AS INTEGER) AS bits_per_sample,
-                   CAST(CASE WHEN doc_id % 4 IN (0, 1)
-                                  THEN ([128, 352, 705])[(doc_id % 3) + 1]
-                             WHEN doc_id % 4 = 2 THEN 128
-                             ELSE 0 END AS INTEGER) AS bitrate_kbps,
-                   CAST(CASE doc_id % 4 WHEN 0 THEN 1000 WHEN 1 THEN 500
-                             ELSE 0 END AS INTEGER) AS duration_ms
-            FROM documents
-        """,
-        "q_familiarity": """
-            -- same trigram + top-50 profile CTEs as q_lang_id, then two
-            -- integer rollups: distinct grams per doc, grams the doc's OWN
-            -- language profile knows
-            WITH t AS (
-              SELECT doc_id, lang,
-                     lower(regexp_replace(text, '\\s+', ' ', 'g')) AS tx
-              FROM documents
-            ),
-            g AS (
-              SELECT doc_id, lang,
-                     unnest(list_distinct(list_transform(
-                       range(1, greatest(len(tx) - 2, 0) + 1),
-                       i -> substr(tx, CAST(i AS INT), 3)))) AS gram
-              FROM t
-            ),
-            counts AS (SELECT lang, gram, count(*) AS c FROM g GROUP BY 1, 2),
-            prof AS (
-              SELECT lang, gram FROM (
-                SELECT lang, gram,
-                       row_number() OVER (PARTITION BY lang
-                                          ORDER BY c DESC, gram) AS rank
-                FROM counts)
-              WHERE rank <= 50
-            ),
-            tot AS (
-              SELECT doc_id, lang, CAST(COUNT(*) AS BIGINT) AS n_grams
-              FROM g GROUP BY 1, 2
-            ),
-            kn AS (
-              SELECT g.doc_id, CAST(COUNT(*) AS BIGINT) AS n_known
-              FROM g JOIN prof p ON p.lang = g.lang AND p.gram = g.gram
-              GROUP BY 1
-            )
-            SELECT tot.doc_id, tot.lang, tot.n_grams,
-                   CAST(COALESCE(kn.n_known, 0) AS BIGINT) AS n_known
-            FROM tot LEFT JOIN kn ON kn.doc_id = tot.doc_id
-        """,
-        "q_jsonld": """
-            -- closed-form expected blocks: block 0 is the valid object
-            -- with the cycling @type, block 1 (odd docs) is the malformed
-            -- '{broken' whose parsed fields are NULL
-            SELECT doc_id, CAST(0 AS INTEGER) AS block_idx,
-                   '{"@context": "https://schema.org", "@type": "'
-                     || CASE doc_id % 3 WHEN 0 THEN 'Article'
-                        WHEN 1 THEN 'Product' ELSE 'Event' END
-                     || '", "name": "doc ' || doc_id || '"}' AS raw_json,
-                   CASE doc_id % 3 WHEN 0 THEN 'Article'
-                        WHEN 1 THEN 'Product' ELSE 'Event' END AS schema_type,
-                   'https://schema.org' AS schema_context
-            FROM documents
-            UNION ALL
-            SELECT doc_id, CAST(1 AS INTEGER), '{broken', NULL, NULL
-            FROM documents WHERE doc_id % 2 = 1
-        """,
-        "q_feed": """
-            -- closed-form expected feed entries: two RSS items for even
-            -- doc_ids (second lacks pubDate -> NULL), one Atom entry for
-            -- odd; channel/feed titles never leak
-            SELECT doc_id, 'f' || doc_id || '.example' AS host,
-                   'rss' AS kind, 'Item ' || doc_id || ' a' AS title,
-                   'https://f' || doc_id || '.example/1' AS link,
-                   'D' || doc_id AS published
-            FROM documents WHERE doc_id % 2 = 0
-            UNION ALL
-            SELECT doc_id, 'f' || doc_id || '.example', 'rss',
-                   'Item ' || doc_id || ' b',
-                   'https://f' || doc_id || '.example/2', NULL
-            FROM documents WHERE doc_id % 2 = 0
-            UNION ALL
-            SELECT doc_id, 'f' || doc_id || '.example', 'atom',
-                   'Entry ' || doc_id,
-                   'https://f' || doc_id || '.example/e', 'P' || doc_id
-            FROM documents WHERE doc_id % 2 = 1
-        """,
-        "q_crawl_diff": """
-            -- closed-form EXPECTED diff: %10==0 added, %10==1 removed,
-            -- %5==2 changed (body edited), everything else unchanged
-            SELECT 'https://c' || (doc_id % 10) || '.com/d' || doc_id AS url,
-                   CASE WHEN doc_id % 10 = 0 THEN 'added'
-                        WHEN doc_id % 10 = 1 THEN 'removed'
-                        WHEN doc_id % 5 = 2 THEN 'changed'
-                        ELSE 'unchanged' END AS status,
-                   CASE WHEN doc_id % 10 = 0 THEN NULL
-                        ELSE md5(text) END AS old_md5,
-                   CASE WHEN doc_id % 10 = 1 THEN NULL
-                        WHEN doc_id % 5 = 2 THEN md5(text || ' v2')
-                        ELSE md5(text) END AS new_md5
-            FROM documents
-        """,
-        "q_anchor_stats": """
-            -- re-derive the exploded (src_host, dst, text) anchor rows
-            -- symbolically (the mailto decoy never appears) and aggregate:
-            -- occurrences, distinct source hosts, sorted distinct labels
-            WITH a AS (
-              SELECT 'www.site' || (doc_id % 10) || '.com' AS src_host,
-                     'https://t' || (doc_id % 25) || '.example/' AS dst,
-                     'anchor t' || (doc_id % 25) || ' v' || (doc_id % 3) AS text
-              FROM documents
-              UNION ALL
-              SELECT 'www.site' || (doc_id % 10) || '.com',
-                     'https://t' || ((doc_id + 7) % 25) || '.example/',
-                     'anchor t' || ((doc_id + 7) % 25) || ' v' || (doc_id % 3)
-              FROM documents
-            )
-            SELECT dst,
-                   CAST(COUNT(*) AS BIGINT) AS n_anchors,
-                   CAST(COUNT(DISTINCT src_host) AS BIGINT) AS n_src_hosts,
-                   array_to_string(list_sort(list_distinct(list(text))), '|')
-                       AS anchor_texts
-            FROM a GROUP BY dst
-        """,
-        "q_robots": """
-            -- closed-form EXPECTED verdicts (checks the robots parser +
-            -- precedence engine): low hosts block only the bare /private
-            -- kind (the /private/ok kind is rescued by the longer allow),
-            -- high hosts block only /public, the root path matches nothing,
-            -- and the badbot group must not leak into agent '*'
-            SELECT doc_id,
-                   'https://h' || (doc_id % 20) || '.example' ||
-                   CASE doc_id % 4
-                     WHEN 0 THEN '/public/p' || doc_id
-                     WHEN 1 THEN '/private/p' || doc_id
-                     WHEN 2 THEN '/private/ok/p' || doc_id
-                     ELSE '/'
-                   END AS url,
-                   CAST(CASE
-                     WHEN doc_id % 20 < 10
-                          THEN CASE WHEN doc_id % 4 = 1 THEN 0 ELSE 1 END
-                     ELSE CASE WHEN doc_id % 4 = 0 THEN 0 ELSE 1 END
-                   END AS INTEGER) AS allowed
-            FROM documents
-        """,
-        "q_gopher": """
-            -- replicate every Gopher rule in the same integer arithmetic:
-            -- occurrence counts via length-difference, line/word filters via
-            -- list_filter + regexp, stop-word hits as 8 list_contains CASEs
-            WITH g AS (
-              SELECT doc_id,
-                     regexp_split_to_array(trim(text), '\\s+') AS toks,
-                     string_split(text, chr(10)) AS lines,
-                     CAST(length(regexp_replace(text, '\\s+', '', 'g'))
-                          AS BIGINT) AS word_chars,
-                     CAST(length(text) - length(replace(text, '#', ''))
-                          AS BIGINT)
-                     + CAST(length(text) - length(replace(text, '…', ''))
-                          AS BIGINT)
-                     + CAST((length(text) - length(replace(text, '...', '')))
-                            // 3 AS BIGINT) AS symbols
-              FROM documents
-            ), m AS (
-              SELECT doc_id, word_chars, symbols,
-                     CAST(len(toks) AS BIGINT) AS n_words,
-                     CAST(len(lines) AS BIGINT) AS n_lines,
-                     CAST(len(list_filter(lines,
-                          x -> regexp_matches(ltrim(x), '^[•*-]')))
-                          AS BIGINT) AS bullet_lines,
-                     CAST(len(list_filter(lines,
-                          x -> regexp_matches(rtrim(x), '(\\.\\.\\.|…)$')))
-                          AS BIGINT) AS ellipsis_lines,
-                     CAST(len(list_filter(toks,
-                          x -> regexp_matches(x, '[A-Za-z]')))
-                          AS BIGINT) AS alpha_words,
-                     (CASE WHEN list_contains(list_transform(toks,
-                           x -> lower(x)), 'the') THEN 1 ELSE 0 END
-                      + CASE WHEN list_contains(list_transform(toks,
-                           x -> lower(x)), 'be') THEN 1 ELSE 0 END
-                      + CASE WHEN list_contains(list_transform(toks,
-                           x -> lower(x)), 'to') THEN 1 ELSE 0 END
-                      + CASE WHEN list_contains(list_transform(toks,
-                           x -> lower(x)), 'of') THEN 1 ELSE 0 END
-                      + CASE WHEN list_contains(list_transform(toks,
-                           x -> lower(x)), 'and') THEN 1 ELSE 0 END
-                      + CASE WHEN list_contains(list_transform(toks,
-                           x -> lower(x)), 'that') THEN 1 ELSE 0 END
-                      + CASE WHEN list_contains(list_transform(toks,
-                           x -> lower(x)), 'have') THEN 1 ELSE 0 END
-                      + CASE WHEN list_contains(list_transform(toks,
-                           x -> lower(x)), 'with') THEN 1 ELSE 0 END
-                     ) AS stop_hits
-              FROM g
-            )
-            SELECT doc_id, n_words, word_chars, n_lines,
-                   CAST(CASE WHEN n_words >= 30 AND n_words <= 100000
-                        THEN 1 ELSE 0 END AS INTEGER) AS keep_word_count,
-                   CAST(CASE WHEN word_chars >= 3 * n_words
-                             AND word_chars <= 10 * n_words
-                        THEN 1 ELSE 0 END AS INTEGER) AS keep_mean_len,
-                   CAST(CASE WHEN 10 * symbols <= n_words
-                        THEN 1 ELSE 0 END AS INTEGER) AS keep_symbol_ratio,
-                   CAST(CASE WHEN 10 * bullet_lines <= 9 * n_lines
-                        THEN 1 ELSE 0 END AS INTEGER) AS keep_bullets,
-                   CAST(CASE WHEN 10 * ellipsis_lines <= 3 * n_lines
-                        THEN 1 ELSE 0 END AS INTEGER) AS keep_ellipsis_lines,
-                   CAST(CASE WHEN 5 * alpha_words >= 4 * n_words
-                        THEN 1 ELSE 0 END AS INTEGER) AS keep_alpha,
-                   CAST(CASE WHEN stop_hits >= 2
-                        THEN 1 ELSE 0 END AS INTEGER) AS keep_stopwords,
-                   CAST(CASE WHEN n_words >= 30 AND n_words <= 100000
-                             AND word_chars >= 3 * n_words
-                             AND word_chars <= 10 * n_words
-                             AND 10 * symbols <= n_words
-                             AND 10 * bullet_lines <= 9 * n_lines
-                             AND 10 * ellipsis_lines <= 3 * n_lines
-                             AND 5 * alpha_words >= 4 * n_words
-                             AND stop_hits >= 2
-                        THEN 1 ELSE 0 END AS INTEGER) AS keep
-            FROM m
-        """,
-        "q_media_meta": """
-            -- regenerate ops/multimodal.synth_media_df(300) exactly: payload
-            -- is 'MEDIA' || md5(media_id) x8, kind cycles image/audio/video
-            WITH m AS (
-              SELECT r.range AS media_id,
-                     r.range % 50 AS doc_id,
-                     (['image','audio','video'])[CAST(r.range % 3 AS INT) + 1]
-                       AS kind,
-                     'MEDIA' || repeat(md5(CAST(r.range AS VARCHAR)), 8)
-                       AS payload,
-                     CAST(r.range * 10 AS INT) AS duration_ms
-              FROM range(0, 300) r
-            )
-            SELECT kind,
-                   count(*) AS n_media,
-                   CAST(sum(len(payload)) AS BIGINT) AS total_bytes,
-                   count(DISTINCT doc_id) AS n_docs,
-                   max(duration_ms) AS max_duration_ms
-            FROM m GROUP BY kind
-        """,
-        "q_lang_id": """
-            WITH t AS (
-              SELECT doc_id, lang,
-                     lower(regexp_replace(text, '\\s+', ' ', 'g')) AS tx
-              FROM documents
-            ),
-            g AS (
-              SELECT doc_id, lang,
-                     unnest(list_distinct(list_transform(
-                       range(1, greatest(len(tx) - 2, 0) + 1),
-                       i -> substr(tx, CAST(i AS INT), 3)))) AS gram
-              FROM t
-            ),
-            counts AS (SELECT lang, gram, count(*) AS c FROM g GROUP BY 1, 2),
-            prof AS (
-              SELECT lang, gram, 50 - rank + 1 AS weight FROM (
-                SELECT lang, gram,
-                       row_number() OVER (PARTITION BY lang
-                                          ORDER BY c DESC, gram) AS rank
-                FROM counts)
-              WHERE rank <= 50
-            ),
-            scored AS (
-              SELECT g.doc_id, p.lang,
-                     CAST(sum(p.weight) AS BIGINT) AS score
-              FROM g JOIN prof p ON g.gram = p.gram
-              GROUP BY 1, 2
-            )
-            SELECT doc_id, lang AS pred_lang, score FROM (
-              SELECT *, row_number() OVER (PARTITION BY doc_id
-                                           ORDER BY score DESC, lang) AS rn
-              FROM scored) WHERE rn = 1
-        """,
-        "q_hits": _hits_oracle_sql(3),
-        "q_label_prop": _lpa_oracle_sql(3),
-        "q_dsir": """
-            -- DSIR replica: same 4096 md5 buckets as the NB oracle,
-            -- target = lang <> 'en'; per-bucket floor(log2 ratio) via
-            -- bin() bit length on the identical clamped integer ratio;
-            -- top-30% keep through the weight-histogram cumulative
-            WITH tok AS (
-              SELECT doc_id,
-                     unnest(list_filter(
-                       regexp_split_to_array(lower(text), '\\s+'),
-                       x -> len(x) > 0)) AS tok
-              FROM documents
-            ), feats AS (
-              SELECT doc_id,
-                     ((strpos('0123456789abcdef', substring(h, 1, 1)) - 1) * 4096
-                    + (strpos('0123456789abcdef', substring(h, 2, 1)) - 1) * 256
-                    + (strpos('0123456789abcdef', substring(h, 3, 1)) - 1) * 16
-                    + (strpos('0123456789abcdef', substring(h, 4, 1)) - 1))
-                       % 4096 AS bucket
-              FROM (SELECT doc_id, md5('feat' || tok) AS h FROM tok)
-            ), cells AS (
-              SELECT bucket,
-                     CAST(sum(CASE WHEN d.lang <> 'en' THEN 1 ELSE 0 END)
-                       AS BIGINT) AS cnt_t,
-                     CAST(sum(CASE WHEN d.lang <> 'en' THEN 0 ELSE 1 END)
-                       AS BIGINT) AS cnt_r
-              FROM feats f JOIN documents d USING (doc_id)
-              GROUP BY bucket
-            ), tot AS (
-              SELECT CAST(sum(cnt_t) AS BIGINT) AS tot_t,
-                     CAST(sum(cnt_r) AS BIGINT) AS tot_r
-              FROM cells
-            ), wts AS (
-              SELECT bucket,
-                     CAST(length(bin(CAST(greatest(least(
-                       ((cnt_t + 1) * (tot_r + 4096) * 1048576)
-                         // ((cnt_r + 1) * (tot_t + 4096)),
-                       4611686018427387904), 1) AS BIGINT))) - 1 - 20
-                       AS BIGINT) AS w
-              FROM cells, tot
-            ), dw AS (
-              SELECT f.doc_id,
-                     CAST(coalesce(sum(w.w), 0) AS BIGINT) AS weight
-              FROM feats f LEFT JOIN wts w USING (bucket)
-              GROUP BY f.doc_id
-            ), hist AS (
-              SELECT weight, CAST(count(*) AS BIGINT) AS n
-              FROM dw GROUP BY weight
-            ), cum AS (
-              SELECT weight,
-                     CAST(coalesce(sum(n) OVER (
-                       ORDER BY weight DESC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                     ), 0) AS BIGINT) AS better,
-                     CAST(sum(n) OVER () AS BIGINT) AS tot
-              FROM hist
-            )
-            SELECT dw.doc_id, dw.weight,
-                   CAST(CASE WHEN better * 100 < 30 * tot
-                        THEN 1 ELSE 0 END AS INT) AS keep
-            FROM dw JOIN cum USING (weight)
-        """,
-        "q_hreflang": """
-            -- closed-form replay of the synthesized hreflang triples: every
-            -- page of cluster g declares en/de/fr + x-default, so
-            -- cluster_id = min(href set ∪ {url}) = the /de/ variant
-            -- (alphabetically first), n_variants = 4, self_hreflang = the
-            -- page's own path language.  If the Spark side misparsed ANY
-            -- quoting/order/case variant or kept a decoy link, rows or
-            -- values diverge and the hash fails.
-            SELECT
-              'https://ex' || ((doc_id // 3) % 7) || '.com/de/'
-                || (doc_id // 3) AS cluster_id,
-              'https://ex' || ((doc_id // 3) % 7) || '.com/'
-                || CASE doc_id % 3 WHEN 0 THEN 'en' WHEN 1 THEN 'de'
-                   ELSE 'fr' END
-                || '/' || (doc_id // 3) AS url,
-              CASE doc_id % 3 WHEN 0 THEN 'en' WHEN 1 THEN 'de'
-                ELSE 'fr' END AS self_hreflang,
-              CAST(4 AS BIGINT) AS n_variants
-            FROM documents
-        """,
-        "q_bitext_mine": """
-            -- full margin-mining replay: identical in-row float cosine
-            -- (sequential reduction — bit-exact cross-engine), then pure
-            -- scaled-BIGINT top-k means, margins and mutual-best election.
-            WITH x AS (
-              SELECT vec_id AS src_id, embedding AS xv FROM embeddings
-              WHERE vec_id < 80 AND vec_id % 2 = 0
-            ), y AS (
-              SELECT vec_id AS dst_id, embedding AS yv FROM embeddings
-              WHERE vec_id < 80 AND vec_id % 2 = 1
-            ), scored AS (
-              SELECT src_id, dst_id,
-                     CAST(round(round(list_dot_product(xv, yv) /
-                          (sqrt(list_dot_product(xv, xv)) *
-                           sqrt(list_dot_product(yv, yv))), 4) * 10000)
-                          AS BIGINT) AS cos_e4
-              FROM x CROSS JOIN y
-            ), pos AS (SELECT * FROM scored WHERE cos_e4 > 0
-            ), kx AS (
-              SELECT src_id, CAST(SUM(cos_e4) AS BIGINT) AS sum_x_e4,
-                     CAST(COUNT(*) AS BIGINT) AS kx
-              FROM (SELECT *, row_number() OVER (PARTITION BY src_id
-                      ORDER BY cos_e4 DESC, dst_id ASC) AS r FROM pos)
-              WHERE r <= 3 GROUP BY src_id
-            ), ky AS (
-              SELECT dst_id, CAST(SUM(cos_e4) AS BIGINT) AS sum_y_e4,
-                     CAST(COUNT(*) AS BIGINT) AS ky
-              FROM (SELECT *, row_number() OVER (PARTITION BY dst_id
-                      ORDER BY cos_e4 DESC, src_id ASC) AS r FROM pos)
-              WHERE r <= 3 GROUP BY dst_id
-            ), m AS (
-              SELECT p.src_id, p.dst_id, p.cos_e4,
-                     CAST((p.cos_e4 * 2 * kx.kx * ky.ky * 10000)
-                          // (kx.sum_x_e4 * ky.ky + ky.sum_y_e4 * kx.kx)
-                          AS BIGINT) AS margin_e4
-              FROM pos p JOIN kx USING (src_id) JOIN ky USING (dst_id)
-            ), fwd AS (
-              SELECT src_id, dst_id, cos_e4, margin_e4
-              FROM (SELECT m.*, row_number() OVER (PARTITION BY src_id
-                      ORDER BY margin_e4 DESC, dst_id ASC) AS r FROM m)
-              WHERE r = 1
-            ), bwd AS (
-              SELECT src_id, dst_id
-              FROM (SELECT src_id, dst_id, row_number() OVER (
-                      PARTITION BY dst_id
-                      ORDER BY margin_e4 DESC, src_id ASC) AS r FROM m)
-              WHERE r = 1
-            )
-            SELECT f.src_id, f.dst_id, f.cos_e4, f.margin_e4
-            FROM fwd f JOIN bwd b
-              ON b.src_id = f.src_id AND b.dst_id = f.dst_id
-            WHERE f.margin_e4 >= 9000
-        """,
-        "q_incremental_dedup": """
-            -- replay the incremental gate over the same portable md5-min
-            -- MinHash family (_MINHASH_CTE): index = bands of doc_id < 300,
-            -- batch = doc_id >= 300; min existing id on cross matches, then
-            -- min-unmatched-id-per-bucket inside the batch.
-            WITH toks AS (
-              SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
-              FROM documents
-            ), sh AS (
-              SELECT doc_id,
-                     CASE WHEN len(t) >= 3 THEN
-                       list_transform(range(1, len(t) - 1),
-                                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-                     ELSE [] END AS shingles
-              FROM toks
-            ), sig AS (
-              SELECT doc_id,
-                     list_min(list_transform(shingles, s -> md5('0|' || s))) AS s0,
-                     list_min(list_transform(shingles, s -> md5('1|' || s))) AS s1,
-                     list_min(list_transform(shingles, s -> md5('2|' || s))) AS s2,
-                     list_min(list_transform(shingles, s -> md5('3|' || s))) AS s3
-              FROM sh
-            ), bands AS (
-              SELECT doc_id, 0 AS band_id, s0 || '|' || s1 AS band_key FROM sig
-              UNION ALL
-              SELECT doc_id, 1, s2 || '|' || s3 FROM sig
-            ), ex AS (
-              SELECT doc_id AS ex_id, band_id, band_key FROM bands
-              WHERE doc_id < 300
-            ), nb AS (
-              SELECT * FROM bands WHERE doc_id >= 300
-            ), exm AS (
-              SELECT n.doc_id, MIN(e.ex_id) AS ex_dup_of
-              FROM nb n JOIN ex e USING (band_id, band_key)
-              GROUP BY n.doc_id
-            ), un AS (
-              SELECT * FROM nb
-              WHERE doc_id NOT IN (SELECT doc_id FROM exm)
-            ), bmin AS (
-              SELECT band_id, band_key, MIN(doc_id) AS bucket_min
-              FROM un GROUP BY 1, 2
-            ), bd AS (
-              SELECT u.doc_id, MIN(b.bucket_min) AS batch_dup_of
-              FROM un u JOIN bmin b USING (band_id, band_key)
-              GROUP BY u.doc_id
-            )
-            SELECT d.doc_id,
-                   CAST(exm.ex_dup_of IS NULL
-                        AND (bd.batch_dup_of IS NULL
-                             OR bd.batch_dup_of = d.doc_id) AS INTEGER)
-                     AS keep,
-                   CAST(exm.ex_dup_of IS NOT NULL AS INTEGER)
-                     AS matched_existing,
-                   CAST(COALESCE(exm.ex_dup_of,
-                        CASE WHEN bd.batch_dup_of <> d.doc_id
-                             THEN bd.batch_dup_of END, -1) AS BIGINT) AS dup_of
-            FROM (SELECT doc_id FROM documents WHERE doc_id >= 300) d
-            LEFT JOIN exm ON exm.doc_id = d.doc_id
-            LEFT JOIN bd ON bd.doc_id = d.doc_id
-        """,
-    }
+        )
+    )
+    return resolve_redirects(chain.unionByName(spec), max_hops=5)
+
+
+@contract(
+    oracle="""
+        -- re-derive the capture stream from the same doc_id arithmetic
+        -- (the even-doc duplicate birth capture is subsumed by DISTINCT,
+        -- exactly as in the Spark op), then cohort counts + integral-
+        -- divide survival ppm.
+        WITH caps AS (
+          SELECT DISTINCT
+                 'https://h' || CAST(doc_id % 7 AS VARCHAR) ||
+                   '.com/p' || CAST(doc_id AS VARCHAR) AS url,
+                 CAST(s AS BIGINT) AS snap
+          FROM documents,
+               unnest(generate_series(doc_id % 3,
+                                      doc_id % 3 + doc_id % 4)) AS t(s)
+        ), birth AS (
+          SELECT url, min(snap) AS birth_snap FROM caps GROUP BY 1
+        ), aged AS (
+          SELECT b.birth_snap, c.snap - b.birth_snap AS age
+          FROM caps c JOIN birth b ON c.url = b.url
+        ), counts AS (
+          SELECT birth_snap, age, CAST(count(*) AS BIGINT) AS n_urls
+          FROM aged GROUP BY 1, 2
+        ), cohort AS (
+          SELECT birth_snap AS _b, n_urls AS _size
+          FROM counts WHERE age = 0
+        )
+        SELECT birth_snap, age, n_urls,
+               CAST(n_urls * 1000000 // _size AS BIGINT) AS survival_ppm
+        FROM counts JOIN cohort ON birth_snap = _b
+    """,
+    plan=(
+        "survival cohorts: ONE wide shuffle (the per-url min birth groupBy, map-side "
+        "partials), birth join back on the same url key, tiny cohort aggregate joined "
+        "BROADCAST; zero Python, no window over the capture stream, no full-table self "
+        "cartesian"
+    ),
+    must=["HashAggregate", "BroadcastHashJoin"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct"],
+)
+def q_url_survival(spark, sf_dir):
+    """URL survival by birth cohort (ops/web.url_survival): each doc's url
+    is born at snap doc_id%3 and lives doc_id%4 extra snapshots (explode of
+    sequence(birth, birth+span)); even docs carry a duplicate birth-snap
+    capture to pin the DISTINCT.  The oracle re-derives the cohort table
+    from the same arithmetic via generate_series — hash-exact, including
+    the integral-divide survival_ppm."""
+    from html_parser_spark.ops.web import url_survival
+
+    docs = _docs(spark, sf_dir)
+    d = F.col("doc_id")
+    url = F.concat(F.lit("https://h"), (d % 7).cast("string"),
+                   F.lit(".com/p"), d.cast("string"))
+    birth = (d % 3).cast("long")
+    span = (d % 4).cast("long")
+    caps = docs.select(
+        url.alias("url"), F.explode(F.sequence(birth, birth + span)).alias("snap")
+    )
+    dup = docs.filter(d % 2 == 0).select(url.alias("url"), birth.alias("snap"))
+    return url_survival(caps.unionByName(dup))
+
+
+@contract(
+    oracle="""
+        -- tag-union + flag-merge + host rollup, replayed in SQL.
+        WITH urls AS (
+          SELECT doc_id,
+                 'https://s' || CAST(doc_id % 5 AS VARCHAR) ||
+                   '.example/page/' || CAST(doc_id AS VARCHAR) AS url
+          FROM documents
+        ), tagged AS (
+          SELECT url, 1 AS _d, 0 AS _c FROM urls WHERE doc_id % 3 != 0
+          UNION ALL
+          SELECT url, 0 AS _d, 1 AS _c FROM urls WHERE doc_id % 2 = 0
+        ), per_url AS (
+          SELECT url, max(_d) AS _d, max(_c) AS _c FROM tagged GROUP BY 1
+        ), agg AS (
+          SELECT lower(regexp_extract(url,
+                   '^[a-z][a-z0-9+.-]*://([^/?#]+)', 1)) AS host,
+                 CAST(sum(_d) AS BIGINT) AS declared_n,
+                 CAST(sum(_c) AS BIGINT) AS crawled_n,
+                 CAST(sum(_d * _c) AS BIGINT) AS both_n
+          FROM per_url GROUP BY 1
+        )
+        SELECT host, declared_n, crawled_n, both_n,
+               declared_n - both_n AS declared_only_n,
+               crawled_n - both_n AS crawled_only_n,
+               CAST(coalesce(both_n * 1000000 //
+                    nullif(declared_n, 0), 0) AS BIGINT) AS coverage_ppm
+        FROM agg
+    """,
+    plan=(
+        "coverage audit: tag-union + ONE groupBy(url) flag-merge (max partials before "
+        "the exchange) + tiny host rollup — deliberately NOT a full-outer join (which "
+        "would shuffle both sides and re-shuffle the result); zero Python, no join, no "
+        "window"
+    ),
+    must=["HashAggregate", "Union"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct",
+              "SortMergeJoin", "BroadcastHashJoin"],
+)
+def q_sitemap_coverage(spark, sf_dir):
+    """Sitemap-vs-crawl coverage audit (ops/web.sitemap_coverage): hosts
+    s0..s4 declare every doc_id%3!=0 url, the crawl fetched every even
+    one — so both/declared-only/crawled-only all occur on every host.
+    The oracle replays the tag-union + flag-merge + host rollup in SQL;
+    hash match pins the host parse and the nullif-guarded ppm."""
+    from html_parser_spark.ops.web import sitemap_coverage
+
+    docs = _docs(spark, sf_dir)
+    d = F.col("doc_id")
+    url = F.concat(F.lit("https://s"), (d % 5).cast("string"),
+                   F.lit(".example/page/"), d.cast("string"))
+    declared = docs.filter(d % 3 != 0).select(url.alias("url"))
+    crawled = docs.filter(d % 2 == 0).select(url.alias("url"))
+    return sitemap_coverage(declared, crawled)
+
+
+@contract(
+    oracle="""
+        -- distinct directed host edges (self-loops dropped), reversed
+        -- self-join, per-host rollup with integral-divide ppm.
+        WITH raw AS (
+          SELECT 'h' || CAST(doc_id % 10 AS VARCHAR) AS src,
+                 'h' || CAST((doc_id + 1) % 10 AS VARCHAR) AS dst
+          FROM documents
+          UNION ALL
+          SELECT 'h' || CAST(doc_id % 10 AS VARCHAR),
+                 'h' || CAST((doc_id + 3) % 10 AS VARCHAR)
+          FROM documents
+          UNION ALL
+          SELECT 'h' || CAST((doc_id + 1) % 10 AS VARCHAR),
+                 'h' || CAST(doc_id % 10 AS VARCHAR)
+          FROM documents WHERE doc_id % 10 < 5
+          UNION ALL
+          SELECT 'h' || CAST(doc_id % 10 AS VARCHAR),
+                 'h' || CAST(doc_id % 10 AS VARCHAR)
+          FROM documents WHERE doc_id % 7 = 0
+        ), e AS (
+          SELECT DISTINCT src, dst FROM raw WHERE src != dst
+        ), j AS (
+          SELECT a.src, CASE WHEN b.src IS NULL THEN 0 ELSE 1 END AS _back
+          FROM e a LEFT JOIN e b ON a.src = b.dst AND a.dst = b.src
+        )
+        SELECT src AS host,
+               CAST(count(*) AS BIGINT) AS out_n,
+               CAST(sum(_back) AS BIGINT) AS reciprocated_n,
+               CAST(sum(_back) * 1000000 // count(*) AS BIGINT)
+                 AS reciprocity_ppm
+        FROM j GROUP BY 1
+    """,
+    plan=(
+        "link-exchange signal: ONE distinct over the edge pairs (map-side partials), "
+        "ONE reversed-key self equi-join, ONE groupBy(src) rollup with integral-divide "
+        "ppm; zero Python, no window, no cartesian product"
+    ),
+    must=["HashAggregate", "Join"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct"],
+)
+def q_reciprocity(spark, sf_dir):
+    """Link reciprocity (ops/linkgraph.reciprocity): ring hosts h0..h9 with
+    +1 and +3 forward families, back-edges only below h5, and planted
+    self-loops that must be dropped — out_n/reciprocated_n then differ
+    per host (500000 / 666666 / 333333 / 0 ppm bands).  The oracle
+    replays the distinct + reversed self-join + rollup — hash-exact."""
+    from html_parser_spark.ops.linkgraph import reciprocity
+
+    docs = _docs(spark, sf_dir)
+    d = F.col("doc_id")
+
+    def h(expr):
+        return F.concat(F.lit("h"), expr.cast("string"))
+
+    fwd = docs.select(h(d % 10).alias("src"), h((d + 1) % 10).alias("dst"))
+    fwd2 = docs.select(h(d % 10).alias("src"), h((d + 3) % 10).alias("dst"))
+    back = docs.filter(d % 10 < 5).select(
+        h((d + 1) % 10).alias("src"), h(d % 10).alias("dst")
+    )
+    loops = docs.filter(d % 7 == 0).select(
+        h(d % 10).alias("src"), h(d % 10).alias("dst")
+    )
+    edges = fwd.unionByName(fwd2).unionByName(back).unionByName(loops)
+    return reciprocity(edges)
+
+
+@contract(
+    oracle="""
+        -- identical key synthesis, identical (first char, length-band)
+        -- blocking, triangle filter, exact Levenshtein <= 2.
+        WITH keyed AS (
+          SELECT doc_id AS _id,
+                 'rec' || CAST(doc_id // 4 AS VARCHAR) ||
+                   CASE doc_id % 4 WHEN 1 THEN 'a' WHEN 2 THEN 'ab'
+                        WHEN 3 THEN 'zzzz' ELSE '' END AS _key
+          FROM documents
+        ), blk AS (
+          SELECT _id, _key,
+                 substr(_key, 1, 1) || '|' ||
+                   CAST(length(_key) // 8 AS VARCHAR) AS _blk
+          FROM keyed
+        )
+        SELECT a._id AS id_a, b._id AS id_b,
+               CAST(levenshtein(a._key, b._key) AS INT) AS dist
+        FROM blk a JOIN blk b ON a._blk = b._blk AND a._id < b._id
+        WHERE levenshtein(a._key, b._key) <= 2
+    """,
+    plan=(
+        "blocked edit distance: ONE distinct keyed projection, ONE self equi-join on "
+        "the block key (AQE skew-splits hot blocks), triangle filter before the "
+        "Levenshtein so each unordered pair scores once; zero Python, no window, no "
+        "cartesian product"
+    ),
+    must=["HashAggregate", "Join"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct"],
+)
+def q_fuzzy_pairs(spark, sf_dir):
+    """Blocked edit-distance fuzzy matching (ops/dedup.edit_distance_pairs):
+    quads of keys rec<k>{'',a,ab,zzzz} — within a quad the distances are
+    1/2/1/4+, and the suffixes deliberately straddle the length-band
+    blocking boundary so the oracle must replay the SAME blocking to
+    hash-match (the recall heuristic is part of the pinned contract)."""
+    from html_parser_spark.ops.dedup import edit_distance_pairs
+
+    docs = _docs(spark, sf_dir)
+    d = F.col("doc_id")
+    suffix = (
+        F.when(d % 4 == 1, "a")
+        .when(d % 4 == 2, "ab")
+        .when(d % 4 == 3, "zzzz")
+        .otherwise("")
+    )
+    key = F.concat(F.lit("rec"), F.expr("doc_id div 4").cast("string"), suffix)
+    return edit_distance_pairs(
+        docs.select("doc_id", key.alias("title")), max_dist=2
+    )
+
+
+@contract(
+    oracle="""
+        -- identical text rebuild, identical RE2 url class + trailing
+        -- punctuation trim + length floor.
+        WITH src AS (
+          SELECT doc_id,
+                 text || ' See https://ref' ||
+                   CAST(doc_id % 20 AS VARCHAR) || '.example/a/' ||
+                   CAST(doc_id AS VARCHAR) || '. Also (http://mirror' ||
+                   CAST(doc_id % 5 AS VARCHAR) || '.test/p).' AS text
+          FROM documents
+        ), ex AS (
+          SELECT doc_id,
+                 regexp_replace(
+                   unnest(regexp_extract_all(text,
+                     'https?://[^\\s<>"'')]+', 0)),
+                   '[.,;:!?]+$', '') AS url
+          FROM src
+        )
+        SELECT doc_id, url FROM ex WHERE length(url) > 8
+    """,
+    plan=(
+        "plain-text url mining: ONE codegen regexp_extract_all + transform-trim "
+        "projection + explode; zero shuffle, zero Python, no join, no window"
+    ),
+    must=["Generate"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Window", "Exchange",
+              "CartesianProduct"],
+)
+def q_text_outlinks(spark, sf_dir):
+    """Plain-text URL mining (ops/html_meta.text_outlinks) for WET-style
+    corpora: two urls per doc with trailing '.'/')' artifacts that the
+    trim must remove; the oracle replays the identical RE2-compatible
+    regexes on the identically rebuilt text — hash-exact."""
+    from html_parser_spark.ops.html_meta import text_outlinks
+
+    docs = _docs(spark, sf_dir)
+    d = F.col("doc_id")
+    text = F.concat(
+        F.col("text"),
+        F.lit(" See https://ref"), (d % 20).cast("string"),
+        F.lit(".example/a/"), d.cast("string"),
+        F.lit(". Also (http://mirror"), (d % 5).cast("string"),
+        F.lit(".test/p)."),
+    )
+    return text_outlinks(docs.select("doc_id", text.alias("text")))
+
+
+@contract(
+    oracle="""
+        -- per-source token totals, full-outer join against the demanded
+        -- weights, planned tokens + epochs by integral divide.
+        WITH avail AS (
+          SELECT 'src' || CAST(doc_id % 4 AS VARCHAR) AS source,
+                 CAST(sum(doc_id % 50 + 1) AS BIGINT) AS n_tokens
+          FROM documents GROUP BY 1
+        ), w(source, weight_ppm) AS (
+          VALUES ('src0', 500000), ('src1', 300000),
+                 ('src2', 150000), ('src9', 50000)
+        ), j AS (
+          SELECT coalesce(a.source, w.source) AS source,
+                 CAST(coalesce(a.n_tokens, 0) AS BIGINT) AS n_tokens,
+                 CAST(coalesce(w.weight_ppm, 0) AS BIGINT) AS weight_ppm
+          FROM avail a FULL OUTER JOIN w ON a.source = w.source
+        ), p AS (
+          SELECT source, n_tokens, weight_ppm,
+                 CAST(2500000 * weight_ppm // 1000000 AS BIGINT)
+                   AS planned_tokens
+          FROM j
+        )
+        SELECT source, n_tokens, weight_ppm, planned_tokens,
+               CAST(coalesce(planned_tokens * 1000000 //
+                    nullif(n_tokens, 0), -1) AS BIGINT) AS epochs_ppm,
+               coalesce(planned_tokens * 1000000 //
+                        nullif(n_tokens, 0) > 1000000, false) AS repeated
+        FROM p
+    """,
+    plan=(
+        "epoch planner: ONE partial-agg groupBy over the corpus (#sources rows out), "
+        "tiny full-outer join against the literal weight frame, integral-divide "
+        "projections; zero Python, no window, nothing else touches the corpus"
+    ),
+    must=["HashAggregate", "Join"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct"],
+)
+def q_mixture_plan(spark, sf_dir):
+    """Training-mixture epoch planner (ops/corpus.mixture_plan): sources
+    src0..src3 with arithmetic token counts, weights demanding src0-2 plus
+    a phantom src9 (absent from the corpus — must surface as a loud
+    NULL-epochs row, not a crash), src3 present but unweighted.  The
+    oracle replays the aggregate + full-outer join + integral divides."""
+    from html_parser_spark.ops.corpus import mixture_plan
+
+    docs = _docs(spark, sf_dir)
+    d = F.col("doc_id")
+    src = docs.select(
+        F.concat(F.lit("src"), (d % 4).cast("string")).alias("lang"),
+        ((d % 50) + 1).cast("long").alias("n_tokens"),
+    )
+    out = mixture_plan(
+        src,
+        {"src0": 500000, "src1": 300000, "src2": 150000, "src9": 50000},
+        target_total_tokens=2500000,
+    )
+    # driver-canonicalizer safety: a NULL in a BIGINT column rides pandas as
+    # float64 on the oracle side (400000000 vs 400000000.0 hash split) —
+    # serialize the absent-source sentinel as -1 in BOTH engines
+    return out.withColumn(
+        "epochs_ppm", F.coalesce(F.col("epochs_ppm"), F.lit(-1).cast("long"))
+    )
+
+
+@contract(
+    oracle="""
+        -- rebuild original + reversed twin + appended mutant, then
+        -- tokenize -> binary sort -> md5 -> group.
+        WITH base AS (
+          SELECT doc_id, text FROM documents
+          UNION ALL
+          SELECT doc_id + 1000000,
+                 array_to_string(list_reverse(
+                   list_filter(regexp_split_to_array(trim(text), '\\s+'),
+                               x -> length(x) > 0)), ' ')
+          FROM documents
+          UNION ALL
+          SELECT doc_id + 2000000, text || ' zzzmutant' FROM documents
+        ), keyed AS (
+          SELECT doc_id,
+                 md5(array_to_string(list_sort(
+                   list_filter(regexp_split_to_array(trim(coalesce(text, '')),
+                                                     '\\s+'),
+                               x -> length(x) > 0)), ' ')) AS h
+          FROM base
+        )
+        SELECT h, count(*) AS dup_count, min(doc_id) AS canonical_id
+        FROM keyed GROUP BY h
+    """,
+    plan=(
+        "multiset dedup: tokenize + binary array_sort + md5 is a pure-codegen "
+        "projection (32-byte shuffle key, the heavy strings never shuffle), then ONE "
+        "partial-agg groupBy; zero Python, no join, no window"
+    ),
+    must=["HashAggregate", "Union"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct",
+              "SortMergeJoin"],
+)
+def q_reordered_dedup(spark, sf_dir):
+    """Order-insensitive duplicate groups (ops/dedup.reordered_duplicates):
+    each doc gets a word-REVERSED twin (must group, multiset identical)
+    and a one-token-appended mutant (must NOT group).  The oracle rebuilds
+    the same three variants and replays tokenize → binary sort → md5 in
+    SQL — hash match pins the multiset-key semantics cross-engine."""
+    from html_parser_spark.ops.dedup import reordered_duplicates
+
+    docs = _docs(spark, sf_dir)
+    toks = F.filter(
+        F.split(F.trim(F.col("text")), r"\s+"), lambda x: F.length(x) > 0
+    )
+    twin = docs.select(
+        (F.col("doc_id") + 1000000).alias("doc_id"),
+        F.array_join(F.reverse(toks), " ").alias("text"),
+    )
+    mutant = docs.select(
+        (F.col("doc_id") + 2000000).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" zzzmutant")).alias("text"),
+    )
+    allv = docs.select("doc_id", "text").unionByName(twin).unionByName(mutant)
+    return reordered_duplicates(allv)
+
+
+@contract(
+    oracle="""
+        -- closed-form expected verdicts aggregated per host:
+        -- low hosts (hn < 10) disallow kind 1 (/private, with the
+        -- /private/ok carve-out = kind 2 allowed); high hosts
+        -- disallow kind 0 (/public); root (kind 3) always allowed.
+        WITH d AS (
+          SELECT doc_id % 20 AS hn, doc_id % 4 AS kind FROM documents
+        ), agg AS (
+          SELECT 'h' || CAST(hn AS VARCHAR) || '.example' AS host,
+                 CAST(count(*) AS BIGINT) AS crawled_n,
+                 CAST(sum(CASE WHEN (hn < 10 AND kind = 1)
+                                 OR (hn >= 10 AND kind = 0)
+                          THEN 1 ELSE 0 END) AS BIGINT) AS disallowed_n
+          FROM d GROUP BY 1
+        )
+        SELECT host, crawled_n, disallowed_n,
+               CAST(disallowed_n * 1000000 // crawled_n AS BIGINT)
+                 AS disallowed_ppm
+        FROM agg
+    """,
+    plan=(
+        "compliance rollup: the robots_verdict host equi-join (rules are host-bounded, "
+        "never page-bounded — in this synthesis the rules side derives from docs so "
+        "the planner cannot prove it small and falls back to SMJ; a real robots corpus "
+        "broadcasts under AQE, same as q_robots) feeds ONE groupBy(host) with map-side "
+        "partials and an integral-divide ppm; zero Python, no cartesian product"
+    ),
+    must=["HashAggregate", "Join"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "CartesianProduct",
+              "BroadcastNestedLoopJoin"],
+)
+def q_robots_audit(spark, sf_dir):
+    """Per-host robots-compliance audit (ops/robots.compliance_audit) over
+    the q_robots policy synthesis (20 hosts, two policy families, decoy
+    badbot group, four path kinds).  The oracle aggregates the CLOSED-FORM
+    expected verdicts per host — hash match checks the whole robots
+    machinery AND the rollup arithmetic."""
+    from html_parser_spark.ops.robots import compliance_audit, parse_robots
+
+    docs = _docs(spark, sf_dir)
+    hostn = F.col("doc_id") % 20
+    host = F.concat(F.lit("h"), hostn.cast("string"), F.lit(".example"))
+    robots = (
+        docs.select(hostn.alias("hn")).distinct().select(
+            F.concat(F.lit("h"), F.col("hn").cast("string"),
+                     F.lit(".example")).alias("host"),
+            F.concat(
+                F.lit("# synthetic policy\nUser-agent: *\n"),
+                F.when(
+                    F.col("hn") < 10,
+                    F.lit("Disallow: /private\nAllow: /private/ok\n"),
+                ).otherwise(F.lit("Disallow: /public\n")),
+                F.lit("\nUser-agent: badbot\nDisallow: /\n"),
+            ).alias("body"),
+        )
+    )
+    kind = F.col("doc_id") % 4
+    path = (
+        F.when(kind == 0, F.concat(F.lit("/public/p"), F.col("doc_id").cast("string")))
+        .when(kind == 1, F.concat(F.lit("/private/p"), F.col("doc_id").cast("string")))
+        .when(kind == 2, F.concat(F.lit("/private/ok/p"), F.col("doc_id").cast("string")))
+        .otherwise(F.lit("/"))
+    )
+    pages = docs.select(
+        "doc_id", F.concat(F.lit("https://"), host, path).alias("url")
+    )
+    return compliance_audit(pages, parse_robots(robots))
+
+
+@contract(
+    oracle="""
+        -- closed-form expected regions/distances around pivot core0:
+        -- ring SCC (hand-traced fwd/bwd hops), OUT chain, corpus-
+        -- scaled IN fan (doc_id%10==3), island absent; -1 = unreached.
+        SELECT node, region, CAST(fwd_dist AS BIGINT) AS fwd_dist,
+               CAST(bwd_dist AS BIGINT) AS bwd_dist
+        FROM (
+          SELECT 'core0' AS node, 'SCC' AS region, 0 AS fwd_dist,
+                 0 AS bwd_dist FROM documents WHERE doc_id = 0
+          UNION ALL
+          SELECT 'core1', 'SCC', 1, 2 FROM documents WHERE doc_id = 1
+          UNION ALL
+          SELECT 'core2', 'SCC', 2, 1 FROM documents WHERE doc_id = 2
+          UNION ALL
+          SELECT 'out0', 'OUT', 1, -1 FROM documents WHERE doc_id = 3
+          UNION ALL
+          SELECT 'out1', 'OUT', 2, -1 FROM documents WHERE doc_id = 4
+          UNION ALL
+          SELECT 'in' || CAST(doc_id AS VARCHAR), 'IN', -1, 1
+          FROM documents WHERE doc_id % 10 = 3
+        )
+    """,
+    plan=(
+        "bowtie decomposition: two hop-bounded frontier BFS passes (per hop: "
+        "frontier⋈edges equi-join + partial-agg distinct, lineage truncated — "
+        "|frontier|×out-degree, never |hosts|×|edges|) + ONE full-outer join of the "
+        "two reach sets; zero Python, no cartesian product"
+    ),
+    must=["HashAggregate", "Join"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "CartesianProduct",
+              "BroadcastNestedLoopJoin"],
+    # hops=3 keeps the UNROLLED (checkpoint-free) plan within the
+    # audit JVM's optimizer budget; the per-hop plan shape is
+    # identical at any hop count, and production runs checkpoint
+    plan_kwargs={"checkpoint": False, "max_hops": 3},
+)
+def q_bowtie(spark, sf_dir, checkpoint=True, max_hops=8):
+    """Bowtie decomposition (ops/linkgraph.bowtie_profile, Broder 2000):
+    3-ring SCC around the pivot, a 2-hop OUT chain, a corpus-scaled IN fan
+    (one in-host per doc_id%10==3), and a disconnected island that must be
+    ABSENT.  NULL dists serialize as -1 (BIGINT/pandas float64 hazard).
+    The oracle states the expected regions/distances in closed form —
+    the BFS core itself is oracle-replayed hop-by-hop in q_click_depth."""
+    from html_parser_spark.ops.linkgraph import bowtie_profile
+
+    docs = _docs(spark, sf_dir)
+    d = F.col("doc_id")
+
+    def lit_edge(k, s, t):
+        return docs.filter(d == k).select(
+            F.lit(s).alias("src"), F.lit(t).alias("dst")
+        )
+
+    fan = docs.filter(d % 10 == 3).select(
+        F.concat(F.lit("in"), d.cast("string")).alias("src"),
+        F.lit("core0").alias("dst"),
+    )
+    edges = (
+        lit_edge(0, "core0", "core1")
+        .unionByName(lit_edge(1, "core1", "core2"))
+        .unionByName(lit_edge(2, "core2", "core0"))
+        .unionByName(lit_edge(3, "core0", "out0"))
+        .unionByName(lit_edge(4, "out0", "out1"))
+        .unionByName(lit_edge(5, "isl0", "isl1"))
+        .unionByName(fan)
+    )
+    out = bowtie_profile(edges, "core0", max_hops=max_hops, checkpoint=checkpoint)
+    return out.select(
+        "node",
+        "region",
+        F.coalesce(F.col("fwd_dist"), F.lit(-1)).cast("long").alias("fwd_dist"),
+        F.coalesce(F.col("bwd_dist"), F.lit(-1)).cast("long").alias("bwd_dist"),
+    )
+
+
+@contract(
+    oracle="""
+        -- postings -> df cap -> pair join -> Jaccard bp, replayed.
+        WITH urls AS (
+          SELECT 'm0.example' AS host,
+                 '/p' || CAST(doc_id % 30 AS VARCHAR) AS path
+          FROM documents
+          UNION ALL
+          SELECT 'm1.example', '/p' || CAST(doc_id % 30 AS VARCHAR)
+          FROM documents WHERE doc_id % 2 = 0
+          UNION ALL
+          SELECT 'm2.example', '/q' || CAST(doc_id % 20 AS VARCHAR)
+          FROM documents
+          UNION ALL
+          SELECT 'm3.example', '/p' || CAST(doc_id % 10 AS VARCHAR)
+          FROM documents
+          UNION ALL
+          SELECT 'g' || CAST(doc_id % 150 AS VARCHAR) || '.example',
+                 '/common'
+          FROM documents
+        ), postings AS (
+          SELECT DISTINCT host, path FROM urls
+        ), capped AS (
+          SELECT p.host, p.path FROM postings p
+          JOIN (SELECT path FROM postings
+                GROUP BY path HAVING count(*) <= 100) ok
+            ON p.path = ok.path
+        ), sizes AS (
+          SELECT host, CAST(count(*) AS BIGINT) AS n
+          FROM capped GROUP BY 1
+        ), pairs AS (
+          SELECT a.host AS host_a, b.host AS host_b,
+                 CAST(count(*) AS BIGINT) AS shared_paths
+          FROM capped a JOIN capped b
+            ON a.path = b.path AND a.host < b.host
+          GROUP BY 1, 2 HAVING count(*) >= 2
+        )
+        SELECT host_a, host_b, shared_paths,
+               CAST(shared_paths * 10000 //
+                    (sa.n + sb.n - shared_paths) AS BIGINT) AS jaccard_bp
+        FROM pairs
+        JOIN sizes sa ON host_a = sa.host
+        JOIN sizes sb ON host_b = sb.host
+    """,
+    plan=(
+        "mirror detection: distinct (path, host) postings, df-cap join dropping "
+        "generic paths BEFORE the posting self-join (fan-out ≤ cap² per path — the "
+        "quadratic term is bounded up front, same device as cocitation/containment), "
+        "pair groupBy with map-side partials, size joins for the Jaccard; zero Python, "
+        "no window, no cartesian product"
+    ),
+    must=["HashAggregate", "Join"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct",
+              "BroadcastNestedLoopJoin"],
+)
+def q_mirrors(spark, sf_dir):
+    """Mirror detection by shared paths (ops/web.mirror_candidates, Bharat
+    & Broder 1999): m0 serves /p0../p29, m1 the even half, m2 a disjoint
+    tree, and 150 g-hosts share /common which the df cap (100) must drop
+    (leaving the g-hosts posting-less).  The oracle replays postings →
+    cap → pair join → Jaccard bp in SQL — hash-exact."""
+    from html_parser_spark.ops.web import mirror_candidates
+
+    docs = _docs(spark, sf_dir)
+    d = F.col("doc_id")
+    u_m0 = docs.select(
+        F.concat(F.lit("https://m0.example/p"), (d % 30).cast("string")).alias("url")
+    )
+    u_m1 = docs.filter(d % 2 == 0).select(
+        F.concat(F.lit("https://m1.example/p"), (d % 30).cast("string")).alias("url")
+    )
+    u_m2 = docs.select(
+        F.concat(F.lit("https://m2.example/q"), (d % 20).cast("string")).alias("url")
+    )
+    u_m3 = docs.select(
+        F.concat(F.lit("https://m3.example/p"), (d % 10).cast("string")).alias("url")
+    )
+    u_g = docs.select(
+        F.concat(F.lit("https://g"), (d % 150).cast("string"),
+                 F.lit(".example/common")).alias("url")
+    )
+    pages = (
+        u_m0.unionByName(u_m1).unionByName(u_m2)
+        .unionByName(u_m3).unionByName(u_g)
+    )
+    return mirror_candidates(pages, df_cap=100, min_shared=2)
+
+
+@contract(
+    oracle="""
+        -- identical text rebuild, token-level match replay: lowercase,
+        -- split on non-alnum runs, distinct, intersect with the sorted
+        -- term list, first hit for explainability.
+        WITH src AS (
+          SELECT doc_id,
+                 text ||
+                 CASE WHEN doc_id % 7 = 0 THEN ' nastyTerm.' ELSE '' END ||
+                 CASE WHEN doc_id % 13 = 0 THEN ' NASTYTERM2' ELSE '' END ||
+                 CASE WHEN doc_id % 5 = 0 THEN ' embnastytermded'
+                      ELSE '' END AS text
+          FROM documents
+        ), hits AS (
+          SELECT doc_id,
+                 list_sort(list_intersect(
+                   list_distinct(list_filter(
+                     regexp_split_to_array(lower(coalesce(text, '')),
+                                           '[^a-z0-9]+'),
+                     x -> length(x) > 0)),
+                   ['nastyterm', 'nastyterm2'])) AS h
+          FROM src
+        )
+        SELECT doc_id, len(h) > 0 AS blocked,
+               coalesce(h[1], '') AS blocked_term
+        FROM hits
+    """,
+    plan=(
+        "C4 bad-word gate: the term list rides the plan as ONE array literal, tokenize "
+        "+ distinct + intersect is a pure-codegen projection; zero shuffle, zero "
+        "Python, no join, no window"
+    ),
+    must=["Project"],
+    must_not=["ArrowEvalPython", "BatchEvalPython", "Exchange", "Window",
+              "CartesianProduct"],
+)
+def q_term_blocklist(spark, sf_dir):
+    """C4-style doc-level term blocklist (ops/text.term_blocklist_flags):
+    planted terms with case + punctuation boundaries (doc_id%7 / %13) and
+    an embedded-substring decoy (%5) that must NOT match — token-level
+    word-boundary semantics are the pinned contract.  The oracle replays
+    tokenize → distinct → intersect → sort in SQL — hash-exact."""
+    from html_parser_spark.ops.text import term_blocklist_flags
+
+    docs = _docs(spark, sf_dir)
+    d = F.col("doc_id")
+    text = F.concat(
+        F.col("text"),
+        F.when(d % 7 == 0, F.lit(" nastyTerm.")).otherwise(F.lit("")),
+        F.when(d % 13 == 0, F.lit(" NASTYTERM2")).otherwise(F.lit("")),
+        F.when(d % 5 == 0, F.lit(" embnastytermded")).otherwise(F.lit("")),
+    )
+    return term_blocklist_flags(
+        docs.select("doc_id", text.alias("text")),
+        ["NastyTerm", "nastyterm2"],
+    )

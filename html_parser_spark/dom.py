@@ -233,10 +233,8 @@ class _DomBuilder(HTMLParser):
 # per-char position bookkeeping).  The fixtures are machine-generated HTML, so
 # a single master-regex scan reproduces the same event stream 3-5x faster.
 # Byte-identity with the html.parser path is pinned by the golden tests over
-# all 372 fixture pages and a differential unit test; set
-# HTML_PARSER_SPARK_SLOW_DOM=1 to force the stdlib builder.
+# all 372 fixture pages and a differential unit test.
 
-import os as _os
 from html import unescape as _unescape
 
 _TOKEN_RE = re.compile(
@@ -410,8 +408,6 @@ def _builder_handle_data_raw(self, data: str):
 _DomBuilder.handle_data_fast = _builder_handle_data_fast
 _DomBuilder.handle_data_raw = _builder_handle_data_raw
 
-_FORCE_SLOW = _os.environ.get("HTML_PARSER_SPARK_SLOW_DOM") == "1"
-
 
 def parse_html_slow(text: str) -> Node:
     """stdlib html.parser reference path (differential-testing baseline)."""
@@ -423,8 +419,6 @@ def parse_html_slow(text: str) -> Node:
 
 def parse_html(text: str) -> Node:
     """Parse an HTML document string into a DOM tree; returns the document node."""
-    if _FORCE_SLOW:
-        return parse_html_slow(text)
     b = _DomBuilder()
     b.suspicious = False
     _fast_parse(text, b)

@@ -326,57 +326,6 @@ def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select("doc_id", F.concat_ws("", bit_chars).alias("simhash"))
 
 
-def simhash_near_duplicates(
-    docs: DataFrame, text_col: str = "text", bands: int = 4, max_hamming: int = 6
-) -> DataFrame:
-    """SimHash banding: candidates share one of ``bands`` signature chunks;
-    survivors filtered by exact Hamming distance ≤ max_hamming.  Same
-    shuffle shape as MinHash-LSH (uniform small band keys)."""
-    width = SIMHASH_BITS // bands
-    sigs = simhash(docs, text_col)
-    banded = sigs.select(
-        "doc_id",
-        F.col("simhash"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.substring("simhash", b * width + 1, width).alias("band_key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "simhash", "band.band_id", "band.band_key")
-    a, b = banded.alias("a"), banded.alias("b")
-    hamming = F.size(
-        F.filter(
-            F.zip_with(
-                F.split(F.col("a.simhash"), ""),
-                F.split(F.col("b.simhash"), ""),
-                lambda x, y: x != y,
-            ),
-            lambda d: d,
-        )
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
 # --- near-dup clustering: the dedup ENDGAME ---------------------------------
 # Pairs tell you who matches; keeping one canonical document per cluster
 # requires the transitive closure.  Min-label propagation over the pair

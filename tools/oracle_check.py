@@ -1,8 +1,9 @@
-"""Local stand-in for the driver's correctness gate: runs every
-``__spark_entry__.queries()`` entry on Spark AND its ``oracle_sql()`` twin on
-DuckDB over the same parquet dir, then compares row count, sorted column
-names, and an order-insensitive value hash (floats at full shortest-round-trip
-precision, NaN/None canonicalized — strict, like the driver).
+"""Spark-vs-DuckDB correctness gate: runs every contract query registered in
+``__spark_entry__`` on Spark AND its DuckDB oracle twin over the same parquet
+dir, then compares row count, sorted column names, and an order-insensitive
+value hash (floats at full shortest-round-trip precision, NaN/None
+canonicalized — strict).  ``tests/test_contract_oracle.py`` runs the same
+comparison per query on sf0.001.
 
 Usage: python tools/oracle_check.py [sf_dir] [query ...]
 """
@@ -39,13 +40,14 @@ def canon_cell(v):
     return str(v)
 
 
-def value_hash(cols: list[str], rows: list[tuple]) -> str:
+def _canon_lines(cols: list[str], rows: list[tuple]) -> list[str]:
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted(
-        "|".join(canon_cell(r[i]) for i in order) for r in rows
-    )
+    return sorted("|".join(canon_cell(r[i]) for i in order) for r in rows)
+
+
+def value_hash(cols: list[str], rows: list[tuple]) -> str:
     h = hashlib.md5()
-    for ln in lines:
+    for ln in _canon_lines(cols, rows):
         h.update(ln.encode("utf-8"))
         h.update(b"\n")
     return h.hexdigest()
@@ -82,6 +84,38 @@ def duck_rows_pandas_path(rel) -> list[tuple]:
     ]
 
 
+def duck_connection(sf_dir: str):
+    """In-memory DuckDB with one view per test table present in ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
+def compare(scols, srows, dcols, drows) -> list[str]:
+    """Differences between the Spark and DuckDB results: row count, sorted
+    lower-cased column names, value hash (with the first differing row).
+    Empty when they agree."""
+    scols = [c.lower() for c in scols]
+    dcols = [c.lower() for c in dcols]
+    problems = []
+    if len(srows) != len(drows):
+        problems.append(f"rows {len(srows)}/{len(drows)}")
+    if sorted(scols) != sorted(dcols):
+        return problems + [f"columns spark {scols} / duck {dcols}"]
+    if value_hash(scols, srows) != value_hash(dcols, drows):
+        problems.append("value hash differs")
+        sset = _canon_lines(scols, srows)
+        dset = _canon_lines(dcols, drows)
+        for a, b in zip(sset, dset):
+            if a != b:
+                problems.append(f"spark: {a[:220]}\n   duck : {b[:220]}")
+                break
+    return problems
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -89,18 +123,11 @@ def main():
     import __spark_entry__ as entrymod
     from html_parser_spark.spark.session import get_spark
 
-    spark = get_spark(app_name="oracle-check", master="local[8]", shuffle_partitions=8)
-
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-
-    queries = entrymod.queries()
+    spark = get_spark(app_name="oracle-check", shuffle_partitions=8)
+    con = duck_connection(sf_dir)
     oracles = entrymod.oracle_sql()
     failures = []
-    for name, fn in queries.items():
+    for name, fn in entrymod.queries().items():
         if only and name not in only:
             continue
         t0 = time.time()
@@ -112,9 +139,6 @@ def main():
             print(f"FAIL {name}: spark error {type(e).__name__}: {e}")
             failures.append(name)
             continue
-        if name not in oracles:
-            print(f"rows-only {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
-            continue
         try:
             rel = con.sql(oracles[name])
             dcols = rel.columns
@@ -123,29 +147,13 @@ def main():
             print(f"FAIL {name}: duckdb error {e}")
             failures.append(name)
             continue
-        ok_count = len(srows) == len(drows)
-        ok_schema = sorted(c.lower() for c in scols) == sorted(c.lower() for c in dcols)
-        sh = value_hash([c.lower() for c in scols], srows)
-        dh = value_hash([c.lower() for c in dcols], drows)
-        ok_hash = sh == dh
-        status = "OK  " if (ok_count and ok_schema and ok_hash) else "FAIL"
-        print(
-            f"{status} {name}: rows {len(srows)}/{len(drows)} schema={ok_schema} "
-            f"hash={ok_hash} ({time.time()-t0:.1f}s)"
-        )
-        if status == "FAIL":
+        problems = compare(scols, srows, dcols, drows)
+        status = "FAIL" if problems else "OK  "
+        print(f"{status} {name}: rows {len(srows)}/{len(drows)} ({time.time()-t0:.1f}s)")
+        for pr in problems:
+            print(f"   {pr}")
+        if problems:
             failures.append(name)
-            if not ok_schema:
-                print(f"   spark cols: {scols}\n   duck  cols: {dcols}")
-            elif not ok_hash and len(srows) == len(drows):
-                order = sorted(range(len(scols)), key=lambda i: scols[i].lower())
-                sset = sorted("|".join(canon_cell(r[i]) for i in order) for r in srows)
-                dorder = sorted(range(len(dcols)), key=lambda i: dcols[i].lower())
-                dset = sorted("|".join(canon_cell(r[i]) for i in dorder) for r in drows)
-                for a, b in zip(sset, dset):
-                    if a != b:
-                        print(f"   spark: {a[:220]}\n   duck : {b[:220]}")
-                        break
     spark.stop()
     print("FAILURES:", failures or "none")
     sys.exit(1 if failures else 0)

@@ -1,12 +1,16 @@
 """Physical-plan audit: `.explain("formatted")` for the flagship pipeline and
-key contract queries, asserting the plan properties that matter at 100TB:
+every contract query that declares a plan property in ``__spark_entry__``
+(``@contract(plan=..., must=..., must_not=...)``), asserting the properties
+that matter at 100TB:
 
 * parquet scans carry PushedFilters + pruned ReadSchema (no full-row reads);
 * dimension joins are BroadcastHashJoin (no shuffle on the fact side);
 * relational stages run inside WholeStageCodegen;
 * the extraction pipeline has exactly one ArrowEvalPython stage.
 
-Writes the annotated evidence to PLANS.md.  Exits 1 if an assertion fails.
+Writes the annotated evidence to PLANS.md with expression, plan, RDD and
+lambda-variable ids normalized, so the file diffs only when a plan changes.
+Exits 1 if an assertion fails.
 
 Usage: python tools/plan_audit.py [sf_dir]
 """
@@ -19,7 +23,17 @@ import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+# ids drawn from JVM-global counters: they renumber whenever any earlier
+# query changes, which would bury a real plan change in the diff
+_RUN_IDS = [
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"(lambda \w+)_\d+"), r"\1_N"),
+]
 
 
 def plan_of(df) -> str:
@@ -33,6 +47,18 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def normalize_ids(plan: str) -> str:
+    for pat, repl in _RUN_IDS:
+        plan = pat.sub(repl, plan)
+    return plan
+
+
+def violations(plan: str, must, must_not) -> list[str]:
+    return [f"MISSING: {m}" for m in must if m not in plan] + [
+        f"UNEXPECTED: {m}" for m in must_not if m in plan
+    ]
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     import __spark_entry__ as entrymod
@@ -41,1487 +67,23 @@ def main():
     from html_parser_spark.spark.session import get_spark
 
     spark = get_spark(app_name="plan-audit", master="local[4]", shuffle_partitions=8)
-    checks: list[tuple[str, str, list[str], list[str]]] = []
-    # (name, plan, must_contain, must_not_contain)
-
-    p = plan_of(entrymod.q_filter_project(spark, sf_dir))
-    checks.append(
-        (
-            "q_filter_project — predicate pushdown + column pruning",
-            p,
-            ["PushedFilters: [IsNotNull(l_shipdate)", "*(1)"],
-            ["Exchange"],  # pure scan+filter+project: no shuffle at all
-        )
-    )
-
-    p = plan_of(entrymod.q_dim_broadcast_join(spark, sf_dir))
-    checks.append(
-        (
-            "q_dim_broadcast_join — broadcast dims, partial agg",
-            p,
-            ["BroadcastHashJoin", "HashAggregate", "*("],
-            ["SortMergeJoin"],
-        )
-    )
-
-    p = plan_of(entrymod.q_agg_pricing(spark, sf_dir))
-    checks.append(
-        (
-            "q_agg_pricing — map-side partial aggregation before the exchange",
-            p,
-            ["HashAggregate", "PushedFilters: [IsNotNull(l_shipdate)"],
-            [],
-        )
-    )
 
     pages = synthetic_pages_df(spark, sf_dir, paragraphs=1)
     p = plan_of(extract_pages(pages, num_partitions=8))
     # count only the executed tree (AQE prints Final + Initial plans)
-    final_section = p.split("== Initial Plan ==")[0]
-    n_arrow = len(re.findall(r"ArrowEvalPython \(\d+\)", final_section))
-    checks.append(
-        (
-            "extraction pipeline — ONE fused ArrowEvalPython stage, salted exchange",
-            p,
-            ["ArrowEvalPython", "Exchange"],
-            [],
-        )
-    )
-
-    p = plan_of(entrymod.q_minhash_sig(spark, sf_dir))
-    checks.append(
-        (
-            "q_minhash_sig — pure JVM expressions, zero Python",
-            p,
-            ["Project"],
-            ["ArrowEvalPython", "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_cosine_topk(spark, sf_dir))
-    checks.append(
-        (
-            "q_cosine_topk — broadcast query set + per-query window topk",
-            p,
-            ["BroadcastNestedLoopJoin", "Window"],
-            ["CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_embedding_near_dup_lsh(spark, sf_dir))
-    checks.append(
-        (
-            "q_embedding_near_dup_lsh — bucket EQUI-join (the scale default), no nested loop",
-            p,
-            ["Join"],
-            ["BroadcastNestedLoopJoin", "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_jaccard_verify(spark, sf_dir))
-    checks.append(
-        (
-            "q_jaccard_verify — LSH candidates verified via equi-joins, no self cross-join",
-            p,
-            ["Join"],
-            ["BroadcastNestedLoopJoin", "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_ivf_topk(spark, sf_dir))
-    checks.append(
-        (
-            "q_ivf_topk — broadcast centroid probe + equi-join on inverted lists",
-            p,
-            ["BroadcastNestedLoopJoin", "Join"],  # tiny centroid set broadcast
-            ["CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_contamination(spark, sf_dir))
-    checks.append(
-        (
-            "q_contamination — train-shingle SEMI-join on md5 keys, no nested loop",
-            p,
-            ["LeftSemi"],
-            ["BroadcastNestedLoopJoin", "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_dedup_survivors(spark, sf_dir))
-    checks.append(
-        (
-            "q_dedup_survivors — loser set dropped via ANTI-join (broadcastable)",
-            p,
-            ["LeftAnti"],
-            ["CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_repetition(spark, sf_dir))
-    checks.append(
-        (
-            "q_repetition — exploded token aggs combine map-side (partial HashAggregate)",
-            p,
-            ["HashAggregate", "partial_count"],
-            ["BroadcastNestedLoopJoin", "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_span_dedup(spark, sf_dir))
-    checks.append(
-        (
-            "q_span_dedup — groupBy-min + hash join on span hashes, no window over spans",
-            p,
-            ["HashAggregate", "Join"],
-            ["Window", "CartesianProduct", "BroadcastNestedLoopJoin"],
-        )
-    )
-
-    p = plan_of(entrymod.q_host_line_dedup(spark, sf_dir))
-    checks.append(
-        (
-            "q_host_line_dedup — partial-agg line counts + equi-joins, no window"
-            " over line text, no forced broadcast of the per-host dim",
-            p,
-            ["HashAggregate", "Join"],
-            ["Window", "CartesianProduct", "BroadcastNestedLoopJoin"],
-        )
-    )
-
-    p = plan_of(entrymod.q_cdxj_roundtrip(spark, sf_dir))
-    checks.append(
-        (
-            "q_cdxj_roundtrip — CDXJ read is a parallel text scan + JVM"
-            " regexp/from_json projection: zero Python, zero shuffle"
-            " (the ONE range exchange is paid at WRITE time, off this plan)",
-            p,
-            ["from_json"],
-            ["Exchange", "ArrowEvalPython", "BatchEvalPython", "Window"],
-        )
-    )
-
-    p = plan_of(entrymod.q_noindex_gate(spark, sf_dir))
-    checks.append(
-        (
-            "q_noindex_gate — ONE Arrow meta kernel + JVM REP-token flags,"
-            " no shuffle at all",
-            p,
-            ["ArrowEvalPython"],
-            ["Exchange", "Window", "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_recrawl_priority(spark, sf_dir))
-    checks.append(
-        (
-            "q_recrawl_priority — digests below the exchange, ONE partial-agg"
-            " groupBy(url), zip_with change counting instead of a window"
-            " (the synth's 4-row capture crossJoin is fixture construction,"
-            " not the op)",
-            p,
-            ["md5", "HashAggregate"],
-            ["Window"],
-        )
-    )
-
-    p = plan_of(entrymod.q_blocklist(spark, sf_dir))
-    checks.append(
-        (
-            "q_blocklist — blocklist dropped via broadcast LEFT ANTI join",
-            p,
-            ["LeftAnti", "BroadcastHashJoin"],
-            ["CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_latest_capture(spark, sf_dir))
-    checks.append(
-        (
-            "q_latest_capture — struct-max with map-side partial agg, no capture window",
-            p,
-            ["partial_max"],
-            ["Window"],
-        )
-    )
-
-    p = plan_of(entrymod.q_main_content(spark, sf_dir))
-    checks.append(
-        (
-            "q_main_content — boilerplate strip is ONE Arrow UDF stage, zero shuffle",
-            p,
-            ["ArrowEvalPython"],
-            ["Exchange", "Join", "Window"],
-        )
-    )
-
-    p = plan_of(entrymod.q_html_meta(spark, sf_dir))
-    checks.append(
-        (
-            "q_html_meta — metadata/outlink extraction is ONE Arrow UDF, zero shuffle",
-            p,
-            ["ArrowEvalPython"],
-            ["Exchange", "Join", "Window"],
-        )
-    )
-
-    p = plan_of(entrymod.q_pagerank(spark, sf_dir, checkpoint=False))
-    checks.append(
-        (
-            "q_pagerank — edge/rank equi-joins + partial-agg sums; dangling mass "
-            "is a 1-row broadcast, never a cross join over nodes",
-            p,
-            ["HashAggregate", "Join"],
-            ["CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_gopher(spark, sf_dir))
-    checks.append(
-        (
-            "q_gopher — full rule battery is pure JVM codegen, zero shuffle",
-            p,
-            ["Project"],
-            ["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join"],
-        )
-    )
-
-    p = plan_of(entrymod.q_graph_stats(spark, sf_dir))
-    checks.append(
-        (
-            "q_graph_stats — partial-agg degree rollups + reversed-pair equi-join",
-            p,
-            ["HashAggregate", "Join"],
-            ["CartesianProduct", "BroadcastNestedLoopJoin", "Window"],
-        )
-    )
-
-    p = plan_of(entrymod.q_text_clean(spark, sf_dir))
-    checks.append(
-        (
-            "q_text_clean — invisible strip JVM-side, ONE Arrow NFC stage, zero shuffle",
-            p,
-            ["ArrowEvalPython"],
-            ["Exchange", "Join", "Window"],
-        )
-    )
-
-    p = plan_of(entrymod.q_crawl_diff(spark, sf_dir))
-    checks.append(
-        (
-            "q_crawl_diff — md5 below the join: the exchange carries digests, "
-            "not page bodies",
-            p,
-            ["md5", "Join"],
-            ["CartesianProduct", "BroadcastNestedLoopJoin", "Window"],
-        )
-    )
-
-    p = plan_of(entrymod.q_image_headers(spark, sf_dir))
-    checks.append(
-        (
-            "q_image_headers — ONE Arrow header-sniff stage, zero shuffle",
-            p,
-            ["ArrowEvalPython"],
-            ["Exchange", "Join", "Window"],
-        )
-    )
-
-    p = plan_of(entrymod.q_soft404(spark, sf_dir))
-    checks.append(
-        (
-            "q_soft404 — pure codegen phrase flags, zero shuffle",
-            p,
-            ["Project"],
-            ["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join"],
-        )
-    )
-
-    p = plan_of(entrymod.q_audio_headers(spark, sf_dir))
-    checks.append(
-        (
-            "q_audio_headers — ONE Arrow header-sniff stage, zero shuffle",
-            p,
-            ["ArrowEvalPython"],
-            ["Exchange", "Join", "Window"],
-        )
-    )
-
-    p = plan_of(entrymod.q_image_dhash(spark, sf_dir))
-    checks.append(
-        (
-            "q_image_dhash — ONE Arrow pixel-decode stage, zero shuffle",
-            p,
-            ["ArrowEvalPython"],
-            ["Exchange", "Join", "Window"],
-        )
-    )
-
-    p = plan_of(entrymod.q_stratified_sample(spark, sf_dir))
-    checks.append(
-        (
-            "q_stratified_sample — pure per-row hash filter, zero shuffle",
-            p,
-            ["Filter"],
-            ["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join", "Window"],
-        )
-    )
-
-    p = plan_of(entrymod.q_vocab(spark, sf_dir))
-    checks.append(
-        (
-            "q_vocab — partial-agg groupBy + distributed TakeOrdered "
-            "(no full-vocab single-partition sort)",
-            p,
-            ["HashAggregate", "TakeOrderedAndProject"],
-            ["ArrowEvalPython", "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_crawl_plan(spark, sf_dir))
-    checks.append(
-        (
-            "q_crawl_plan — ONE partial-agg groupBy over pages, tiny delay "
-            "dim broadcast",
-            p,
-            ["HashAggregate", "BroadcastHashJoin"],
-            ["CartesianProduct", "SortMergeJoin"],
-        )
-    )
-
-    p = plan_of(entrymod.q_temperature_mix(spark, sf_dir))
-    checks.append(
-        (
-            "q_temperature_mix — partial-agg stratum counts, 1-row broadcast "
-            "denominator, tiny threshold dim broadcast back onto docs",
-            p,
-            ["HashAggregate", "BroadcastNestedLoopJoin", "BroadcastHashJoin"],
-            ["CartesianProduct", "SortMergeJoin", "ArrowEvalPython", "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_doc_classifier(spark, sf_dir))
-    checks.append(
-        (
-            "q_doc_classifier — pure JVM hashing/explode, broadcast model, "
-            "partial-agg train + score groupBys, zero Python",
-            p,
-            ["HashAggregate", "BroadcastHashJoin"],
-            ["CartesianProduct", "ArrowEvalPython", "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_table_extract(spark, sf_dir))
-    checks.append(
-        (
-            "q_table_extract — ONE Arrow table-walk stage + narrow explode, "
-            "zero shuffle",
-            p,
-            ["ArrowEvalPython", "Generate"],
-            ["Exchange", "BatchEvalPython", "SortMergeJoin"],
-        )
-    )
-
-    p = plan_of(entrymod.q_markdown(spark, sf_dir))
-    checks.append(
-        (
-            "q_markdown — ONE Arrow markdown-render stage, zero shuffle",
-            p,
-            ["ArrowEvalPython"],
-            ["Exchange", "BatchEvalPython", "Window", "Join"],
-        )
-    )
-
-    p = plan_of(entrymod.q_pdf_text(spark, sf_dir))
-    checks.append(
-        (
-            "q_pdf_text — PDF binary parse: fixture-writer UDF + ONE Arrow "
-            "extract stage back-to-back in the same pipeline, zero shuffle",
-            p,
-            ["ArrowEvalPython"],
-            ["Exchange", "BatchEvalPython", "Window", "Join"],
-        )
-    )
-
-    p = plan_of(entrymod.q_mime_sniff(spark, sf_dir))
-    checks.append(
-        (
-            "q_mime_sniff — magic-byte sniff is pure JVM codegen: no "
-            "Python stage, no shuffle, fused into the scan's stage",
-            p,
-            ["codegen id"],
-            ["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join"],
-        )
-    )
-
-    p = plan_of(entrymod.q_exact_substring(spark, sf_dir))
-    checks.append(
-        (
-            "q_exact_substring — overlapping-window dedup: groupBy(md5) "
-            "with map-side partials + equi-joins; interval merge is a JVM "
-            "aggregate over per-doc arrays — no Window, no Python, no "
-            "cartesian",
-            p,
-            ["HashAggregate"],
-            ["Window", "ArrowEvalPython", "BatchEvalPython", "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_warc_revisit(spark, sf_dir))
-    checks.append(
-        (
-            "q_warc_revisit — digest dedup: ONE sha1 shuffle (map-side "
-            "partial_min of the (ts,url) struct; SortAggregate — struct min "
-            "is not hash-aggregable) + equi-join back, no window, zero Python",
-            p,
-            ["partial_min", "Exchange hashpartitioning(payload_digest"],
-            ["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_paragraph_dedup(spark, sf_dir))
-    checks.append(
-        (
-            "q_paragraph_dedup — global keep-first: groupBy(md5(para)) with "
-            "map-side partial_min of the (doc_id,pos) struct + equi-join "
-            "back on the 16-byte hash; NEVER a window over paragraph text "
-            "(zipfian hot paragraphs), zero Python",
-            p,
-            ["partial_min", "Exchange hashpartitioning(h#"],
-            ["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_semantic_dedup(spark, sf_dir))
-    checks.append(
-        (
-            "q_semantic_dedup — SemDeDup: broadcast centroids (tiny trained "
-            "set), cluster-bounded pair scan as an EQUI-join on cent_id — "
-            "never an all-pairs cartesian; zero Python",
-            p,
-            ["BroadcastExchange", "Exchange hashpartitioning(cent_id"],
-            ["CartesianProduct", "ArrowEvalPython", "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_charset(spark, sf_dir))
-    checks.append(
-        (
-            "q_charset — charset sniff is pure JVM codegen fused into the "
-            "scan projection; decode is ONE Arrow kernel; zero shuffle",
-            p,
-            ["ArrowEvalPython"],
-            ["Exchange", "BatchEvalPython", "Window", "Join"],
-        )
-    )
-
-    p = plan_of(entrymod.q_inverted_index(spark, sf_dir))
-    checks.append(
-        (
-            "q_inverted_index — FLAT (term, doc_id, tf) rows: explode + ONE "
-            "partial-agg groupBy; never collect_list posting arrays, zero "
-            "Python",
-            p,
-            ["HashAggregate", "Exchange hashpartitioning(term"],
-            ["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_keyword_search(spark, sf_dir))
-    checks.append(
-        (
-            "q_keyword_search — conjunctive query: IN-filter before the agg, "
-            "top-k via TakeOrderedAndProject (per-partition heaps), never a "
-            "global Sort",
-            p,
-            ["TakeOrderedAndProject"],
-            ["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_bloom_seen(spark, sf_dir))
-    checks.append(
-        (
-            "q_bloom_seen — distributed bitset: bit_or partial aggregation "
-            "into (word_idx, word) rows, probe is an equi-join on word_idx "
-            "(AQE broadcasts the tiny bitset), zero Python",
-            p,
-            ["bit_or", "Exchange hashpartitioning(word_idx"],
-            ["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_robots_sitemaps(spark, sf_dir))
-    checks.append(
-        (
-            "q_robots_sitemaps — group-independent directive: regexp + "
-            "narrow explode, zero Python/shuffle/window",
-            p,
-            ["Generate"],
-            ["Exchange", "ArrowEvalPython", "BatchEvalPython", "Window", "Join"],
-        )
-    )
-
-    p = plan_of(entrymod.q_pack_shards(spark, sf_dir))
-    checks.append(
-        (
-            "q_pack_shards — distributed prefix-sum: range exchange + "
-            "PARTITIONED local-cumsum window + tiny offsets broadcast "
-            "(never a global single-partition window over the corpus)",
-            p,
-            ["Window", "BroadcastHashJoin"],
-            ["CartesianProduct", "SortMergeJoin", "ArrowEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_pack_sequences(spark, sf_dir))
-    checks.append(
-        (
-            "q_pack_sequences — concat-and-split packing: same distributed "
-            "prefix-sum as pack_shards, then a narrow Generate fan-out "
-            "(no extra shuffle, no Python stage)",
-            p,
-            ["Window", "BroadcastHashJoin", "Generate"],
-            ["CartesianProduct", "SortMergeJoin", "ArrowEvalPython",
-             "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_seq_materialize(spark, sf_dir))
-    checks.append(
-        (
-            "q_seq_materialize — plan execution: ONE doc_id equi-join + "
-            "ONE groupBy(seq_id) over pre-sliced pieces (per-group payload "
-            "bounded by seq_len; no Python stage, no cartesian)",
-            p,
-            ["Window", "Join"],
-            ["CartesianProduct", "BroadcastNestedLoopJoin",
-             "ArrowEvalPython", "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_canonical_dedup(spark, sf_dir))
-    checks.append(
-        (
-            "q_canonical_dedup — rel=canonical election: ONE struct-min "
-            "groupBy with partial aggregation (SortAggregate — struct min "
-            "is not hashable; no window over captures, no Python stage)",
-            p,
-            ["Aggregate"],
-            ["Window", "CartesianProduct", "ArrowEvalPython",
-             "BatchEvalPython", "Join"],
-        )
-    )
-
-    p = plan_of(entrymod.q_domain_cap(spark, sf_dir))
-    checks.append(
-        (
-            "q_domain_cap — diversification cap: rank<=N rewritten to "
-            "WindowGroupLimit (map-side top-N per host before the "
-            "shuffle; no Python stage)",
-            p,
-            ["WindowGroupLimit"],
-            ["CartesianProduct", "ArrowEvalPython", "BatchEvalPython",
-             "Join"],
-        )
-    )
-
-    p = plan_of(entrymod.q_centroid_outliers(spark, sf_dir))
-    checks.append(
-        (
-            "q_centroid_outliers — prototypicality pruning: broadcast "
-            "centroid dim join + WindowGroupLimit top-k per label "
-            "(vectors never shuffle for the join; no Python stage)",
-            p,
-            ["BroadcastHashJoin", "WindowGroupLimit"],
-            ["CartesianProduct", "SortMergeJoin", "ArrowEvalPython",
-             "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_surt_key(spark, sf_dir))
-    checks.append(
-        (
-            "q_surt_key — CDX sort-key derivation is pure codegen, "
-            "zero shuffle/Python",
-            p,
-            ["*(1)"],
-            ["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join"],
-        )
-    )
-
-    p = plan_of(entrymod.q_familiarity(spark, sf_dir))
-    checks.append(
-        (
-            "q_familiarity — tiny profile BROADCAST into the gram join",
-            p,
-            ["BroadcastHashJoin", "HashAggregate"],
-            ["CartesianProduct", "ArrowEvalPython", "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_jsonld(spark, sf_dir))
-    checks.append(
-        (
-            "q_jsonld — ld+json block cut + get_json_object, zero Python/shuffle",
-            p,
-            ["Generate"],
-            ["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join"],
-        )
-    )
-
-    p = plan_of(entrymod.q_feed(spark, sf_dir))
-    checks.append(
-        (
-            "q_feed — RSS/Atom block-cut + field extraction, zero Python/shuffle",
-            p,
-            ["Generate"],
-            ["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join"],
-        )
-    )
-
-    p = plan_of(entrymod.q_sitemap(spark, sf_dir))
-    checks.append(
-        (
-            "q_sitemap — regexp_extract_all + narrow explode, zero Python/shuffle",
-            p,
-            ["Generate"],
-            ["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join"],
-        )
-    )
-
-    p = plan_of(entrymod.q_anchor_stats(spark, sf_dir))
-    checks.append(
-        (
-            "q_anchor_stats — one Arrow kernel, explode, ONE partial-agg groupBy",
-            p,
-            ["ArrowEvalPython", "Generate", "HashAggregate"],
-            ["Window", "CartesianProduct", "BroadcastNestedLoopJoin"],
-        )
-    )
-
-    p = plan_of(entrymod.q_robots(spark, sf_dir))
-    checks.append(
-        (
-            "q_robots — verdict is host equi-join + partial-agg max; the only "
-            "Window is the per-host rule parse, never over pages",
-            p,
-            ["HashAggregate", "Join"],
-            ["CartesianProduct", "BroadcastNestedLoopJoin",
-             "ArrowEvalPython", "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_warc_roundtrip(spark, sf_dir))
-    checks.append(
-        (
-            "q_warc_roundtrip — WARC ingest is a shuffle-free scan → single mapInPandas",
-            p,
-            ["MapInPandas"],
-            ["Exchange", "Window"],  # the READ side must not shuffle
-        )
-    )
-
-    p = plan_of(entrymod.q_wet_roundtrip(spark, sf_dir))
-    checks.append(
-        (
-            "q_wet_roundtrip — WET sidecar read is the same shuffle-free "
-            "scan → single mapInPandas",
-            p,
-            ["MapInPandas"],
-            ["Exchange", "Window"],
-        )
-    )
-
-    p = plan_of(entrymod.q_wat_roundtrip(spark, sf_dir))
-    checks.append(
-        (
-            "q_wat_roundtrip — WAT sidecar read: shuffle-free scan → "
-            "single mapInPandas, JSON fields re-extracted JVM-side",
-            p,
-            ["MapInPandas"],
-            ["Exchange", "Window"],
-        )
-    )
-
-    p = plan_of(entrymod.q_bpe_encode(spark, sf_dir))
-    checks.append(
-        (
-            "q_bpe_encode — learned-subword corpus encode: scan → single "
-            "mapInPandas (merges in the closure), zero shuffle",
-            p,
-            ["MapInPandas"],
-            ["Exchange", "Window", "Join", "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_sentence_split(spark, sf_dir))
-    checks.append(
-        (
-            "q_sentence_split — sentence segmentation is narrow "
-            "replace/split/explode: zero shuffle, zero Python",
-            p,
-            ["Generate"],
-            ["Exchange", "Window", "Join", "ArrowEvalPython",
-             "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_script_profile(spark, sf_dir))
-    checks.append(
-        (
-            "q_script_profile — script routing is pure codegen (five "
-            "regexp_counts in one projection): zero shuffle, zero Python",
-            p,
-            ["*(1)"],
-            ["Exchange", "Window", "Join", "ArrowEvalPython",
-             "BatchEvalPython", "Generate"],
-        )
-    )
-
-    p = plan_of(entrymod.q_ngram_novelty(spark, sf_dir))
-    checks.append(
-        (
-            "q_ngram_novelty — diversity diagnostic: md5-hashed shingles "
-            "before the shuffle, ONE groupBy per direction, no window, "
-            "no Python, no cartesian",
-            p,
-            ["HashAggregate", "Generate"],
-            ["Window", "CartesianProduct", "ArrowEvalPython",
-             "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_c4_lines(spark, sf_dir))
-    checks.append(
-        (
-            "q_c4_lines — C4 line cleaning is pure codegen (split/filter/"
-            "join inside one projection): zero shuffle, zero Python",
-            p,
-            ["*(1)"],
-            ["Exchange", "Window", "Join", "ArrowEvalPython",
-             "BatchEvalPython", "Generate"],
-        )
-    )
-
-    p = plan_of(entrymod.q_bpe_fertility(spark, sf_dir))
-    checks.append(
-        (
-            "q_bpe_fertility — tokenizer-fit audit: ONE mapInPandas "
-            "encode + ONE partial-agg groupBy (no Window, no cartesian)",
-            p,
-            ["MapInPandas", "HashAggregate"],
-            ["Window", "CartesianProduct", "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_hits(spark, sf_dir, checkpoint=False))
-    checks.append(
-        (
-            "q_hits — HITS half-steps are edge⋈rank equi-joins with "
-            "partial-agg sums; rescale totals ride 1-row broadcasts, "
-            "never a window or cartesian over nodes",
-            p,
-            ["HashAggregate", "BroadcastNestedLoopJoin"],
-            ["CartesianProduct", "Window", "ArrowEvalPython",
-             "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_hreflang(spark, sf_dir))
-    checks.append(
-        (
-            "q_hreflang — link extraction is pure JVM regexp + narrow "
-            "explode; clustering + self-language fold into ONE partial-agg "
-            "groupBy(url) over ONE links scan (string-buffered min → "
-            "SortAggregate, still partial before the exchange); the "
-            "per-cluster min key needs NO graph iteration and NO join",
-            p,
-            ["Generate", "SortAggregate"],
-            ["ArrowEvalPython", "BatchEvalPython", "CartesianProduct",
-             "Window", "Join"],
-        )
-    )
-
-    p = plan_of(entrymod.q_bitext_mine(spark, sf_dir))
-    checks.append(
-        (
-            "q_bitext_mine — margin mining: broadcast pair generation "
-            "(candidates equi-join at scale), in-row JVM cosine, bounded "
-            "per-id windows, zero Python",
-            p,
-            ["BroadcastNestedLoopJoin", "Window"],
-            ["CartesianProduct", "ArrowEvalPython", "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_incremental_dedup(spark, sf_dir))
-    checks.append(
-        (
-            "q_incremental_dedup — batch bands equi-join the persisted "
-            "index on uniform (band_id, band_key); min elections are "
-            "partial-agg groupBys; no window, no cartesian, zero Python",
-            p,
-            ["Generate", "HashAggregate"],
-            ["CartesianProduct", "Window", "ArrowEvalPython",
-             "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_lm_score(spark, sf_dir))
-    checks.append(
-        (
-            "q_lm_score — trigram LM train (partial-agg groupBys) + score "
-            "(three LEFT equi-joins on (ctx, tok)); integer div scoring, "
-            "zero Python, no window, no cartesian",
-            p,
-            ["HashAggregate", "Generate"],
-            ["CartesianProduct", "Window", "ArrowEvalPython",
-             "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_lm_buckets(spark, sf_dir))
-    checks.append(
-        (
-            "q_lm_buckets — CCNet bucketing: the only Window runs over the "
-            "per-(lang, score) HISTOGRAM (bounded by the score scale), "
-            "never over documents; assignment joins back by equi-key",
-            p,
-            ["Window", "HashAggregate"],
-            ["CartesianProduct", "ArrowEvalPython", "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_bm25(spark, sf_dir))
-    checks.append(
-        (
-            "q_bm25 — IN-filtered index scan, broadcast term stats + 1-row "
-            "totals, TakeOrderedAndProject top-k (no global sort), zero "
-            "Python",
-            p,
-            ["TakeOrderedAndProject", "BroadcastNestedLoopJoin"],
-            ["CartesianProduct", "Window", "ArrowEvalPython",
-             "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_pmi(spark, sf_dir))
-    checks.append(
-        (
-            "q_pmi — pair counts min-count-pruned BEFORE the unigram "
-            "joins; TakeOrderedAndProject top-k; zero Python, no window",
-            p,
-            ["TakeOrderedAndProject", "HashAggregate"],
-            ["CartesianProduct", "Window", "ArrowEvalPython",
-             "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_label_prop(spark, sf_dir, checkpoint=False))
-    checks.append(
-        (
-            "q_label_prop — LPA iterations are edges⋈labels equi-joins + "
-            "partial-agg min-struct elections; no window, no cartesian, "
-            "zero Python",
-            p,
-            ["HashAggregate"],
-            ["CartesianProduct", "Window", "ArrowEvalPython",
-             "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_dsir(spark, sf_dir))
-    checks.append(
-        (
-            "q_dsir — importance weights: ONE groupBy(bucket) + 1-row "
-            "broadcast totals; doc weights via broadcast model join; the "
-            "only Window runs over the bounded weight histogram; zero "
-            "Python, no cartesian product",
-            p,
-            ["HashAggregate", "Window"],
-            ["CartesianProduct", "ArrowEvalPython", "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_readability(spark, sf_dir))
-    checks.append(
-        (
-            "q_readability — readability/lexical profile is ONE pure-codegen "
-            "projection: zero shuffle, zero Python",
-            p,
-            ["*(1)"],
-            ["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join",
-             "Window"],
-        )
-    )
-
-    p = plan_of(entrymod.q_hll_distinct(spark, sf_dir))
-    checks.append(
-        (
-            "q_hll_distinct — HLL registers: partial-agg groupBy max (the "
-            "exchange is bounded by |groups|·m register cells, never by "
-            "corpus size), union-max merge, pure-codegen estimate; zero "
-            "Python, no join, no window",
-            p,
-            ["HashAggregate"],
-            ["ArrowEvalPython", "BatchEvalPython", "Join", "Window",
-             "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_heavy_hitters(spark, sf_dir))
-    checks.append(
-        (
-            "q_heavy_hitters — count-min build is ONE partial-agg groupBy "
-            "over ≤ depth·width cells; the probe lookup joins the tiny "
-            "sketch broadcast; zero Python, no cartesian product",
-            p,
-            ["HashAggregate", "BroadcastHashJoin"],
-            ["ArrowEvalPython", "BatchEvalPython", "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_corpus_shuffle(spark, sf_dir))
-    checks.append(
-        (
-            "q_corpus_shuffle — deterministic shuffle: ONE hash exchange on "
-            "the shard key + a window partitioned BY SHARD (parallel across "
-            "shards, per-task bounded by the file-sized shard); never a "
-            "single-partition window, zero Python",
-            p,
-            ["Window", "hashpartitioning(shard"],
-            ["SinglePartition", "ArrowEvalPython", "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_vocab_growth(spark, sf_dir))
-    checks.append(
-        (
-            "q_vocab_growth — Heaps'-law curve: ONE corpus-sized partial-agg "
-            "groupBy(tok) min (bounded by distinct tokens); threshold "
-            "bucketing is a pure array-filter projection (no join against a "
-            "threshold table); the only window runs over the |thresholds|-row "
-            "curve frame (bounded by construction, like _running_offsets); "
-            "zero Python, no cartesian product",
-            p,
-            ["HashAggregate", "Window"],
-            ["ArrowEvalPython", "BatchEvalPython", "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_dist_drift(spark, sf_dir))
-    checks.append(
-        (
-            "q_dist_drift — snapshot drift: TWO partial-agg groupBys (each "
-            "exchange bounded by |buckets| after map-side combine), a "
-            "full-outer join on the tiny bucket frame, and the 1-row "
-            "broadcast-totals crossJoin; zero Python, no corpus-sized join, "
-            "no window",
-            p,
-            ["HashAggregate"],
-            ["ArrowEvalPython", "BatchEvalPython", "CartesianProduct",
-             "Window"],
-        )
-    )
-
-    p = plan_of(entrymod.q_freq_spectrum(spark, sf_dir))
-    checks.append(
-        (
-            "q_freq_spectrum — frequency-of-frequencies: ONE corpus-sized "
-            "partial-agg groupBy(tok) (bounded by distinct shingles), then a "
-            "≤8-row spectrum groupBy and the 1-row broadcast-totals "
-            "crossJoin; shingling is a pure codegen array projection; zero "
-            "Python, no window",
-            p,
-            ["HashAggregate", "BroadcastNestedLoopJoin"],
-            ["ArrowEvalPython", "BatchEvalPython", "CartesianProduct",
-             "Window"],
-        )
-    )
-
-    p = plan_of(entrymod.q_mojibake(spark, sf_dir))
-    checks.append(
-        (
-            "q_mojibake — encoding-damage score: ONE whole-stage-codegen "
-            "projection (two regexp_counts + length + IntegralDivide) fused "
-            "into the scan; zero shuffle, zero Python, no join, no window",
-            p,
-            ["Project"],
-            ["ArrowEvalPython", "BatchEvalPython", "Exchange", "Join",
-             "Window", "HashAggregate"],
-        )
-    )
-
-    p = plan_of(entrymod.q_shard_manifest(spark, sf_dir))
-    checks.append(
-        (
-            "q_shard_manifest — release-integrity manifest: ONE partial-agg "
-            "groupBy(shard) whose exchange carries ≤|shards| rows after "
-            "map-side combine (count/sum/bit_xor all combine); digests are "
-            "order-insensitive so the result is partition-independent; zero "
-            "Python, no join, no window",
-            p,
-            ["HashAggregate"],
-            ["ArrowEvalPython", "BatchEvalPython", "Join", "Window",
-             "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_token_prf(spark, sf_dir))
-    checks.append(
-        (
-            "q_token_prf — extraction-QA P/R/F1: two explode→partial-agg "
-            "groupBy(doc, tok) counts, ONE (doc, tok) equi-join (both sides "
-            "pre-aggregated), ONE groupBy(doc) fold; every shuffle keyed by "
-            "doc_id(+tok) so skew is bounded by the longest document; zero "
-            "Python, no window, no cartesian product",
-            p,
-            ["HashAggregate"],
-            ["ArrowEvalPython", "BatchEvalPython", "Window",
-             "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_exact_quantiles(spark, sf_dir))
-    checks.append(
-        (
-            "q_exact_quantiles — exact type-1 quantiles: ONE corpus-sized "
-            "partial-agg groupBy(lang, v) histogram (exchange bounded by "
-            "distinct values per group); the cumulative window partitions "
-            "by lang over that bounded histogram — never over documents, "
-            "never SinglePartition; |qs|-row fan-out + bounded min-struct "
-            "groupBy; zero Python",
-            p,
-            ["HashAggregate", "Window", "hashpartitioning(lang"],
-            ["ArrowEvalPython", "BatchEvalPython", "SinglePartition",
-             "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_containment(spark, sf_dir))
-    checks.append(
-        (
-            "q_containment — containment dedup: inverted-shingle postings "
-            "with the df-cap semi-join pruning stop-shingles BEFORE the "
-            "posting self-join (per-shingle fan-out ≤ max_df²), candidate "
-            "groupBy with map-side partials, then two equi-joins for exact "
-            "verification — no cartesian product, zero Python, no window",
-            p,
-            ["HashAggregate"],
-            ["CartesianProduct", "ArrowEvalPython", "BatchEvalPython",
-             "Window"],
-        )
-    )
-
-    p = plan_of(entrymod.q_trustrank(spark, sf_dir, checkpoint=False))
-    checks.append(
-        (
-            "q_trustrank — seeded propagation: per-iteration edge⋈rank "
-            "equi-join + groupBy(dst) partials exactly like q_pagerank; the "
-            "seed flag is ONE broadcast-sized semi-join at init and the "
-            "1-row dangling aggregate rides an explicit broadcast, never a "
-            "cross join over nodes; zero Python, no window",
-            p,
-            ["HashAggregate", "Join"],
-            ["ArrowEvalPython", "BatchEvalPython", "Window",
-             "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_click_depth(spark, sf_dir, checkpoint=False))
-    checks.append(
-        (
-            "q_click_depth — seed BFS: per-hop frontier⋈edges equi-join + "
-            "partial-agg distinct + left-anti against the settled set; the "
-            "frontier (not hosts×edges) bounds every hop's shuffle; zero "
-            "Python, no window, no cartesian product",
-            p,
-            ["HashAggregate", "Join"],
-            ["ArrowEvalPython", "BatchEvalPython", "Window",
-             "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_pub_dates(spark, sf_dir))
-    checks.append(
-        (
-            "q_pub_dates — publication-date extraction: the whole regexp "
-            "priority chain is ONE pure-codegen projection over the page "
-            "scan — zero shuffle, zero Python, no join, no window",
-            p,
-            ["*("],
-            ["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join",
-             "Window", "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_concentration(spark, sf_dir))
-    checks.append(
-        (
-            "q_concentration — magnitude-bucket Lorenz profile: per-key "
-            "totals with map-side partials, second groupBy bounded by <=63 "
-            "bit-length buckets, cumulative window + 1-row broadcast grand "
-            "totals over that bounded histogram (the SinglePartition window "
-            "is over <=63 rows by construction — same class as pack_shards' "
-            "P-row offsets); zero Python, no cartesian product over data",
-            p,
-            ["HashAggregate", "Window", "BroadcastNestedLoopJoin"],
-            ["ArrowEvalPython", "BatchEvalPython", "SortMergeJoin"],
-        )
-    )
-
-    p = plan_of(entrymod.q_code_profile(spark, sf_dir))
-    checks.append(
-        (
-            "q_code_profile — code-vs-prose routing: split + two "
-            "higher-order array filters + integer ppm, ONE pure-codegen "
-            "projection over the scan — zero shuffle, zero Python, no "
-            "join, no window",
-            p,
-            ["*("],
-            ["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join",
-             "Window", "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_bpe_roundtrip(spark, sf_dir))
-    checks.append(
-        (
-            "q_bpe_roundtrip — tokenizer decode QA: ONE MapInPandas encode "
-            "stage, pure-codegen decode (two replaces), ONE doc_id "
-            "equi-join for the identity check; no window, no cartesian "
-            "product",
-            p,
-            ["MapInPandas", "Join"],
-            ["CartesianProduct", "Window", "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_cocitation(spark, sf_dir))
-    checks.append(
-        (
-            "q_cocitation — related-hosts mining: distinct postings, "
-            "out-degree df-cap semi-join pruning directory hosts BEFORE "
-            "the posting self-join (fan-out <= cap^2 per citer), pair "
-            "groupBy with map-side partials, two bounded degree joins; "
-            "zero Python, no window, no cartesian product",
-            p,
-            ["HashAggregate", "Join"],
-            ["CartesianProduct", "ArrowEvalPython", "BatchEvalPython",
-             "Window"],
-        )
-    )
-
-    p = plan_of(entrymod.q_norm_dedup(spark, sf_dir))
-    checks.append(
-        (
-            "q_norm_dedup — normalized exact dedup: the 32-byte md5 key is "
-            "a pure-codegen projection (lower + strip-all before the "
-            "shuffle), ONE groupBy(h) with map-side partial aggregation, "
-            "min-id survivor election; zero Python, no join, no window",
-            p,
-            ["HashAggregate", "Exchange hashpartitioning(h"],
-            ["ArrowEvalPython", "BatchEvalPython", "Join", "Window",
-             "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_dedup_prf(spark, sf_dir))
-    checks.append(
-        (
-            "q_dedup_prf — dedup-QA pair P/R: canonicalize + distinct on "
-            "both (small) pair tables, ONE pair equi-join, three 1-row "
-            "counts stitched by broadcast cross joins (1-row sides only); "
-            "zero Python, no window",
-            p,
-            ["HashAggregate", "Join"],
-            ["ArrowEvalPython", "BatchEvalPython", "Window"],
-        )
-    )
-
-    p = plan_of(entrymod.q_gate_ablation(spark, sf_dir))
-    checks.append(
-        (
-            "q_gate_ablation — per-rule funnel: all 15 counters in ONE "
-            "aggregate with map-side partials (partial_count/partial_sum "
-            "before a 1-row-per-partition exchange), then the |R|-row "
-            "stack fan-out + ppm projection; zero Python, no join, no "
-            "window, no per-rule pass",
-            p,
-            ["HashAggregate", "partial_count(1)", "Generate"],
-            ["ArrowEvalPython", "BatchEvalPython", "Join", "Window",
-             "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_frequent_lines(spark, sf_dir))
-    checks.append(
-        (
-            "q_frequent_lines — global boilerplate mining: explode + trim "
-            "projection, (host, line) distinct with map-side partials "
-            "BEFORE the host-count groupBy (a mega-host votes once); zero "
-            "Python, no join, no window",
-            p,
-            ["HashAggregate"],
-            ["ArrowEvalPython", "BatchEvalPython", "Join", "Window",
-             "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_strip_lines(spark, sf_dir))
-    checks.append(
-        (
-            "q_strip_lines — blocklist application: posexplode, ONE "
-            "left-anti join against the BROADCAST blocklist, groupBy "
-            "(doc_id) reassembly via sort_array over per-doc structs "
-            "(never a corpus-wide window); zero Python",
-            p,
-            ["BroadcastHashJoin", "LeftAnti", "HashAggregate"],
-            ["ArrowEvalPython", "BatchEvalPython", "Window",
-             "CartesianProduct", "SortMergeJoin"],
-        )
-    )
-
-    p = plan_of(entrymod.q_redirects(spark, sf_dir))
-    checks.append(
-        (
-            "q_redirects — redirect resolution: groupBy-min next-hop map, "
-            "per-hop state⋈map equi-join (state = one row per redirecting "
-            "source, never per page), lineage truncated per hop; zero "
-            "Python, no window, no cartesian product",
-            p,
-            ["HashAggregate", "Join"],
-            ["ArrowEvalPython", "BatchEvalPython", "Window",
-             "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_quantized_topk(spark, sf_dir))
-    checks.append(
-        (
-            "q_quantized_topk — SQ8 ANN: quantization is a pure-codegen "
-            "projection (int8 payload = 4x less broadcast/shuffle bytes "
-            "than float32); pair scan = ONE BroadcastNestedLoopJoin "
-            "against the tiny quantized query side, per-query top-k via "
-            "partial WindowGroupLimit; zero Python",
-            p,
-            ["BroadcastNestedLoopJoin", "WindowGroupLimit"],
-            ["ArrowEvalPython", "BatchEvalPython", "SortMergeJoin"],
-        )
-    )
-
-    p = plan_of(entrymod.q_quantization_recall(spark, sf_dir))
-    checks.append(
-        (
-            "q_quantization_recall — the SQ8 release gate: both top-k "
-            "branches end in WindowGroupLimit before their shuffles, the "
-            "overlap is a broadcast equi-join of two k*|Q|-row sides, the "
-            "ppm an integral divide; zero Python, no cartesian residue "
-            "beyond the two bounded query-side broadcasts",
-            p,
-            ["WindowGroupLimit", "BroadcastHashJoin"],
-            ["ArrowEvalPython", "BatchEvalPython"],
-        )
-    )
-
-    p = plan_of(entrymod.q_url_survival(spark, sf_dir))
-    checks.append(
-        (
-            "q_url_survival — survival cohorts: ONE wide shuffle (the "
-            "per-url min birth groupBy, map-side partials), birth join "
-            "back on the same url key, tiny cohort aggregate joined "
-            "BROADCAST; zero Python, no window over the capture stream, "
-            "no full-table self cartesian",
-            p,
-            ["HashAggregate", "BroadcastHashJoin"],
-            ["ArrowEvalPython", "BatchEvalPython", "Window",
-             "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_sitemap_coverage(spark, sf_dir))
-    checks.append(
-        (
-            "q_sitemap_coverage — coverage audit: tag-union + ONE "
-            "groupBy(url) flag-merge (max partials before the exchange) "
-            "+ tiny host rollup — deliberately NOT a full-outer join "
-            "(which would shuffle both sides and re-shuffle the result); "
-            "zero Python, no join, no window",
-            p,
-            ["HashAggregate", "Union"],
-            ["ArrowEvalPython", "BatchEvalPython", "Window",
-             "CartesianProduct", "SortMergeJoin", "BroadcastHashJoin"],
-        )
-    )
-
-    p = plan_of(entrymod.q_reciprocity(spark, sf_dir))
-    checks.append(
-        (
-            "q_reciprocity — link-exchange signal: ONE distinct over the "
-            "edge pairs (map-side partials), ONE reversed-key self "
-            "equi-join, ONE groupBy(src) rollup with integral-divide ppm; "
-            "zero Python, no window, no cartesian product",
-            p,
-            ["HashAggregate", "Join"],
-            ["ArrowEvalPython", "BatchEvalPython", "Window",
-             "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_fuzzy_pairs(spark, sf_dir))
-    checks.append(
-        (
-            "q_fuzzy_pairs — blocked edit distance: ONE distinct keyed "
-            "projection, ONE self equi-join on the block key (AQE "
-            "skew-splits hot blocks), triangle filter before the "
-            "Levenshtein so each unordered pair scores once; zero "
-            "Python, no window, no cartesian product",
-            p,
-            ["HashAggregate", "Join"],
-            ["ArrowEvalPython", "BatchEvalPython", "Window",
-             "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_text_outlinks(spark, sf_dir))
-    checks.append(
-        (
-            "q_text_outlinks — plain-text url mining: ONE codegen "
-            "regexp_extract_all + transform-trim projection + explode; "
-            "zero shuffle, zero Python, no join, no window",
-            p,
-            ["Generate"],
-            ["ArrowEvalPython", "BatchEvalPython", "Window", "Exchange",
-             "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_mixture_plan(spark, sf_dir))
-    checks.append(
-        (
-            "q_mixture_plan — epoch planner: ONE partial-agg groupBy over "
-            "the corpus (#sources rows out), tiny full-outer join against "
-            "the literal weight frame, integral-divide projections; zero "
-            "Python, no window, nothing else touches the corpus",
-            p,
-            ["HashAggregate", "Join"],
-            ["ArrowEvalPython", "BatchEvalPython", "Window",
-             "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_reordered_dedup(spark, sf_dir))
-    checks.append(
-        (
-            "q_reordered_dedup — multiset dedup: tokenize + binary "
-            "array_sort + md5 is a pure-codegen projection (32-byte "
-            "shuffle key, the heavy strings never shuffle), then ONE "
-            "partial-agg groupBy; zero Python, no join, no window",
-            p,
-            ["HashAggregate", "Union"],
-            ["ArrowEvalPython", "BatchEvalPython", "Window",
-             "CartesianProduct", "SortMergeJoin"],
-        )
-    )
-
-    p = plan_of(entrymod.q_robots_audit(spark, sf_dir))
-    checks.append(
-        (
-            "q_robots_audit — compliance rollup: the robots_verdict host "
-            "equi-join (rules are host-bounded, never page-bounded — in "
-            "this synthesis the rules side derives from docs so the "
-            "planner cannot prove it small and falls back to SMJ; a real "
-            "robots corpus broadcasts under AQE, same as q_robots) feeds "
-            "ONE groupBy(host) with map-side partials and an "
-            "integral-divide ppm; zero Python, no cartesian product",
-            p,
-            ["HashAggregate", "Join"],
-            ["ArrowEvalPython", "BatchEvalPython", "CartesianProduct",
-             "BroadcastNestedLoopJoin"],
-        )
-    )
-
-    p = plan_of(entrymod.q_bowtie(spark, sf_dir, checkpoint=False,
-                              max_hops=3))
-    # hops=3 keeps the UNROLLED (checkpoint-free) plan within the
-    # audit JVM's optimizer budget; the per-hop plan shape is
-    # identical at any hop count, and production runs checkpoint
-    checks.append(
-        (
-            "q_bowtie — bowtie decomposition: two hop-bounded frontier "
-            "BFS passes (per hop: frontier⋈edges equi-join + partial-agg "
-            "distinct, lineage truncated — |frontier|×out-degree, never "
-            "|hosts|×|edges|) + ONE full-outer join of the two reach "
-            "sets; zero Python, no cartesian product",
-            p,
-            ["HashAggregate", "Join"],
-            ["ArrowEvalPython", "BatchEvalPython", "CartesianProduct",
-             "BroadcastNestedLoopJoin"],
-        )
-    )
-
-    p = plan_of(entrymod.q_mirrors(spark, sf_dir))
-    checks.append(
-        (
-            "q_mirrors — mirror detection: distinct (path, host) "
-            "postings, df-cap join dropping generic paths BEFORE the "
-            "posting self-join (fan-out ≤ cap² per path — the quadratic "
-            "term is bounded up front, same device as cocitation/"
-            "containment), pair groupBy with map-side partials, size "
-            "joins for the Jaccard; zero Python, no window, no "
-            "cartesian product",
-            p,
-            ["HashAggregate", "Join"],
-            ["ArrowEvalPython", "BatchEvalPython", "Window",
-             "CartesianProduct", "BroadcastNestedLoopJoin"],
-        )
-    )
-
-    p = plan_of(entrymod.q_term_blocklist(spark, sf_dir))
-    checks.append(
-        (
-            "q_term_blocklist — C4 bad-word gate: the term list rides "
-            "the plan as ONE array literal, tokenize + distinct + "
-            "intersect is a pure-codegen projection; zero shuffle, zero "
-            "Python, no join, no window",
-            p,
-            ["Project"],
-            ["ArrowEvalPython", "BatchEvalPython", "Exchange", "Window",
-             "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_dom_templates(spark, sf_dir))
-    checks.append(
-        (
-            "q_dom_templates — template clustering: the md5 structural "
-            "signature is a pure-codegen projection (shuffle key is 32 "
-            "bytes regardless of page size), then ONE groupBy(host, sig) "
-            "with map-side partial aggregation (SortAggregate here: "
-            "min(string) has no mutable hash buffer — the partial_* before "
-            "the exchange is the property that matters); zero Python, no "
-            "join, no window",
-            p,
-            ["partial_count(1)", "Exchange hashpartitioning(host", "*("],
-            ["ArrowEvalPython", "BatchEvalPython", "Join", "Window",
-             "CartesianProduct"],
-        )
-    )
-
-    p = plan_of(entrymod.q_url_templates(spark, sf_dir))
-    checks.append(
-        (
-            "q_url_templates — URL template mining: pure-codegen collapse "
-            "regexes + ONE groupBy(host, template) with map-side partial "
-            "aggregation (SortAggregate: min(string) buffer, partial_* "
-            "before the exchange); zero Python, no join, no window",
-            p,
-            ["partial_count(1)", "Exchange hashpartitioning(host", "*("],
-            ["ArrowEvalPython", "BatchEvalPython", "Join", "Window",
-             "CartesianProduct"],
-        )
-    )
+    n_arrow = len(re.findall(r"ArrowEvalPython \(\d+\)", p.split("== Initial Plan ==")[0]))
+    notes = violations(p, ["ArrowEvalPython", "Exchange"], [])
+    if n_arrow != 1:
+        notes.append(f"ArrowEvalPython stages: {n_arrow} (target: 1)")
+    # (name, plan, notes)
+    checks = [
+        ("extraction pipeline — ONE fused ArrowEvalPython stage, salted exchange", p, notes)
+    ]
+    for name, c in entrymod.contracts().items():
+        if c.plan is not None:
+            p = plan_of(c.fn(spark, sf_dir, **c.plan_kwargs))
+            checks.append((f"{name} — {c.plan}", p, violations(p, c.must, c.must_not)))
+    spark.stop()
 
     failures = []
     out = ["# Physical-plan audit (generated by tools/plan_audit.py)\n"]
@@ -1529,32 +91,23 @@ def main():
         "Checked properties: predicate pushdown reaches the parquet scan, "
         "column pruning (ReadSchema), broadcast joins for dimensions, "
         "whole-stage codegen spans, and a single fused ArrowEvalPython stage "
-        "for the parse pipeline.\n"
+        "for the parse pipeline.  Expression, plan, RDD and lambda-variable "
+        "ids are normalized to `N`.\n"
     )
-    for name, plan, must, must_not in checks:
-        ok = True
-        notes = []
-        for m in must:
-            if m not in plan:
-                ok = False
-                notes.append(f"MISSING: {m}")
-        for m in must_not:
-            if m in plan:
-                ok = False
-                notes.append(f"UNEXPECTED: {m}")
-        status = "OK" if ok else "FAIL"
+    for name, plan, notes in checks:
+        status = "FAIL" if notes else "OK"
         print(f"{status} {name}" + (f" — {notes}" if notes else ""))
-        if not ok:
+        if notes:
             failures.append(name)
         out.append(f"## {status}: {name}\n")
         if notes:
             out.append("\n".join(f"- {n}" for n in notes) + "\n")
-        out.append("```\n" + plan.strip()[:3500] + "\n```\n")
+        out.append("```\n" + normalize_ids(plan.strip())[:3500] + "\n```\n")
     out.append(f"\nArrowEvalPython stages in extraction plan: {n_arrow} (target: 1)\n")
     print(f"ArrowEvalPython stages in extraction plan: {n_arrow}")
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    print(f"{len(checks) - len(failures)}/{len(checks)} OK")
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
-    spark.stop()
     sys.exit(1 if failures else 0)
 
 

@@ -996,9 +996,10 @@ def q_ivf_topk(spark, sf_dir):
                             x -> abs(CAST(x AS DOUBLE)))) = 0
                       THEN list_transform(embedding, x -> 0.0)
                       ELSE list_transform(embedding,
-                             x -> floor(CAST(x AS DOUBLE) * 127.0 /
+                             x -> greatest(-127.0, least(127.0,
+                                  floor(CAST(x AS DOUBLE) * 127.0 /
                                   list_max(list_transform(embedding,
-                                    y -> abs(CAST(y AS DOUBLE))))))
+                                    y -> abs(CAST(y AS DOUBLE))))))))
                  END AS qvecd
           FROM embeddings
         ), n AS (
@@ -1069,9 +1070,10 @@ def q_quantized_topk(spark, sf_dir):
                             x -> abs(CAST(x AS DOUBLE)))) = 0
                       THEN list_transform(embedding, x -> 0.0)
                       ELSE list_transform(embedding,
-                             x -> floor(CAST(x AS DOUBLE) * 127.0 /
+                             x -> greatest(-127.0, least(127.0,
+                                  floor(CAST(x AS DOUBLE) * 127.0 /
                                   list_max(list_transform(embedding,
-                                    y -> abs(CAST(y AS DOUBLE))))))
+                                    y -> abs(CAST(y AS DOUBLE))))))))
                  END AS qvecd
           FROM embeddings
         ), n AS (
@@ -8887,7 +8889,7 @@ def q_url_survival(spark, sf_dir):
           SELECT url, max(_d) AS _d, max(_c) AS _c FROM tagged GROUP BY 1
         ), agg AS (
           SELECT lower(regexp_extract(url,
-                   '^[a-z][a-z0-9+.-]*://([^/?#]+)', 1)) AS host,
+                   '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)', 1)) AS host,
                  CAST(sum(_d) AS BIGINT) AS declared_n,
                  CAST(sum(_c) AS BIGINT) AS crawled_n,
                  CAST(sum(_d * _c) AS BIGINT) AS both_n
@@ -9453,7 +9455,7 @@ def q_mirrors(spark, sf_dir):
 @contract(
     oracle="""
         -- identical text rebuild, token-level match replay: lowercase,
-        -- split on non-alnum runs, distinct, intersect with the sorted
+        -- split on runs of non-letters/non-digits, distinct, intersect with the sorted
         -- term list, first hit for explainability.
         WITH src AS (
           SELECT doc_id,
@@ -9468,7 +9470,7 @@ def q_mirrors(spark, sf_dir):
                  list_sort(list_intersect(
                    list_distinct(list_filter(
                      regexp_split_to_array(lower(coalesce(text, '')),
-                                           '[^a-z0-9]+'),
+                                           '[^\\p{L}\\p{N}]+'),
                      x -> length(x) > 0)),
                    ['nastyterm', 'nastyterm2'])) AS h
           FROM src

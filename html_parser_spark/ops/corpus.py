@@ -1535,7 +1535,9 @@ def mixture_plan(
     with planned_tokens = target · weight div 10^6, epochs_ppm =
     planned · 10^6 div available (0-token sources report NULL epochs —
     a demanded-but-absent source is a loud row, not a crash), repeated =
-    epochs_ppm > 10^6.  All integer arithmetic.
+    epochs_ppm > 10^6.  All integer arithmetic; both products run in
+    decimal(38,0), since target · 10^6 passes BIGINT above ~9.2e12
+    target tokens (multi-trillion-token runs are the use case).
 
     Scale shape: ONE partial-agg groupBy over docs (#sources rows out),
     then a full-outer join against the tiny literal weight frame —
@@ -1554,12 +1556,19 @@ def mixture_plan(
         F.coalesce("n_tokens", F.lit(0)).cast("long").alias("n_tokens"),
         F.coalesce("weight_ppm", F.lit(0)).cast("long").alias("weight_ppm"),
     )
-    planned = F.expr(f"{int(target_total_tokens)}L * weight_ppm div 1000000")
+    dec = "decimal(38,0)"
+    planned = F.expr(
+        f"cast(cast({int(target_total_tokens)} as {dec}) * cast(weight_ppm as {dec})"
+        " div 1000000 as long)"
+    )
     return (
         joined.withColumn("planned_tokens", planned)
         .withColumn(
             "epochs_ppm",
-            F.expr("planned_tokens * 1000000 div nullif(n_tokens, 0)"),
+            F.expr(
+                f"cast(cast(planned_tokens as {dec}) * 1000000"
+                " div nullif(n_tokens, 0) as long)"
+            ),
         )
         .withColumn(
             "repeated",

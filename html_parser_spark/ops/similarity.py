@@ -620,9 +620,9 @@ def bitext_margin_mine(
 def quantize_embeddings(embeddings: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Symmetric per-vector int8 quantization: (vec_id, qvec, max_abs).
 
-    q_i = floor(x_i * 127.0 / max|x|) as INT in [-127, 127] (the max
-    element maps to exactly 127: (127*x)/x is an exact IEEE division).
-    All-zero vectors quantize to all-zero with max_abs = 0.  Pure codegen
+    q_i = floor(x_i * 127.0 / max|x|) as INT, clamped to [-127, 127]:
+    fl(fl(x*127)/max) can land one ulp past 127 in magnitude, and floor
+    would then give -128 for x = -max|x|.  All-zero vectors quantize to all-zero with max_abs = 0.  Pure codegen
     projection — no shuffle, no UDF; dequantization is q * max_abs/127,
     and cosine over dequantized vectors equals integer-dot cosine (the
     scales cancel), which is what quantized_topk exploits."""
@@ -631,7 +631,9 @@ def quantize_embeddings(embeddings: DataFrame, vec_col: str = "embedding") -> Da
     qvec = F.when(
         max_abs == F.lit(0.0), F.transform(v, lambda x: F.lit(0))
     ).otherwise(
-        F.transform(v, lambda x: F.floor(x * F.lit(127.0) / max_abs).cast("int"))
+        F.transform(v, lambda x: F.greatest(
+            F.lit(-127), F.least(F.lit(127), F.floor(x * F.lit(127.0) / max_abs).cast("int"))
+        ))
     )
     return embeddings.select(
         "vec_id", qvec.alias("qvec"), max_abs.alias("max_abs")

@@ -848,16 +848,29 @@ def term_blocklist_flags(
     gate-audit explainability.  Returns (doc_id, blocked, blocked_term
     '' when clean).
 
-    Matching is TOKEN-level: lowercase, split on non-alphanumeric runs —
-    so 'badWord.' matches 'badword' but 'embadwordded' does not (the
-    substring false-positive C4's word-boundary matching avoids).  The
-    term list rides the plan as ONE array literal (hundreds of terms —
-    C4's list is ~400 — cost nothing as codegen); for a 10^6-term
-    lexicon, switch to the explode + broadcast semi-join form instead of
-    growing the literal.  Pure projection: zero shuffle, zero Python."""
+    Matching is TOKEN-level: lowercase, split on runs of characters that
+    are neither Unicode letters nor digits (``[^\\p{L}\\p{N}]+`` — the same
+    pattern in Java regex and DuckDB's RE2, so Cyrillic terms match too)
+    — so 'badWord.' matches 'badword' but 'embadwordded' does not (the
+    substring false-positive C4's word-boundary matching avoids).  A term
+    that still contains a separator (a phrase, 'bad-word') could never
+    match one token, so it raises ValueError instead of being silently
+    ignored; an empty term list blocks nothing.  The term list rides the
+    plan as ONE array literal (hundreds of terms — C4's list is ~400 —
+    cost nothing as codegen); for a 10^6-term lexicon, switch to the
+    explode + broadcast semi-join form instead of growing the literal.
+    Pure projection: zero shuffle, zero Python."""
+    import unicodedata
+
     tl = sorted({t.lower() for t in terms})
+    for t in tl:
+        if any(unicodedata.category(c)[0] not in "LN" for c in t):
+            raise ValueError(
+                f"blocklist term {t!r} contains a separator and can never "
+                "match a single token"
+            )
     toks = F.filter(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"[^a-z0-9]+"),
+        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"[^\p{L}\p{N}]+"),
         lambda x: F.length(x) > 0,
     )
     hits = F.array_sort(F.array_intersect(F.array_distinct(toks), F.lit(tl)))

@@ -1034,7 +1034,7 @@ def sitemap_coverage(declared: DataFrame, crawled: DataFrame) -> DataFrame:
     ONE tiny groupBy(host) rolls up; at 10^12 urls that is a single wide
     shuffle on url (the join formulation shuffles both sides AND
     re-shuffles the joined rows for the host rollup)."""
-    host = F.lower(F.regexp_extract(F.col("url"), r"^[a-z][a-z0-9+.-]*://([^/?#]+)", 1))
+    host = F.lower(F.regexp_extract(F.col("url"), r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)", 1))
     tagged = declared.select(
         "url", F.lit(1).alias("_d"), F.lit(0).alias("_c")
     ).unionByName(crawled.select("url", F.lit(0).alias("_d"), F.lit(1).alias("_c")))
@@ -1078,8 +1078,8 @@ def mirror_candidates(
     self-join keyed on path with host_a < host_b, then Jaccard over the
     hosts' capped path sets in basis points.  Returns
     (host_a, host_b, shared_paths, jaccard_bp), shared ≥ ``min_shared``."""
-    host = F.lower(F.regexp_extract(F.col(url_col), r"^[a-z][a-z0-9+.-]*://([^/?#]+)", 1))
-    path = F.regexp_extract(F.col(url_col), r"^[a-z][a-z0-9+.-]*://[^/?#]+([^?#]*)", 1)
+    host = F.lower(F.regexp_extract(F.col(url_col), r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)", 1))
+    path = F.regexp_extract(F.col(url_col), r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]+([^?#]*)", 1)
     postings = (
         pages.select(host.alias("host"), path.alias("path"))
         .filter((F.col("host") != "") & (F.col("path") != ""))

@@ -48,3 +48,10 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def active_spark(app_name: str) -> SparkSession:
+    """The session a job runs in: the active one (spark-submit starts it
+    preconfigured), else a local one from :func:`get_spark`."""
+    spark = SparkSession.getActiveSession()
+    return spark if spark is not None else get_spark(app_name=app_name)

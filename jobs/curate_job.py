@@ -166,6 +166,56 @@ def curate_docs(
     return docs, funnel
 
 
+def c4_clean(docs):
+    """C4 line-level cleaning of (doc_id, text, lang), run before the
+    doc-level gates: lines failing the published rules are stripped (text
+    becomes clean_text) and pages failing the page rules drop here."""
+    from pyspark.sql import functions as F
+
+    from html_parser_spark.ops.text import c4_line_filter
+
+    cleaned = c4_line_filter(docs).where("page_keep").select(
+        "doc_id", F.col("clean_text").alias("text")
+    )
+    return docs.select("doc_id", "lang").join(cleaned, "doc_id").select(
+        "doc_id", "text", "lang"
+    )
+
+
+def packed_sequences(part, seq_len: int):
+    """The GPT concat-and-split export of one split's (doc_id, text): docs
+    and EOD slots laid end to end, cut every ``seq_len`` slots
+    (ops/corpus.pack_sequences + materialize_sequences)."""
+    from html_parser_spark.ops.corpus import (
+        materialize_sequences,
+        pack_sequences,
+    )
+
+    part = part.select("doc_id", "text")
+    return materialize_sequences(part, pack_sequences(part, seq_len=seq_len))
+
+
+def write_per_split(final, out_dir: str, splits, build) -> int:
+    """Write ``build(rows of one split)`` to ``<out_dir>/split=<name>`` for
+    each name in ``splits`` — per split, so train/valid/test never share
+    a row of the table.  Clears ``out_dir`` first: the per-split overwrite
+    only replaces splits present in THIS run, so a re-run whose split set
+    shrank would otherwise leave a stale split=<name> dir that
+    ``spark.read.parquet(out_dir)`` silently includes.  Returns the row
+    count read back (0 when ``splits`` is empty)."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    shutil.rmtree(out_dir, ignore_errors=True)
+    for name in splits:
+        # the split value comes from the partition directory on read
+        build(final.where(F.col("split") == name)).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(out_dir, f"split={name}"))
+    return final.sparkSession.read.parquet(out_dir).count() if splits else 0
+
+
 def main(argv=None):
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", help="documents parquet (doc_id, text, lang)")
@@ -246,15 +296,12 @@ def main(argv=None):
     if bool(args.docs) == bool(args.from_extract):
         ap.error("exactly one of --docs / --from-extract is required")
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
     from html_parser_spark.ops.corpus import chunk_plan
+    from html_parser_spark.spark.session import active_spark
 
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        from html_parser_spark.spark.session import get_spark
-
-        spark = get_spark(app_name="curate-job")
+    spark = active_spark("curate-job")
 
     n_captures = None
     if args.docs:
@@ -372,18 +419,8 @@ def main(argv=None):
         docs = docs.join(code_ids, "doc_id", "left_anti")
     n_before_c4 = None
     if args.c4_lines:
-        # C4 line-level cleaning BEFORE the doc-level gates: lines that
-        # fail the published rules are stripped (text becomes clean_text)
-        # and pages failing the page rules drop here
-        from html_parser_spark.ops.text import c4_line_filter
-
         n_before_c4 = docs.count()
-        cleaned = c4_line_filter(docs).where("page_keep").select(
-            "doc_id", F.col("clean_text").alias("text")
-        )
-        docs = docs.select("doc_id", "lang").join(cleaned, "doc_id").select(
-            "doc_id", "text", "lang"
-        )
+        docs = c4_clean(docs)
     docs, funnel = curate_docs(
         docs,
         min_tokens=args.min_tokens,
@@ -418,35 +455,13 @@ def main(argv=None):
         chunks.write.mode("overwrite").parquet(out_chunks)
         n_chunks = spark.read.parquet(out_chunks).count()
 
-    # 6. optional packed-sequence table: the GPT concat-and-split export
-    # (docs + EOD slots laid end-to-end per split, cut every L slots —
-    # ops/corpus.pack_sequences + materialize_sequences); packed per
-    # split so train/valid/test never share a sequence
+    # 6. optional packed-sequence table (packed_sequences, per split)
     n_sequences = 0
     if args.pack_seq_len > 0 and splits:
-        from html_parser_spark.ops.corpus import (
-            materialize_sequences,
-            pack_sequences,
+        n_sequences = write_per_split(
+            final, os.path.join(args.output, "sequences"), sorted(splits),
+            lambda part: packed_sequences(part, args.pack_seq_len),
         )
-
-        out_seqs = os.path.join(args.output, "sequences")
-        # clear the whole sequences dir first: the per-split overwrite
-        # only replaces splits present in THIS run, so a re-run whose
-        # split set shrank would otherwise leave a stale split=<name>
-        # dir that spark.read.parquet(out_seqs) silently includes
-        import shutil
-
-        shutil.rmtree(out_seqs, ignore_errors=True)
-        for split_name in sorted(splits):
-            part = final.where(F.col("split") == split_name).select(
-                "doc_id", "text"
-            )
-            plan = pack_sequences(part, seq_len=args.pack_seq_len)
-            # the split value comes from the partition directory on read
-            materialize_sequences(part, plan).write.mode("overwrite").parquet(
-                os.path.join(out_seqs, f"split={split_name}")
-            )
-        n_sequences = spark.read.parquet(out_seqs).count()
 
     # 6b. optional deterministic training-shuffle sidecar: the
     # reproducible ORDER BY rand() replacement (ops/sketch.
@@ -455,23 +470,15 @@ def main(argv=None):
     # shard; the shuffle order re-derives from the seed alone on resume
     n_shuffled = 0
     if args.shuffle_shards > 0 and splits:
-        import shutil
-
         from html_parser_spark.ops.sketch import corpus_shuffle
 
-        out_shuf = os.path.join(args.output, "shuffle")
-        # same stale-split sweep as the sequences table: a shrunken
-        # split set must not leave a previous run's split=<name> behind
-        shutil.rmtree(out_shuf, ignore_errors=True)
-        for split_name in sorted(splits):
-            part = final.where(F.col("split") == split_name).select("doc_id")
-            corpus_shuffle(
-                part, "doc_id", n_shards=args.shuffle_shards,
-                seed=args.shuffle_seed,
-            ).write.mode("overwrite").parquet(
-                os.path.join(out_shuf, f"split={split_name}")
-            )
-        n_shuffled = spark.read.parquet(out_shuf).count()
+        n_shuffled = write_per_split(
+            final, os.path.join(args.output, "shuffle"), sorted(splits),
+            lambda part: corpus_shuffle(
+                part.select("doc_id"), "doc_id",
+                n_shards=args.shuffle_shards, seed=args.shuffle_seed,
+            ),
+        )
 
     # 7. optional BPE tokenizer training on the TRAIN split only (never
     # valid/test — the tokenizer is part of the model): the corpus-scale

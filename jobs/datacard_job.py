@@ -179,9 +179,9 @@ def main(argv=None):
 
     from pyspark.sql import functions as F
 
-    from html_parser_spark.spark.session import get_spark
+    from html_parser_spark.spark.session import active_spark
 
-    spark = get_spark(app_name="datacard-job")
+    spark = active_spark("datacard-job")
     docs = spark.read.parquet(args.docs)
     rows, card = build_datacard(docs)
     os.makedirs(args.output, exist_ok=True)

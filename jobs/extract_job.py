@@ -160,39 +160,15 @@ def main(argv=None):
     with open(cfg_path, "w") as f:
         json.dump(resume_cfg, f)
 
-    from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
 
-    from html_parser_spark.spark.pipeline import extract_pages, quality_metrics
+    from html_parser_spark.sources import read_pages
+    from html_parser_spark.spark.session import active_spark
 
     # under spark-submit the session comes preconfigured; standalone runs get
     # the tuned local factory
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        from html_parser_spark.spark.session import get_spark
-
-        spark = get_spark(app_name="extract-job")
-
-    if args.pages.startswith("synth:"):
-        from html_parser_spark.data.pages import pages_df
-
-        pages = pages_df(spark, args.pages.split(":", 1)[1], include_fixtures=True)
-    elif args.pages.startswith("warc:"):
-        from pyspark.sql import functions as F
-
-        from html_parser_spark.sources.warc import read_warc
-
-        # crawl ingest: WARC scan (one task per archive, no shuffle) feeds
-        # the parse directly; lang is unknown at ingest (lang-ID is a
-        # downstream curation op)
-        pages = read_warc(spark, args.pages.split(":", 1)[1]).select(
-            "url",
-            "warc_ts",
-            "html",
-            "content_type",
-            F.lit(None).cast("string").alias("lang"),
-        )
-    else:
-        pages = spark.read.parquet(args.pages)
+    spark = active_spark("extract-job")
+    pages = read_pages(spark, args.pages, include_fixtures=True)
 
     n_cdx = None
     if args.cdx:
@@ -237,8 +213,6 @@ def main(argv=None):
 
     n_pub = None
     if args.pub_dates:
-        from pyspark.sql import functions as F
-
         from html_parser_spark.ops.web import publication_dates
 
         dated = publication_dates(pages)
@@ -248,104 +222,73 @@ def main(argv=None):
             dated.filter(F.col("pub_date").isNotNull()).count()
         )
 
-    if args.markdown:
-        from pyspark.sql import functions as F
-
-        from html_parser_spark.ops.markdown import to_markdown
-        from html_parser_spark.spark.pipeline import salted_repartition
-
-        def _md_transform(src):
-            src = src.select("url", "warc_ts", "html", "lang")
-            if args.partitions:
-                src = salted_repartition(src, args.partitions)
-            return to_markdown(
-                src, max_html_bytes=args.max_html_bytes or None
-            ).select(
-                "url", "warc_ts", "lang", "markdown", "md_chars", "n_blocks",
-                F.length("html").alias("n_bytes_in"),
-            )
-
-        if args.resume:
-            from html_parser_spark.spark.checkpoint import CheckpointedExtraction
-
-            ck = CheckpointedExtraction(spark, args.output)
-            ck.run(pages, transform=_md_transform)
-            out = ck.results()
-        else:
-            out = _md_transform(pages)
-            out.write.mode("overwrite").parquet(os.path.join(args.output, "data"))
-            out = spark.read.parquet(os.path.join(args.output, "data"))
-        n_wet = _write_wet_sidecar(out, "markdown", args.wet)
-        row = out.agg(
-            F.count("*").alias("docs"),
-            F.sum("n_blocks").alias("blocks"),
-            F.sum("n_bytes_in").alias("bytes_in"),
-            F.sum("md_chars").alias("md_chars"),
-        ).collect()[0]
-        print(json.dumps({
-            "job": "extract-markdown",
-            **{k: int(row[k] or 0) for k in
-               ("docs", "blocks", "bytes_in", "md_chars")},
-            **({"wet_parts": n_wet} if n_wet is not None else {}),
-            **({"cdx_shards": n_cdx} if n_cdx is not None else {}),
-            **({"pub_dated": n_pub} if n_pub is not None else {}),
-            **({"dedup_warc_parts": n_dedup_warc}
-               if n_dedup_warc is not None else {}),
-        }))
-        return
-
+    job, text_col, transform, sums = _mode(args)
+    out, ck_metrics = _extract(spark, pages, transform, args, job == "extract")
+    if job == "extract" and ck_metrics is not None:
+        counts = ck_metrics  # the dictionary checkpoint reports its chunk
+    else:
+        row = out.agg(*[e.alias(k) for k, e in sums.items()]).collect()[0]
+        counts = {k: row[k] for k in sums}
     if args.mixed:
-        from pyspark.sql import functions as F
+        mimes = {r["mime"]: r["count"] for r in out.groupBy("mime").count().collect()}
+        counts["mimes"] = {k: int(v) for k, v in sorted(mimes.items())}
+    n_wet = _write_wet_sidecar(out, text_col, args.wet)
+    # --text-links mines urls from plain text; markdown output has none
+    n_text_links = None if args.markdown else _write_text_links_sidecar(
+        out, text_col, args.text_links
+    )
+    sidecars = {
+        "wet_parts": n_wet, "text_links": n_text_links, "cdx_shards": n_cdx,
+        "pub_dated": n_pub, "dedup_warc_parts": n_dedup_warc,
+    }
+    print(json.dumps({
+        "job": job,
+        **{
+            k: (int(v) if isinstance(v, (int, float)) else (v if v is not None else 0))
+            for k, v in counts.items()
+        },
+        **{k: v for k, v in sidecars.items() if v is not None},
+    }))
 
+
+def _mode(args):
+    """The kernel mode the flags pick, as (job name, text column, transform
+    pages → results, report sums {name: aggregate over the results})."""
+    from pyspark.sql import functions as F
+
+    from html_parser_spark.spark.pipeline import extract_pages, salted_repartition
+
+    max_html_bytes = args.max_html_bytes or None
+
+    def prepared(src):
+        src = src.select("url", "warc_ts", "html", "lang")
+        return salted_repartition(src, args.partitions) if args.partitions else src
+
+    n_bytes_in = F.length("html").alias("n_bytes_in")
+    if args.markdown:
+        from html_parser_spark.ops.markdown import to_markdown
+
+        return "extract-markdown", "markdown", lambda src: to_markdown(
+            prepared(src), max_html_bytes=max_html_bytes
+        ).select(
+            "url", "warc_ts", "lang", "markdown", "md_chars", "n_blocks",
+            n_bytes_in,
+        ), {
+            "docs": F.count("*"), "blocks": F.sum("n_blocks"),
+            "bytes_in": F.sum("n_bytes_in"), "md_chars": F.sum("md_chars"),
+        }
+    if args.mixed:
         from html_parser_spark.ops.mime import extract_any
 
-        def _mx_transform(src):
-            return extract_any(
-                src,
-                num_partitions=args.partitions or None,
-                max_html_bytes=args.max_html_bytes or None,
-            )
-
-        if args.resume:
-            from html_parser_spark.spark.checkpoint import CheckpointedExtraction
-
-            ck = CheckpointedExtraction(spark, args.output)
-            ck.run(pages, transform=_mx_transform)
-            out = ck.results()
-        else:
-            out = _mx_transform(pages)
-            out.write.mode("overwrite").parquet(os.path.join(args.output, "data"))
-            out = spark.read.parquet(os.path.join(args.output, "data"))
-        n_wet = _write_wet_sidecar(out, "extracted_text", args.wet)
-        n_text_links = _write_text_links_sidecar(
-            out, "extracted_text", args.text_links
-        )
-        mimes = {
-            r["mime"]: r["count"]
-            for r in out.groupBy("mime").count().collect()
+        return "extract-mixed", "extracted_text", lambda src: extract_any(
+            src,
+            num_partitions=args.partitions or None,
+            max_html_bytes=max_html_bytes,
+        ), {
+            "docs": F.count("*"), "bytes_in": F.sum("n_bytes_in"),
+            "text_chars": F.sum(F.length("extracted_text")),
         }
-        row = out.agg(
-            F.count("*").alias("docs"),
-            F.sum("n_bytes_in").alias("bytes_in"),
-            F.sum(F.length("extracted_text")).alias("text_chars"),
-        ).collect()[0]
-        print(json.dumps({
-            "job": "extract-mixed",
-            **{k: int(row[k] or 0) for k in ("docs", "bytes_in", "text_chars")},
-            "mimes": {k: int(v) for k, v in sorted(mimes.items())},
-            **({"wet_parts": n_wet} if n_wet is not None else {}),
-            **({"text_links": n_text_links}
-               if n_text_links is not None else {}),
-            **({"cdx_shards": n_cdx} if n_cdx is not None else {}),
-            **({"pub_dated": n_pub} if n_pub is not None else {}),
-            **({"dedup_warc_parts": n_dedup_warc}
-               if n_dedup_warc is not None else {}),
-        }))
-        return
-
     if args.main_content:
-        from pyspark.sql import functions as F
-
         # the FUSED kernel (ops/page_kernel): one parse yields the
         # boilerplate-stripped text AND the page metadata, so the output
         # can carry the page's <link rel=canonical> for canonical-group
@@ -353,122 +296,70 @@ def main(argv=None):
         # parse cost (main_text is field-for-field identical to
         # extract_main_content — pinned by the kernel differential test)
         from html_parser_spark.ops.page_kernel import extract_page_full
-        from html_parser_spark.spark.pipeline import salted_repartition
 
-        def _mc_transform(src):
-            src = src.select("url", "warc_ts", "html", "lang")
-            if args.partitions:
-                src = salted_repartition(src, args.partitions)
-            return extract_page_full(
-                src, max_html_bytes=args.max_html_bytes or None
-            ).select(
-                "url", "warc_ts", "lang", "main_text", "n_blocks",
-                "n_content_blocks", "content_chars", "boiler_chars",
-                "canonical",
-                F.length("html").alias("n_bytes_in"),
-            )
+        return "extract-main-content", "main_text", lambda src: extract_page_full(
+            prepared(src), max_html_bytes=max_html_bytes
+        ).select(
+            "url", "warc_ts", "lang", "main_text", "n_blocks",
+            "n_content_blocks", "content_chars", "boiler_chars", "canonical",
+            n_bytes_in,
+        ), {
+            "docs": F.count("*"), "content_blocks": F.sum("n_content_blocks"),
+            "bytes_in": F.sum("n_bytes_in"),
+            "content_chars": F.sum("content_chars"),
+        }
 
-        if args.resume:
-            from html_parser_spark.spark.checkpoint import CheckpointedExtraction
-
-            # same chunked checkpoint + per-partition lineage contract as
-            # the dictionary path, with the boilerplate kernel swapped in
-            ck = CheckpointedExtraction(spark, args.output)
-            ck.run(pages, transform=_mc_transform)
-            out = ck.results()
-        else:
-            out = _mc_transform(pages)
-            out.write.mode("overwrite").parquet(os.path.join(args.output, "data"))
-            out = spark.read.parquet(os.path.join(args.output, "data"))
-        n_wet = _write_wet_sidecar(out, "main_text", args.wet)
-        n_text_links = _write_text_links_sidecar(
-            out, "main_text", args.text_links
-        )
-        row = out.agg(
-            F.count("*").alias("docs"),
-            F.sum("n_content_blocks").alias("content_blocks"),
-            F.sum("n_bytes_in").alias("bytes_in"),
-            F.sum("content_chars").alias("content_chars"),
-        ).collect()[0]
-        print(json.dumps({
-            "job": "extract-main-content",
-            **{k: int(row[k] or 0) for k in
-               ("docs", "content_blocks", "bytes_in", "content_chars")},
-            **({"wet_parts": n_wet} if n_wet is not None else {}),
-            **({"text_links": n_text_links}
-               if n_text_links is not None else {}),
-            **({"cdx_shards": n_cdx} if n_cdx is not None else {}),
-            **({"pub_dated": n_pub} if n_pub is not None else {}),
-            **({"dedup_warc_parts": n_dedup_warc}
-               if n_dedup_warc is not None else {}),
-        }))
-        return
-
-    if args.resume:
-        from html_parser_spark.spark.checkpoint import (
-            CheckpointedExtraction,
-            IcebergCheckpointedExtraction,
-            iceberg_available,
-        )
-
-        # prefer the transactional MERGE INTO path when an Iceberg runtime is
-        # on the classpath AND --output names a DOT-QUALIFIED catalog table
-        # (cat.db.tbl / db.tbl) — a bare relative dir like "results" has no
-        # slash either and must stay on the parquet path even with jars
-        # present; the parquet analog (same semantics, tested here) otherwise
-        if (
-            iceberg_available(spark)
-            and "/" not in args.output
-            and "." in args.output
-        ):
-            ck = IcebergCheckpointedExtraction(spark, args.output)
-            metrics = ck.run(
-                pages,
-                num_partitions=args.partitions,
-                max_html_bytes=args.max_html_bytes or None,
-            )
-            results = spark.table(args.output)
-        else:
-            ck = CheckpointedExtraction(spark, args.output)
-            metrics = ck.run(
-                pages,
-                num_partitions=args.partitions,
-                max_html_bytes=args.max_html_bytes or None,
-            )
-            results = ck.results()
-    else:
+    def dictionary(src):
         results = extract_pages(
+            src, num_partitions=args.partitions, max_html_bytes=max_html_bytes
+        )
+        # the checkpointed (--resume) paths store the parse output only
+        if args.migrate and not args.resume:
+            from html_parser_spark.spark.dictionary import migrate_results
+
+            results = migrate_results(results)
+        return results
+
+    return "extract", "extracted_text", dictionary, {
+        "docs": F.count("*"), "entries": F.sum("n_entries"),
+        "bytes_in": F.sum("n_bytes_in"),
+        "errors": F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)),
+    }
+
+
+def _extract(spark, pages, transform, args, dictionary: bool):
+    """The one resume-or-write path: ``--resume`` runs ``transform``
+    through the chunked checkpoint in --output (anti-join of done urls;
+    the dictionary kernel prefers Iceberg MERGE INTO when a runtime is on
+    the classpath AND --output names a DOT-QUALIFIED catalog table —
+    cat.db.tbl / db.tbl, never a bare relative dir); otherwise one
+    overwrite of <output>/data.  Returns (results read back, checkpoint
+    metrics or None)."""
+    if not args.resume:
+        data = os.path.join(args.output, "data")
+        transform(pages).write.mode("overwrite").parquet(data)
+        return spark.read.parquet(data), None
+    from html_parser_spark.spark.checkpoint import (
+        CheckpointedExtraction,
+        IcebergCheckpointedExtraction,
+        iceberg_available,
+    )
+
+    if (
+        dictionary
+        and iceberg_available(spark)
+        and "/" not in args.output
+        and "." in args.output
+    ):
+        metrics = IcebergCheckpointedExtraction(spark, args.output).run(
             pages,
             num_partitions=args.partitions,
             max_html_bytes=args.max_html_bytes or None,
         )
-        if args.migrate:
-            from html_parser_spark.spark.dictionary import migrate_results
-
-            results = migrate_results(results)
-        results.write.mode("overwrite").parquet(os.path.join(args.output, "data"))
-        results = spark.read.parquet(os.path.join(args.output, "data"))
-        row = quality_metrics(results).collect()[0]
-        metrics = {k: row[k] for k in ("docs", "entries", "bytes_in", "errors")}
-
-    n_wet = _write_wet_sidecar(results, "extracted_text", args.wet)
-    n_text_links = _write_text_links_sidecar(
-        results, "extracted_text", args.text_links
-    )
-    print(json.dumps({
-        "job": "extract",
-        **{
-            k: (int(v) if isinstance(v, (int, float)) else (v if v is not None else 0))
-            for k, v in metrics.items()
-        },
-        **({"wet_parts": n_wet} if n_wet is not None else {}),
-        **({"text_links": n_text_links}
-           if n_text_links is not None else {}),
-        **({"cdx_shards": n_cdx} if n_cdx is not None else {}),
-        **({"pub_dated": n_pub} if n_pub is not None else {}),
-        **({"dedup_warc_parts": n_dedup_warc}
-           if n_dedup_warc is not None else {}),
-    }))
+        return spark.table(args.output), metrics
+    ck = CheckpointedExtraction(spark, args.output)
+    metrics = ck.run(pages, transform=transform)
+    return ck.results(), metrics
 
 
 def _publish_cdx_index(spark, pages, args):
@@ -479,14 +370,11 @@ def _publish_cdx_index(spark, pages, args):
     exist).  Returns the shard count."""
     from pyspark.sql import functions as F
 
+    from html_parser_spark.sources import read_pages
     from html_parser_spark.sources.cdx import write_cdxj_files
 
-    if args.pages.startswith("warc:"):
-        from html_parser_spark.sources.warc import read_warc
-
-        recs = read_warc(
-            spark, args.pages.split(":", 1)[1], with_offsets=True
-        ).where(F.col("warc_type") == "response")
+    recs = read_pages(spark, args.pages, True, warc_extents=True)
+    if recs is not None:
         idx = recs.select(
             "url",
             "warc_ts",
@@ -544,9 +432,7 @@ def _write_text_links_sidecar(results, text_col: str, out_dir: str):
         id_col="url",
     )
     links.write.mode("overwrite").parquet(out_dir)
-    from pyspark.sql import SparkSession
-
-    return int(SparkSession.getActiveSession().read.parquet(out_dir).count())
+    return int(results.sparkSession.read.parquet(out_dir).count())
 
 
 if __name__ == "__main__":

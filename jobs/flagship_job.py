@@ -28,19 +28,21 @@ Stage DAG (each stage's scale shape documented at its op):
   curate ──────────────▶ CHUNKS   context-window chunk plan (optional)
                                                           → <out>/curate/chunks
 
-Cross-stage resume: every completed stage writes a ``_STAGE_DONE.json``
-marker carrying a CONTENT fingerprint of its input (row count + xor of
-per-row xxhash64 over the key columns) PLUS the stage's own options; a
-re-run skips a stage iff its marker exists AND the fingerprint still
-matches (so adding, replacing, or re-crawling pages — or changing a
-stage flag like --c4-lines or --chunk-tokens — invalidates the affected
-stages automatically, while a same-input same-config re-run recomputes
-nothing).  The extract stage is
-additionally resumable WITHIN the stage through the chunked checkpoint.
-Every stage also appends one row to ``<out>/_stage_lineage`` —
-(stage, action ran/skipped, input_fingerprint, rows_out, wall_sec) — on
-top of the extract stage's own per-partition lineage, so the whole DAG's
-history is queryable.
+Cross-stage resume: one stage runner (:func:`run_stages`) skips or runs
+every stage.  A completed stage writes a ``_STAGE_DONE.json`` marker
+carrying a CONTENT fingerprint of its input (row count + xor of per-row
+xxhash64 over the key columns) PLUS the stage's own options, and the
+counts its report entry shows; a re-run skips a stage iff its marker
+exists AND the fingerprint still matches (so adding, replacing, or
+re-crawling pages — or changing a stage flag like --c4-lines or
+--chunk-tokens — invalidates the affected stages automatically, while a
+same-input same-config re-run recomputes nothing), and the skipped stage
+reports the stored counts.  The extract stage is additionally resumable
+WITHIN the stage through the chunked checkpoint.  Every stage also
+appends one row to ``<out>/_stage_lineage`` — (stage, action
+ran/skipped, input_fingerprint, rows_out, wall_sec) — on top of the
+extract stage's own per-partition lineage, so the whole DAG's history is
+queryable.
 
 ``--stop-after`` ends the run at a stage boundary (the test harness uses
 it to simulate a kill between stages).  Emits ONE JSON line of combined
@@ -58,6 +60,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 STAGES = ("extract", "graph", "curate", "chunks")
+# run order: the sequences stage is no --stop-after choice and runs last
+_ORDER = STAGES + ("sequences",)
 
 
 def _marker_path(stage_dir: str) -> str:
@@ -81,12 +85,28 @@ def _fingerprint(df, *cols) -> tuple[int, str]:
     return int(row["n"]), f"{row['n']}:{row['x']}"
 
 
-def _stage_done(stage_dir: str, fingerprint: str) -> bool:
+def _with_cfg(fp: str, *pairs) -> str:
+    """A stage marker must bind to BOTH the input content and the options
+    that shape the stage's output — otherwise rerunning with a changed
+    flag (e.g. adding --c4-lines) would silently skip recomputation.
+    Config rides inside the fingerprint string; same-config reruns still
+    match."""
+    return fp + "|cfg:" + ",".join(f"{k}={v}" for k, v in pairs)
+
+
+def _stored_counts(stage_dir: str, fingerprint: str, rows_key: str):
+    """The counts a completed stage's marker stored, or None when the
+    stage must run: no marker, another fingerprint, or a marker from
+    before markers stored the stage's counts (re-run once —
+    conservative)."""
     try:
         with open(_marker_path(stage_dir)) as f:
-            return json.load(f).get("input_fingerprint") == fingerprint
+            marker = json.load(f)
     except (OSError, ValueError):
-        return False
+        return None
+    if marker.pop("input_fingerprint", None) != fingerprint:
+        return None
+    return marker if rows_key in marker else None
 
 
 def _write_marker(stage_dir: str, fingerprint: str, **metrics) -> None:
@@ -106,6 +126,273 @@ def _append_stage_lineage(spark, out_dir, stage, action, fingerprint,
     ).coalesce(1).write.mode("append").parquet(
         os.path.join(out_dir, "_stage_lineage")
     )
+
+
+def run_stages(spark, args, pages, report: dict, stages) -> None:
+    """The stage runner — the one place a stage is skipped or run.  For
+    each (name, stage_dir, fingerprint, rows_key, compute) of ``stages``:
+    when the stage's marker holds the input ``fingerprint()`` the stage
+    is skipped and reports the counts the marker stored; otherwise
+    ``compute(fp)`` returns (counts, run-only report entries) and the
+    marker stores the counts.  Either way the stage's report entry is
+    filled and one ``_stage_lineage`` row appended, with rows_out =
+    counts[rows_key].  ``--stop-after`` ends the run at its stage
+    boundary (also when that stage is switched off), and the persisted
+    pages are released on every path."""
+    last = _ORDER.index(args.stop_after) if args.stop_after else len(_ORDER)
+    try:
+        for name, stage_dir, fingerprint, rows_key, compute in stages:
+            if _ORDER.index(name) > last:
+                break
+            fp = fingerprint()
+            t0 = time.time()
+            counts = _stored_counts(stage_dir, fp, rows_key)
+            if counts is not None:
+                action, extra = "skipped", {}
+            else:
+                action, (counts, extra) = "ran", compute(fp)
+                _write_marker(stage_dir, fp, **counts)
+            report["stages"][name] = {"action": action, **counts, **extra}
+            _append_stage_lineage(spark, args.output, name, action, fp,
+                                  counts[rows_key], time.time() - t0)
+    finally:
+        pages.unpersist()
+
+
+def _stages(spark, args, pages, fp_pages):
+    """The stage DAG in run order, as :func:`run_stages` tuples.  A
+    generator: a stage reads what the stage before it wrote, so that
+    stage has to have run (or been skipped) before the next is built."""
+    ex_dir = os.path.join(args.output, "extract")
+    yield (
+        "extract", ex_dir,
+        lambda: _with_cfg(fp_pages, ("partitions", args.partitions),
+                          ("max_html_bytes", args.max_html_bytes)),
+        "docs", lambda fp: _extract(spark, args, pages, ex_dir, fp),
+    )
+    results = spark.read.parquet(os.path.join(ex_dir, "data"))
+    g_dir = os.path.join(args.output, "graph")
+    yield (
+        "graph", g_dir,
+        lambda: _with_cfg(fp_pages, ("iterations", args.iterations),
+                          ("budget_pages", args.budget_pages)),
+        "hosts", lambda fp: _graph(args, results, g_dir),
+    )
+    cu_dir = os.path.join(args.output, "curate")
+    out_docs = os.path.join(cu_dir, "docs")
+    final = None
+
+    def curate(fp):
+        nonlocal final
+        counts, final = _curate(args, results, out_docs)
+        return counts, {}
+
+    yield (
+        "curate", cu_dir,
+        lambda: _with_cfg(
+            _fingerprint(results, "url", "warc_ts")[1],
+            ("min_tokens", args.min_tokens), ("gopher", args.gopher),
+            ("span", args.span_dedup_tokens), ("pii", args.scrub_pii),
+            ("hashes", args.num_hashes), ("bands", args.bands),
+            ("hld", args.host_line_dedup), ("hld_pct", args.host_line_pct),
+            ("c4", args.c4_lines),
+        ),
+        "docs", curate,
+    )
+    # a fresh curate run knows its schema, which a zero-doc output cannot
+    # carry
+    if final is None:
+        final = spark.read.parquet(out_docs)
+    if args.chunk_tokens > 0:
+        from html_parser_spark.ops.corpus import chunk_plan
+
+        def chunks(fp):
+            out_chunks = os.path.join(cu_dir, "chunks")
+            chunk_plan(final, chunk_tokens=args.chunk_tokens).write.mode(
+                "overwrite"
+            ).parquet(out_chunks)
+            return {"chunks": spark.read.parquet(out_chunks).count()}, {}
+
+        yield (
+            "chunks", os.path.join(cu_dir, "chunks_stage"),
+            lambda: _with_cfg(_fingerprint(final, "doc_id")[1],
+                              ("chunk_tokens", args.chunk_tokens)),
+            "chunks", chunks,
+        )
+    if args.pack_seq_len > 0:
+        from jobs.curate_job import packed_sequences, write_per_split
+
+        def sequences(fp):
+            split_names = sorted(
+                r["split"] for r in final.select("split").distinct().collect()
+            )
+            return {"sequences": write_per_split(
+                final, os.path.join(cu_dir, "sequences"), split_names,
+                lambda part: packed_sequences(part, args.pack_seq_len),
+            )}, {}
+
+        yield (
+            "sequences", os.path.join(cu_dir, "sequences_stage"),
+            lambda: _with_cfg(_fingerprint(final, "doc_id")[1],
+                              ("pack_seq_len", args.pack_seq_len)),
+            "sequences", sequences,
+        )
+
+
+def _extract(spark, args, pages, ex_dir, fp):
+    """EXTRACT: the chunk-resumable fused-kernel strip of ``pages``."""
+    from pyspark.sql import functions as F
+
+    from html_parser_spark.ops.page_kernel import extract_page_full
+    from html_parser_spark.spark.checkpoint import CheckpointedExtraction
+    from html_parser_spark.spark.pipeline import salted_repartition
+
+    def _mc(src):
+        src = src.select("url", "warc_ts", "html", "lang")
+        if args.partitions:
+            src = salted_repartition(src, args.partitions)
+        # FUSED kernel: one parse per page feeds the main-content walk
+        # AND the metadata walk — outlinks materialize here so the
+        # graph stage never re-parses, and robots feeds the curate
+        # stage's noindex gate
+        return extract_page_full(
+            src, max_html_bytes=args.max_html_bytes or None
+        ).select(
+            "url", "warc_ts", "lang", "main_text", "n_blocks",
+            "n_content_blocks", "content_chars", "boiler_chars",
+            "outlinks", "robots",
+            F.length("html").alias("n_bytes_in"),
+        )
+
+    # The chunked checkpoint resumes by anti-joining done urls — the
+    # right behavior when the INPUT grew (only new pages re-extract),
+    # but wrong when the stage CONFIG changed (done rows carry the
+    # old config's output).  Split the mismatch: same config ->
+    # incremental resume; changed config -> clear and redo fully.
+    # The config is pinned at stage START (_STAGE_CONFIG.json written
+    # before the first chunk): a run killed mid-extract leaves chunks
+    # but no completion marker, and a changed --partitions /
+    # --max-html-bytes re-run must still wipe those chunks instead of
+    # anti-join-mixing rows from two configs.  The completion marker
+    # is the fallback for dirs created before this scheme.
+    cfg_path = os.path.join(ex_dir, "_STAGE_CONFIG.json")
+    new_cfg = fp.split("|cfg:")[-1]
+    old_cfg = ""
+    try:
+        with open(cfg_path) as _f:
+            old_cfg = json.load(_f).get("cfg", "")
+    except (OSError, ValueError):
+        try:
+            with open(_marker_path(ex_dir)) as _f:
+                _old_fp = json.load(_f).get("input_fingerprint", "")
+            old_cfg = _old_fp.split("|cfg:")[-1] if _old_fp else ""
+        except (OSError, ValueError):
+            old_cfg = ""
+    if old_cfg and old_cfg != new_cfg:
+        import shutil
+
+        shutil.rmtree(ex_dir, ignore_errors=True)
+    os.makedirs(ex_dir, exist_ok=True)
+    with open(cfg_path + ".tmp", "w") as _f:
+        json.dump({"cfg": new_cfg}, _f)
+    os.replace(cfg_path + ".tmp", cfg_path)
+    ck = CheckpointedExtraction(spark, ex_dir)
+    m = ck.run(pages, transform=_mc)
+    return (
+        {"docs": ck.results().count()},
+        {"docs_new": m["docs"], "chunk": m["chunk"]},
+    )
+
+
+def _graph(args, results, g_dir):
+    """GRAPH: host link graph / PageRank / crawl budget over the outlinks
+    the fused extract kernel materialized — no second parse of any
+    page."""
+    from html_parser_spark.ops.linkgraph import host_edges
+    from jobs.graph_job import rank_hosts
+
+    edges, ranks = rank_hosts(
+        host_edges(results.select("url", "outlinks")), g_dir,
+        iterations=args.iterations, budget_pages=args.budget_pages,
+    )
+    return {"hosts": ranks.count(), "edges": edges.count()}, {}
+
+
+def _curate(args, results, out_docs):
+    """CURATE: extract output → training-ready docs.  Returns (counts,
+    the written docs read back)."""
+    from pyspark.sql import functions as F
+
+    from html_parser_spark.ops.html_meta import noindex_filter
+    from html_parser_spark.ops.web import canonicalize_url, latest_capture
+    from jobs.curate_job import c4_clean, curate_docs
+
+    # honor page-level REP before training-data curation: a page whose
+    # meta robots says noindex is excluded the same way robots.txt-
+    # disallowed pages never entered the pipeline
+    res = (
+        noindex_filter(results)
+        .where(F.col("main_text").isNotNull())
+        .select(
+            canonicalize_url("url").alias("url"),
+            "warc_ts",
+            F.col("main_text").alias("extracted_text"),
+            "lang",
+        )
+    )
+    res = latest_capture(res)
+    n_host_lines = None
+    if args.host_line_dedup:
+        from pyspark import StorageLevel
+
+        from html_parser_spark.ops.corpus import host_line_dedup
+
+        # url is unique after latest_capture, so it is the line-dedup
+        # doc id; host comes straight off it.  Persist before the two
+        # consumers (metric agg + join) so the three-shuffle dedup
+        # plan runs once
+        hosted = res.withColumn(
+            "_host", F.parse_url(F.col("url"), F.lit("HOST"))
+        )
+        hld = host_line_dedup(
+            hosted, host_col="_host", id_col="url",
+            text_col="extracted_text",
+            min_pages=2, pct_pages=args.host_line_pct,
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        n_host_lines = int(
+            hld.agg(F.sum("n_lines_removed")).collect()[0][0] or 0
+        )
+        res = res.drop("extracted_text").join(
+            hld.select(
+                F.col("doc_id").alias("url"),
+                F.col("clean_text").alias("extracted_text"),
+            ),
+            "url",
+        )
+    docs = res.select(
+        F.xxhash64("url").alias("doc_id"),
+        F.col("extracted_text").alias("text"),
+        "lang",
+    )
+    if args.c4_lines:
+        # same placement as curate_job --c4-lines
+        docs = c4_clean(docs)
+    curated, funnel = curate_docs(
+        docs,
+        min_tokens=args.min_tokens,
+        gopher=args.gopher,
+        span_dedup_tokens=args.span_dedup_tokens,
+        scrub_pii=args.scrub_pii,
+        num_hashes=args.num_hashes,
+        bands=args.bands,
+    )
+    curated.write.mode("overwrite").partitionBy("split").parquet(out_docs)
+    final = results.sparkSession.read.schema(curated.schema).parquet(out_docs)
+    return {
+        **funnel, "docs": final.count(),
+        **({"host_lines_removed": n_host_lines}
+           if n_host_lines is not None else {}),
+    }, final
 
 
 def main(argv=None):
@@ -145,31 +432,15 @@ def main(argv=None):
     ap.add_argument("--limit", type=int, default=0)
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark import StorageLevel
 
-    from html_parser_spark.ops.page_kernel import extract_page_full
-    from html_parser_spark.spark.checkpoint import CheckpointedExtraction
-    from html_parser_spark.spark.pipeline import salted_repartition
+    from html_parser_spark.sources import read_pages
+    from html_parser_spark.spark.session import active_spark
 
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        from html_parser_spark.spark.session import get_spark
-
-        spark = get_spark(app_name="flagship-job")
+    spark = active_spark("flagship-job")
 
     # ---- source + politeness gate (shared by extract and graph) -----------
-    if args.pages.startswith("synth:"):
-        from html_parser_spark.data.pages import pages_df
-
-        pages = pages_df(spark, args.pages.split(":", 1)[1], include_fixtures=True)
-    elif args.pages.startswith("warc:"):
-        from html_parser_spark.sources.warc import read_warc
-
-        pages = read_warc(spark, args.pages.split(":", 1)[1]).select(
-            "url", "warc_ts", "html", F.lit(None).cast("string").alias("lang")
-        )
-    else:
-        pages = spark.read.parquet(args.pages)
+    pages = read_pages(spark, args.pages, include_fixtures=True)
     if args.limit:
         # deterministic subset: a bare limit() without an order can pick a
         # different subset per run/partitioning, silently desynchronizing
@@ -187,324 +458,14 @@ def main(argv=None):
         pages = robots_filter(
             pages, parse_robots(robots), groups=robots_groups(robots)
         )
-    pages = pages.select("url", "warc_ts", "html", "lang")
-    from pyspark import StorageLevel
-
     # both extract and graph consume the gated pages; persist so a WARC
     # source is inflated (and robots evaluated) once, not per stage
-    pages = pages.persist(StorageLevel.MEMORY_AND_DISK)
-    n_pages, fp_pages = _fingerprint(pages, "url", "warc_ts")
-
-    # A stage marker must bind to BOTH the input content and the options
-    # that shape the stage's output — otherwise rerunning with a changed
-    # flag (e.g. adding --c4-lines) would silently skip recomputation.
-    # Config rides inside the fingerprint string; same-config reruns
-    # still match, and markers written before this scheme simply re-run
-    # once (conservative).
-    def _with_cfg(fp: str, *pairs) -> str:
-        return fp + "|cfg:" + ",".join(f"{k}={v}" for k, v in pairs)
-
-    fp_ex = _with_cfg(fp_pages, ("partitions", args.partitions),
-                      ("max_html_bytes", args.max_html_bytes))
-    fp_g = _with_cfg(fp_pages, ("iterations", args.iterations),
-                     ("budget_pages", args.budget_pages))
-
-    report: dict = {"job": "flagship", "pages_in": n_pages,
-                    "stages": {}}
-
-    def finish(stage: str) -> bool:
-        return args.stop_after == stage
-
-    # ---- stage 1: EXTRACT (chunk-resumable main-content strip) ------------
-    ex_dir = os.path.join(args.output, "extract")
-    t0 = time.time()
-    if _stage_done(ex_dir, fp_ex):
-        results = spark.read.parquet(os.path.join(ex_dir, "data"))
-        report["stages"]["extract"] = {
-            "action": "skipped", "docs": results.count()}
-        _append_stage_lineage(spark, args.output, "extract", "skipped",
-                             fp_ex, report["stages"]["extract"]["docs"],
-                             time.time() - t0)
-    else:
-        def _mc(src):
-            src = src.select("url", "warc_ts", "html", "lang")
-            if args.partitions:
-                src = salted_repartition(src, args.partitions)
-            # FUSED kernel: one parse per page feeds the main-content walk
-            # AND the metadata walk — outlinks materialize here so the
-            # graph stage never re-parses, and robots feeds the curate
-            # stage's noindex gate
-            return extract_page_full(
-                src, max_html_bytes=args.max_html_bytes or None
-            ).select(
-                "url", "warc_ts", "lang", "main_text", "n_blocks",
-                "n_content_blocks", "content_chars", "boiler_chars",
-                "outlinks", "robots",
-                F.length("html").alias("n_bytes_in"),
-            )
-
-        # The chunked checkpoint resumes by anti-joining done urls — the
-        # right behavior when the INPUT grew (only new pages re-extract),
-        # but wrong when the stage CONFIG changed (done rows carry the
-        # old config's output).  Split the mismatch: same config ->
-        # incremental resume; changed config -> clear and redo fully.
-        # The config is pinned at stage START (_STAGE_CONFIG.json written
-        # before the first chunk): a run killed mid-extract leaves chunks
-        # but no completion marker, and a changed --partitions /
-        # --max-html-bytes re-run must still wipe those chunks instead of
-        # anti-join-mixing rows from two configs.  The completion marker
-        # is the fallback for dirs created before this scheme.
-        cfg_path = os.path.join(ex_dir, "_STAGE_CONFIG.json")
-        new_cfg = fp_ex.split("|cfg:")[-1]
-        old_cfg = ""
-        try:
-            with open(cfg_path) as _f:
-                old_cfg = json.load(_f).get("cfg", "")
-        except (OSError, ValueError):
-            try:
-                with open(_marker_path(ex_dir)) as _f:
-                    _old_fp = json.load(_f).get("input_fingerprint", "")
-                old_cfg = _old_fp.split("|cfg:")[-1] if _old_fp else ""
-            except (OSError, ValueError):
-                old_cfg = ""
-        if old_cfg and old_cfg != new_cfg:
-            import shutil
-
-            shutil.rmtree(ex_dir, ignore_errors=True)
-        os.makedirs(ex_dir, exist_ok=True)
-        with open(cfg_path + ".tmp", "w") as _f:
-            json.dump({"cfg": new_cfg}, _f)
-        os.replace(cfg_path + ".tmp", cfg_path)
-        ck = CheckpointedExtraction(spark, ex_dir)
-        m = ck.run(pages, transform=_mc)
-        results = ck.results()
-        n_res = results.count()
-        _write_marker(ex_dir, fp_ex, docs=n_res)
-        report["stages"]["extract"] = {
-            "action": "ran", "docs": n_res, "docs_new": m["docs"],
-            "chunk": m["chunk"]}
-        _append_stage_lineage(spark, args.output, "extract", "ran",
-                             fp_ex, n_res, time.time() - t0)
-    if finish("extract"):
-        print(json.dumps(report))
-        return
-
-    # ---- stage 2: GRAPH (host link graph / PageRank / crawl budget) -------
-    g_dir = os.path.join(args.output, "graph")
-    t0 = time.time()
-    if _stage_done(g_dir, fp_g):
-        report["stages"]["graph"] = {"action": "skipped"}
-        _append_stage_lineage(spark, args.output, "graph", "skipped",
-                             fp_g, 0, time.time() - t0)
-    else:
-        from html_parser_spark.ops.linkgraph import (
-            crawl_budget,
-            host_edges,
-            host_graph_stats,
-            pagerank_fixed_point,
-        )
-
-        # outlinks were materialized by the fused extract kernel — the
-        # graph stage is pure relational work over the extract output,
-        # no second parse of any page
-        meta = results.select("url", "outlinks")
-        edges = host_edges(meta)
-        edges.write.mode("overwrite").parquet(os.path.join(g_dir, "edges"))
-        edges = spark.read.parquet(os.path.join(g_dir, "edges"))
-        ranks = pagerank_fixed_point(edges, iterations=args.iterations)
-        stats = host_graph_stats(edges)
-        out = ranks.join(stats, "node", "left")
-        if args.budget_pages > 0:
-            out = crawl_budget(out, args.budget_pages)
-        out.write.mode("overwrite").parquet(os.path.join(g_dir, "ranks"))
-        n_hosts = spark.read.parquet(os.path.join(g_dir, "ranks")).count()
-        _write_marker(g_dir, fp_g, hosts=n_hosts)
-        report["stages"]["graph"] = {
-            "action": "ran", "hosts": n_hosts, "edges": edges.count()}
-        _append_stage_lineage(spark, args.output, "graph", "ran",
-                             fp_g, n_hosts, time.time() - t0)
-    if finish("graph"):
-        print(json.dumps(report))
-        return
-
-    # ---- stage 3: CURATE (extract output → training-ready docs) -----------
-    from jobs.curate_job import curate_docs
-
-    from html_parser_spark.ops.web import canonicalize_url, latest_capture
-
-    n_extracted, fp_extract = _fingerprint(results, "url", "warc_ts")
-    fp_cu = _with_cfg(
-        fp_extract,
-        ("min_tokens", args.min_tokens), ("gopher", args.gopher),
-        ("span", args.span_dedup_tokens), ("pii", args.scrub_pii),
-        ("hashes", args.num_hashes), ("bands", args.bands),
-        ("hld", args.host_line_dedup), ("hld_pct", args.host_line_pct),
-        ("c4", args.c4_lines),
+    pages = pages.select("url", "warc_ts", "html", "lang").persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    cu_dir = os.path.join(args.output, "curate")
-    out_docs = os.path.join(cu_dir, "docs")
-    t0 = time.time()
-    if _stage_done(cu_dir, fp_cu):
-        final = spark.read.parquet(out_docs)
-        report["stages"]["curate"] = {
-            "action": "skipped", "docs": final.count()}
-        _append_stage_lineage(spark, args.output, "curate", "skipped",
-                             fp_cu, report["stages"]["curate"]["docs"],
-                             time.time() - t0)
-    else:
-        from html_parser_spark.ops.html_meta import noindex_filter
-
-        # honor page-level REP before training-data curation: a page whose
-        # meta robots says noindex is excluded the same way robots.txt-
-        # disallowed pages never entered the pipeline
-        res = (
-            noindex_filter(results)
-            .where(F.col("main_text").isNotNull())
-            .select(
-                canonicalize_url("url").alias("url"),
-                "warc_ts",
-                F.col("main_text").alias("extracted_text"),
-                "lang",
-            )
-        )
-        res = latest_capture(res)
-        n_host_lines = None
-        if args.host_line_dedup:
-            from pyspark import StorageLevel as _SL
-
-            from html_parser_spark.ops.corpus import host_line_dedup
-
-            # url is unique after latest_capture, so it is the line-dedup
-            # doc id; host comes straight off it.  Persist before the two
-            # consumers (metric agg + join) so the three-shuffle dedup
-            # plan runs once
-            hosted = res.withColumn(
-                "_host", F.parse_url(F.col("url"), F.lit("HOST"))
-            )
-            hld = host_line_dedup(
-                hosted, host_col="_host", id_col="url",
-                text_col="extracted_text",
-                min_pages=2, pct_pages=args.host_line_pct,
-            ).persist(_SL.MEMORY_AND_DISK)
-            n_host_lines = int(
-                hld.agg(F.sum("n_lines_removed")).collect()[0][0] or 0
-            )
-            res = res.drop("extracted_text").join(
-                hld.select(
-                    F.col("doc_id").alias("url"),
-                    F.col("clean_text").alias("extracted_text"),
-                ),
-                "url",
-            )
-        docs = res.select(
-            F.xxhash64("url").alias("doc_id"),
-            F.col("extracted_text").alias("text"),
-            "lang",
-        )
-        if args.c4_lines:
-            # C4 line-level cleaning before the doc-level gates (same
-            # placement as curate_job --c4-lines)
-            from html_parser_spark.ops.text import c4_line_filter
-
-            cleaned = c4_line_filter(docs).where("page_keep").select(
-                "doc_id", F.col("clean_text").alias("text")
-            )
-            docs = docs.select("doc_id", "lang").join(cleaned, "doc_id").select(
-                "doc_id", "text", "lang"
-            )
-        curated, funnel = curate_docs(
-            docs,
-            min_tokens=args.min_tokens,
-            gopher=args.gopher,
-            span_dedup_tokens=args.span_dedup_tokens,
-            scrub_pii=args.scrub_pii,
-            num_hashes=args.num_hashes,
-            bands=args.bands,
-        )
-        curated.write.mode("overwrite").partitionBy("split").parquet(out_docs)
-        final = spark.read.schema(curated.schema).parquet(out_docs)
-        n_final = final.count()
-        _write_marker(cu_dir, fp_cu, **funnel)
-        report["stages"]["curate"] = {
-            "action": "ran", **funnel, "docs": n_final,
-            **({"host_lines_removed": n_host_lines}
-               if n_host_lines is not None else {}),
-        }
-        _append_stage_lineage(spark, args.output, "curate", "ran",
-                             fp_cu, n_final, time.time() - t0)
-    if finish("curate"):
-        print(json.dumps(report))
-        return
-
-    # ---- stage 4: CHUNKS (optional context-window plan) --------------------
-    if args.chunk_tokens > 0:
-        from html_parser_spark.ops.corpus import chunk_plan
-
-        n_docs_final, fp_final = _fingerprint(final, "doc_id")
-        fp_ch = _with_cfg(fp_final, ("chunk_tokens", args.chunk_tokens))
-        ch_dir = os.path.join(cu_dir, "chunks_stage")
-        out_chunks = os.path.join(cu_dir, "chunks")
-        t0 = time.time()
-        if _stage_done(ch_dir, fp_ch):
-            n_chunks = spark.read.parquet(out_chunks).count()
-            action = "skipped"
-        else:
-            chunks = chunk_plan(final, chunk_tokens=args.chunk_tokens)
-            chunks.write.mode("overwrite").parquet(out_chunks)
-            n_chunks = spark.read.parquet(out_chunks).count()
-            _write_marker(ch_dir, fp_ch, chunks=n_chunks)
-            action = "ran"
-        report["stages"]["chunks"] = {"action": action, "chunks": n_chunks}
-        _append_stage_lineage(spark, args.output, "chunks", action,
-                             fp_ch, n_chunks, time.time() - t0)
-
-    # ---- stage 5: SEQUENCES (optional packed training export) --------------
-    if args.pack_seq_len > 0:
-        from html_parser_spark.ops.corpus import (
-            materialize_sequences,
-            pack_sequences,
-        )
-
-        n_docs_final, fp_final = _fingerprint(final, "doc_id")
-        fp_sq = _with_cfg(fp_final, ("pack_seq_len", args.pack_seq_len))
-        sq_dir = os.path.join(cu_dir, "sequences_stage")
-        out_seqs = os.path.join(cu_dir, "sequences")
-        t0 = time.time()
-        split_names = sorted(
-            r["split"] for r in final.select("split").distinct().collect()
-        )
-        if _stage_done(sq_dir, fp_sq):
-            n_seqs = (
-                spark.read.parquet(out_seqs).count()
-                if os.path.isdir(out_seqs)
-                else 0
-            )
-            action = "skipped"
-        else:
-            # clear first: the per-split overwrite only replaces splits
-            # present in THIS run; a rerun whose split set shrank must not
-            # leave a stale split=<name> dir in the read path
-            import shutil
-
-            shutil.rmtree(out_seqs, ignore_errors=True)
-            for split_name in split_names:
-                part = final.where(F.col("split") == split_name).select(
-                    "doc_id", "text"
-                )
-                plan = pack_sequences(part, seq_len=args.pack_seq_len)
-                materialize_sequences(part, plan).write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(out_seqs, f"split={split_name}"))
-            n_seqs = (
-                spark.read.parquet(out_seqs).count() if split_names else 0
-            )
-            _write_marker(sq_dir, fp_sq, sequences=n_seqs)
-            action = "ran"
-        report["stages"]["sequences"] = {"action": action, "sequences": n_seqs}
-        _append_stage_lineage(spark, args.output, "sequences", action,
-                             fp_sq, n_seqs, time.time() - t0)
-
-    pages.unpersist()
+    n_pages, fp_pages = _fingerprint(pages, "url", "warc_ts")
+    report: dict = {"job": "flagship", "pages_in": n_pages, "stages": {}}
+    run_stages(spark, args, pages, report, _stages(spark, args, pages, fp_pages))
     print(json.dumps(report))
 
 

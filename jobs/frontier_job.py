@@ -61,27 +61,18 @@ def main(argv=None):
     ap.add_argument("--bloom-hashes", type=int, default=5)
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
     from html_parser_spark.ops.bloom import bloom_build, bloom_probe
     from html_parser_spark.ops.web import host_blocklist_filter, url_parts
+    from html_parser_spark.sources import read_pages
+    from html_parser_spark.spark.session import active_spark
 
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        from html_parser_spark.spark.session import get_spark
+    spark = active_spark("frontier-job")
 
-        spark = get_spark(app_name="frontier-job")
-
-    if args.captures.startswith("warc:"):
-        from html_parser_spark.sources.warc import read_warc
-
-        captures = read_warc(spark, args.captures.split(":", 1)[1]).select(
-            "url", "warc_ts", F.col("html").alias("body")
-        )
-    else:
-        cap = spark.read.parquet(args.captures)
-        body = "body" if "body" in cap.columns else "html"
-        captures = cap.select("url", "warc_ts", F.col(body).alias("body"))
+    cap = read_pages(spark, args.captures, include_fixtures=False)
+    body = "body" if "body" in cap.columns else "html"
+    captures = cap.select("url", "warc_ts", F.col(body).alias("body"))
 
     seen_urls = captures.select("url").distinct()
     cands = spark.read.parquet(args.candidates).select("url").distinct()

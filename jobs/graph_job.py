@@ -30,6 +30,33 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def rank_hosts(edges, out_dir, *, iterations, budget_pages=0, joins=()):
+    """The ranking core of this job and of the flagship graph stage:
+    host edges → ``<out_dir>/edges`` (written, then read back so every
+    consumer scans the file, not the edge plan) → integer PageRank ⋈
+    host stats [⋈ each of ``joins`` (edges → per-node columns), in
+    order] [→ crawl budget when ``budget_pages`` > 0] →
+    ``<out_dir>/ranks``.  Returns (edges, ranks), both read back."""
+    from html_parser_spark.ops.linkgraph import (
+        crawl_budget,
+        host_graph_stats,
+        pagerank_fixed_point,
+    )
+
+    spark = edges.sparkSession
+    edges.write.mode("overwrite").parquet(os.path.join(out_dir, "edges"))
+    edges = spark.read.parquet(os.path.join(out_dir, "edges"))
+    out = pagerank_fixed_point(edges, iterations=iterations).join(
+        host_graph_stats(edges), "node", "left"
+    )
+    for join in joins:
+        out = out.join(join(edges), "node", "left")
+    if budget_pages > 0:
+        out = crawl_budget(out, budget_pages)
+    out.write.mode("overwrite").parquet(os.path.join(out_dir, "ranks"))
+    return edges, spark.read.parquet(os.path.join(out_dir, "ranks"))
+
+
 def main(argv=None):
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", required=True,
@@ -70,33 +97,16 @@ def main(argv=None):
     ap.add_argument("--limit", type=int, default=0)
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
     from html_parser_spark.ops.html_meta import extract_page_meta
-    from html_parser_spark.ops.linkgraph import (
-        crawl_budget,
-        host_edges,
-        host_graph_stats,
-        pagerank_fixed_point,
-    )
+    from html_parser_spark.ops.linkgraph import host_edges
+    from html_parser_spark.sources import read_pages
     from html_parser_spark.spark.pipeline import salted_repartition
+    from html_parser_spark.spark.session import active_spark
 
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        from html_parser_spark.spark.session import get_spark
-
-        spark = get_spark(app_name="graph-job")
-
-    if args.pages.startswith("synth:"):
-        from html_parser_spark.data.pages import pages_df
-
-        pages = pages_df(spark, args.pages.split(":", 1)[1], include_fixtures=False)
-    elif args.pages.startswith("warc:"):
-        from html_parser_spark.sources.warc import read_warc
-
-        pages = read_warc(spark, args.pages.split(":", 1)[1])
-    else:
-        pages = spark.read.parquet(args.pages)
+    spark = active_spark("graph-job")
+    pages = read_pages(spark, args.pages, include_fixtures=False)
     if args.limit:
         pages = pages.limit(args.limit)
     pages = pages.select("url", "html")
@@ -119,32 +129,20 @@ def main(argv=None):
             .groupBy("src", "dst")
             .agg(F.sum("weight").cast("long").alias("weight"))
         )
-    edges.write.mode("overwrite").parquet(os.path.join(args.output, "edges"))
-    edges = spark.read.parquet(os.path.join(args.output, "edges"))
 
-    ranks = pagerank_fixed_point(edges, iterations=args.iterations)
-    stats = host_graph_stats(edges)
-    out = ranks.join(stats, "node", "left")
+    joins = []
     if args.hits:
         from html_parser_spark.ops.linkgraph import hits_fixed_point
 
-        out = out.join(
-            hits_fixed_point(edges, iterations=args.iterations), "node", "left"
-        )
+        joins.append(lambda e: hits_fixed_point(e, iterations=args.iterations))
     if args.communities:
         from html_parser_spark.ops.linkgraph import label_propagation
 
-        out = out.join(
-            label_propagation(edges, iterations=args.iterations), "node", "left"
-        )
+        joins.append(lambda e: label_propagation(e, iterations=args.iterations))
     if args.reciprocity:
         from html_parser_spark.ops.linkgraph import reciprocity
 
-        out = out.join(
-            reciprocity(edges).withColumnRenamed("host", "node"),
-            "node",
-            "left",
-        )
+        joins.append(lambda e: reciprocity(e).withColumnRenamed("host", "node"))
     if args.trustrank or args.seed_depth > 0:
         if not args.seeds:
             raise SystemExit("--trustrank/--seed-depth require --seeds")
@@ -155,26 +153,19 @@ def main(argv=None):
         if args.trustrank:
             from html_parser_spark.ops.linkgraph import trustrank_fixed_point
 
-            out = out.join(
-                trustrank_fixed_point(
-                    edges, seeds, iterations=args.iterations
-                ).withColumnRenamed("rank", "trust"),
-                "node",
-                "left",
-            )
+            joins.append(lambda e: trustrank_fixed_point(
+                e, seeds, iterations=args.iterations
+            ).withColumnRenamed("rank", "trust"))
         if args.seed_depth > 0:
             from html_parser_spark.ops.linkgraph import seed_distance
 
-            out = out.join(
-                seed_distance(edges, seeds, max_hops=args.seed_depth)
-                .withColumnRenamed("dist", "seed_dist"),
-                "node",
-                "left",
-            )
-    if args.budget_pages > 0:
-        out = crawl_budget(out, args.budget_pages)
-    out.write.mode("overwrite").parquet(os.path.join(args.output, "ranks"))
-    out = spark.read.parquet(os.path.join(args.output, "ranks"))
+            joins.append(lambda e: seed_distance(
+                e, seeds, max_hops=args.seed_depth
+            ).withColumnRenamed("dist", "seed_dist"))
+    edges, out = rank_hosts(
+        edges, args.output, iterations=args.iterations,
+        budget_pages=args.budget_pages, joins=joins,
+    )
 
     top = out.orderBy(F.desc("rank")).first()
     agg = edges.agg(

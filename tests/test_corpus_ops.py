@@ -1048,3 +1048,21 @@ def test_mixture_plan_epochs_and_repeat_flag(spark):
     assert (code["weight_ppm"], code["planned_tokens"], code["epochs_ppm"]) == (
         0, 0, 0,
     )
+
+
+def test_mixture_plan_multi_trillion_target_no_overflow(spark):
+    """target · weight_ppm passes BIGINT above ~9.2e12 target tokens; the
+    plan must still equal exact integer arithmetic."""
+    from html_parser_spark.ops.corpus import mixture_plan
+
+    target = 10**13
+    avail = {"web": 3 * 10**12, "books": 7 * 10**9}
+    weights = {"web": 950000, "books": 50000}
+    docs = spark.createDataFrame(list(avail.items()), "lang string, n_tokens long")
+    out = {r["source"]: r for r in mixture_plan(docs, weights, target).collect()}
+    for src, w in weights.items():
+        planned = target * w // 10**6
+        epochs = planned * 10**6 // avail[src]
+        assert out[src]["planned_tokens"] == planned
+        assert out[src]["epochs_ppm"] == epochs
+        assert out[src]["repeated"] is (epochs > 10**6)

@@ -34,7 +34,28 @@ def _run(spark, tmp_path, capsys, out_name, extra=()):
     return out, json.loads(capsys.readouterr().out.strip().splitlines()[-1])
 
 
+def _write_linked_pages(spark, path):
+    """The 30 synthetic pages of ``_run``, each also linking to one of
+    three other hosts, so the graph stage has hosts to rank."""
+    from html_parser_spark.data.pages import synthetic_pages_df
+
+    link = F.concat(
+        F.lit('<body><p><a href="https://ref'),
+        (F.crc32("url") % 3).cast("string"),
+        F.lit('.example/">ref</a></p>'),
+    )
+    synthetic_pages_df(spark, SF_DIR, paragraphs=1).limit(30).select(
+        "url", "warc_ts",
+        F.to_binary(
+            F.regexp_replace(F.decode("html", "UTF-8"), F.lit("<body>"), link),
+            F.lit("utf8"),
+        ).alias("html"),
+        "lang",
+    ).write.parquet(path)
+
+
 def test_cross_stage_resume_after_kill(spark, tmp_path, capsys):
+    _write_linked_pages(spark, str(tmp_path / "pages"))
     # uninterrupted reference run
     ref_out, ref = _run(spark, tmp_path, capsys, "ref")
     assert ref["stages"]["extract"]["action"] == "ran"
@@ -82,6 +103,11 @@ def test_cross_stage_resume_after_kill(spark, tmp_path, capsys):
     assert ("extract", "ran") in acts and ("extract", "skipped") in acts
     assert ("curate", "ran") in acts
     assert acts[("extract", "ran")]["rows_out"] == 30
+    # a skipped stage logs (and reports) the counts its marker stored
+    assert acts[("graph", "ran")]["rows_out"] > 0
+    assert acts[("graph", "skipped")]["rows_out"] == acts[("graph", "ran")]["rows_out"]
+    assert again["stages"]["graph"]["hosts"] == resumed["stages"]["graph"]["hosts"]
+    assert again["stages"]["curate"]["docs"] == resumed["stages"]["curate"]["docs"]
 
 
 def test_source_growth_invalidates_downstream(spark, tmp_path, capsys):
@@ -178,6 +204,18 @@ def test_sequences_stage_runs_and_resumes(spark, tmp_path, capsys):
     )
     assert rep2["stages"]["sequences"]["action"] == "skipped"
     assert rep2["stages"]["sequences"]["sequences"] == st["sequences"]
+
+
+def test_stop_after_chunks_skips_sequences(spark, tmp_path, capsys):
+    """--stop-after chunks ends the run at the chunks boundary: the
+    sequences stage after it neither writes nor reports."""
+    out, rep = _run(
+        spark, tmp_path, capsys, "flag-stop",
+        extra=("--pack-seq-len", "32", "--stop-after", "chunks"),
+    )
+    assert rep["stages"]["chunks"]["action"] == "ran"
+    assert "sequences" not in rep["stages"]
+    assert not os.path.exists(os.path.join(out, "curate", "sequences"))
 
 
 def test_changed_stage_option_invalidates_marker(spark, tmp_path, capsys):

@@ -4,6 +4,7 @@ q_bitext_mine) does the cross-engine value-hash check; these tests pin the
 hand-checkable semantics and the scale-shape invariants.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 TOTAL = 10**12
@@ -343,6 +344,23 @@ def test_quantize_embeddings_values(spark):
     assert all(-127 <= v <= 127 for r in rows.values() for v in r["qvec"])
 
 
+def test_quantize_clamps_to_int8_range(spark):
+    """fl(fl(x*127)/max) lands one ulp past -127 for this double, so an
+    unclamped floor gives -128 for the max-magnitude element."""
+    import math
+
+    from html_parser_spark.ops.similarity import quantize_embeddings
+
+    m = 90.14284433369075
+    assert math.floor(-m * 127.0 / m) == -128  # the IEEE double case itself
+    vecs = spark.createDataFrame(
+        [(0, [-m, 1.0]), (1, [m, -1.0])], "vec_id long, embedding array<double>"
+    )
+    q = {r["vec_id"]: r["qvec"] for r in quantize_embeddings(vecs).collect()}
+    assert q[0] == [-127, 1]
+    assert all(-127 <= v <= 127 for v in q[1])
+
+
 def test_quantized_topk_ranks_by_integer_cosine(spark):
     from html_parser_spark.ops.similarity import quantized_topk
 
@@ -574,3 +592,39 @@ def test_term_blocklist_first_hit_deterministic(spark):
     r = term_blocklist_flags(docs, ["zzz", "aaa"]).collect()[0]
     # sorted intersection: the lexicographically first hit, not list order
     assert r["blocked_term"] == "aaa"
+
+
+def test_term_blocklist_empty_list_blocks_nothing(spark):
+    from html_parser_spark.ops.text import term_blocklist_flags
+
+    docs = spark.createDataFrame(
+        [(1, "anything at all"), (2, None)], "doc_id long, text string"
+    )
+    rows = term_blocklist_flags(docs, []).collect()
+    assert sorted((r["doc_id"], r["blocked"], r["blocked_term"]) for r in rows) == [
+        (1, False, ""), (2, False, ""),
+    ]
+
+
+def test_term_blocklist_matches_cyrillic_terms(spark):
+    from html_parser_spark.ops.text import term_blocklist_flags
+
+    docs = spark.createDataFrame(
+        [(1, "Это ПЛОХОЕ слово."), (2, "это хорошее слово"),
+         (3, "неплохоеслово в одну строку")],
+        "doc_id long, text string",
+    )
+    rows = {r["doc_id"]: r for r in
+            term_blocklist_flags(docs, ["плохое"]).collect()}
+    assert rows[1]["blocked"] is True and rows[1]["blocked_term"] == "плохое"
+    assert rows[2]["blocked"] is False
+    assert rows[3]["blocked"] is False        # substring must NOT match
+
+
+@pytest.mark.parametrize("term", ["two words", "bad-word", "a.b"])
+def test_term_blocklist_rejects_terms_with_separators(spark, term):
+    from html_parser_spark.ops.text import term_blocklist_flags
+
+    docs = spark.createDataFrame([(1, "x")], "doc_id long, text string")
+    with pytest.raises(ValueError, match=repr(term)):
+        term_blocklist_flags(docs, ["fine", term])

@@ -754,6 +754,17 @@ def test_sitemap_coverage_dedups_within_each_side(spark):
     assert (a["declared_n"], a["crawled_n"], a["both_n"]) == (1, 1, 1)
 
 
+def test_sitemap_coverage_uppercase_scheme(spark):
+    from html_parser_spark.ops.web import sitemap_coverage
+
+    declared = spark.createDataFrame([("HTTPS://Example.com/a",)], "url string")
+    crawled = spark.createDataFrame([("Http://example.com/b",)], "url string")
+    rows = {r["host"]: r for r in sitemap_coverage(declared, crawled).collect()}
+    # schemes are case-insensitive (RFC 3986): no bogus empty-host row
+    assert set(rows) == {"example.com"}
+    assert (rows["example.com"]["declared_n"], rows["example.com"]["crawled_n"]) == (1, 1)
+
+
 def test_extract_job_text_links_sidecar(spark, tmp_path, capsys):
     """--text-links mines urls cited in the EXTRACTED text into a
     (url, out_url) parquet sidecar and the report counts the links."""
@@ -824,3 +835,17 @@ def test_mirror_candidates_duplicate_urls_counted_once(spark):
     r = mirror_candidates(pages, df_cap=10, min_shared=2).collect()[0]
     # repeat captures of the same url don't inflate the path sets
     assert (r["shared_paths"], r["jaccard_bp"]) == (2, 10000)
+
+
+def test_mirror_candidates_uppercase_scheme(spark):
+    from html_parser_spark.ops.web import mirror_candidates
+
+    pages = spark.createDataFrame(
+        [("HTTPS://Example.com/a",), ("https://mirror.org/a",),
+         ("Http://example.com/b",), ("https://mirror.org/b",)],
+        "url string",
+    )
+    r = mirror_candidates(pages, df_cap=10, min_shared=2).collect()
+    assert [(x["host_a"], x["host_b"], x["shared_paths"]) for x in r] == [
+        ("example.com", "mirror.org", 2)
+    ]

@@ -20,7 +20,7 @@ deterministically over this repo's from-scratch DOM:
 
 ``main_text`` is the kept blocks joined by ``\\n``.
 
-Scale: one Arrow-batched pandas UDF per page — the same cost shape as the
+Scale: one Arrow UDF per page — the same cost shape as the
 extraction kernel itself (this IS a parse-the-page op; there is no
 JVM-expression shortcut that understands DOM ancestry).  It composes with
 ``extract_pages``'s salted repartition and oversized-page guard, and its

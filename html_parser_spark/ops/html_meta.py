@@ -8,7 +8,7 @@ against the page url.  Outlinks feed the host-level link graph
 (ops/linkgraph.py) and canonical urls feed the url-dedup tier
 (ops/web.py canonicalization / latest-capture).
 
-Scale shape: ONE Arrow-batched pandas UDF over (url, html) — per-page
+Scale shape: ONE Arrow UDF over (url, html) — per-page
 pure map, zero shuffle; composes with ``salted_repartition`` exactly like
 the extraction kernel.  Everything downstream of the UDF (host
 aggregation, graph building) is JVM-side.

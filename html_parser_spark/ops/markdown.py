@@ -33,7 +33,7 @@ reconstruct the expected markdown symbolically, and pinned by unit tests:
 * markdown metacharacters in source text are NOT escaped — the output is
   a deterministic function of the input text, and the oracle mirrors it.
 
-Scale shape: ONE Arrow-batched pandas UDF over html (pure per-page map,
+Scale shape: ONE Arrow UDF over html (pure per-page map,
 zero shuffle) — the same plan as the main-content and metadata kernels.
 Every walker below uses an EXPLICIT stack (the dom.py discipline): a
 pathological crawl page must not blow the interpreter recursion limit

@@ -18,8 +18,9 @@ from __future__ import annotations
 
 from typing import Callable
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 ENTRY_TYPE = T.StructType(
     [
@@ -94,17 +95,20 @@ def kernel_stage(
     returns a dict keyed by the field names.  NULL html reaches ``fn`` as
     ``b""`` and NULL url as ``""``.
 
-    ONE Arrow-batched pandas UDF returning a struct (one ArrowEvalPython
-    node, no per-row Python at the Spark API level, no shuffle), whose
-    fields are expanded next to the input columns.  ``max_html_bytes``
+    ONE Arrow UDF returning a struct (one ArrowEvalPython node, no
+    shuffle): each batch's columns reach Python as lists and the rows go
+    back as one struct array, with no pandas in between.  Its fields are
+    expanded next to the input columns.  ``max_html_bytes``
     routes larger pages around it (:func:`route_oversized`); they get
     :func:`oversized_rows` with ``fill``."""
     names = schema.fieldNames()
+    row_type = to_arrow_type(schema)
 
-    @F.pandas_udf(schema)
-    def kernel(html: pd.Series, *url: pd.Series) -> pd.DataFrame:
-        rows = list(map(fn, [b if b is not None else b"" for b in html], *url))
-        return pd.DataFrame({n: [r[n] for r in rows] for n in names}, copy=False)
+    @F.arrow_udf(schema)
+    def kernel(html: pa.Array, *url: pa.Array) -> pa.Array:
+        pages = [b if b is not None else b"" for b in html.to_pylist()]
+        rows = map(fn, pages, *(u.to_pylist() for u in url))
+        return pa.array(list(rows), type=row_type)
 
     args = [F.col(html_col)]
     if url_col is not None:

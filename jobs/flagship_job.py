@@ -62,6 +62,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 STAGES = ("extract", "graph", "curate", "chunks")
 # run order: the sequences stage is no --stop-after choice and runs last
 _ORDER = STAGES + ("sequences",)
+# the curated docs' schema, next to them (parquet readers skip "_" files)
+_DOCS_SCHEMA = "_schema.json"
 
 
 def _marker_path(stage_dir: str) -> str:
@@ -180,13 +182,6 @@ def _stages(spark, args, pages, fp_pages):
     )
     cu_dir = os.path.join(args.output, "curate")
     out_docs = os.path.join(cu_dir, "docs")
-    final = None
-
-    def curate(fp):
-        nonlocal final
-        counts, final = _curate(args, results, out_docs)
-        return counts, {}
-
     yield (
         "curate", cu_dir,
         lambda: _with_cfg(
@@ -197,12 +192,9 @@ def _stages(spark, args, pages, fp_pages):
             ("hld", args.host_line_dedup), ("hld_pct", args.host_line_pct),
             ("c4", args.c4_lines),
         ),
-        "docs", curate,
+        "docs", lambda fp: (_curate(args, results, out_docs), {}),
     )
-    # a fresh curate run knows its schema, which a zero-doc output cannot
-    # carry
-    if final is None:
-        final = spark.read.parquet(out_docs)
+    final = _read_docs(spark, out_docs)
     if args.chunk_tokens > 0:
         from html_parser_spark.ops.corpus import chunk_plan
 
@@ -318,9 +310,24 @@ def _graph(args, results, g_dir):
     return {"hosts": ranks.count(), "edges": edges.count()}, {}
 
 
+def _read_docs(spark, out_docs):
+    """The curated docs, read with the schema :func:`_curate` stored next
+    to them: a zero-doc partitioned write leaves no file to infer it
+    from.  (An output written without it is read by inference.)"""
+    from pyspark.sql import types as T
+
+    path = os.path.join(out_docs, _DOCS_SCHEMA)
+    if not os.path.exists(path):
+        return spark.read.parquet(out_docs)
+    with open(path) as f:
+        return spark.read.schema(T.StructType.fromJson(json.load(f))).parquet(
+            out_docs
+        )
+
+
 def _curate(args, results, out_docs):
-    """CURATE: extract output → training-ready docs.  Returns (counts,
-    the written docs read back)."""
+    """CURATE: extract output → training-ready docs.  Returns the
+    counts."""
     from pyspark.sql import functions as F
 
     from html_parser_spark.ops.html_meta import noindex_filter
@@ -387,12 +394,13 @@ def _curate(args, results, out_docs):
         bands=args.bands,
     )
     curated.write.mode("overwrite").partitionBy("split").parquet(out_docs)
-    final = results.sparkSession.read.schema(curated.schema).parquet(out_docs)
+    with open(os.path.join(out_docs, _DOCS_SCHEMA), "w") as f:
+        json.dump(curated.schema.jsonValue(), f)
     return {
-        **funnel, "docs": final.count(),
+        **funnel, "docs": _read_docs(results.sparkSession, out_docs).count(),
         **({"host_lines_removed": n_host_lines}
            if n_host_lines is not None else {}),
-    }, final
+    }
 
 
 def main(argv=None):

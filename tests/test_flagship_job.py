@@ -264,3 +264,16 @@ def test_extract_config_change_clears_inner_checkpoint(spark, tmp_path, capsys):
     # done-set
     assert rep2["stages"]["extract"]["docs_new"] == n
     assert rep2["stages"]["extract"]["docs"] == n
+
+
+def test_zero_doc_curate_rerun(spark, tmp_path, capsys):
+    """A curate stage that keeps no doc writes no parquet file; the re-run
+    that skips it must still read its output (with the written schema)
+    and skip the chunks stage after it."""
+    gate = ("--min-tokens", "100000")
+    _, rep1 = _run(spark, tmp_path, capsys, "flag-zero", extra=gate)
+    assert rep1["stages"]["curate"]["docs"] == 0
+    assert rep1["stages"]["chunks"]["chunks"] == 0
+    _, rep2 = _run(spark, tmp_path, capsys, "flag-zero", extra=gate)
+    assert rep2["stages"]["curate"]["action"] == "skipped"
+    assert rep2["stages"]["chunks"] == {**rep1["stages"]["chunks"], "action": "skipped"}

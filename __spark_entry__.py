@@ -8,8 +8,9 @@ declared once with ``@contract`` directly above it.  The declaration holds
 
 * ``oracle`` — the DuckDB SQL twin (or a zero-argument function building it)
   that must return the same rows over the same parquet tables;
-* ``plan`` / ``must`` / ``must_not`` — optional physical-plan property: a
-  description plus substrings the executed plan must / must not contain;
+* ``plan`` / ``must`` / ``must_not`` / ``nodes`` — optional physical-plan
+  property: a description, substrings the executed plan must / must not
+  contain, and exact node counts (``{"Exchange": 1}``) of its plan tree;
 * ``plan_kwargs`` — extra arguments the plan audit calls the query with.
 
 ``queries()``, ``oracle_sql()`` and ``contracts()`` are views over that one
@@ -90,6 +91,7 @@ class Contract:
     plan: str | None
     must: tuple[str, ...]
     must_not: tuple[str, ...]
+    nodes: dict[str, int]
     plan_kwargs: dict
 
     def oracle_sql(self) -> str:
@@ -105,13 +107,14 @@ def contract(
     plan: str | None = None,
     must: Sequence[str] = (),
     must_not: Sequence[str] = (),
+    nodes: dict[str, int] | None = None,
     plan_kwargs: dict | None = None,
 ):
     """Register the decorated ``q_*`` function under its name."""
 
     def register(fn):
         _CONTRACTS[fn.__name__] = Contract(
-            fn, oracle, plan, tuple(must), tuple(must_not), plan_kwargs or {}
+            fn, oracle, plan, tuple(must), tuple(must_not), nodes or {}, plan_kwargs or {}
         )
         return fn
 
@@ -135,6 +138,13 @@ def oracle_sql() -> dict[str, str]:
 
 # --------------------------------------------------------------------------
 # helpers
+
+
+# a guarded kernel stage reads its input once and crosses into Python once
+# (and shuffles once, with ``num_partitions``); the cap is the jobs'
+# ``--max-html-bytes`` default
+_GUARDED_STAGE = {"Scan parquet": 1, "ArrowEvalPython": 1}
+_JOB_HTML_CAP = 8 << 20
 
 
 def _docs(spark, sf_dir):
@@ -1428,8 +1438,13 @@ def q_sessionize(spark, sf_dir):
                  ' {2,}', ' ', 'g')) AS extracted_text
         FROM documents
     """,
+    plan="extraction pipeline, guarded and salted: ONE scan, ONE Exchange, "
+    "ONE fused ArrowEvalPython stage",
+    must=["REPARTITION_BY_NUM"],
+    nodes={**_GUARDED_STAGE, "Exchange": 1},
+    plan_kwargs={"num_partitions": 8, "max_html_bytes": _JOB_HTML_CAP},
 )
-def q_extract_text(spark, sf_dir):
+def q_extract_text(spark, sf_dir, num_partitions=None, max_html_bytes=None):
     """The fused extraction UDF over deterministic synthetic pages.  The
     oracle reconstructs extracted_text symbolically from documents.text —
     a REAL cross-engine check of the whole parse path."""
@@ -1438,7 +1453,7 @@ def q_extract_text(spark, sf_dir):
     from html_parser_spark.spark.pipeline import extract_pages
 
     pages = synthetic_pages_df(spark, sf_dir, paragraphs=1)
-    res = extract_pages(pages)
+    res = extract_pages(pages, num_partitions, max_html_bytes)
     return res.select(
         "url", "fmt", "n_entries", F.col("extracted_text").alias("extracted_text")
     )
@@ -1769,11 +1784,13 @@ def q_extract_text_rich(spark, sf_dir):
                     0) AS BIGINT) AS content_chars
         FROM k
     """,
-    plan="boilerplate strip is ONE Arrow UDF stage, zero shuffle",
+    plan="boilerplate strip, guarded: ONE scan, ONE Arrow UDF stage, zero shuffle",
     must=["ArrowEvalPython"],
     must_not=["Exchange", "Join", "Window"],
+    nodes=_GUARDED_STAGE,
+    plan_kwargs={"max_html_bytes": _JOB_HTML_CAP},
 )
-def q_main_content(spark, sf_dir):
+def q_main_content(spark, sf_dir, max_html_bytes=None):
     """Boilerplate removal (jusText-style) over synthesized crawl pages:
     header/nav/aside/footer/sidebar furniture plus a link-dense promo block
     wrap two real content paragraphs; the extractor must keep exactly the
@@ -1813,7 +1830,7 @@ def q_main_content(spark, sf_dir):
         F.lit(" all rights reserved</p></footer>\n</body></html>\n"),
     )
     pages = docs.select("doc_id", F.encode(html, "UTF-8").alias("html"))
-    out = extract_main_content(pages)
+    out = extract_main_content(pages, max_html_bytes=max_html_bytes)
     return out.select(
         "doc_id",
         "main_text",
@@ -5662,11 +5679,13 @@ def q_migrate_v21(spark, sf_dir):
                CAST(len(blocks) AS INTEGER) AS n_blocks
         FROM b
     """,
-    plan="ONE Arrow markdown-render stage, zero shuffle",
+    plan="markdown render, guarded: ONE scan, ONE Arrow stage, zero shuffle",
     must=["ArrowEvalPython"],
     must_not=["Exchange", "BatchEvalPython", "Window", "Join"],
+    nodes=_GUARDED_STAGE,
+    plan_kwargs={"max_html_bytes": _JOB_HTML_CAP},
 )
-def q_markdown(spark, sf_dir):
+def q_markdown(spark, sf_dir, max_html_bytes=None):
     """HTML→Markdown conversion (ops/markdown.py) over synthesized pages
     exercising every block family: heading, paragraph with bold/link
     inline, nested ul + ol, blockquote, fenced pre (whitespace preserved),
@@ -5720,7 +5739,9 @@ def q_markdown(spark, sf_dir):
         F.concat(F.lit("https://md.example.org/"), did).alias("url"),
         F.encode(html, "UTF-8").alias("html"),
     )
-    return to_markdown(pages).select("url", "markdown", "md_chars", "n_blocks")
+    return to_markdown(pages, max_html_bytes=max_html_bytes).select(
+        "url", "markdown", "md_chars", "n_blocks"
+    )
 
 
 @contract(

@@ -13,10 +13,17 @@ the one seen at its last re-read.  The importers of one archive share that
 re-read.  A changed, replaced or missing archive is re-read exactly as
 before.  Every kernel UDF imports the package when it is unpickled, so from
 a worker's second task on the per-task re-read is gone.
+
+PySpark's daemon also runs a full ``gc.collect()`` after every task, which
+walks all of a worker's ~74k import-time objects (pyspark, pyarrow, the
+kernel) each time.  :func:`settle`, which ``kernel_stage`` runs after each
+batch, moves them to the permanent generation once, after the first batch,
+so the per-task collection walks only what later tasks allocate.
 """
 
 from __future__ import annotations
 
+import gc
 import os
 import sys
 import zipimport
@@ -60,3 +67,16 @@ def install() -> None:
     for finder in list(sys.path_importer_cache.values()):
         if isinstance(finder, cls):
             finder.invalidate_caches()
+
+
+def settle() -> None:
+    """Collect, then freeze what survives, unless this process's heap is
+    frozen already (so only its first call does anything).
+
+    Run after a worker's first kernel batch, not at package import: the
+    Arrow serializers and the kernel's own lazy imports load after the UDF
+    is unpickled.  The collect runs first, so earlier cyclic garbage is
+    freed, not frozen; later garbage is collected as before."""
+    if not gc.get_freeze_count():
+        gc.collect()
+        gc.freeze()

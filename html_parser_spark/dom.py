@@ -417,8 +417,15 @@ def parse_html_slow(text: str) -> Node:
     return b.root
 
 
-def parse_html(text: str) -> Node:
-    """Parse an HTML document string into a DOM tree; returns the document node."""
+def parse_html(text: str, suspicious: bool = False) -> Node:
+    """Parse an HTML document string into a DOM tree; returns the document node.
+
+    ``suspicious``: the caller's own scan of ``text`` (``fastscan``, same
+    tokenizer and rule) already found markup the tokenizer skips, which
+    ``_fast_parse`` would flag only after a full pass; go straight to the
+    html.parser path."""
+    if suspicious:
+        return parse_html_slow(text)
     b = _DomBuilder()
     b.suspicious = False
     _fast_parse(text, b)

@@ -154,11 +154,12 @@ def _finish_p(parts, pieces):
         )
 
 
-def scan_format_a(text: str):
+def scan_format_a(text: str, declined: list | None = None):
     """One token-stream pass → (extracted_text, raw_entries) or None.
 
     None means "take the DOM path": suspicious markup (tokenizer skipped
-    something), or the P20 filter kept no text (body-fallback case).
+    something; ``"suspicious"`` is then appended to ``declined``, when
+    given), or the P20 filter kept no text (body-fallback case).
     ``raw_entries`` is the pre-postProcessing entry list, identical to
     ``format_a.parse_lines_doc`` output."""
     pos = 0
@@ -240,7 +241,10 @@ def scan_format_a(text: str):
         if start > pos:
             data = text[pos:start]
             if "<" in data and suspicious_search(data):
-                return None  # tokenizer skipped markup — DOM path decides
+                # tokenizer skipped markup — DOM path decides
+                if declined is not None:
+                    declined.append("suspicious")
+                return None
             if "&" in data:
                 data = unescape(data)
             if sub is not None:

@@ -1,7 +1,8 @@
 """Unified per-document parse kernel.
 
-``parse_document(html_bytes)`` is the pure function the Arrow-batched pandas
-UDF vectorizes (one call per row inside a batch, zero Spark dependencies):
+``parse_document(html_bytes)`` is the pure function the Arrow UDF of
+``spark/pipeline.py:kernel_stage`` maps over each batch (one call per row,
+zero Spark dependencies):
 
   bytes → {fmt, extracted_text, entries, n_entries, error}
 
@@ -54,11 +55,12 @@ def parse_document(html_bytes: bytes) -> dict:
     try:
         text = decode_html_bytes(html_bytes)
         fmt = detect_format(text)
+        declined: list[str] = []
         if fmt == FORMAT_A:
             # hot path: ONE token-stream pass, no DOM allocation (fastscan);
             # returns None on suspicious markup / empty-text fallback cases,
             # where the DOM path below carries the exact semantics
-            fast = scan_format_a(text)
+            fast = scan_format_a(text, declined)
             if fast is not None:
                 extracted, raw_entries = fast
                 entries = _normalize(fmt, post_process(raw_entries))
@@ -71,8 +73,9 @@ def parse_document(html_bytes: bytes) -> dict:
                 }
         # ONE DOM parse shared by text extraction and the format kernel
         # (parsing dominates the profile; the format-A pass mutates the tree,
-        # so the read-only extract_text runs first)
-        doc = parse_html(text)
+        # so the read-only extract_text runs first); markup fastscan found
+        # suspicious skips _fast_parse, which would only flag it again
+        doc = parse_html(text, suspicious=bool(declined))
         if fmt == FORMAT_A:
             # one traversal shared by the (read-only) text flatten and the
             # (mutating, run second) format-A line scan

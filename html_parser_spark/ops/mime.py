@@ -21,9 +21,8 @@ in its CDX index for the same reason).  This module implements:
   filter+union per payload family — HTML/XML/plain through the DOM kernel
   (`spark/pipeline.py:extract_pages`), ``application/pdf`` through the
   native PDF parser (`ops/pdf.py`), everything else passed through as a
-  typed non-text row.  Filter+union, as in the oversized-page guard
-  (``spark/pipeline.py:route_oversized``): each kernel sees ONLY its own
-  rows.
+  typed non-text row.  Each kernel sees ONLY its own rows; the PDF
+  branch's oversized-page guard is ``spark/pipeline.py:route_oversized``.
 
 Scale notes (100 TB): the sniff is a handful of prefix comparisons on the
 first 1 KiB — codegen'd, no shuffle, pushdown-friendly.  The router adds

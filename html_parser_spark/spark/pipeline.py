@@ -3,15 +3,19 @@
 Physical plan (SURVEY.md §4.3):
 
     Scan(pages, prune=[url, warc_ts, html, lang])
-    → Exchange (salted repartition by xxhash64(url) % P)   # skew defeat
-    → ArrowEvalPython [parse_document kernel]              # ONE fused UDF stage
-    → Project [url, warc_ts, lang, fmt, extracted_text, entries, n_entries, ...]
+    → Exchange (salted repartition by hash(url) into P)    # skew defeat
+    → ArrowEvalPython [kernel(CASE WHEN fits THEN coalesce(html, X'') END)]
+                                                           # ONE fused UDF stage
+    → Project [url, warc_ts, lang,
+               CASE WHEN fits THEN kernel.fmt ELSE 'oversized' END, ...]
     → sink (parquet here; Iceberg MERGE INTO in production)
 
-Everything per-document → the parse is a pure partition-parallel map; the
-only exchange is the explicit salting one.  This kernel and the page
-kernels in ``ops/`` (main content, markdown, metadata, anchors, the fused
-page kernel) each run as one :func:`kernel_stage`.
+``fits`` is ``length(html) <= max_html_bytes`` (NULL html fits); without a
+cap both CASEs are just the kernel's argument and fields.  Everything
+per-document → the parse is a pure partition-parallel map; the only
+exchange is the explicit salting one, guard or no guard.  This kernel and
+the page kernels in ``ops/`` (main content, markdown, metadata, anchors,
+the fused page kernel) each run as one :func:`kernel_stage`.
 """
 
 from __future__ import annotations
@@ -21,6 +25,8 @@ from typing import Callable
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_type
+
+from html_parser_spark import _pyworker
 
 ENTRY_TYPE = T.StructType(
     [
@@ -41,22 +47,24 @@ PARSED_TYPE = T.StructType(
 )
 
 
-def oversized_rows(
-    df: DataFrame, schema: T.StructType, fill: dict | None = None
-) -> DataFrame:
-    """``df`` + one column per ``schema`` field for pages that skip the
-    kernel: ``fill[name]`` where the caller gives one, else 0 for numeric
-    fields and NULL for the rest."""
-    fill = fill or {}
+def _fits(html_col: str, max_html_bytes: int) -> str:
+    """SQL predicate: the page goes to the kernel.  NULL html fits (kernels
+    read it as an empty page); ``length`` of a binary counts bytes."""
+    return f"coalesce(length(`{html_col}`), 0) <= {int(max_html_bytes)}"
 
-    def value(f: T.StructField):
-        if f.name in fill:
-            return fill[f.name]
-        return F.lit(0) if isinstance(f.dataType, T.NumericType) else F.lit(None)
 
-    return df.select(
-        *df.columns, *[value(f).cast(f.dataType).alias(f.name) for f in schema.fields]
-    )
+def _fill(f: T.StructField, fill: dict | None) -> str:
+    """SQL value of field ``f`` for a page that skips the kernel:
+    ``fill[name]`` where the caller gives one, else 0 for numeric fields
+    and NULL for the rest."""
+    default = "0" if isinstance(f.dataType, T.NumericType) else "NULL"
+    return f"CAST({(fill or {}).get(f.name, default)} AS {f.dataType.simpleString()})"
+
+
+def oversized_rows(df: DataFrame, schema: T.StructType, fill: dict | None = None) -> DataFrame:
+    """``df`` + one column per ``schema`` field, each its :func:`_fill`
+    value: the rows of pages routed around a kernel."""
+    return df.selectExpr("*", *(f"{_fill(f, fill)} AS `{f.name}`" for f in schema.fields))
 
 
 def route_oversized(
@@ -67,17 +75,15 @@ def route_oversized(
     html_col: str = "html",
 ) -> DataFrame:
     """``kernel`` over the pages of at most ``max_html_bytes``, ``oversized``
-    over the rest, so a pathological crawl page costs one row, not a stalled
-    task.  No cap → ``kernel(df)``.
+    over the rest; no cap → ``kernel(df)``.
 
-    Filter+union, NOT ``when()``: a conditional around a Python UDF still
-    evaluates the UDF for every row in the Arrow batch.  NULL html goes to
-    the kernel side (kernels read it as an empty page); ``length <= cap``
-    alone is NULL for it and would drop the row from both branches."""
+    For a Python stage that is not a :func:`kernel_stage` (``ops/mime.py``'s
+    PDF ``mapInPandas``).  The filter+union reads ``df`` twice; a
+    :func:`kernel_stage` routes inside its one stage instead."""
     if not max_html_bytes:
         return kernel(df)
-    fits = F.col(html_col).isNull() | (F.length(html_col) <= max_html_bytes)
-    return kernel(df.filter(fits)).unionByName(oversized(df.filter(~fits)))
+    fits = _fits(html_col, max_html_bytes)
+    return kernel(df.filter(fits)).unionByName(oversized(df.filter(f"NOT ({fits})")))
 
 
 def kernel_stage(
@@ -98,31 +104,43 @@ def kernel_stage(
     ONE Arrow UDF returning a struct (one ArrowEvalPython node, no
     shuffle): each batch's columns reach Python as lists and the rows go
     back as one struct array, with no pandas in between.  Its fields are
-    expanded next to the input columns.  ``max_html_bytes``
-    routes larger pages around it (:func:`route_oversized`); they get
-    :func:`oversized_rows` with ``fill``."""
-    names = schema.fieldNames()
+    expanded next to the input columns.
+
+    ``max_html_bytes`` guards the same stage: a larger page reaches the UDF
+    as NULL, which returns a NULL struct without calling ``fn``, and the
+    expansion takes each field's :func:`_fill` value (``fill``: field name
+    -> SQL expression over ``df``) where the page does not fit.  So a
+    guarded stage still reads and shuffles its input once, and no
+    oversized byte crosses into Python.  The expressions are SQL text: each
+    Column call costs the driver py4j round trips."""
     row_type = to_arrow_type(schema)
 
     @F.arrow_udf(schema)
     def kernel(html: pa.Array, *url: pa.Array) -> pa.Array:
-        pages = [b if b is not None else b"" for b in html.to_pylist()]
-        rows = map(fn, pages, *(u.to_pylist() for u in url))
-        return pa.array(list(rows), type=row_type)
-
-    args = [F.col(html_col)]
-    if url_col is not None:
-        args.append(F.coalesce(F.col(url_col), F.lit("")))
-
-    def run(pages: DataFrame) -> DataFrame:
-        out = pages.withColumn("_kernel", kernel(*args))
-        return out.select(
-            *pages.columns, *[F.col(f"_kernel.{n}").alias(n) for n in names]
+        args = zip(html.to_pylist(), *(u.to_pylist() for u in url))
+        out = pa.array(
+            [None if page is None else fn(page, *rest) for page, *rest in args],
+            type=row_type,
         )
+        _pyworker.settle()
+        return out
 
-    return route_oversized(
-        df, max_html_bytes, run, lambda d: oversized_rows(d, schema, fill), html_col
-    )
+    page = f"coalesce(`{html_col}`, X'')"
+    fields = [f"_kernel.`{f.name}`" for f in schema.fields]
+    if max_html_bytes:
+        fits = _fits(html_col, max_html_bytes)
+        page = f"CASE WHEN {fits} THEN {page} END"
+        fields = [
+            f"CASE WHEN {fits} THEN {v} ELSE {_fill(f, fill)} END"
+            for f, v in zip(schema.fields, fields)
+        ]
+    args = [F.expr(page)]
+    if url_col is not None:
+        args.append(F.expr(f"coalesce(`{url_col}`, '')"))
+    out = df.withColumn("_kernel", kernel(*args))
+    return out.selectExpr(
+        "*", *(f"{v} AS `{f.name}`" for f, v in zip(schema.fields, fields))
+    ).drop("_kernel")
 
 
 def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
@@ -139,7 +157,7 @@ def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
 
 
 def _results(parsed: DataFrame) -> DataFrame:
-    return parsed.select(
+    return parsed.selectExpr(
         "url",
         "warc_ts",
         "lang",
@@ -147,25 +165,22 @@ def _results(parsed: DataFrame) -> DataFrame:
         "extracted_text",
         "entries",
         "n_entries",
-        F.length("html").alias("n_bytes_in"),
+        "length(html) AS n_bytes_in",
         "error",
     )
 
 
-def _oversized_fill() -> dict:
-    return {
-        "fmt": F.lit("oversized"),
-        "entries": F.array(),
-        "error": F.concat(
-            F.lit("oversized: "), F.length("html").cast("string"), F.lit(" bytes")
-        ),
-    }
+_OVERSIZED_FILL = {
+    "fmt": "'oversized'",
+    "entries": "array()",
+    "error": "concat('oversized: ', CAST(length(html) AS STRING), ' bytes')",
+}
 
 
 def oversized_results(pages: DataFrame) -> DataFrame:
     """The results-table rows of pages routed around every kernel: fmt
     'oversized', no text or entries, and an error note with the size."""
-    return _results(oversized_rows(pages, PARSED_TYPE, _oversized_fill()))
+    return _results(oversized_rows(pages, PARSED_TYPE, _OVERSIZED_FILL))
 
 
 def extract_pages(
@@ -182,13 +197,11 @@ def extract_pages(
     from html_parser_spark.kernel import parse_document
 
     # project early so the scan prunes to exactly the columns we read
-    src = pages.select("url", "warc_ts", "html", "lang")
+    src = pages.selectExpr("url", "warc_ts", "html", "lang")
     if num_partitions:
         src = salted_repartition(src, num_partitions)
     return _results(
-        kernel_stage(
-            src, parse_document, PARSED_TYPE, max_html_bytes, fill=_oversized_fill()
-        )
+        kernel_stage(src, parse_document, PARSED_TYPE, max_html_bytes, fill=_OVERSIZED_FILL)
     )
 
 

@@ -162,6 +162,73 @@ def test_fastscan_declines_suspicious_markup():
     assert scan_format_a(html) is None
 
 
+def _fixture_texts():
+    for subdir, suffix in _FIXTURE_GROUPS:
+        d = os.path.join(REFERENCE, subdir)
+        if not os.path.isdir(d):
+            continue
+        for name in sorted(os.listdir(d)):
+            path = os.path.join(d, name)
+            if name.endswith(suffix) and os.path.isfile(path):
+                with open(path, "rb") as f:
+                    yield f.read()
+
+
+def _shape(n):
+    if n.kind in ("text", "comment"):
+        return (n.kind, n._text)
+    return (n.tag, tuple(sorted(n.attrs.items())), [_shape(c) for c in n.children])
+
+
+def test_suspicious_decline_goes_straight_to_the_slow_dom(monkeypatch):
+    """Where fastscan declines for suspicious markup, the kernel skips
+    ``_fast_parse``: on every generated and fixture page of that kind,
+    ``_fast_parse`` flags the page too, both routes build the same tree,
+    and ``parse_document`` is byte-identical with one slow parse either
+    way."""
+    import json
+    import random
+
+    import html_parser_spark.dom as dom
+    import html_parser_spark.kernel as kernel
+    from perfbench import gen
+
+    mix = {"A": 1, "A-dom": 2, "B": 1, "C": 1, "D": 1, "generic": 1}
+    rows = gen.dictionary_pages(5, 140, mix, 7000, 0.9)
+    rng = random.Random(6)
+    pages = [r["html"] for r in rows] + [
+        gen.page_a(rng, size, broken=True).encode() for size in range(1500, 30000, 1500)
+    ]
+    slow_calls = []
+    slow = dom.parse_html_slow
+    monkeypatch.setattr(dom, "parse_html_slow", lambda t: slow_calls.append(1) or slow(t))
+
+    def full_pass_first(text, suspicious=False):
+        return dom.parse_html(text)  # the route without the skip
+
+    checked = 0
+    for raw in pages + list(_fixture_texts()):
+        text = decode_html_bytes(raw)
+        declined = []
+        if scan_format_a(text, declined) is not None or not declined:
+            continue
+        builder = dom._DomBuilder()
+        builder.suspicious = False
+        dom._fast_parse(text, builder)
+        assert builder.suspicious
+        assert _shape(parse_html(text, suspicious=True)) == _shape(parse_html(text))
+        del slow_calls[:]
+        skipped = json.dumps(kernel.parse_document(raw), sort_keys=True)
+        n_skipped = len(slow_calls)
+        with monkeypatch.context() as m:
+            m.setattr(kernel, "parse_html", full_pass_first)
+            del slow_calls[:]
+            assert json.dumps(kernel.parse_document(raw), sort_keys=True) == skipped
+            assert len(slow_calls) == n_skipped == 1
+        checked += 1
+    assert checked >= 40, checked
+
+
 def test_fastscan_declines_empty_text():
     """No P20-visible text → None (the DOM path owns the body fallback)."""
     assert scan_format_a("<div>no paragraphs here</div>") is None

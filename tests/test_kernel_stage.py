@@ -1,16 +1,17 @@
 """The kernel-stage primitive (spark/pipeline.py:kernel_stage) under each
 page stage built on it: the oversized-page guard keeps NULL-html rows on
-the kernel side, and a stage is ONE ArrowEvalPython node with or without
-the guard."""
+the kernel side, keeps every oversized byte out of Python, and a guarded
+stage is still ONE scan, one Exchange and one ArrowEvalPython node."""
 
 import re
 
 import pytest
+from pyspark.sql import types as T
 
 from html_parser_spark.ops.boilerplate import extract_main_content
 from html_parser_spark.ops.markdown import to_markdown
 from html_parser_spark.ops.page_kernel import extract_page_full
-from html_parser_spark.spark.pipeline import extract_pages
+from html_parser_spark.spark.pipeline import extract_pages, kernel_stage, salted_repartition
 
 CAP = 1000
 LONG = "word " * 20
@@ -64,3 +65,54 @@ def test_one_arrow_node_and_no_guard_exchange(spark, pages, stage):
     assert _nodes(plain, "ArrowEvalPython") == 1
     assert _nodes(guarded, "ArrowEvalPython") == 1
     assert _nodes(guarded, "Exchange") == _nodes(plain, "Exchange")
+
+
+@pytest.mark.parametrize("stage", STAGES)
+def test_guarded_stage_reads_and_shuffles_once(spark, pages, stage, tmp_path):
+    """Scan -> one Exchange -> one ArrowEvalPython: the guard routes pages
+    inside the stage, not around it with a second scan and shuffle."""
+    pages.write.parquet(str(tmp_path / "pages"))
+    src = spark.read.parquet(str(tmp_path / "pages"))
+    run = STAGES[stage]
+    if stage == "extract_pages":
+        guarded = run(src, num_partitions=4, max_html_bytes=CAP)
+    else:
+        guarded = run(salted_repartition(src, 4), max_html_bytes=CAP)
+    assert _nodes(guarded, "FileScan") == 1
+    assert _nodes(guarded, "Exchange") == 1
+    assert _nodes(guarded, "ArrowEvalPython") == 1
+
+
+def _sized(n: int) -> bytes:
+    return b"<p>" + b"z" * (n - 7) + b"</p>"
+
+
+def test_guard_boundary_and_what_the_kernel_sees(spark):
+    """A page of exactly the cap goes to the kernel, cap+1 gets the fill,
+    NULL html reaches it as b"", and no page over the cap reaches it."""
+
+    def probe(html):
+        if not isinstance(html, bytes) or len(html) > CAP:
+            raise ValueError(f"kernel saw {type(html).__name__} {len(html or b'')}")
+        return {"n": len(html), "tag": "kernel", "note": "ran"}
+
+    schema = T.StructType(
+        [
+            T.StructField("n", T.IntegerType()),
+            T.StructField("tag", T.StringType()),
+            T.StructField("note", T.StringType()),
+        ]
+    )
+    assert len(_sized(CAP)) == CAP
+    df = spark.createDataFrame(
+        [("cap", _sized(CAP)), ("cap+1", _sized(CAP + 1)), ("null", None), ("empty", b"")],
+        "url string, html binary",
+    )
+    out = kernel_stage(df, probe, schema, CAP)
+    got = {r["url"]: (r["n"], r["tag"], r["note"]) for r in out.collect()}
+    assert got == {
+        "cap": (CAP, "kernel", "ran"),
+        "cap+1": (0, None, None),  # the fill: 0 for numeric fields, else NULL
+        "null": (0, "kernel", "ran"),
+        "empty": (0, "kernel", "ran"),
+    }

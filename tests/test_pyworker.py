@@ -1,12 +1,15 @@
 """html_parser_spark/_pyworker.py: importing the package makes
 ``importlib.invalidate_caches()`` skip the zip-directory re-read of an
 archive that did not change, and still re-read a changed, replaced or
-missing one."""
+missing one; ``settle()`` freezes a worker's heap once, after its first
+kernel batch."""
 
+import gc
 import importlib
 import inspect
 import os
 import sys
+import weakref
 import zipfile
 import zipimport
 
@@ -122,3 +125,57 @@ def test_worker_skips_reread_after_a_kernel_task(spark):
     assert min(r["importers"] for r in rows) > 0  # workers import from zips
     seen_twice = [r["same"] for r in rows if r["same"] is not None]
     assert seen_twice and all(seen_twice)
+
+
+@pytest.fixture
+def unsettled():
+    """A process whose heap is not frozen yet, and is unfrozen afterwards."""
+    from html_parser_spark import _pyworker
+
+    gc.unfreeze()
+    yield _pyworker
+    gc.unfreeze()
+
+
+def test_settle_collects_cycles_then_freezes_once(unsettled):
+    class Node:
+        pass
+
+    gc.disable()  # no automatic collection before settle() runs
+    try:
+        a, b = Node(), Node()
+        a.other, b.other = b, a
+        dead = weakref.ref(a)
+        del a, b  # a cycle: only the collector can free it
+        assert dead() is not None
+        unsettled.settle()
+        assert dead() is None  # collected, not frozen
+        frozen = gc.get_freeze_count()
+        assert frozen > 0
+        keep = [Node() for _ in range(100)]
+        unsettled.settle()  # idempotent: nothing new is frozen
+        assert gc.get_freeze_count() == frozen
+        del keep
+    finally:
+        gc.enable()
+
+
+def test_worker_heap_frozen_after_a_kernel_task(spark):
+    """Every probe row is a kernel task of its own: from a worker's second
+    task on, its import-time heap is frozen, so the daemon's per-task
+    collection no longer walks it."""
+
+    def probe(_html):
+        import gc
+
+        before = getattr(sys, "_gc_probe_seen", False)
+        sys._gc_probe_seen = True
+        return {"seen": before, "frozen": gc.get_freeze_count()}
+
+    schema = T.StructType(
+        [T.StructField("seen", T.BooleanType()), T.StructField("frozen", T.LongType())]
+    )
+    pages = spark.range(0, 16, 1, 16).select(F.lit(b"").alias("html"))
+    rows = [r for _ in range(2) for r in kernel_stage(pages, probe, schema).collect()]
+    later = [r["frozen"] for r in rows if r["seen"]]
+    assert later and min(later) > 0

@@ -6,7 +6,8 @@ that matter at 100TB:
 * parquet scans carry PushedFilters + pruned ReadSchema (no full-row reads);
 * dimension joins are BroadcastHashJoin (no shuffle on the fact side);
 * relational stages run inside WholeStageCodegen;
-* the extraction pipeline has exactly one ArrowEvalPython stage.
+* a guarded kernel stage is one scan, one Exchange and one ArrowEvalPython
+  node (``nodes``: exact counts in the final and the initial plan tree).
 
 Writes the annotated evidence to PLANS.md with expression, plan, RDD and
 lambda-variable ids normalized, so the file diffs only when a plan changes.
@@ -53,36 +54,35 @@ def normalize_ids(plan: str) -> str:
     return plan
 
 
-def violations(plan: str, must, must_not) -> list[str]:
-    return [f"MISSING: {m}" for m in must if m not in plan] + [
-        f"UNEXPECTED: {m}" for m in must_not if m in plan
-    ]
+def node_counts(plan: str, name: str) -> list[int]:
+    """Nodes called ``name`` in each plan tree: AQE's final and initial
+    plan (at run time AQE drops a branch that turned out empty, after
+    running it), else the one tree."""
+    trees = [seg.split("\n\n")[0] for seg in plan.split("== Initial Plan ==")[:2]]
+    return [len(re.findall(rf"\b{re.escape(name)}\s+\(\d+\)", t)) for t in trees]
+
+
+def violations(plan: str, c) -> list[str]:
+    notes = [f"MISSING: {m}" for m in c.must if m not in plan]
+    notes += [f"UNEXPECTED: {m}" for m in c.must_not if m in plan]
+    for name, want in c.nodes.items():
+        got = node_counts(plan, name)
+        if any(n != want for n in got):
+            notes.append(f"NODES: {name} x{got} (target: {want})")
+    return notes
 
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     import __spark_entry__ as entrymod
-    from html_parser_spark.data.pages import synthetic_pages_df
-    from html_parser_spark.spark.pipeline import extract_pages
     from html_parser_spark.spark.session import get_spark
 
     spark = get_spark(app_name="plan-audit", master="local[4]", shuffle_partitions=8)
-
-    pages = synthetic_pages_df(spark, sf_dir, paragraphs=1)
-    p = plan_of(extract_pages(pages, num_partitions=8))
-    # count only the executed tree (AQE prints Final + Initial plans)
-    n_arrow = len(re.findall(r"ArrowEvalPython \(\d+\)", p.split("== Initial Plan ==")[0]))
-    notes = violations(p, ["ArrowEvalPython", "Exchange"], [])
-    if n_arrow != 1:
-        notes.append(f"ArrowEvalPython stages: {n_arrow} (target: 1)")
-    # (name, plan, notes)
-    checks = [
-        ("extraction pipeline — ONE fused ArrowEvalPython stage, salted exchange", p, notes)
-    ]
+    checks = []  # (name, plan, notes)
     for name, c in entrymod.contracts().items():
         if c.plan is not None:
             p = plan_of(c.fn(spark, sf_dir, **c.plan_kwargs))
-            checks.append((f"{name} — {c.plan}", p, violations(p, c.must, c.must_not)))
+            checks.append((f"{name} — {c.plan}", p, violations(p, c)))
     spark.stop()
 
     failures = []
@@ -90,9 +90,9 @@ def main():
     out.append(
         "Checked properties: predicate pushdown reaches the parquet scan, "
         "column pruning (ReadSchema), broadcast joins for dimensions, "
-        "whole-stage codegen spans, and a single fused ArrowEvalPython stage "
-        "for the parse pipeline.  Expression, plan, RDD and lambda-variable "
-        "ids are normalized to `N`.\n"
+        "whole-stage codegen spans, and one scan, one Exchange and one "
+        "ArrowEvalPython node per guarded kernel stage.  Expression, plan, RDD "
+        "and lambda-variable ids are normalized to `N`.\n"
     )
     for name, plan, notes in checks:
         status = "FAIL" if notes else "OK"
@@ -103,8 +103,6 @@ def main():
         if notes:
             out.append("\n".join(f"- {n}" for n in notes) + "\n")
         out.append("```\n" + normalize_ids(plan.strip())[:3500] + "\n```\n")
-    out.append(f"\nArrowEvalPython stages in extraction plan: {n_arrow} (target: 1)\n")
-    print(f"ArrowEvalPython stages in extraction plan: {n_arrow}")
     print(f"{len(checks) - len(failures)}/{len(checks)} OK")
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))

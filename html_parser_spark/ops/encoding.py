@@ -17,10 +17,11 @@ part leaves the JVM:
   wraps the raw bytes unvalidated and Spark 4's validity predicate
   checks well-formedness), falling back to windows-1252 (the WHATWG
   default for unlabeled legacy content).
-* **decode** (:func:`decode_pages`) — ONE Arrow-batched kernel
-  (``codecs`` covers the long tail of encodings Spark's JVM ``decode``
-  does not expose), ``errors='replace'`` so malformed bytes can never
-  fail a 1000-executor stage, leading BOM stripped.
+* **decode** (:func:`decode_pages`) — ONE Arrow row UDF over
+  :func:`_decode` (``codecs`` covers the long tail of encodings
+  Spark's JVM ``decode`` does not expose), ``errors='replace'`` so
+  malformed bytes can never fail a 1000-executor stage, leading BOM
+  stripped.
 
 Documented simplifications vs the full WHATWG encoding sniff: no
 UTF-32 BOM probe (``FF FE 00 00`` reads as utf-16le), no
@@ -37,10 +38,11 @@ no shuffle anywhere.
 from __future__ import annotations
 
 import codecs
-
-import pandas as pd
+import functools
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
+
+from html_parser_spark.spark.pipeline import row_udf
 
 # WHATWG encoding-standard label → canonical name, restricted to labels a
 # crawler actually meets.  iso-8859-1/ascii fold to windows-1252 per the
@@ -155,40 +157,37 @@ def sniff_charset(
     )
 
 
-def decode_text_udf() -> "F.pandas_udf":
-    """(body, charset) → decoded text: ONE Arrow-batched kernel.
+@functools.lru_cache(maxsize=None)
+def _codec(charset: str | None) -> str:
+    """``codecs`` name of a detected charset (covering the legacy tail
+    Spark's JVM ``decode`` does not expose: cp1251, koi8-r, shift_jis, …);
+    unknown labels fall back to cp1252, a single-byte codec that never
+    raises."""
+    try:
+        return codecs.lookup(charset or "utf-8").name
+    except LookupError:
+        return "cp1252"
 
-    ``codecs`` resolves the canonical charset name (covering the legacy
-    tail Spark's JVM ``decode`` does not expose: cp1251, koi8-r,
-    shift_jis, …); unknown labels fall back to cp1252 — a single-byte
-    codec that never raises — and ``errors='replace'`` guarantees the
-    kernel cannot fail a stage on malformed bytes.  A leading U+FEFF
-    (decoded BOM) is stripped.
-    """
 
-    @F.pandas_udf(T.StringType())
-    def _dec(bodies: pd.Series, charsets: pd.Series) -> pd.Series:
-        lookup_cache: dict[str, str] = {}
+def _decode(body: bytes, charset: str | None) -> str:
+    """The one charset decode: ``errors='replace'`` guarantees malformed
+    bytes cannot fail a stage, and a leading U+FEFF (decoded BOM) is
+    stripped."""
+    s = body.decode(_codec(charset), errors="replace")
+    return s[1:] if s[:1] == "\ufeff" else s
 
-        def one(b, cs):
-            if b is None:
-                return None
-            key = cs or "utf-8"
-            codec = lookup_cache.get(key)
-            if codec is None:
-                try:
-                    codec = codecs.lookup(key).name
-                except LookupError:
-                    codec = "cp1252"
-                lookup_cache[key] = codec
-            s = bytes(b).decode(codec, errors="replace")
-            return s[1:] if s[:1] == "\ufeff" else s
 
-        return pd.Series(
-            [one(b, cs) for b, cs in zip(bodies, charsets)], dtype="object"
-        )
+def _to_utf8(body: bytes, charset: str | None) -> bytes:
+    # already-valid UTF-8 without a BOM passes through uncopied
+    if charset in (None, "utf-8") and not body.startswith(_BOM_UTF8):
+        return body
+    return _decode(body, charset).encode("utf-8")
 
-    return _dec
+
+def decode_text_udf():
+    """(body, charset) → decoded text (:func:`_decode`): ONE Arrow row
+    UDF."""
+    return row_udf(_decode, T.StringType())
 
 
 def decode_pages(
@@ -207,46 +206,13 @@ def decode_pages(
     )
 
 
-def transcode_utf8_udf() -> "F.pandas_udf":
-    """(body, charset) → UTF-8 bytes: the ingest-boundary normalizer.
-
-    Already-valid UTF-8 without a BOM passes through UNCOPIED (the
-    dominant case on a modern crawl — no decode cost for ~90 % of
-    pages); everything else decodes via :func:`decode_text_udf`
-    semantics (codecs, ``errors='replace'``, BOM strip) and re-encodes
-    as UTF-8.
-    """
-
-    @F.pandas_udf(T.BinaryType())
-    def _tc(bodies: pd.Series, charsets: pd.Series) -> pd.Series:
-        lookup_cache: dict[str, str] = {}
-
-        def one(b, cs):
-            if b is None:
-                return None
-            raw = bytes(b)
-            if (cs is None or cs == "utf-8") and not raw.startswith(
-                b"\xef\xbb\xbf"
-            ):
-                return raw
-            key = cs or "utf-8"
-            codec = lookup_cache.get(key)
-            if codec is None:
-                try:
-                    codec = codecs.lookup(key).name
-                except LookupError:
-                    codec = "cp1252"
-                lookup_cache[key] = codec
-            s = raw.decode(codec, errors="replace")
-            if s[:1] == "\ufeff":
-                s = s[1:]
-            return s.encode("utf-8")
-
-        return pd.Series(
-            [one(b, cs) for b, cs in zip(bodies, charsets)], dtype="object"
-        )
-
-    return _tc
+def transcode_utf8_udf():
+    """(body, charset) → UTF-8 bytes: the ingest-boundary normalizer, ONE
+    Arrow row UDF.  Already-valid UTF-8 without a BOM passes through
+    UNCOPIED (the dominant case on a modern crawl — no decode cost for
+    ~90 % of pages); everything else goes through :func:`_decode` and
+    is re-encoded as UTF-8."""
+    return row_udf(_to_utf8, T.BinaryType())
 
 
 def normalize_to_utf8(

@@ -139,7 +139,11 @@ def extract_page_meta(
     """pages → pages + metadata columns, as ONE
     :func:`~html_parser_spark.spark.pipeline.kernel_stage`."""
     return kernel_stage(
-        pages, extract_meta, PAGE_META_TYPE, html_col=html_col, url_col=url_col
+        pages,
+        extract_meta,
+        PAGE_META_TYPE,
+        html_col=html_col,
+        args=(f"coalesce(`{url_col}`, '')",),
     )
 
 
@@ -214,7 +218,7 @@ def extract_anchors(
         _anchors_row,
         T.StructType([T.StructField("anchors", ANCHORS_TYPE)]),
         html_col=html_col,
-        url_col=url_col,
+        args=(f"coalesce(`{url_col}`, '')",),
     )
 
 

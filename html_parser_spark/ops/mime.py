@@ -17,18 +17,19 @@ in its CDX index for the same reason).  This module implements:
   the (whitespace-trimmed) payload rather than scanning 1445 bytes, mask
   signatures (e.g. ``video/mp4`` ftyp boxes) are out of scope, and the
   supplied Content-Type header never overrides sniffing.
-* :func:`extract_any` — the mixed-corpus extraction router: sniff, then
-  filter+union per payload family — HTML/XML/plain through the DOM kernel
-  (`spark/pipeline.py:extract_pages`), ``application/pdf`` through the
-  native PDF parser (`ops/pdf.py`), everything else passed through as a
-  typed non-text row.  Each kernel sees ONLY its own rows; the PDF
-  branch's oversized-page guard is ``spark/pipeline.py:route_oversized``.
+* :func:`extract_any` — the mixed-corpus extraction: sniff, then ONE
+  ``spark/pipeline.py:kernel_stage`` whose kernel dispatches each row on
+  its mime — HTML/XML/plain to the DOM kernel (``kernel.parse_document``),
+  ``application/pdf`` to the native PDF parser (``ops/pdf.pdf_row``), and
+  everything else to a typed non-text row.  A CASE on the mime hands the
+  kernel a NULL payload for that last family, so no media byte crosses
+  into Python; the stage's own ``max_html_bytes`` guard bounds the text
+  and PDF pages.
 
 Scale notes (100 TB): the sniff is a handful of prefix comparisons on the
-first 1 KiB — codegen'd, no shuffle, pushdown-friendly.  The router adds
-zero shuffles on top of the kernels it routes to; the union is a
-plan-level concatenation, and each branch's partitioning follows its
-filtered scan.
+first 1 KiB — codegen'd, no shuffle, pushdown-friendly.  The whole
+extraction reads its input once, shuffles it at most once (the optional
+salted repartition) and runs one ArrowEvalPython node.
 """
 
 from __future__ import annotations
@@ -100,9 +101,17 @@ def sniff_payloads(df: DataFrame, payload_col: str = "html") -> DataFrame:
     return df.withColumn("mime", mime_sniff(F.col(payload_col)))
 
 
-_ENTRIES_T = (
-    "array<struct<spelling:string,inflection:string,definitions:array<string>>>"
-)
+# payload families the kernel stage parses; any other payload crosses into
+# Python as NULL and comes back as a typed non-text row
+_PARSED_MIMES = "mime LIKE 'text/%' OR mime = 'application/pdf'"
+_BINARY_ROW = {
+    "fmt": "binary",
+    "extracted_text": None,
+    "entries": [],
+    "n_entries": 0,
+    "error": None,
+}
+_PDF_ERROR_ROW = {**_BINARY_ROW, "fmt": "pdf_error", "error": "pdf parse failed"}
 
 
 def extract_any(
@@ -115,74 +124,44 @@ def extract_any(
     (url, warc_ts, lang, fmt, extracted_text, entries, n_entries,
     n_bytes_in, error) + a ``mime`` column.
 
-    Routing: text/html|xml|plain → DOM kernel; application/pdf → native
-    PDF parser (fmt='pdf', extracted text = the PDF's text); all other
-    mimes → fmt='binary' passthrough rows (no text, no error — a media
-    payload is data for the multimodal tier, not a parse failure)."""
-    from html_parser_spark.ops.pdf import pdf_text_pages
+    Routing, per row inside ONE kernel stage: text/html|xml|plain → DOM
+    kernel; application/pdf → native PDF parser (fmt='pdf', extracted text
+    = the PDF's text; 'pdf_error' when it does not parse); all other mimes
+    → fmt='binary' rows (no text, no error — a media payload is data for
+    the multimodal tier, not a parse failure).  ``max_html_bytes`` guards
+    the text and PDF pages as in ``extract_pages``; a binary payload never
+    reaches Python, so it is never 'oversized'."""
+    from html_parser_spark.kernel import parse_document
+    from html_parser_spark.ops.pdf import pdf_row
     from html_parser_spark.spark.pipeline import (
-        extract_pages,
-        oversized_results,
-        route_oversized,
+        PARSED_TYPE,
+        _OVERSIZED_FILL,
+        _results,
+        kernel_stage,
         salted_repartition,
     )
 
-    src = pages.select("url", "warc_ts", "html", "lang")
+    def payload_row(payload: bytes, mime: str) -> dict:
+        if mime.startswith("text/"):
+            return parse_document(payload)
+        if mime == "application/pdf":
+            parsed = pdf_row(payload)
+            if parsed is None:
+                return _PDF_ERROR_ROW
+            return {**_BINARY_ROW, "fmt": "pdf", "extracted_text": parsed["text"]}
+        return _BINARY_ROW
+
+    src = sniff_payloads(pages.select("url", "warc_ts", "html", "lang"), "html")
     if num_partitions:
         src = salted_repartition(src, num_partitions)
-    src = sniff_payloads(src, "html")
-
-    # one kernel branch per text mime, each tagged with its LITERAL label:
-    # no join (and so no shuffle) to re-attach the mime afterwards
-    html_out = None
-    for m in ("text/html", "text/xml", "text/plain"):
-        part = extract_pages(
-            src.filter(F.col("mime") == m).drop("mime"),
-            max_html_bytes=max_html_bytes,
-        ).withColumn("mime", F.lit(m))
-        html_out = part if html_out is None else html_out.unionByName(part)
-
-    def pdf_kernel(pdfs: DataFrame) -> DataFrame:
-        return pdf_text_pages(pdfs).select(
-            "url",
-            "warc_ts",
-            "lang",
-            F.when(F.col("pdf_text").isNotNull(), F.lit("pdf"))
-            .otherwise(F.lit("pdf_error"))
-            .alias("fmt"),
-            F.col("pdf_text").alias("extracted_text"),
-            F.array().cast(_ENTRIES_T).alias("entries"),
-            F.lit(0).alias("n_entries"),
-            "n_bytes_in",
-            F.when(
-                F.col("pdf_text").isNull(), F.lit("pdf parse failed")
-            ).alias("error"),
-            F.lit("application/pdf").alias("mime"),
-        )
-
-    # a pathological PDF must bound task time too, not stall it
-    pdf_out = route_oversized(
-        src.filter(F.col("mime") == "application/pdf"),
+    src = src.selectExpr("*", f"CASE WHEN {_PARSED_MIMES} THEN html END AS _payload")
+    parsed = kernel_stage(
+        src,
+        payload_row,
+        PARSED_TYPE,
         max_html_bytes,
-        pdf_kernel,
-        lambda big: oversized_results(big).withColumn(
-            "mime", F.lit("application/pdf")
-        ),
+        html_col="_payload",
+        args=("mime",),
+        fill=_OVERSIZED_FILL,
     )
-    other = src.filter(
-        ~F.col("mime").isin(
-            "text/html", "text/xml", "text/plain", "application/pdf"
-        )
-    ).select(
-        "url",
-        "warc_ts",
-        "lang",
-        F.lit("binary").alias("fmt"),
-        F.lit(None).cast("string").alias("extracted_text"),
-        F.array().cast(_ENTRIES_T).alias("entries"),
-        F.lit(0).alias("n_entries"),
-        F.length("html").alias("n_bytes_in"),
-        F.lit(None).cast("string").alias("error"),
-        "mime",
-    )
-    return html_out.unionByName(pdf_out).unionByName(other)
+    return _results(parsed, "mime")

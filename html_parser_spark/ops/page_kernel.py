@@ -71,5 +71,5 @@ def extract_page_full(
         PAGE_FULL_TYPE,
         max_html_bytes,
         html_col=html_col,
-        url_col=url_col,
+        args=(f"coalesce(`{url_col}`, '')",),
     )

@@ -41,22 +41,23 @@ text through it, so extraction correctness is closed-form: writer(text) →
 parser → text, byte-identical, with the DuckDB oracle reconstructing the
 expected text symbolically from the source table.
 
-Scale notes (100 TB): :func:`pdf_text` is ONE ``mapInPandas`` stage over
-Arrow batches — column-pruned input (id + payload), one output row per
-input row, zero shuffle; partitioning follows the scan exactly like the
-HTML kernel (`spark/pipeline.py`).  Parsing is bounded per document (one
-pass to index objects, one pass per content stream) and total — any parse
-failure yields a NULL-text row, never a task failure.
+Scale notes (100 TB): :func:`pdf_text` is ONE Arrow row UDF over
+column-pruned input (id + payload), one output row per input row, zero
+shuffle; partitioning follows the scan exactly like the HTML kernel
+(`spark/pipeline.py:row_udf`).  ``ops/mime.extract_any`` calls the same
+:func:`pdf_row` inside its one kernel stage.  Parsing is bounded per
+document (one pass to index objects, one pass per content stream) and
+total — any parse failure yields a NULL-text row, never a task failure.
 """
 
 from __future__ import annotations
 
 import re
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
+
+from html_parser_spark.spark.pipeline import row_udf
 
 _WS = b"\x00\t\n\x0c\r "
 _DELIM = b"()<>[]{}/%"
@@ -575,111 +576,45 @@ PDF_TEXT_SCHEMA = T.StructType(
 )
 
 
+def pdf_row(payload) -> dict | None:
+    """One payload → :func:`extract_pdf`'s dict, or None.  Total: a NULL
+    payload or any parse failure gives None, never a task failure, and a
+    str payload (an ill-typed column, plausible for external parquet fed
+    via --mixed — mime_sniff matches '%PDF' on strings too) is read as
+    latin-1."""
+    try:
+        if isinstance(payload, str):
+            return extract_pdf(payload.encode("latin-1", "replace"))
+        return extract_pdf(bytes(payload))
+    except Exception:  # hostile input: total, never a task death
+        return None
+
+
+def _pdf_text_row(payload) -> dict:
+    parsed = pdf_row(payload) or {"version": None, "n_pages": 0, "text": None}
+    return {
+        "pdf_version": parsed["version"],
+        "n_pages": parsed["n_pages"],
+        "n_chars": len(parsed["text"] or ""),
+        "pdf_text": parsed["text"],
+    }
+
+
 def pdf_text(
     pages: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
 ) -> DataFrame:
-    """PDF payloads → extracted text: ONE ``mapInPandas`` Arrow stage,
-    column-pruned input, one output row per input row, zero shuffle —
-    the same stage shape as the HTML kernel (`spark/pipeline.py:80-126`).
-    Non-PDF / unparsable payloads yield (version NULL, 0 pages, NULL text)
-    rather than failing the task."""
-    pruned = pages.select(
+    """PDF payloads → extracted text: ONE Arrow row UDF
+    (:func:`~html_parser_spark.spark.pipeline.row_udf`), column-pruned
+    input, one output row per input row, zero shuffle — the stage shape
+    of the HTML kernel.  Non-PDF / unparsable / NULL payloads yield
+    (version NULL, 0 pages, NULL text) rather than failing the task."""
+    parse = row_udf(_pdf_text_row, T.StructType(PDF_TEXT_SCHEMA.fields[1:]))
+    # a NULL payload parses as an empty one: a NULL-text row, not a NULL struct
+    empty = F.lit("").cast(pages.schema[payload_col].dataType)
+    return pages.select(
         F.col(id_col).cast("long").alias("doc_id"),
-        F.col(payload_col).alias("payload"),
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PDF_TEXT_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    # bytes() inside the try: a StringType payload column
-                    # (plausible for external parquet fed via --mixed —
-                    # mime_sniff matches '%PDF' on strings too) must
-                    # degrade to a NULL row, never kill the task
-                    if payload is None:
-                        raw = b""
-                    elif isinstance(payload, str):
-                        raw = payload.encode("latin-1", "replace")
-                    else:
-                        raw = bytes(payload)
-                    parsed = extract_pdf(raw)
-                except Exception:  # hostile input: total, never a task death
-                    parsed = None
-                if parsed is None:
-                    rows.append(
-                        {"doc_id": did, "pdf_version": None, "n_pages": 0,
-                         "n_chars": 0, "pdf_text": None}
-                    )
-                else:
-                    rows.append(
-                        {
-                            "doc_id": did,
-                            "pdf_version": parsed["version"],
-                            "n_pages": parsed["n_pages"],
-                            "n_chars": len(parsed["text"]),
-                            "pdf_text": parsed["text"],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pruned.mapInPandas(batches, PDF_TEXT_SCHEMA)
-
-
-PDF_PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("pdf_version", T.StringType()),
-        T.StructField("n_pages", T.IntegerType()),
-        T.StructField("n_bytes_in", T.IntegerType()),
-        T.StructField("pdf_text", T.StringType()),
-    ]
-)
-
-
-def pdf_text_pages(pages: DataFrame) -> DataFrame:
-    """Page-schema variant of :func:`pdf_text` for the mixed-corpus router
-    (`ops/mime.extract_any`): pages(url, warc_ts, html, lang) → one row per
-    page with the crawl keys passed through.  Same single-Arrow-stage,
-    zero-shuffle shape."""
-    pruned = pages.select("url", "warc_ts", "html", "lang")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PDF_PAGES_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for url, ts, payload, lang in zip(
-                pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"]
-            ):
-                raw = b""
-                try:
-                    # bytes() inside the try (see pdf_text): ill-typed
-                    # payloads degrade to a NULL row; raw stays b"" so
-                    # n_bytes_in below never dereferences an unset name
-                    if isinstance(payload, str):
-                        raw = payload.encode("latin-1", "replace")
-                    elif payload is not None:
-                        raw = bytes(payload)
-                    parsed = extract_pdf(raw)
-                except Exception:
-                    parsed = None
-                rows.append(
-                    {
-                        "url": url,
-                        "warc_ts": ts,
-                        "lang": lang,
-                        "pdf_version": parsed["version"] if parsed else None,
-                        "n_pages": parsed["n_pages"] if parsed else 0,
-                        "n_bytes_in": len(raw),
-                        "pdf_text": parsed["text"] if parsed else None,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pruned.mapInPandas(batches, PDF_PAGES_SCHEMA)
+        parse(F.coalesce(F.col(payload_col), empty)).alias("_pdf"),
+    ).select("doc_id", "_pdf.*")
 
 
 # --- deterministic PDF writer (test/oracle fixture) --------------------------
@@ -836,18 +771,15 @@ def make_text_pdf(
     return bytes(buf)
 
 
+def _text_pdf(text: str, variant: int) -> bytes:
+    lines = [text[0:40], text[40:80], text[80:120]]
+    return make_text_pdf([lines[:2], lines[2:]], variant=int(variant))
+
+
 def make_text_pdf_udf():
-    """pandas UDF fixture builder: (text, variant) → PDF bytes with the
-    q_pdf_text page split (2 pages: lines 1-2 then line 3, 40 chars each).
-    Fixture generation only — the OPERATOR under test is :func:`pdf_text`."""
-
-    @F.pandas_udf(T.BinaryType())
-    def _make(text: pd.Series, variant: pd.Series) -> pd.Series:
-        out = []
-        for t, v in zip(text, variant):
-            t = t or ""
-            lines = [t[0:40], t[40:80], t[80:120]]
-            out.append(make_text_pdf([lines[:2], lines[2:]], variant=int(v)))
-        return pd.Series(out)
-
-    return _make
+    """Arrow row UDF that writes fixture PDFs: (text, variant) → PDF bytes
+    with the q_pdf_text page split (2 pages: lines 1-2 then line 3, 40
+    chars each; NULL text is '').  Fixture generation only — the OPERATOR
+    under test is :func:`pdf_text`."""
+    make = row_udf(_text_pdf, T.BinaryType())
+    return lambda text, variant: make(F.coalesce(text, F.lit("")), variant)

@@ -2,15 +2,20 @@
 language-ID heuristic, quality scoring, token counting, fingerprinting.
 
 All pure ``pyspark.sql.functions`` column expressions — JVM-side, whole-stage
-codegen, no Python in the hot path.  Each has an ANSI-SQL twin in
-``__spark_entry__.oracle_sql`` (DuckDB-checked), so regex/semantics here are
-deliberately restricted to the portable subset (ASCII classes, md5).
+codegen, no Python in the hot path — except NFC normalization
+(:func:`nfc_normalize_udf`), which Spark lacks: one Arrow row UDF.  Each
+has an ANSI-SQL twin in ``__spark_entry__.oracle_sql`` (DuckDB-checked),
+so regex/semantics here are deliberately restricted to the portable subset
+(ASCII classes, md5).
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import unicodedata
+
 from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
+
+from html_parser_spark.spark.pipeline import row_udf
 
 # deliberately tiny, portable stopword list (the synthetic corpus vocabulary)
 STOPWORDS = ["the", "a", "of", "and", "to", "in"]
@@ -333,21 +338,20 @@ def strip_invisibles(col: Column) -> Column:
     return F.regexp_replace(col, INVISIBLES_PATTERN, "")
 
 
-def nfc_normalize_udf() -> Column:
-    """Unicode NFC normalization as a vectorized pandas UDF.
+def _nfc(s: str) -> str:
+    return unicodedata.normalize("NFC", s)
+
+
+def nfc_normalize_udf():
+    """Unicode NFC normalization as ONE Arrow row UDF
+    (:func:`~html_parser_spark.spark.pipeline.row_udf`).
 
     Spark has no built-in normalizer, so this is the one text-cleaning
-    step that leaves the JVM — Arrow-batched, `pd.Series.str.normalize`
-    (C-accelerated ICU-equivalent via Python's unicodedata), never
-    per-row Python.  DuckDB's `nfc_normalize` is the oracle twin
-    (q_text_clean): both engines implement Unicode's canonical
-    composition, so outputs are byte-identical."""
-
-    @F.pandas_udf(T.StringType())
-    def _nfc(s: pd.Series) -> pd.Series:
-        return s.str.normalize("NFC")
-
-    return _nfc
+    step that leaves the JVM: Arrow batches, ``unicodedata.normalize`` per
+    string.  DuckDB's `nfc_normalize` is the oracle twin (q_text_clean):
+    both engines implement Unicode's canonical composition, so outputs are
+    byte-identical."""
+    return row_udf(_nfc, T.StringType())
 
 
 def clean_web_text(docs: DataFrame, text_col: str = "text") -> DataFrame:

@@ -2,8 +2,10 @@
 order check, quality flags, exports.
 
 Design (SURVEY.md §7.0): the per-entry passes (M1-M10, M15 rules) fuse into
-ONE Arrow-batched pandas UDF over the parse results' ``entries`` column —
-per-document, no shuffle.  The genuinely relational steps are DataFrame ops:
+ONE Arrow row UDF (``spark/pipeline.py:row_udf``) over the parse results'
+``entries`` column — per-document, no shuffle; the flipper fan-out and the
+M12/M13 export pairs are row UDFs of the same form.  The genuinely
+relational steps are DataFrame ops:
 
 * M11 flipper — in-UDF candidate fan-out + ``explode`` + one
   ``groupBy(flipped_spelling)`` shuffle (uniform keys);
@@ -14,22 +16,10 @@ per-document, no shuffle.  The genuinely relational steps are DataFrame ops:
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
+from html_parser_spark.spark.pipeline import row_udf
 
-def _to_py(o):
-    """Arrow hands nested array columns to pandas UDFs as numpy arrays inside
-    dicts; the engine code expects plain lists (and numpy truthiness raises).
-    Recursive normalization at the UDF boundary."""
-    if isinstance(o, np.ndarray):
-        return [_to_py(x) for x in o.tolist()]
-    if isinstance(o, dict):
-        return {k: _to_py(v) for k, v in o.items()}
-    if isinstance(o, list):
-        return [_to_py(x) for x in o]
-    return o
 
 EXAMPLE_TYPE = T.StructType(
     [
@@ -105,57 +95,56 @@ def _migrate_one_doc(entries: list, dialect: str) -> list[dict]:
 _DIALECT_BY_LANG = {"lez": "lez_rus_babakhanov", "rus": "rus_lez_hajiyev", "tab": "tab_rus"}
 
 
-@F.pandas_udf(V21_ENTRIES_TYPE)
-def migrate_entries_udf(entries: pd.Series, lang: pd.Series) -> pd.Series:
-    out = []
-    for ent, lg in zip(entries, lang):
-        dialect = _DIALECT_BY_LANG.get(lg, "lez_rus_babakhanov")
-        try:
-            out.append(_migrate_one_doc(_to_py(ent) if ent is not None else [], dialect))
-        except Exception:
-            out.append([])
-    return pd.Series(out)
+def _migrate_row(entries: list, lang: str | None) -> list[dict]:
+    try:
+        return _migrate_one_doc(entries, _DIALECT_BY_LANG.get(lang, "lez_rus_babakhanov"))
+    except Exception:
+        return []
+
+
+migrate_entries_udf = row_udf(_migrate_row, V21_ENTRIES_TYPE)
 
 
 def migrate_results(results: DataFrame) -> DataFrame:
     """results(url, lang, entries, …) → + ``entries_v21`` column (fused UDF,
-    zero shuffle — stays in the same stage as the parse when pipelined)."""
+    zero shuffle — stays in the same stage as the parse when pipelined).
+    NULL entries migrate as an empty array."""
     return results.withColumn(
-        "entries_v21", migrate_entries_udf(F.col("entries"), F.col("lang"))
+        "entries_v21",
+        migrate_entries_udf(F.expr("coalesce(entries, array())"), F.col("lang")),
     )
 
 
 # --- M11 flipper ----------------------------------------------------------
 
 
-@F.pandas_udf(T.ArrayType(T.StructType([
-    T.StructField("spelling", T.StringType()),
-    T.StructField("details", T.ArrayType(EXP_DETAILS_TYPE)),
-])))
-def flip_candidates_udf(entries_v21: pd.Series) -> pd.Series:
+def _flip_row(entries_v21: list) -> list[dict]:
     from html_parser_spark.engine.flipper import _flip_candidates, single_word_filter
     from html_parser_spark.jsstr import js_trim
 
-    out = []
-    for exprs in entries_v21:
-        cands = []
-        for e in _to_py(exprs) if exprs is not None else []:
-            if e is None:
-                continue
-            for c in _flip_candidates(e):
-                sp = c["spelling"]
-                if single_word_filter(sp):
-                    cands.append(c)
-                elif (
-                    "," in sp and sp != "" and "-" not in sp
-                    and "{" not in sp and "}" not in sp
-                ):
-                    for part in sp.split(","):
-                        p = js_trim(part.replace("(", "").replace(")", ""))
-                        if single_word_filter(p):
-                            cands.append({"spelling": p, "details": c["details"]})
-        out.append(cands)
-    return pd.Series(out)
+    cands = []
+    for e in entries_v21:
+        if e is None:
+            continue
+        for c in _flip_candidates(e):
+            sp = c["spelling"]
+            if single_word_filter(sp):
+                cands.append(c)
+            elif (
+                "," in sp and sp != "" and "-" not in sp
+                and "{" not in sp and "}" not in sp
+            ):
+                for part in sp.split(","):
+                    p = js_trim(part.replace("(", "").replace(")", ""))
+                    if single_word_filter(p):
+                        cands.append({"spelling": p, "details": c["details"]})
+    return cands
+
+
+flip_candidates_udf = row_udf(_flip_row, T.ArrayType(T.StructType([
+    T.StructField("spelling", T.StringType()),
+    T.StructField("details", T.ArrayType(EXP_DETAILS_TYPE)),
+])))
 
 
 def flip_dictionary_df(migrated: DataFrame) -> DataFrame:
@@ -223,27 +212,22 @@ def order_violations_df(spellings: DataFrame, alphabet: list[str],
 # --- M12 / M13 exports ----------------------------------------------------
 
 
-@F.pandas_udf(T.ArrayType(T.StructType([
+def _corpus_row(entries_v21: list, lang: str | None) -> list[dict]:
+    from html_parser_spark.engine.exports import examples_to_parallel_corpus
+
+    lez_key, rus_key = ("src", "trl") if lang != "rus" else ("trl", "src")
+    try:
+        return examples_to_parallel_corpus(
+            [e for e in entries_v21 if e is not None], lez_key, rus_key
+        )
+    except Exception:
+        return []
+
+
+corpus_pairs_udf = row_udf(_corpus_row, T.ArrayType(T.StructType([
     T.StructField("lez", T.StringType()),
     T.StructField("rus", T.StringType()),
 ])))
-def corpus_pairs_udf(entries_v21: pd.Series, lang: pd.Series) -> pd.Series:
-    from html_parser_spark.engine.exports import examples_to_parallel_corpus
-
-    out = []
-    for exprs, lg in zip(entries_v21, lang):
-        lez_key, rus_key = ("src", "trl") if lg != "rus" else ("trl", "src")
-        try:
-            out.append(
-                examples_to_parallel_corpus(
-                    [e for e in (_to_py(exprs) if exprs is not None else []) if e is not None],
-                    lez_key,
-                    rus_key,
-                )
-            )
-        except Exception:
-            out.append([])
-    return pd.Series(out)
 
 
 def parallel_corpus_df(migrated: DataFrame) -> DataFrame:
@@ -253,24 +237,22 @@ def parallel_corpus_df(migrated: DataFrame) -> DataFrame:
     ).select(F.col("p.lez").alias("lez"), F.col("p.rus").alias("rus"))
 
 
-@F.pandas_udf(T.ArrayType(T.StructType([
+def _training_row(entries_v21: list, lang: str | None) -> list[dict]:
+    from html_parser_spark.engine.exports import expressions_to_training_pairs
+
+    try:
+        pairs = expressions_to_training_pairs(
+            [e for e in entries_v21 if e is not None], is_src_lezgi=(lang != "rus")
+        )
+        return [{"rus": r, "lez": l} for r, l in pairs]
+    except Exception:
+        return []
+
+
+training_pairs_udf = row_udf(_training_row, T.ArrayType(T.StructType([
     T.StructField("rus", T.StringType()),
     T.StructField("lez", T.StringType()),
 ])))
-def training_pairs_udf(entries_v21: pd.Series, lang: pd.Series) -> pd.Series:
-    from html_parser_spark.engine.exports import expressions_to_training_pairs
-
-    out = []
-    for exprs, lg in zip(entries_v21, lang):
-        try:
-            pairs = expressions_to_training_pairs(
-                [e for e in (_to_py(exprs) if exprs is not None else []) if e is not None],
-                is_src_lezgi=(lg != "rus"),
-            )
-            out.append([{"rus": r, "lez": l} for r, l in pairs])
-        except Exception:
-            out.append([])
-    return pd.Series(out)
 
 
 def training_rows_df(migrated: DataFrame, use_templates: bool = True) -> DataFrame:

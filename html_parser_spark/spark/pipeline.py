@@ -13,9 +13,11 @@ Physical plan (SURVEY.md §4.3):
 ``fits`` is ``length(html) <= max_html_bytes`` (NULL html fits); without a
 cap both CASEs are just the kernel's argument and fields.  Everything
 per-document → the parse is a pure partition-parallel map; the only
-exchange is the explicit salting one, guard or no guard.  This kernel and
-the page kernels in ``ops/`` (main content, markdown, metadata, anchors,
-the fused page kernel) each run as one :func:`kernel_stage`.
+exchange is the explicit salting one, guard or no guard.  This kernel, the
+page kernels in ``ops/`` (main content, markdown, metadata, anchors, the
+fused page kernel) and the mixed-payload ``ops/mime.extract_any`` each run
+as one :func:`kernel_stage`; every other per-row Python step is a
+:func:`row_udf`, the form :func:`kernel_stage` is built on.
 """
 
 from __future__ import annotations
@@ -61,29 +63,26 @@ def _fill(f: T.StructField, fill: dict | None) -> str:
     return f"CAST({(fill or {}).get(f.name, default)} AS {f.dataType.simpleString()})"
 
 
-def oversized_rows(df: DataFrame, schema: T.StructType, fill: dict | None = None) -> DataFrame:
-    """``df`` + one column per ``schema`` field, each its :func:`_fill`
-    value: the rows of pages routed around a kernel."""
-    return df.selectExpr("*", *(f"{_fill(f, fill)} AS `{f.name}`" for f in schema.fields))
+def row_udf(fn: Callable, return_type: T.DataType):
+    """``fn`` applied per row as ONE Arrow UDF of type ``return_type``: the
+    one form of every per-row Python step.  Each batch's columns reach
+    Python as plain lists (``to_pylist``: lists and dicts, no numpy or
+    pandas) and ``fn(*row)`` values go back as one Arrow array.  A NULL
+    first argument gives NULL without calling ``fn``.  After each batch the
+    worker settles its heap (``_pyworker.settle``)."""
+    arrow_type = to_arrow_type(return_type)
 
+    @F.arrow_udf(return_type)
+    def per_row(first: pa.Array, *rest: pa.Array) -> pa.Array:
+        rows = zip(first.to_pylist(), *(c.to_pylist() for c in rest))
+        out = pa.array(
+            [None if head is None else fn(head, *tail) for head, *tail in rows],
+            type=arrow_type,
+        )
+        _pyworker.settle()
+        return out
 
-def route_oversized(
-    df: DataFrame,
-    max_html_bytes: int | None,
-    kernel: Callable[[DataFrame], DataFrame],
-    oversized: Callable[[DataFrame], DataFrame],
-    html_col: str = "html",
-) -> DataFrame:
-    """``kernel`` over the pages of at most ``max_html_bytes``, ``oversized``
-    over the rest; no cap → ``kernel(df)``.
-
-    For a Python stage that is not a :func:`kernel_stage` (``ops/mime.py``'s
-    PDF ``mapInPandas``).  The filter+union reads ``df`` twice; a
-    :func:`kernel_stage` routes inside its one stage instead."""
-    if not max_html_bytes:
-        return kernel(df)
-    fits = _fits(html_col, max_html_bytes)
-    return kernel(df.filter(fits)).unionByName(oversized(df.filter(f"NOT ({fits})")))
+    return per_row
 
 
 def kernel_stage(
@@ -93,18 +92,16 @@ def kernel_stage(
     max_html_bytes: int | None = None,
     *,
     html_col: str = "html",
-    url_col: str | None = None,
+    args: tuple[str, ...] = (),
     fill: dict | None = None,
 ) -> DataFrame:
     """``df`` + one column per ``schema`` field, computed per row by
-    ``fn(html)`` (or ``fn(html, url)`` when ``url_col`` is given), which
-    returns a dict keyed by the field names.  NULL html reaches ``fn`` as
-    ``b""`` and NULL url as ``""``.
+    ``fn(html, *args)``, which returns a dict keyed by the field names.
+    NULL html reaches ``fn`` as ``b""``; ``args`` are SQL expressions over
+    ``df`` (e.g. ``"coalesce(url, '')"``) whose values follow it.
 
-    ONE Arrow UDF returning a struct (one ArrowEvalPython node, no
-    shuffle): each batch's columns reach Python as lists and the rows go
-    back as one struct array, with no pandas in between.  Its fields are
-    expanded next to the input columns.
+    ONE :func:`row_udf` returning a struct (one ArrowEvalPython node, no
+    shuffle), whose fields are expanded next to the input columns.
 
     ``max_html_bytes`` guards the same stage: a larger page reaches the UDF
     as NULL, which returns a NULL struct without calling ``fn``, and the
@@ -113,18 +110,6 @@ def kernel_stage(
     guarded stage still reads and shuffles its input once, and no
     oversized byte crosses into Python.  The expressions are SQL text: each
     Column call costs the driver py4j round trips."""
-    row_type = to_arrow_type(schema)
-
-    @F.arrow_udf(schema)
-    def kernel(html: pa.Array, *url: pa.Array) -> pa.Array:
-        args = zip(html.to_pylist(), *(u.to_pylist() for u in url))
-        out = pa.array(
-            [None if page is None else fn(page, *rest) for page, *rest in args],
-            type=row_type,
-        )
-        _pyworker.settle()
-        return out
-
     page = f"coalesce(`{html_col}`, X'')"
     fields = [f"_kernel.`{f.name}`" for f in schema.fields]
     if max_html_bytes:
@@ -134,10 +119,8 @@ def kernel_stage(
             f"CASE WHEN {fits} THEN {v} ELSE {_fill(f, fill)} END"
             for f, v in zip(schema.fields, fields)
         ]
-    args = [F.expr(page)]
-    if url_col is not None:
-        args.append(F.expr(f"coalesce(`{url_col}`, '')"))
-    out = df.withColumn("_kernel", kernel(*args))
+    kernel = row_udf(fn, schema)
+    out = df.withColumn("_kernel", kernel(*(F.expr(a) for a in (page, *args))))
     return out.selectExpr(
         "*", *(f"{v} AS `{f.name}`" for f, v in zip(schema.fields, fields))
     ).drop("_kernel")
@@ -156,7 +139,7 @@ def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
     return df.repartition(num_partitions, F.col("url"))
 
 
-def _results(parsed: DataFrame) -> DataFrame:
+def _results(parsed: DataFrame, *extra: str) -> DataFrame:
     return parsed.selectExpr(
         "url",
         "warc_ts",
@@ -167,6 +150,7 @@ def _results(parsed: DataFrame) -> DataFrame:
         "n_entries",
         "length(html) AS n_bytes_in",
         "error",
+        *extra,
     )
 
 
@@ -177,12 +161,6 @@ _OVERSIZED_FILL = {
 }
 
 
-def oversized_results(pages: DataFrame) -> DataFrame:
-    """The results-table rows of pages routed around every kernel: fmt
-    'oversized', no text or entries, and an error note with the size."""
-    return _results(oversized_rows(pages, PARSED_TYPE, _OVERSIZED_FILL))
-
-
 def extract_pages(
     pages: DataFrame,
     num_partitions: int | None = None,
@@ -191,9 +169,10 @@ def extract_pages(
     """pages(url, warc_ts, html, text, lang) → results table (one row per url).
 
     ``max_html_bytes`` (operational guard for crawl-scale inputs): documents
-    over the cap are NOT parsed — they come back as
-    :func:`oversized_results` rows instead of stalling a task on a
-    pathological page.  Off by default so test/golden semantics are exact."""
+    over the cap are NOT parsed — they come back with fmt 'oversized', no
+    text or entries and an error note with the size (``_OVERSIZED_FILL``)
+    instead of stalling a task on a pathological page.  Off by default so
+    test/golden semantics are exact."""
     from html_parser_spark.kernel import parse_document
 
     # project early so the scan prunes to exactly the columns we read

@@ -25,3 +25,12 @@ def spark():
     s = get_spark(app_name="pytest", master="local[4]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+def assert_one_python_form(plan: str) -> None:
+    """Every Python node of an executed-plan string is an Arrow row UDF
+    (ArrowEvalPython with eval type 250, SQL_SCALAR_ARROW_UDF; a pandas UDF
+    reads 200) and no MapInPandas node remains."""
+    arrow = [line for line in plan.splitlines() if "ArrowEvalPython" in line]
+    assert arrow and all(line.rstrip().endswith(", 250") for line in arrow), arrow
+    assert "MapInPandas" not in plan

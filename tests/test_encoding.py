@@ -4,6 +4,8 @@ kernel's legacy-codec / replacement behavior."""
 
 from pyspark.sql import functions as F
 
+from tests.conftest import assert_one_python_form
+
 
 def _detect(spark, body):
     from html_parser_spark.ops.encoding import charset_of
@@ -69,7 +71,7 @@ def test_decode_pages_legacy_codecs_and_replacement(spark):
 
 
 def test_decode_plan_is_one_arrow_stage_no_shuffle(spark):
-    from html_parser_spark.ops.encoding import decode_pages
+    from html_parser_spark.ops.encoding import decode_pages, normalize_to_utf8
 
     df = spark.createDataFrame([(1, b"x")], "doc_id long, body binary")
     plan = (
@@ -78,6 +80,10 @@ def test_decode_plan_is_one_arrow_stage_no_shuffle(spark):
     assert plan.count("ArrowEvalPython") == 1
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan
+    assert_one_python_form(plan)
+    assert_one_python_form(
+        normalize_to_utf8(df)._jdf.queryExecution().executedPlan().toString()
+    )
 
 
 def test_http_header_charset_precedence(spark):

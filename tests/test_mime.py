@@ -1,10 +1,13 @@
 """MIME sniffing + mixed-corpus extraction routing (ops/mime.py)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from html_parser_spark.ops.mime import extract_any, mime_sniff
 from html_parser_spark.ops.pdf import make_text_pdf
+from tests.conftest import assert_one_python_form
 
 
 def _sniff_all(spark, blobs):
@@ -129,15 +132,34 @@ def test_extract_any_routing(spark, mixed_pages):
     assert bad["fmt"] in ("pdf", "pdf_error")
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_extract_any_no_shuffle(spark, mixed_pages):
-    plan = (
-        extract_any(mixed_pages)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    from html_parser_spark.spark.dictionary import migrate_results
+
+    plan = _plan(extract_any(mixed_pages))
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan
+    assert_one_python_form(plan)
+    assert_one_python_form(_plan(migrate_results(extract_any(mixed_pages))))
+
+
+def _nodes(plan: str, name: str) -> int:
+    return len(re.findall(rf"\b{name}\b", plan))
+
+
+def test_extract_any_reads_shuffles_and_parses_once(spark, mixed_pages, tmp_path):
+    """Sniff -> salted repartition -> ONE kernel stage: one scan, one
+    Exchange and one ArrowEvalPython, however many payload families."""
+    mixed_pages.write.parquet(str(tmp_path / "pages"))
+    src = spark.read.parquet(str(tmp_path / "pages"))
+    plan = _plan(extract_any(src, num_partitions=4, max_html_bytes=2048))
+    assert _nodes(plan, "FileScan") == 1
+    assert _nodes(plan, "Exchange") == 1
+    assert _nodes(plan, "ArrowEvalPython") == 1
+    assert _nodes(plan, "MapInPandas") == 0
 
 
 def test_extract_any_schema_matches_kernel(spark, mixed_pages):
@@ -173,10 +195,15 @@ def test_extract_job_mixed_mode(spark, tmp_path):
 
 def test_extract_any_oversized_pdf_guard(spark):
     small = make_text_pdf([["tiny pdf"]], 0)
+    exact = b"<html><body><p>" + b"w" * (2048 - 33) + b"</p></body></html>"
+    assert len(exact) == 2048
     pages = spark.createDataFrame(
         [
             ("https://m.org/small", None, small, "en"),
             ("https://m.org/big", None, b"%PDF-" + b"x" * 4096, "en"),
+            ("https://m.org/null", None, None, "en"),
+            ("https://m.org/bigpng", None, b"\x89PNG\r\n\x1a\n" + b"\x00" * 4096, "en"),
+            ("https://m.org/exact", None, exact, "en"),
         ],
         "url string, warc_ts timestamp, html binary, lang string",
     )
@@ -184,6 +211,20 @@ def test_extract_any_oversized_pdf_guard(spark):
         r["url"]: r
         for r in extract_any(pages, max_html_bytes=2048).collect()
     }
+    assert len(got) == 5
     assert got["https://m.org/small"]["extracted_text"] == "tiny pdf"
     big = got["https://m.org/big"]
     assert big["fmt"] == "oversized" and "oversized" in big["error"]
+    # NULL html sniffs as octet-stream: a binary row without a size
+    null = got["https://m.org/null"]
+    assert null["fmt"] == "binary" and null["n_bytes_in"] is None
+    assert null["error"] is None and null["mime"] == "application/octet-stream"
+    # a binary payload never reaches the kernel, so it is never 'oversized'
+    png = got["https://m.org/bigpng"]
+    assert png["fmt"] == "binary" and png["error"] is None
+    assert png["n_bytes_in"] == 4104 and png["mime"] == "image/png"
+    # a page of exactly the cap is parsed
+    ex = got["https://m.org/exact"]
+    assert ex["mime"] == "text/html" and ex["fmt"] != "oversized"
+    assert ex["error"] is None and ex["n_bytes_in"] == 2048
+    assert "w" * 100 in ex["extracted_text"]

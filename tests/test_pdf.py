@@ -12,6 +12,7 @@ from html_parser_spark.ops.pdf import (
     make_text_pdf,
     pdf_text,
 )
+from tests.conftest import assert_one_python_form
 
 
 PAGES = [
@@ -173,3 +174,4 @@ def test_spark_pdf_plan_single_arrow_stage(spark):
     plan = pdf_text(df)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") <= 1
     assert "Exchange" not in plan
+    assert_one_python_form(plan)

@@ -558,3 +558,114 @@ def test_centroid_outliers_partition_independent(spark):
             base = got
         else:
             assert got == base
+
+
+# --- dictionary chain pinned over seeded in-repo entries --------------------
+#
+# The fixture-page chain above needs the reference checkout; this one builds
+# its own parse results: lez, rus and tab docs whose definitions carry
+# numbered senses, tags, ';'-carried and bulleted examples, '~' and comma
+# lists, plus a NULL-entries, a NULL-lang and a NULL-element row.  Each
+# output is pinned by the sha256 of its sorted JSON rows, so one changed
+# byte anywhere in an output fails the test.
+
+_CYR = "абвгдежзиклмнопрстуфхцчшэюя"
+
+
+def _seeded_entries(seed: int = 12, docs_per_lang: int = 12):
+    import random
+
+    rnd = random.Random(seed)
+
+    def word():
+        return "".join(rnd.choice(_CYR) for _ in range(rnd.randint(3, 7)))
+
+    templates = [
+        lambda: f"1. {word()}; {{{word()} {word()}}} {word()} {word()}",
+        lambda: f"♦ {{{word()} {word()}}} {word()}; {{{word()}}} {word()}",
+        lambda: f"{{{word()}}} {word()} {word()}",
+        lambda: f"сущ. {word()}",
+        lambda: f"<перен.> {word()}, {word()}, {word()}",
+        lambda: f"II {word()}",
+        lambda: f"1) {word()} 2) {{~ {word()}}} {word()}",
+        lambda: f"см. {word()}",
+        lambda: f"{word()} (разг.); {{{word()}}} {word()}; {word()}",
+        lambda: word(),
+    ]
+    rows = []
+    for lang in ("lez", "rus", "tab"):
+        heads = [word().upper() for _ in range(8)]
+        for d in range(docs_per_lang):
+            entries = []
+            for _ in range(rnd.randint(2, 5)):
+                defs = [rnd.choice(templates)() for _ in range(rnd.randint(1, 3))]
+                infl = rnd.choice([None, word()])
+                entries.append((rnd.choice(heads), infl, defs))
+            rows.append((f"seed://{lang}/{d}", lang, entries))
+    rows.append(("seed://null-entries", "tab", None))
+    rows.append(("seed://null-lang", None, [("АБА", None, ["{аба} абу; кафтан"])]))
+    rows.append(
+        ("seed://null-element", "rus", [None, ("БАБ", None, [None, "1. отец"])])
+    )
+    return rows
+
+
+def _rows_sha(df, sort_lists=()):
+    import hashlib
+    import json
+
+    lines = []
+    for r in df.collect():
+        d = r.asDict(recursive=True)
+        for c in sort_lists:
+            d[c] = sorted(d[c], key=lambda v: json.dumps(v, sort_keys=True, ensure_ascii=False))
+        lines.append(json.dumps(d, sort_keys=True, ensure_ascii=False, default=str))
+    return len(lines), hashlib.sha256("\n".join(sorted(lines)).encode("utf-8")).hexdigest()
+
+
+_DICT_CHAIN_PINS = {
+    "migrate_results": (
+        39,
+        "580ea616c194c71964adb089040afcc8a7ea8a9178f4fb15ec8d268af31c8105",
+    ),
+    "flip_dictionary_df": (
+        194,
+        "398805fe9591e6bfe0f5b20db27a09c9b3bdab9bac972eb28e8c7b2b6b286386",
+    ),
+    "parallel_corpus_df": (
+        163,
+        "2665898952ac8037f996383734f097314922adb0b7706e3638d81c34edcf4bab",
+    ),
+    "training_rows_df": (
+        422,
+        "877c95a5216c194b2a352fa8f18b4e0e87212ee71ccd115319fd0db28aeeb06c",
+    ),
+}
+
+
+def test_dictionary_chain_pinned(spark):
+    from html_parser_spark.spark.dictionary import (
+        flip_dictionary_df,
+        migrate_results,
+        parallel_corpus_df,
+        training_rows_df,
+    )
+
+    results = spark.createDataFrame(
+        _seeded_entries(),
+        "url string, lang string, "
+        "entries array<struct<spelling:string,inflection:string,definitions:array<string>>>",
+    )
+    mig = migrate_results(results).persist()
+    try:
+        got = {
+            "migrate_results": _rows_sha(mig),
+            # collect_list order follows the shuffle: pin details as a multiset
+            "flip_dictionary_df": _rows_sha(flip_dictionary_df(mig), sort_lists=["details"]),
+            "parallel_corpus_df": _rows_sha(parallel_corpus_df(mig)),
+            "training_rows_df": _rows_sha(training_rows_df(mig)),
+        }
+    finally:
+        mig.unpersist()
+    assert all(n > 0 for n, _ in got.values()), got
+    assert got == _DICT_CHAIN_PINS

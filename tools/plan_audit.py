@@ -78,6 +78,10 @@ def main():
     from html_parser_spark.spark.session import get_spark
 
     spark = get_spark(app_name="plan-audit", master="local[4]", shuffle_partitions=8)
+    # explain cuts scan metadata (DataFilters, PushedFilters, ...) to 100
+    # characters by default, before normalize_ids runs: a digit-count shift
+    # in an earlier query's ids would then move the cut.  Whole lines only.
+    spark.conf.set("spark.sql.maxMetadataStringLength", 1 << 20)
     checks = []  # (name, plan, notes)
     for name, c in entrymod.contracts().items():
         if c.plan is not None:

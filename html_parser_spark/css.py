@@ -22,6 +22,8 @@ ASCII-case-insensitively, as browsers do.
 
 from __future__ import annotations
 
+import functools
+import operator
 import re
 
 from html_parser_spark.dom import Node
@@ -38,9 +40,6 @@ _NAMED_COLORS = {
     "aqua": (0, 255, 255), "lime": (0, 255, 0), "orange": (255, 165, 0),
     "windowtext": (0, 0, 0),  # MS system color — Chromium maps to black
 }
-
-
-import functools
 
 
 @functools.lru_cache(maxsize=4096)
@@ -112,17 +111,75 @@ _SIMPLE_SEL = re.compile(
     r"^([a-zA-Z][a-zA-Z0-9:_-]*)?(\.[^.#\s]+)?(#[^.#\s]+)?$"
 )
 
+# add_css fast path: a sheet that is only flat ``selector{declarations}``
+# rules, each selector one tag, .class, #id or tag.class (idrviewer and Word
+# sheets) — no comments, @-rules, selector lists or combinators
+_FLAT_RULE_RE = re.compile(
+    r"[ \t\n\r\f]*([a-zA-Z][a-zA-Z0-9_-]*)?(?:\.([\w-]+))?(?:#([\w-]+))?"
+    r"[ \t\n\r\f]*\{([^{}]*)\}"
+)
+_FLAT_TAIL_RE = re.compile(r"[ \t\n\r\f]*")
+
+
+def _apply_decls(style: dict[str, str], decls: dict[str, str]) -> None:
+    """Apply a declaration block to ``style`` (only the probed properties)."""
+    for prop, raw in decls.items():
+        if prop == "color":
+            norm = normalize_color(raw)
+            if norm:
+                style["color"] = norm
+        elif prop == "font-weight":
+            norm = normalize_font_weight(raw)
+            if norm:
+                style["font-weight"] = norm
+        elif prop == "font-style":
+            v = raw.strip().lower()
+            if v in ("italic", "oblique", "normal"):
+                style["font-style"] = "italic" if v == "oblique" else v
+        elif prop in ("font-family", "font-size", "left", "bottom"):
+            style[prop] = raw.strip()
+        elif prop == "font":  # shorthand — only flags we care about
+            v = raw.lower()
+            if "italic" in v:
+                style["font-style"] = "italic"
+            if "bold" in v:
+                style["font-weight"] = "700"
+
+
+# declaration-block text → (declarations, effect): ``effect`` is what
+# ``_apply_decls`` writes, so applying a block is one ``dict.update`` (every
+# write depends only on the block).  Generated sheets repeat their blocks
+# (per-span ``left``/``bottom`` pairs, inline styles); bounded like
+# ``dom._ATTRS_MEMO``
+_BLOCK_MEMO: dict[str, tuple[dict, dict]] = {}
+_BLOCK_MEMO_MAX = 8192
+
+
+def declaration_block(body: str) -> tuple[dict, dict]:
+    hit = _BLOCK_MEMO.get(body)
+    if hit is None:
+        decls = parse_declarations(body)
+        effect: dict[str, str] = {}
+        _apply_decls(effect, decls)
+        hit = (decls, effect)
+        if len(_BLOCK_MEMO) < _BLOCK_MEMO_MAX:
+            _BLOCK_MEMO[body] = hit
+    return hit
+
 
 class Rule:
-    __slots__ = ("tag", "cls", "elid", "specificity", "order", "decls")
+    __slots__ = ("tag", "cls", "elid", "specificity", "order", "effect")
 
-    def __init__(self, tag, cls, elid, order, decls):
+    def __init__(self, tag, cls, elid, order, effect):
         self.tag = tag
         self.cls = cls
         self.elid = elid
         self.specificity = (100 if elid else 0) + (10 if cls else 0) + (1 if tag else 0)
         self.order = order
-        self.decls = decls
+        self.effect = effect  # what the declarations write (declaration_block)
+
+
+_CASCADE_ORDER = operator.attrgetter("specificity", "order")
 
 
 class StyleSheet:
@@ -134,7 +191,45 @@ class StyleSheet:
         self.by_tag: dict[str, list[Rule]] = {}
         self._order = 0
 
+    def _add_rule(self, tag, cls, elid, block):
+        if cls and self.quirks:
+            cls = cls.lower()
+        rule = Rule(tag, cls, elid, self._order, block[1])
+        self._order += 1
+        self.rules.append(rule)
+        if elid:
+            self.by_id.setdefault(elid, []).append(rule)
+        elif cls:
+            self.by_class.setdefault(cls, []).append(rule)
+        elif tag:
+            self.by_tag.setdefault(tag, []).append(rule)
+
+    def _add_flat(self, css_text: str) -> bool:
+        """The fast path: add every rule of a flat sheet and return True, or
+        add nothing and return False (the general scan decides)."""
+        if "/*" in css_text or "<!--" in css_text or "-->" in css_text:
+            return False
+        matches = []
+        end = 0
+        for m in _FLAT_RULE_RE.finditer(css_text):
+            if m.start() != end:
+                return False
+            matches.append(m)
+            end = m.end()
+        if _FLAT_TAIL_RE.match(css_text, end).end() != len(css_text):
+            return False
+        for m in matches:
+            tag, cls, elid, body = m.groups()
+            if tag is None and cls is None and elid is None:
+                continue
+            block = declaration_block(body)
+            if block[0]:
+                self._add_rule(tag.lower() if tag else None, cls, elid, block)
+        return True
+
     def add_css(self, css_text: str):
+        if self._add_flat(css_text):
+            return
         # strip HTML comment guards and /* */ comments
         text = css_text.replace("<!--", "").replace("-->", "")
         text = re.sub(r"/\*.*?\*/", "", text, flags=re.S)
@@ -169,8 +264,8 @@ class StyleSheet:
                 i = j
             if selector.startswith("@"):
                 continue  # @font-face/@page/@supports — irrelevant to probes
-            decls = parse_declarations(body)
-            if not decls:
+            block = declaration_block(body)
+            if not block[0]:
                 continue
             for part in selector.split(","):
                 part = part.strip()
@@ -184,61 +279,46 @@ class StyleSheet:
                 tag = m.group(1).lower() if m.group(1) else None
                 cls = m.group(2)[1:] if m.group(2) else None
                 elid = m.group(3)[1:] if m.group(3) else None
-                if cls and self.quirks:
-                    cls = cls.lower()
-                rule = Rule(tag, cls, elid, self._order, decls)
-                self._order += 1
-                self.rules.append(rule)
-                if elid:
-                    self.by_id.setdefault(elid, []).append(rule)
-                elif cls:
-                    self.by_class.setdefault(cls, []).append(rule)
-                elif tag:
-                    self.by_tag.setdefault(tag, []).append(rule)
+                self._add_rule(tag, cls, elid, block)
 
-    def matching_rules(self, el: Node) -> list[Rule]:
-        cand = self.id_rules(el)
-        cand.extend(self.class_tag_rules(el))
-        cand.sort(key=lambda r: (r.specificity, r.order))
-        return cand
-
-    def id_rules(self, el: Node) -> list[Rule]:
-        """Rules whose selector carries an #id (specificity ≥ 100 — they
-        always cascade AFTER every class/tag rule, so applying them on top of
-        the class/tag base reproduces the full sorted cascade)."""
-        elid = el.attrs.get("id")
-        if not elid:
-            return []
+    def id_rules(self, tag: str, cls: str | None, elid: str) -> list[Rule]:
+        """Rules of the #id ``elid`` that match, in cascade order (read-only;
+        specificity ≥ 100 — they always cascade AFTER every class/tag rule,
+        so applying them on top of the class/tag base reproduces the full
+        sorted cascade)."""
         rules = self.by_id.get(elid)
         if not rules:
             return []
+        if len(rules) == 1 and rules[0].tag is None and rules[0].cls is None:
+            return rules  # the idrviewer shape: one unconditional rule per #id
         cand = [
             r
             for r in rules
-            if (r.tag is None or r.tag == el.tag) and self._cls_ok(r, el)
+            if (r.tag is None or r.tag == tag) and (r.cls is None or self._cls_ok(r, cls))
         ]
         if len(cand) > 1:
-            cand.sort(key=lambda r: (r.specificity, r.order))
+            cand.sort(key=_CASCADE_ORDER)
         return cand
 
-    def class_tag_rules(self, el: Node) -> list[Rule]:
+    def class_tag_rules(self, tag: str, cls: str | None) -> list[Rule]:
+        """Matching class and tag rules (``cls``: the class attribute), in
+        cascade order."""
         cand: list[Rule] = []
-        classes = el.class_list
-        if self.quirks:
-            classes = [c.lower() for c in classes]
-        for c in classes:
-            for r in self.by_class.get(c, ()):
-                if r.tag is None or r.tag == el.tag:
-                    cand.append(r)
-        for r in self.by_tag.get(el.tag, ()):
-            cand.append(r)
-        cand.sort(key=lambda r: (r.specificity, r.order))
+        if cls:
+            by_class = self.by_class
+            for c in cls.split():
+                if self.quirks:
+                    c = c.lower()
+                for r in by_class.get(c, ()):
+                    if r.tag is None or r.tag == tag:
+                        cand.append(r)
+        cand.extend(self.by_tag.get(tag, ()))
+        if len(cand) > 1:
+            cand.sort(key=_CASCADE_ORDER)
         return cand
 
-    def _cls_ok(self, r: Rule, el: Node) -> bool:
-        if not r.cls:
-            return True
-        classes = el.class_list
+    def _cls_ok(self, r: Rule, cls: str | None) -> bool:
+        classes = cls.split() if cls else []
         if self.quirks:
             return r.cls in (c.lower() for c in classes)
         return r.cls in classes
@@ -248,7 +328,7 @@ class StyleSheet:
 _UA_BOLD = frozenset("b strong th h1 h2 h3 h4 h5 h6".split())
 _UA_ITALIC = frozenset("i em cite var dfn address".split())
 
-_ROOT_STYLE = {
+ROOT_STYLE = {
     "color": "rgb(0, 0, 0)",
     "font-style": "normal",
     "font-weight": "400",
@@ -257,6 +337,57 @@ _ROOT_STYLE = {
     "left": "auto",
     "bottom": "auto",
 }
+
+
+def cascade(
+    sheet: StyleSheet, inherited: dict, tag: str, attrs: dict, shape_memo: dict
+) -> dict[str, str]:
+    """One element's computed style from its parent's (``inherited``;
+    ``ROOT_STYLE`` under the document) — the step ``StyleResolver`` and the
+    DOM-free scanners (``formats/fastscan.py``) share.
+
+    Structural memo: the class/tag part of the cascade is a pure function of
+    (inherited-style identity, tag, class), and generated HTML has millions
+    of elements but only a handful of such shapes, so rule matching runs once
+    per shape.  ``shape_memo`` is keyed by ``id(inherited)``: the caller
+    keeps every style it passes as ``inherited`` alive while it uses the
+    memo.
+
+    idrviewer/pdf2htmlEX give every span a unique #id position rule and/or
+    inline style, so the shape covers only the SHARED part of the cascade
+    (UA defaults + class/tag rules).  #id rules have specificity ≥ 100 —
+    they always sort after every class/tag rule — so applying them (then
+    inline) on top of the memoized base yields exactly the fully-sorted
+    cascade.
+
+    ALIASING: when the element has no #id rules and no inline style the
+    SHARED memoized base dict is returned (every same-shape element gets the
+    same object).  Callers treat the result as read-only."""
+    cls = attrs.get("class")
+    shape = (id(inherited), tag, cls)
+    base = shape_memo.get(shape)
+    if base is None:
+        base = {p: inherited[p] for p in INHERITED}
+        base["left"] = "auto"
+        base["bottom"] = "auto"
+        if tag in _UA_BOLD:
+            base["font-weight"] = "700"
+        if tag in _UA_ITALIC:
+            base["font-style"] = "italic"
+        for r in sheet.class_tag_rules(tag, cls):
+            base.update(r.effect)
+        shape_memo[shape] = base
+    elid = attrs.get("id")
+    id_rules = sheet.id_rules(tag, cls, elid) if elid else ()
+    inline = attrs.get("style")
+    if id_rules or inline:
+        style = base.copy()
+        for r in id_rules:
+            style.update(r.effect)
+        if inline:
+            style.update(declaration_block(inline)[1])
+        return style
+    return base
 
 
 class StyleResolver:
@@ -268,12 +399,8 @@ class StyleResolver:
         self.sheet = StyleSheet(quirks)
         for style_el in doc.query_selector_all("style"):
             self.sheet.add_css(style_el.text_content)
+        # keeps every computed style alive, as ``cascade`` requires
         self._memo: dict[int, dict[str, str]] = {}
-        # structural memo: computed style is a pure function of
-        # (inherited-style identity, tag, class, id, inline style) — generated
-        # HTML has millions of elements but only a handful of such shapes, so
-        # rule matching + cascade run once per shape, not once per element.
-        # (inherited dicts are kept alive by the memos, so id() keys are stable)
         self._shape_memo: dict[tuple, dict[str, str]] = {}
 
     def computed(self, el: Node) -> dict[str, str]:
@@ -285,67 +412,10 @@ class StyleResolver:
         if parent is not None and parent.kind == "element":
             inherited = self.computed(parent)
         else:
-            inherited = _ROOT_STYLE
-        attrs = el.attrs
-        inline = attrs.get("style")
-        # idrviewer/pdf2htmlEX give every span a unique #id position rule
-        # and/or inline style, so the shape key covers only the SHARED part of
-        # the cascade (UA defaults + class/tag rules).  #id rules have
-        # specificity ≥ 100 — they always sort after every class/tag rule —
-        # so applying them (then inline) on top of the memoized base yields
-        # exactly the fully-sorted cascade.
-        shape = (id(inherited), el.tag, attrs.get("class"))
-        base = self._shape_memo.get(shape)
-        if base is None:
-            base = {p: inherited[p] for p in INHERITED}
-            base["left"] = "auto"
-            base["bottom"] = "auto"
-            if el.tag in _UA_BOLD:
-                base["font-weight"] = "700"
-            if el.tag in _UA_ITALIC:
-                base["font-style"] = "italic"
-            for r in self.sheet.class_tag_rules(el):
-                self._apply_decls(base, r.decls)
-            self._shape_memo[shape] = base
-        # ALIASING: when the element has no #id rules and no inline style the
-        # SHARED _shape_memo base dict is returned directly (every same-shape
-        # element gets the same object).  Callers must treat computed() output
-        # as read-only — mutate a copy, never the returned dict, or every
-        # sibling with this shape silently changes style.
-        style = base
-        id_rules = self.sheet.id_rules(el) if attrs.get("id") else ()
-        if id_rules or inline:
-            style = base.copy()
-            for r in id_rules:
-                self._apply_decls(style, r.decls)
-            if inline:
-                self._apply_decls(style, parse_declarations(inline))
+            inherited = ROOT_STYLE
+        style = cascade(self.sheet, inherited, el.tag, el.attrs, self._shape_memo)
         self._memo[key] = style
         return style
-
-    @staticmethod
-    def _apply_decls(style: dict[str, str], decls: dict[str, str]) -> None:
-        for prop, raw in decls.items():
-            if prop == "color":
-                norm = normalize_color(raw)
-                if norm:
-                    style["color"] = norm
-            elif prop == "font-weight":
-                norm = normalize_font_weight(raw)
-                if norm:
-                    style["font-weight"] = norm
-            elif prop == "font-style":
-                v = raw.strip().lower()
-                if v in ("italic", "oblique", "normal"):
-                    style["font-style"] = "italic" if v == "oblique" else v
-            elif prop in ("font-family", "font-size", "left", "bottom"):
-                style[prop] = raw.strip()
-            elif prop == "font":  # shorthand — only flags we care about
-                v = raw.lower()
-                if "italic" in v:
-                    style["font-style"] = "italic"
-                if "bold" in v:
-                    style["font-weight"] = "700"
 
     # JS-flavored accessors -------------------------------------------------
     def color(self, el: Node) -> str:

@@ -20,6 +20,12 @@ reproduces exactly the DOM surface those parsers touch:
 
 Entities are decoded by html.parser (``&nbsp;`` → U+00A0), matching the
 browser's textContent.
+
+``parse_html`` runs a regex tokenizer (``_fast_parse``) that reproduces
+html.parser's event stream on machine-generated HTML; at the first tag it
+cannot read it resumes html.parser on the same builder for the rest of the
+page, so every page is tokenized once.  ``parse_html_slow`` (html.parser over
+the whole page) is the differential-testing baseline.
 """
 
 from __future__ import annotations
@@ -242,7 +248,10 @@ _TOKEN_RE = re.compile(
     r"|<!(?P<decl>[^>]*)>"
     r"|<\?(?P<pi>[^>]*)>"
     r"|</\s*(?P<endtag>[a-zA-Z][-.:\w]*)\s*>"
-    r"|<(?P<starttag>[a-zA-Z][-.:\w]*)(?P<attrs>(?:[^>\"']|\"[^\"]*\"|'[^']*')*?)(?P<selfclose>/?)>",
+    r"|<(?P<starttag>[a-zA-Z][-.:\w]*)"
+    # attributes up to the first unquoted ">" or "/>"; possessive, because a
+    # quote must pair with the next one and a stop is never revisited
+    r"(?P<attrs>(?:[^>\"'/]++|/(?!>)|\"[^\"]*+\"|'[^']*+')*+)(?P<selfclose>/?)>",
     re.S,
 )
 
@@ -285,9 +294,11 @@ _SIMPLE_ATTRS_ALL = re.compile(r'(?:\s+[a-z][a-z0-9_:.-]*="[^"&]*")+\s*')
 _SIMPLE_ATTRS_PAIR = re.compile(r'([a-z][a-z0-9_:.-]*)="([^"]*)"')
 
 
-def _attrs_dict(s: str) -> dict:
+def _attrs_view(s: str) -> dict:
+    """The memoized attribute dict of a raw attribute string — shared, so
+    read-only (the DOM-free scanners read class/id/style from it)."""
     if not s:
-        return {}
+        return _EMPTY_ATTRS
     hit = _ATTRS_MEMO.get(s)
     if hit is None:
         if _SIMPLE_ATTRS_ALL.fullmatch(s):
@@ -296,18 +307,30 @@ def _attrs_dict(s: str) -> dict:
             hit = dict(_parse_attrs(s))
         if len(_ATTRS_MEMO) < _ATTRS_MEMO_MAX:
             _ATTRS_MEMO[s] = hit
-    return hit.copy()
+    return hit
+
+
+def _attrs_dict(s: str) -> dict:
+    return _attrs_view(s).copy() if s else {}
 
 
 _EMPTY_ATTRS: dict = {}  # shared by text/comment nodes (never read or written)
 _NODE_NEW = Node.__new__
 
 
-def _fast_parse(text: str, builder: "_DomBuilder") -> bool:
+def _fast_parse(text: str, builder: "_DomBuilder") -> None:
     """Single regex scan producing the same tree as the html.parser-driven
     builder (byte-parity pinned by goldens + a differential test).  Node
     construction and the open/close bookkeeping are inlined — this loop runs
     once per token across every document the executor parses.
+
+    Resume: a data run holding tag-like text (``_SUSPICIOUS_RE``) means the
+    regex skipped markup it cannot read, such as an unterminated attribute
+    quote.  The scan then emits the run's text up to its first ``<`` and
+    feeds the rest of the page to html.parser on the same builder (same
+    node stack): html.parser reaches that ``<`` in the state the regex
+    leaves — data mode, the same open elements — so the tree equals
+    ``parse_html_slow``'s while the page is tokenized once.
 
     Text/comment nodes share one immutable attrs dict and a () children
     tuple: no parser/format-kernel path reads either (kind is checked first
@@ -324,7 +347,12 @@ def _fast_parse(text: str, builder: "_DomBuilder") -> bool:
         if start > pos:
             data = text[pos:start]
             if "<" in data and suspicious_search(data):
-                builder.suspicious = True
+                resume = text.index("<", pos)
+                if resume > pos:
+                    builder.handle_data(_unescape(text[pos:resume]))
+                builder.feed(text[resume:])
+                builder.close()
+                return
             if "&" in data:
                 data = _unescape(data)
             parent = stack[-1]
@@ -368,7 +396,7 @@ def _fast_parse(text: str, builder: "_DomBuilder") -> bool:
                     cm = raw_close.search(text, pos)
                     end = cm.start() if cm else n
                     if end > pos:
-                        builder.handle_data_raw(text[pos:end])
+                        builder.handle_data(text[pos:end])
                     builder.handle_endtag(tag)
                     pos = cm.end() if cm else n
         elif kind == "endtag":
@@ -384,53 +412,28 @@ def _fast_parse(text: str, builder: "_DomBuilder") -> bool:
             builder.handle_decl(m.group(2))
         # processing instructions: ignored (html.parser emits handle_pi; the
         # DOM builder has no handler for them either)
-    return True
 
 
+# tag-like text: markup the regex tokenizer skipped (fastscan declines on it,
+# _fast_parse resumes html.parser at it)
 _SUSPICIOUS_RE = re.compile(r"<[a-zA-Z/!?]")
 
 
-def _builder_handle_data_fast(self, data: str):
-    # tag-like text means the scanner skipped markup it couldn't tokenize
-    # (e.g. an unterminated attribute quote) — flag for the slow-path redo so
-    # malformed-input recovery matches html.parser byte-for-byte
-    if "<" in data and _SUSPICIOUS_RE.search(data):
-        self.suspicious = True
-    if "&" in data:
-        data = _unescape(data)
-    self.handle_data(data)
-
-
-def _builder_handle_data_raw(self, data: str):
-    self.handle_data(data)
-
-
-_DomBuilder.handle_data_fast = _builder_handle_data_fast
-_DomBuilder.handle_data_raw = _builder_handle_data_raw
-
-
 def parse_html_slow(text: str) -> Node:
-    """stdlib html.parser reference path (differential-testing baseline)."""
+    """stdlib html.parser over the whole page (differential-testing
+    baseline for ``parse_html``)."""
     b = _DomBuilder()
     b.feed(text)
     b.close()
     return b.root
 
 
-def parse_html(text: str, suspicious: bool = False) -> Node:
-    """Parse an HTML document string into a DOM tree; returns the document node.
-
-    ``suspicious``: the caller's own scan of ``text`` (``fastscan``, same
-    tokenizer and rule) already found markup the tokenizer skips, which
-    ``_fast_parse`` would flag only after a full pass; go straight to the
-    html.parser path."""
-    if suspicious:
-        return parse_html_slow(text)
+def parse_html(text: str) -> Node:
+    """Parse an HTML document string into a DOM tree; returns the document
+    node.  One pass: the regex tokenizer, handing the page's tail to
+    html.parser from the first tag it cannot read (``_fast_parse``)."""
     b = _DomBuilder()
-    b.suspicious = False
     _fast_parse(text, b)
-    if b.suspicious:
-        return parse_html_slow(text)
     return b.root
 
 

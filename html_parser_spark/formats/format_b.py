@@ -23,6 +23,11 @@ Replicated JS quirks:
   JS-whitespace character (``Number(' ') === 0``) — so ``' .'`` also starts a
   split point.  ``js_char_not_nan`` reproduces this exactly.
 * Output records are ``{spelling, definitions: [str]}`` — no inflection.
+
+Paths: ``kernel.parse_document`` first runs ``fastscan.scan_format_b``, a
+one-pass scanner that builds no DOM and must equal this module (plus the
+P20 flatten) on every page it takes (tests/test_fastscan_styled.py).  This
+module is the executable spec, and the path for pages that scanner declines.
 """
 
 from __future__ import annotations

@@ -26,6 +26,11 @@ post-processes) — entries legitimately span page breaks.  ``scan_spans`` /
 ``postprocess_spans`` are exposed separately so callers can reproduce that
 corpus-level fold (golden parity tests) while the Spark kernel stays
 per-document (each url parsed independently).
+
+Paths: ``kernel.parse_document`` first runs ``fastscan.scan_format_c``, a
+one-pass scanner that builds no DOM and must equal this module (plus the
+P20 flatten) on every page it takes (tests/test_fastscan_styled.py).  This
+module is the executable spec, and the path for pages that scanner declines.
 """
 
 from __future__ import annotations
@@ -45,9 +50,10 @@ TAG = "Tag"
 def _is_uppercase(text: str) -> bool:
     """P13 — JS ``\\p{Uppercase}`` count (>1) after stripping palochka/I,
     plus text ≠ toLowerCase(text)."""
+    if text == text.lower():
+        return False
     stripped = text.replace("Ӏ", "").replace("I", "")
-    count = sum(1 for ch in stripped if ch.isupper())
-    return count > 1 and text != text.lower()
+    return sum(map(str.isupper, stripped)) > 1
 
 
 def font_style_props(font_family: str) -> tuple[bool, bool, bool]:
@@ -63,25 +69,26 @@ def scan_spans(html_text: str) -> list[dict]:
     return scan_spans_doc(parse_html(html_text))
 
 
+def text_object(text: str, st: dict) -> dict:
+    """P12 — one span's TextObject from its text and computed style."""
+    return {
+        "text": text,
+        "isUpperCase": _is_uppercase(text),
+        "style": {
+            "fontFamily": st["font-family"],
+            "fontSize": st["font-size"],
+            "left": st["left"],
+            "bottom": st["bottom"],
+        },
+    }
+
+
 def scan_spans_doc(doc) -> list[dict]:
     styles = StyleResolver(doc)
-    out = []
-    for el in doc.query_selector_all("span"):
-        text = el.text_content
-        st = styles.computed(el)
-        out.append(
-            {
-                "text": text,
-                "isUpperCase": _is_uppercase(text),
-                "style": {
-                    "fontFamily": st["font-family"],
-                    "fontSize": st["font-size"],
-                    "left": st["left"],
-                    "bottom": st["bottom"],
-                },
-            }
-        )
-    return out
+    return [
+        text_object(el.text_content, styles.computed(el))
+        for el in doc.query_selector_all("span")
+    ]
 
 
 def postprocess_spans(extracted: list[dict]) -> list[dict]:

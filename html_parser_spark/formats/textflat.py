@@ -7,7 +7,7 @@ parser) browser-free:
         .map(el => el.innerText.split('\\n')).flat()
         .filter(el => el.match(/[^\\s]+/g))
         .reduce((prev, curr) => prev + curr)       // bare concat, no separator
-        .replaceAll(/\\s{2,}/g, ' ')
+        .replaceAll(/\\s{2,}/g, ' ')            // JS whitespace: jsstr.JS_WS_CHARS
 
 ``innerText`` is layout-aware in a browser; we use a documented deterministic
 approximation (whitespace collapsed per CSS ``white-space: normal``, ``<br>``
@@ -21,7 +21,7 @@ from __future__ import annotations
 import re
 
 from html_parser_spark.dom import Node, parse_html
-from html_parser_spark.jsstr import JS_NON_WS_RE
+from html_parser_spark.jsstr import JS_NON_WS_RE, JS_WS_COLLAPSE_RE
 
 _WS_RUN = re.compile(r"[\t\n\x0b\x0c\r ]+")
 # sub is a no-op unless the line carries a control-ws char or a double space —
@@ -89,4 +89,4 @@ def extract_text_doc(doc: Node, p_elements: list[Node] | None = None) -> str:
     if not kept:
         return ""
     concat = "".join(kept)  # reduce((prev, curr) => prev + curr)
-    return re.sub(r"\s{2,}", " ", concat)
+    return JS_WS_COLLAPSE_RE.sub(" ", concat)

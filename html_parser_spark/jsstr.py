@@ -33,6 +33,9 @@ JS_WS_RE = re.compile(_JS_WS_CLASS)
 # "has any non-whitespace char" — the allocation-free truthiness probe for
 # JS `s.match(/[^\s]+/g)` (sub-to-empty-and-test builds a throwaway string)
 JS_NON_WS_RE = re.compile("[^" + JS_WS_CHARS + "]")
+# JS `/\s{2,}/g`: a run of two or more JS whitespace characters (P20's final
+# collapse; Python's `\s` adds U+001C-U+001F and U+0085 and lacks U+FEFF)
+JS_WS_COLLAPSE_RE = re.compile(_JS_WS_CLASS + "{2,}")
 _LEADING_WS_RE = re.compile("^" + _JS_WS_CLASS)
 _TRAILING_WS_RE = re.compile(_JS_WS_CLASS + "$")
 

@@ -11,6 +11,16 @@ Entries are normalized to the V1 record shape across all four formats
 
   {spelling: str, inflection: str|None, definitions: [str]}
 
+Paths: formats A, B and C first try their one-pass scanner
+(``formats/fastscan.py``: ``scan_format_a``, ``scan_format_b``,
+``scan_format_c``), which builds no DOM.  A scanner returns None on markup
+only the DOM path decides (suspicious markup, the A body fallback, an
+element nested inside a C span, ...); those pages, and every D and generic
+page, take ONE ``parse_html`` shared by the P20 text flatten and the format
+fold.  ``parse_html`` tokenizes each page once: at the first tag its regex
+tokenizer cannot read, it hands the rest of the page to html.parser on the
+same tree (``dom._fast_parse``), so a page is never parsed twice.
+
 Per-document failures are captured in ``error`` instead of raised — at
 10^12-document scale a malformed page must cost one row, not one task.
 """
@@ -27,10 +37,10 @@ from html_parser_spark.formats.detect import (
     FORMAT_D,
     detect_format,
 )
-from html_parser_spark.formats.fastscan import scan_format_a
+from html_parser_spark.formats.fastscan import scan_format_a, scan_format_b, scan_format_c
 from html_parser_spark.formats.format_a import parse_format_a_doc, post_process
 from html_parser_spark.formats.format_b import parse_format_b_doc
-from html_parser_spark.formats.format_c import parse_format_c_doc, refine
+from html_parser_spark.formats.format_c import parse_format_c_doc, postprocess_spans, refine
 from html_parser_spark.formats.format_d import (
     parse_format_d_doc,
     parse_format_d_entries,
@@ -51,31 +61,38 @@ def _normalize(fmt: str, records: list[dict]) -> list[dict]:
     return out
 
 
+def _row(fmt: str, extracted: str, entries: list[dict]) -> dict:
+    return {
+        "fmt": fmt,
+        "extracted_text": extracted,
+        "entries": entries,
+        "n_entries": len(entries),
+        "error": None,
+    }
+
+
 def parse_document(html_bytes: bytes) -> dict:
     try:
         text = decode_html_bytes(html_bytes)
         fmt = detect_format(text)
-        declined: list[str] = []
+        # hot paths: ONE token-stream pass, no DOM allocation (fastscan);
+        # each scanner returns None on markup only the DOM path decides
         if fmt == FORMAT_A:
-            # hot path: ONE token-stream pass, no DOM allocation (fastscan);
-            # returns None on suspicious markup / empty-text fallback cases,
-            # where the DOM path below carries the exact semantics
-            fast = scan_format_a(text, declined)
+            fast = scan_format_a(text)
             if fast is not None:
-                extracted, raw_entries = fast
-                entries = _normalize(fmt, post_process(raw_entries))
-                return {
-                    "fmt": fmt,
-                    "extracted_text": extracted,
-                    "entries": entries,
-                    "n_entries": len(entries),
-                    "error": None,
-                }
+                return _row(fmt, fast[0], _normalize(fmt, post_process(fast[1])))
+        elif fmt == FORMAT_B:
+            fast = scan_format_b(text)
+            if fast is not None:
+                return _row(fmt, fast[0], _normalize(fmt, fast[1]))
+        elif fmt == FORMAT_C:
+            fast = scan_format_c(text)
+            if fast is not None:
+                return _row(fmt, fast[0], _normalize(fmt, refine(postprocess_spans(fast[1]))))
         # ONE DOM parse shared by text extraction and the format kernel
-        # (parsing dominates the profile; the format-A pass mutates the tree,
-        # so the read-only extract_text runs first); markup fastscan found
-        # suspicious skips _fast_parse, which would only flag it again
-        doc = parse_html(text, suspicious=bool(declined))
+        # (the format-A pass mutates the tree, so the read-only
+        # extract_text runs first)
+        doc = parse_html(text)
         if fmt == FORMAT_A:
             # one traversal shared by the (read-only) text flatten and the
             # (mutating, run second) format-A line scan
@@ -84,14 +101,7 @@ def parse_document(html_bytes: bytes) -> dict:
             af1 = [
                 p for p in ps if "af1" in (p.attrs.get("class") or "").split()
             ]
-            entries = _normalize(fmt, parse_format_a_doc(doc, af1))
-            return {
-                "fmt": fmt,
-                "extracted_text": extracted,
-                "entries": entries,
-                "n_entries": len(entries),
-                "error": None,
-            }
+            return _row(fmt, extracted, _normalize(fmt, parse_format_a_doc(doc, af1)))
         extracted = extract_text_doc(doc)
         if fmt == FORMAT_B:
             entries = _normalize(fmt, parse_format_b_doc(doc))
@@ -108,13 +118,7 @@ def parse_document(html_bytes: bytes) -> dict:
             ]
         else:
             entries = []
-        return {
-            "fmt": fmt,
-            "extracted_text": extracted,
-            "entries": entries,
-            "n_entries": len(entries),
-            "error": None,
-        }
+        return _row(fmt, extracted, entries)
     except Exception:
         return {
             "fmt": "error",

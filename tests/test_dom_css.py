@@ -1,5 +1,10 @@
 """DOM + CSS resolver unit tests (browser-behavior contracts the parsers rely on)."""
 
+import re
+
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from html_parser_spark.css import StyleResolver, normalize_color, normalize_font_weight
 from html_parser_spark.dom import decode_html_bytes, parse_html
 
@@ -144,3 +149,74 @@ def test_fast_dom_entities_and_rawtext():
     assert [p.text_content for p in pf] == [p.text_content for p in ps]
     assert pf[0].attrs["title"] == "a&b"
     assert f.query_selector_all("script")[0].text_content == "if (a<b) x();"
+
+
+def test_flat_sheet_fast_path_matches_general_scan():
+    """``StyleSheet.add_css``'s flat-sheet fast path gives the rule list the
+    general scan gives (a trailing comment forces the general scan)."""
+    import random
+
+    from html_parser_spark.css import StyleSheet
+    from perfbench import gen
+
+    rng = random.Random(3)
+    sheets = [
+        "p.af1{margin:0cm}span.af{color:#C00000;font-weight:bold}",
+        "p.a7{margin:0cm}span.HW{color:#C0504D;font-weight:bold}span.it{font-style:italic}",
+        " #t1_40{left:438px;bottom:1134px;}\n.s1_40 {font-size:37px;font-family:F_f7m;color:#000;}",
+        "span{font-size:9px} div { color : red ! important } .a-b_c{font:italic bold 1px x}",
+        "p.a7{}span.x{;;}#id{left:1px;left:2px}",
+        "{color:red}.a{color:blue}",  # an empty selector
+        ".a{color:red}}.b{color:blue}",  # not flat: the general scan decides
+    ]
+    for html in (gen.page_c(rng, 6000), gen.page_b(rng, 3000), gen.page_a(rng, 2000)):
+        sheets.append(html[html.index("<style") :].split(">", 1)[1].split("</style>")[0])
+
+    def rules(css, quirks):
+        sheet = StyleSheet(quirks)
+        sheet.add_css(css)
+        return [(r.tag, r.cls, r.elid, r.specificity, r.order, r.effect)
+                for r in sheet.rules]
+
+    for css in sheets:
+        for quirks in (False, True):
+            fast = rules(css, quirks)
+            assert fast == rules(css + "/* general */", quirks), css
+            assert fast or css.startswith("{")
+
+
+# the tokenizer's start-tag alternative before its attributes became
+# possessive: the lazy form, kept as the reference
+_LAZY_TOKEN_RE = re.compile(
+    r"<!--(?P<comment>.*?)(?:-->|$)"
+    r"|<!(?P<decl>[^>]*)>"
+    r"|<\?(?P<pi>[^>]*)>"
+    r"|</\s*(?P<endtag>[a-zA-Z][-.:\w]*)\s*>"
+    r"|<(?P<starttag>[a-zA-Z][-.:\w]*)(?P<attrs>(?:[^>\"']|\"[^\"]*\"|'[^']*')*?)"
+    r"(?P<selfclose>/?)>",
+    re.S,
+)
+
+
+@given(st.text(alphabet="<>/\"'=ab -!?\n&;", max_size=40))
+@settings(max_examples=3000, deadline=None)
+def test_token_regex_matches_the_lazy_reference(s):
+    from html_parser_spark.dom import _TOKEN_RE
+
+    for pos in range(len(s) + 1):
+        a, b = _LAZY_TOKEN_RE.search(s, pos), _TOKEN_RE.search(s, pos)
+        assert (a and (a.span(), a.lastgroup, a.groups())) == (
+            b and (b.span(), b.lastgroup, b.groups())
+        ), (s, pos)
+
+
+def test_token_regex_matches_the_lazy_reference_on_generated_pages():
+    from html_parser_spark.dom import _TOKEN_RE
+    from perfbench import gen
+
+    mix = {"A": 1, "A-dom": 1, "B": 1, "C": 1, "D": 1, "generic": 1}
+    for row in gen.dictionary_pages(7, 24, mix, 5000, 0.9):
+        text = row["html"].decode()
+        assert [(m.span(), m.groups()) for m in _TOKEN_RE.finditer(text)] == [
+            (m.span(), m.groups()) for m in _LAZY_TOKEN_RE.finditer(text)
+        ]

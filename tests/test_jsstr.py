@@ -41,3 +41,22 @@ def test_to_lower_case_lezgi():
     assert to_lower_case_lezgi("абв", capitalize=True) == "Абв"
     # no normalization when not after the trigger consonants
     assert to_lower_case_lezgi("а1") == "а1"
+
+
+def test_p20_final_collapse_uses_the_js_whitespace_set():
+    """P20's ``.replaceAll(/\\s{2,}/g, ' ')`` collapses runs of the JS
+    whitespace set: U+FEFF pairs collapse, while pairs of U+001C-U+001F and
+    U+0085 (Python ``\\s`` only) stay, on the DOM and fastscan paths."""
+    from html_parser_spark.formats.textflat import extract_text
+    from html_parser_spark.kernel import parse_document
+
+    assert extract_text("<p>a﻿﻿b</p>") == "a b"
+    kept = "a\x1c\x1cb\x1d\x1dc\x1e\x1ed\x1f\x1fe\x85\x85f"
+    assert extract_text(f"<p>{kept}</p>") == kept
+    assert extract_text(f"<div>x \x1e\x1ey﻿　z</div>") == "x \x1e\x1ey z"
+    for page in (
+        '<p class="af1">a﻿﻿b \x1e\x1ec</p>',  # format A, fastscan
+        '<p class="af1" title="x>a﻿﻿b \x1e\x1ec</p><p>a﻿﻿b \x1e\x1ec</p>',
+        "<p>a﻿﻿b \x1e\x1ec</p>",  # generic, DOM
+    ):
+        assert parse_document(page.encode())["extracted_text"] == "a b \x1e\x1ec", page

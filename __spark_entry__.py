@@ -873,344 +873,6 @@ def q_dup_clusters(spark, sf_dir):
 
 @contract(
     oracle="""
-        WITH scored AS (
-          SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                 round(list_dot_product(q.embedding, c.embedding) /
-                       (sqrt(list_dot_product(q.embedding, q.embedding)) *
-                        sqrt(list_dot_product(c.embedding, c.embedding))), 4) AS cosine
-          FROM embeddings q JOIN embeddings c ON q.vec_id < 10
-           AND c.vec_id != q.vec_id
-        ), ranked AS (
-          SELECT query_id, neighbor_id, cosine,
-                 row_number() OVER (PARTITION BY query_id
-                                    ORDER BY cosine DESC, neighbor_id ASC) AS rank
-          FROM scored
-        )
-        SELECT query_id, neighbor_id, cosine, rank
-        FROM ranked WHERE rank <= 5
-    """,
-    plan="broadcast query set + per-query window topk",
-    must=["BroadcastNestedLoopJoin", "Window"],
-    must_not=["CartesianProduct"],
-)
-def q_cosine_topk(spark, sf_dir):
-    from html_parser_spark.ops.similarity import cosine_topk
-
-    return cosine_topk(_tbl(spark, sf_dir, "embeddings"), query_ids_below=10, k=5)
-
-
-@contract(
-    oracle="""
-        -- one Lloyd iteration over the seed centroids, then probe+rerank.
-        -- Cluster means sum through DECIMAL(30,15): order-independent and
-        -- bit-identical with Spark's decimal-summed means.
-        WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        seed AS (SELECT vec_id AS cent_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-                 FROM e WHERE vec_id < 16),
-        asg0 AS (
-          SELECT vec_id, cent_id, embedding FROM (
-            SELECT a.vec_id, c.cent_id, a.embedding,
-                   row_number() OVER (PARTITION BY a.vec_id ORDER BY
-                     (list_dot_product(a.embedding, c.cv) /
-                      (sqrt(list_dot_product(a.embedding, a.embedding)) *
-                       sqrt(list_dot_product(c.cv, c.cv)))) DESC,
-                     c.cent_id ASC) AS rn
-            FROM e a CROSS JOIN seed c) WHERE rn = 1
-        ),
-        ex AS (
-          SELECT cent_id,
-                 unnest(range(1, len(embedding) + 1)) AS pos,
-                 unnest(list_transform(embedding, x -> CAST(x AS DOUBLE)))
-                   AS val
-          FROM asg0
-        ),
-        sums AS (
-          SELECT cent_id, pos,
-                 sum(CAST(val AS DECIMAL(30,15))) AS s, count(*) AS c
-          FROM ex GROUP BY 1, 2
-        ),
-        refined AS (
-          SELECT cent_id, list(CAST(s AS DOUBLE) / c ORDER BY pos) AS cv
-          FROM sums GROUP BY cent_id
-        ),
-        cents AS (
-          SELECT s.cent_id, coalesce(r.cv, s.cv) AS cv
-          FROM seed s LEFT JOIN refined r USING (cent_id)
-        ),
-        assign AS (
-          SELECT vec_id, cent_id FROM (
-            SELECT a.vec_id, c.cent_id,
-                   row_number() OVER (PARTITION BY a.vec_id ORDER BY
-                     (list_dot_product(a.embedding, c.cv) /
-                      (sqrt(list_dot_product(a.embedding, a.embedding)) *
-                       sqrt(list_dot_product(c.cv, c.cv)))) DESC,
-                     c.cent_id ASC) AS rn
-            FROM e a CROSS JOIN cents c) WHERE rn = 1
-        ),
-        q AS (SELECT vec_id AS query_id, embedding AS qv
-              FROM e WHERE vec_id < 5),
-        probes AS (
-          SELECT query_id, qv, cent_id FROM (
-            SELECT q.query_id, q.qv, c.cent_id,
-                   row_number() OVER (PARTITION BY q.query_id ORDER BY
-                     (list_dot_product(q.qv, c.cv) /
-                      (sqrt(list_dot_product(q.qv, q.qv)) *
-                       sqrt(list_dot_product(c.cv, c.cv)))) DESC,
-                     c.cent_id ASC) AS rn
-            FROM q CROSS JOIN cents c) WHERE rn <= 4
-        ),
-        cand AS (
-          SELECT p.query_id, p.qv, a.vec_id
-          FROM probes p JOIN assign a USING (cent_id)
-          WHERE a.vec_id != p.query_id
-        ),
-        scored AS (
-          SELECT c.query_id, c.vec_id AS neighbor_id,
-                 round(list_dot_product(c.qv, e.embedding) /
-                       (sqrt(list_dot_product(c.qv, c.qv)) *
-                        sqrt(list_dot_product(e.embedding, e.embedding))), 4)
-                   AS cosine
-          FROM cand c JOIN e ON c.vec_id = e.vec_id
-        )
-        SELECT query_id, neighbor_id, cosine, rank FROM (
-          SELECT *, row_number() OVER (PARTITION BY query_id
-                    ORDER BY cosine DESC, neighbor_id ASC) AS rank
-          FROM scored) WHERE rank <= 5
-    """,
-    plan="broadcast centroid probe + equi-join on inverted lists",
-    must=["BroadcastNestedLoopJoin", "Join"],  # tiny centroid set broadcast
-    must_not=["CartesianProduct"],
-)
-def q_ivf_topk(spark, sf_dir):
-    """IVF ANN (brief §extras names IVF explicitly): seed centroids refined
-    by ONE Lloyd iteration (decimal-exact cluster means, so the trained
-    centroids are bit-reproducible cross-engine), nprobe nearest-list probe,
-    exact in-list re-rank."""
-    from html_parser_spark.ops.similarity import ivf_topk
-
-    return ivf_topk(
-        _tbl(spark, sf_dir, "embeddings"),
-        query_ids_below=5, k=5, n_centroids=16, nprobe=4, train_iters=1,
-    )
-
-
-@contract(
-    oracle="""
-        -- symbolic replay of the SQ8 kernel: floor(x*127/max|x|) int8
-        -- quantization, exact integer dot/norms (values <= 64*127^2 so
-        -- DOUBLE carries them exactly), one float division at the end.
-        WITH q AS (
-          SELECT vec_id,
-                 CASE WHEN list_max(list_transform(embedding,
-                            x -> abs(CAST(x AS DOUBLE)))) = 0
-                      THEN list_transform(embedding, x -> 0.0)
-                      ELSE list_transform(embedding,
-                             x -> greatest(-127.0, least(127.0,
-                                  floor(CAST(x AS DOUBLE) * 127.0 /
-                                  list_max(list_transform(embedding,
-                                    y -> abs(CAST(y AS DOUBLE))))))))
-                 END AS qvecd
-          FROM embeddings
-        ), n AS (
-          SELECT vec_id, qvecd,
-                 CAST(list_dot_product(qvecd, qvecd) AS BIGINT) AS n2
-          FROM q
-        ), scored AS (
-          SELECT qn.vec_id AS query_id, cn.vec_id AS neighbor_id,
-                 CAST(list_dot_product(qn.qvecd, cn.qvecd) AS BIGINT)
-                   AS qdot,
-                 CASE WHEN qn.n2 = 0 OR cn.n2 = 0 THEN 0.0
-                      ELSE round(list_dot_product(qn.qvecd, cn.qvecd) /
-                           (sqrt(CAST(qn.n2 AS DOUBLE)) *
-                            sqrt(CAST(cn.n2 AS DOUBLE))), 4)
-                 END AS cosine_q
-          FROM n qn JOIN n cn
-            ON qn.vec_id < 10 AND cn.vec_id != qn.vec_id
-        ), ranked AS (
-          SELECT query_id, neighbor_id, qdot, cosine_q,
-                 row_number() OVER (PARTITION BY query_id
-                   ORDER BY cosine_q DESC, neighbor_id ASC) AS rank
-          FROM scored
-        )
-        SELECT query_id, neighbor_id, qdot, cosine_q, rank
-        FROM ranked WHERE rank <= 5
-    """,
-    plan=(
-        "SQ8 ANN: quantization is a pure-codegen projection (int8 payload = 4x less "
-        "broadcast/shuffle bytes than float32); pair scan = ONE "
-        "BroadcastNestedLoopJoin against the tiny quantized query side, per-query "
-        "top-k via partial WindowGroupLimit; zero Python"
-    ),
-    must=["BroadcastNestedLoopJoin", "WindowGroupLimit"],
-    must_not=["ArrowEvalPython", "BatchEvalPython", "SortMergeJoin"],
-)
-def q_quantized_topk(spark, sf_dir):
-    """int8-quantized cosine top-k (ops/similarity.quantized_topk): the 4x
-    storage/shuffle-cut ANN path.  Quantization (floor(x*127/max|x|)), the
-    BIGINT dot/norms, and the single float division are all replayed
-    symbolically by the oracle — hash match pins the whole SQ8 kernel."""
-    from html_parser_spark.ops.similarity import quantized_topk
-
-    return quantized_topk(_tbl(spark, sf_dir, "embeddings"), query_ids_below=10, k=5)
-
-
-@contract(
-    oracle="""
-        -- recall@5 of the int8 path vs exact float cosine: both top-k
-        -- sets re-derived symbolically, overlap counted, ppm by
-        -- integral divide (no float in the metric).
-        WITH exact_scored AS (
-          SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                 round(list_dot_product(q.embedding, c.embedding) /
-                       (sqrt(list_dot_product(q.embedding, q.embedding)) *
-                        sqrt(list_dot_product(c.embedding, c.embedding))), 4)
-                   AS cosine
-          FROM embeddings q JOIN embeddings c ON q.vec_id < 10
-           AND c.vec_id != q.vec_id
-        ), exact_topk AS (
-          SELECT query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id,
-                   row_number() OVER (PARTITION BY query_id
-                     ORDER BY cosine DESC, neighbor_id ASC) AS rank
-            FROM exact_scored) WHERE rank <= 5
-        ), qz AS (
-          SELECT vec_id,
-                 CASE WHEN list_max(list_transform(embedding,
-                            x -> abs(CAST(x AS DOUBLE)))) = 0
-                      THEN list_transform(embedding, x -> 0.0)
-                      ELSE list_transform(embedding,
-                             x -> greatest(-127.0, least(127.0,
-                                  floor(CAST(x AS DOUBLE) * 127.0 /
-                                  list_max(list_transform(embedding,
-                                    y -> abs(CAST(y AS DOUBLE))))))))
-                 END AS qvecd
-          FROM embeddings
-        ), n AS (
-          SELECT vec_id, qvecd,
-                 CAST(list_dot_product(qvecd, qvecd) AS BIGINT) AS n2
-          FROM qz
-        ), quant_topk AS (
-          SELECT query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id,
-                   row_number() OVER (PARTITION BY query_id
-                     ORDER BY cosine_q DESC, neighbor_id ASC) AS rank
-            FROM (
-              SELECT qn.vec_id AS query_id, cn.vec_id AS neighbor_id,
-                     CASE WHEN qn.n2 = 0 OR cn.n2 = 0 THEN 0.0
-                          ELSE round(list_dot_product(qn.qvecd, cn.qvecd) /
-                               (sqrt(CAST(qn.n2 AS DOUBLE)) *
-                                sqrt(CAST(cn.n2 AS DOUBLE))), 4)
-                     END AS cosine_q
-              FROM n qn JOIN n cn
-                ON qn.vec_id < 10 AND cn.vec_id != qn.vec_id)
-            ) WHERE rank <= 5
-        ), hits AS (
-          SELECT e.query_id, count(*) AS overlap
-          FROM exact_topk e JOIN quant_topk t
-            ON e.query_id = t.query_id AND e.neighbor_id = t.neighbor_id
-          GROUP BY 1
-        ), qids AS (SELECT DISTINCT query_id FROM exact_topk)
-        SELECT q.query_id,
-               CAST(coalesce(h.overlap, 0) AS BIGINT) AS overlap,
-               CAST(coalesce(h.overlap, 0) * 1000000 // 5 AS BIGINT)
-                 AS recall_ppm
-        FROM qids q LEFT JOIN hits h ON q.query_id = h.query_id
-    """,
-    plan=(
-        "the SQ8 release gate: both top-k branches end in WindowGroupLimit before "
-        "their shuffles, the overlap is a broadcast equi-join of two k*|Q|-row sides, "
-        "the ppm an integral divide; zero Python, no cartesian residue beyond the two "
-        "bounded query-side broadcasts"
-    ),
-    must=["WindowGroupLimit", "BroadcastHashJoin"],
-    must_not=["ArrowEvalPython", "BatchEvalPython"],
-)
-def q_quantization_recall(spark, sf_dir):
-    """Recall@k of the int8 path vs exact float cosine (ops/similarity.
-    quantization_recall) — the release gate before switching a 10^12-vector
-    corpus to quantized storage.  Integral-divide ppm, no float in the
-    metric; the oracle recomputes BOTH top-k sets and the overlap."""
-    from html_parser_spark.ops.similarity import quantization_recall
-
-    return quantization_recall(_tbl(spark, sf_dir, "embeddings"), query_ids_below=10, k=5)
-
-
-@contract(
-    oracle="""
-        -- list_dot_product (double accumulation) not list_cosine_similarity
-        -- (float32) so the arithmetic is bit-identical with Spark's
-        WITH e AS (SELECT * FROM embeddings WHERE vec_id < 150),
-        scored AS (
-          SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                 round(list_dot_product(a.embedding, b.embedding) /
-                       (sqrt(list_dot_product(a.embedding, a.embedding)) *
-                        sqrt(list_dot_product(b.embedding, b.embedding))), 4)
-                   AS cosine
-          FROM e a JOIN e b ON a.vec_id < b.vec_id
-        )
-        SELECT vec_a, vec_b, cosine FROM scored WHERE cosine >= 0.35
-    """,
-)
-def q_embedding_near_dup(spark, sf_dir):
-    """Embedding-cosine near-dup pairs (exact baseline on a bounded id range;
-    the n_planes>0 LSH-bucketed variant is the scale path)."""
-    from html_parser_spark.ops.similarity import embedding_near_duplicates
-
-    return embedding_near_duplicates(
-        _tbl(spark, sf_dir, "embeddings"), threshold=0.35, id_limit=150, exact=True
-    )
-
-
-@contract(
-    oracle="""
-        -- replicates the deterministic md5-parity hyperplanes, the bucket
-        -- equi-join, and the in-bucket exact cosine of the scale path
-        WITH e AS (SELECT * FROM embeddings WHERE vec_id < 300),
-        planes AS (
-          SELECT p, list_transform(range(0, 64), d ->
-            CASE WHEN (strpos('0123456789abcdef',
-                       substring(md5(p || '_' || d), 6, 1)) - 1) % 2 = 1
-                 THEN 1.0 ELSE -1.0 END) AS plane
-          FROM (SELECT unnest(range(0, 2)) AS p)
-        ), signs AS (
-          SELECT e.vec_id, pl.p,
-                 CASE WHEN list_dot_product(e.embedding, pl.plane) >= 0
-                      THEN '1' ELSE '0' END AS bit
-          FROM e CROSS JOIN planes pl
-        ), buckets AS (
-          SELECT vec_id, string_agg(bit, '' ORDER BY p) AS bucket
-          FROM signs GROUP BY vec_id
-        ), be AS (
-          SELECT e.vec_id, e.embedding, b.bucket
-          FROM e JOIN buckets b USING (vec_id)
-        ), scored AS (
-          SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                 round(list_dot_product(a.embedding, b.embedding) /
-                       (sqrt(list_dot_product(a.embedding, a.embedding)) *
-                        sqrt(list_dot_product(b.embedding, b.embedding))), 4)
-                   AS cosine
-          FROM be a JOIN be b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-        )
-        SELECT vec_a, vec_b, cosine FROM scored WHERE cosine >= 0.3
-    """,
-    plan="bucket EQUI-join (the scale default), no nested loop",
-    must=["Join"],
-    must_not=["BroadcastNestedLoopJoin", "CartesianProduct"],
-)
-def q_embedding_near_dup_lsh(spark, sf_dir):
-    """The DEFAULT (scale) path of embedding near-dup: hyperplane-LSH bucket
-    join → exact cosine inside buckets only.  The oracle replicates the
-    deterministic md5-parity planes, so this checks the bucketing itself."""
-    from html_parser_spark.ops.similarity import embedding_near_duplicates
-
-    return embedding_near_duplicates(
-        _tbl(spark, sf_dir, "embeddings"), threshold=0.3, n_planes=2, id_limit=300
-    )
-
-
-@contract(
-    oracle="""
         WITH toks AS (
           SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
           FROM documents WHERE doc_id < 40
@@ -1324,32 +986,6 @@ def q_simhash(spark, sf_dir):
 
 @contract(
     oracle="""
-        WITH planes AS (
-          SELECT p, list_transform(range(0, 64), d ->
-            CASE WHEN (strpos('0123456789abcdef',
-                       substring(md5(p || '_' || d), 6, 1)) - 1) % 2 = 1
-                 THEN 1.0 ELSE -1.0 END) AS plane
-          FROM (SELECT unnest(range(0, 4)) AS p)
-        ), signs AS (
-          SELECT e.vec_id, pl.p,
-                 CASE WHEN list_dot_product(e.embedding, pl.plane) >= 0
-                      THEN '1' ELSE '0' END AS bit
-          FROM embeddings e CROSS JOIN planes pl
-        ), buckets AS (
-          SELECT vec_id, string_agg(bit, '' ORDER BY p) AS bucket
-          FROM signs GROUP BY vec_id
-        )
-        SELECT bucket, count(*) AS vectors FROM buckets GROUP BY bucket
-    """,
-)
-def q_lsh_buckets(spark, sf_dir):
-    from html_parser_spark.ops.similarity import bucket_histogram
-
-    return bucket_histogram(_tbl(spark, sf_dir, "embeddings"), n_planes=4)
-
-
-@contract(
-    oracle="""
         SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
                event_type,
                count(*) AS n_events,
@@ -1359,8 +995,8 @@ def q_lsh_buckets(spark, sf_dir):
     """,
 )
 def q_event_windows(spark, sf_dir):
-    """Tumbling-window aggregation over the events stream table (the batch
-    twin of the Structured Streaming job in html_parser_spark/streaming)."""
+    """Tumbling-window aggregation over the events table: one-hour windows
+    per event type."""
     ev = _tbl(spark, sf_dir, "events")
     return (
         ev.groupBy(
@@ -1397,7 +1033,7 @@ def q_event_windows(spark, sf_dir):
 )
 def q_sessionize(spark, sf_dir):
     """Sessionization: a new session starts after a >30min gap per user —
-    lag + cumulative sum window (classical stream-ish operator, batch twin)."""
+    lag + cumulative sum window."""
     ev = _tbl(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     epoch = F.col("ts").cast("timestamp").cast("long")  # NTZ needs 2-step cast
@@ -1576,91 +1212,6 @@ def q_date_battery(spark, sf_dir):
             F.round(F.avg("o_totalprice"), 2).alias("avg_price"),
             F.min(F.dayofmonth(ts)).alias("first_dom"),
         )
-    )
-
-
-@contract(
-    oracle="""
-        WITH ev AS (
-          SELECT event_id, user_id AS custkey, ts FROM events WHERE event_id < 2000
-        ), matched AS (
-          SELECT e.event_id, e.custkey, e.ts,
-                 -- composite scalar key: latest date, then max orderkey
-                 -- (orderkeys < 1e6 at test scales)
-                 max_by(o.o_orderkey,
-                        CAST(epoch(o.o_orderdate) AS BIGINT) * 1000000
-                        + o.o_orderkey) AS o_orderkey,
-                 max(o.o_orderdate) AS asof_time
-          FROM ev e JOIN orders o
-            ON o.o_custkey = e.custkey AND o.o_orderdate <= e.ts
-          GROUP BY e.event_id, e.custkey, e.ts
-        )
-        SELECT event_id, custkey, ts, o_orderkey, asof_time FROM matched
-    """,
-)
-def q_asof_join(spark, sf_dir):
-    """As-of join (custom operator, ops/asof.py): each event matched to the
-    user's latest order at-or-before the event time."""
-    from html_parser_spark.ops.asof import as_of_join
-
-    ev = (
-        _tbl(spark, sf_dir, "events")
-        .select("event_id", "user_id", F.col("ts").cast("timestamp").alias("ts"))
-        .filter(F.col("event_id") < 2000)
-        .withColumnRenamed("user_id", "custkey")
-    )
-    orders = _tbl(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("custkey"),
-        F.col("o_orderdate").cast("timestamp").alias("odate"),
-        "o_orderkey",
-    )
-    return as_of_join(
-        ev,
-        orders,
-        on="custkey",
-        left_time="ts",
-        right_time="odate",
-        tiebreak="o_orderkey",
-        right_values=["o_orderkey"],
-    )
-
-
-@contract(
-    oracle="""
-        SELECT l.l_orderkey AS orderkey,
-               count(*) AS lines_in_window,
-               max(l.l_linenumber) AS max_line
-        FROM lineitem l
-        JOIN orders o
-          ON o.o_orderkey = l.l_orderkey
-         AND epoch(l.l_shipdate) >= epoch(o.o_orderdate)
-         AND epoch(l.l_shipdate) <= epoch(o.o_orderdate) + 30 * 86400
-        GROUP BY l.l_orderkey
-    """,
-)
-def q_range_join(spark, sf_dir):
-    """Bucketized range join (ops/rangejoin.py): line items shipping inside
-    their order's 30-day window, aggregated per order for a bounded result."""
-    from html_parser_spark.ops.rangejoin import range_join
-
-    li = _tbl(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("orderkey"),
-        "l_linenumber",
-        F.col("l_shipdate").cast("timestamp").cast("long").alias("t"),
-    )
-    orders = _tbl(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("orderkey"),
-        "o_orderpriority",
-        F.col("o_orderdate").cast("timestamp").cast("long").alias("lo"),
-        (F.col("o_orderdate").cast("timestamp").cast("long") + 30 * 86400).alias("hi"),
-    )
-    joined = range_join(
-        li, orders, on="orderkey", left_time="t", right_lo="lo", right_hi="hi",
-        bucket_width=30 * 86400,
-    )
-    return joined.groupBy("orderkey").agg(
-        F.count("*").alias("lines_in_window"),
-        F.max("l_linenumber").alias("max_line"),
     )
 
 
@@ -2290,60 +1841,6 @@ def q_sitemap(spark, sf_dir):
 
 @contract(
     oracle="""
-        -- closed-form expected identity: P6 -> ppm, P5 -> pgm (both
-        -- 8-bit with the synthesized dims), the NOTIMG quarter -> NULLs
-        SELECT doc_id,
-               CASE doc_id % 4 WHEN 3 THEN NULL
-                    WHEN 2 THEN 'pgm' ELSE 'ppm' END AS format,
-               CAST(CASE WHEN doc_id % 4 = 3 THEN 0
-                    ELSE doc_id % 300 + 1 END AS INTEGER) AS width,
-               CAST(CASE WHEN doc_id % 4 = 3 THEN 0
-                    ELSE doc_id % 200 + 1 END AS INTEGER) AS height,
-               CAST(CASE WHEN doc_id % 4 = 3 THEN 0
-                    ELSE 8 END AS INTEGER) AS bit_depth
-        FROM documents
-    """,
-    plan="ONE Arrow header-sniff stage, zero shuffle",
-    must=["ArrowEvalPython"],
-    must_not=["Exchange", "Join", "Window"],
-)
-def q_image_headers(spark, sf_dir):
-    """Real media-identity parsing (ops/multimodal.parse_image_header):
-    three quarters of docs carry a PPM/PGM payload (ASCII header —
-    constructible identically in SQL), one quarter a non-image blob whose
-    fields must come back NULL.  PNG/GIF/BMP binary branches are
-    unit-tested; the oracle pins the PNM parser + the miss path."""
-    _ship_package(spark)
-    from html_parser_spark.ops.multimodal import image_headers
-
-    docs = _docs(spark, sf_dir)
-    k = F.col("doc_id") % 4
-    w = (F.col("doc_id") % 300 + 1).cast("string")
-    h = (F.col("doc_id") % 200 + 1).cast("string")
-    payload = (
-        F.when(k == 3, F.concat(F.lit("NOTIMG "), F.substring("text", 1, 40)))
-        .when(k == 2, F.concat(F.lit("P5\n# c\n"), w, F.lit(" "), h,
-                               F.lit("\n255\nGRAY")))
-        .otherwise(F.concat(F.lit("P6\n"), w, F.lit(" "), h,
-                            F.lit("\n255\nRGBDATA")))
-    )
-    media = docs.select(
-        "doc_id", F.encode(payload, "UTF-8").alias("payload")
-    )
-    out = image_headers(media)
-    # numeric fields coalesce to 0 for non-images: a NULL in an INTEGER
-    # oracle column makes pandas upcast the whole column to float64
-    # ('8.0' vs '8' under the driver's strict hash); format stays NULL
-    return out.select(
-        "doc_id", "format",
-        F.coalesce(F.col("width"), F.lit(0)).cast("int").alias("width"),
-        F.coalesce(F.col("height"), F.lit(0)).cast("int").alias("height"),
-        F.coalesce(F.col("bit_depth"), F.lit(0)).cast("int").alias("bit_depth"),
-    )
-
-
-@contract(
-    oracle="""
         -- the same 16-bit md5-prefix bucket via strpos arithmetic;
         -- thresholds = fraction * 65536 (en 25%, zh 75%, de 50%,
         -- es/fr dropped)
@@ -2921,164 +2418,6 @@ def q_temperature_mix(spark, sf_dir):
 
 @contract(
     oracle="""
-        -- hashed NB vote classifier: 4096 md5 buckets over token
-        -- occurrences, votes = sign of the Laplace log-odds via exact
-        -- integer cross-products ((pos+1)(N+B) vs (neg+1)(P+B)),
-        -- trained on the md5-split train docs with label lang='en',
-        -- scored over every doc (unseen buckets vote 0)
-        WITH tok AS (
-          SELECT doc_id,
-                 unnest(list_filter(
-                   regexp_split_to_array(lower(text), '\\s+'),
-                   x -> len(x) > 0)) AS tok
-          FROM documents
-        ), feats AS (
-          SELECT doc_id,
-                 ((strpos('0123456789abcdef', substring(h, 1, 1)) - 1) * 4096
-                + (strpos('0123456789abcdef', substring(h, 2, 1)) - 1) * 256
-                + (strpos('0123456789abcdef', substring(h, 3, 1)) - 1) * 16
-                + (strpos('0123456789abcdef', substring(h, 4, 1)) - 1))
-                   % 4096 AS bucket
-          FROM (SELECT doc_id, md5('feat' || tok) AS h FROM tok)
-        ), lab AS (
-          SELECT doc_id,
-                 CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-          FROM documents
-          WHERE (strpos('0123456789abcdef',
-                        substring(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16
-              + strpos('0123456789abcdef',
-                       substring(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1
-                < 205
-        ), cells AS (
-          SELECT bucket,
-                 CAST(sum(y) AS BIGINT) AS pos,
-                 CAST(sum(1 - y) AS BIGINT) AS neg
-          FROM feats JOIN lab USING (doc_id)
-          GROUP BY bucket
-        ), tot AS (
-          SELECT CAST(sum(pos) AS BIGINT) AS p_tot,
-                 CAST(sum(neg) AS BIGINT) AS n_tot
-          FROM cells
-        ), votes AS (
-          SELECT bucket,
-                 CASE WHEN (pos + 1)::HUGEINT * (n_tot + 4096)
-                         > (neg + 1)::HUGEINT * (p_tot + 4096) THEN 1
-                      WHEN (pos + 1)::HUGEINT * (n_tot + 4096)
-                         < (neg + 1)::HUGEINT * (p_tot + 4096) THEN -1
-                      ELSE 0 END AS vote
-          FROM cells, tot
-        ), scored AS (
-          SELECT f.doc_id,
-                 CAST(sum(COALESCE(v.vote, 0)) AS BIGINT) AS score
-          FROM feats f LEFT JOIN votes v USING (bucket)
-          GROUP BY f.doc_id
-        )
-        SELECT d.doc_id, s.score,
-               CAST(s.score > 0 AS INTEGER) AS pred,
-               CAST(d.lang = 'en' AS INTEGER) AS actual
-        FROM scored s JOIN documents d USING (doc_id)
-    """,
-    plan=(
-        "pure JVM hashing/explode, broadcast model, partial-agg train + score "
-        "groupBys, zero Python"
-    ),
-    must=["HashAggregate", "BroadcastHashJoin"],
-    must_not=["CartesianProduct", "ArrowEvalPython", "BatchEvalPython"],
-)
-def q_doc_classifier(spark, sf_dir):
-    """Hashed-feature Naive-Bayes vote classifier (ops/classify): train
-    per-bucket evidence votes (sign of the Laplace log-odds via exact
-    integer cross-products) on the md5-split train docs with label
-    lang=='en', then score EVERY doc — the CCNet/fastText quality-gate
-    shape, Spark-first: one groupBy to train, broadcast model + one
-    groupBy(doc) to score.  Returns (doc_id, score, pred, actual)."""
-    from html_parser_spark.ops.classify import (
-        hashed_features,
-        nb_vote_score,
-        train_nb_votes,
-    )
-    from html_parser_spark.ops.corpus import assign_split
-
-    docs = _docs(spark, sf_dir).select("doc_id", "lang", "text")
-    feats = hashed_features(docs)
-    labeled = assign_split(docs).filter(F.col("split") == "train").select(
-        "doc_id", (F.col("lang") == "en").cast("int").alias("label")
-    )
-    votes = train_nb_votes(feats, labeled)
-    scored = nb_vote_score(feats, votes)
-    return scored.join(
-        docs.select("doc_id", (F.col("lang") == "en").cast("int").alias("actual")),
-        "doc_id",
-    ).select("doc_id", "score", "pred", "actual")
-
-
-@contract(
-    oracle="""
-        -- all four expected <tr> rows per synthesized page in closed
-        -- form: t0r0 = header with colspan-2 repetition, t0r1 =
-        -- whitespace-collapsed data cells, t1r0 = host row whose first
-        -- cell text CONTAINS the nested table's text ('x' || 'in<d>'),
-        -- t2r0 = the nested table's own single row
-        WITH d AS (
-          SELECT doc_id,
-                 'https://t.example.org/' || CAST(doc_id AS VARCHAR) AS url,
-                 CAST(doc_id AS VARCHAR) AS s
-          FROM documents
-        )
-        SELECT url, 0 AS table_idx, 0 AS row_idx, TRUE AS is_header,
-               2 AS n_cells, 'hdr ' || s || '|' || 'hdr ' || s AS cells
-        FROM d
-        UNION ALL
-        SELECT url, 0, 1, FALSE, 2,
-               'a ' || s || '|' || 'b ' || CAST(doc_id % 7 AS VARCHAR)
-        FROM d
-        UNION ALL
-        SELECT url, 1, 0, FALSE, 2, 'xin' || s || '|' || 'y' FROM d
-        UNION ALL
-        SELECT url, 2, 0, FALSE, 1, 'in' || s FROM d
-    """,
-    plan="ONE Arrow table-walk stage + narrow explode, zero shuffle",
-    must=["ArrowEvalPython", "Generate"],
-    must_not=["Exchange", "BatchEvalPython", "SortMergeJoin"],
-)
-def q_table_extract(spark, sf_dir):
-    """HTML table extraction (ops/tables.py) over synthesized crawl pages:
-    one output row per <tr>, tables numbered in document order with nested
-    tables as their own tables, colspan repetition, whitespace-collapsed
-    cell text, thead/tbody transparency, is_header on <th>.  The oracle
-    states all four expected rows per page in closed form — a hash match
-    proves the DOM walk, nesting attribution, and cell ordering exactly."""
-    _ship_package(spark)
-    from html_parser_spark.ops.tables import extract_tables
-
-    docs = _docs(spark, sf_dir)
-    did = F.col("doc_id").cast("string")
-    html = F.concat(
-        F.lit("<html><body><table><thead><tr><th colspan=\"2\">hdr "),
-        did,
-        F.lit("</th></tr></thead><tbody><tr><td> a  "),
-        did,
-        F.lit(" </td><td>b "),
-        (F.col("doc_id") % 7).cast("string"),
-        F.lit("</td></tr></tbody></table><p>noise</p>"
-              "<table><tr><td>x<table><tr><td>in"),
-        did,
-        F.lit("</td></tr></table></td><td>y</td></tr></table></body></html>"),
-    )
-    pages = docs.select(
-        F.concat(F.lit("https://t.example.org/"), did).alias("url"),
-        F.encode(html, "UTF-8").alias("html"),
-    )
-    # serialize the array<string> cells column — the driver's pandas
-    # canonicalizer cannot sort list cells (round-4 `err`); cell texts are
-    # synthesized without '|'
-    return extract_tables(pages).withColumn(
-        "cells", F.array_join("cells", "|")
-    )
-
-
-@contract(
-    oracle="""
         -- recompute the per-url accounting straight from documents;
         -- matching md5 per url == the WET conversion-record
         -- writer->reader round-trip preserved every text byte
@@ -3503,71 +2842,6 @@ def q_surt_key(spark, sf_dir):
 
 @contract(
     oracle="""
-        -- closed-form 64-bit hashes: ascending gradient -> every
-        -- right neighbor brighter -> all ones = -1 signed; 9-wide
-        -- checkerboard -> 10101010 per row = 0xAAAA.. signed; PPM
-        -- descending gradient -> strict '>' never fires -> 0;
-        -- non-image -> decoded 0, hash coalesced to 0
-        SELECT doc_id,
-               CAST(CASE WHEN doc_id % 4 IN (0, 1, 2) THEN 1 ELSE 0 END
-                    AS INTEGER) AS decoded,
-               CAST(CASE doc_id % 4
-                      WHEN 0 THEN -1
-                      WHEN 1 THEN -6148914691236517206
-                      ELSE 0 END AS BIGINT) AS dhash
-        FROM documents
-    """,
-    plan="ONE Arrow pixel-decode stage, zero shuffle",
-    must=["ArrowEvalPython"],
-    must_not=["Exchange", "Join", "Window"],
-)
-def q_image_dhash(spark, sf_dir):
-    """Perceptual dHash over real decoded PNM pixels
-    (ops/multimodal.dhash64): ascending-gradient PGMs hash to all-ones
-    (-1 signed), a checkerboard to the alternating 0xAA pattern, a
-    descending-gradient PPM (gray = (r+g+b)//3) to 0, non-images to NULL
-    (flagged).  Payloads are real binary rasters built as hex literals at
-    query-build time; the oracle states the 64-bit hashes in closed
-    form."""
-    _ship_package(spark)
-    from html_parser_spark.ops.multimodal import image_dhash
-
-    def pgm_hex(w, h, pix):
-        head = f"P5\n{w} {h}\n255\n".encode()
-        return (head + bytes(pix(x, y) for y in range(h) for x in range(w))).hex()
-
-    def ppm_hex(w, h, pix):
-        head = f"P6\n{w} {h}\n255\n".encode()
-        body = bytes(
-            v for y in range(h) for x in range(w) for v in (pix(x, y),) * 3
-        )
-        return (head + body).hex()
-
-    asc = pgm_hex(18, 8, lambda x, y: x * 14)
-    checker = pgm_hex(9, 8, lambda x, y: 255 * (x % 2))
-    desc = ppm_hex(18, 8, lambda x, y: 255 - x * 14)
-
-    docs = _docs(spark, sf_dir)
-    k = F.col("doc_id") % 4
-    payload = (
-        F.when(k == 0, F.unhex(F.lit(asc)))
-        .when(k == 1, F.unhex(F.lit(checker)))
-        .when(k == 2, F.unhex(F.lit(desc)))
-        .otherwise(F.encode(F.concat(F.lit("NOTIMG "),
-                                     F.substring("text", 1, 20)), "UTF-8"))
-    )
-    out = image_dhash(docs.select("doc_id", payload.alias("payload")))
-    # decoded flag disambiguates "hash is 0" (valid: no right-brighter
-    # pixel) from "not a PNM" after the NULL→0 coalesce for pandas
-    return out.select(
-        "doc_id",
-        F.col("dhash").isNotNull().cast("int").alias("decoded"),
-        F.coalesce(F.col("dhash"), F.lit(0)).cast("long").alias("dhash"),
-    )
-
-
-@contract(
-    oracle="""
         -- per-host page counts x closed-form delays: hosts 0-4 carry
         -- wildcard Crawl-delay 2..6, host 5's mybot group (7) beats
         -- its '*' group (3), hosts 6-9 default to 1
@@ -3617,103 +2891,6 @@ def q_crawl_plan(spark, sf_dir):
         F.col("n_pages").cast("long").alias("n_pages"),
         F.col("crawl_delay_sec").cast("int").alias("crawl_delay_sec"),
         F.col("est_fetch_sec").cast("long").alias("est_fetch_sec"),
-    )
-
-
-@contract(
-    oracle="""
-        -- closed-form expected fields per payload family: k=0 WAV
-        -- mono/16-bit (1000ms declared data), k=1 WAV stereo/8-bit
-        -- (500ms), k=2 MP3 MPEG1-L3 128kbps stereo (sample rate by
-        -- doc_id%3, ID3v2-prefixed on even ids — same parse either
-        -- way), k=3 non-audio blob -> NULL format, zeroed numerics
-        SELECT doc_id,
-               CASE WHEN doc_id % 4 IN (0, 1) THEN 'wav'
-                    WHEN doc_id % 4 = 2 THEN 'mp3' END AS format,
-               CAST(CASE doc_id % 4 WHEN 0 THEN 1 WHEN 1 THEN 2
-                         WHEN 2 THEN 2 ELSE 0 END AS INTEGER) AS channels,
-               CAST(CASE WHEN doc_id % 4 IN (0, 1)
-                              THEN ([8000, 22050, 44100])[(doc_id % 3) + 1]
-                         WHEN doc_id % 4 = 2
-                              THEN ([44100, 48000, 32000])[(doc_id % 3) + 1]
-                         ELSE 0 END AS INTEGER) AS sample_rate,
-               CAST(CASE doc_id % 4 WHEN 0 THEN 16 WHEN 1 THEN 8
-                         ELSE 0 END AS INTEGER) AS bits_per_sample,
-               CAST(CASE WHEN doc_id % 4 IN (0, 1)
-                              THEN ([128, 352, 705])[(doc_id % 3) + 1]
-                         WHEN doc_id % 4 = 2 THEN 128
-                         ELSE 0 END AS INTEGER) AS bitrate_kbps,
-               CAST(CASE doc_id % 4 WHEN 0 THEN 1000 WHEN 1 THEN 500
-                         ELSE 0 END AS INTEGER) AS duration_ms
-        FROM documents
-    """,
-    plan="ONE Arrow header-sniff stage, zero shuffle",
-    must=["ArrowEvalPython"],
-    must_not=["Exchange", "Join", "Window"],
-)
-def q_audio_headers(spark, sf_dir):
-    """Real audio-identity parsing (ops/multimodal.parse_audio_header):
-    WAV/RIFF chunk walk (channels, sample rate, bit depth, byte-rate
-    bitrate, declared-data duration) and MP3 frame-header decode
-    (version/layer/bitrate/sample-rate tables, ID3v2 skip).  Payloads are
-    REAL binary headers built as hex literals at query-build time; a
-    quarter of docs carry a non-audio blob whose fields must come back
-    NULL.  The oracle states every field in closed form from doc_id."""
-    import struct
-
-    _ship_package(spark)
-    from html_parser_spark.ops.multimodal import audio_headers
-
-    def wav_hex(ch: int, sr: int, bits: int) -> str:
-        byte_rate = sr * ch * bits // 8
-        data = byte_rate if ch == 1 else byte_rate // 2  # 1000ms / 500ms
-        b = (
-            b"RIFF" + struct.pack("<I", 36 + data) + b"WAVEfmt "
-            + struct.pack("<IHHIIHH", 16, 1, ch, sr, byte_rate,
-                          ch * bits // 8, bits)
-            + b"data" + struct.pack("<I", data)
-        )
-        return b.hex()
-
-    def mp3_hex(sr_idx: int, with_id3: bool) -> str:
-        # MPEG1 Layer III, bitrate index 9 (128 kbps), stereo; optional
-        # ID3v2.4 tag with a 10-byte syncsafe body the parser must skip
-        frame = bytes([0xFF, 0xFB, 0x90 | (sr_idx << 2), 0x00])
-        id3 = b"ID3" + bytes([4, 0, 0, 0, 0, 0, 10]) + b"\x00" * 10
-        return ((id3 if with_id3 else b"") + frame).hex()
-
-    srs = [8000, 22050, 44100]
-    mono = F.array(*[F.lit(wav_hex(1, s, 16)) for s in srs])
-    stereo = F.array(*[F.lit(wav_hex(2, s, 8)) for s in srs])
-    mp3s = F.array(*[F.lit(mp3_hex(i, False)) for i in range(3)])
-    mp3s_id3 = F.array(*[F.lit(mp3_hex(i, True)) for i in range(3)])
-
-    docs = _docs(spark, sf_dir)
-    k = F.col("doc_id") % 4
-    j = (F.col("doc_id") % 3 + 1).cast("int")
-    hexes = (
-        F.when(k == 0, F.element_at(mono, j))
-        .when(k == 1, F.element_at(stereo, j))
-        .when(k == 2, F.when(F.col("doc_id") % 2 == 0,
-                             F.element_at(mp3s_id3, j))
-                       .otherwise(F.element_at(mp3s, j)))
-    )
-    payload = (
-        F.when(k == 3, F.encode(F.concat(F.lit("NOAUDIO "),
-                                         F.substring("text", 1, 40)), "UTF-8"))
-        .otherwise(F.unhex(hexes))
-    )
-    media = docs.select("doc_id", payload.alias("payload"))
-    out = audio_headers(media)
-    # numeric fields coalesce to 0 for non-audio rows (pandas would upcast
-    # a NULL-bearing INTEGER column to float64 under the driver's hash)
-    return out.select(
-        "doc_id", "format",
-        F.coalesce(F.col("channels"), F.lit(0)).cast("int").alias("channels"),
-        F.coalesce(F.col("sample_rate"), F.lit(0)).cast("int").alias("sample_rate"),
-        F.coalesce(F.col("bits_per_sample"), F.lit(0)).cast("int").alias("bits_per_sample"),
-        F.coalesce(F.col("bitrate_kbps"), F.lit(0)).cast("int").alias("bitrate_kbps"),
-        F.coalesce(F.col("duration_ms"), F.lit(0)).cast("int").alias("duration_ms"),
     )
 
 
@@ -4393,43 +3570,6 @@ def q_lang_id(spark, sf_dir):
 
 @contract(
     oracle="""
-        -- regenerate ops/multimodal.synth_media_df(300) exactly: payload
-        -- is 'MEDIA' || md5(media_id) x8, kind cycles image/audio/video
-        WITH m AS (
-          SELECT r.range AS media_id,
-                 r.range % 50 AS doc_id,
-                 (['image','audio','video'])[CAST(r.range % 3 AS INT) + 1]
-                   AS kind,
-                 'MEDIA' || repeat(md5(CAST(r.range AS VARCHAR)), 8)
-                   AS payload,
-                 CAST(r.range * 10 AS INT) AS duration_ms
-          FROM range(0, 300) r
-        )
-        SELECT kind,
-               count(*) AS n_media,
-               CAST(sum(len(payload)) AS BIGINT) AS total_bytes,
-               count(DISTINCT doc_id) AS n_docs,
-               max(duration_ms) AS max_duration_ms
-        FROM m GROUP BY kind
-    """,
-)
-def q_media_meta(spark, sf_dir):
-    """Multimodal source plumbing: per-kind stats over the deterministic
-    media table (payload is a pure function of media_id, so DuckDB can
-    regenerate the identical table and check schema + byte accounting)."""
-    from html_parser_spark.ops.multimodal import synth_media_df
-
-    m = synth_media_df(spark, 300)
-    return m.groupBy("kind").agg(
-        F.count("*").alias("n_media"),
-        F.sum(F.length("payload")).alias("total_bytes"),
-        F.countDistinct("doc_id").alias("n_docs"),
-        F.max(F.col("meta.duration_ms")).alias("max_duration_ms"),
-    )
-
-
-@contract(
-    oracle="""
         WITH t AS (
           SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
           FROM documents
@@ -5037,65 +4177,6 @@ def q_canonical_dedup(spark, sf_dir):
         F.date_format("warc_ts", "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("warc_date"),
         "body",
     )
-
-
-@contract(
-    oracle="""
-        -- per-label centroid: DECIMAL(30,15) sums (order-independent,
-        -- matching Spark's decimal-summed means bit-for-bit), then
-        -- cosine distance + top-10 rank per label
-        WITH e AS (
-          SELECT vec_id, label,
-                 unnest(range(1, len(embedding) + 1)) AS pos,
-                 unnest(list_transform(embedding, x -> CAST(x AS DOUBLE)))
-                   AS val
-          FROM embeddings
-        ), c AS (
-          SELECT label, pos,
-                 CAST(sum(CAST(CAST(val AS DOUBLE) AS DECIMAL(30,15)))
-                      AS DOUBLE) / count(*) AS m
-          FROM e GROUP BY label, pos
-        ), cv AS (
-          SELECT label, list(m ORDER BY pos) AS cv FROM c GROUP BY label
-        ), s AS (
-          SELECT a.label, a.vec_id,
-                 round(1 - list_dot_product(
-                     list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
-                     cv.cv)
-                   / (sqrt(list_dot_product(
-                        list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
-                        list_transform(a.embedding, x -> CAST(x AS DOUBLE))))
-                      * sqrt(list_dot_product(cv.cv, cv.cv))),
-                   4) AS centroid_dist
-          FROM embeddings a JOIN cv ON a.label = cv.label
-        ), r AS (
-          SELECT label, vec_id, centroid_dist,
-                 row_number() OVER (
-                   PARTITION BY label
-                   ORDER BY centroid_dist DESC, vec_id ASC
-                 ) AS rank
-          FROM s
-        )
-        SELECT label, vec_id, centroid_dist, rank FROM r WHERE rank <= 10
-    """,
-    plan=(
-        "prototypicality pruning: broadcast centroid dim join + WindowGroupLimit top-k "
-        "per label (vectors never shuffle for the join; no Python stage)"
-    ),
-    must=["BroadcastHashJoin", "WindowGroupLimit"],
-    must_not=["CartesianProduct", "SortMergeJoin", "ArrowEvalPython",
-              "BatchEvalPython"],
-)
-def q_centroid_outliers(spark, sf_dir):
-    """Prototypicality pruning (ops/similarity.centroid_outliers): per-label
-    centroid via DECIMAL(30,15)-summed means (order-independent,
-    cross-engine exact — the ivf_train rule), cosine distance of every
-    vector to its own label's centroid, 10 least-prototypical per label
-    via WindowGroupLimit.  Oracle recomputes centroids and distances with
-    list_dot_product — bit-agreeing at the shared 4dp rounding."""
-    from html_parser_spark.ops.similarity import centroid_outliers
-
-    return centroid_outliers(_tbl(spark, sf_dir, "embeddings"), k=10)
 
 
 @contract(
@@ -5891,95 +4972,6 @@ def q_paragraph_dedup(spark, sf_dir):
 
 @contract(
     oracle="""
-        -- SemDeDup: the q_ivf_topk training/assignment CTE (one Lloyd
-        -- iteration, DECIMAL(30,15) means — bit-identical with Spark),
-        -- then in-cluster pairs only; drop-if-lower-id-duplicate at
-        -- round(cosine,4) >= 0.35
-        WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        seed AS (SELECT vec_id AS cent_id,
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-                 FROM e WHERE vec_id < 16),
-        asg0 AS (
-          SELECT vec_id, cent_id, embedding FROM (
-            SELECT a.vec_id, c.cent_id, a.embedding,
-                   row_number() OVER (PARTITION BY a.vec_id ORDER BY
-                     (list_dot_product(a.embedding, c.cv) /
-                      (sqrt(list_dot_product(a.embedding, a.embedding)) *
-                       sqrt(list_dot_product(c.cv, c.cv)))) DESC,
-                     c.cent_id ASC) AS rn
-            FROM e a CROSS JOIN seed c) WHERE rn = 1
-        ),
-        ex AS (
-          SELECT cent_id,
-                 unnest(range(1, len(embedding) + 1)) AS pos,
-                 unnest(list_transform(embedding, x -> CAST(x AS DOUBLE)))
-                   AS val
-          FROM asg0
-        ),
-        sums AS (
-          SELECT cent_id, pos,
-                 sum(CAST(val AS DECIMAL(30,15))) AS s, count(*) AS c
-          FROM ex GROUP BY 1, 2
-        ),
-        refined AS (
-          SELECT cent_id, list(CAST(s AS DOUBLE) / c ORDER BY pos) AS cv
-          FROM sums GROUP BY cent_id
-        ),
-        cents AS (
-          SELECT s.cent_id, coalesce(r.cv, s.cv) AS cv
-          FROM seed s LEFT JOIN refined r USING (cent_id)
-        ),
-        assign AS (
-          SELECT vec_id, cent_id FROM (
-            SELECT a.vec_id, c.cent_id,
-                   row_number() OVER (PARTITION BY a.vec_id ORDER BY
-                     (list_dot_product(a.embedding, c.cv) /
-                      (sqrt(list_dot_product(a.embedding, a.embedding)) *
-                       sqrt(list_dot_product(c.cv, c.cv)))) DESC,
-                     c.cent_id ASC) AS rn
-            FROM e a CROSS JOIN cents c) WHERE rn = 1
-        ),
-        sides AS (
-          SELECT a.vec_id, a.cent_id, e.embedding,
-                 sqrt(list_dot_product(e.embedding, e.embedding)) AS nrm
-          FROM assign a JOIN e USING (vec_id)
-        ),
-        dropped AS (
-          SELECT DISTINCT y.vec_id
-          FROM sides x JOIN sides y
-            ON x.cent_id = y.cent_id AND x.vec_id < y.vec_id
-          WHERE round(list_dot_product(x.embedding, y.embedding) /
-                      (x.nrm * y.nrm), 4) >= 0.35
-        )
-        SELECT a.vec_id, a.cent_id, (d.vec_id IS NULL) AS kept
-        FROM assign a LEFT JOIN dropped d USING (vec_id)
-    """,
-    plan=(
-        "SemDeDup: broadcast centroids (tiny trained set), cluster-bounded pair scan "
-        "as an EQUI-join on cent_id — never an all-pairs cartesian; zero Python"
-    ),
-    must=["BroadcastExchange", "Exchange hashpartitioning(cent_id"],
-    must_not=["CartesianProduct", "ArrowEvalPython", "BatchEvalPython"],
-)
-def q_semantic_dedup(spark, sf_dir):
-    """SemDeDup (Abbas et al. 2023) over the embeddings table: centroids
-    Lloyd-trained for ONE iteration (decimal-exact means — bit-reproducible
-    cross-engine, the q_ivf_topk machinery), pair scan bounded to each
-    cluster, drop every vector with a lower-id in-cluster duplicate at
-    cosine >= 0.35 (4 dp round before the compare).  The oracle replays
-    training, assignment, and the in-cluster pair scan symbolically."""
-    from html_parser_spark.ops.similarity import semantic_dedup
-
-    return semantic_dedup(
-        _tbl(spark, sf_dir, "embeddings"),
-        n_centroids=16,
-        train_iters=1,
-        threshold=0.35,
-    )
-
-
-@contract(
-    oracle="""
         -- EXPECTED charset + decoded text in closed form (each body is
         -- a pure function of doc_id%7) — checks the JVM sniff chain and
         -- the Arrow decode kernel without a second decoder
@@ -6082,67 +5074,6 @@ def q_charset(spark, sf_dir):
     return out.select(
         "doc_id", "charset", "text", F.length("text").cast("long").alias("n_chars")
     )
-
-
-@contract(
-    oracle="""
-        WITH toks AS (
-          SELECT doc_id,
-                 unnest(regexp_split_to_array(trim(text), '\\s+')) AS term
-          FROM documents
-        )
-        SELECT term, doc_id, count(*) AS tf
-        FROM toks WHERE term <> '' GROUP BY term, doc_id
-    """,
-    plan=(
-        "FLAT (term, doc_id, tf) rows: explode + ONE partial-agg groupBy; never "
-        "collect_list posting arrays, zero Python"
-    ),
-    must=["HashAggregate", "Exchange hashpartitioning(term"],
-    must_not=["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct"],
-)
-def q_inverted_index(spark, sf_dir):
-    """Flat inverted index (term, doc_id, tf) — posting lists as rows,
-    never collect_list arrays (a stopword's posting list at 100 TB is
-    10^9 entries).  One explode + ONE partial-agg groupBy."""
-    from html_parser_spark.ops.search import inverted_index
-
-    return inverted_index(_docs(spark, sf_dir))
-
-
-@contract(
-    oracle="""
-        WITH toks AS (
-          SELECT doc_id,
-                 unnest(regexp_split_to_array(trim(text), '\\s+')) AS term
-          FROM documents
-        ), idx AS (
-          SELECT term, doc_id, count(*) AS tf
-          FROM toks WHERE term <> '' GROUP BY term, doc_id
-        ), scored AS (
-          SELECT doc_id, count(DISTINCT term) AS n_terms,
-                 CAST(sum(tf) AS BIGINT) AS score
-          FROM idx WHERE term IN ('table', 'spark')
-          GROUP BY doc_id HAVING count(DISTINCT term) = 2
-        )
-        SELECT doc_id, n_terms, score FROM scored
-        ORDER BY score DESC, doc_id LIMIT 10
-    """,
-    plan=(
-        "conjunctive query: IN-filter before the agg, top-k via TakeOrderedAndProject "
-        "(per-partition heaps), never a global Sort"
-    ),
-    must=["TakeOrderedAndProject"],
-    must_not=["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct"],
-)
-def q_keyword_search(spark, sf_dir):
-    """Conjunctive keyword query over the inverted index: docs containing
-    BOTH 'table' AND 'spark', integer tf ranking, doc_id tie-break,
-    TakeOrderedAndProject top-10 (never a full sort)."""
-    from html_parser_spark.ops.search import inverted_index, keyword_search
-
-    idx = inverted_index(_docs(spark, sf_dir))
-    return keyword_search(idx, ["table", "spark"], k=10)
 
 
 @contract(
@@ -6392,90 +5323,6 @@ def q_hreflang(spark, sf_dir):
     return hreflang_clusters(hreflang_links(pages)).select(
         "cluster_id", "url", "self_hreflang",
         F.col("n_variants").cast("long").alias("n_variants"),
-    )
-
-
-@contract(
-    oracle="""
-        -- full margin-mining replay: identical in-row float cosine
-        -- (sequential reduction — bit-exact cross-engine), then pure
-        -- scaled-BIGINT top-k means, margins and mutual-best election.
-        WITH x AS (
-          SELECT vec_id AS src_id, embedding AS xv FROM embeddings
-          WHERE vec_id < 80 AND vec_id % 2 = 0
-        ), y AS (
-          SELECT vec_id AS dst_id, embedding AS yv FROM embeddings
-          WHERE vec_id < 80 AND vec_id % 2 = 1
-        ), scored AS (
-          SELECT src_id, dst_id,
-                 CAST(round(round(list_dot_product(xv, yv) /
-                      (sqrt(list_dot_product(xv, xv)) *
-                       sqrt(list_dot_product(yv, yv))), 4) * 10000)
-                      AS BIGINT) AS cos_e4
-          FROM x CROSS JOIN y
-        ), pos AS (SELECT * FROM scored WHERE cos_e4 > 0
-        ), kx AS (
-          SELECT src_id, CAST(SUM(cos_e4) AS BIGINT) AS sum_x_e4,
-                 CAST(COUNT(*) AS BIGINT) AS kx
-          FROM (SELECT *, row_number() OVER (PARTITION BY src_id
-                  ORDER BY cos_e4 DESC, dst_id ASC) AS r FROM pos)
-          WHERE r <= 3 GROUP BY src_id
-        ), ky AS (
-          SELECT dst_id, CAST(SUM(cos_e4) AS BIGINT) AS sum_y_e4,
-                 CAST(COUNT(*) AS BIGINT) AS ky
-          FROM (SELECT *, row_number() OVER (PARTITION BY dst_id
-                  ORDER BY cos_e4 DESC, src_id ASC) AS r FROM pos)
-          WHERE r <= 3 GROUP BY dst_id
-        ), m AS (
-          SELECT p.src_id, p.dst_id, p.cos_e4,
-                 CAST((p.cos_e4 * 2 * kx.kx * ky.ky * 10000)
-                      // (kx.sum_x_e4 * ky.ky + ky.sum_y_e4 * kx.kx)
-                      AS BIGINT) AS margin_e4
-          FROM pos p JOIN kx USING (src_id) JOIN ky USING (dst_id)
-        ), fwd AS (
-          SELECT src_id, dst_id, cos_e4, margin_e4
-          FROM (SELECT m.*, row_number() OVER (PARTITION BY src_id
-                  ORDER BY margin_e4 DESC, dst_id ASC) AS r FROM m)
-          WHERE r = 1
-        ), bwd AS (
-          SELECT src_id, dst_id
-          FROM (SELECT src_id, dst_id, row_number() OVER (
-                  PARTITION BY dst_id
-                  ORDER BY margin_e4 DESC, src_id ASC) AS r FROM m)
-          WHERE r = 1
-        )
-        SELECT f.src_id, f.dst_id, f.cos_e4, f.margin_e4
-        FROM fwd f JOIN bwd b
-          ON b.src_id = f.src_id AND b.dst_id = f.dst_id
-        WHERE f.margin_e4 >= 9000
-    """,
-    plan=(
-        "margin mining: broadcast pair generation (candidates equi-join at scale), "
-        "in-row JVM cosine, bounded per-id windows, zero Python"
-    ),
-    must=["BroadcastNestedLoopJoin", "Window"],
-    must_not=["CartesianProduct", "ArrowEvalPython", "BatchEvalPython"],
-)
-def q_bitext_mine(spark, sf_dir):
-    """Margin-based bitext mining (ops/similarity.bitext_margin_mine,
-    Artetxe & Schwenk 2019): even vec_ids < 80 are the source side, odd
-    the target side, k=3 neighbourhood, mutual-best pairs with
-    margin ≥ 0.9.  Cosines are the bit-exact in-row array reductions the
-    other embedding ops use; every downstream mean/ratio is scaled-BIGINT
-    arithmetic (margin_e4 = margin × 10^4), so the oracle replay matches
-    on the full value hash, not a tolerance."""
-    emb = _tbl(spark, sf_dir, "embeddings")
-    from html_parser_spark.ops.similarity import bitext_margin_mine
-
-    side = emb.filter(F.col("vec_id") < 80).select("vec_id")
-    src = side.filter(F.col("vec_id") % 2 == 0)
-    dst = side.filter(F.col("vec_id") % 2 == 1)
-    return bitext_margin_mine(
-        emb, src, dst, k=3, margin_threshold_e4=9000
-    ).select(
-        "src_id", "dst_id",
-        F.col("cos_e4").cast("long").alias("cos_e4"),
-        F.col("margin_e4").cast("long").alias("margin_e4"),
     )
 
 
@@ -6747,71 +5594,6 @@ def q_lm_buckets(spark, sf_dir):
 
 @contract(
     oracle="""
-        -- rebuild the inverted index + doc lengths over the same
-        -- whitespace tokens, then the IDENTICAL BIGINT arithmetic:
-        -- rational Robertson idf, fraction-cleared tf saturation
-        WITH toks AS (
-          SELECT doc_id,
-                 list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                             x -> x <> '') AS t
-          FROM documents
-        ), dls AS (
-          SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM toks
-        ), tot AS (
-          SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                 CAST(sum(dl) AS BIGINT) AS total_dl
-          FROM dls
-        ), ev AS (
-          SELECT doc_id, unnest(t) AS term FROM toks
-        ), idx AS (
-          SELECT term, doc_id, CAST(count(*) AS BIGINT) AS tf
-          FROM ev WHERE term IN ('data', 'fast', 'query')
-          GROUP BY term, doc_id
-        ), stats AS (
-          SELECT term, CAST(count(*) AS BIGINT) AS df_docs
-          FROM idx GROUP BY term
-        ), scored AS (
-          SELECT idx.doc_id, idx.term,
-                 (((2 * n_docs - 2 * df_docs + 1) * 1000000)
-                    // (2 * df_docs + 1))
-                 * ((tf * 22 * total_dl * 1000000)
-                    // (10 * tf * total_dl + 3 * total_dl
-                        + 9 * dl * n_docs))
-                 // 1000000 AS s
-          FROM idx
-          JOIN stats USING (term)
-          JOIN dls USING (doc_id)
-          CROSS JOIN tot
-        )
-        SELECT doc_id,
-               CAST(count(DISTINCT term) AS BIGINT) AS n_terms,
-               CAST(sum(s) AS BIGINT) AS score
-        FROM scored GROUP BY doc_id
-        ORDER BY score DESC, doc_id ASC LIMIT 20
-    """,
-    plan=(
-        "IN-filtered index scan, broadcast term stats + 1-row totals, "
-        "TakeOrderedAndProject top-k (no global sort), zero Python"
-    ),
-    must=["TakeOrderedAndProject", "BroadcastNestedLoopJoin"],
-    must_not=["CartesianProduct", "Window", "ArrowEvalPython", "BatchEvalPython"],
-)
-def q_bm25(spark, sf_dir):
-    """BM25 top-20 retrieval over the corpus (ops/search.bm25_topk):
-    Okapi weighting with k1=1.2, b=0.75 carried as exact rationals and a
-    log-free rational Robertson idf, so every score is one BIGINT
-    expression — bit-identical across engines.  Plan: IN-filtered index
-    scan, broadcast term stats + 1-row totals, TakeOrderedAndProject
-    top-k.  The oracle rebuilds the index and evaluates the identical
-    integer arithmetic."""
-    from html_parser_spark.ops.search import bm25_topk
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    return bm25_topk(docs, ["data", "fast", "query"], k=20)
-
-
-@contract(
-    oracle="""
         -- unigram + adjacent-pair counts over the same tokens, then
         -- the identical scaled integer division; min_count prune
         WITH toks AS (
@@ -6934,97 +5716,6 @@ def q_label_prop(spark, sf_dir, checkpoint=True):
     return label_propagation(
         _synth_host_edges(docs), iterations=3, checkpoint=checkpoint
     )
-
-
-@contract(
-    oracle="""
-        -- DSIR replica: same 4096 md5 buckets as the NB oracle,
-        -- target = lang <> 'en'; per-bucket floor(log2 ratio) via
-        -- bin() bit length on the identical clamped integer ratio;
-        -- top-30% keep through the weight-histogram cumulative
-        WITH tok AS (
-          SELECT doc_id,
-                 unnest(list_filter(
-                   regexp_split_to_array(lower(text), '\\s+'),
-                   x -> len(x) > 0)) AS tok
-          FROM documents
-        ), feats AS (
-          SELECT doc_id,
-                 ((strpos('0123456789abcdef', substring(h, 1, 1)) - 1) * 4096
-                + (strpos('0123456789abcdef', substring(h, 2, 1)) - 1) * 256
-                + (strpos('0123456789abcdef', substring(h, 3, 1)) - 1) * 16
-                + (strpos('0123456789abcdef', substring(h, 4, 1)) - 1))
-                   % 4096 AS bucket
-          FROM (SELECT doc_id, md5('feat' || tok) AS h FROM tok)
-        ), cells AS (
-          SELECT bucket,
-                 CAST(sum(CASE WHEN d.lang <> 'en' THEN 1 ELSE 0 END)
-                   AS BIGINT) AS cnt_t,
-                 CAST(sum(CASE WHEN d.lang <> 'en' THEN 0 ELSE 1 END)
-                   AS BIGINT) AS cnt_r
-          FROM feats f JOIN documents d USING (doc_id)
-          GROUP BY bucket
-        ), tot AS (
-          SELECT CAST(sum(cnt_t) AS BIGINT) AS tot_t,
-                 CAST(sum(cnt_r) AS BIGINT) AS tot_r
-          FROM cells
-        ), wts AS (
-          SELECT bucket,
-                 CAST(length(bin(CAST(greatest(least(
-                   ((cnt_t + 1) * (tot_r + 4096) * 1048576)
-                     // ((cnt_r + 1) * (tot_t + 4096)),
-                   4611686018427387904), 1) AS BIGINT))) - 1 - 20
-                   AS BIGINT) AS w
-          FROM cells, tot
-        ), dw AS (
-          SELECT f.doc_id,
-                 CAST(coalesce(sum(w.w), 0) AS BIGINT) AS weight
-          FROM feats f LEFT JOIN wts w USING (bucket)
-          GROUP BY f.doc_id
-        ), hist AS (
-          SELECT weight, CAST(count(*) AS BIGINT) AS n
-          FROM dw GROUP BY weight
-        ), cum AS (
-          SELECT weight,
-                 CAST(coalesce(sum(n) OVER (
-                   ORDER BY weight DESC
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                 ), 0) AS BIGINT) AS better,
-                 CAST(sum(n) OVER () AS BIGINT) AS tot
-          FROM hist
-        )
-        SELECT dw.doc_id, dw.weight,
-               CAST(CASE WHEN better * 100 < 30 * tot
-                    THEN 1 ELSE 0 END AS INT) AS keep
-        FROM dw JOIN cum USING (weight)
-    """,
-    plan=(
-        "importance weights: ONE groupBy(bucket) + 1-row broadcast totals; doc weights "
-        "via broadcast model join; the only Window runs over the bounded weight "
-        "histogram; zero Python, no cartesian product"
-    ),
-    must=["HashAggregate", "Window"],
-    must_not=["CartesianProduct", "ArrowEvalPython", "BatchEvalPython"],
-)
-def q_dsir(spark, sf_dir):
-    """DSIR importance selection (ops/classify.dsir_*, Xie et al. 2023):
-    hashed-unigram importance weights toward the non-English docs as the
-    target distribution, per-bucket floor(log2 ratio) via exact integer
-    bit-length (no float log, no order-dependent float sum), doc weight
-    = Σ bucket weights, deterministic top-30% keep through the bounded
-    weight-histogram cumulative.  Returns (doc_id, weight, keep)."""
-    from html_parser_spark.ops.classify import (
-        dsir_bucket_weights,
-        dsir_doc_weights,
-        dsir_select,
-        hashed_features,
-    )
-
-    d = _docs(spark, sf_dir)
-    feats = hashed_features(d.select("doc_id", "text"))
-    target = d.where(F.col("lang") != "en").select("doc_id")
-    weights = dsir_bucket_weights(feats, target)
-    return dsir_select(dsir_doc_weights(feats, weights), keep_pct=30)
 
 
 @contract(

@@ -149,22 +149,14 @@ def _apply_decls(style: dict[str, str], decls: dict[str, str]) -> None:
 # declaration-block text → (declarations, effect): ``effect`` is what
 # ``_apply_decls`` writes, so applying a block is one ``dict.update`` (every
 # write depends only on the block).  Generated sheets repeat their blocks
-# (per-span ``left``/``bottom`` pairs, inline styles); bounded like
-# ``dom._ATTRS_MEMO``
-_BLOCK_MEMO: dict[str, tuple[dict, dict]] = {}
-_BLOCK_MEMO_MAX = 8192
-
-
+# (per-span ``left``/``bottom`` pairs, inline styles); memoized like
+# ``dom._attrs_view``, so both are shared and read-only
+@functools.lru_cache(maxsize=8192)
 def declaration_block(body: str) -> tuple[dict, dict]:
-    hit = _BLOCK_MEMO.get(body)
-    if hit is None:
-        decls = parse_declarations(body)
-        effect: dict[str, str] = {}
-        _apply_decls(effect, decls)
-        hit = (decls, effect)
-        if len(_BLOCK_MEMO) < _BLOCK_MEMO_MAX:
-            _BLOCK_MEMO[body] = hit
-    return hit
+    decls = parse_declarations(body)
+    effect: dict[str, str] = {}
+    _apply_decls(effect, decls)
+    return decls, effect
 
 
 class Rule:

@@ -30,6 +30,7 @@ the whole page) is the differential-testing baseline.
 
 from __future__ import annotations
 
+import functools
 import re
 from html.parser import HTMLParser
 
@@ -249,9 +250,11 @@ _TOKEN_RE = re.compile(
     r"|<\?(?P<pi>[^>]*)>"
     r"|</\s*(?P<endtag>[a-zA-Z][-.:\w]*)\s*>"
     r"|<(?P<starttag>[a-zA-Z][-.:\w]*)"
-    # attributes up to the first unquoted ">" or "/>"; possessive, because a
-    # quote must pair with the next one and a stop is never revisited
-    r"(?P<attrs>(?:[^>\"'/]++|/(?!>)|\"[^\"]*+\"|'[^']*+')*+)(?P<selfclose>/?)>",
+    # attributes up to the first unquoted ">" or "/>"; a quote opens a value
+    # only right after "=" (html.parser's attrfind), any other quote leaves
+    # the tag unread; possessive, because a stop is never revisited
+    r"(?P<attrs>(?:[^>\"'/=]++|/(?!>)|=\s*+(?:\"[^\"]*+\"|'[^']*+')?+)*+)"
+    r"(?P<selfclose>/?)>",
     re.S,
 )
 
@@ -282,32 +285,23 @@ def _parse_attrs(s: str) -> list[tuple[str, str | None]]:
     return out
 
 
-# machine-generated HTML repeats a handful of attribute strings (class="af1",
-# class="af", …) across millions of elements — memoize raw string → attr dict
-# and hand each Node a .copy() (nodes mutate attrs: class demotion in P2/P4)
-_ATTRS_MEMO: dict[str, dict] = {}
-_ATTRS_MEMO_MAX = 8192
-
 # fast scan for the dominant shape: lowercase double-quoted name="value"
 # pairs, no entities — one C-speed fullmatch + one findall, no per-attr loop
 _SIMPLE_ATTRS_ALL = re.compile(r'(?:\s+[a-z][a-z0-9_:.-]*="[^"&]*")+\s*')
 _SIMPLE_ATTRS_PAIR = re.compile(r'([a-z][a-z0-9_:.-]*)="([^"]*)"')
 
 
+# machine-generated HTML repeats a handful of attribute strings (class="af1",
+# class="af", …) across millions of elements — memoize raw string → attr dict
+# (least recently used out: idrviewer pages hold one unique id per span) and
+# hand each Node a .copy() (nodes mutate attrs: class demotion in P2/P4)
+@functools.lru_cache(maxsize=8192)
 def _attrs_view(s: str) -> dict:
     """The memoized attribute dict of a raw attribute string — shared, so
     read-only (the DOM-free scanners read class/id/style from it)."""
-    if not s:
-        return _EMPTY_ATTRS
-    hit = _ATTRS_MEMO.get(s)
-    if hit is None:
-        if _SIMPLE_ATTRS_ALL.fullmatch(s):
-            hit = dict(_SIMPLE_ATTRS_PAIR.findall(s))
-        else:
-            hit = dict(_parse_attrs(s))
-        if len(_ATTRS_MEMO) < _ATTRS_MEMO_MAX:
-            _ATTRS_MEMO[s] = hit
-    return hit
+    if _SIMPLE_ATTRS_ALL.fullmatch(s):
+        return dict(_SIMPLE_ATTRS_PAIR.findall(s))
+    return dict(_parse_attrs(s))
 
 
 def _attrs_dict(s: str) -> dict:

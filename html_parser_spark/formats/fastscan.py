@@ -47,6 +47,8 @@ and lez-rus-35k/index.js:19-26 (P20).
 
 from __future__ import annotations
 
+import functools
+
 from html_parser_spark.css import ROOT_STYLE, StyleSheet, cascade
 from html_parser_spark.dom import (
     _P_CLOSERS,
@@ -71,21 +73,11 @@ from html_parser_spark.jsstr import JS_NON_WS_RE, JS_WS_COLLAPSE_RE, js_trim, tr
 _EMPTY_ATTRS: dict = {}  # shared by text/comment runs (class_name is None)
 
 # raw attrs string → class value; the scan needs ONLY the class attribute,
-# and machine-generated HTML repeats a handful of attr strings — memoize the
-# parse and skip the per-node dict copy the DOM path pays
-_CLASS_MEMO: dict[str, str | None] = {}
-_CLASS_MEMO_MAX = 8192
-
-
+# and machine-generated HTML repeats a handful of attr strings — memoize it
+# (least recently used out) and skip the per-node dict copy the DOM path pays
+@functools.lru_cache(maxsize=8192)
 def _class_of(attrs_str: str):
-    if not attrs_str:
-        return None
-    hit = _CLASS_MEMO.get(attrs_str, _CLASS_MEMO)
-    if hit is _CLASS_MEMO:
-        hit = _attrs_view(attrs_str).get("class")
-        if len(_CLASS_MEMO) < _CLASS_MEMO_MAX:
-            _CLASS_MEMO[attrs_str] = hit
-    return hit
+    return _attrs_view(attrs_str).get("class") if attrs_str else None
 
 
 class Run:

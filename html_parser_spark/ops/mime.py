@@ -127,10 +127,10 @@ def extract_any(
     Routing, per row inside ONE kernel stage: text/html|xml|plain → DOM
     kernel; application/pdf → native PDF parser (fmt='pdf', extracted text
     = the PDF's text; 'pdf_error' when it does not parse); all other mimes
-    → fmt='binary' rows (no text, no error — a media payload is data for
-    the multimodal tier, not a parse failure).  ``max_html_bytes`` guards
-    the text and PDF pages as in ``extract_pages``; a binary payload never
-    reaches Python, so it is never 'oversized'."""
+    → fmt='binary' rows (no text, no error — a media payload is data, not a
+    parse failure).  ``max_html_bytes`` guards the text and PDF pages as in
+    ``extract_pages``; a binary payload never reaches Python, so it is never
+    'oversized'."""
     from html_parser_spark.kernel import parse_document
     from html_parser_spark.ops.pdf import pdf_row
     from html_parser_spark.spark.pipeline import (

@@ -710,11 +710,11 @@ def hreflang_pairs(
 ) -> DataFrame:
     """Directed bitext candidate pairs straight from the declarations:
     every (page, alternate) edge with the page's own language attached —
-    the seed list a margin-mining pass (ops/similarity.bitext_margin_mine)
-    verifies.  Zero joins: one filter + projection over the links rows
-    (``lang_col`` must already ride the links frame; hreflang_links
-    preserves input columns).  Self-references and x-default rows are
-    dropped (x-default is a router alias, not a language)."""
+    the seed list a bitext-mining pass verifies.  Zero joins: one filter +
+    projection over the links rows (``lang_col`` must already ride the
+    links frame; hreflang_links preserves input columns).  Self-references
+    and x-default rows are dropped (x-default is a router alias, not a
+    language)."""
     return links.filter(
         (F.col("href") != F.col(url_col)) & (F.col("hreflang") != "x-default")
     ).select(

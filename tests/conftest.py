@@ -10,7 +10,14 @@ TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 
 
 def fixture_path(*parts):
-    return os.path.join(REFERENCE, *parts)
+    """The path of a reference input (a file or directory under
+    ``REFERENCE``).  When it is absent the calling test or fixture skips,
+    naming the missing path; every reference-dependent test goes through
+    here."""
+    path = os.path.join(REFERENCE, *parts)
+    if not os.path.exists(path):
+        pytest.skip(f"reference input not found: {path}")
+    return path
 
 
 def read_fixture(*parts) -> bytes:

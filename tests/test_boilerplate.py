@@ -192,14 +192,14 @@ def test_fixture_corpus_golden_aggregate():
     import json
     import os
 
-    from tests.conftest import REFERENCE
+    from tests.conftest import fixture_path
 
     idx = json.load(
         open(os.path.join(os.path.dirname(__file__), "golden", "fixture_index.json"))
     )
     tot_blocks = tot_content = tot_chars = 0
     for rel in sorted(idx):
-        with open(os.path.join(REFERENCE, rel), "rb") as f:
+        with open(fixture_path(rel), "rb") as f:
             r = extract_main(f.read())
         tot_blocks += r["n_blocks"]
         tot_content += r["n_content_blocks"]

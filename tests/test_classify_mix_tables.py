@@ -1,101 +1,10 @@
-"""Round-4 extras: hashed NB-vote classifier, temperature mixing, HTML
-table extraction — semantics + plan-shape assertions."""
+"""Round-4 extras: temperature mixing and corpus packing (shards, sequences)
+— semantics + plan-shape assertions."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-
-
-# --------------------------------------------------------------- classifier
-def test_nb_votes_learn_separable_vocab(spark):
-    """Tokens unique to one class must vote for it, and scoring must
-    classify held-out docs made of those tokens correctly."""
-    from html_parser_spark.ops.classify import (
-        hashed_features,
-        nb_vote_score,
-        train_nb_votes,
-    )
-
-    train = spark.createDataFrame(
-        [
-            (1, "good clean prose sentence structure", 1),
-            (2, "another good readable paragraph here", 1),
-            (3, "click now buy cheap pills offer", 0),
-            (4, "cheap offer click spam pills now", 0),
-        ],
-        ["doc_id", "text", "label"],
-    )
-    feats = hashed_features(train)
-    votes = train_nb_votes(feats, train.select("doc_id", "label"))
-    test = spark.createDataFrame(
-        [(10, "clean readable prose paragraph"), (11, "buy cheap pills now")],
-        ["doc_id", "text"],
-    )
-    scored = {
-        r["doc_id"]: r
-        for r in nb_vote_score(hashed_features(test), votes).collect()
-    }
-    assert scored[10]["pred"] == 1 and scored[10]["score"] > 0
-    assert scored[11]["pred"] == 0 and scored[11]["score"] < 0
-
-
-def test_nb_score_integer_and_unseen_bucket_zero(spark):
-    """A doc made entirely of unseen tokens scores exactly 0 (votes
-    coalesce to 0), and the score column is integer-typed."""
-    from html_parser_spark.ops.classify import (
-        hashed_features,
-        nb_vote_score,
-        train_nb_votes,
-    )
-
-    train = spark.createDataFrame(
-        [(1, "alpha beta", 1), (2, "gamma delta", 0)], ["doc_id", "text", "label"]
-    )
-    votes = train_nb_votes(hashed_features(train), train.select("doc_id", "label"))
-    out = nb_vote_score(
-        hashed_features(
-            spark.createDataFrame([(9, "zzzqqq wwwvvv")], ["doc_id", "text"])
-        ),
-        votes,
-    ).collect()
-    assert out[0]["score"] == 0 and out[0]["pred"] == 0
-    schema = {f.name: f.dataType.simpleString() for f in votes.schema.fields}
-    assert schema["vote"] == "int"
-
-
-def test_classifier_plan_broadcasts_model(spark):
-    """Scoring must broadcast the model dim — never shuffle it against
-    the corpus."""
-    from html_parser_spark.ops.classify import (
-        hashed_features,
-        nb_vote_score,
-        train_nb_votes,
-    )
-
-    docs = spark.range(100).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("tok"), (F.col("id") % 17).cast("string")).alias("text"),
-        (F.col("id") % 2).alias("label"),
-    )
-    feats = hashed_features(docs)
-    votes = train_nb_votes(feats, docs.select("doc_id", "label"))
-    plan = (
-        nb_vote_score(feats, votes)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in plan
-
-
-def test_hashed_features_buckets_must_divide(spark):
-    from html_parser_spark.ops.classify import hashed_features
-
-    with pytest.raises(ValueError):
-        hashed_features(
-            spark.createDataFrame([(1, "x")], ["doc_id", "text"]), buckets=1000
-        )
 
 
 # --------------------------------------------------------- temperature mix
@@ -164,55 +73,7 @@ def test_temperature_mix_rejects_other_alpha(spark):
         )
 
 
-# ------------------------------------------------------------------ tables
-def _rows(html: str):
-    from html_parser_spark.ops.tables import extract_page_tables
-
-    return extract_page_tables(html.encode())
-
-
-def test_tables_kernel_nesting_colspan_header():
-    rows = _rows(
-        "<html><body>"
-        '<table><thead><tr><th colspan="2">H</th></tr></thead>'
-        "<tbody><tr><td> a  1 </td><td>b</td></tr></tbody></table>"
-        "<table><tr><td>x<table><tr><td>in</td></tr></table></td>"
-        "<td>y</td></tr></table></body></html>"
-    )
-    assert rows == [
-        {"table_idx": 0, "row_idx": 0, "is_header": True, "cells": ["H", "H"]},
-        {"table_idx": 0, "row_idx": 1, "is_header": False, "cells": ["a 1", "b"]},
-        {"table_idx": 1, "row_idx": 0, "is_header": False, "cells": ["xin", "y"]},
-        {"table_idx": 2, "row_idx": 0, "is_header": False, "cells": ["in"]},
-    ]
-
-
-def test_tables_kernel_edge_cases():
-    # no tables / empty page / malformed colspan / tr outside table
-    assert _rows("<html><body><p>no tables</p></body></html>") == []
-    assert _rows("") == []
-    bad = _rows('<table><tr><td colspan="zz">v</td></tr></table>')
-    assert bad[0]["cells"] == ["v"]
-    assert _rows("<tr><td>stray</td></tr>") == []
-    # colspan cap
-    big = _rows('<table><tr><td colspan="99999">v</td></tr></table>')
-    assert len(big[0]["cells"]) == 1000
-
-
-def test_extract_tables_dataframe_no_shuffle(spark):
-    from html_parser_spark.ops.tables import extract_tables
-
-    pages = spark.createDataFrame(
-        [("u1", b"<table><tr><td>a</td></tr></table>"), ("u2", b"<p>none</p>")],
-        ["url", "html"],
-    )
-    out = extract_tables(pages)
-    rows = out.collect()
-    assert len(rows) == 1 and rows[0]["cells"] == ["a"] and rows[0]["n_cells"] == 1
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-
+# ---------------------------------------------------------- corpus packing
 def test_pack_shards_matches_sequential_and_is_partition_independent(spark):
     """The distributed prefix-sum equals the sequential running sum for
     ANY partition count (1, 3, 8) — including a NULL-text doc (0 bytes)."""
@@ -283,24 +144,6 @@ def test_pack_shards_no_global_single_partition_window(spark):
         if "_range_bytes" in spec:
             continue
         assert "partitionBy" in s or "_p" in spec, spec
-
-
-def test_tables_kernel_survives_deep_nesting():
-    """A crawl page with thousands of nested elements must not blow the
-    recursion limit (the walker is an explicit stack), and a table at the
-    bottom still extracts."""
-    from html_parser_spark.ops.tables import extract_page_tables
-
-    depth = 3000
-    page = (
-        "<html><body>" + "<div>" * depth
-        + "<table><tr><td>deep</td></tr></table>"
-        + "</div>" * depth + "</body></html>"
-    ).encode()
-    rows = extract_page_tables(page)
-    assert rows == [
-        {"table_idx": 0, "row_idx": 0, "is_header": False, "cells": ["deep"]}
-    ]
 
 
 def _sequential_pack(token_counts, L):
@@ -444,83 +287,3 @@ def test_materialize_sequences_reconstructs_stream(spark):
     for sid, n, text in seqs[:-1]:
         assert n == L and len(text.split()) == L
     assert seqs[-1][1] == len(expect_stream) - (len(seqs) - 1) * L
-
-
-# ---------------------------------------------------------------------------
-# round-5: adversarial battery for the NB quality gate (verdict item 8) —
-# hard-negative fixtures with pinned precision/recall floors, the way the
-# soft-404 battery pins its families.
-# ---------------------------------------------------------------------------
-def test_nb_classifier_hard_negative_battery(spark):
-    import hashlib
-
-    from html_parser_spark.ops.classify import (
-        hashed_features,
-        nb_vote_score,
-        train_nb_votes,
-    )
-
-    GOOD = (
-        "analysis evidence method results study conclusion dataset model "
-        "hypothesis measurement"
-    ).split()
-    SPAM = "casino bonus win free click cheap pills offer lottery prize".split()
-    BOILER = (
-        "home about contact login menu search privacy terms cookie "
-        "subscribe sidebar footer"
-    ).split()
-
-    # fixture sanity: the three vocabularies are collision-free under the
-    # production bucketing (16-bit md5 prefix mod 4096), so a bucket merge
-    # can never silently launder a spam token into a good vote
-    def bkt(tok):
-        return int(hashlib.md5(("feat" + tok).encode()).hexdigest()[:4], 16) % 4096
-
-    buckets = [bkt(w) for w in GOOD + SPAM + BOILER]
-    assert len(set(buckets)) == len(buckets)
-
-    def doc(words, i, n):
-        return " ".join(words[(i + j) % len(words)] for j in range(n))
-
-    # training: boilerplate appears with IDENTICAL counts in both classes,
-    # so its buckets tie to vote 0 — the gate must learn that nav chrome
-    # carries no class signal
-    train = []
-    for i in range(30):
-        train.append((i, doc(GOOD, i, 24) + " " + doc(BOILER, i, 6), 1))
-        train.append((100 + i, doc(SPAM, i, 24) + " " + doc(BOILER, i, 6), 0))
-    tdf = spark.createDataFrame(train, "doc_id long, text string, label int")
-    votes = train_nb_votes(hashed_features(tdf), tdf.select("doc_id", "label"))
-
-    boiler_votes = {
-        r["bucket"]: r["vote"]
-        for r in votes.where(F.col("bucket").isin([bkt(w) for w in BOILER])).collect()
-    }
-    assert set(boiler_votes.values()) == {0}
-
-    # adversarial eval: (a) boilerplate-heavy GOOD pages (83% nav chrome),
-    # (b) short legit landing pages (3 tokens), (c) spam sprinkled with
-    # good words — the three families that break naive keyword gates
-    hard = []
-    for i in range(10):
-        hard.append((1000 + i, doc(BOILER, i, 25) + " " + doc(GOOD, i, 5), 1))
-    for i in range(10):
-        hard.append((2000 + i, doc(GOOD, i, 3), 1))
-    for i in range(10):
-        hard.append((3000 + i, doc(SPAM, i, 20) + " " + doc(GOOD, i, 4), 0))
-    edf = spark.createDataFrame(hard, "doc_id long, text string, label int")
-    pred = {
-        r["doc_id"]: r["pred"]
-        for r in nb_vote_score(hashed_features(edf), votes).collect()
-    }
-    truth = {d: y for d, _, y in hard}
-
-    tp = sum(1 for d in truth if truth[d] == 1 and pred[d] == 1)
-    fp = sum(1 for d in truth if truth[d] == 0 and pred[d] == 1)
-    fn = sum(1 for d in truth if truth[d] == 1 and pred[d] == 0)
-    precision = tp / (tp + fp) if tp + fp else 0.0
-    recall = tp / (tp + fn) if tp + fn else 0.0
-    # pinned floors: this battery is deterministic (collision-free vocab,
-    # tied boilerplate) so the gate must be EXACT on it
-    assert precision == 1.0
-    assert recall == 1.0

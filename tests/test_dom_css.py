@@ -185,14 +185,16 @@ def test_flat_sheet_fast_path_matches_general_scan():
             assert fast or css.startswith("{")
 
 
-# the tokenizer's start-tag alternative before its attributes became
-# possessive: the lazy form, kept as the reference
+# the tokenizer's start-tag alternative reads its attributes possessively:
+# the lazy, backtracking form of the same rule (a quote opens a value only
+# right after "="), kept as the reference
 _LAZY_TOKEN_RE = re.compile(
     r"<!--(?P<comment>.*?)(?:-->|$)"
     r"|<!(?P<decl>[^>]*)>"
     r"|<\?(?P<pi>[^>]*)>"
     r"|</\s*(?P<endtag>[a-zA-Z][-.:\w]*)\s*>"
-    r"|<(?P<starttag>[a-zA-Z][-.:\w]*)(?P<attrs>(?:[^>\"']|\"[^\"]*\"|'[^']*')*?)"
+    r"|<(?P<starttag>[a-zA-Z][-.:\w]*)"
+    r"(?P<attrs>(?:[^>\"'=]|=\s*(?:\"[^\"]*\"|'[^']*')?)*?)"
     r"(?P<selfclose>/?)>",
     re.S,
 )
@@ -220,3 +222,26 @@ def test_token_regex_matches_the_lazy_reference_on_generated_pages():
         assert [(m.span(), m.groups()) for m in _TOKEN_RE.finditer(text)] == [
             (m.span(), m.groups()) for m in _LAZY_TOKEN_RE.finditer(text)
         ]
+
+
+def test_memos_keep_serving_after_a_flood_of_unique_strings():
+    """The attribute, class and declaration-block memos evict the least
+    recently used entry: after more unique strings than they hold
+    (idrviewer pages give every span its own ``id``), a repeated string is
+    still a hit."""
+    from html_parser_spark.css import declaration_block
+    from html_parser_spark.dom import _attrs_view
+    from html_parser_spark.formats.fastscan import _class_of
+
+    for memo, repeated, unique in (
+        (_attrs_view, ' class="af1"', ' id="t{}_1" class="s"'),
+        (_class_of, ' class="af1"', ' id="t{}_1" class="s"'),
+        (declaration_block, "color:red", "left:{}px;bottom:1px"),
+    ):
+        memo(repeated)
+        for i in range(memo.cache_info().maxsize + 1):
+            memo(unique.format(i))
+        memo(repeated)
+        hits = memo.cache_info().hits
+        memo(repeated)
+        assert memo.cache_info().hits == hits + 1, memo

@@ -404,6 +404,7 @@ def test_reference_executed_differential():
     import subprocess
     import sys
 
+    fixture_path("v2migration")
     if shutil.which("node") is None:
         pytest.skip("node not available")
     r = subprocess.run(

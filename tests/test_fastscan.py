@@ -11,7 +11,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from tests.conftest import TESTDATA
+from tests.conftest import REFERENCE, TESTDATA, fixture_path
 
 import html_parser_spark.dom as dom
 from html_parser_spark.dom import decode_html_bytes, parse_html
@@ -19,8 +19,6 @@ from html_parser_spark.formats.fastscan import scan_format_a
 from html_parser_spark.formats.format_a import parse_format_a_doc
 from html_parser_spark.formats.format_a import post_process
 from html_parser_spark.formats.textflat import extract_text_doc
-
-REFERENCE = os.environ.get("SPARK_GRAFT_REFERENCE", "/root/reference")
 
 _FIXTURE_GROUPS = [
     ("lez-rus-35k/dictionary/letters", ".html"),
@@ -57,9 +55,7 @@ def test_fastscan_differential_fixture_corpus():
     compared: dict = {}
     declined: dict = {}
     for subdir, suffix in _FIXTURE_GROUPS:
-        d = os.path.join(REFERENCE, subdir)
-        if not os.path.isdir(d):
-            continue
+        d = fixture_path(subdir)
         for name in sorted(os.listdir(d)):
             if not name.endswith(suffix):
                 continue
@@ -169,6 +165,8 @@ def test_fastscan_declines_suspicious_markup():
 
 
 def _fixture_texts():
+    """The reference pages, where present: extra inputs for a test that
+    runs on generated pages without them."""
     for subdir, suffix in _FIXTURE_GROUPS:
         d = os.path.join(REFERENCE, subdir)
         if not os.path.isdir(d):
@@ -261,13 +259,15 @@ def test_suspicious_page_resumes_html_parser_at_the_unreadable_tag(monkeypatch):
     assert checked >= 40, checked
 
 
-# untokenizable tags: the regex cannot match them because an apostrophe
-# never closes, so they rely on the page holding no other apostrophe (the
-# generator's A-dom pages do, and are left out)
+# untokenizable tags: the regex cannot match them.  A quote opens a value
+# only right after "=", so a stray apostrophe never pairs with a later one;
+# an unterminated quote after "=" relies on the page holding no other
+# apostrophe (the generator's A-dom pages do, and are left out)
 _UNREADABLE = (
     "<span title=don't>слово</span>",  # unquoted attribute value with a quote
     "<i class='open>слово</i> ",  # unterminated quote
     "если a <b то it's",  # stray < before a letter
+    "<span title=don't>a</span> b it's ",  # stray quote, a later apostrophe
 )
 
 
@@ -293,6 +293,20 @@ def test_resume_builds_the_slow_tree(shape, seed, where, tag):
         resumed = parse_html(page)
     assert fed == [page[at + tag.index("<") :]]
     assert _shape(resumed) == _shape(dom.parse_html_slow(page))
+
+
+def test_stray_apostrophe_leaves_its_tag_unread():
+    """An apostrophe inside an unquoted attribute value does not pair with
+    the next apostrophe of the page: the tag is unreadable, so
+    ``parse_html`` resumes html.parser at it and builds the slow tree, and
+    the scanner declines."""
+    page = "<p><span title=don't>a</span> b</p><p>it's <b>x</b></p>"
+    with pytest.MonkeyPatch.context() as mp:
+        fed = _record_feeds(mp)
+        resumed = parse_html(page)
+    assert fed == [page[page.index("<span") :]]
+    assert _shape(resumed) == _shape(dom.parse_html_slow(page))
+    assert scan_format_a(page) is None
 
 
 def test_fastscan_declines_empty_text():

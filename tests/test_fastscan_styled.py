@@ -10,7 +10,7 @@ import os
 
 import pytest
 
-from tests.conftest import REFERENCE
+from tests.conftest import fixture_path
 
 from html_parser_spark import kernel
 from html_parser_spark.dom import decode_html_bytes, parse_html
@@ -72,10 +72,8 @@ def test_scanner_takes_every_generated_page(monkeypatch, shape):
 
 def test_scanners_on_fixture_pages():
     groups = [("rus-lez-35k/dictionary", ".HTM", "B"), ("tab-rus-25k/dictionary", ".html", "C")]
-    if not any(os.path.isdir(os.path.join(REFERENCE, d)) for d, _, _ in groups):
-        pytest.skip(f"reference fixture pages absent: {REFERENCE}")
     for subdir, suffix, shape in groups:
-        d = os.path.join(REFERENCE, subdir)
+        d = fixture_path(subdir)
         taken = total = 0
         for name in sorted(os.listdir(d)):
             path = os.path.join(d, name)

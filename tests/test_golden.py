@@ -11,6 +11,8 @@ import os
 
 import pytest
 
+from tests.conftest import fixture_path
+
 from html_parser_spark.data.pages import fixture_pages_rows
 from html_parser_spark.kernel import parse_document
 
@@ -28,6 +30,8 @@ def canon(obj) -> str:
 
 
 def test_all_fixture_pages_byte_identical(golden_index):
+    for rel in golden_index:
+        fixture_path(rel)
     rows = fixture_pages_rows()
     assert len(rows) == len(golden_index) == 372
     mismatches = []

@@ -1,8 +1,6 @@
 """Round-5 ops: stupid-backoff n-gram LM + CCNet perplexity buckets
-(ops/lm.py), scaled-integer BM25 retrieval (ops/search.bm25_topk), PMI
-collocations (ops/text.pmi_bigrams)."""
-
-from pyspark.sql import functions as F
+(ops/lm.py), PMI collocations (ops/text.pmi_bigrams) and the readability
+profile."""
 
 
 def _docs(spark):
@@ -112,45 +110,6 @@ def test_lm_buckets_per_lang_thirds_and_tie_stability(spark):
     assert b2 == {"head"}
 
 
-def test_bm25_hand_computed_and_ranking(spark):
-    from html_parser_spark.ops.search import bm25_topk
-
-    docs = spark.createDataFrame(
-        [
-            (1, "new york is a big city"),
-            (2, "new york new york"),
-            (3, "big city life in new york"),
-            (4, "a a a a"),
-        ],
-        ["doc_id", "text"],
-    )
-    out = [(r["doc_id"], r["n_terms"], r["score"]) for r in
-           bm25_topk(docs, ["new", "city"], k=5).collect()]
-    # hand: N=4, total_dl=20; df(new)=3, df(city)=2
-    # doc1: idf_new=3e6 div 7=428571, idf_city=5e6 div 5=1e6
-    #   tfpart(tf=1,dl=6)=440e6 div 476=924369
-    #   score = 428571*924369 div 1e6 + 1000000*924369 div 1e6 = 1320526
-    assert out[0] == (1, 2, 1320526) or out[0] == (3, 2, 1320526)
-    # docs 1 and 3 tie exactly (same tf, same dl) -> doc_id tiebreak
-    assert [d for d, _, _ in out[:2]] == [1, 3]
-    assert out[2][0] == 2 and out[2][1] == 1  # 'new' only, saturated tf
-    assert all(d != 4 for d, _, _ in out)
-
-
-def test_bm25_tf_saturation_monotone_but_bounded(spark):
-    """BM25's point vs raw tf-sum: a doc spamming the term 8x at the
-    same length beats a 1x doc but by far less than 8x."""
-    from html_parser_spark.ops.search import bm25_topk
-
-    docs = spark.createDataFrame(
-        [(1, "q " * 8 + "pad " * 0), (2, "q " + "pad " * 7)],
-        ["doc_id", "text"],
-    )
-    out = {r["doc_id"]: r["score"] for r in bm25_topk(docs, ["q"], k=5).collect()}
-    assert out[1] > out[2]
-    assert out[1] < 3 * out[2]
-
-
 def test_pmi_hand_computed(spark):
     from html_parser_spark.ops.text import pmi_bigrams
 
@@ -178,29 +137,27 @@ def test_pmi_hand_computed(spark):
     assert all(c >= 2 for _, _, c, _ in out)
 
 
-def test_pmi_and_bm25_plans_take_ordered(spark):
-    """Both top-k ops must plan TakeOrderedAndProject, never a global
-    Sort stage."""
+def test_pmi_plan_takes_ordered(spark):
+    """The PMI top-k must plan TakeOrderedAndProject, never a global Sort
+    stage."""
     import io
     from contextlib import redirect_stdout
 
-    from html_parser_spark.ops.search import bm25_topk
     from html_parser_spark.ops.text import pmi_bigrams
 
     docs = spark.createDataFrame(
         [(i, f"w{i % 7} w{i % 5} common") for i in range(100)],
         ["doc_id", "text"],
     )
-    for df in (bm25_topk(docs, ["common"], k=5), pmi_bigrams(docs, 2, 5)):
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain(mode="simple")
-        plan = buf.getvalue()
-        assert "TakeOrderedAndProject" in plan
-        # SortMergeJoin's per-partition sorts print `], false, 0` (the
-        # global flag is the 2nd arg); a corpus-wide global sort would
-        # print `], true, 0` — none may exist
-        assert "], true, 0" not in plan
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        pmi_bigrams(docs, 2, 5).explain(mode="simple")
+    plan = buf.getvalue()
+    assert "TakeOrderedAndProject" in plan
+    # SortMergeJoin's per-partition sorts print `], false, 0` (the global
+    # flag is the 2nd arg); a corpus-wide global sort would print
+    # `], true, 0` — none may exist
+    assert "], true, 0" not in plan
 
 
 def test_readability_profile_hand_computed(spark):
@@ -247,68 +204,6 @@ def test_readability_plan_no_shuffle(spark):
     plan = buf.getvalue()
     assert "Exchange" not in plan
     assert "EvalPython" not in plan
-
-
-def test_dsir_directional_weights_and_select(spark):
-    """Docs resembling the target corpus must outweigh docs resembling
-    the raw pool; the keep cut is deterministic and tie-stable."""
-    from html_parser_spark.ops.classify import (
-        dsir_bucket_weights,
-        dsir_doc_weights,
-        dsir_select,
-        hashed_features,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "wiki wiki science"),
-            (2, "wiki math"),
-            (3, "spam spam buy now"),
-            (4, "buy spam"),
-            (5, "science math wiki"),
-        ],
-        ["doc_id", "text"],
-    )
-    feats = hashed_features(docs)
-    target = spark.createDataFrame([(1,), (2,)], ["doc_id"])
-    dw = dsir_doc_weights(feats, dsir_bucket_weights(feats, target))
-    w = {r["doc_id"]: r["weight"] for r in dw.collect()}
-    # target-vocabulary docs strictly above spam docs
-    assert min(w[1], w[2], w[5]) > max(w[3], w[4])
-    sel = {r["doc_id"]: r["keep"] for r in dsir_select(dw, keep_pct=40).collect()}
-    assert sel[1] == 1 and sel[3] == 0 and sel[4] == 0
-    # docs 2 and 5 tie on weight -> same fate (both kept here: the tie
-    # group straddles the 40% cut and ties share a bucket by design)
-    assert sel[2] == sel[5] == 1
-
-
-def test_dsir_weights_partition_independent(spark):
-    from html_parser_spark.ops.classify import (
-        dsir_bucket_weights,
-        dsir_doc_weights,
-        hashed_features,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"w{i % 11} w{i % 7} w{i % 5} common") for i in range(80)],
-        ["doc_id", "text"],
-    )
-    target = docs.where("doc_id % 4 = 0").select("doc_id")
-    a = {
-        r["doc_id"]: r["weight"]
-        for r in dsir_doc_weights(
-            hashed_features(docs.repartition(1)),
-            dsir_bucket_weights(hashed_features(docs.repartition(1)), target),
-        ).collect()
-    }
-    b = {
-        r["doc_id"]: r["weight"]
-        for r in dsir_doc_weights(
-            hashed_features(docs.repartition(16)),
-            dsir_bucket_weights(hashed_features(docs.repartition(16)), target),
-        ).collect()
-    }
-    assert a == b
 
 
 def _py_stupid_backoff(corpus, scale=10**6):
@@ -376,47 +271,3 @@ def test_lm_score_differential_vs_python_reference(spark):
         for r in score_stupid_backoff(docs, m).collect()
     }
     assert got == expect
-
-
-def test_bm25_differential_vs_python_reference(spark):
-    """Seeded corpus, multi-term query: the Spark scorer must reproduce
-    the literal integer formula."""
-    import random
-
-    rng = random.Random(7)
-    vocab = [f"t{i}" for i in range(9)]
-    corpus = [
-        (d, " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 30))))
-        for d in range(40)
-    ]
-    terms = ["t1", "t4"]
-    toks = {d: t.split() for d, t in corpus}
-    n_docs = len(corpus)
-    total_dl = sum(len(t) for t in toks.values())
-    df = {q: sum(1 for t in toks.values() if q in t) for q in terms}
-    scale = 10**6
-    expect = {}
-    for d, t in toks.items():
-        s, n = 0, 0
-        for q in terms:
-            tf = t.count(q)
-            if not tf:
-                continue
-            n += 1
-            idf = (2 * n_docs - 2 * df[q] + 1) * scale // (2 * df[q] + 1)
-            tfp = (tf * 22 * total_dl * scale) // (
-                10 * tf * total_dl + 3 * total_dl + 9 * len(t) * n_docs
-            )
-            s += idf * tfp // scale
-        if n:
-            expect[d] = (n, s)
-    k = 15
-    top = sorted(expect.items(), key=lambda kv: (-kv[1][1], kv[0]))[:k]
-    from html_parser_spark.ops.search import bm25_topk
-
-    docs = spark.createDataFrame(corpus, ["doc_id", "text"])
-    got = [
-        (r["doc_id"], (r["n_terms"], r["score"]))
-        for r in bm25_topk(docs, terms, k=k).collect()
-    ]
-    assert got == top

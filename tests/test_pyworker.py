@@ -8,8 +8,8 @@ import gc
 import importlib
 import inspect
 import os
+import subprocess
 import sys
-import weakref
 import zipfile
 import zipimport
 
@@ -127,37 +127,47 @@ def test_worker_skips_reread_after_a_kernel_task(spark):
     assert seen_twice and all(seen_twice)
 
 
-@pytest.fixture
-def unsettled():
-    """A process whose heap is not frozen yet, and is unfrozen afterwards."""
-    from html_parser_spark import _pyworker
+_SETTLE_CHECK = """
+import gc
+import weakref
 
-    gc.unfreeze()
-    yield _pyworker
-    gc.unfreeze()
+from html_parser_spark import _pyworker
 
 
-def test_settle_collects_cycles_then_freezes_once(unsettled):
-    class Node:
-        pass
+class Node:
+    pass
 
-    gc.disable()  # no automatic collection before settle() runs
-    try:
-        a, b = Node(), Node()
-        a.other, b.other = b, a
-        dead = weakref.ref(a)
-        del a, b  # a cycle: only the collector can free it
-        assert dead() is not None
-        unsettled.settle()
-        assert dead() is None  # collected, not frozen
-        frozen = gc.get_freeze_count()
-        assert frozen > 0
-        keep = [Node() for _ in range(100)]
-        unsettled.settle()  # idempotent: nothing new is frozen
-        assert gc.get_freeze_count() == frozen
-        del keep
-    finally:
-        gc.enable()
+
+assert gc.get_freeze_count() == 0
+gc.disable()  # no automatic collection before settle() runs
+a, b = Node(), Node()
+a.other, b.other = b, a
+dead = weakref.ref(a)
+del a, b  # a cycle: only the collector can free it
+assert dead() is not None
+_pyworker.settle()
+assert dead() is None  # collected, not frozen
+frozen = gc.get_freeze_count()
+assert frozen > 0
+keep = [Node() for _ in range(100)]
+_pyworker.settle()  # idempotent: nothing new is frozen
+assert gc.get_freeze_count() == frozen, (gc.get_freeze_count(), frozen)
+"""
+
+
+def test_settle_collects_cycles_then_freezes_once():
+    """settle() acts on the whole heap of its process, so it runs in a
+    fresh interpreter: in this one, the Spark session's Py4J threads can
+    free frozen objects between the two reads of the freeze count."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p
+    ))
+    proc = subprocess.run(
+        [sys.executable, "-c", _SETTLE_CHECK],
+        cwd=root, env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr
 
 
 def test_worker_heap_frozen_after_a_kernel_task(spark):

@@ -1,7 +1,8 @@
 """Round-5 operators: integer-exact HITS, hreflang translation clusters,
-margin-based bitext mining.  Each op's oracle query (q_hits / q_hreflang /
-q_bitext_mine) does the cross-engine value-hash check; these tests pin the
-hand-checkable semantics and the scale-shape invariants.
+incremental and fuzzy dedup, text outlinks, robots audit, term blocklist.
+Each op's oracle query (q_hits / q_hreflang / ...) does the cross-engine
+value-hash check; these tests pin the hand-checkable semantics and the
+scale-shape invariants.
 """
 
 import pytest
@@ -164,72 +165,6 @@ def test_hreflang_pairs_drop_self_and_xdefault(spark):
 
 
 # ---------------------------------------------------------------------------
-# margin-based bitext mining — ops/similarity.bitext_margin_mine
-# ---------------------------------------------------------------------------
-def _emb(spark):
-    # 2-D embeddings: src 0/2 align with dst 1/3; dst 5 is a "hub" vector
-    # moderately close to BOTH sources — raw cosine would pair it with
-    # everything, the margin demotes it below the true translations
-    rows = [
-        (0, [1.0, 0.05]),
-        (2, [0.05, 1.0]),
-        (1, [1.0, 0.1]),   # true match of 0
-        (3, [0.1, 1.0]),   # true match of 2
-        (5, [0.8, 0.8]),   # hub
-    ]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def test_bitext_mutual_best_and_hub_suppression(spark):
-    from html_parser_spark.ops.similarity import bitext_margin_mine
-
-    emb = _emb(spark)
-    src = emb.filter(F.col("vec_id").isin(0, 2)).select("vec_id")
-    dst = emb.filter(F.col("vec_id").isin(1, 3, 5)).select("vec_id")
-    mined = {
-        (r["src_id"], r["dst_id"])
-        for r in bitext_margin_mine(
-            emb, src, dst, k=2, margin_threshold_e4=10000
-        ).collect()
-    }
-    assert mined == {(0, 1), (2, 3)}  # the hub (5) mined by neither
-
-
-def test_bitext_candidates_path_matches_bruteforce(spark):
-    from html_parser_spark.ops.similarity import bitext_margin_mine
-
-    emb = _emb(spark)
-    src = emb.filter(F.col("vec_id").isin(0, 2)).select("vec_id")
-    dst = emb.filter(F.col("vec_id").isin(1, 3, 5)).select("vec_id")
-    brute = bitext_margin_mine(emb, src, dst, k=2, margin_threshold_e4=0)
-    cands = spark.createDataFrame(
-        [(s, d) for s in (0, 2) for d in (1, 3, 5)],
-        "src_id long, dst_id long",
-    )
-    via_cands = bitext_margin_mine(
-        emb, src, dst, k=2, margin_threshold_e4=0, candidates=cands
-    )
-    assert sorted(map(tuple, brute.collect())) == sorted(
-        map(tuple, via_cands.collect())
-    )
-
-
-def test_bitext_negative_cosines_excluded(spark):
-    from html_parser_spark.ops.similarity import bitext_margin_mine
-
-    emb = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [-1.0, 0.0])],
-        "vec_id long, embedding array<float>",
-    )
-    src = emb.filter(F.col("vec_id") == 0).select("vec_id")
-    dst = emb.filter(F.col("vec_id") == 1).select("vec_id")
-    assert (
-        bitext_margin_mine(emb, src, dst, k=2, margin_threshold_e4=0).count()
-        == 0
-    )
-
-
-# ---------------------------------------------------------------------------
 # incremental LSH dedup against a persisted band index — ops/dedup.py
 # ---------------------------------------------------------------------------
 _BASE = (
@@ -310,81 +245,6 @@ def test_incremental_dedup_index_append_closes_loop(spark):
     }
     assert all(r["matched_existing"] for r in rerun.values())
     assert all(not r["keep"] for r in rerun.values())
-
-
-# ---------------------------------------------------------------------------
-# int8 scalar quantization — ops/similarity.quantize_embeddings /
-# quantized_topk / quantization_recall.  The oracle queries
-# (q_quantized_topk / q_quantization_recall) do the cross-engine value-hash
-# check; these pin the hand-checkable semantics.
-# ---------------------------------------------------------------------------
-def _vecs(spark):
-    return spark.createDataFrame(
-        [
-            (0, [1.0, 0.0, 0.0, 0.0]),
-            (1, [0.5, 0.25, 0.0, 0.0]),   # max 0.5 -> [127, 63, 0, 0]
-            (2, [0.0, 0.0, 0.0, 0.0]),    # zero vector -> all-0, max_abs 0
-            (3, [-0.4, 0.2, 0.0, 0.1]),   # negative max_abs handling
-            (4, [0.9, 0.1, 0.0, 0.0]),
-        ],
-        "vec_id long, embedding array<float>",
-    )
-
-
-def test_quantize_embeddings_values(spark):
-    from html_parser_spark.ops.similarity import quantize_embeddings
-
-    rows = {r["vec_id"]: r for r in quantize_embeddings(_vecs(spark)).collect()}
-    # the max element maps to exactly 127 ((127*x)/x is an exact division)
-    assert rows[0]["qvec"] == [127, 0, 0, 0]
-    assert rows[1]["qvec"] == [127, 63, 0, 0]  # floor(0.25*127/0.5)=floor(63.5)
-    assert rows[2]["qvec"] == [0, 0, 0, 0] and rows[2]["max_abs"] == 0.0
-    # negative extreme: floor maps -max_abs to exactly -127
-    assert rows[3]["qvec"][0] == -127
-    assert all(-127 <= v <= 127 for r in rows.values() for v in r["qvec"])
-
-
-def test_quantize_clamps_to_int8_range(spark):
-    """fl(fl(x*127)/max) lands one ulp past -127 for this double, so an
-    unclamped floor gives -128 for the max-magnitude element."""
-    import math
-
-    from html_parser_spark.ops.similarity import quantize_embeddings
-
-    m = 90.14284433369075
-    assert math.floor(-m * 127.0 / m) == -128  # the IEEE double case itself
-    vecs = spark.createDataFrame(
-        [(0, [-m, 1.0]), (1, [m, -1.0])], "vec_id long, embedding array<double>"
-    )
-    q = {r["vec_id"]: r["qvec"] for r in quantize_embeddings(vecs).collect()}
-    assert q[0] == [-127, 1]
-    assert all(-127 <= v <= 127 for v in q[1])
-
-
-def test_quantized_topk_ranks_by_integer_cosine(spark):
-    from html_parser_spark.ops.similarity import quantized_topk
-
-    out = quantized_topk(_vecs(spark), query_ids_below=1, k=4).collect()
-    assert [r["neighbor_id"] for r in out] == [4, 1, 2, 3]
-    by_n = {r["neighbor_id"]: r for r in out}
-    # vec 4 vs query 0: q=[127,14,0,0] (floor(0.1*127/0.9)=14) -> dot 127*127
-    assert by_n[4]["qdot"] == 127 * 127
-    # the zero vector scores cosine 0.0 (guarded division), not NULL/NaN
-    assert by_n[2]["cosine_q"] == 0.0 and by_n[2]["qdot"] == 0
-
-
-def test_quantization_recall_perfect_and_ppm(spark):
-    from html_parser_spark.ops.similarity import quantization_recall
-
-    # no zero vector here: the EXACT baseline (cosine_topk) documents the
-    # nonzero-vector assumption of the embeddings table (its oracle divides
-    # unguarded too); the quantized path's zero guard is pinned above.
-    vecs = _vecs(spark).filter(F.col("vec_id") != 2)
-    rows = quantization_recall(vecs, query_ids_below=2, k=2).collect()
-    assert sorted(r["query_id"] for r in rows) == [0, 1]
-    for r in rows:
-        assert 0 <= r["overlap"] <= 2
-        assert r["recall_ppm"] == r["overlap"] * 1000000 // 2
 
 
 # ---------------------------------------------------------------------------
@@ -546,19 +406,6 @@ def test_session_ops_partition_independence(spark):
     )
     a = sorted(map(tuple, reciprocity(edges).collect()))
     b = sorted(map(tuple, reciprocity(edges.repartition(9)).collect()))
-    assert a == b
-
-
-def test_quantized_topk_partition_independence(spark):
-    from html_parser_spark.ops.similarity import quantized_topk
-
-    emb = spark.createDataFrame(
-        [(i, [((i * 7 + j * 13) % 19 - 9) / 10.0 for j in range(8)])
-         for i in range(30)],
-        "vec_id long, embedding array<float>",
-    )
-    a = sorted(map(tuple, quantized_topk(emb, 5, 3).collect()))
-    b = sorted(map(tuple, quantized_topk(emb.repartition(7), 5, 3).collect()))
     assert a == b
 
 

@@ -1,50 +1,4 @@
-"""Inverted index / conjunctive search (ops/search.py) and the
-Bloom-filter seen-set (ops/bloom.py)."""
-
-from pyspark.sql import functions as F
-
-
-def test_inverted_index_flat_rows(spark):
-    from html_parser_spark.ops.search import inverted_index, term_stats
-
-    docs = spark.createDataFrame(
-        [(1, "big table scan"), (2, "table table join"), (3, "  ")],
-        ["doc_id", "text"],
-    )
-    idx = {(r["term"], r["doc_id"]): r["tf"] for r in inverted_index(docs).collect()}
-    assert idx[("table", 1)] == 1 and idx[("table", 2)] == 2
-    assert idx[("big", 1)] == 1
-    # blank doc contributes nothing
-    assert not any(d == 3 for (_, d) in idx)
-    stats = {r["term"]: r for r in term_stats(inverted_index(docs)).collect()}
-    assert stats["table"]["df_docs"] == 2 and stats["table"]["total_tf"] == 3
-
-
-def test_keyword_search_and_semantics_and_ranking(spark):
-    from html_parser_spark.ops.search import inverted_index, keyword_search
-
-    docs = spark.createDataFrame(
-        [
-            (1, "table scan table scan"),     # both terms, score 4
-            (2, "table only here"),           # missing 'scan' -> excluded
-            (3, "scan table"),                # both, score 2
-            (4, "nothing relevant"),
-        ],
-        ["doc_id", "text"],
-    )
-    out = keyword_search(inverted_index(docs), ["table", "scan"], k=5).collect()
-    assert [(r["doc_id"], r["score"]) for r in out] == [(1, 4), (3, 2)]
-
-
-def test_keyword_search_plan_take_ordered_not_global_sort(spark):
-    from html_parser_spark.ops.search import inverted_index, keyword_search
-
-    docs = spark.createDataFrame([(1, "a b")], ["doc_id", "text"])
-    plan = (
-        keyword_search(inverted_index(docs), ["a"], k=3)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "TakeOrderedAndProject" in plan
+"""The Bloom-filter seen-set (ops/bloom.py)."""
 
 
 def test_bloom_no_false_negatives(spark):

@@ -4,7 +4,7 @@ training-data ops (local[4], small inputs — semantics, not perf)."""
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import TESTDATA
+from tests.conftest import TESTDATA, fixture_path
 
 SF_DIR = f"{TESTDATA}/sf0.001"
 
@@ -15,6 +15,7 @@ def tab_migrated(spark):
     from html_parser_spark.spark.dictionary import migrate_results
     from html_parser_spark.spark.pipeline import extract_pages
 
+    fixture_path("tab-rus-25k", "dictionary")
     pages = fixture_pages_df(spark).filter(F.col("lang") == "tab").limit(30)
     mig = migrate_results(extract_pages(pages, num_partitions=8)).persist()
     mig.count()
@@ -23,9 +24,11 @@ def tab_migrated(spark):
 
 
 def test_extraction_all_formats(spark):
-    from html_parser_spark.data.pages import fixture_pages_df
+    from html_parser_spark.data.pages import _FIXTURE_GROUPS, fixture_pages_df
     from html_parser_spark.spark.pipeline import extract_pages, quality_metrics
 
+    for subdir, *_ in _FIXTURE_GROUPS:
+        fixture_path(subdir)
     pages = fixture_pages_df(spark)
     # one page per format keeps the test fast
     sample = (
@@ -169,25 +172,6 @@ def test_dedup_ops(spark):
     assert all(r.doc_a < r.doc_b for r in pairs)
 
 
-def test_similarity_ops(spark):
-    from html_parser_spark.ops.similarity import bucket_histogram, cosine_topk
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    topk = cosine_topk(emb, query_ids_below=3, k=4).collect()
-    assert len(topk) == 12
-    by_q = {}
-    for r in topk:
-        by_q.setdefault(r.query_id, []).append(r)
-    for q, rows in by_q.items():
-        ranks = sorted(r.rank for r in rows)
-        assert ranks == [1, 2, 3, 4]
-        cos = [r.cosine for r in sorted(rows, key=lambda r: r.rank)]
-        assert cos == sorted(cos, reverse=True)
-        assert all(-1.0001 <= c <= 1.0001 for c in cos)
-    hist = bucket_histogram(emb, n_planes=4).collect()
-    assert sum(r.vectors for r in hist) == emb.count()
-
-
 def test_dimension_tables(spark):
     from pyspark.sql import functions as F
 
@@ -226,73 +210,6 @@ def test_oversized_page_guard(spark):
     assert oversized and parsed
     assert all(r.error.startswith("oversized:") and r.n_entries == 0 for r in oversized)
     assert all(r.error is None and r.n_entries == 1 for r in parsed)
-
-
-def test_asof_join_semantics(spark):
-    from html_parser_spark.ops.asof import as_of_join
-
-    left = spark.createDataFrame(
-        [(1, 100, 10), (2, 100, 25), (3, 200, 5)], "id int, k int, t int"
-    )
-    right = spark.createDataFrame(
-        [(100, 8, "a"), (100, 20, "b"), (100, 20, "b2"), (100, 30, "c"), (200, 99, "z")],
-        "k int, rt int, v string",
-    )
-    out = {
-        r.id: (r.v, r.asof_time)
-        for r in as_of_join(
-            left, right, on="k", left_time="t", right_time="rt",
-            tiebreak="v", right_values=["v"],
-        ).collect()
-    }
-    assert out[1] == ("a", 8)       # only rt=8 <= 10
-    assert out[2] == ("b2", 20)     # rt=20 latest; tie broken by max v
-    assert 3 not in out             # no right row at-or-before t=5 (inner)
-    left_out = as_of_join(
-        left, right, on="k", left_time="t", right_time="rt",
-        tiebreak="v", right_values=["v"], how="left",
-    )
-    assert left_out.count() == 3    # unmatched row kept with nulls
-
-
-def test_range_join_semantics(spark):
-    from html_parser_spark.ops.rangejoin import range_join
-
-    pts = spark.createDataFrame([(1, 100, 15), (2, 100, 45), (3, 200, 5)], "id int, k int, t long")
-    ivs = spark.createDataFrame(
-        [(100, 10, 20, "a"), (100, 40, 41, "b"), (200, 0, 9, "c"), (200, 100, 200, "d")],
-        "k int, lo long, hi long, v string",
-    )
-    rows = range_join(pts, ivs, on="k", left_time="t", right_lo="lo", right_hi="hi",
-                      bucket_width=10).collect()
-    got = sorted((r.id, r.v) for r in rows)
-    assert got == [(1, "a"), (3, "c")]  # t=45 misses [40,41]; t=5 hits [0,9]
-    # bucket boundary: interval straddling buckets still matches
-    rows2 = range_join(pts, ivs, on="k", left_time="t", right_lo="lo", right_hi="hi",
-                       bucket_width=7).collect()
-    assert sorted((r.id, r.v) for r in rows2) == got
-
-
-def test_embedding_near_dup_lsh_vs_exact(spark):
-    """The LSH-bucketed near-dup path returns a subset of the exact pairs
-    (bucket collisions only drop candidates, never invent them)."""
-    from html_parser_spark.ops.similarity import embedding_near_duplicates
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    exact = {
-        (r.vec_a, r.vec_b)
-        for r in embedding_near_duplicates(
-            emb, threshold=0.3, id_limit=120, exact=True
-        ).collect()
-    }
-    bucketed = {
-        (r.vec_a, r.vec_b)
-        for r in embedding_near_duplicates(
-            emb, threshold=0.3, id_limit=120, n_planes=2
-        ).collect()
-    }
-    assert exact, "exact baseline found no pairs — lower the threshold"
-    assert bucketed <= exact
 
 
 def test_iceberg_checkpoint_if_available(spark, tmp_path):
@@ -348,72 +265,6 @@ def test_lang_id_discriminative(spark):
     assert pred == truth  # perfect self-classification on separable corpora
 
 
-def test_ivf_topk_full_probe_equals_brute_force(spark):
-    """nprobe == n_centroids probes every inverted list, so IVF must return
-    EXACTLY the brute-force cosine top-k; a partial probe returns k rows per
-    query whose cosines are a subset drawn from probed lists only."""
-    from html_parser_spark.ops.similarity import cosine_topk, ivf_topk
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    brute = {
-        (r.query_id, r.rank): (r.neighbor_id, r.cosine)
-        for r in cosine_topk(emb, query_ids_below=3, k=4).collect()
-    }
-    full = {
-        (r.query_id, r.rank): (r.neighbor_id, r.cosine)
-        for r in ivf_topk(
-            emb, query_ids_below=3, k=4, n_centroids=8, nprobe=8
-        ).collect()
-    }
-    assert full == brute
-    part = ivf_topk(emb, query_ids_below=3, k=4, n_centroids=8, nprobe=2).collect()
-    by_q = {}
-    for r in part:
-        by_q.setdefault(r.query_id, []).append(r)
-    for q, rows in by_q.items():
-        assert sorted(r.rank for r in rows) == list(range(1, len(rows) + 1))
-        cos = [r.cosine for r in sorted(rows, key=lambda r: r.rank)]
-        assert cos == sorted(cos, reverse=True)
-    # the equivalence must survive Lloyd training: full probe over TRAINED
-    # lists still covers every vector, so the re-rank is exact brute force
-    trained_full = {
-        (r.query_id, r.rank): (r.neighbor_id, r.cosine)
-        for r in ivf_topk(
-            emb, query_ids_below=3, k=4, n_centroids=8, nprobe=8, train_iters=1
-        ).collect()
-    }
-    assert trained_full == brute
-
-
-def test_ivf_recall_nondecreasing_in_nprobe(spark):
-    """For FIXED centroids, a larger nprobe probes a superset of inverted
-    lists, so candidate sets nest and recall@k vs brute force is
-    non-decreasing — deterministically, not just in expectation.  Also pins
-    that trained recall reaches 1.0 at full probe."""
-    from html_parser_spark.ops.similarity import cosine_topk, ivf_topk
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    k, nq = 5, 4
-    truth = {}
-    for r in cosine_topk(emb, query_ids_below=nq, k=k).collect():
-        truth.setdefault(r.query_id, set()).add(r.neighbor_id)
-
-    def recall(nprobe):
-        got = {}
-        for r in ivf_topk(
-            emb, query_ids_below=nq, k=k, n_centroids=8,
-            nprobe=nprobe, train_iters=1,
-        ).collect():
-            got.setdefault(r.query_id, set()).add(r.neighbor_id)
-        hits = sum(len(truth[q] & got.get(q, set())) for q in truth)
-        return hits / (len(truth) * k)
-
-    recalls = [recall(p) for p in (1, 2, 4, 8)]
-    assert recalls == sorted(recalls)  # monotone in nprobe
-    assert recalls[-1] == 1.0  # full probe == brute force
-    assert recalls[0] > 0  # even one list finds something
-
-
 def test_winnow_shared_substring_guarantee(spark):
     """Winnowing guarantee: documents sharing a substring of length >= k+w-1
     share at least one fingerprint; unrelated text shares ~none."""
@@ -456,108 +307,6 @@ def test_components_from_pairs_chain_and_stars(spark):
     assert by_doc[10].is_canonical == 1 and by_doc[19].is_canonical == 0
     assert by_doc[10].cluster_size == 10 and by_doc[3].cluster_size == 4
     assert len(rows) == 16  # only vertices that appear in some pair
-
-
-def test_semantic_dedup_in_cluster_drop_policy(spark):
-    """SemDeDup with untrained orthogonal seeds (closed-form assignment):
-    a vector is dropped iff a lower-id vector in ITS cluster has cosine >=
-    threshold; cross-cluster near-dups are never compared."""
-    from html_parser_spark.ops.similarity import semantic_dedup
-
-    emb = spark.createDataFrame(
-        [
-            (0, [1.0, 0.0, 0.0, 0.0]),  # seed centroid 0
-            (1, [0.0, 1.0, 0.0, 0.0]),  # seed centroid 1
-            (2, [2.0, 0.0, 0.0, 0.0]),  # cluster 0, cos(0,2)=1 -> dropped
-            (3, [0.0, 0.5, 0.0, 0.0]),  # cluster 1, cos(1,3)=1 -> dropped
-            (4, [0.6, 0.8, 0.0, 0.0]),  # cluster 1, cos(1,4)=0.8 < 0.9 -> kept
-        ],
-        ["vec_id", "embedding"],
-    )
-    out = {
-        r["vec_id"]: r
-        for r in semantic_dedup(
-            emb, n_centroids=2, train_iters=0, threshold=0.9
-        ).collect()
-    }
-    assert {v: out[v]["kept"] for v in range(5)} == {
-        0: True, 1: True, 2: False, 3: False, 4: True
-    }
-    assert {v: out[v]["cent_id"] for v in range(5)} == {
-        0: 0, 1: 1, 2: 0, 3: 1, 4: 1
-    }
-
-
-def test_semantic_dedup_plan_equi_join_no_cartesian(spark):
-    """The pair scan must be an equi-join on cent_id (cluster-bounded,
-    the paper's scale trick) — never a cartesian all-pairs."""
-    from html_parser_spark.ops.similarity import semantic_dedup
-
-    emb = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(6)], ["vec_id", "embedding"]
-    )
-    plan = (
-        semantic_dedup(emb, n_centroids=2, train_iters=1)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "CartesianProduct" not in plan
-
-
-def test_label_centroids_exact_mean(spark):
-    from html_parser_spark.ops.similarity import label_centroids
-
-    df = spark.createDataFrame(
-        [(0, [1.0, 0.0], 7), (1, [0.0, 1.0], 7), (2, [4.0, 4.0], 8)],
-        "vec_id long, embedding array<float>, label int",
-    )
-    got = {r["label"]: r["cv"] for r in label_centroids(df).collect()}
-    assert got[7] == [0.5, 0.5]
-    assert got[8] == [4.0, 4.0]
-
-
-def test_centroid_outliers_ranks_least_prototypical(spark):
-    """Two tight vectors + one orthogonal: the orthogonal vector must rank
-    as the label's top outlier; a singleton label sits at distance 0."""
-    from html_parser_spark.ops.similarity import centroid_outliers
-
-    df = spark.createDataFrame(
-        [
-            (0, [1.0, 0.0], 0),
-            (1, [1.0, 0.02], 0),
-            (2, [0.0, 1.0], 0),
-            (3, [3.0, 3.0], 1),
-        ],
-        "vec_id long, embedding array<float>, label int",
-    )
-    rows = {
-        (r["label"], r["rank"]): (r["vec_id"], r["centroid_dist"])
-        for r in centroid_outliers(df, k=3).collect()
-    }
-    assert rows[(0, 1)][0] == 2  # the orthogonal vector is the outlier
-    assert rows[(0, 1)][1] > rows[(0, 2)][1] >= rows[(0, 3)][1]
-    assert rows[(1, 1)] == (3, 0.0)
-
-
-def test_centroid_outliers_partition_independent(spark):
-    from html_parser_spark.ops.similarity import centroid_outliers
-
-    rows = [
-        (i, [float((i * 7 + d) % 11) for d in range(8)], i % 3)
-        for i in range(45)
-    ]
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-    base = None
-    for p in (1, 6):
-        got = sorted(
-            (r["label"], r["rank"], r["vec_id"], r["centroid_dist"])
-            for r in centroid_outliers(df.repartition(p), k=5).collect()
-        )
-        if base is None:
-            base = got
-        else:
-            assert got == base
 
 
 # --- dictionary chain pinned over seeded in-repo entries --------------------

@@ -1,8 +1,7 @@
-"""Structured Streaming + multimodal plumbing tests."""
+"""The per-page ops run unchanged on a Structured Streaming source: a file
+stream of pages parquet through ``extract_pages``, ``extract_main_content``
+and the ``crawl_diff`` status expression gives the batch op's rows."""
 
-import time
-
-import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import TESTDATA
@@ -10,240 +9,63 @@ from tests.conftest import TESTDATA
 SF_DIR = f"{TESTDATA}/sf0.001"
 
 
-def test_stream_extract_end_to_end(spark, tmp_path):
-    from html_parser_spark.data.pages import synthetic_pages_df
-    from html_parser_spark.streaming.stream import stream_extract
+def _stream(spark, in_dir):
+    """A file stream over a pages parquet dir, every file in one batch."""
+    schema = spark.read.parquet(in_dir).schema
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 64)
+        .parquet(in_dir)
+    )
 
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ck_dir = str(tmp_path / "ck")
-    synthetic_pages_df(spark, SF_DIR, paragraphs=1).limit(30).write.parquet(in_dir)
 
-    q = stream_extract(spark, in_dir, out_dir, ck_dir, max_files_per_trigger=64)
+def _drain(df, out_dir, ck_dir) -> None:
+    """Run a streaming DataFrame into a parquet sink until its input is
+    consumed."""
+    q = (
+        df.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", ck_dir)
+        .outputMode("append")
+        .start()
+    )
     try:
         q.processAllAvailable()  # blocks until every available file is processed
     finally:
         q.stop()
+
+
+def test_stream_extract_end_to_end(spark, tmp_path):
+    from html_parser_spark.data.pages import synthetic_pages_df
+    from html_parser_spark.spark.pipeline import extract_pages
+
+    in_dir = str(tmp_path / "in")
+    out_dir = str(tmp_path / "out")
+    synthetic_pages_df(spark, SF_DIR, paragraphs=1).limit(30).write.parquet(in_dir)
+
+    # no repartition inside a stream batch
+    _drain(extract_pages(_stream(spark, in_dir)), out_dir, str(tmp_path / "ck"))
     out = spark.read.parquet(out_dir)
     rows = out.collect()
     assert len(rows) == 30
     assert all(r.error is None and r.fmt == "A" for r in rows)
 
 
-def test_windowed_event_stats_matches_batch(spark, tmp_path):
-    """The streaming windowed agg equals the batch twin on the same data."""
-    from html_parser_spark.streaming.stream import windowed_event_stats
-
-    ev_dir = str(tmp_path / "events")
-    spark.read.parquet(f"{SF_DIR}/events.parquet").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    ).write.parquet(ev_dir)
-
-    static = spark.read.parquet(ev_dir)
-    batch_expected = {
-        (r.window_start, r.event_type): (r.n_events, r.sum_value)
-        for r in windowed_event_stats(static).collect()
-    }
-
-    stream = spark.readStream.schema(static.schema).parquet(ev_dir)
-    agg = windowed_event_stats(stream)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("winagg")
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            (r.window_start, r.event_type): (r.n_events, r.sum_value)
-            for r in spark.sql("select * from winagg").collect()
-        }
-    finally:
-        q.stop()
-    assert got == batch_expected
-
-
-def test_sessionize_stream_matches_batch_on_replay(spark, tmp_path):
-    """Event-time sessionize: replaying the events table through the stream
-    yields EXACTLY the batch ``q_sessionize`` sessions — same session
-    boundaries (second-truncated 1800s gaps), same counts, same
-    DECIMAL-rounded values.  Runs in two arrival waves (time-split) to cover
-    cross-batch session continuation and EventTimeTimeout closure."""
-    import __spark_entry__ as entry
-    from html_parser_spark.streaming.stream import sessionize_stream
-
-    ev_dir = str(tmp_path / "events")
-    static = (
-        spark.read.parquet(f"{SF_DIR}/events.parquet")
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    # time-split the replay at the median ts: wave 1 lands, is processed,
-    # then wave 2 arrives — per-user event order is preserved, sessions can
-    # straddle the wave boundary, and wave 2 advances the watermark enough
-    # to time out most wave-1 sessions
-    cut = static.selectExpr("percentile(cast(ts as long), 0.5) AS c").first().c
-    wave1 = static.filter(F.col("ts").cast("long") <= cut)
-    wave2 = static.filter(F.col("ts").cast("long") > cut)
-    wave1.coalesce(1).write.mode("append").parquet(ev_dir)
-
-    stream = spark.readStream.schema(static.schema).parquet(ev_dir)
-    q = (
-        sessionize_stream(stream)
-        .writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        wave2.coalesce(1).write.mode("append").parquet(ev_dir)
-        q.processAllAvailable()
-        rows = spark.sql("select * from sessions").collect()
-    finally:
-        q.stop()
-    # update-mode sink appends one row per emission; a session's final state
-    # is its row with the most events (counts only grow; the timeout's
-    # closed=True re-emission carries the same count/value)
-    got: dict = {}
-    for r in rows:
-        k = (r.user_id, r.session_idx)
-        if k not in got or r.n_events > got[k][0]:
-            got[k] = (r.n_events, r.session_value)
-    expected = {
-        (r.user_id, r.session_idx): (r.n_events, r.session_value)
-        for r in entry.q_sessionize(spark, SF_DIR).collect()
-    }
-    assert got == expected
-
-
-def test_multimodal_plumbing(spark):
-    from html_parser_spark.ops.multimodal import (
-        FEATURE_DIM,
-        decode_features,
-        frame_sample_plan,
-        real_decode,
-        synth_media_df,
-    )
-
-    media = synth_media_df(spark, n=60)
-    feats = decode_features(media).collect()
-    assert len(feats) == 60
-    assert all(len(r.features) == FEATURE_DIM for r in feats)
-    assert all(r.n_bytes > 0 for r in feats)
-    # determinism: same media_id → same sha1 across runs
-    feats2 = {r.media_id: r.payload_sha1 for r in decode_features(media).collect()}
-    assert all(feats2[r.media_id] == r.payload_sha1 for r in feats)
-    # the real decode is an explicit stub
-    with pytest.raises(NotImplementedError):
-        real_decode(b"x", "image")
-    plan = frame_sample_plan(media, every_ms=100)
-    vids = media.filter("kind = 'video'").count()
-    assert plan.select("media_id").distinct().count() == vids
-
-
-def test_watermark_drops_late_data(spark, tmp_path):
-    """Watermark semantics: an event older than (max_seen - watermark) arriving
-    in a later batch is dropped from the windowed aggregation (append mode)."""
-    from pyspark.sql import types as T
-
-    from html_parser_spark.streaming.stream import windowed_event_stats
-
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    ev_dir = tmp_path / "late_events"
-    ev_dir.mkdir()
-
-    def write_batch(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(
-            str(ev_dir)
-        )
-
-    import datetime as dt
-
-    t = dt.datetime(2024, 8, 7, 10, 0, 0)
-    # batch 1: events at 10:00 and 14:00 → watermark advances to 12:00
-    write_batch("b1", [(t, "click", 1.0), (t + dt.timedelta(hours=4), "click", 1.0)])
-
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(str(ev_dir))
-    agg = windowed_event_stats(stream, window="1 hour", watermark="2 hours")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("late_agg")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # batch 2: an event at 10:30 — older than the 12:00 watermark → dropped;
-        # plus one at 15:00 that closes the 14:00 window
-        write_batch("b2", [(t + dt.timedelta(minutes=30), "click", 100.0),
-                           (t + dt.timedelta(hours=5), "click", 1.0)])
-        q.processAllAvailable()
-        # batch 3: advance watermark far enough to emit all open windows
-        write_batch("b3", [(t + dt.timedelta(hours=10), "click", 1.0)])
-        q.processAllAvailable()
-        rows = {r.window_start: (r.n_events, r.sum_value) for r in spark.sql("select * from late_agg").collect()}
-    finally:
-        q.stop()
-    # the 10:00 window emitted with ONLY the on-time event — the late 100.0 never counted
-    assert rows[t] == (1, 1.0), rows
-
-
-def test_dedup_stream(spark, tmp_path):
-    """Streaming dedup drops same-key re-arrivals within the watermark."""
-    from html_parser_spark.streaming.stream import PAGES_SCHEMA, dedup_stream
-
-    ev_dir = str(tmp_path / "pages")
-    rows = [
-        ("u1", "2024-01-01 00:00:00"), ("u2", "2024-01-01 00:01:00"),
-        ("u1", "2024-01-01 00:02:00"),  # duplicate inside the horizon
-        ("u3", "2024-01-01 00:03:00"), ("u2", "2024-01-01 00:04:00"),
-    ]
-    df = spark.createDataFrame(
-        [(u, ts, None, None, None) for u, ts in rows],
-        "url string, warc_ts string, html binary, text string, lang string",
-    ).withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
-    df.coalesce(1).write.parquet(ev_dir)
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(ev_dir)
-    q = (
-        dedup_stream(stream)
-        .select("url")
-        .writeStream.format("memory")
-        .queryName("deduped")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = sorted(r.url for r in spark.sql("select * from deduped").collect())
-    finally:
-        q.stop()
-    assert got == ["u1", "u2", "u3"]
-
-
 def test_stream_main_content_matches_batch(spark, tmp_path):
     """Streaming boilerplate strip == batch op, byte-identical per url."""
     from html_parser_spark.data.pages import synthetic_pages_df
     from html_parser_spark.ops.boilerplate import extract_main_content
-    from html_parser_spark.streaming.stream import stream_main_content
 
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
-    ck_dir = str(tmp_path / "ck")
     pages = synthetic_pages_df(spark, SF_DIR, paragraphs=2).limit(25)
     pages.write.parquet(in_dir)
 
-    q = stream_main_content(spark, in_dir, out_dir, ck_dir, max_files_per_trigger=64)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streamed_df = extract_main_content(_stream(spark, in_dir)).select(
+        "url", "warc_ts", "lang", "main_text", "n_blocks",
+        "n_content_blocks", "content_chars", "boiler_chars",
+    )
+    _drain(streamed_df, out_dir, str(tmp_path / "ck"))
     streamed = {
         r["url"]: (r["main_text"], r["n_blocks"], r["content_chars"])
         for r in spark.read.parquet(out_dir).collect()
@@ -257,10 +79,13 @@ def test_stream_main_content_matches_batch(spark, tmp_path):
 
 
 def test_crawl_diff_stream_matches_batch(spark, tmp_path):
-    """Stream-static diff == batch crawl_diff on the arriving urls."""
+    """Stream-static diff == batch crawl_diff on the arriving urls.
+
+    New captures arrive as a file stream and the previous snapshot is a
+    static DataFrame; 'removed' cannot fire, because a stream observes
+    arrivals, not absences."""
     from html_parser_spark.data.pages import synthetic_pages_df
-    from html_parser_spark.ops.web import crawl_diff
-    from html_parser_spark.streaming.stream import crawl_diff_stream
+    from html_parser_spark.ops.web import crawl_diff, diff_status
 
     base = synthetic_pages_df(spark, SF_DIR, paragraphs=1).limit(30)
     old_dir = str(tmp_path / "old")
@@ -279,14 +104,14 @@ def test_crawl_diff_stream_matches_batch(spark, tmp_path):
     spark.createDataFrame(new_rows, base.schema).write.parquet(new_dir)
 
     old_df = spark.read.parquet(old_dir)
-    q = crawl_diff_stream(
-        spark, new_dir, old_df,
-        str(tmp_path / "out"), str(tmp_path / "ck"), max_files_per_trigger=64,
+    new_side = _stream(spark, new_dir).select(
+        "url", F.md5(F.col("html")).alias("new_md5")
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    old_side = old_df.select("url", F.md5(F.col("html")).alias("old_md5"))
+    diff = new_side.join(old_side, "url", "left").select(
+        "url", diff_status().alias("status"), "old_md5", "new_md5"
+    )
+    _drain(diff, str(tmp_path / "out"), str(tmp_path / "ck"))
     streamed = {
         r["url"]: (r["status"], r["old_md5"], r["new_md5"])
         for r in spark.read.parquet(str(tmp_path / "out")).collect()
@@ -300,139 +125,3 @@ def test_crawl_diff_stream_matches_batch(spark, tmp_path):
     assert streamed == batch
     assert sum(1 for s in streamed.values() if s[0] == "added") == 10
     assert sum(1 for s in streamed.values() if s[0] == "changed") >= 2
-
-
-def test_parse_image_header_formats():
-    import struct
-
-    from html_parser_spark.ops.multimodal import parse_image_header
-
-    png = (b"\x89PNG\r\n\x1a\n" + b"\x00\x00\x00\rIHDR"
-           + struct.pack(">II", 640, 480) + bytes([16, 6, 0, 0, 0]))
-    assert parse_image_header(png) == {
-        "format": "png", "width": 640, "height": 480, "bit_depth": 16}
-    bmp = b"BM" + b"\x00" * 16 + struct.pack("<ii", 320, -200) + b"\x01\x00" + struct.pack("<H", 24)
-    assert parse_image_header(bmp) == {
-        "format": "bmp", "width": 320, "height": 200, "bit_depth": 24}
-    gif = b"GIF89a" + struct.pack("<HH", 12, 34)
-    assert parse_image_header(gif)["width"] == 12
-    ppm = b"P6\n# a comment\n 800  600\n255\n..."
-    assert parse_image_header(ppm) == {
-        "format": "ppm", "width": 800, "height": 600, "bit_depth": 8}
-    assert parse_image_header(b"") is None
-    assert parse_image_header(b"BM\x00") is None       # truncated
-    assert parse_image_header(b"\x89PNG\r\n\x1a\n") is None
-    assert parse_image_header(b"P6 notanumber x") is None
-
-
-def test_parse_audio_header_formats():
-    import struct
-
-    from html_parser_spark.ops.multimodal import parse_audio_header
-
-    def wav(ch, sr, bits, data):
-        br = sr * ch * bits // 8
-        return (b"RIFF" + struct.pack("<I", 36 + data) + b"WAVEfmt "
-                + struct.pack("<IHHIIHH", 16, 1, ch, sr, br, ch * bits // 8, bits)
-                + b"data" + struct.pack("<I", data))
-
-    assert parse_audio_header(wav(1, 8000, 16, 16000)) == {
-        "format": "wav", "channels": 1, "sample_rate": 8000,
-        "bits_per_sample": 16, "bitrate_kbps": 128, "duration_ms": 1000}
-    h = parse_audio_header(wav(2, 44100, 8, 44100))
-    assert (h["channels"], h["duration_ms"], h["bitrate_kbps"]) == (2, 500, 705)
-    # a LIST chunk before fmt must be walked over (word alignment)
-    listed = (b"RIFF" + struct.pack("<I", 100) + b"WAVE"
-              + b"LIST" + struct.pack("<I", 5) + b"INFOx\x00"
-              + wav(1, 22050, 16, 44100)[12:])
-    assert parse_audio_header(listed)["sample_rate"] == 22050
-
-    # MP3: MPEG1 L3 128kbps 44100 stereo; with and without ID3v2
-    mp3 = bytes([0xFF, 0xFB, 0x90, 0x00])
-    assert parse_audio_header(mp3) == {
-        "format": "mp3", "channels": 2, "sample_rate": 44100,
-        "bits_per_sample": None, "bitrate_kbps": 128, "duration_ms": None}
-    id3 = b"ID3" + bytes([4, 0, 0, 0, 0, 0, 10]) + b"\x00" * 10 + mp3
-    assert parse_audio_header(id3)["format"] == "mp3"
-    # MPEG2 L3, bitrate idx 5 (40kbps), 24000 Hz, mono
-    h = parse_audio_header(bytes([0xFF, 0xF3, 0x54, 0xC0]))
-    assert (h["sample_rate"], h["bitrate_kbps"], h["channels"]) == (24000, 40, 1)
-    # totality: junk / truncated / reserved combinations
-    assert parse_audio_header(b"") is None
-    assert parse_audio_header(b"RIFFxxxxWAVE") is None       # no fmt chunk
-    assert parse_audio_header(bytes([0xFF, 0xFB])) is None   # truncated frame
-    assert parse_audio_header(bytes([0xFF, 0xEB, 0x90, 0x00])) is None  # ver=reserved
-    assert parse_audio_header(bytes([0xFF, 0xFB, 0xF0, 0x00])) is None  # br=bad
-    assert parse_audio_header(b"ID3" + bytes([4, 0, 0, 0, 0, 0, 100])) is None
-
-
-def test_audio_headers_udf(spark):
-    import struct
-
-    from html_parser_spark.ops.multimodal import audio_headers
-
-    wav = (b"RIFF" + struct.pack("<I", 36 + 16000) + b"WAVEfmt "
-           + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 16000, 2, 16)
-           + b"data" + struct.pack("<I", 16000))
-    rows = [(1, wav), (2, bytes([0xFF, 0xFB, 0x90, 0x00])),
-            (3, b"not audio"), (4, None)]
-    df = spark.createDataFrame(rows, "media_id int, payload binary")
-    got = {r["media_id"]: r for r in audio_headers(df).collect()}
-    assert got[1]["format"] == "wav" and got[1]["duration_ms"] == 1000
-    assert got[2]["format"] == "mp3" and got[2]["sample_rate"] == 44100
-    assert got[3]["format"] is None and got[4]["format"] is None
-    plan = audio_headers(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and plan.count("ArrowEvalPython") == 1
-
-
-def test_image_headers_udf(spark):
-    import struct
-
-    from html_parser_spark.ops.multimodal import image_headers
-
-    gif = b"GIF87a" + struct.pack("<HH", 5, 7) + b"rest"
-    rows = [(1, gif), (2, b"not an image"), (3, None)]
-    df = spark.createDataFrame(rows, "media_id int, payload binary")
-    got = {r["media_id"]: r for r in image_headers(df).collect()}
-    assert got[1]["format"] == "gif" and got[1]["width"] == 5
-    assert got[2]["format"] is None
-    assert got[3]["format"] is None
-    plan = image_headers(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and plan.count("ArrowEvalPython") == 1
-
-
-def test_dhash64_patterns_and_udf(spark):
-    from html_parser_spark.ops.multimodal import dhash64, image_dhash
-
-    def pgm(w, h, pix):
-        return f"P5\n{w} {h}\n255\n".encode() + bytes(
-            pix(x, y) for y in range(h) for x in range(w)
-        )
-
-    asc = pgm(18, 8, lambda x, y: x * 14)
-    checker = pgm(9, 8, lambda x, y: 255 * (x % 2))
-    assert dhash64(asc) == -1                      # all right-neighbors brighter
-    assert dhash64(pgm(9, 8, lambda x, y: 7)) == 0  # flat: strict '>' never fires
-    assert dhash64(checker) == -6148914691236517206  # 0xAAAA.. signed
-    # PPM grays average the channels; identical gradient -> identical hash
-    ppm = b"P6\n18 8\n255\n" + bytes(
-        v for y in range(8) for x in range(18) for v in (x * 14,) * 3
-    )
-    assert dhash64(ppm) == -1
-    # near-identical images differ in few bits (the near-dup property)
-    noisy = pgm(18, 8, lambda x, y: min(255, x * 14 + (3 if (x, y) == (4, 4) else 0)))
-    d = (dhash64(asc) ^ dhash64(noisy)) & (2**64 - 1)
-    assert bin(d).count("1") <= 2
-    # totality
-    assert dhash64(b"") is None
-    assert dhash64(b"P5\n9 8\n255\n" + b"\x00" * 5) is None  # truncated raster
-    assert dhash64(b"P5\n9 8\n99999\n" + b"\x00" * 72) is None  # bad maxval
-
-    df = spark.createDataFrame(
-        [(1, asc), (2, checker), (3, b"junk"), (4, None)],
-        "media_id int, payload binary",
-    )
-    got = {r["media_id"]: r["dhash"] for r in image_dhash(df).collect()}
-    assert got == {1: -1, 2: -6148914691236517206, 3: None, 4: None}
-    plan = image_dhash(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and plan.count("ArrowEvalPython") == 1

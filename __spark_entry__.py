@@ -346,29 +346,6 @@ def q_fingerprint(spark, sf_dir):
 
 @contract(
     oracle="""
-        SELECT doc_id,
-               CASE WHEN len(trim(text)) = 0 THEN 0
-                    ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens,
-               len(regexp_extract_all(text,
-                   ' ?[A-Za-zА-Яа-яЁё]+| ?[0-9]+| ?[^ A-Za-zА-Яа-яЁё0-9]+'))
-                 AS n_bpe_tokens
-        FROM documents
-    """,
-)
-def q_token_stats(spark, sf_dir):
-    """Token counting, both ways the brief names: whitespace + BPE-ish regex."""
-    from html_parser_spark.ops.text import bpe_token_count, token_count
-
-    d = _docs(spark, sf_dir)
-    return d.select(
-        "doc_id",
-        token_count(F.col("text")).alias("n_tokens"),
-        bpe_token_count(F.col("text")).alias("n_bpe_tokens"),
-    )
-
-
-@contract(
-    oracle="""
         WITH t AS (
           SELECT doc_id,
                  lower(regexp_replace(text, '\\s+', ' ', 'g')) AS tx
@@ -401,80 +378,6 @@ def q_winnow_fingerprint(spark, sf_dir):
     return winnow_fingerprints(
         _docs(spark, sf_dir).filter(F.col("doc_id") < 60), k=8, w=4
     )
-
-
-_STOP = ["the", "a", "of", "and", "to", "in"]
-_STOP_SUM = " + ".join(
-    f"(len(string_split(' ' || text || ' ', ' {w} ')) - 1)" for w in _STOP
-)
-
-
-@contract(
-    oracle=f"""
-        WITH f AS (
-          SELECT doc_id, lang, text,
-                 len(text) AS n_chars_m,
-                 CASE WHEN len(trim(text)) = 0 THEN 0
-                      ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens,
-                 ({_STOP_SUM}) AS n_stopwords
-          FROM documents
-        )
-        SELECT doc_id, lang, n_chars_m, n_tokens, n_stopwords,
-               CASE WHEN n_tokens > 0
-                    THEN round((n_chars_m - (n_tokens - 1)) / CAST(n_tokens AS DOUBLE), 4)
-                    ELSE 0.0 END AS mean_token_len,
-               CASE WHEN n_tokens > 0
-                    THEN round(n_stopwords / CAST(n_tokens AS DOUBLE), 4)
-                    ELSE 0.0 END AS stopword_ratio,
-               CASE WHEN n_chars_m > 0
-                    THEN floor((n_chars_m - len(regexp_replace(text,
-                           '[.,;:!?''"()-]', '', 'g')))
-                         / CAST(n_chars_m AS DOUBLE) * 10000 + 0.5) / 10000
-                    ELSE 0.0 END AS punct_ratio,
-               round(least(1.0, n_tokens / 100.0) *
-                     (1.0 - CASE WHEN n_tokens > 0
-                                 THEN round(n_stopwords / CAST(n_tokens AS DOUBLE), 4)
-                                 ELSE 0.0 END), 4) AS quality_score
-        FROM f
-    """,
-)
-def q_quality_score(spark, sf_dir):
-    from html_parser_spark.ops.text import quality_features
-
-    return quality_features(_docs(spark, sf_dir))
-
-
-@contract(
-    oracle="""
-        WITH toks AS (
-          SELECT doc_id,
-                 unnest(list_filter(
-                   regexp_split_to_array(lower(text), '\\s+'),
-                   x -> len(x) > 0)) AS term
-          FROM documents
-        ),
-        tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-        dfc AS (SELECT term, count(DISTINCT doc_id) AS df
-                FROM toks GROUP BY 1),
-        n AS (SELECT count(DISTINCT doc_id) AS n FROM documents),
-        scored AS (
-          SELECT tf.doc_id, tf.term,
-                 round(tf.tf * ln((n.n + 1.0) / (dfc.df + 1.0)), 4) AS score
-          FROM tf JOIN dfc USING (term) CROSS JOIN n
-        )
-        SELECT doc_id, term, score, rank FROM (
-          SELECT *, row_number() OVER (PARTITION BY doc_id
-                    ORDER BY score DESC, term ASC) AS rank
-          FROM scored) WHERE rank <= 5
-    """,
-)
-def q_tfidf(spark, sf_dir):
-    """Per-doc top-5 TF-IDF terms (corpus-relevance weighting for training-
-    data filtering).  Rank uses the ROUNDED score so cross-engine ln() ulps
-    cannot flip orderings."""
-    from html_parser_spark.ops.text import tfidf_top_terms
-
-    return tfidf_top_terms(_docs(spark, sf_dir), k=5)
 
 
 @contract(
@@ -513,57 +416,6 @@ def q_data_split(spark, sf_dir):
         F.max("doc_id").alias("max_doc"),
         F.sum(F.length("text")).alias("total_chars"),
     )
-
-
-@contract(
-    oracle="""
-        WITH s AS (
-          SELECT doc_id,
-                 (strpos('0123456789abcdef',
-                         substring(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16
-                 + strpos('0123456789abcdef',
-                          substring(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1
-                   AS bucket,
-                 regexp_split_to_array(trim(text), '\\s+') AS w
-          FROM documents
-        ), sp AS (
-          SELECT doc_id,
-                 CASE WHEN bucket < 205 THEN 'train'
-                      WHEN bucket < 230 THEN 'valid' ELSE 'test' END AS split,
-                 list_distinct(CASE WHEN len(w) >= 8 THEN
-                   list_transform(generate_series(1, len(w) - 7),
-                                  i -> array_to_string(list_slice(w, i, i + 7), ' '))
-                 ELSE [] END) AS sh
-          FROM s
-        ), train_sh AS (
-          SELECT DISTINCT md5(unnest(sh)) AS hsh FROM sp WHERE split = 'train'
-        ), test_docs AS (
-          SELECT doc_id, CAST(len(sh) AS BIGINT) AS n_shingles FROM sp
-          WHERE split = 'test' AND len(sh) > 0
-        ), test_sh AS (
-          SELECT doc_id, md5(unnest(sh)) AS hsh FROM sp WHERE split = 'test'
-        ), hits AS (
-          SELECT doc_id, count(*) AS contaminated FROM test_sh
-          WHERE hsh IN (SELECT hsh FROM train_sh) GROUP BY doc_id
-        )
-        SELECT t.doc_id, t.n_shingles,
-               CAST(coalesce(h.contaminated, 0) AS BIGINT) AS contaminated,
-               round(coalesce(h.contaminated, 0) / t.n_shingles, 4)
-                 AS contaminated_frac
-        FROM test_docs t LEFT JOIN hits h USING (doc_id)
-    """,
-    plan="train-shingle SEMI-join on md5 keys, no nested loop",
-    must=["LeftSemi"],
-    must_not=["BroadcastNestedLoopJoin", "CartesianProduct"],
-)
-def q_contamination(spark, sf_dir):
-    """Train→test n-gram contamination audit (GPT-3 appendix C / Gopher
-    §A.2): for each test-split doc, the fraction of its distinct 8-word
-    shingles that occur anywhere in the train split.  Shingles are md5-hashed
-    before the semi-join so the shuffle key is 32 bytes, not 8 words."""
-    from html_parser_spark.ops.corpus import contamination_check
-
-    return contamination_check(_docs(spark, sf_dir), shingle_k=8)
 
 
 @contract(
@@ -767,27 +619,6 @@ def q_percentiles(spark, sf_dir):
 
 
 @contract(
-    oracle="""
-        SELECT lang, count(*) AS docs,
-               floor((CAST(sum(len(text)) AS DOUBLE) / count(*)) * 100 + 0.5)
-                 / 100 AS avg_chars,
-               floor((CAST(sum(CASE WHEN len(trim(text)) = 0 THEN 0
-                           ELSE len(regexp_split_to_array(trim(text), '\\s+'))
-                           END) AS DOUBLE) / count(*)) * 100 + 0.5)
-                 / 100 AS avg_tokens,
-               CAST(sum(CASE WHEN regexp_matches(text, 'spark')
-                        THEN 1 ELSE 0 END) AS BIGINT)
-                 AS docs_with_spark
-        FROM documents GROUP BY lang
-    """,
-)
-def q_lang_profile(spark, sf_dir):
-    from html_parser_spark.ops.text import lang_profile
-
-    return lang_profile(_docs(spark, sf_dir))
-
-
-@contract(
     oracle=_MINHASH_CTE,
     plan="pure JVM expressions, zero Python",
     must=["Project"],
@@ -873,119 +704,6 @@ def q_dup_clusters(spark, sf_dir):
 
 @contract(
     oracle="""
-        WITH toks AS (
-          SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
-          FROM documents WHERE doc_id < 40
-        ), sh AS (
-          SELECT doc_id, list_distinct(t) AS s
-          FROM toks
-        ), scored AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                 round(CASE WHEN len(list_distinct(a.s || b.s)) > 0
-                       THEN len(list_intersect(a.s, b.s)) /
-                            CAST(len(list_distinct(a.s || b.s)) AS DOUBLE)
-                       ELSE 0.0 END, 4) AS jaccard
-          FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        )
-        SELECT doc_a, doc_b, jaccard FROM scored WHERE jaccard >= 0.5
-    """,
-)
-def q_ngram_jaccard(spark, sf_dir):
-    from html_parser_spark.ops.dedup import ngram_jaccard_pairs
-
-    # unigram Jaccard: 3-gram overlap between random word-salad docs is ~0,
-    # token-set overlap is dense — a non-trivial result set for the oracle
-    return ngram_jaccard_pairs(_docs(spark, sf_dir), shingle_k=1, threshold=0.5, id_limit=40)
-
-
-@contract(
-    oracle=f"""
-        WITH sigs AS ({_MINHASH_CTE}),
-        bands AS (
-          SELECT doc_id, 0 AS band_id, sig_0 || '|' || sig_1 AS band_key FROM sigs
-          UNION ALL
-          SELECT doc_id, 1 AS band_id, sig_2 || '|' || sig_3 AS band_key FROM sigs
-        ),
-        pairs AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM bands a JOIN bands b
-            ON a.band_id = b.band_id AND a.band_key = b.band_key
-           AND a.doc_id < b.doc_id
-          GROUP BY 1, 2
-        ),
-        toks2 AS (
-          SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
-          FROM documents
-        ),
-        sh2 AS (
-          SELECT doc_id,
-                 CASE WHEN len(t) >= 3 THEN
-                   list_distinct(list_transform(range(1, len(t) - 1),
-                                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-                 ELSE [] END AS s
-          FROM toks2
-        ),
-        scored AS (
-          SELECT p.doc_a, p.doc_b,
-                 round(CASE WHEN len(list_distinct(a.s || b.s)) > 0
-                       THEN len(list_intersect(a.s, b.s)) /
-                            CAST(len(list_distinct(a.s || b.s)) AS DOUBLE)
-                       ELSE 0.0 END, 4) AS jaccard
-          FROM pairs p
-          JOIN sh2 a ON p.doc_a = a.doc_id
-          JOIN sh2 b ON p.doc_b = b.doc_id
-        )
-        SELECT doc_a, doc_b, jaccard FROM scored WHERE jaccard >= 0.1
-    """,
-    plan="LSH candidates verified via equi-joins, no self cross-join",
-    must=["Join"],
-    must_not=["BroadcastNestedLoopJoin", "CartesianProduct"],
-)
-def q_jaccard_verify(spark, sf_dir):
-    """The scale composition: LSH banding generates candidate pairs, exact
-    n-gram Jaccard verifies them via two equi-joins (no self-join anywhere)."""
-    from html_parser_spark.ops.dedup import lsh_near_duplicates, ngram_jaccard_pairs
-
-    docs = _docs(spark, sf_dir)
-    cands = lsh_near_duplicates(docs, num_hashes=4, bands=2)
-    return ngram_jaccard_pairs(docs, shingle_k=3, threshold=0.1, candidates=cands)
-
-
-@contract(
-    oracle="""
-        -- nibble-expand md5 hex to the 60-bit string, majority-vote per bit
-        WITH toks AS (
-          SELECT doc_id, list_distinct(regexp_split_to_array(trim(text), '\\s+')) AS t
-          FROM documents
-        ), tok AS (
-          SELECT doc_id, unnest(t) AS w, len(t) AS n FROM toks
-        ), tokbits AS (
-          SELECT doc_id, n,
-                 array_to_string(list_transform(range(1, 16), i ->
-                   ['0000','0001','0010','0011','0100','0101','0110','0111',
-                    '1000','1001','1010','1011','1100','1101','1110','1111']
-                   [strpos('0123456789abcdef', substring(md5(w), i, 1))]), '') AS tb
-          FROM tok
-        ), votes AS (
-          SELECT doc_id, b.b AS b, any_value(n) AS n,
-                 sum(CAST(substring(tb, CAST(b.b AS INT), 1) AS INT)) AS s
-          FROM tokbits, (SELECT unnest(range(1, 61)) AS b) b
-          GROUP BY doc_id, b.b
-        )
-        SELECT doc_id,
-               string_agg(CASE WHEN s >= n / 2.0 THEN '1' ELSE '0' END,
-                          '' ORDER BY b) AS simhash
-        FROM votes GROUP BY doc_id
-    """,
-)
-def q_simhash(spark, sf_dir):
-    from html_parser_spark.ops.dedup import simhash
-
-    return simhash(_docs(spark, sf_dir))
-
-
-@contract(
-    oracle="""
         SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
                event_type,
                count(*) AS n_events,
@@ -1005,54 +723,6 @@ def q_event_windows(spark, sf_dir):
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-    )
-
-
-@contract(
-    oracle="""
-        WITH o AS (
-          SELECT user_id, ts, event_id, value,
-                 CASE WHEN lag(ts) OVER w IS NULL
-                      OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-                      THEN 1 ELSE 0 END AS new_session
-          FROM events
-          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), s AS (
-          SELECT user_id, value,
-                 sum(new_session) OVER (PARTITION BY user_id
-                                        ORDER BY ts, event_id) AS session_idx
-          FROM o
-        )
-        SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
-               count(*) AS n_events,
-               CAST(round(sum(CAST(value AS DECIMAL(18,6))), 2) AS DOUBLE)
-                 AS session_value
-        FROM s GROUP BY user_id, session_idx
-    """,
-)
-def q_sessionize(spark, sf_dir):
-    """Sessionization: a new session starts after a >30min gap per user —
-    lag + cumulative sum window."""
-    ev = _tbl(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    epoch = F.col("ts").cast("timestamp").cast("long")  # NTZ needs 2-step cast
-    gap = epoch - F.lag(epoch).over(w)
-    with_flag = ev.withColumn(
-        "new_session", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-    )
-    with_sess = with_flag.withColumn(
-        "session_idx", F.sum("new_session").over(w)
-    )
-    return (
-        with_sess.groupBy("user_id", "session_idx")
-        .agg(
-            F.count("*").alias("n_events"),
-            # DECIMAL sum → exact & order-independent, then round on the exact
-            # decimal (HALF_UP == DuckDB half-away-from-zero) and cast back.
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
-            .cast("double")
-            .alias("session_value"),
         )
     )
 
@@ -1092,48 +762,6 @@ def q_extract_text(spark, sf_dir, num_partitions=None, max_html_bytes=None):
     res = extract_pages(pages, num_partitions, max_html_bytes)
     return res.select(
         "url", "fmt", "n_entries", F.col("extracted_text").alias("extracted_text")
-    )
-
-
-@contract(
-    oracle="""
-        SELECT nationkey FROM (
-          SELECT DISTINCT c_nationkey AS nationkey FROM customer
-          EXCEPT
-          SELECT DISTINCT s_nationkey AS nationkey FROM supplier
-        )
-        UNION ALL
-        SELECT nationkey + 1000 AS nationkey FROM (
-          SELECT DISTINCT s_nationkey AS nationkey FROM supplier
-          EXCEPT
-          SELECT DISTINCT c_nationkey AS nationkey FROM customer
-        )
-        UNION ALL
-        SELECT nationkey + 2000 AS nationkey FROM (
-          SELECT DISTINCT c_nationkey AS nationkey FROM customer
-          INTERSECT
-          SELECT DISTINCT s_nationkey AS nationkey FROM supplier
-        )
-    """,
-)
-def q_set_ops(spark, sf_dir):
-    """Set operators (absent from the reference — §2.6 — provided for engine
-    completeness): nations that have customers but no suppliers, via EXCEPT."""
-    c = _tbl(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _tbl(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return (
-        c.distinct()
-        .exceptAll(s.distinct())
-        .union(
-            s.distinct().exceptAll(c.distinct()).withColumn(
-                "nationkey", F.col("nationkey") + 1000
-            )
-        )
-        .union(
-            c.distinct().intersect(s.distinct()).withColumn(
-                "nationkey", F.col("nationkey") + 2000
-            )
-        )
     )
 
 
@@ -1213,54 +841,6 @@ def q_date_battery(spark, sf_dir):
             F.min(F.dayofmonth(ts)).alias("first_dom"),
         )
     )
-
-
-@contract(
-    oracle="""
-        WITH hourly AS (
-          SELECT date_trunc('hour', ts) AS h, event_type,
-                 count(*) AS n, sum(CAST(value AS DECIMAL(18,6))) AS s
-          FROM events GROUP BY 1, 2
-        )
-        SELECT CAST(date_trunc('day', h) AS TIMESTAMP) AS day, event_type,
-               CAST(sum(n) AS BIGINT) AS n_events,
-               CAST(round(sum(s), 2) AS DOUBLE) AS sum_value,
-               floor((CAST(sum(s) AS DOUBLE) / sum(n)) * 100 + 0.5) / 100
-                 AS avg_value,
-               count(*) AS hours_active
-        FROM hourly GROUP BY 1, 2
-    """,
-)
-def q_hypertable_rollup(spark, sf_dir):
-    """Hypertable-style continuous aggregate: hourly buckets reaggregated to
-    daily — the two-level rollup pattern where the fine resolution is the
-    materialized input of the coarse one (sum/count compose; avg derived)."""
-    ev = _tbl(spark, sf_dir, "events")
-    hourly = (
-        ev.groupBy(
-            F.date_trunc("hour", F.col("ts").cast("timestamp")).alias("h"),
-            "event_type",
-        )
-        .agg(
-            F.count("*").alias("n"),
-            # exact decimal partial sums: the hourly→daily re-aggregation is
-            # then order-independent (the composability the pattern relies on)
-            F.sum(F.col("value").cast("decimal(18,6)")).alias("s"),
-        )
-    )
-    avg_q = F.sum("s").cast("double") / F.sum("n")
-    daily = (
-        hourly.groupBy(F.date_trunc("day", "h").alias("day"), "event_type")
-        .agg(
-            F.sum("n").alias("n_events"),
-            F.round(F.sum("s"), 2).cast("double").alias("sum_value"),
-            # deterministic 2dp half-up on an IEEE-identical quotient (no
-            # engine round(double), whose tie-breaking differs cross-engine)
-            (F.floor(avg_q * 100 + F.lit(0.5)) / 100).alias("avg_value"),
-            F.count("*").alias("hours_active"),
-        )
-    )
-    return daily
 
 
 @contract(
@@ -1884,7 +1464,7 @@ def q_stratified_sample(spark, sf_dir):
 
 @contract(
     oracle="""
-        -- same whitespace tokenization as q_tfidf; both counters in
+        -- lowercase whitespace tokenization; both counters in
         -- one GROUP BY; rank = count desc, term asc over the top 50
         WITH toks AS (
           SELECT doc_id,
@@ -2020,59 +1600,6 @@ def q_bpe_encode(spark, sf_dir):
         "doc_id", F.regexp_replace("text", "‖", "").alias("text")
     )
     return bpe_encode(docs, _bpe_seed_merges())
-
-
-@contract(
-    oracle=lambda: f"""
-        -- same symbolic encode as q_bpe_encode, aggregated per lang;
-        -- fertility = one double division of two exact integer sums
-        WITH d AS (
-          SELECT doc_id, lang,
-                 list_filter(
-                   regexp_split_to_array(
-                     lower(trim(replace(text, '‖', ''))), '\\s+'),
-                   x -> len(x) > 0) AS words
-          FROM documents
-        ), s AS (
-          SELECT doc_id, lang,
-                 CAST(len(words) AS BIGINT) AS n_words,
-                 coalesce(list_aggregate(
-                   list_transform(words, w -> {_bpe_word_sql()}),
-                   'string_agg', ''), '') AS stream
-          FROM d
-        ), t AS (
-          SELECT lang, n_words,
-                 CAST((len(stream) - len(replace(stream, '‖', ''))) // 2
-                      AS BIGINT) AS n_tokens
-          FROM s
-        )
-        SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(n_words) AS BIGINT) AS n_words,
-               CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-               CASE WHEN sum(n_words) > 0 THEN
-                 round(CAST(sum(n_tokens) AS DOUBLE) / sum(n_words), 4)
-               END AS fertility
-        FROM t GROUP BY lang
-    """,
-    plan=(
-        "tokenizer-fit audit: ONE mapInPandas encode + ONE partial-agg groupBy (no "
-        "Window, no cartesian)"
-    ),
-    must=["MapInPandas", "HashAggregate"],
-    must_not=["Window", "CartesianProduct", "BatchEvalPython"],
-)
-def q_bpe_fertility(spark, sf_dir):
-    """Per-language BPE fertility audit (ops/bpe.fertility_by_group):
-    subword pieces per word under the seed-trained merges — ONE encode
-    pass + ONE partial-agg groupBy; the ratio is a single division of two
-    exact integer sums.  The oracle replays the symbolic encode per doc
-    and aggregates the same integers per lang."""
-    from html_parser_spark.ops.bpe import fertility_by_group
-
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", "lang", F.regexp_replace("text", "‖", "").alias("text")
-    )
-    return fertility_by_group(docs, _bpe_seed_merges())
 
 
 @contract(
@@ -2218,140 +1745,6 @@ def q_sentence_split(spark, sf_dir):
         F.lit("."),
     )
     return sentence_split(docs.select("doc_id", text.alias("text")))
-
-
-@contract(
-    oracle="""
-        -- RE2 script classes over the same closed-form mixed-script
-        -- text; dominant = alphabetically first script at the max
-        WITH src AS (
-          SELECT doc_id,
-                 CASE WHEN doc_id % 97 = 0 THEN '0123 4567 !!'
-                      ELSE text
-                        || repeat(' привет мир', CAST(doc_id % 40 AS INT))
-                        || CASE WHEN doc_id % 3 = 1 THEN ' γειά σου κόσμε'
-                                WHEN doc_id % 3 = 2 THEN ' 你好世界 こんにちは'
-                                ELSE '' END
-                 END AS t
-          FROM documents
-        ), c AS (
-          SELECT doc_id,
-                 CAST(len(regexp_extract_all(t, '\\p{Arabic}')) AS BIGINT)
-                   AS n_arabic,
-                 CAST(len(regexp_extract_all(t,
-                   '[\\p{Han}\\p{Hiragana}\\p{Katakana}\\p{Hangul}]'))
-                   AS BIGINT) AS n_cjk,
-                 CAST(len(regexp_extract_all(t, '\\p{Cyrillic}')) AS BIGINT)
-                   AS n_cyrillic,
-                 CAST(len(regexp_extract_all(t, '\\p{Greek}')) AS BIGINT)
-                   AS n_greek,
-                 CAST(len(regexp_extract_all(t, '\\p{Latin}')) AS BIGINT)
-                   AS n_latin
-          FROM src
-        )
-        SELECT doc_id, n_arabic, n_cjk, n_cyrillic, n_greek, n_latin,
-               n_arabic + n_cjk + n_cyrillic + n_greek + n_latin
-                 AS n_script_chars,
-               CASE WHEN n_arabic + n_cjk + n_cyrillic + n_greek
-                         + n_latin = 0 THEN NULL
-                    WHEN n_arabic = greatest(n_arabic, n_cjk, n_cyrillic,
-                                             n_greek, n_latin)
-                      THEN 'arabic'
-                    WHEN n_cjk = greatest(n_arabic, n_cjk, n_cyrillic,
-                                          n_greek, n_latin) THEN 'cjk'
-                    WHEN n_cyrillic = greatest(n_arabic, n_cjk,
-                                               n_cyrillic, n_greek,
-                                               n_latin) THEN 'cyrillic'
-                    WHEN n_greek = greatest(n_arabic, n_cjk, n_cyrillic,
-                                            n_greek, n_latin)
-                      THEN 'greek'
-                    ELSE 'latin'
-               END AS dominant_script
-        FROM c
-    """,
-    plan=(
-        "script routing is pure codegen (five regexp_counts in one projection): zero "
-        "shuffle, zero Python"
-    ),
-    must=["*(1)"],
-    must_not=["Exchange", "Window", "Join", "ArrowEvalPython", "BatchEvalPython",
-              "Generate"],
-)
-def q_script_profile(spark, sf_dir):
-    """Unicode-script routing (ops/text.script_profile): docs synthesized
-    with mixed scripts in closed form — a Cyrillic phrase repeated
-    doc_id%40 times (overtaking the Latin base on high repeats), a Greek
-    or CJK suffix on %3 families, and a digits-only page on %97 (NULL
-    dominant).  The oracle recounts with RE2's script classes — two
-    independent regex engines agreeing on every count and tie-break."""
-    from html_parser_spark.ops.text import script_profile
-
-    docs = _docs(spark, sf_dir)
-    text = F.when(
-        F.expr("doc_id % 97 = 0"), F.lit("0123 4567 !!")
-    ).otherwise(
-        F.concat(
-            F.col("text"),
-            F.repeat(
-                F.lit(" привет мир"), F.pmod("doc_id", F.lit(40)).cast("int")
-            ),
-            F.when(F.expr("doc_id % 3 = 1"), F.lit(" γειά σου κόσμε"))
-            .when(F.expr("doc_id % 3 = 2"), F.lit(" 你好世界 こんにちは"))
-            .otherwise(F.lit("")),
-        )
-    )
-    return script_profile(docs.select("doc_id", text.alias("text")))
-
-
-@contract(
-    oracle="""
-        -- same distinct-md5-shingle construction as the minhash CTE,
-        -- then: docs-per-shingle count, per-doc novel fold, LEFT
-        -- JOIN back so shingle-less docs report 0 / NULL
-        WITH toks AS (
-          SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
-          FROM documents
-        ), sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(t) >= 3 THEN
-                   list_distinct(list_transform(range(1, len(t) - 1),
-                     i -> md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2])))
-                 ELSE [] END AS hs
-          FROM toks
-        ), e AS (
-          SELECT doc_id, unnest(hs) AS h FROM sh
-        ), cnt AS (
-          SELECT h, count(*) AS docs FROM e GROUP BY h
-        ), nov AS (
-          SELECT e.doc_id, count(*) AS n_shingles,
-                 sum(CASE WHEN cnt.docs = 1 THEN 1 ELSE 0 END) AS n_novel
-          FROM e JOIN cnt USING (h) GROUP BY e.doc_id
-        )
-        SELECT t.doc_id,
-               CAST(coalesce(nov.n_shingles, 0) AS BIGINT) AS n_shingles,
-               CAST(coalesce(nov.n_novel, 0) AS BIGINT) AS n_novel,
-               CASE WHEN coalesce(nov.n_shingles, 0) > 0 THEN
-                 round(CAST(nov.n_novel AS DOUBLE) / nov.n_shingles, 4)
-               END AS novelty
-        FROM toks t LEFT JOIN nov USING (doc_id)
-    """,
-    plan=(
-        "diversity diagnostic: md5-hashed shingles before the shuffle, ONE groupBy per "
-        "direction, no window, no Python, no cartesian"
-    ),
-    must=["HashAggregate", "Generate"],
-    must_not=["Window", "CartesianProduct", "ArrowEvalPython", "BatchEvalPython"],
-)
-def q_ngram_novelty(spark, sf_dir):
-    """Per-doc n-gram novelty (ops/corpus.ngram_novelty): fraction of a
-    doc's distinct 3-shingles that occur in NO other document — the
-    corpus-diversity diagnostic that surfaces template farms surviving
-    doc-level dedup.  Shingles md5-hash before the shuffle; ONE groupBy
-    per direction.  The oracle recomputes the same distinct-hash counts
-    symbolically."""
-    from html_parser_spark.ops.corpus import ngram_novelty
-
-    return ngram_novelty(_docs(spark, sf_dir).select("doc_id", "text"))
 
 
 @contract(
@@ -2896,158 +2289,6 @@ def q_crawl_plan(spark, sf_dir):
 
 @contract(
     oracle="""
-        -- closed-form flags: k=0 not-found title+body, k=3 standalone
-        -- 404 in the title, k=2 parked phrase, k=7 decorated
-        -- not-found title (true positive); k=5/6 are ADVERSARIAL hard
-        -- negatives — short pages titled 'Forbidden City' / 'Coming
-        -- Soon Movies 2026' whose titles contain phrase words
-        -- followed by real content, so the segment-anchored title
-        -- rule must NOT flag them; soft404 requires the SHORT body
-        -- in every case (real soft-404s are short); k in (1,4) clean
-        -- (corpus text has no error phrase or digit — verified
-        -- offline); blen COALESCEd so a future NULL-text doc matches
-        -- the Spark-side coalesce('') instead of NULL-compare
-        WITH f AS (
-          SELECT doc_id, doc_id % 8 AS k,
-                 CASE doc_id % 8
-                   WHEN 0 THEN 'Page not found'
-                   WHEN 3 THEN 'Error 404 - doc v' || (doc_id % 7)
-                   WHEN 5 THEN 'Forbidden City'
-                   WHEN 6 THEN 'Coming Soon Movies 2026'
-                   WHEN 7 THEN 'Oops! Page not found | site'
-                   ELSE 'Doc v' || (doc_id % 7)
-                 END AS title,
-                 CASE WHEN doc_id % 8 = 0 THEN 23
-                      WHEN doc_id % 8 = 2
-                           THEN 16 + least(100, COALESCE(length(text), 0))
-                      WHEN doc_id % 8 = 5 THEN 30
-                      WHEN doc_id % 8 = 6 THEN 16
-                      WHEN doc_id % 8 = 7 THEN 23
-                      ELSE COALESCE(length(text), 0) END AS blen
-          FROM documents
-        )
-        SELECT doc_id, title,
-               CAST(CASE WHEN k IN (0, 3, 7) THEN 1 ELSE 0 END
-                    AS INTEGER) AS title_404,
-               CAST(CASE WHEN k IN (0, 2) THEN 1 ELSE 0 END
-                    AS INTEGER) AS body_404,
-               CAST(CASE WHEN blen < 512 THEN 1 ELSE 0 END
-                    AS INTEGER) AS short_body,
-               CAST(CASE WHEN k IN (0, 2, 3, 7) AND blen < 512 THEN 1
-                         ELSE 0 END AS INTEGER) AS soft404
-        FROM f
-    """,
-    plan="pure codegen phrase flags, zero shuffle",
-    must=["Project"],
-    must_not=["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join"],
-)
-def q_soft404(spark, sf_dir):
-    """Soft-404 detection (ops/web.soft_404_flags): eight page families —
-    classic not-found, normal, parked-domain (short + phrase), a 404 title
-    on a full body, normal, then three ADVERSARIAL families pinning the
-    title rule's precision: short hard negatives whose titles merely
-    start with error words ('Forbidden City', 'Coming Soon Movies 2026')
-    must NOT flag, while a decorated true positive ('Oops! Page not
-    found | site') must.  Titles avoid doc_id digits so '404' can't leak
-    in; the corpus vocabulary contains no error phrase (verified), so the
-    oracle states every flag in closed form."""
-    from html_parser_spark.ops.web import soft_404_flags
-
-    docs = _docs(spark, sf_dir)
-    k = F.col("doc_id") % 8
-    title = (
-        F.when(k == 0, F.lit("Page not found"))
-        .when(k == 3, F.concat(F.lit("Error 404 - doc v"),
-                               (F.col("doc_id") % 7).cast("string")))
-        .when(k == 5, F.lit("Forbidden City"))
-        .when(k == 6, F.lit("Coming Soon Movies 2026"))
-        .when(k == 7, F.lit("Oops! Page not found | site"))
-        .otherwise(F.concat(F.lit("Doc v"), (F.col("doc_id") % 7).cast("string")))
-    )
-    body = (
-        F.when(k == 0, F.lit("The page was not found."))
-        .when(k == 2, F.concat(F.lit("domain for sale "),
-                               F.substring("text", 1, 100)))
-        .when(k == 5, F.lit("A guide to the palace complex."))
-        .when(k == 6, F.lit("Trailer listing."))
-        .when(k == 7, F.lit("It may have been moved."))
-        .otherwise(F.col("text"))
-    )
-    pages = docs.select("doc_id", title.alias("title"), body.alias("main_text"))
-    out = soft_404_flags(pages)
-    return out.select(
-        "doc_id", "title",
-        F.col("title_404").cast("int").alias("title_404"),
-        F.col("body_404").cast("int").alias("body_404"),
-        F.col("short_body").cast("int").alias("short_body"),
-        F.col("soft404").cast("int").alias("soft404"),
-    )
-
-
-@contract(
-    oracle="""
-        -- same trigram + top-50 profile CTEs as q_lang_id, then two
-        -- integer rollups: distinct grams per doc, grams the doc's OWN
-        -- language profile knows
-        WITH t AS (
-          SELECT doc_id, lang,
-                 lower(regexp_replace(text, '\\s+', ' ', 'g')) AS tx
-          FROM documents
-        ),
-        g AS (
-          SELECT doc_id, lang,
-                 unnest(list_distinct(list_transform(
-                   range(1, greatest(len(tx) - 2, 0) + 1),
-                   i -> substr(tx, CAST(i AS INT), 3)))) AS gram
-          FROM t
-        ),
-        counts AS (SELECT lang, gram, count(*) AS c FROM g GROUP BY 1, 2),
-        prof AS (
-          SELECT lang, gram FROM (
-            SELECT lang, gram,
-                   row_number() OVER (PARTITION BY lang
-                                      ORDER BY c DESC, gram) AS rank
-            FROM counts)
-          WHERE rank <= 50
-        ),
-        tot AS (
-          SELECT doc_id, lang, CAST(COUNT(*) AS BIGINT) AS n_grams
-          FROM g GROUP BY 1, 2
-        ),
-        kn AS (
-          SELECT g.doc_id, CAST(COUNT(*) AS BIGINT) AS n_known
-          FROM g JOIN prof p ON p.lang = g.lang AND p.gram = g.gram
-          GROUP BY 1
-        )
-        SELECT tot.doc_id, tot.lang, tot.n_grams,
-               CAST(COALESCE(kn.n_known, 0) AS BIGINT) AS n_known
-        FROM tot LEFT JOIN kn ON kn.doc_id = tot.doc_id
-    """,
-    plan="tiny profile BROADCAST into the gram join",
-    must=["BroadcastHashJoin", "HashAggregate"],
-    must_not=["CartesianProduct", "ArrowEvalPython", "BatchEvalPython"],
-)
-def q_familiarity(spark, sf_dir):
-    """Trigram-familiarity perplexity proxy (ops/text.trigram_familiarity):
-    per doc, how many of its distinct trigrams its own language profile
-    knows — integer counts, the profile CTE shared verbatim with the
-    q_lang_id oracle."""
-    from html_parser_spark.ops.text import (
-        train_lang_profiles,
-        trigram_familiarity,
-    )
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text", "lang")
-    prof = train_lang_profiles(docs, top_n=50)
-    return trigram_familiarity(docs, prof).select(
-        "doc_id", "lang",
-        F.col("n_grams").cast("long").alias("n_grams"),
-        F.col("n_known").cast("long").alias("n_known"),
-    )
-
-
-@contract(
-    oracle="""
         -- closed-form expected blocks: block 0 is the valid object
         -- with the cycling @type, block 1 (odd docs) is the malformed
         -- '{broken' whose parsed fields are NULL
@@ -3100,65 +2341,6 @@ def q_jsonld(spark, sf_dir):
         "doc_id",
         F.col("block_idx").cast("int").alias("block_idx"),
         "raw_json", "schema_type", "schema_context",
-    )
-
-
-@contract(
-    oracle="""
-        -- closed-form expected feed entries: two RSS items for even
-        -- doc_ids (second lacks pubDate -> NULL), one Atom entry for
-        -- odd; channel/feed titles never leak
-        SELECT doc_id, 'f' || doc_id || '.example' AS host,
-               'rss' AS kind, 'Item ' || doc_id || ' a' AS title,
-               'https://f' || doc_id || '.example/1' AS link,
-               'D' || doc_id AS published
-        FROM documents WHERE doc_id % 2 = 0
-        UNION ALL
-        SELECT doc_id, 'f' || doc_id || '.example', 'rss',
-               'Item ' || doc_id || ' b',
-               'https://f' || doc_id || '.example/2', NULL
-        FROM documents WHERE doc_id % 2 = 0
-        UNION ALL
-        SELECT doc_id, 'f' || doc_id || '.example', 'atom',
-               'Entry ' || doc_id,
-               'https://f' || doc_id || '.example/e', 'P' || doc_id
-        FROM documents WHERE doc_id % 2 = 1
-    """,
-    plan="RSS/Atom block-cut + field extraction, zero Python/shuffle",
-    must=["Generate"],
-    must_not=["Exchange", "ArrowEvalPython", "BatchEvalPython", "Join"],
-)
-def q_feed(spark, sf_dir):
-    """RSS/Atom feed parsing (ops/web.feed_entries): even doc_ids publish a
-    two-item RSS feed (second item missing pubDate), odd ones a one-entry
-    Atom feed (href-attribute link).  Closed-form EXPECTED rows in the
-    oracle — checks block cutting, field extraction, both link styles, and
-    NULL for absent fields."""
-    from html_parser_spark.ops.web import feed_entries
-
-    docs = _docs(spark, sf_dir)
-    did = F.col("doc_id").cast("string")
-    rss = F.concat(
-        F.lit("<rss><channel><title>chan</title><item><title>Item "), did,
-        F.lit(" a</title><link>https://f"), did,
-        F.lit(".example/1</link><pubDate>D"), did,
-        F.lit("</pubDate></item>\n<item><title>Item "), did,
-        F.lit(" b</title><link>https://f"), did,
-        F.lit(".example/2</link></item></channel></rss>"),
-    )
-    atom = F.concat(
-        F.lit('<feed><title>t</title><entry><title>Entry '), did,
-        F.lit('</title><link rel="alternate" href="https://f'), did,
-        F.lit('.example/e"/><published>P'), did,
-        F.lit("</published></entry></feed>"),
-    )
-    feeds = docs.select(
-        "doc_id",
-        F.concat(F.lit("f"), did, F.lit(".example")).alias("host"),
-        F.when(F.col("doc_id") % 2 == 0, rss).otherwise(atom).alias("body"),
-    )
-    return feed_entries(feeds).select(
-        "doc_id", "host", "kind", "title", "link", "published"
     )
 
 
@@ -3520,52 +2702,6 @@ def q_gopher(spark, sf_dir):
         F.col("n_lines").cast("long").alias("n_lines"),
         *[F.col(c).cast("int").alias(c) for c in flag_cols],
     )
-
-
-@contract(
-    oracle="""
-        WITH t AS (
-          SELECT doc_id, lang,
-                 lower(regexp_replace(text, '\\s+', ' ', 'g')) AS tx
-          FROM documents
-        ),
-        g AS (
-          SELECT doc_id, lang,
-                 unnest(list_distinct(list_transform(
-                   range(1, greatest(len(tx) - 2, 0) + 1),
-                   i -> substr(tx, CAST(i AS INT), 3)))) AS gram
-          FROM t
-        ),
-        counts AS (SELECT lang, gram, count(*) AS c FROM g GROUP BY 1, 2),
-        prof AS (
-          SELECT lang, gram, 50 - rank + 1 AS weight FROM (
-            SELECT lang, gram,
-                   row_number() OVER (PARTITION BY lang
-                                      ORDER BY c DESC, gram) AS rank
-            FROM counts)
-          WHERE rank <= 50
-        ),
-        scored AS (
-          SELECT g.doc_id, p.lang,
-                 CAST(sum(p.weight) AS BIGINT) AS score
-          FROM g JOIN prof p ON g.gram = p.gram
-          GROUP BY 1, 2
-        )
-        SELECT doc_id, lang AS pred_lang, score FROM (
-          SELECT *, row_number() OVER (PARTITION BY doc_id
-                                       ORDER BY score DESC, lang) AS rn
-          FROM scored) WHERE rn = 1
-    """,
-)
-def q_lang_id(spark, sf_dir):
-    """n-gram language-ID (brief §extras): train per-language trigram
-    profiles on the corpus, classify every document by weighted-overlap
-    argmax.  Integer scores keep the comparison exact cross-engine."""
-    from html_parser_spark.ops.text import classify_language, train_lang_profiles
-
-    docs = _docs(spark, sf_dir)
-    profiles = train_lang_profiles(docs, top_n=50)
-    return classify_language(docs, profiles)
 
 
 @contract(
@@ -5224,204 +4360,6 @@ def q_hits(spark, sf_dir, checkpoint=True):
     )
 
 
-@contract(
-    oracle="""
-        -- closed-form replay of the synthesized hreflang triples: every
-        -- page of cluster g declares en/de/fr + x-default, so
-        -- cluster_id = min(href set ∪ {url}) = the /de/ variant
-        -- (alphabetically first), n_variants = 4, self_hreflang = the
-        -- page's own path language.  If the Spark side misparsed ANY
-        -- quoting/order/case variant or kept a decoy link, rows or
-        -- values diverge and the hash fails.
-        SELECT
-          'https://ex' || ((doc_id // 3) % 7) || '.com/de/'
-            || (doc_id // 3) AS cluster_id,
-          'https://ex' || ((doc_id // 3) % 7) || '.com/'
-            || CASE doc_id % 3 WHEN 0 THEN 'en' WHEN 1 THEN 'de'
-               ELSE 'fr' END
-            || '/' || (doc_id // 3) AS url,
-          CASE doc_id % 3 WHEN 0 THEN 'en' WHEN 1 THEN 'de'
-            ELSE 'fr' END AS self_hreflang,
-          CAST(4 AS BIGINT) AS n_variants
-        FROM documents
-    """,
-    plan=(
-        "link extraction is pure JVM regexp + narrow explode; clustering + "
-        "self-language fold into ONE partial-agg groupBy(url) over ONE links scan "
-        "(string-buffered min → SortAggregate, still partial before the exchange); the "
-        "per-cluster min key needs NO graph iteration and NO join"
-    ),
-    must=["Generate", "SortAggregate"],
-    must_not=["ArrowEvalPython", "BatchEvalPython", "CartesianProduct", "Window",
-              "Join"],
-)
-def q_hreflang(spark, sf_dir):
-    """hreflang translation-cluster extraction (ops/web.hreflang_links +
-    hreflang_clusters) over synthesized multilingual page triples: doc_id
-    div 3 forms a cluster of en/de/fr variants on one host, every member
-    declaring all three alternates + x-default (the Google/W3C consistency
-    contract that lets cluster_id = min(href set ∪ {url}) avoid graph
-    iteration).  Quoting/attribute-order/case torture per member: the en
-    page uses double quotes hreflang-first, the de page single quotes
-    href-first plus two decoy links (rel="alternate stylesheet", RSS
-    alternate — both lack hreflang and must drop), the fr page unquoted
-    values with uppercase FR (lowercased on output).  One row per page:
-    (cluster_id, url, self_hreflang, n_variants=4)."""
-    docs = _docs(spark, sf_dir)
-    from html_parser_spark.ops.web import hreflang_clusters, hreflang_links
-
-    g = F.expr("doc_id div 3").cast("string")
-    host = F.concat(F.lit("https://ex"), F.expr("(doc_id div 3) % 7""").cast("string"), F.lit(".com/"))
-
-    def u(lang):
-        return F.concat(host, F.lit(lang + "/"), g)
-
-    def tag_dq(lang):  # double quotes, hreflang first
-        return F.concat(
-            F.lit(f'<link rel="alternate" hreflang="{lang}" href="'),
-            u(lang), F.lit('">'),
-        )
-
-    def tag_sq(lang):  # single quotes, href first
-        return F.concat(
-            F.lit("<link href='"), u(lang),
-            F.lit(f"' hreflang='{lang}' rel='alternate'>"),
-        )
-
-    def tag_uq(lang, attr_val=None):  # unquoted values
-        return F.concat(
-            F.lit("<link rel=alternate hreflang="),
-            F.lit(attr_val or lang),
-            F.lit(" href="), u(lang), F.lit(">"),
-        )
-
-    xd_dq = F.concat(
-        F.lit('<link rel="alternate" hreflang="x-default" href="'),
-        u("en"), F.lit('">'),
-    )
-    decoys = F.lit(
-        '<link rel="alternate stylesheet" href="/s.css">'
-        '<link rel="alternate" type="application/rss+xml" href="/feed">'
-        '<link rel="stylesheet" href="/m.css">'
-    )
-    m = F.col("doc_id") % 3
-    head = (
-        F.when(m == 0, F.concat(tag_dq("en"), tag_dq("de"), tag_dq("fr"), xd_dq))
-        .when(m == 1, F.concat(decoys, tag_sq("en"), tag_sq("de"), tag_sq("fr"), xd_dq))
-        .otherwise(F.concat(tag_uq("en"), tag_uq("de"), tag_uq("fr", "FR"), xd_dq))
-    )
-    lang = (
-        F.when(m == 0, F.lit("en")).when(m == 1, F.lit("de")).otherwise(F.lit("fr"))
-    )
-    pages = docs.select(
-        F.concat(host, lang, F.lit("/"), g).alias("url"),
-        F.encode(
-            F.concat(F.lit("<html><head>"), head, F.lit("</head><body>b</body></html>")),
-            "UTF-8",
-        ).alias("html"),
-    )
-    return hreflang_clusters(hreflang_links(pages)).select(
-        "cluster_id", "url", "self_hreflang",
-        F.col("n_variants").cast("long").alias("n_variants"),
-    )
-
-
-@contract(
-    oracle="""
-        -- replay the incremental gate over the same portable md5-min
-        -- MinHash family (_MINHASH_CTE): index = bands of doc_id < 300,
-        -- batch = doc_id >= 300; min existing id on cross matches, then
-        -- min-unmatched-id-per-bucket inside the batch.
-        WITH toks AS (
-          SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
-          FROM documents
-        ), sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(t) >= 3 THEN
-                   list_transform(range(1, len(t) - 1),
-                                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-                 ELSE [] END AS shingles
-          FROM toks
-        ), sig AS (
-          SELECT doc_id,
-                 list_min(list_transform(shingles, s -> md5('0|' || s))) AS s0,
-                 list_min(list_transform(shingles, s -> md5('1|' || s))) AS s1,
-                 list_min(list_transform(shingles, s -> md5('2|' || s))) AS s2,
-                 list_min(list_transform(shingles, s -> md5('3|' || s))) AS s3
-          FROM sh
-        ), bands AS (
-          SELECT doc_id, 0 AS band_id, s0 || '|' || s1 AS band_key FROM sig
-          UNION ALL
-          SELECT doc_id, 1, s2 || '|' || s3 FROM sig
-        ), ex AS (
-          SELECT doc_id AS ex_id, band_id, band_key FROM bands
-          WHERE doc_id < 300
-        ), nb AS (
-          SELECT * FROM bands WHERE doc_id >= 300
-        ), exm AS (
-          SELECT n.doc_id, MIN(e.ex_id) AS ex_dup_of
-          FROM nb n JOIN ex e USING (band_id, band_key)
-          GROUP BY n.doc_id
-        ), un AS (
-          SELECT * FROM nb
-          WHERE doc_id NOT IN (SELECT doc_id FROM exm)
-        ), bmin AS (
-          SELECT band_id, band_key, MIN(doc_id) AS bucket_min
-          FROM un GROUP BY 1, 2
-        ), bd AS (
-          SELECT u.doc_id, MIN(b.bucket_min) AS batch_dup_of
-          FROM un u JOIN bmin b USING (band_id, band_key)
-          GROUP BY u.doc_id
-        )
-        SELECT d.doc_id,
-               CAST(exm.ex_dup_of IS NULL
-                    AND (bd.batch_dup_of IS NULL
-                         OR bd.batch_dup_of = d.doc_id) AS INTEGER)
-                 AS keep,
-               CAST(exm.ex_dup_of IS NOT NULL AS INTEGER)
-                 AS matched_existing,
-               CAST(COALESCE(exm.ex_dup_of,
-                    CASE WHEN bd.batch_dup_of <> d.doc_id
-                         THEN bd.batch_dup_of END, -1) AS BIGINT) AS dup_of
-        FROM (SELECT doc_id FROM documents WHERE doc_id >= 300) d
-        LEFT JOIN exm ON exm.doc_id = d.doc_id
-        LEFT JOIN bd ON bd.doc_id = d.doc_id
-    """,
-    plan=(
-        "batch bands equi-join the persisted index on uniform (band_id, band_key); min "
-        "elections are partial-agg groupBys; no window, no cartesian, zero Python"
-    ),
-    must=["Generate", "HashAggregate"],
-    must_not=["CartesianProduct", "Window", "ArrowEvalPython", "BatchEvalPython"],
-)
-def q_incremental_dedup(spark, sf_dir):
-    """Incremental near-dup gate (ops/dedup.incremental_lsh_dedup): docs
-    with doc_id < 300 are the already-deduped corpus, represented ONLY by
-    their persisted band_index rows; docs ≥ 300 are the new crawl batch.
-    The batch's bands equi-join the index on (band_id, band_key) — cost
-    O(new batch), corpus never re-read — then the deterministic elections:
-    min existing id for cross-corpus matches, min-unmatched-id-per-bucket
-    within the batch.  num_hashes=4 / bands=2 matches the _MINHASH_CTE
-    family so the oracle reuses the established portable md5-min
-    signatures.  keep/matched_existing cast to int for the driver's
-    scalar canonicalizer."""
-    from html_parser_spark.ops.dedup import band_index, incremental_lsh_dedup
-
-    docs = _docs(spark, sf_dir)
-    existing = docs.filter(F.col("doc_id") < 300)
-    batch = docs.filter(F.col("doc_id") >= 300)
-    idx = band_index(existing, num_hashes=4, bands=2)
-    out = incremental_lsh_dedup(batch, idx, num_hashes=4, bands=2)
-    return out.select(
-        "doc_id",
-        F.col("keep").cast("int").alias("keep"),
-        F.col("matched_existing").cast("int").alias("matched_existing"),
-        # -1 sentinel for "no duplicate": a NULL BIGINT would ride DuckDB's
-        # pandas path as float NaN and false-fail the strict hash
-        F.coalesce(F.col("dup_of"), F.lit(-1)).cast("long").alias("dup_of"),
-    )
-
-
 # Shared CTE chain for the stupid-backoff trigram LM oracles: rebuild the
 # order-1/2/3 count tables over the same whitespace tokens, score every
 # token with the IDENTICAL scaled-BIGINT `//` expressions (backoff 0.4 as
@@ -5590,61 +4528,6 @@ def q_lm_buckets(spark, sf_dir):
     model = train_stupid_backoff(docs, n=3)
     scored = score_stupid_backoff(docs, model, n=3)
     return perplexity_buckets(scored, d.select("doc_id", "lang"), buckets=3)
-
-
-@contract(
-    oracle="""
-        -- unigram + adjacent-pair counts over the same tokens, then
-        -- the identical scaled integer division; min_count prune
-        WITH toks AS (
-          SELECT doc_id,
-                 list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                             x -> x <> '') AS t
-          FROM documents
-        ), n AS (
-          SELECT CAST(coalesce(sum(len(t)), 0) AS BIGINT) AS n_tokens
-          FROM toks
-        ), uni AS (
-          SELECT w, CAST(count(*) AS BIGINT) AS c
-          FROM (SELECT unnest(t) AS w FROM toks) GROUP BY w
-        ), pr AS (
-          SELECT p.w1, p.w2, CAST(count(*) AS BIGINT) AS c_xy
-          FROM (
-            SELECT unnest(list_transform(range(1, len(t)),
-                     i -> {'w1': t[i], 'w2': t[i + 1]}),
-                   recursive := true)
-            FROM toks WHERE len(t) >= 2
-          ) AS p
-          GROUP BY p.w1, p.w2
-          HAVING count(*) >= 5
-        )
-        SELECT pr.w1, pr.w2, pr.c_xy,
-               ux.c AS c_x, uy.c AS c_y,
-               (pr.c_xy * n_tokens * 10000) // (ux.c * uy.c)
-                 AS pmi_scaled
-        FROM pr
-        JOIN uni ux ON ux.w = pr.w1
-        JOIN uni uy ON uy.w = pr.w2
-        CROSS JOIN n
-        ORDER BY pmi_scaled DESC, pr.w1 ASC, pr.w2 ASC LIMIT 50
-    """,
-    plan=(
-        "pair counts min-count-pruned BEFORE the unigram joins; TakeOrderedAndProject "
-        "top-k; zero Python, no window"
-    ),
-    must=["TakeOrderedAndProject", "HashAggregate"],
-    must_not=["CartesianProduct", "Window", "ArrowEvalPython", "BatchEvalPython"],
-)
-def q_pmi(spark, sf_dir):
-    """Top-50 PMI collocations (ops/text.pmi_bigrams): adjacent-pair
-    association ranked by the unlogged scaled ratio
-    c_xy*N*scale div (c_x*c_y) — monotone in PMI, integer-exact.  One
-    explode per direction, partial-agg groupBys, min-count prune BEFORE
-    the unigram joins, TakeOrderedAndProject."""
-    from html_parser_spark.ops.text import pmi_bigrams
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    return pmi_bigrams(docs, min_count=5, k=50)
 
 
 def _lpa_oracle_sql(iterations: int = 3) -> str:
@@ -5830,81 +4713,6 @@ def q_hll_distinct(spark, sf_dir):
     even = hll_registers(d.where(F.col("doc_id") % 2 == 0), "doc_id", ("lang",), m=64)
     odd = hll_registers(d.where(F.col("doc_id") % 2 == 1), "doc_id", ("lang",), m=64)
     return hll_estimate(hll_merge(even, odd, ("lang",)), ("lang",), m=64)
-
-
-@contract(
-    oracle="""
-        -- identical 4x1024 count-min cells (md5 cell addressing),
-        -- min-over-rows point estimates for the probe tokens of
-        -- docs 0-9, joined to the exact counts so the
-        -- never-underestimate guarantee sits in the hashed values
-        WITH toks AS (
-          SELECT doc_id,
-                 unnest(list_filter(
-                   regexp_split_to_array(lower(text), '\\s+'),
-                   x -> len(x) > 0)) AS tok
-          FROM documents
-        ), cells AS (
-          SELECT j AS row,
-                 CAST('0x' || substring(
-                   md5('cms:' || CAST(j AS VARCHAR) || ':' || tok), 1, 8)
-                   AS BIGINT) % 1024 AS col,
-                 CAST(count(*) AS BIGINT) AS cnt
-          FROM toks CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS j)
-          GROUP BY 1, 2
-        ), probes AS (
-          SELECT DISTINCT tok AS item FROM toks WHERE doc_id < 10
-        ), addr AS (
-          SELECT item, j AS row,
-                 CAST('0x' || substring(
-                   md5('cms:' || CAST(j AS VARCHAR) || ':' || item), 1, 8)
-                   AS BIGINT) % 1024 AS col
-          FROM probes CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS j)
-        ), est AS (
-          SELECT item, CAST(min(coalesce(c.cnt, 0)) AS BIGINT) AS est
-          FROM addr a LEFT JOIN cells c USING (row, col)
-          GROUP BY item
-        ), truth AS (
-          SELECT tok, CAST(count(*) AS BIGINT) AS exact_cnt
-          FROM toks GROUP BY tok
-        )
-        SELECT e.item, e.est, t.exact_cnt
-        FROM est e JOIN truth t ON e.item = t.tok
-    """,
-    plan=(
-        "count-min build is ONE partial-agg groupBy over ≤ depth·width cells; the "
-        "probe lookup joins the tiny sketch broadcast; zero Python, no cartesian "
-        "product"
-    ),
-    must=["HashAggregate", "BroadcastHashJoin"],
-    must_not=["ArrowEvalPython", "BatchEvalPython", "CartesianProduct"],
-)
-def q_heavy_hitters(spark, sf_dir):
-    """Count-min frequency sketch (ops/sketch.count_min_*, Cormode &
-    Muthukrishnan 2005): the full token frequency table compressed into
-    4×1024 BIGINT cells (ONE partial-agg groupBy whose exchange is
-    bounded by the sketch size), then point-estimated for the probe set
-    (distinct tokens of docs 0-9) with the broadcast sketch.  Returns
-    (item, est, exact_cnt) so the never-underestimate guarantee is in
-    the checked values; the oracle replays the identical md5 cell
-    addressing and min-over-rows."""
-    from html_parser_spark.ops.sketch import count_min_build, count_min_query
-
-    toks = (
-        _docs(spark, sf_dir)
-        .select(
-            "doc_id",
-            F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok"),
-        )
-        .filter(F.length("tok") > 0)
-    )
-    sk = count_min_build(toks, "tok", depth=4, width=1024)
-    probes = toks.where(F.col("doc_id") < 10).select("tok").distinct()
-    est = count_min_query(sk, probes, "tok", depth=4, width=1024)
-    truth = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("exact_cnt"))
-    return est.join(truth, est["item"] == truth["tok"]).select(
-        "item", "est", "exact_cnt"
-    )
 
 
 @contract(
@@ -6231,88 +5039,6 @@ def q_shard_manifest(spark, sf_dir):
 
 @contract(
     oracle="""
-        -- identical content-keyed perturbation (md5-prefix token drop
-        -- + noise token), multiset-min overlap, and ppm divisions
-        WITH p AS (
-          SELECT doc_id,
-                 array_to_string(list_filter(list_filter(
-                   regexp_split_to_array(lower(text), '\\s+'),
-                   x -> len(x) > 0),
-                   x -> substring(md5(x), 1, 1) <> '0'), ' ')
-                 || (CASE WHEN doc_id % 3 = 0
-                          THEN ' zzz-noise' ELSE '' END) AS got_text,
-                 text AS ref_text
-          FROM documents
-        ), gt AS (
-          SELECT doc_id, tok, count(*) AS c_got FROM (
-            SELECT doc_id, unnest(list_filter(
-              regexp_split_to_array(lower(got_text), '\\s+'),
-              x -> len(x) > 0)) AS tok FROM p)
-          GROUP BY doc_id, tok
-        ), rt AS (
-          SELECT doc_id, tok, count(*) AS c_ref FROM (
-            SELECT doc_id, unnest(list_filter(
-              regexp_split_to_array(lower(ref_text), '\\s+'),
-              x -> len(x) > 0)) AS tok FROM p)
-          GROUP BY doc_id, tok
-        ), j AS (
-          SELECT coalesce(gt.doc_id, rt.doc_id) AS doc_id,
-                 coalesce(gt.c_got, 0) AS c_got,
-                 coalesce(rt.c_ref, 0) AS c_ref
-          FROM gt FULL OUTER JOIN rt
-            ON gt.doc_id = rt.doc_id AND gt.tok = rt.tok
-        ), f AS (
-          SELECT doc_id, sum(c_got) AS n_got, sum(c_ref) AS n_ref,
-                 sum(least(c_got, c_ref)) AS overlap
-          FROM j GROUP BY doc_id
-        )
-        SELECT d.doc_id,
-               CAST(coalesce(f.n_got, 0) AS BIGINT) AS n_got,
-               CAST(coalesce(f.n_ref, 0) AS BIGINT) AS n_ref,
-               CAST(coalesce(f.overlap, 0) AS BIGINT) AS overlap,
-               CAST(coalesce((f.overlap * 1000000)
-                 // nullif(f.n_got, 0), 0) AS BIGINT) AS precision_ppm,
-               CAST(coalesce((f.overlap * 1000000)
-                 // nullif(f.n_ref, 0), 0) AS BIGINT) AS recall_ppm,
-               CAST(coalesce((2 * f.overlap * 1000000)
-                 // nullif(f.n_got + f.n_ref, 0), 0) AS BIGINT)
-                 AS f1_ppm
-        FROM (SELECT DISTINCT doc_id FROM documents) d
-        LEFT JOIN f ON d.doc_id = f.doc_id
-    """,
-    plan=(
-        "extraction-QA P/R/F1: two explode→partial-agg groupBy(doc, tok) counts, ONE "
-        "(doc, tok) equi-join (both sides pre-aggregated), ONE groupBy(doc) fold; "
-        "every shuffle keyed by doc_id(+tok) so skew is bounded by the longest "
-        "document; zero Python, no window, no cartesian product"
-    ),
-    must=["HashAggregate"],
-    must_not=["ArrowEvalPython", "BatchEvalPython", "Window", "CartesianProduct"],
-)
-def q_token_prf(spark, sf_dir):
-    """Extraction-QA metric (ops/text.token_prf): per-doc token-multiset
-    precision/recall/F1 (exact multiset-Dice, ppm IntegralDivide)
-    between a deterministically perturbed extraction and the reference
-    text — drops tokens whose md5 starts with '0' (content-keyed, no
-    positional lambda so both engines replay it) and appends a noise
-    token for doc_id%3==0.  Two explode→partial-agg groupBys, ONE
-    (doc, tok) equi-join, ONE groupBy(doc) fold; no window, no Python."""
-    from html_parser_spark.ops.text import token_prf
-
-    pairs = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.expr(
-            r"concat(array_join(filter(filter(split(lower(text), '\\s+'),"
-            r" x -> length(x) > 0), x -> substring(md5(x), 1, 1) != '0'),"
-            r" ' '), CASE WHEN doc_id % 3 = 0 THEN ' zzz-noise' ELSE '' END)"
-        ).alias("got_text"),
-        F.col("text").alias("ref_text"),
-    )
-    return token_prf(pairs)
-
-
-@contract(
-    oracle="""
         -- identical tokenization, histogram cumulative, and the
         -- cross-multiplied covering test (no division anywhere)
         WITH d AS (
@@ -6378,80 +5104,6 @@ def q_exact_quantiles(spark, sf_dir):
     return exact_quantiles(
         docs, "n_tokens", (250_000, 500_000, 900_000, 990_000),
         group_col="lang",
-    )
-
-
-@contract(
-    oracle="""
-        -- identical shingle postings, df≤5 stop-shingle cap, common≥2
-        -- candidate pairs, then exact intersect sizes in integer basis
-        -- points (floor division, no floats anywhere)
-        WITH toks AS (
-          SELECT doc_id,
-                 regexp_split_to_array(trim(text), '\\s+') AS t
-          FROM documents
-        ), sh AS (
-          SELECT doc_id,
-                 list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                                for i in range(1, len(t) - 1)]) AS s
-          FROM toks
-        ), ex AS (
-          SELECT doc_id, unnest(s) AS g FROM sh
-        ), rare AS (
-          SELECT g FROM ex GROUP BY g HAVING COUNT(*) <= 5
-        ), exf AS (
-          SELECT e.doc_id, e.g FROM ex e JOIN rare USING (g)
-        ), cand AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM exf a JOIN exf b
-            ON a.g = b.g AND a.doc_id < b.doc_id
-          GROUP BY 1, 2 HAVING COUNT(*) >= 2
-        ), ver AS (
-          SELECT c.doc_a, c.doc_b,
-                 CAST(len(list_intersect(sa.s, sb.s)) AS BIGINT) AS common,
-                 CAST(len(sa.s) AS BIGINT) AS na,
-                 CAST(len(sb.s) AS BIGINT) AS nb
-          FROM cand c
-          JOIN sh sa ON sa.doc_id = c.doc_a
-          JOIN sh sb ON sb.doc_id = c.doc_b
-        )
-        SELECT doc_a, doc_b, common,
-               CAST(CASE WHEN na > 0 THEN (common * 10000) // na
-                    ELSE 0 END AS BIGINT) AS cont_a_in_b_bp,
-               CAST(CASE WHEN nb > 0 THEN (common * 10000) // nb
-                    ELSE 0 END AS BIGINT) AS cont_b_in_a_bp
-        FROM ver
-        WHERE GREATEST(
-                CASE WHEN na > 0 THEN (common * 10000) // na ELSE 0 END,
-                CASE WHEN nb > 0 THEN (common * 10000) // nb ELSE 0 END
-              ) >= 300
-    """,
-    plan=(
-        "containment dedup: inverted-shingle postings with the df-cap semi-join "
-        "pruning stop-shingles BEFORE the posting self-join (per-shingle fan-out ≤ "
-        "max_df²), candidate groupBy with map-side partials, then two equi-joins for "
-        "exact verification — no cartesian product, zero Python, no window"
-    ),
-    must=["HashAggregate"],
-    must_not=["CartesianProduct", "ArrowEvalPython", "BatchEvalPython", "Window"],
-)
-def q_containment(spark, sf_dir):
-    """Shingle CONTAINMENT dedup (ops/dedup.containment_candidates +
-    containment_pairs) — the asymmetric complement of Jaccard resemblance
-    (Broder 1997): quote / wrapped-page / sub-document detection.  The
-    FULL scale path is oracle-checked end-to-end: inverted-shingle
-    postings, stop-shingle df cap (≤5), common≥2 candidate pairs, then
-    exact two-equi-join verification in integer basis points (no float
-    division anywhere — bit-exact across engines)."""
-    from html_parser_spark.ops.dedup import (
-        containment_candidates,
-        containment_pairs,
-    )
-
-    docs = _docs(spark, sf_dir)
-    cands = containment_candidates(docs, shingle_k=3, max_df=5, min_common=2)
-    return containment_pairs(
-        docs, shingle_k=3, min_containment_bp=300, candidates=cands
     )
 
 
@@ -6540,144 +5192,6 @@ def q_trustrank(spark, sf_dir, checkpoint=True):
     return trustrank_fixed_point(
         edges, seeds, iterations=3, checkpoint=checkpoint
     ).select("node", F.col("rank").cast("long").alias("rank"))
-
-
-@contract(
-    oracle="""
-        -- identical page synthesis, then DuckDB's own regexp+md5
-        -- recompute the structural signature: a hash match proves the
-        -- tag tokenization and signature agree across engines
-        WITH pages AS (
-          SELECT 'http://t' || (doc_id % 4) || '.example.com/p' || doc_id
-                   AS url,
-                 '<html><head><title>' || substring(text, 1, 30)
-                 || '</title>'
-                 || CASE WHEN doc_id % 2 = 0
-                         THEN '<meta property="og:title" content="x">'
-                         ELSE '' END
-                 || '</head><body><p>' || substring(text, 1, 60)
-                 || '</p>'
-                 || CASE WHEN doc_id % 5 = 0
-                         THEN '<b>promo</b>' ELSE '' END
-                 || '</body></html>' AS html
-          FROM documents
-        ), tagged AS (
-          SELECT url,
-                 regexp_extract(url, '^http://([^/]+)', 1) AS host,
-                 regexp_extract_all(lower(html),
-                                    '<([a-z][a-z0-9]*)', 1) AS tags
-          FROM pages
-        )
-        SELECT host,
-               md5(array_to_string(tags, ',')) AS template_sig,
-               CAST(COUNT(*) AS BIGINT) AS n_pages,
-               CAST(MIN(len(tags)) AS BIGINT) AS n_tags,
-               MIN(url) AS example_url
-        FROM tagged
-        GROUP BY host, template_sig
-        HAVING COUNT(*) >= 2
-    """,
-    plan=(
-        "template clustering: the md5 structural signature is a pure-codegen "
-        "projection (shuffle key is 32 bytes regardless of page size), then ONE "
-        "groupBy(host, sig) with map-side partial aggregation (SortAggregate here: "
-        "min(string) has no mutable hash buffer — the partial_* before the exchange is "
-        "the property that matters); zero Python, no join, no window"
-    ),
-    must=["partial_count(1)", "Exchange hashpartitioning(host", "*("],
-    must_not=["ArrowEvalPython", "BatchEvalPython", "Join", "Window",
-              "CartesianProduct"],
-)
-def q_dom_templates(spark, sf_dir):
-    """Template clustering (ops/web.template_clusters): md5 over the
-    ordered opening-tag sequence groups pages by CMS template regardless
-    of text content — the extraction-QA / drift-monitoring view of a
-    crawl.  Pages are synthesized with two independent structural bits
-    (og:title meta on even doc_ids, a <b> promo on doc_id%5==0) so each
-    host carries 4 template clusters; the oracle rebuilds the identical
-    html and recomputes the signature with DuckDB's own regexp+md5 — a
-    hash match is a cross-engine tag-tokenization equality proof."""
-    from html_parser_spark.ops.web import template_clusters
-
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-    did = d.cast("string")
-    url = F.concat(
-        F.lit("http://t"), (d % 4).cast("string"), F.lit(".example.com/p"), did
-    )
-    html = F.concat(
-        F.lit("<html><head><title>"),
-        F.substring("text", 1, 30),
-        F.lit("</title>"),
-        F.when(
-            d % 2 == 0, F.lit('<meta property="og:title" content="x">')
-        ).otherwise(F.lit("")),
-        F.lit("</head><body><p>"),
-        F.substring("text", 1, 60),
-        F.lit("</p>"),
-        F.when(d % 5 == 0, F.lit("<b>promo</b>")).otherwise(F.lit("")),
-        F.lit("</body></html>"),
-    )
-    pages = docs.select(url.alias("url"), html.alias("html"))
-    return template_clusters(pages, min_pages=2)
-
-
-@contract(
-    oracle="""
-        -- identical url synthesis; the same two collapse regexes
-        -- (plain character classes — Java regex ≡ RE2) applied with
-        -- the global flag
-        WITH urls AS (
-          SELECT 'u' || (doc_id % 4) || '.example.com' AS host,
-                 CASE WHEN doc_id % 3 = 0
-                      THEN '/h/' || md5(CAST(doc_id AS VARCHAR))
-                      ELSE '/a/' || (doc_id % 5) || '/p' || doc_id
-                 END AS path
-          FROM documents
-        ), t AS (
-          SELECT host,
-                 regexp_replace(
-                   regexp_replace(path, '[0-9a-f]{16,}', '{hex}', 'g'),
-                   '[0-9]+', '{n}', 'g') AS path_template,
-                 'https://' || host || path AS url
-          FROM urls
-        )
-        SELECT host, path_template,
-               CAST(COUNT(*) AS BIGINT) AS n_urls,
-               MIN(url) AS example_url
-        FROM t
-        GROUP BY host, path_template
-        HAVING COUNT(*) >= 2
-    """,
-    plan=(
-        "URL template mining: pure-codegen collapse regexes + ONE groupBy(host, "
-        "template) with map-side partial aggregation (SortAggregate: min(string) "
-        "buffer, partial_* before the exchange); zero Python, no join, no window"
-    ),
-    must=["partial_count(1)", "Exchange hashpartitioning(host", "*("],
-    must_not=["ArrowEvalPython", "BatchEvalPython", "Join", "Window",
-              "CartesianProduct"],
-)
-def q_url_templates(spark, sf_dir):
-    """URL path-template mining (ops/web.url_templates): hex runs ≥16
-    chars collapse to {hex} (content hashes), digit runs to {n} — the
-    crawler-trap / crawl-budget view of the frontier.  Urls are pure
-    functions of doc_id (a /h/<md5> branch on doc_id%3==0, an
-    /a/<n>/p<n> branch otherwise) so the oracle states the same urls and
-    applies the same two collapse regexes (both plain character classes —
-    identical under Java regex and RE2)."""
-    from html_parser_spark.ops.web import url_templates
-
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-    did = d.cast("string")
-    path = F.when(d % 3 == 0, F.concat(F.lit("/h/"), F.md5(did))).otherwise(
-        F.concat(F.lit("/a/"), (d % 5).cast("string"), F.lit("/p"), did)
-    )
-    url = F.concat(
-        F.lit("https://u"), (d % 4).cast("string"), F.lit(".example.com"), path
-    )
-    return url_templates(docs.select(url.alias("url")), min_urls=2)
 
 
 def _seed_distance_oracle_sql(max_hops: int = 3) -> str:
@@ -7052,58 +5566,6 @@ def q_bpe_roundtrip(spark, sf_dir):
 
 @contract(
     oracle=r"""
-        WITH e0 AS (
-          SELECT doc_id % 40 AS s, (doc_id * 7 + 3) % 40 AS t FROM documents
-          UNION ALL
-          SELECT doc_id % 40, (doc_id * 13 + 11) % 45 FROM documents
-        ), edges AS (
-          SELECT DISTINCT 'h' || s AS src, 'h' || t AS dst FROM e0 WHERE s <> t
-        ), deg AS (
-          SELECT src, COUNT(*) AS d FROM edges GROUP BY src
-        ), posts AS (
-          SELECT e.src, e.dst FROM edges e JOIN deg USING (src) WHERE deg.d <= 8
-        ), indeg AS (
-          SELECT dst, CAST(COUNT(*) AS BIGINT) AS deg FROM posts GROUP BY dst
-        ), pairs AS (
-          SELECT a.dst AS host_a, b.dst AS host_b,
-                 CAST(COUNT(*) AS BIGINT) AS common
-          FROM posts a JOIN posts b ON a.src = b.src AND a.dst < b.dst
-          GROUP BY 1, 2 HAVING COUNT(*) >= 2
-        )
-        SELECT p.host_a, p.host_b, p.common,
-               CAST((p.common * 10000) // (ia.deg + ib.deg - p.common) AS BIGINT)
-                 AS jaccard_bp
-        FROM pairs p
-        JOIN indeg ia ON ia.dst = p.host_a
-        JOIN indeg ib ON ib.dst = p.host_b
-    """,
-    plan=(
-        "related-hosts mining: distinct postings, out-degree df-cap semi-join pruning "
-        "directory hosts BEFORE the posting self-join (fan-out <= cap^2 per citer), "
-        "pair groupBy with map-side partials, two bounded degree joins; zero Python, "
-        "no window, no cartesian product"
-    ),
-    must=["HashAggregate", "Join"],
-    must_not=["CartesianProduct", "ArrowEvalPython", "BatchEvalPython", "Window"],
-)
-def q_cocitation(spark, sf_dir):
-    """Co-citation related hosts (ops/linkgraph.cocitation_pairs) over the
-    shared synthetic graph: hosts are related when the same third hosts
-    link to both (Dean & Henzinger 1999).  max_out_degree=8 actually
-    prunes the synthetic graph's widest citers (the stop-shingle df cap
-    of the graph), min_common=2; Jaccard over in-link sets in integer
-    basis points, in-degrees defined over the SAME capped postings.  The
-    oracle replays postings/cap/pair-join/degree-join verbatim —
-    hash-exact."""
-    docs = _docs(spark, sf_dir)
-    from html_parser_spark.ops.linkgraph import cocitation_pairs
-
-    edges = _synth_host_edges(docs)
-    return cocitation_pairs(edges, min_common=2, max_out_degree=8)
-
-
-@contract(
-    oracle=r"""
         WITH u AS (
           SELECT doc_id, text FROM documents
           UNION ALL
@@ -7217,132 +5679,6 @@ def q_dedup_prf(spark, sf_dir):
     predicted = hits.unionByName(dups).unionByName(fps).unionByName(selfp)
     return dedup_prf(predicted, labeled)
 
-
-@contract(
-    oracle=r"""
-        WITH g AS (
-          SELECT doc_id,
-                 regexp_split_to_array(trim(text), '\s+') AS toks,
-                 string_split(text, chr(10)) AS lines,
-                 CAST(length(regexp_replace(text, '\s+', '', 'g'))
-                      AS BIGINT) AS word_chars,
-                 CAST(length(text) - length(replace(text, '#', ''))
-                      AS BIGINT)
-                 + CAST(length(text) - length(replace(text, '…', ''))
-                      AS BIGINT)
-                 + CAST((length(text) - length(replace(text, '...', '')))
-                        // 3 AS BIGINT) AS symbols
-          FROM documents
-        ), m AS (
-          SELECT doc_id, word_chars, symbols,
-                 CAST(len(toks) AS BIGINT) AS n_words,
-                 CAST(len(lines) AS BIGINT) AS n_lines,
-                 CAST(len(list_filter(lines,
-                      x -> regexp_matches(ltrim(x), '^[•*-]')))
-                      AS BIGINT) AS bullet_lines,
-                 CAST(len(list_filter(lines,
-                      x -> regexp_matches(rtrim(x), '(\.\.\.|…)$')))
-                      AS BIGINT) AS ellipsis_lines,
-                 CAST(len(list_filter(toks,
-                      x -> regexp_matches(x, '[A-Za-z]')))
-                      AS BIGINT) AS alpha_words,
-                 len(list_filter(['the','be','to','of','and','that',
-                                  'have','with'],
-                      w -> list_contains(list_transform(toks,
-                           x -> lower(x)), w))) AS stop_hits
-          FROM g
-        ), f AS (
-          SELECT (n_words >= 30 AND n_words <= 100000) AS r0,
-                 (word_chars >= 3 * n_words AND word_chars <= 10 * n_words) AS r1,
-                 (10 * symbols <= n_words) AS r2,
-                 (10 * bullet_lines <= 9 * n_lines) AS r3,
-                 (10 * ellipsis_lines <= 3 * n_lines) AS r4,
-                 (5 * alpha_words >= 4 * n_words) AS r5,
-                 (stop_hits >= 2) AS r6
-          FROM m
-        ), t AS (
-          SELECT CAST(COUNT(*) AS BIGINT) AS total FROM f
-        ), k AS (
-          SELECT 'keep_word_count' AS rule,
-                 CAST(COUNT(*) FILTER (WHERE NOT r0) AS BIGINT)
-                   AS kills,
-                 CAST(COUNT(*) FILTER (WHERE NOT r0 AND r1 AND r2 AND r3 AND r4 AND r5 AND r6)
-                      AS BIGINT) AS unique_kills
-          FROM f
-          UNION ALL
-          SELECT 'keep_mean_len' AS rule,
-                 CAST(COUNT(*) FILTER (WHERE NOT r1) AS BIGINT)
-                   AS kills,
-                 CAST(COUNT(*) FILTER (WHERE NOT r1 AND r0 AND r2 AND r3 AND r4 AND r5 AND r6)
-                      AS BIGINT) AS unique_kills
-          FROM f
-          UNION ALL
-          SELECT 'keep_symbol_ratio' AS rule,
-                 CAST(COUNT(*) FILTER (WHERE NOT r2) AS BIGINT)
-                   AS kills,
-                 CAST(COUNT(*) FILTER (WHERE NOT r2 AND r0 AND r1 AND r3 AND r4 AND r5 AND r6)
-                      AS BIGINT) AS unique_kills
-          FROM f
-          UNION ALL
-          SELECT 'keep_bullets' AS rule,
-                 CAST(COUNT(*) FILTER (WHERE NOT r3) AS BIGINT)
-                   AS kills,
-                 CAST(COUNT(*) FILTER (WHERE NOT r3 AND r0 AND r1 AND r2 AND r4 AND r5 AND r6)
-                      AS BIGINT) AS unique_kills
-          FROM f
-          UNION ALL
-          SELECT 'keep_ellipsis_lines' AS rule,
-                 CAST(COUNT(*) FILTER (WHERE NOT r4) AS BIGINT)
-                   AS kills,
-                 CAST(COUNT(*) FILTER (WHERE NOT r4 AND r0 AND r1 AND r2 AND r3 AND r5 AND r6)
-                      AS BIGINT) AS unique_kills
-          FROM f
-          UNION ALL
-          SELECT 'keep_alpha' AS rule,
-                 CAST(COUNT(*) FILTER (WHERE NOT r5) AS BIGINT)
-                   AS kills,
-                 CAST(COUNT(*) FILTER (WHERE NOT r5 AND r0 AND r1 AND r2 AND r3 AND r4 AND r6)
-                      AS BIGINT) AS unique_kills
-          FROM f
-          UNION ALL
-          SELECT 'keep_stopwords' AS rule,
-                 CAST(COUNT(*) FILTER (WHERE NOT r6) AS BIGINT)
-                   AS kills,
-                 CAST(COUNT(*) FILTER (WHERE NOT r6 AND r0 AND r1 AND r2 AND r3 AND r4 AND r5)
-                      AS BIGINT) AS unique_kills
-          FROM f
-        )
-        SELECT rule, kills, unique_kills,
-               CAST(CASE WHEN total > 0
-                    THEN (kills * 1000000) // total ELSE 0 END
-                    AS BIGINT) AS kills_ppm,
-               CAST(CASE WHEN total > 0
-                    THEN (unique_kills * 1000000) // total ELSE 0 END
-                    AS BIGINT) AS unique_kills_ppm
-        FROM k, t
-    """,
-    plan=(
-        "per-rule funnel: all 15 counters in ONE aggregate with map-side partials "
-        "(partial_count/partial_sum before a 1-row-per-partition exchange), then the "
-        "|R|-row stack fan-out + ppm projection; zero Python, no join, no window, no "
-        "per-rule pass"
-    ),
-    must=["HashAggregate", "partial_count(1)", "Generate"],
-    must_not=["ArrowEvalPython", "BatchEvalPython", "Join", "Window",
-              "CartesianProduct"],
-)
-def q_gate_ablation(spark, sf_dir):
-    """Quality-gate ablation table (ops/gopher.gate_ablation) over the
-    Gopher battery: per rule, how many docs it kills and how many it
-    ALONE kills (its marginal value — the C4/Gopher/RefinedWeb release
-    table and the threshold-tuning signal).  All 15 counters accumulate
-    in ONE map-side aggregate; the oracle replays the full flag
-    arithmetic (the q_gopher CTEs) and the same FILTER aggregations per
-    rule — hash-exact integer ppm."""
-    from html_parser_spark.ops.gopher import gate_ablation, gopher_rules
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    return gate_ablation(gopher_rules(docs, min_words=30))
 
 def _boiler_docs(spark, sf_dir):
     """Shared synthesis for q_frequent_lines / q_strip_lines: every doc
@@ -7928,76 +6264,6 @@ def q_reordered_dedup(spark, sf_dir):
     )
     allv = docs.select("doc_id", "text").unionByName(twin).unionByName(mutant)
     return reordered_duplicates(allv)
-
-
-@contract(
-    oracle="""
-        -- closed-form expected verdicts aggregated per host:
-        -- low hosts (hn < 10) disallow kind 1 (/private, with the
-        -- /private/ok carve-out = kind 2 allowed); high hosts
-        -- disallow kind 0 (/public); root (kind 3) always allowed.
-        WITH d AS (
-          SELECT doc_id % 20 AS hn, doc_id % 4 AS kind FROM documents
-        ), agg AS (
-          SELECT 'h' || CAST(hn AS VARCHAR) || '.example' AS host,
-                 CAST(count(*) AS BIGINT) AS crawled_n,
-                 CAST(sum(CASE WHEN (hn < 10 AND kind = 1)
-                                 OR (hn >= 10 AND kind = 0)
-                          THEN 1 ELSE 0 END) AS BIGINT) AS disallowed_n
-          FROM d GROUP BY 1
-        )
-        SELECT host, crawled_n, disallowed_n,
-               CAST(disallowed_n * 1000000 // crawled_n AS BIGINT)
-                 AS disallowed_ppm
-        FROM agg
-    """,
-    plan=(
-        "compliance rollup: the robots_verdict host equi-join (rules are host-bounded, "
-        "never page-bounded — in this synthesis the rules side derives from docs so "
-        "the planner cannot prove it small and falls back to SMJ; a real robots corpus "
-        "broadcasts under AQE, same as q_robots) feeds ONE groupBy(host) with map-side "
-        "partials and an integral-divide ppm; zero Python, no cartesian product"
-    ),
-    must=["HashAggregate", "Join"],
-    must_not=["ArrowEvalPython", "BatchEvalPython", "CartesianProduct",
-              "BroadcastNestedLoopJoin"],
-)
-def q_robots_audit(spark, sf_dir):
-    """Per-host robots-compliance audit (ops/robots.compliance_audit) over
-    the q_robots policy synthesis (20 hosts, two policy families, decoy
-    badbot group, four path kinds).  The oracle aggregates the CLOSED-FORM
-    expected verdicts per host — hash match checks the whole robots
-    machinery AND the rollup arithmetic."""
-    from html_parser_spark.ops.robots import compliance_audit, parse_robots
-
-    docs = _docs(spark, sf_dir)
-    hostn = F.col("doc_id") % 20
-    host = F.concat(F.lit("h"), hostn.cast("string"), F.lit(".example"))
-    robots = (
-        docs.select(hostn.alias("hn")).distinct().select(
-            F.concat(F.lit("h"), F.col("hn").cast("string"),
-                     F.lit(".example")).alias("host"),
-            F.concat(
-                F.lit("# synthetic policy\nUser-agent: *\n"),
-                F.when(
-                    F.col("hn") < 10,
-                    F.lit("Disallow: /private\nAllow: /private/ok\n"),
-                ).otherwise(F.lit("Disallow: /public\n")),
-                F.lit("\nUser-agent: badbot\nDisallow: /\n"),
-            ).alias("body"),
-        )
-    )
-    kind = F.col("doc_id") % 4
-    path = (
-        F.when(kind == 0, F.concat(F.lit("/public/p"), F.col("doc_id").cast("string")))
-        .when(kind == 1, F.concat(F.lit("/private/p"), F.col("doc_id").cast("string")))
-        .when(kind == 2, F.concat(F.lit("/private/ok/p"), F.col("doc_id").cast("string")))
-        .otherwise(F.lit("/"))
-    )
-    pages = docs.select(
-        "doc_id", F.concat(F.lit("https://"), host, path).alias("url")
-    )
-    return compliance_audit(pages, parse_robots(robots))
 
 
 @contract(

@@ -1,9 +1,9 @@
 """Byte-pair-encoding tokenizer: corpus-scale training + encoding.
 
-The existing token counters (`ops/text.py`) measure whitespace/regex
-tokens; a training-data pipeline ultimately feeds a LEARNED subword
-tokenizer.  This module implements classic BPE (Sennrich et al. 2016) the
-way production tokenizer trainers actually scale:
+The corpus operators (`ops/text.py:tokens`) see whitespace tokens; a
+training-data pipeline ultimately feeds a LEARNED subword tokenizer.
+This module implements classic BPE (Sennrich et al. 2016) the way
+production tokenizer trainers actually scale:
 
 * :func:`word_freqs` — the ONLY corpus-scale pass: ONE partial-agg
   groupBy over lowercase whitespace words.  This is the architectural
@@ -190,54 +190,6 @@ def bpe_encode(
             yield pd.DataFrame(rows, columns=cols)
 
     return pruned.mapInPandas(batches, BPE_SCHEMA)
-
-
-def fertility_by_group(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    group_col: str = "lang",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Tokenizer-fit audit: per-group (typically per-language) BPE
-    fertility — subword pieces emitted per word.  The number multilingual
-    pipelines watch when a tokenizer trained on one mix meets another
-    (high fertility = the group pays more sequence length per word).
-
-    Composition: ONE :func:`bpe_encode` pass (mapInPandas, zero shuffle)
-    joined back to the group column, then ONE partial-agg groupBy.  The
-    ratio is a single division of two exact integer sums — deterministic
-    across partitionings and engines (no float accumulation).
-
-    Returns (``group_col``, n_docs, n_words, n_tokens, fertility) with
-    fertility rounded to 4dp; groups whose documents contain no words
-    report NULL fertility rather than a division error."""
-    from pyspark.sql import functions as _F
-
-    enc = bpe_encode(docs, merges, text_col=text_col, id_col=id_col)
-    dims = docs.select(
-        _F.col(id_col).cast("long").alias("doc_id"),
-        _F.col(group_col).alias("_grp"),
-    )
-    agg = (
-        enc.join(dims, "doc_id")
-        .groupBy("_grp")
-        .agg(
-            _F.count(_F.lit(1)).alias("n_docs"),
-            _F.sum("n_words").alias("n_words"),
-            _F.sum("n_tokens").alias("n_tokens"),
-        )
-    )
-    return agg.select(
-        _F.col("_grp").alias(group_col),
-        "n_docs",
-        "n_words",
-        "n_tokens",
-        _F.when(
-            _F.col("n_words") > 0,
-            _F.round(_F.col("n_tokens") / _F.col("n_words"), 4),
-        ).alias("fertility"),
-    )
 
 
 def bpe_decode(

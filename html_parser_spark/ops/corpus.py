@@ -1,13 +1,13 @@
 """Corpus-curation operators for training-data pipelines (brief §extras):
-deterministic split assignment, train/test contamination checking,
-Gopher-style repetition statistics, and dedup-survivor materialization.
+deterministic split assignment, Gopher-style repetition statistics, and
+dedup-survivor materialization.
 
 These are the steps BETWEEN extraction and training: once text is extracted
 (pipeline.py) and near-dups are identified (ops/dedup.py), a real pipeline
-must (a) assign every document to a split reproducibly, (b) prove the test
-split is not contaminated by train n-grams, (c) drop pathologically
-repetitive documents (Rae et al., "Scaling Language Models" / Gopher §A.1.1
-repetition filters), and (d) materialize the deduplicated corpus itself.
+must (a) assign every document to a split reproducibly, (b) drop
+pathologically repetitive documents (Rae et al., "Scaling Language Models" /
+Gopher §A.1.1 repetition filters), and (c) materialize the deduplicated
+corpus itself.
 
 Scale notes (100 TB):
 
@@ -15,11 +15,6 @@ Scale notes (100 TB):
   ``randomSplit``/``sampleBy`` the assignment is a function of the document
   id alone, so re-runs, repartitions, and different engines all agree —
   documents can never leak across splits between pipeline versions.
-* contamination — the train-side distinct shingle set is huge but uniform
-  (md5 keys); both the distinct and the semi-join are plain hash-partition
-  exchanges with map-side partial aggregation.  Shingles are hashed to md5
-  hex BEFORE the join so the shuffle moves 32-byte keys, not 8-word strings.
-  No O(n²) anywhere: cost is O(total shingles).
 * repetition — explode → (doc_id, token) groupBy: partial aggregation
   combines map-side, and doc_id is the natural partition key for every
   downstream agg, so AQE reuses one exchange.
@@ -124,64 +119,6 @@ def build_vocab(
     # the global window runs over at most k rows (post-limit) — bounded
     return top.select(
         "term", "term_count", "doc_count", F.row_number().over(w).alias("rank")
-    )
-
-
-def contamination_check(
-    docs: DataFrame,
-    text_col: str = "text",
-    shingle_k: int = 8,
-    train_hi: int = 205,
-    valid_hi: int = 230,
-) -> DataFrame:
-    """Per test-split document: how many of its distinct k-word shingles
-    also occur anywhere in the train split (n-gram decontamination audit,
-    the GPT-3 appendix-C / Gopher §A.2 check).
-
-    Returns (doc_id, n_shingles, contaminated, contaminated_frac) for every
-    test doc with at least one shingle.  Shingles are md5-hashed before the
-    semi-join so the shuffle key is short and uniform.
-    """
-    d = _with_shingles(assign_split(docs, train_hi=train_hi, valid_hi=valid_hi),
-                       text_col, shingle_k)
-    base = d.select(
-        "doc_id", "split", F.array_distinct("_shingles").alias("sh")
-    )
-    train_sh = (
-        base.where(F.col("split") == "train")
-        .select(F.explode("sh").alias("s"))
-        .select(F.md5(F.col("s")).alias("hsh"))
-        .distinct()
-    )
-    test_docs = (
-        base.where(F.col("split") == "test")
-        .select("doc_id", F.size("sh").cast("long").alias("n_shingles"))
-        .where(F.col("n_shingles") > 0)
-    )
-    test_sh = (
-        base.where(F.col("split") == "test")
-        .select("doc_id", F.explode("sh").alias("s"))
-        .select("doc_id", F.md5(F.col("s")).alias("hsh"))
-    )
-    hits = (
-        test_sh.join(train_sh, "hsh", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("contaminated"))
-    )
-    return (
-        test_docs.join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_shingles",
-            F.coalesce(F.col("contaminated"), F.lit(0).cast("long")).alias(
-                "contaminated"
-            ),
-            F.round(
-                F.coalesce(F.col("contaminated"), F.lit(0))
-                / F.col("n_shingles"),
-                4,
-            ).alias("contaminated_frac"),
-        )
     )
 
 
@@ -980,59 +917,6 @@ def materialize_sequences(
                 " ", F.transform(F.col("_pieces"), lambda s: s["_piece"])
             ).alias("seq_text"),
         )
-    )
-
-
-def ngram_novelty(
-    docs: DataFrame, shingle_k: int = 3, text_col: str = "text"
-) -> DataFrame:
-    """Per-document n-gram novelty — the corpus-diversity diagnostic
-    memorization/contamination studies report: of a doc's DISTINCT
-    word k-shingles, what fraction appears in no other document?
-
-    Returns (doc_id, n_shingles, n_novel, novelty) where novelty is
-    n_novel / n_shingles rounded to 4dp (NULL when the doc is shorter
-    than k tokens).  A corpus of exact duplicates scores 0.0; fully
-    unique text scores 1.0; boilerplate-heavy pages sit in between —
-    ranking by novelty surfaces template farms that survive doc-level
-    dedup because of unique slugs.
-
-    Scale shape: shingles are md5-hashed to fixed 32-byte keys BEFORE
-    any shuffle (the contamination-audit discipline), then ONE
-    partial-agg groupBy counts distinct docs per shingle and ONE
-    groupBy(doc) folds the per-shingle verdicts back — explode carries
-    (doc_id, hash) pairs only, never the text.  Cost is O(total
-    shingles); no pairwise comparison exists."""
-    sh = _with_shingles(docs.select("doc_id", text_col), text_col, shingle_k)
-    pairs = sh.select(
-        "doc_id",
-        F.explode_outer(
-            F.array_distinct(F.transform("_shingles", lambda s: F.md5(s)))
-        ).alias("h"),
-    )
-    by_shingle = (
-        pairs.where(F.col("h").isNotNull())
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("_docs"))
-    )
-    verdicts = (
-        pairs.join(by_shingle, "h", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("h").cast("long").alias("n_shingles"),
-            F.sum(F.when(F.col("_docs") == 1, 1).otherwise(0))
-            .cast("long")
-            .alias("n_novel"),
-        )
-    )
-    return verdicts.select(
-        "doc_id",
-        "n_shingles",
-        F.coalesce("n_novel", F.lit(0).cast("long")).alias("n_novel"),
-        F.when(
-            F.col("n_shingles") > 0,
-            F.round(F.col("n_novel") / F.col("n_shingles"), 4),
-        ).alias("novelty"),
     )
 
 

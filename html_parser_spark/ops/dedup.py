@@ -1,5 +1,6 @@
-"""Deduplication operators (brief §extras): exact, MinHash+LSH, SimHash,
-n-gram Jaccard.
+"""Deduplication operators (brief §extras): exact, normalized and
+order-insensitive keys, MinHash+LSH near-duplicate pairs and their connected
+components, blocked edit-distance pairs.
 
 Scale notes (the part that matters at 100TB):
 
@@ -10,8 +11,6 @@ Scale notes (the part that matters at 100TB):
   shuffles on (band, band_hash) — tiny keys, uniform — instead of an O(n²)
   crossJoin.  Portable hashing: md5 hex (lexicographic min), identical in
   DuckDB for the oracle.
-* SimHash — 64-bit signature via per-token md5→bits majority vote, then
-  near-dup candidates by banding on 16-bit chunks.
 """
 
 from __future__ import annotations
@@ -29,26 +28,13 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def word_shingles(text_col, k: int = 3):
-    """k-word shingles as an array<string>, JVM-side: split → slide window via
-    transform over index sequence.  Empty/short docs → empty array.
-
-    PERF: callers must bind this to a real column (withColumn) before mapping
-    further lambdas over it — Catalyst does no CSE inside higher-order
-    function bodies, so an inlined shingle expression re-splits the text once
-    per array element per consumer (measured 30× slowdown)."""
-    toks = F.split(F.trim(text_col), r"\s+")
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(-1)))
-    return F.when(n >= k, F.transform(
-        idx,
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
-    )).otherwise(F.array().cast("array<string>"))
-
-
 def _with_shingles(docs: DataFrame, text_col: str, k: int) -> DataFrame:
     """Two-step materialization: tokens column, then shingles column, so each
-    is computed exactly once per row (see word_shingles PERF note)."""
+    is computed exactly once per row.
+
+    PERF: Catalyst does no CSE inside higher-order function bodies, so a
+    shingle expression inlined on the split re-splits the text once per
+    array element per consumer (measured 30× slowdown)."""
     d = docs.withColumn("_toks", F.split(F.trim(F.col(text_col)), r"\s+"))
     n = F.size(F.col("_toks"))
     idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(-1)))
@@ -126,204 +112,6 @@ def lsh_near_duplicates(
         )
         .agg(F.count("*").alias("n_bands"))
     )
-
-
-def ngram_jaccard_pairs(
-    docs: DataFrame, text_col: str = "text", shingle_k: int = 3, threshold: float = 0.5,
-    id_limit: int | None = None, candidates: DataFrame | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard — the verification stage AFTER candidate
-    generation, never a full cross-join.  A bound is mandatory: either
-    ``candidates`` (a (doc_a, doc_b) pair table, e.g. ``lsh_near_duplicates``
-    output — the scale path: two equi-joins, no self-join) or ``id_limit``
-    (bounded all-pairs for small verification runs)."""
-    if candidates is None and id_limit is None:
-        raise ValueError(
-            "ngram_jaccard_pairs: unbounded all-pairs self-join refused — pass "
-            "candidates= (LSH pair table) or id_limit= (bounded baseline)"
-        )
-    sh = docs.select(
-        "doc_id", F.array_distinct(word_shingles(F.col(text_col), shingle_k)).alias("sh")
-    )
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-    union = F.size(F.array_union(F.col("a.sh"), F.col("b.sh")))
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    if candidates is not None:
-        scored = (
-            candidates.select("doc_a", "doc_b")
-            .join(sh.alias("a"), F.col("doc_a") == F.col("a.doc_id"))
-            .join(sh.alias("b"), F.col("doc_b") == F.col("b.doc_id"))
-        )
-    else:
-        sh = sh.filter(F.col("doc_id") < id_limit)
-        a, b = sh.alias("a"), sh.alias("b")
-        scored = a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
-    return (
-        scored.select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.round(jac, 4).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def containment_candidates(
-    docs: DataFrame,
-    text_col: str = "text",
-    shingle_k: int = 3,
-    max_df: int = 5,
-    min_common: int = 2,
-) -> DataFrame:
-    """Inverted-shingle candidate generation for CONTAINMENT detection
-    (Broder 1997 §2 distinguishes *containment* C(A,B)=|S(A)∩S(B)|/|S(A)|
-    from *resemblance*; MinHash-LSH estimates only the latter, so quote /
-    wrapped-page / sub-document detection needs its own candidate path).
-
-    Plan: distinct (doc_id, shingle) postings → drop stop-shingles whose
-    document frequency exceeds ``max_df`` (the boilerplate n-grams that
-    would otherwise make the posting self-join quadratic) → equi-join the
-    postings list with itself on the shingle → count common shingles per
-    ordered pair, keep pairs sharing ≥ ``min_common``.
-
-    Scale shape: every join/agg keys on the shingle hash or the id pair —
-    uniform keys, map-side partials everywhere; the df cap bounds each
-    posting list at ``max_df`` docs so the per-shingle pair fan-out is at
-    most max_df·(max_df−1)/2 regardless of corpus size.  Returns
-    (doc_a, doc_b, common)."""
-    posting = _with_shingles(docs, text_col, shingle_k).select(
-        "doc_id", F.explode(F.array_distinct("_shingles")).alias("g")
-    )
-    rare = (
-        posting.groupBy("g")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= max_df)
-        .select("g")
-    )
-    p = posting.join(rare, "g")
-    return (
-        p.alias("a")
-        .join(p.alias("b"), "g")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").cast("long").alias("common"))
-        .filter(F.col("common") >= min_common)
-    )
-
-
-def containment_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    shingle_k: int = 3,
-    min_containment_bp: int = 2500,
-    candidates: DataFrame | None = None,
-    id_limit: int | None = None,
-) -> DataFrame:
-    """Exact shingle containment per candidate pair — the asymmetric
-    complement of ``ngram_jaccard_pairs``: a 100-word page quoted inside a
-    10k-word page has Jaccard ≈ 0.01 (invisible to resemblance dedup) but
-    containment ≈ 1.0 in the small→large direction.
-
-    Containment is reported in integer basis points (``common·10⁴ div
-    |S(side)|``) so the result is bit-exact across engines — no float
-    division anywhere.  A pair survives when EITHER direction reaches
-    ``min_containment_bp``.  As with Jaccard, an unbounded all-pairs
-    self-join is refused: pass ``candidates`` (``containment_candidates``
-    output — the scale path) or ``id_limit`` (bounded baseline).
-
-    Scale shape: two equi-joins of the candidate pair table against the
-    per-doc distinct-shingle arrays (shuffle on doc ids, uniform), then a
-    pure-codegen projection; nothing quadratic."""
-    if candidates is None and id_limit is None:
-        raise ValueError(
-            "containment_pairs: unbounded all-pairs self-join refused — pass "
-            "candidates= (containment_candidates output) or id_limit="
-        )
-    sh = docs.select(
-        "doc_id",
-        F.array_distinct(word_shingles(F.col(text_col), shingle_k)).alias("sh"),
-    )
-    if candidates is not None:
-        scored = (
-            candidates.select("doc_a", "doc_b")
-            .join(sh.alias("a"), F.col("doc_a") == F.col("a.doc_id"))
-            .join(sh.alias("b"), F.col("doc_b") == F.col("b.doc_id"))
-        )
-    else:
-        sh = sh.filter(F.col("doc_id") < id_limit)
-        scored = sh.alias("a").join(
-            sh.alias("b"), F.col("a.doc_id") < F.col("b.doc_id")
-        )
-    sized = scored.select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-        .cast("long")
-        .alias("common"),
-        F.size(F.col("a.sh")).cast("long").alias("_na"),
-        F.size(F.col("b.sh")).cast("long").alias("_nb"),
-    )
-    out = sized.select(
-        "doc_a",
-        "doc_b",
-        "common",
-        F.when(F.col("_na") > 0, F.expr("(common * 10000) div _na"))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("cont_a_in_b_bp"),
-        F.when(F.col("_nb") > 0, F.expr("(common * 10000) div _nb"))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("cont_b_in_a_bp"),
-    )
-    return out.filter(
-        F.greatest("cont_a_in_b_bp", "cont_b_in_a_bp") >= min_containment_bp
-    )
-
-
-SIMHASH_BITS = 60
-
-
-def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """SimHash from whitespace tokens: per-bit majority vote over token md5
-    bits.  Returns (doc_id, simhash STRING of '0'/'1' × 60) — a bit string
-    rather than a BIGINT so the representation is portable (no cross-engine
-    integer-width traps) and banding/Hamming ops are plain substrings.
-
-    JVM-only: tokens → md5 → 15 hex chars → 60-bit binary string; the
-    majority vote scans the materialized bit strings once per bit position."""
-    # materialize tokens and per-token bit strings as columns: lambdas below
-    # scan them 60× (once per bit) and Catalyst does no CSE in lambda bodies
-    docs = docs.withColumn(
-        "_toks", F.array_distinct(F.split(F.trim(F.col(text_col)), r"\s+"))
-    ).withColumn(
-        "_tok_bits",
-        F.transform(
-            F.col("_toks"),
-            lambda t: F.lpad(
-                F.bin(F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")),
-                SIMHASH_BITS,
-                "0",
-            ),
-        ),
-    )
-    half = F.size(F.col("_toks")) / F.lit(2.0)
-    positions = F.sequence(F.lit(1), F.lit(SIMHASH_BITS))
-    bit_chars = F.transform(
-        positions,
-        lambda p: F.when(
-            F.aggregate(
-                F.col("_tok_bits"),
-                F.lit(0),
-                lambda acc, s: acc + s.substr(p, F.lit(1)).cast("int"),
-            )
-            >= half,
-            F.lit("1"),
-        ).otherwise(F.lit("0")),
-    )
-    return docs.select("doc_id", F.concat_ws("", bit_chars).alias("simhash"))
 
 
 # --- near-dup clustering: the dedup ENDGAME ---------------------------------
@@ -421,117 +209,6 @@ def near_dup_components(
     return components_from_pairs(pairs.select("doc_a", "doc_b"), max_iters)
 
 
-def band_index(
-    docs: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """The PERSISTENT LSH dedup state: one (doc_id, band_id, band_key) row
-    per band per document — what a production pipeline materializes
-    (partitioned/bucketed by band_key) so that adding a crawl never
-    re-signatures the existing corpus.  Exactly the banding
-    ``lsh_near_duplicates`` builds internally, factored out so batch N's
-    index is batch N+1's input."""
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signature(docs, text_col, num_hashes, shingle_k)
-    return sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.concat_ws(
-                            "|",
-                            F.slice(
-                                "minhash", b * rows_per_band + 1, rows_per_band
-                            ),
-                        ).alias("band_key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.band_key")
-
-
-def incremental_lsh_dedup(
-    new_docs: DataFrame,
-    existing_index: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """Near-dup gate for a NEW batch against an already-deduped corpus —
-    the operation that keeps 100 TB pipelines incremental: the existing
-    corpus is represented ONLY by its ``band_index`` rows (never re-read,
-    never re-signatured), and the new batch's bands equi-join against it
-    on (band_id, band_key).  Cost is O(new batch) + one uniform-key
-    shuffle, independent of corpus size; with the index stored bucketed
-    by band_key the join is co-located and shuffle-free on the big side.
-
-    Decisions per new document, all deterministic and SQL-replayable:
-
-    * ``matched_existing`` — shares ≥1 band with any indexed doc;
-      ``dup_of`` = the min indexed doc_id among matches; dropped.
-    * otherwise ``dup_of`` = min new-batch doc_id among its bucket-mates
-      that are themselves unmatched-to-existing (including itself);
-      kept iff that min is the doc itself — the same min-id election
-      ``semantic_dedup`` uses.  Like any single-pass min-per-bucket rule
-      it is not transitive across chained buckets (a kept doc's
-      ``dup_of`` always points to a kept doc only within one bucket
-      family); pipelines needing full transitivity run
-      ``components_from_pairs`` over the within-batch pairs instead.
-
-    Returns (doc_id, keep, matched_existing, dup_of) for EVERY new doc —
-    docs too short to shingle have no bands, match nothing, and are kept.
-    Append ``band_index(new_docs.where(keep))`` to the store afterwards."""
-    new_bands = band_index(new_docs, text_col, num_hashes, bands, shingle_k)
-    ex = existing_index.select(
-        "band_id", "band_key", F.col("doc_id").alias("ex_id")
-    )
-    ex_match = (
-        new_bands.join(ex, ["band_id", "band_key"])
-        .groupBy("doc_id")
-        .agg(F.min("ex_id").alias("ex_dup_of"))
-    )
-    unmatched = new_bands.join(ex_match, "doc_id", "left_anti")
-    # min unmatched doc id per bucket, broadcast back over bucket-mates
-    bucket_min = unmatched.groupBy("band_id", "band_key").agg(
-        F.min("doc_id").alias("bucket_min")
-    )
-    batch_dup = (
-        unmatched.join(bucket_min, ["band_id", "band_key"])
-        .groupBy("doc_id")
-        .agg(F.min("bucket_min").alias("batch_dup_of"))
-    )
-    ids = new_docs.select("doc_id")
-    return (
-        ids.join(ex_match, "doc_id", "left")
-        .join(batch_dup, "doc_id", "left")
-        .select(
-            "doc_id",
-            (
-                F.col("ex_dup_of").isNull()
-                & (
-                    F.col("batch_dup_of").isNull()
-                    | (F.col("batch_dup_of") == F.col("doc_id"))
-                )
-            ).alias("keep"),
-            F.col("ex_dup_of").isNotNull().alias("matched_existing"),
-            F.coalesce(
-                "ex_dup_of",
-                F.when(
-                    F.col("batch_dup_of") != F.col("doc_id"), F.col("batch_dup_of")
-                ),
-            ).alias("dup_of"),
-        )
-    )
-
-
 def normalized_text_key(col) -> "F.Column":
     """Aggressive normalization key for near-exact dedup (the RefinedWeb /
     CCNet "normalized exact" tier between byte-identical and MinHash):
@@ -571,11 +248,10 @@ def dedup_prf(
     a_col: str = "a",
     b_col: str = "b",
 ) -> DataFrame:
-    """Dedup-QA pair-level precision/recall/F1 — the duplicate-DETECTION
-    twin of ops/text.token_prf's extraction QA: whenever the dedup
-    recipe changes (shingle k, bands, thresholds), score its predicted
-    duplicate pairs against a labeled sample before the new config
-    touches the corpus.
+    """Dedup-QA pair-level precision/recall/F1 — duplicate-DETECTION QA:
+    whenever the dedup recipe changes (shingle k, bands, thresholds),
+    score its predicted duplicate pairs against a labeled sample before
+    the new config touches the corpus.
 
     Both inputs are pair tables; orientation is canonicalized
     (min, max) and exact duplicates dropped, so metrics count UNORDERED

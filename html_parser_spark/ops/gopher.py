@@ -99,75 +99,3 @@ def gopher_rules(
         *[c.alias(name) for name, c in flags.items()],
         keep.alias("keep"),
     )
-
-
-GOPHER_RULE_COLS = [
-    "keep_word_count",
-    "keep_mean_len",
-    "keep_symbol_ratio",
-    "keep_bullets",
-    "keep_ellipsis_lines",
-    "keep_alpha",
-    "keep_stopwords",
-]
-
-
-def gate_ablation(flagged: DataFrame, rule_cols=None) -> DataFrame:
-    """Per-rule ablation table over a flagged corpus — the "what did each
-    filter cost" table every pipeline release reports (C4 §2.2, Gopher
-    A.2, RefinedWeb Tab. 2), and the tuning signal for thresholds:
-
-    * ``kills``        — docs failing the rule (regardless of others);
-    * ``unique_kills`` — docs failing ONLY this rule: its marginal value.
-      A rule with high kills but near-zero unique kills is redundant with
-      the rest of the battery; a rule with high unique kills is doing
-      irreplaceable work (or is miscalibrated — either way, look).
-
-    Shares in exact integer ppm of all docs; empty input degrades to 0.
-
-    Scale shape: ONE global partial-agg aggregate computing all 2·R+1
-    counters map-side (no per-rule pass, no shuffle of doc rows — the
-    exchange carries one row per partition), then a |R|-row ``stack``
-    fan-out + ppm projection.  Zero Python, zero joins, no window.
-    Returns (rule, kills, unique_kills, kills_ppm, unique_kills_ppm)."""
-    rule_cols = list(rule_cols or GOPHER_RULE_COLS)
-    fails = None
-    for c in rule_cols:
-        nr = (~F.col(c).cast("boolean")).cast("int")
-        fails = nr if fails is None else (fails + nr)
-    zero = F.lit(0).cast("long")
-    aggs = [F.count("*").cast("long").alias("_total")]
-    for i, c in enumerate(rule_cols):
-        nr = ~F.col(c).cast("boolean")
-        aggs.append(
-            F.coalesce(F.sum(nr.cast("long")), zero).alias(f"_k{i}")
-        )
-        aggs.append(
-            F.coalesce(
-                F.sum((nr & (fails == 1)).cast("long")), zero
-            ).alias(f"_u{i}")
-        )
-    row = flagged.agg(*aggs)
-    stack_args = ", ".join(
-        f"'{c}', _k{i}, _u{i}" for i, c in enumerate(rule_cols)
-    )
-    un = row.select(
-        F.expr(
-            f"stack({len(rule_cols)}, {stack_args}) "
-            "as (rule, kills, unique_kills)"
-        ),
-        "_total",
-    )
-    z = F.lit(0).cast("long")
-    return un.select(
-        "rule",
-        "kills",
-        "unique_kills",
-        F.when(
-            F.col("_total") > 0, F.expr("(kills * 1000000) div _total")
-        ).otherwise(z).alias("kills_ppm"),
-        F.when(
-            F.col("_total") > 0,
-            F.expr("(unique_kills * 1000000) div _total"),
-        ).otherwise(z).alias("unique_kills_ppm"),
-    )

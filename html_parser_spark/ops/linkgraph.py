@@ -498,69 +498,6 @@ def seed_distance(
     return settled
 
 
-def cocitation_pairs(
-    edges: DataFrame,
-    min_common: int = 2,
-    max_out_degree: int = 64,
-) -> DataFrame:
-    """Co-citation related-hosts mining (Dean & Henzinger, WWW 1999): two
-    hosts are related when the same third hosts link to BOTH — the
-    link-structure complement of content similarity (mirrors, forks, and
-    topical peers co-cite even when their text diverges), and the classic
-    "related pages" / seed-expansion primitive.
-
-    Machinery mirrors ``ops/dedup.containment_candidates`` with the
-    citing host playing the shingle role:
-
-    * distinct (src, dst) postings; citing hosts with out-degree >
-      ``max_out_degree`` are dropped FIRST (a directory page linking to
-      10^4 hosts co-cites everything — the stop-shingle of the graph;
-      the df cap bounds the self-join fan-out at max_out_degree² per
-      citer regardless of graph size);
-    * postings self-join on src with ``dst_a < dst_b`` (each unordered
-      pair once), groupBy pair with map-side partials → ``common``;
-    * in-degrees computed over the SAME capped postings, so
-      ``jaccard_bp = common·10⁴ div (deg_a + deg_b − common)`` is exact
-      integer basis points over a consistently-defined universe.
-
-    Returns (host_a, host_b, common, jaccard_bp) for pairs with
-    ``common ≥ min_common``."""
-    posts = edges.select("src", "dst").distinct()
-    small = (
-        posts.groupBy("src")
-        .agg(F.count("*").alias("_deg"))
-        .filter(F.col("_deg") <= max_out_degree)
-        .select("src")
-    )
-    posts = posts.join(small, "src")
-    indeg = posts.groupBy(F.col("dst").alias("_h")).agg(
-        F.count("*").cast("long").alias("_deg")
-    )
-    a = posts.select("src", F.col("dst").alias("host_a"))
-    b = posts.select("src", F.col("dst").alias("host_b"))
-    pairs = (
-        a.join(b, "src")
-        .filter(F.col("host_a") < F.col("host_b"))
-        .groupBy("host_a", "host_b")
-        .agg(F.count("*").cast("long").alias("common"))
-        .filter(F.col("common") >= min_common)
-    )
-    return (
-        pairs.join(indeg.withColumnRenamed("_h", "host_a"), "host_a")
-        .withColumnRenamed("_deg", "_deg_a")
-        .join(indeg.withColumnRenamed("_h", "host_b"), "host_b")
-        .withColumnRenamed("_deg", "_deg_b")
-        .select(
-            "host_a",
-            "host_b",
-            "common",
-            F.expr("(common * 10000) div (_deg_a + _deg_b - common)").alias(
-                "jaccard_bp"
-            ),
-        )
-    )
-
-
 def reciprocity(edges: DataFrame) -> DataFrame:
     """Per-host link reciprocity — the link-exchange / link-farm signal
     (public background: nepotistic reciprocal linking is a canonical

@@ -55,9 +55,6 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from .text import tokens
 
-BACKOFF_NUM = 2  # stupid-backoff alpha = 0.4 = 2/5, kept rational
-BACKOFF_DEN = 5
-
 
 def _token_arrays(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return docs.select(
@@ -191,7 +188,8 @@ def score_stupid_backoff(
     has_c1 = F.col("c1").isNotNull()
     # the integer division is the SQL `div` (via expr) so Spark and the
     # DuckDB oracle evaluate the identical BIGINT expression; the 2/5
-    # rationals are BACKOFF_NUM/BACKOFF_DEN powers folded into literals
+    # rationals are powers of the stupid-backoff alpha 0.4 = 2/5, kept
+    # rational and folded into literals
     score = (
         F.when(tri, F.expr(f"cnt3 * {int(scale)}L div tot3"))
         .when(

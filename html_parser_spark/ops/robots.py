@@ -318,39 +318,3 @@ def robots_sitemaps(
     return robots.select(
         F.col(host_col).alias("host"), F.explode(urls).alias("sitemap_url")
     )
-
-
-def compliance_audit(
-    pages: DataFrame,
-    rules: DataFrame,
-    agent: str = "*",
-    url_col: str = "url",
-    groups: DataFrame | None = None,
-) -> DataFrame:
-    """Per-host robots-compliance report of an already-CRAWLED set:
-    (host, crawled_n, disallowed_n, disallowed_ppm).  The regression
-    monitor behind the politeness gate — a nonzero disallowed_ppm on a
-    release means fetches happened that ``robots_filter`` would have
-    blocked (a frontier bug, a stale rules snapshot, or a policy change
-    between fetch and audit), and per-host attribution says where.
-
-    One pass: ``robots_verdict`` (broadcast rules join) → groupBy(host)
-    with map-side partials; integral-divide ppm."""
-    v = robots_verdict(pages, rules, agent=agent, url_col=url_col, groups=groups)
-    host = F.parse_url(F.col(url_col), F.lit("HOST"))
-    return (
-        v.select(host.alias("host"), (1 - F.col("allowed")).alias("_dis"))
-        .groupBy("host")
-        .agg(
-            F.count("*").cast("long").alias("crawled_n"),
-            F.sum("_dis").cast("long").alias("disallowed_n"),
-        )
-        .select(
-            "host",
-            "crawled_n",
-            "disallowed_n",
-            F.expr("disallowed_n * 1000000 div crawled_n").alias(
-                "disallowed_ppm"
-            ),
-        )
-    )

@@ -1,6 +1,6 @@
 """Mergeable sketches + deterministic corpus shuffle (brief §extras).
 
-Three pieces of the bookkeeping layer a 10^12-document curation run needs
+Two pieces of the bookkeeping layer a 10^12-document curation run needs
 around the operators in this package, each built so Spark and the DuckDB
 oracle evaluate bit-identical integer arithmetic:
 
@@ -22,18 +22,6 @@ oracle evaluate bit-identical integer arithmetic:
   ``zero_registers`` alongside the estimate and leaves the regime choice
   to the consumer (our contract query pins both columns).
 
-* **Count-min frequency sketch** (:func:`count_min_build`,
-  :func:`count_min_query`) — Cormode & Muthukrishnan 2005.  A
-  ``depth×width`` grid of BIGINT counters summarizes the full token
-  frequency table (10^9+ distinct tokens at crawl scale) in
-  ``depth*width`` cells; the point estimate ``min_j cells[j][h_j(x)]``
-  never underestimates (the guarantee is property-tested).  Build is ONE
-  partial-agg groupBy over (row, col) cells — the explode fans each
-  token occurrence into ``depth`` cells, but map-side combine collapses
-  them to ≤ depth×width rows per partition before the shuffle, so the
-  exchange is bounded by the sketch size, not the corpus size.  Queries
-  broadcast the (tiny) sketch against the probe set.
-
 * **Deterministic global corpus shuffle** (:func:`corpus_shuffle`) —
   the example-order randomization every LM training run does before
   sharding.  ``ORDER BY rand()`` at 10^12 rows is a corpus-wide sort
@@ -51,7 +39,7 @@ oracle evaluate bit-identical integer arithmetic:
 
 Scale notes (100 TB): nothing here collects, cross-joins, or windows
 over an unbounded partition; every shuffle is bounded by sketch size
-(HLL: groups×m cells; CMS: depth×width cells) or is the intended
+(HLL: groups×m cells) or is the intended
 repartition itself (shuffle: one exchange on the shard key).
 """
 
@@ -59,10 +47,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-# Fixed tags keep the three hash families independent of each other and of
+# Fixed tags keep the two hash families independent of each other and of
 # the md5 uses elsewhere in the package (dedup shingles, split buckets, ...).
 _HLL_TAG = "hll:"
-_CMS_TAG = "cms:"
 _SHUF_TAG = "shuf:"
 
 # The remainder drawn for the HLL rank is 32 bits (8 hex chars), so ranks
@@ -169,73 +156,6 @@ def hll_estimate(
         .alias("est_distinct"),
         (F.lit(m).cast("long") - F.col("n_present")).cast("long").alias("zero_registers"),
     )
-
-
-def count_min_build(
-    df: DataFrame, item_col: str, depth: int = 4, width: int = 1024
-) -> DataFrame:
-    """Count-min sketch cells: (row, col, cnt), ≤ depth·width rows.
-
-    Each item occurrence increments one cell per hash row; the explode
-    is narrow (depth literals) and the groupBy's map-side combine caps
-    the exchange at depth·width cells per partition.
-    """
-    rows = F.explode(F.array(*[F.lit(j) for j in range(depth)])).alias("row")
-    cells = df.select(F.col(item_col).alias("_item"), rows).select(
-        "row",
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(_CMS_TAG), F.col("row").cast("string"),
-                                   F.lit(":"), F.col("_item").cast("string"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % width
-        ).alias("col"),
-    )
-    return cells.groupBy("row", "col").agg(F.count(F.lit(1)).alias("cnt"))
-
-
-def count_min_query(
-    sketch: DataFrame,
-    probes: DataFrame,
-    item_col: str,
-    depth: int = 4,
-    width: int = 1024,
-) -> DataFrame:
-    """Point-estimate counts for a probe set: (item, est).
-
-    est = min over hash rows of the addressed cell (0 when a cell was
-    never touched — only possible for items absent from the build set).
-    The sketch (≤ depth·width rows) broadcasts; estimates NEVER
-    underestimate the true count (hash collisions only add).
-    """
-    rows = F.explode(F.array(*[F.lit(j) for j in range(depth)])).alias("row")
-    addressed = probes.select(F.col(item_col).alias("item"), rows).select(
-        "item",
-        "row",
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(_CMS_TAG), F.col("row").cast("string"),
-                                   F.lit(":"), F.col("item").cast("string"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % width
-        ).alias("col"),
-    )
-    joined = addressed.join(F.broadcast(sketch), ["row", "col"], "left").select(
-        "item", F.coalesce(F.col("cnt"), F.lit(0).cast("long")).alias("cell")
-    )
-    return joined.groupBy("item").agg(F.min("cell").alias("est"))
 
 
 def corpus_shuffle(

@@ -409,135 +409,6 @@ def diff_status(old_md5="old_md5", new_md5="new_md5"):
     )
 
 
-def feed_entries(feeds: DataFrame, body_col: str = "body") -> DataFrame:
-    """(host, RSS/Atom xml body) → one row per feed entry with (kind,
-    title, link, published).
-
-    RSS ``<item>`` blocks and Atom ``<entry>`` blocks are cut with one
-    dotall regexp each, then fields come out of the block: RSS links are
-    element text, Atom links are ``<link href="...">`` attributes — both
-    handled.  Pure ``regexp_extract_all`` + ``transform`` + narrow
-    explode; JVM-side end-to-end, zero shuffle, same scale shape as
-    ``sitemap_urls``.  Empty fields surface as NULL, not ''."""
-    body = F.col(body_col)
-
-    def _fields(block, kind: str):
-        link = (
-            F.regexp_extract(block, r"<link[^>]*href=\"([^\"]*)\"", 1)
-            if kind == "atom"
-            else F.regexp_extract(block, r"<link>\s*([^<]*?)\s*</link>", 1)
-        )
-        return F.struct(
-            F.lit(kind).alias("kind"),
-            F.nullif(
-                F.regexp_extract(block, r"<title>\s*([^<]*?)\s*</title>", 1),
-                F.lit(""),
-            ).alias("title"),
-            F.nullif(link, F.lit("")).alias("link"),
-            F.nullif(
-                F.regexp_extract(
-                    block,
-                    r"<(?:pubDate|published)>\s*([^<]*?)\s*</(?:pubDate|published)>",
-                    1,
-                ),
-                F.lit(""),
-            ).alias("published"),
-        )
-
-    rss = F.transform(
-        F.regexp_extract_all(body, F.lit(r"(?s)<item>(.*?)</item>"), F.lit(1)),
-        lambda b: _fields(b, "rss"),
-    )
-    atom = F.transform(
-        F.regexp_extract_all(body, F.lit(r"(?s)<entry>(.*?)</entry>"), F.lit(1)),
-        lambda b: _fields(b, "atom"),
-    )
-    other = [c for c in feeds.columns if c != body_col]
-    return feeds.select(
-        *other, F.explode(F.concat(rss, atom)).alias("_e")
-    ).select(*other, "_e.kind", "_e.title", "_e.link", "_e.published")
-
-
-# phrases that mark error/placeholder pages served with HTTP 200 — the
-# "soft 404" class a crawl must drop before training (match on the
-# lowercased title/text head; explicit list so the rule set is auditable)
-SOFT_404_PHRASES = (
-    "not found", "no longer available",
-    "does not exist", "access denied", "forbidden",
-    "under construction", "coming soon", "domain for sale",
-    "this domain is parked",
-)
-# '404' as a standalone number (not inside '1-404 of 900' or a phone
-# number); 'page not found' is subsumed by 'not found' and deliberately
-# NOT listed — the list claims to be auditable, so no dead entries
-_SOFT_404_NUM_RE = "(^|[^0-9])404([^0-9]|$)"
-
-# Title matching is positional, not substring: the phrase must fill its
-# own title *segment* (segments split on site-name separators '|', en/em
-# dash, ' - '), allowing only these decoration words around it — so
-# 'Oops! Page not found' and '404 Not Found | example.com' hit while
-# 'Forbidden City' and 'Coming Soon Movies 2026' (phrase followed by
-# real content words) do not.  Auditable allow-list, nothing inferred.
-_TITLE_DECOR_WORDS = (
-    "error|oops|whoops|sorry|page|the|this|that|requested|url|file|"
-    "was|is|been|has|we|could|be|[0-9]{1,4}"
-)
-_SEG_L = r"(^|[|–—]|\s-\s)\s*"
-_SEG_R = r"[\s!,.:]*($|[|–—]|\s-\s)"
-
-
-def _title_phrase_re(phrase: str) -> str:
-    import re as _re
-
-    return (
-        _SEG_L
-        + rf"(({_TITLE_DECOR_WORDS})[\s!,.:]+)*"
-        + _re.escape(phrase)
-        + _SEG_R
-    )
-
-
-def _word_bounded_re(phrase: str) -> str:
-    import re as _re
-
-    return rf"(^|[^a-z0-9]){_re.escape(phrase)}([^a-z0-9]|$)"
-
-
-def soft_404_flags(
-    df: DataFrame,
-    title_col: str = "title",
-    text_col: str = "main_text",
-    short_chars: int = 512,
-) -> DataFrame:
-    """Flag error/placeholder pages served as HTTP 200.
-
-    Signals (all codegen, integer/boolean-exact): an error phrase (or a
-    digit-bounded standalone 404) in the title, the same in the first
-    2 KB of body text, and a short-body marker (< ``short_chars``).
-    ``soft404`` = (title hit OR body-head hit) AND short — real soft-404
-    pages are short, so a long 'Forbidden City travel guide' article or a
-    long page merely MENTIONING a 404 both stay.  Title phrases must fill
-    their own separator-bounded segment (see ``_title_phrase_re``) and
-    body phrases are word-bounded, so a short page titled 'Forbidden
-    City' or 'Coming Soon Movies 2026' is NOT a soft 404.  Pure per-row
-    map, zero shuffle."""
-    title = F.lower(F.coalesce(F.col(title_col), F.lit("")))
-    head = F.lower(F.substring(F.coalesce(F.col(text_col), F.lit("")), 1, 2048))
-    t_hit = title.rlike(_SOFT_404_NUM_RE)
-    h_hit = head.rlike(_SOFT_404_NUM_RE)
-    for p in SOFT_404_PHRASES:
-        t_hit = t_hit | title.rlike(_title_phrase_re(p))
-        h_hit = h_hit | head.rlike(_word_bounded_re(p))
-    short = F.length(F.coalesce(F.col(text_col), F.lit(""))) < short_chars
-    return df.select(
-        "*",
-        t_hit.cast("int").alias("title_404"),
-        h_hit.cast("int").alias("body_404"),
-        short.cast("int").alias("short_body"),
-        ((t_hit | h_hit) & short).cast("int").alias("soft404"),
-    )
-
-
 def recrawl_priority(
     captures: DataFrame,
     asof_ts: int,
@@ -616,210 +487,6 @@ def recrawl_priority(
         est.alias("est_change_sec"),
         next_due.alias("next_due_ts"),
         (F.lit(int(asof_ts)) - next_due).cast("long").alias("overdue_sec"),
-    )
-
-
-def hreflang_links(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
-    """One row per ``<link rel="alternate" hreflang=…>`` declaration —
-    the page-declared translation graph (the cheapest bitext-candidate
-    source a multilingual corpus has: site owners hand-label the
-    alignment).
-
-    Pure JVM: decode → ``regexp_extract_all`` over ``<link …>`` tags →
-    narrow explode → per-tag attribute pulls.  Attribute order is free,
-    quoting may be double/single/absent, ``rel`` may carry extra tokens
-    (``alternate stylesheet`` does NOT count: the rel token list must
-    contain exactly ``alternate`` for hreflang semantics — we require the
-    ``hreflang`` attribute too, which never appears on stylesheet links).
-    Returns (*other cols, hreflang lowercased, href) — unresolved relative
-    hrefs are emitted verbatim (resolution is ``canonicalize_url``'s job
-    and needs the base url anyway)."""
-    html_str = F.decode(F.col(html_col), "UTF-8")
-    tags = F.regexp_extract_all(html_str, F.lit(r"(?i)<link\b[^>]*>"), F.lit(0))
-    quoted = lambda attr: rf"""(?i)\b{attr}\s*=\s*("([^"]*)"|'([^']*)'|([^\s"'>]+))"""
-    def attr_val(attr):
-        pat = quoted(attr)
-        return F.coalesce(
-            F.nullif(F.regexp_extract(F.col("_tag"), pat, 2), F.lit("")),
-            F.nullif(F.regexp_extract(F.col("_tag"), pat, 3), F.lit("")),
-            F.nullif(F.regexp_extract(F.col("_tag"), pat, 4), F.lit("")),
-        )
-    other = [c for c in pages.columns if c != html_col]
-    is_alternate = F.lower(F.coalesce(attr_val("rel"), F.lit(""))).rlike(
-        r"(^|\s)alternate(\s|$)"
-    )
-    return (
-        pages.select(*other, F.explode(tags).alias("_tag"))
-        .filter(is_alternate)
-        .select(
-            *other,
-            F.lower(attr_val("hreflang")).alias("hreflang"),
-            attr_val("href").alias("href"),
-        )
-        .filter(F.col("hreflang").isNotNull() & F.col("href").isNotNull())
-    )
-
-
-def hreflang_clusters(
-    links: DataFrame, url_col: str = "url"
-) -> DataFrame:
-    """Translation-cluster membership from hreflang declarations, WITHOUT
-    graph iteration: per the Google/W3C contract every page in a cluster
-    declares the SAME full alternate set (including itself), so
-    ``cluster_id = min(href set ∪ {url})`` is identical across the
-    cluster — one narrow per-page aggregate, no connected components, no
-    shuffle beyond the final groupBy a consumer adds.  (Inconsistent
-    real-world clusters degrade gracefully: each consistent subset keys
-    together; stitching violators needs ``ops/dedup``'s connected
-    components over the href edges — deliberately not the default, which
-    must stay O(pages).)
-
-    Input: the (url, hreflang, href) rows of ``hreflang_links``.  Returns
-    one row per (cluster_id, url, self_hreflang, n_variants): the page's
-    own language is the min non-x-default hreflang whose href is the page
-    itself (min keeps it unique when a page self-declares several tags —
-    en + en-gb is legal; x-default is a router alias, not a language),
-    folded into the SAME aggregate so the links scan runs ONCE — one
-    partial-agg groupBy(url), zero joins."""
-    return (
-        links.groupBy(url_col)
-        .agg(
-            F.min("href").alias("_min_href"),
-            F.count("*").cast("long").alias("n_variants"),
-            F.min(
-                F.when(
-                    (F.col("href") == F.col(url_col))
-                    & (F.col("hreflang") != "x-default"),
-                    F.col("hreflang"),
-                )
-            ).alias("self_hreflang"),
-        )
-        .select(
-            F.least(F.col("_min_href"), F.col(url_col)).alias("cluster_id"),
-            url_col,
-            "self_hreflang",
-            "n_variants",
-        )
-    )
-
-
-def hreflang_pairs(
-    links: DataFrame, url_col: str = "url", lang_col: str = "lang"
-) -> DataFrame:
-    """Directed bitext candidate pairs straight from the declarations:
-    every (page, alternate) edge with the page's own language attached —
-    the seed list a bitext-mining pass verifies.  Zero joins: one filter +
-    projection over the links rows (``lang_col`` must already ride the
-    links frame; hreflang_links preserves input columns).  Self-references
-    and x-default rows are dropped (x-default is a router alias, not a
-    language)."""
-    return links.filter(
-        (F.col("href") != F.col(url_col)) & (F.col("hreflang") != "x-default")
-    ).select(
-        F.col(url_col).alias("src_url"),
-        F.col(lang_col).alias("src_lang"),
-        F.col("href").alias("dst_url"),
-        F.col("hreflang").alias("dst_lang"),
-    )
-
-
-def template_signature(html_col) -> "F.Column":
-    """Structural fingerprint of a page: md5 over the ordered sequence of
-    opening-tag names.  Pages rendered from the same CMS template share the
-    signature even when every text node differs — the standard device for
-    template-level dedup/QA on a crawl (Gibson, Punera & Tomkins, WWW 2005
-    measure template content at 40-50% of the web).
-
-    One ``regexp_extract_all`` + ``concat_ws`` + ``md5`` — pure codegen,
-    portable: the tag regex ``<([a-zA-Z][a-zA-Z0-9]*)`` compiles identically
-    under Java regex and RE2, and md5-of-joined-names is engine-neutral.
-    Tag names are lowercased (HTML tag names are case-insensitive); closing
-    tags and attributes never reach the signature."""
-    tags = F.regexp_extract_all(
-        F.lower(html_col), F.lit("<([a-z][a-z0-9]*)"), 1
-    )
-    return F.md5(F.concat_ws(",", tags))
-
-
-def template_clusters(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-    min_pages: int = 2,
-) -> DataFrame:
-    """Group crawl pages by (host, template signature) — the extraction-QA
-    view: a template cluster with thousands of pages and near-identical
-    extracted text is boilerplate the main-content pass must be stripping;
-    a sudden new big cluster on a known host is a site redesign that can
-    silently break extraction heuristics (drift monitoring).
-
-    Scale shape: one codegen projection computes the md5 signature per
-    page (the shuffle key is 32 bytes regardless of page size), then ONE
-    groupBy(host, sig) with map-side partial aggregation.  Hosts are
-    zipfian but (host, sig) splits each mega-host across its templates;
-    residual skew is AQE's job.  Returns (host, template_sig, n_pages,
-    n_tags, example_url) for clusters of at least ``min_pages``."""
-    host = F.parse_url(F.col(url_col), F.lit("HOST"))
-    sig = template_signature(F.col(html_col))
-    n_tags = F.size(
-        F.regexp_extract_all(
-            F.lower(F.col(html_col)), F.lit("<([a-z][a-z0-9]*)"), 1
-        )
-    ).cast("long")
-    return (
-        pages.select(
-            host.alias("host"),
-            sig.alias("template_sig"),
-            n_tags.alias("n_tags"),
-            F.col(url_col).alias("url"),
-        )
-        .groupBy("host", "template_sig")
-        .agg(
-            F.count("*").cast("long").alias("n_pages"),
-            F.min("n_tags").cast("long").alias("n_tags"),
-            F.min("url").alias("example_url"),
-        )
-        .filter(F.col("n_pages") >= min_pages)
-    )
-
-
-def url_templates(
-    df: DataFrame, url_col: str = "url", min_urls: int = 2
-) -> DataFrame:
-    """Mine per-host URL path templates by collapsing variable segments:
-    runs of 16+ hex chars (content hashes / UUIDs sans dashes) become
-    ``{hex}`` first, then digit runs become ``{n}`` — so
-    ``/a/3/p4711`` → ``/a/{n}/p{n}`` and ``/h/0cc175b9...`` → ``/h/{hex}``.
-
-    The frontier-side complement of content dedup: a template whose url
-    count explodes (calendar pages, session ids, faceted search) is a
-    crawler trap to cap BEFORE fetching, and template-level counts are the
-    unit of crawl-budget allocation within a host.  Both collapse patterns
-    are plain character-class regexes — identical under Java regex and
-    RE2, so the oracle states them verbatim.
-
-    Scale shape: pure-codegen projection → ONE groupBy(host, template)
-    with map-side partials; keys are short strings.  Returns (host,
-    path_template, n_urls, example_url)."""
-    u = F.col(url_col)
-    path = F.parse_url(u, F.lit("PATH"))
-    template = F.regexp_replace(
-        F.regexp_replace(path, "[0-9a-f]{16,}", "{hex}"), "[0-9]+", "{n}"
-    )
-    return (
-        df.select(
-            F.parse_url(u, F.lit("HOST")).alias("host"),
-            template.alias("path_template"),
-            u.alias("url"),
-        )
-        .groupBy("host", "path_template")
-        .agg(
-            F.count("*").cast("long").alias("n_urls"),
-            F.min("url").alias("example_url"),
-        )
-        .filter(F.col("n_urls") >= min_urls)
     )
 
 
@@ -1071,10 +738,10 @@ def mirror_candidates(
     catches mirrors BEFORE any content is fetched or compared, and the
     crawl-budget signal to fetch a mirrored tree once.
 
-    Same candidate-generation shape as ``cocitation_pairs``: distinct
-    (path, host) postings, a path-df cap dropping generic paths that
-    almost every host serves ('/', '/index.html' — the stop-shingles of
-    the path space; fan-out ≤ cap² per path after it), the posting
+    Candidate generation: distinct (path, host) postings, a path-df cap
+    dropping generic paths that almost every host serves ('/',
+    '/index.html' — the stop-shingles of the path space; fan-out ≤ cap²
+    per path after it), the posting
     self-join keyed on path with host_a < host_b, then Jaccard over the
     hosts' capped path sets in basis points.  Returns
     (host_a, host_b, shared_paths, jaccard_bp), shared ≥ ``min_shared``."""

@@ -121,7 +121,7 @@ def curate_docs(
     # 2. PII scrub (narrow, rides the same scan) — then MATERIALIZE.
     # The persist here is load-bearing, not a cache hint: Catalyst does no
     # CSE inside higher-order-function lambdas (see ops/dedup.py
-    # word_shingles PERF note), so feeding the scrub expression straight
+    # _with_shingles PERF note), so feeding the scrub expression straight
     # into the shingle transforms re-runs the regex chain once per
     # consumer per row (measured ~45x on 500 KB extracted pages).  The
     # persist cuts the plan so dedup/split/write all read the scrubbed

@@ -148,30 +148,6 @@ def test_corpus_trained_end_to_end(spark):
     assert all(r["n_words"] == 15 for r in out)
 
 
-def test_fertility_by_group(spark):
-    from html_parser_spark.ops.bpe import fertility_by_group, train_bpe
-
-    merges = train_bpe(CLASSIC, n_merges=10)
-    df = spark.createDataFrame(
-        [
-            (0, "en", "low lower"),    # low</w> + low er... -> counted below
-            (1, "en", "newest"),
-            (2, "xx", ""),             # empty group -> NULL fertility
-        ],
-        "doc_id long, lang string, text string",
-    )
-    got = {r["lang"]: r for r in fertility_by_group(df, merges).collect()}
-    ranks = {p: i for i, p in enumerate(merges)}
-    n_tok = sum(
-        len(encode_word(w, ranks)) for w in ["low", "lower", "newest"]
-    )
-    assert got["en"]["n_docs"] == 2
-    assert got["en"]["n_words"] == 3
-    assert got["en"]["n_tokens"] == n_tok
-    assert got["en"]["fertility"] == round(n_tok / 3, 4)
-    assert got["xx"]["n_words"] == 0 and got["xx"]["fertility"] is None
-
-
 def test_bpe_decode_roundtrip_identity(spark):
     from html_parser_spark.ops.bpe import (
         bpe_encode,

@@ -1,76 +1,8 @@
-"""Round-5 continuation ops: shingle containment (candidates + exact
-verify), TrustRank seeded propagation, template clustering, URL path
-templates."""
+"""TrustRank seeded propagation (ops/linkgraph.trustrank_fixed_point)."""
 
-import pytest
 from pyspark.sql import functions as F
 
-from html_parser_spark.ops.dedup import containment_candidates, containment_pairs
 from html_parser_spark.ops.linkgraph import trustrank_fixed_point
-from html_parser_spark.ops.web import template_clusters, url_templates
-
-
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, ["doc_id", "text"])
-
-
-class TestContainment:
-    def test_full_containment_detected(self, spark):
-        # doc 0 is the first third of doc 1: containment(0 in 1) = 1.0,
-        # Jaccard only ~1/3 — the case resemblance dedup misses.
-        small = "alpha beta gamma delta epsilon zeta"
-        big = small + " one two three four five six seven eight nine ten"
-        docs = _docs(spark, [(0, small), (1, big), (2, "unrelated words only here")])
-        cands = containment_candidates(docs, max_df=5, min_common=2)
-        out = containment_pairs(docs, candidates=cands, min_containment_bp=9000)
-        rows = {(r.doc_a, r.doc_b): r for r in out.collect()}
-        assert (0, 1) in rows
-        r = rows[(0, 1)]
-        assert r.cont_a_in_b_bp == 10000  # every shingle of 0 is in 1
-        assert r.cont_b_in_a_bp < 5000
-        assert r.common == 4  # 6 tokens -> 4 trigram shingles
-
-    def test_unbounded_refused(self, spark):
-        docs = _docs(spark, [(0, "a b c d")])
-        with pytest.raises(ValueError, match="refused"):
-            containment_pairs(docs)
-
-    def test_df_cap_drops_stop_shingles(self, spark):
-        # a shingle present in every doc exceeds max_df and generates no
-        # candidates on its own
-        rows = [(i, f"the common shingle unique{i} word{i}") for i in range(6)]
-        docs = _docs(spark, rows)
-        cands = containment_candidates(docs, max_df=3, min_common=1)
-        assert cands.count() == 0
-
-    def test_id_limit_baseline_matches_candidates_path(self, spark):
-        rows = [
-            (0, "p q r s t u v"),
-            (1, "p q r s t u v w x y"),
-            (2, "p q r s zz yy xx"),
-            (3, "totally different text body here"),
-        ]
-        docs = _docs(spark, rows)
-        base = {
-            (r.doc_a, r.doc_b): (r.common, r.cont_a_in_b_bp, r.cont_b_in_a_bp)
-            for r in containment_pairs(
-                docs, id_limit=10, min_containment_bp=2500
-            ).collect()
-        }
-        cand = {
-            (r.doc_a, r.doc_b): (r.common, r.cont_a_in_b_bp, r.cont_b_in_a_bp)
-            for r in containment_pairs(
-                docs,
-                candidates=containment_candidates(docs, max_df=4, min_common=1),
-                min_containment_bp=2500,
-            ).collect()
-        }
-        # every candidate-path pair agrees exactly with the baseline
-        for k, v in cand.items():
-            assert base[k] == v
-        # and the baseline's qualifying pairs are all recovered (no shingle
-        # here exceeds the df cap)
-        assert set(base) == set(cand)
 
 
 class TestTrustRank:
@@ -123,55 +55,3 @@ class TestTrustRank:
         # concentrates all mass on the seeded one
         assert pr["s"] == pr["x"]
         assert tr["s"] > tr["x"] == 0
-
-
-class TestTemplates:
-    def test_template_clusters_split_by_structure(self, spark):
-        rows = []
-        for i in range(6):
-            extra = '<meta property="og:title" content="t">' if i % 2 == 0 else ""
-            rows.append(
-                (
-                    f"http://h1.example.com/p{i}",
-                    f"<html><head><title>T{i}</title>{extra}</head>"
-                    f"<body><p>text {i}</p></body></html>",
-                )
-            )
-        pages = spark.createDataFrame(rows, ["url", "html"])
-        out = template_clusters(pages, min_pages=2).collect()
-        assert len(out) == 2  # even/odd structural split
-        assert {r.n_pages for r in out} == {3}
-        assert all(r.host == "h1.example.com" for r in out)
-        # signature ignores text: n_tags differs by exactly the extra meta
-        assert {r.n_tags for r in out} == {5, 6}
-
-    def test_template_signature_text_invariant(self, spark):
-        pages = spark.createDataFrame(
-            [
-                ("u1", "<html><body><p>AAA</p></body></html>"),
-                ("u2", "<HTML><BODY><P>completely different</P></BODY></HTML>"),
-            ],
-            ["url", "html"],
-        )
-        from html_parser_spark.ops.web import template_signature
-
-        sigs = (
-            pages.select(template_signature(F.col("html")).alias("s"))
-            .distinct()
-            .count()
-        )
-        assert sigs == 1  # case-insensitive, text-blind
-
-    def test_url_templates_collapse(self, spark):
-        urls = spark.createDataFrame(
-            [
-                ("http://h.com/a/1/p42",),
-                ("http://h.com/a/9/p7",),
-                ("http://h.com/h/0cc175b9c0f1b6a831c399e269772661",),
-                ("http://h.com/h/92eb5ffee6ae2fec3ad71c777531578f",),
-                ("http://h.com/static/about",),
-            ],
-            ["url"],
-        )
-        out = {r.path_template: r.n_urls for r in url_templates(urls, min_urls=2).collect()}
-        assert out == {"/a/{n}/p{n}": 2, "/h/{hex}": 2}

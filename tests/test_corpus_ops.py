@@ -38,26 +38,6 @@ def test_assign_split_deterministic_and_proportional(spark):
     assert 0.06 <= c["test"] / 2000 <= 0.14
 
 
-def test_contamination_detects_planted_ngram(spark):
-    from html_parser_spark.ops.corpus import contamination_check
-
-    train_id = next(i for i in range(1000) if _split_of(i) == "train")
-    test_ids = [i for i in range(1000) if _split_of(i) == "test"][:2]
-    leaked = "w1 w2 w3 w4 w5 w6 w7 w8"  # one exact 8-gram from the train doc
-    rows = [
-        (train_id, f"{leaked} tail1 tail2 tail3"),
-        (test_ids[0], f"head1 head2 {leaked} end1"),
-        (test_ids[1], "c1 c2 c3 c4 c5 c6 c7 c8 c9 c10"),  # clean
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r for r in contamination_check(docs).collect()}
-    assert set(got) == set(test_ids)
-    dirty, clean = got[test_ids[0]], got[test_ids[1]]
-    assert dirty.contaminated == 1 and dirty.n_shingles == 4
-    assert abs(dirty.contaminated_frac - 0.25) < 1e-9
-    assert clean.contaminated == 0 and clean.contaminated_frac == 0.0
-
-
 def test_repetition_stats_hand_checked(spark):
     from html_parser_spark.ops.corpus import repetition_stats
 
@@ -205,28 +185,6 @@ def test_clean_web_text_nfc(spark):
     assert r["clean_text"] == "café zerowidth"  # composed é, ZWSP gone
     plan = clean_web_text(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and plan.count("ArrowEvalPython") == 1
-
-
-def test_trigram_familiarity(spark):
-    from html_parser_spark.ops.text import (
-        train_lang_profiles,
-        trigram_familiarity,
-    )
-
-    rows = [
-        (1, "the cat sat on the mat with the hat", "en"),
-        (2, "the cat sat on the mat", "en"),
-        (3, "zzqx vvkw jjpy qqrr zzqx", "en"),  # alien trigrams, same tag
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text", "lang"])
-    prof = train_lang_profiles(docs, top_n=30)
-    fam = {r["doc_id"]: r for r in trigram_familiarity(docs, prof).collect()}
-    # in-distribution docs: most grams known; the alien doc: far fewer
-    r1, r3 = fam[1], fam[3]
-    assert r1["n_known"] > 0 and r1["n_grams"] >= r1["n_known"]
-    assert r3["n_known"] / r3["n_grams"] < r1["n_known"] / r1["n_grams"]
-    plan = trigram_familiarity(docs, prof)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
 
 
 def test_chunk_plan_null_text_yields_no_rows(spark):
@@ -538,55 +496,6 @@ def test_c4_line_filter_rules(spark):
     assert not got[5]["page_keep"] and got[5]["n_lines_in"] == 1
 
 
-def test_ngram_novelty(spark):
-    """Exact duplicates score 0, unique text scores 1, a half-shared doc
-    sits in between; short docs report NULL novelty."""
-    from html_parser_spark.ops.corpus import ngram_novelty
-
-    dup = "the quick brown fox jumps over dogs"
-    rows = [
-        (0, dup),
-        (1, dup),                                   # exact dup of 0
-        (2, "completely different words appear here today"),
-        (3, dup + " unique tail alpha beta gamma"),  # shares a prefix run
-        (4, "too short"),                            # < k tokens
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["doc_id"]: r for r in ngram_novelty(df, shingle_k=3).collect()}
-    assert got[0]["novelty"] == 0.0 and got[1]["novelty"] == 0.0
-    assert got[2]["novelty"] == 1.0
-    assert 0.0 < got[3]["novelty"] < 1.0
-    # doc 3: 12 tokens -> 10 shingles; the 5 shingles of the shared
-    # 7-token prefix also occur in docs 0/1, the bridge + tail are unique
-    assert got[3]["n_shingles"] == 10 and got[3]["n_novel"] == 5
-    assert got[4]["n_shingles"] == 0 and got[4]["novelty"] is None
-
-
-def test_script_profile(spark):
-    from html_parser_spark.ops.text import script_profile
-
-    rows = [
-        (0, "hello world plain latin"),
-        (1, "Привет мир это кириллица ok"),     # cyrillic dominates latin
-        (2, "你好世界 こんにちは 안녕"),            # han + kana + hangul = cjk
-        (3, "مرحبا بالعالم"),
-        (4, "0123 !!! ---"),                     # no script chars at all
-        (5, None),
-        (6, "αβ ab"),                            # greek==latin tie -> greek
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["doc_id"]: r for r in script_profile(df).collect()}
-    assert got[0]["dominant_script"] == "latin" and got[0]["n_cyrillic"] == 0
-    assert got[1]["dominant_script"] == "cyrillic" and got[1]["n_latin"] == 2
-    assert got[2]["dominant_script"] == "cjk" and got[2]["n_cjk"] == 11
-    assert got[3]["dominant_script"] == "arabic"
-    assert got[4]["dominant_script"] is None and got[4]["n_script_chars"] == 0
-    assert got[5]["dominant_script"] is None
-    # alphabetical tie-break: greek before latin at equal counts
-    assert got[6]["n_greek"] == got[6]["n_latin"] == 2
-    assert got[6]["dominant_script"] == "greek"
-
-
 def test_sentence_split(spark):
     from html_parser_spark.ops.text import sentence_split
 
@@ -734,61 +643,6 @@ def test_shard_manifest_partition_independent_and_dup_sensitive(spark):
     assert dupd[s]["xor_digest"] == base[s]["xor_digest"]
     assert dupd[s]["sum_digest"] != base[s]["sum_digest"]
     assert dupd[s]["n_docs"] == base[s]["n_docs"] + 2
-
-
-# ---------------------------------------------------------------------------
-# token-multiset P/R/F1 — the extraction-QA metric (ops/text.token_prf)
-# ---------------------------------------------------------------------------
-def test_token_prf_hand_computed(spark):
-    from html_parser_spark.ops.text import token_prf
-
-    rows = [
-        # got = ref → perfect
-        (0, "a b b c", "a b b c"),
-        # got lost one 'b' (recall hit) and gained 'x' (precision hit):
-        # got = {a,b,x}, ref = {a,b,b}; overlap = min-counts = a:1 b:1 = 2
-        (1, "a b x", "a b b"),
-        # duplicated paragraph must NOT hide behind set semantics:
-        # got doubles every token; overlap stays at ref's counts
-        (2, "a a b b", "a b"),
-        # one side empty / both sides empty: 0-ppm, never NULL
-        (3, "", "a b"),
-        (4, "", ""),
-    ]
-    got = {
-        r["doc_id"]: r.asDict()
-        for r in token_prf(
-            spark.createDataFrame(rows, "doc_id long, got_text string, ref_text string")
-        ).collect()
-    }
-    assert got[0]["precision_ppm"] == got[0]["recall_ppm"] == got[0]["f1_ppm"] == 1000000
-    assert got[1]["overlap"] == 2
-    assert got[1]["precision_ppm"] == 2 * 1000000 // 3
-    assert got[1]["recall_ppm"] == 2 * 1000000 // 3
-    assert got[1]["f1_ppm"] == 4 * 1000000 // 6
-    assert got[2]["overlap"] == 2 and got[2]["precision_ppm"] == 500000
-    assert got[2]["recall_ppm"] == 1000000
-    assert got[3]["n_got"] == 0 and got[3]["precision_ppm"] == 0
-    assert got[3]["recall_ppm"] == 0 and got[3]["f1_ppm"] == 0
-    assert got[4] == {
-        "doc_id": 4, "n_got": 0, "n_ref": 0, "overlap": 0,
-        "precision_ppm": 0, "recall_ppm": 0, "f1_ppm": 0,
-    }
-
-
-def test_token_prf_partition_independent(spark):
-    from html_parser_spark.ops.text import token_prf
-
-    pairs = spark.range(300).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("w"), (F.col("id") % 11).cast("string"),
-                 F.lit(" common common")).alias("got_text"),
-        F.concat(F.lit("w"), (F.col("id") % 7).cast("string"),
-                 F.lit(" common")).alias("ref_text"),
-    )
-    one = sorted(map(tuple, token_prf(pairs).collect()))
-    many = sorted(map(tuple, token_prf(pairs.repartition(23)).collect()))
-    assert one == many
 
 
 # ---------------------------------------------------------------------------

@@ -157,53 +157,3 @@ def test_curate_job_gopher_flag(spark, tmp_path, capsys):
     # the battery only drops (stop-word rule bites on the unmodified half),
     # and keeps the stop-worded half
     assert 0 < outs["gopher"]["after_quality_filter"] < outs["plain"]["after_quality_filter"]
-
-
-def test_gate_ablation_kills_and_unique_kills(spark):
-    from pyspark.sql import functions as F
-
-    from html_parser_spark.ops.gopher import gate_ablation
-
-    # 3 rules, 5 docs: d1 fails only r1 (unique), d2 fails r1+r2 (shared),
-    # d3 fails only r3 (unique), d4/d5 pass everything
-    rows = [
-        (1, False, True, True),
-        (2, False, False, True),
-        (3, True, True, False),
-        (4, True, True, True),
-        (5, True, True, True),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "r1", "r2", "r3"])
-    got = {r["rule"]: r for r in
-           gate_ablation(df, ["r1", "r2", "r3"]).collect()}
-    assert (got["r1"]["kills"], got["r1"]["unique_kills"]) == (2, 1)
-    assert (got["r2"]["kills"], got["r2"]["unique_kills"]) == (1, 0)
-    assert (got["r3"]["kills"], got["r3"]["unique_kills"]) == (1, 1)
-    assert got["r1"]["kills_ppm"] == (2 * 1000000) // 5
-    assert got["r3"]["unique_kills_ppm"] == 200000
-
-
-def test_gate_ablation_single_aggregate_plan(spark):
-    """All 2R+1 counters must ride ONE aggregate: no join, no window, no
-    per-rule pass; only the 1-row-per-partition final exchange."""
-    from html_parser_spark.ops.gopher import gate_ablation
-
-    df = spark.createDataFrame(
-        [(1, True, False)], ["doc_id", "r1", "r2"]
-    )
-    plan = (
-        gate_ablation(df, ["r1", "r2"])
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    for bad in ("Join", "Window", "ArrowEvalPython", "BatchEvalPython"):
-        assert bad not in plan, plan
-
-
-def test_gate_ablation_empty_input(spark):
-    from html_parser_spark.ops.gopher import gate_ablation
-
-    df = spark.createDataFrame([], "doc_id long, r1 boolean")
-    rows = gate_ablation(df, ["r1"]).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["kills"], r["kills_ppm"], r["unique_kills_ppm"]) == (0, 0, 0)

@@ -527,44 +527,6 @@ def test_graph_job_trustrank_and_seed_depth(spark, tmp_path, capsys):
     assert got["a.com"]["trust"] > 0
 
 
-def test_cocitation_pairs_exact(spark):
-    from html_parser_spark.ops.linkgraph import cocitation_pairs
-
-    # citers x,y both link a+b (common=2); z links a+b too but also c;
-    # w is a directory host over the cap and must not contribute
-    edges = _edges_df(
-        spark,
-        [("x", "a"), ("x", "b"),
-         ("y", "a"), ("y", "b"),
-         ("z", "a"), ("z", "b"), ("z", "c"),
-         ("w", "a"), ("w", "b"), ("w", "c"), ("w", "d")],
-    )
-    got = {
-        (r["host_a"], r["host_b"]): (r["common"], r["jaccard_bp"])
-        for r in cocitation_pairs(edges, 2, max_out_degree=3).collect()
-    }
-    # capped universe: in-degrees a=3, b=3, c=1 (w dropped)
-    assert got[("a", "b")] == (3, (3 * 10000) // (3 + 3 - 3))
-    assert ("a", "c") not in got and ("b", "c") not in got  # common=1 < 2
-    assert not any("d" in p for p in got)
-
-
-def test_cocitation_cap_bounds_fanout_and_dedups_parallel_edges(spark):
-    from html_parser_spark.ops.linkgraph import cocitation_pairs
-
-    # parallel edges collapse to one posting (distinct), so common counts
-    # citers, not link multiplicity
-    edges = _edges_df(
-        spark,
-        [("x", "a"), ("x", "a"), ("x", "b"), ("y", "a"), ("y", "b")],
-    )
-    got = cocitation_pairs(edges, 2, max_out_degree=8).collect()
-    assert len(got) == 1
-    r = got[0]
-    assert (r["host_a"], r["host_b"], r["common"]) == ("a", "b", 2)
-    assert r["jaccard_bp"] == 10000  # identical in-link sets
-
-
 # ---------------------------------------------------------------------------
 # Link reciprocity — ops/linkgraph.reciprocity
 # ---------------------------------------------------------------------------

@@ -1,6 +1,5 @@
 """Round-5 ops: stupid-backoff n-gram LM + CCNet perplexity buckets
-(ops/lm.py), PMI collocations (ops/text.pmi_bigrams) and the readability
-profile."""
+(ops/lm.py) and the readability profile."""
 
 
 def _docs(spark):
@@ -108,56 +107,6 @@ def test_lm_buckets_per_lang_thirds_and_tie_stability(spark):
         for r in perplexity_buckets(sc2, dup.select("doc_id", "lang")).collect()
     }
     assert b2 == {"head"}
-
-
-def test_pmi_hand_computed(spark):
-    from html_parser_spark.ops.text import pmi_bigrams
-
-    docs = spark.createDataFrame(
-        [
-            (1, "new york is a big city"),
-            (2, "new york new york"),
-            (3, "big city life in new york"),
-            (4, "a a a a"),
-        ],
-        ["doc_id", "text"],
-    )
-    out = [
-        (r["w1"], r["w2"], r["c_xy"], r["pmi_scaled"])
-        for r in pmi_bigrams(docs, min_count=2, k=10).collect()
-    ]
-    # N=20 tokens; (big,city): 2*20*1e4/(2*2)=100000 beats (new,york):
-    # 4*20*1e4/(4*4)=50000 beats (a,a): 3*20*1e4/25=24000
-    assert out == [
-        ("big", "city", 2, 100000),
-        ("new", "york", 4, 50000),
-        ("a", "a", 3, 24000),
-    ]
-    # min_count prunes singletons like (york, is)
-    assert all(c >= 2 for _, _, c, _ in out)
-
-
-def test_pmi_plan_takes_ordered(spark):
-    """The PMI top-k must plan TakeOrderedAndProject, never a global Sort
-    stage."""
-    import io
-    from contextlib import redirect_stdout
-
-    from html_parser_spark.ops.text import pmi_bigrams
-
-    docs = spark.createDataFrame(
-        [(i, f"w{i % 7} w{i % 5} common") for i in range(100)],
-        ["doc_id", "text"],
-    )
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        pmi_bigrams(docs, 2, 5).explain(mode="simple")
-    plan = buf.getvalue()
-    assert "TakeOrderedAndProject" in plan
-    # SortMergeJoin's per-partition sorts print `], false, 0` (the global
-    # flag is the 2nd arg); a corpus-wide global sort would print
-    # `], true, 0` — none may exist
-    assert "], true, 0" not in plan
 
 
 def test_readability_profile_hand_computed(spark):

@@ -1,12 +1,10 @@
-"""Round-5 operators: integer-exact HITS, hreflang translation clusters,
-incremental and fuzzy dedup, text outlinks, robots audit, term blocklist.
-Each op's oracle query (q_hits / q_hreflang / ...) does the cross-engine
-value-hash check; these tests pin the hand-checkable semantics and the
-scale-shape invariants.
+"""Round-5 operators: integer-exact HITS, fuzzy and reordered dedup, text
+outlinks, URL survival, term blocklist.  Each op's oracle query (q_hits /
+q_fuzzy_pairs / ...) does the cross-engine value-hash check; these tests
+pin the hand-checkable semantics and the scale-shape invariants.
 """
 
 import pytest
-from pyspark.sql import functions as F
 
 TOTAL = 10**12
 
@@ -118,52 +116,6 @@ def _pages(spark):
     )
 
 
-def test_hreflang_links_variants_and_decoys(spark):
-    from html_parser_spark.ops.web import hreflang_links
-
-    rows = hreflang_links(_pages(spark)).collect()
-    per_page = {}
-    for r in rows:
-        per_page.setdefault(r["url"], {})[r["hreflang"]] = r["href"]
-    # all three quoting/order variants parsed, hreflang lowercased,
-    # x-default kept, all three decoy links dropped
-    for url in ("https://e.com/en/1", "https://e.com/de/1"):
-        assert per_page[url] == {
-            "en": "https://e.com/en/1",
-            "de": "https://e.com/de/1",
-            "fr": "https://e.com/fr/1",
-            "x-default": "https://e.com/en/1",
-        }
-
-
-def test_hreflang_clusters_key_and_self_lang(spark):
-    from html_parser_spark.ops.web import hreflang_clusters, hreflang_links
-
-    rows = {
-        r["url"]: r
-        for r in hreflang_clusters(hreflang_links(_pages(spark))).collect()
-    }
-    # min(href set ∪ {url}) = the /de/ variant for every member
-    assert {r["cluster_id"] for r in rows.values()} == {"https://e.com/de/1"}
-    assert rows["https://e.com/en/1"]["self_hreflang"] == "en"
-    assert rows["https://e.com/de/1"]["self_hreflang"] == "de"
-    assert all(r["n_variants"] == 4 for r in rows.values())
-
-
-def test_hreflang_pairs_drop_self_and_xdefault(spark):
-    from html_parser_spark.ops.web import hreflang_links, hreflang_pairs
-
-    pairs = {
-        (r["src_url"], r["dst_url"], r["dst_lang"])
-        for r in hreflang_pairs(hreflang_links(_pages(spark))).collect()
-    }
-    assert ("https://e.com/en/1", "https://e.com/de/1", "de") in pairs
-    assert ("https://e.com/en/1", "https://e.com/fr/1", "fr") in pairs
-    # no self edges, no x-default rows
-    assert not any(s == d for s, d, _ in pairs)
-    assert not any(l == "x-default" for _, _, l in pairs)
-
-
 # ---------------------------------------------------------------------------
 # incremental LSH dedup against a persisted band index — ops/dedup.py
 # ---------------------------------------------------------------------------
@@ -189,62 +141,6 @@ def _corpus(spark):
         (14, "tiny"),                            # too short to shingle
     ]
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_incremental_dedup_elections(spark):
-    from html_parser_spark.ops.dedup import band_index, incremental_lsh_dedup
-
-    docs = _corpus(spark)
-    idx = band_index(docs.filter(F.col("doc_id") < 10), num_hashes=4, bands=2)
-    out = {
-        r["doc_id"]: r
-        for r in incremental_lsh_dedup(
-            docs.filter(F.col("doc_id") >= 10), idx, num_hashes=4, bands=2
-        ).collect()
-    }
-    assert len(out) == 5  # every batch doc gets a row
-    # exact dup of existing 0: dropped, dup_of points at the corpus
-    assert not out[10]["keep"] and out[10]["matched_existing"]
-    assert out[10]["dup_of"] == 0
-    # novel doc: kept
-    assert out[11]["keep"] and not out[11]["matched_existing"]
-    assert out[11]["dup_of"] is None
-    # within-batch pair: min id wins
-    assert out[12]["keep"] and out[13]["dup_of"] == 12 and not out[13]["keep"]
-    assert not out[13]["matched_existing"]
-    # unshingleable doc: matches nothing, kept
-    assert out[14]["keep"] and out[14]["dup_of"] is None
-
-
-def test_incremental_dedup_index_append_closes_loop(spark):
-    """Appending band_index(kept batch docs) to the store makes a re-run of
-    the SAME batch match everything against the corpus — the incremental
-    invariant that lets batch N+1 reuse batch N's state."""
-    from html_parser_spark.ops.dedup import band_index, incremental_lsh_dedup
-
-    docs = _corpus(spark)
-    batch = docs.filter(F.col("doc_id").isin(10, 11, 12, 13))
-    idx = band_index(docs.filter(F.col("doc_id") < 10), num_hashes=4, bands=2)
-    first = incremental_lsh_dedup(batch, idx, num_hashes=4, bands=2)
-    kept_ids = [r["doc_id"] for r in first.collect() if r["keep"]]
-    idx2 = idx.unionByName(
-        band_index(
-            batch.join(
-                spark.createDataFrame([(i,) for i in kept_ids], "doc_id long"),
-                "doc_id",
-            ),
-            num_hashes=4,
-            bands=2,
-        )
-    )
-    rerun = {
-        r["doc_id"]: r
-        for r in incremental_lsh_dedup(
-            batch, idx2, num_hashes=4, bands=2
-        ).collect()
-    }
-    assert all(r["matched_existing"] for r in rerun.values())
-    assert all(not r["keep"] for r in rerun.values())
 
 
 # ---------------------------------------------------------------------------
@@ -346,32 +242,6 @@ def test_reordered_duplicates_empty_and_null(spark):
     # all three normalize to the empty multiset: one group, canonical 1
     assert len(rows) == 1
     assert rows[0]["dup_count"] == 3 and rows[0]["canonical_id"] == 1
-
-
-# ---------------------------------------------------------------------------
-# Robots compliance audit — ops/robots.compliance_audit
-# ---------------------------------------------------------------------------
-def test_compliance_audit_per_host_ppm(spark):
-    from html_parser_spark.ops.robots import compliance_audit, parse_robots
-
-    robots = spark.createDataFrame(
-        [("a.com", "User-agent: *\nDisallow: /private\n")],
-        "host string, body string",
-    )
-    pages = spark.createDataFrame(
-        [("https://a.com/ok",), ("https://a.com/private/1",),
-         ("https://a.com/private/2",), ("https://a.com/also-ok",),
-         ("https://norules.net/x",)],
-        "url string",
-    )
-    rows = {r["host"]: r for r in
-            compliance_audit(pages, parse_robots(robots)).collect()}
-    a = rows["a.com"]
-    assert (a["crawled_n"], a["disallowed_n"]) == (4, 2)
-    assert a["disallowed_ppm"] == 500000
-    # host with no robots.txt: everything allowed
-    n = rows["norules.net"]
-    assert (n["crawled_n"], n["disallowed_n"], n["disallowed_ppm"]) == (1, 0, 0)
 
 
 # ---------------------------------------------------------------------------

@@ -1,12 +1,11 @@
 """Mergeable sketches + deterministic corpus shuffle — ops/sketch.py.
 
-The contract queries (q_hll_distinct / q_heavy_hitters / q_corpus_shuffle)
-do the cross-engine value-hash check; these tests pin the hand-checkable
-sketch guarantees (HLL merge losslessness + accuracy band, count-min
-never-underestimate, shuffle permutation + partition independence).
+The contract queries (q_hll_distinct / q_corpus_shuffle) do the
+cross-engine value-hash check; these tests pin the hand-checkable sketch
+guarantees (HLL merge losslessness + accuracy band, shuffle permutation +
+partition independence).
 """
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -76,47 +75,6 @@ def test_hll_grouped_and_m_validation(spark):
         assert abs(v - 200) < 0.6 * 200  # 3-sigma at m=32 (~18% sigma)
     with pytest.raises(ValueError):
         hll_registers(df, "key", (), m=48)  # 48 does not divide 256
-
-
-# ---------------------------------------------------------------------------
-# Count-min sketch — ops/sketch.count_min_*
-# ---------------------------------------------------------------------------
-def test_count_min_never_underestimates(spark):
-    from html_parser_spark.ops.sketch import count_min_build, count_min_query
-
-    # 400 distinct items over width=32 forces heavy collisions: the point
-    # estimate must still be >= the true count for EVERY item (CM guarantee)
-    items = spark.range(2000).select(
-        F.concat(F.lit("t"), (F.col("id") % 400).cast("string")).alias("tok")
-    )
-    sk = count_min_build(items, "tok", depth=4, width=32)
-    probes = items.select("tok").distinct()
-    est = count_min_query(sk, probes, "tok", depth=4, width=32)
-    truth = items.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
-    bad = (
-        est.join(truth, est["item"] == truth["tok"])
-        .where(F.col("est") < F.col("cnt"))
-        .count()
-    )
-    assert bad == 0
-
-
-def test_count_min_exact_when_wide_and_zero_for_absent(spark):
-    from html_parser_spark.ops.sketch import count_min_build, count_min_query
-
-    items = spark.createDataFrame(
-        pd.DataFrame({"tok": ["a"] * 7 + ["b"] * 3 + ["c"]})
-    )
-    sk = count_min_build(items, "tok", depth=4, width=4096)
-    assert sk.count() <= 4 * 4096
-    probes = spark.createDataFrame(pd.DataFrame({"tok": ["a", "b", "c", "nope"]}))
-    got = {
-        r["item"]: r["est"]
-        for r in count_min_query(sk, probes, "tok", depth=4, width=4096).collect()
-    }
-    # at width 4096 with 3 items, a cross-row collision for ALL 4 rows is
-    # (3/4096)^4-improbable; the sketch is exact and absent items read 0
-    assert got == {"a": 7, "b": 3, "c": 1, "nope": 0}
 
 
 # ---------------------------------------------------------------------------

@@ -158,7 +158,6 @@ def test_dedup_ops(spark):
         exact_duplicates,
         lsh_near_duplicates,
         minhash_signature,
-        simhash,
     )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(100)
@@ -166,8 +165,6 @@ def test_dedup_ops(spark):
     assert all(len(r.minhash) == 4 for r in sigs)
     dup = exact_duplicates(docs).collect()
     assert sum(r.dup_count for r in dup) == 100
-    sh = simhash(docs).collect()
-    assert all(len(r.simhash) == 60 and set(r.simhash) <= {"0", "1"} for r in sh)
     pairs = lsh_near_duplicates(docs, num_hashes=4, bands=2).collect()
     assert all(r.doc_a < r.doc_b for r in pairs)
 
@@ -241,28 +238,6 @@ def test_iceberg_checkpoint_if_available(spark, tmp_path):
     assert m3["docs"] == 40
     assert m3["docs_new"] == 0 and m3["snapshot"] == "noop"
     pages.unpersist()
-
-
-def test_lang_id_discriminative(spark):
-    """Trigram language-ID separates languages with distinct character
-    statistics (the synthetic corpus shares one vocabulary across lang tags,
-    so accuracy is validated here on a constructed bilingual corpus)."""
-    from html_parser_spark.ops.text import classify_language, train_lang_profiles
-
-    en = ["the quick brown fox jumps over the lazy dog near the river bank",
-          "a stream of words flowing through the weekly market crowds",
-          "bright mornings bring fresh thoughts and strong coffee"]
-    de = ["der schnelle braune fuchs springt über den faulen hund am flussufer",
-          "eine woche voller wörter die durch die märkte fließen",
-          "helle morgen bringen frische gedanken und starken kaffee"]
-    rows = [(i, "en", t) for i, t in enumerate(en)] + [
-        (i + 10, "de", t) for i, t in enumerate(de)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    profiles = train_lang_profiles(docs, top_n=40)
-    pred = {r.doc_id: r.pred_lang for r in classify_language(docs, profiles).collect()}
-    truth = {i: lang for i, lang, _ in rows}
-    assert pred == truth  # perfect self-classification on separable corpora
 
 
 def test_winnow_shared_substring_guarantee(spark):

@@ -213,102 +213,6 @@ def test_crawl_diff_statuses(spark):
     assert "html" not in plan.split("SortMergeJoin")[-1][:400] or "md5" in plan
 
 
-def test_feed_entries_rss_and_atom(spark):
-    from html_parser_spark.ops.web import feed_entries
-
-    rss = (
-        "<rss><channel><title>chan</title>"
-        "<item><title>First</title><link>https://a.com/1</link>"
-        "<pubDate>Mon, 01 Jan 2024 00:00:00 GMT</pubDate></item>"
-        "<item><title>Second</title><link> https://a.com/2 </link></item>"
-        "</channel></rss>"
-    )
-    atom = (
-        '<feed xmlns="http://www.w3.org/2005/Atom">'
-        "<title>feedtitle</title>"
-        '<entry><title>Entry</title><link rel="alternate" href="https://b.com/e"/>'
-        "<published>2024-01-02T00:00:00Z</published></entry>"
-        "<entry><title></title></entry>"
-        "</feed>"
-    )
-    df = spark.createDataFrame([("a.com", rss), ("b.com", atom)], ["host", "body"])
-    rows = feed_entries(df).collect()
-    got = {(r["host"], r["kind"], r["title"]): (r["link"], r["published"]) for r in rows}
-    assert got[("a.com", "rss", "First")] == (
-        "https://a.com/1", "Mon, 01 Jan 2024 00:00:00 GMT")
-    assert got[("a.com", "rss", "Second")] == ("https://a.com/2", None)
-    assert got[("b.com", "atom", "Entry")] == (
-        "https://b.com/e", "2024-01-02T00:00:00Z")
-    assert got[("b.com", "atom", None)] == (None, None)
-    # channel/feed-level <title> must NOT leak into entries
-    assert ("a.com", "rss", "chan") not in got
-    plan = feed_entries(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and "Python" not in plan
-
-
-def test_soft_404_flags(spark):
-    from html_parser_spark.ops.web import soft_404_flags
-
-    rows = [
-        (1, "404 Not Found", "The page you requested was not found."),
-        (2, "Great Article", "word " * 300 + " a 404 was mentioned here"),
-        (3, "Great Article", "short text that says page not found"),
-        (4, "Normal", "perfectly fine long content " * 40),
-        (5, None, None),
-        (6, "Forbidden City travel guide", "long travel content " * 60),
-        (7, "Results 1-4040 of 9000", "short listing page"),
-        (8, "Error 404", "word " * 300),  # 404 title on a FULL page: kept
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "title", "main_text"])
-    got = {r["doc_id"]: r for r in soft_404_flags(df).collect()}
-    assert got[1]["soft404"] == 1          # title hit + short
-    assert got[2]["soft404"] == 0          # long body mentioning 404: kept
-    assert got[2]["body_404"] == 1         # phrase IS in the head — length saves it
-    assert got[3]["soft404"] == 1          # short body + phrase
-    assert got[4]["soft404"] == 0
-    # doc 5: both NULL -> short but no phrase hit -> kept
-    assert got[5]["short_body"] == 1
-    assert got[5]["title_404"] == 0 and got[5]["body_404"] == 0
-    assert got[5]["soft404"] == 0
-    # title phrases are segment-anchored now: 'Forbidden' followed by
-    # real content words is not an error title
-    assert got[6]["title_404"] == 0 and got[6]["soft404"] == 0
-    assert got[7]["title_404"] == 0        # 4040 is not a standalone 404
-    assert got[8]["title_404"] == 1 and got[8]["soft404"] == 0  # full body kept
-    plan = soft_404_flags(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and "Python" not in plan
-
-
-def test_soft_404_adversarial_battery(spark):
-    """Hard negatives (short, legitimate pages whose titles contain error
-    words) must stay; decorated true positives must still be caught.
-    Pins the precision side of the rule next to the closed-form oracle."""
-    from html_parser_spark.ops.web import soft_404_flags
-
-    negatives = [
-        (1, "Forbidden City", "A short guide to the palace complex."),
-        (2, "Coming Soon Movies 2026", "Short trailer listing."),
-        (3, "My blog – under construction notes", "Short essay on tooling."),
-        (4, "Not Found Records (band)", "Short artist bio."),  # trailing words
-        (5, "Area 4041 overview", "Short stub."),              # 404 inside 4041
-    ]
-    positives = [
-        (11, "Oops! Page not found", "It may have been moved."),
-        (12, "404 Not Found | example.com", "nginx"),
-        (13, "Under Construction", "Check back soon."),
-        (14, "Sorry, this page does not exist", "Try the homepage."),
-        (15, "example.com — Access Denied", "You lack permission."),
-    ]
-    df = spark.createDataFrame(
-        negatives + positives, ["doc_id", "title", "main_text"]
-    )
-    got = {r["doc_id"]: r["soft404"] for r in soft_404_flags(df).collect()}
-    false_pos = [i for i, *_ in negatives if got[i] == 1]
-    false_neg = [i for i, *_ in positives if got[i] == 0]
-    assert false_pos == [], f"hard negatives flagged: {false_pos}"
-    assert false_neg == [], f"true soft-404s missed: {false_neg}"
-
-
 def test_surt_key_families(spark):
     """SURT keys: reversed host labels, www strip, port drop, empty path,
     sorted query params, lowercased relative passthrough."""

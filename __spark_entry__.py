@@ -1574,16 +1574,16 @@ def _bpe_word_sql() -> str:
         FROM s
     """,
     plan=(
-        "learned-subword corpus encode: scan → single mapInPandas (merges in the "
+        "learned-subword corpus encode: scan → single mapInArrow (merges in the "
         "closure), zero shuffle"
     ),
-    must=["MapInPandas"],
+    must=["MapInArrow"],
     must_not=["Exchange", "Window", "Join", "BatchEvalPython"],
 )
 def q_bpe_encode(spark, sf_dir):
     """Learned-subword (BPE) corpus encoding (ops/bpe.bpe_encode): apply a
     deterministic seed-trained merge list to every document — ONE
-    mapInPandas stage, zero shuffle, merges shipped in the closure (the
+    mapInArrow stage, zero shuffle, merges shipped in the closure (the
     broadcast-dim pattern), per-batch word memoization riding Zipf.
     Returns (doc_id, n_words, n_tokens, bpe_text).  The oracle replays the
     encode symbolically in DuckDB: each word becomes a ``‖``-delimited
@@ -1824,15 +1824,15 @@ def q_temperature_mix(spark, sf_dir):
                'text/plain' AS content_type
         FROM documents
     """,
-    plan="WET sidecar read is the same shuffle-free scan → single mapInPandas",
-    must=["MapInPandas"],
+    plan="WET sidecar read is the same shuffle-free scan → single mapInArrow",
+    must=["MapInArrow"],
     must_not=["Exchange", "Window"],
 )
 def q_wet_roundtrip(spark, sf_dir):
     """WET sidecar sink (Common Crawl's ``*.warc.wet.gz`` extracted-text
     format, sources/warc.write_wet_files): synthesize per-doc extracted
     text, write it as per-record-gzip conversion records, read it back
-    through the same binaryFile→mapInPandas parser (conversion records
+    through the same binaryFile→mapInArrow parser (conversion records
     carry raw bodies — no HTTP splitting), and emit per-url byte
     accounting.  The oracle recomputes the columns straight from
     ``documents``; a hash match proves the conversion-record writer→reader
@@ -1892,10 +1892,10 @@ def q_wet_roundtrip(spark, sf_dir):
         FROM documents
     """,
     plan=(
-        "WAT sidecar read: shuffle-free scan → single mapInPandas, JSON fields "
+        "WAT sidecar read: shuffle-free scan → single mapInArrow, JSON fields "
         "re-extracted JVM-side"
     ),
-    must=["MapInPandas"],
+    must=["MapInArrow"],
     must_not=["Exchange", "Window"],
 )
 def q_wat_roundtrip(spark, sf_dir):
@@ -3375,14 +3375,14 @@ def q_domain_cap(spark, sf_dir):
                'text/html; charset=utf-8' AS content_type
         FROM documents
     """,
-    plan="WARC ingest is a shuffle-free scan → single mapInPandas",
-    must=["MapInPandas"],
+    plan="WARC ingest is a shuffle-free scan → single mapInArrow",
+    must=["MapInArrow"],
     must_not=["Exchange", "Window"],  # the READ side must not shuffle
 )
 def q_warc_roundtrip(spark, sf_dir):
     """WARC source+sink (Common-Crawl container format): synthesize a crawl
     from the documents table, write it as per-record-gzip ``.warc.gz`` part
-    files, read it back through the binaryFile→mapInPandas parser, and emit
+    files, read it back through the binaryFile→mapInArrow parser, and emit
     per-url byte accounting.  The DuckDB oracle computes the same columns
     straight from ``documents`` — a hash match proves the writer→reader
     round-trip is byte-exact (md5 over the body bytes) for every record."""
@@ -5540,11 +5540,11 @@ def q_code_profile(spark, sf_dir):
         SELECT doc_id, TRUE AS ok FROM documents
     """,
     plan=(
-        "tokenizer decode QA: ONE MapInPandas encode stage, pure-codegen decode (two "
+        "tokenizer decode QA: ONE MapInArrow encode stage, pure-codegen decode (two "
         "replaces), ONE doc_id equi-join for the identity check; no window, no "
         "cartesian product"
     ),
-    must=["MapInPandas", "Join"],
+    must=["MapInArrow", "Join"],
     must_not=["CartesianProduct", "Window", "BatchEvalPython"],
 )
 def q_bpe_roundtrip(spark, sf_dir):

@@ -69,6 +69,9 @@ def install() -> None:
             finder.invalidate_caches()
 
 
+_settled = False
+
+
 def settle() -> None:
     """Collect, then freeze what survives, unless this process's heap is
     frozen already (so only its first call does anything).
@@ -76,7 +79,14 @@ def settle() -> None:
     Run after a worker's first kernel batch, not at package import: the
     Arrow serializers and the kernel's own lazy imports load after the UDF
     is unpickled.  The collect runs first, so earlier cyclic garbage is
-    freed, not frozen; later garbage is collected as before."""
+    freed, not frozen; later garbage is collected as before.  Whether it
+    ran is kept in a module flag: ``gc.get_freeze_count()`` walks the whole
+    permanent generation (about 2 ms once a worker's heap is frozen), and
+    this runs after every batch."""
+    global _settled
+    if _settled:
+        return
+    _settled = True
     if not gc.get_freeze_count():
         gc.collect()
         gc.freeze()

@@ -1,7 +1,7 @@
 """Per-format parse kernels (pure Python, per-document).
 
 Each format parser is a pure function ``bytes -> dict`` run inside the
-Arrow-batched pandas UDF (``html_parser_spark.spark.pipeline``); nothing here
+Arrow row UDF (``html_parser_spark.spark.pipeline``); nothing here
 touches Spark.  Format detection is a cheap string probe of the document head
 — see ``detect.py``.
 """

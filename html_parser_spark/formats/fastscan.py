@@ -152,7 +152,7 @@ def _finish_p(parts, pieces):
     raw = "".join(parts)
     for ln in raw.split("\n"):
         pieces.append(
-            (_WS_RUN.sub(" ", ln) if _WS_RUN_NEEDED.search(ln) else ln).strip()
+            (_WS_RUN.sub(" ", ln) if _WS_RUN_NEEDED.search(ln) else ln).strip(" ")
         )
 
 

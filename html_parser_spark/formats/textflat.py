@@ -58,7 +58,7 @@ def inner_text(el: Node) -> str:
         walk(c)
     raw = "".join(parts)
     lines = [
-        (_WS_RUN.sub(" ", ln) if _WS_RUN_NEEDED.search(ln) else ln).strip()
+        (_WS_RUN.sub(" ", ln) if _WS_RUN_NEEDED.search(ln) else ln).strip(" ")
         for ln in raw.split("\n")
     ]
     return "\n".join(lines)

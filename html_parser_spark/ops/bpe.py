@@ -23,7 +23,7 @@ production tokenizer trainers actually scale:
   UDF closure (a ≤vocab-size list — the broadcast-dim pattern), applied
   in priority order per word with per-batch word memoization (Zipf again:
   a 10k-row Arrow batch hits a few hundred distinct words).  ONE
-  mapInPandas stage, zero shuffle.
+  mapInArrow stage, zero shuffle.
 
 Word model: character symbols plus a terminal ``</w>`` symbol (the
 original BPE formulation), so merges can distinguish word-final from
@@ -35,8 +35,11 @@ from __future__ import annotations
 from collections import Counter
 from typing import Iterator, Sequence
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_type
+
+from html_parser_spark.spark.pipeline import to_arrow
 
 EOW = "</w>"
 
@@ -149,28 +152,17 @@ BPE_SCHEMA = T.StructType(
 )
 
 
-def bpe_encode(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Corpus encode with a learned merge list: ONE mapInPandas stage,
-    merges in the closure (the broadcast-dim pattern), per-batch word
-    memoization.  Returns (doc_id, n_words, n_tokens, bpe_text) where
-    bpe_text is the space-joined token stream (``</w>`` markers kept)."""
-    ranks = {tuple(p): i for i, p in enumerate(merges)}
-    pruned = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.lower(F.trim(F.col(text_col))).alias("text"),
-    )
+def _encode_batches(ranks: dict[tuple[str, str], int]):
+    """The mapInArrow body of :func:`bpe_encode`: (doc_id, text) batches →
+    :data:`BPE_SCHEMA` batches, memoizing each word's tokens."""
+    arrow_type = to_arrow_type(BPE_SCHEMA)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in BPE_SCHEMA.fields]
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         memo: dict[str, list[str]] = {}
-        for pdf in it:
+        for batch in it:
             rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
+            docs = zip(batch.column("doc_id").to_pylist(), batch.column("text").to_pylist())
+            for did, text in docs:
                 words = (text or "").split()
                 toks: list[str] = []
                 for w in words:
@@ -187,9 +179,27 @@ def bpe_encode(
                         "bpe_text": " ".join(toks),
                     }
                 )
-            yield pd.DataFrame(rows, columns=cols)
+            yield pa.RecordBatch.from_struct_array(to_arrow(rows, arrow_type))
 
-    return pruned.mapInPandas(batches, BPE_SCHEMA)
+    return batches
+
+
+def bpe_encode(
+    docs: DataFrame,
+    merges: list[tuple[str, str]],
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Corpus encode with a learned merge list: ONE mapInArrow stage,
+    merges in the closure (the broadcast-dim pattern), per-batch word
+    memoization.  Returns (doc_id, n_words, n_tokens, bpe_text) where
+    bpe_text is the space-joined token stream (``</w>`` markers kept)."""
+    ranks = {tuple(p): i for i, p in enumerate(merges)}
+    pruned = docs.select(
+        F.col(id_col).cast("long").alias("doc_id"),
+        F.lower(F.trim(F.col(text_col))).alias("text"),
+    )
+    return pruned.mapInArrow(_encode_batches(ranks), BPE_SCHEMA)
 
 
 def bpe_decode(

@@ -1,7 +1,23 @@
-"""External source/sink connectors beyond parquet/Iceberg (WARC, …), and
-:func:`read_pages`, the one reader of a job's ``--pages`` spec."""
+"""External source/sink connectors beyond parquet/Iceberg (WARC, …),
+:func:`read_pages`, the one reader of a job's ``--pages`` spec, and
+:func:`load_glob`, the file load both archive readers share."""
 
 from __future__ import annotations
+
+import os
+
+
+def load_glob(reader, path):
+    """``reader.load(path)``.  A wildcard in the last part of a path string
+    loads as directory + ``pathGlobFilter``: the same files, but Spark's
+    streaming-metadata probe does not stat the literal wildcard path, which
+    logs a FileNotFoundException WARN with its stack trace on every read.
+    A list of paths loads as given."""
+    if isinstance(path, str):
+        head, tail = os.path.split(path)
+        if "*" in tail and "*" not in head:
+            return reader.option("pathGlobFilter", tail).load(head)
+    return reader.load(path)
 
 
 def read_pages(spark, spec: str, include_fixtures: bool, warc_extents: bool = False):

@@ -37,6 +37,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from html_parser_spark.ops.web import surt_key
+from html_parser_spark.sources import load_glob
 
 # JSON payload fields, in envelope order (Common Crawl's field set for
 # response captures; all values serialized as strings)
@@ -145,8 +146,9 @@ def read_cdxj(spark: SparkSession, paths: "str | list[str]") -> DataFrame:
     Parallel ``spark.read.text`` scan (gzip decoded by the source), then
     regexp split + ``from_json`` + casts — whole plan JVM-side, zero
     Python.  Numeric payload strings cast back to INT/BIGINT."""
-    raw = spark.read.text(
-        list(paths) if not isinstance(paths, str) else paths
+    raw = load_glob(
+        spark.read.format("text"),
+        paths if isinstance(paths, str) else list(paths),
     )
     key = F.regexp_extract("value", r"^(\S+) (\d{14}) (.*)$", 1)
     ts14 = F.regexp_extract("value", r"^(\S+) (\d{14}) (.*)$", 2)

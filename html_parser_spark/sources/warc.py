@@ -16,9 +16,10 @@ Design for 100 TB:
   ``spark.sql.sources.binaryFile.maxLength`` — 2 GB hard cap per file.)
 * **Record SERIALIZATION is pure column expressions** (concat/encode/md5 —
   whole-stage codegen); Python appears only for per-record gzip members
-  (Arrow-batched pandas UDF, ~100 MB/s/core — comparable to the gzip cost
-  itself) and for the record PARSER (mapInPandas; gzip inflate + header
-  scan are byte-bound, not row-bound).
+  (an Arrow row UDF, ``spark/pipeline.py:row_udf``; the gzip itself is the
+  cost) and for the record PARSER (mapInArrow; gzip inflate + header scan
+  are byte-bound, not row-bound).  Both build their Arrow output with
+  ``spark/pipeline.py:to_arrow``, so no worker loads pandas.
 * **Per-record gzip members** (the Common Crawl layout): a ``.warc.gz`` is
   a concatenation of independently-deflated members, so a future range
   reader can seek to member boundaries; concatenating part files with
@@ -45,8 +46,12 @@ import zlib
 from collections.abc import Iterator
 from datetime import datetime
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_type
+
+from html_parser_spark.sources import load_glob
+from html_parser_spark.spark.pipeline import row_udf, to_arrow
 
 WARC_DATE_FMT = "yyyy-MM-dd'T'HH:mm:ss'Z'"
 _PY_DATE_FMT = "%Y-%m-%dT%H:%M:%SZ"
@@ -218,10 +223,12 @@ def write_wat_files(pages: DataFrame, out_dir: str, compress: bool = True) -> in
     )
 
 
-@F.pandas_udf(T.BinaryType())
-def _gzip_member_udf(rec: pd.Series) -> pd.Series:
+def _gzip_member(rec: bytes) -> bytes:
     # mtime=0 → deterministic member bytes for a given record
-    return rec.map(lambda b: gzip.compress(b, compresslevel=6, mtime=0))
+    return gzip.compress(rec, compresslevel=6, mtime=0)
+
+
+_gzip_member_udf = row_udf(_gzip_member, T.BinaryType())
 
 
 def to_warc_records(pages: DataFrame, compress: bool = True) -> DataFrame:
@@ -666,51 +673,43 @@ def _reader_schema(with_offsets: bool, with_revisits: bool) -> T.StructType:
     return T.StructType(fields)
 
 
-def _record_rows(
-    path: str,
-    blob: bytes,
-    rows: dict,
-    with_offsets: bool,
-    with_revisits: bool = False,
-) -> None:
+def _records(path: str, blob: bytes) -> Iterator[dict]:
+    """One row per record of ``blob``, with every field of
+    :func:`_reader_schema` (a reader keeps the fields of its schema).
+    WARC-Date is UTC by spec, so its naive datetimes are UTC."""
     for headers, payload, off, length in iter_warc_records_extents(blob):
         wtype = headers.get("warc-type", "")
         if wtype in ("response", "request"):
             status, ctype, body = _split_http(payload)
         else:  # resource / conversion / revisit / warcinfo carry raw bodies
             status, ctype, body = None, headers.get("content-type"), payload
-        ts = headers.get("warc-date")
-        rows["url"].append(headers.get("warc-target-uri"))
-        rows["warc_ts"].append(_parse_warc_date(ts))
-        rows["html"].append(body)
-        rows["content_type"].append(ctype)
-        rows["http_status"].append(status)
-        rows["warc_type"].append(wtype)
-        rows["record_id"].append(headers.get("warc-record-id"))
-        rows["source_file"].append(path)
-        if with_offsets:
-            rows["rec_offset"].append(off)
-            rows["rec_length"].append(length)
-        if with_revisits:
-            rows["payload_digest"].append(headers.get("warc-payload-digest"))
-            rows["refers_to_url"].append(
-                headers.get("warc-refers-to-target-uri")
-            )
-            rows["refers_to_ts"].append(
-                _parse_warc_date(headers.get("warc-refers-to-date"))
-            )
+        yield {
+            "url": headers.get("warc-target-uri"),
+            "warc_ts": _parse_warc_date(headers.get("warc-date")),
+            "html": body,
+            "content_type": ctype,
+            "http_status": status,
+            "warc_type": wtype,
+            "record_id": headers.get("warc-record-id"),
+            "source_file": path,
+            "rec_offset": off,
+            "rec_length": length,
+            "payload_digest": headers.get("warc-payload-digest"),
+            "refers_to_url": headers.get("warc-refers-to-target-uri"),
+            "refers_to_ts": _parse_warc_date(headers.get("warc-refers-to-date")),
+        }
 
 
 def _parse_files_fn(with_offsets: bool, with_revisits: bool = False):
-    schema = _reader_schema(with_offsets, with_revisits)
-    cols = [f.name for f in schema.fields]
+    """The mapInArrow body of :func:`read_warc`: (path, content) batches of
+    whole files → record batches of :func:`_reader_schema`."""
+    arrow_type = to_arrow_type(_reader_schema(with_offsets, with_revisits))
 
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                _record_rows(path, bytes(content), rows, with_offsets, with_revisits)
-            yield pd.DataFrame(rows, columns=cols)
+    def _parse(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            files = zip(batch.column("path").to_pylist(), batch.column("content").to_pylist())
+            rows = [rec for path, content in files for rec in _records(path, content)]
+            yield pa.RecordBatch.from_struct_array(to_arrow(rows, arrow_type))
 
     return _parse
 
@@ -724,7 +723,7 @@ def read_warc(
     """Crawl archive(s) → pages DataFrame (url, warc_ts, html, …).
 
     ``binaryFile`` scan (one row/task per file, never split) → ONE
-    mapInPandas stage.  The result feeds ``spark.pipeline.extract_pages``
+    mapInArrow stage.  The result feeds ``spark.pipeline.extract_pages``
     directly or lands into the Iceberg pages table via a plain write —
     either way the whole ingest is a shuffle-free map.
 
@@ -739,16 +738,8 @@ def read_warc(
     refers_to_ts) — the WARC 1.1 revisit headers a digest-deduplicated
     archive needs to be re-inflated (:func:`resolve_revisits`); they are
     NULL on non-revisit records."""
-    reader = spark.read.format("binaryFile")
-    head, tail = os.path.split(path)
-    if "*" in tail and "*" not in head:
-        # dir + pathGlobFilter instead of a raw glob: same files, but the
-        # source's streaming-metadata probe doesn't stat the literal
-        # wildcard path (noisy FileNotFound WARN in driver logs)
-        reader = reader.option("pathGlobFilter", tail)
-        path = head
-    files = reader.load(path)
-    return files.select("path", "content").mapInPandas(
+    files = load_glob(spark.read.format("binaryFile"), path)
+    return files.select("path", "content").mapInArrow(
         _parse_files_fn(with_offsets, with_revisits),
         schema=_reader_schema(with_offsets, with_revisits),
     )
@@ -787,33 +778,29 @@ def fetch_warc_records(index: DataFrame) -> DataFrame:
         .repartition("source_file")
         .sortWithinPartitions("source_file", "rec_offset")
     )
-    out_cols = [f.name for f in WARC_PAGE_SCHEMA.fields]
+    arrow_type = to_arrow_type(WARC_PAGE_SCHEMA)
 
-    def _fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _fetch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         open_path, fh = None, None
         try:
-            for pdf in batches:
-                rows: dict[str, list] = {c: [] for c in out_cols}
-                for t in pdf.itertuples(index=False):
-                    if t.source_file != open_path:
+            for batch in batches:
+                rows = []
+                for want in batch.to_pylist():
+                    if want["source_file"] != open_path:
                         if fh is not None:
                             fh.close()
-                        open_path = t.source_file
+                        open_path = want["source_file"]
                         fh = open(_local_path(open_path), "rb")
-                    fh.seek(int(t.rec_offset))
-                    blob = fh.read(int(t.rec_length))
-                    got: dict[str, list] = {c: [] for c in out_cols}
-                    _record_rows(open_path, blob, got, with_offsets=False)
-                    keep = range(len(got["url"]))
-                    if want_id:
-                        keep = [
-                            i for i in keep if got["record_id"][i] == t.record_id
-                        ]
-                    for c in out_cols:
-                        rows[c].extend(got[c][i] for i in keep)
-                yield pd.DataFrame(rows, columns=out_cols)
+                    fh.seek(want["rec_offset"])
+                    blob = fh.read(want["rec_length"])
+                    rows.extend(
+                        rec
+                        for rec in _records(open_path, blob)
+                        if not want_id or rec["record_id"] == want["record_id"]
+                    )
+                yield pa.RecordBatch.from_struct_array(to_arrow(rows, arrow_type))
         finally:
             if fh is not None:
                 fh.close()
 
-    return ranges.mapInPandas(_fetch, schema=WARC_PAGE_SCHEMA)
+    return ranges.mapInArrow(_fetch, schema=WARC_PAGE_SCHEMA)

@@ -205,7 +205,7 @@ class IcebergCheckpointedExtraction:
             todo, num_partitions=num_partitions, max_html_bytes=max_html_bytes
         ).withColumn("part_id", F.spark_partition_id())
         # Materialize the parse ONCE into a staging table; both the MERGE and
-        # the lineage INSERT then read the staged rows, so the pandas-UDF
+        # the lineage INSERT then read the staged rows, so the Arrow-UDF
         # kernel executes a single time per run and part_id is stable across
         # the two statements (an uncached temp view would re-run the whole
         # extraction for each consumer).  The staging name is per-run unique

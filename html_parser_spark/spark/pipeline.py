@@ -22,6 +22,10 @@ as one :func:`kernel_stage`; every other per-row Python step is a
 
 from __future__ import annotations
 
+from array import array
+from datetime import datetime, timedelta, timezone
+from itertools import accumulate, chain, repeat
+from operator import is_not
 from typing import Callable
 
 import pyarrow as pa
@@ -63,21 +67,94 @@ def _fill(f: T.StructField, fill: dict | None) -> str:
     return f"CAST({(fill or {}).get(f.name, default)} AS {f.dataType.simpleString()})"
 
 
+_BITS = bytes.maketrans(b"\0\1", b"01")
+_INT_CODES = {pa.int32(): "i", pa.int64(): "q"}
+_TIMESTAMP = pa.timestamp("us", tz="UTC")
+_EPOCH = datetime(1970, 1, 1)
+_EPOCH_UTC = _EPOCH.replace(tzinfo=timezone.utc)
+_MICROSECOND = timedelta(microseconds=1)
+# what a NULL slot holds under its validity bit; lists () and structs {}
+_NULL_AS = {
+    pa.string(): "", pa.binary(): b"", pa.bool_(): False,
+    pa.int32(): 0, pa.int64(): 0, _TIMESTAMP: _EPOCH,
+}
+
+
+def _bitmap(flags: bytes) -> pa.Buffer:
+    """Arrow bitmap (slot i = bit i, LSB first) of ``flags``, one 0/1 byte
+    per slot: the bytes, reversed and read as base-2 digits, are the
+    bitmap's little-endian integer."""
+    bits = int(flags[::-1].translate(_BITS) or b"0", 2)
+    return pa.py_buffer(bits.to_bytes((len(flags) + 7) // 8, "little"))
+
+
+def to_arrow(values: list, arrow_type: pa.DataType) -> pa.Array:
+    """``values`` (Python rows, None for NULL at any level) as one Arrow
+    array of ``arrow_type``, assembled from its validity, offset and data
+    buffers.  Types: string, binary, bool, int32, int64,
+    ``timestamp[us, UTC]`` (a naive datetime counts as UTC), list and
+    struct (dicts keyed by field name; a missing key is NULL).  Any other
+    type raises TypeError.  An int outside its field, or more than 2 GiB of
+    string or binary data in one array (32-bit offsets), raises
+    OverflowError.
+
+    Built with the stdlib and ``pa.Array.from_buffers`` only: pyarrow
+    imports pandas the first time ``pa.array`` converts Python objects,
+    which costs a Python worker about 27 MB."""
+    n = len(values)
+    nulls = values.count(None)
+    valid = None
+    if nulls:
+        valid = _bitmap(bytes(map(is_not, values, repeat(None))))
+        fill = _NULL_AS.get(arrow_type, {} if pa.types.is_struct(arrow_type) else ())
+        values = [fill if v is None else v for v in values]
+    if pa.types.is_string(arrow_type) or pa.types.is_binary(arrow_type):
+        blobs = list(map(str.encode if pa.types.is_string(arrow_type) else bytes, values))
+        offsets = array("i", accumulate(map(len, blobs), initial=0))
+        buffers = [valid, pa.py_buffer(offsets), pa.py_buffer(b"".join(blobs))]
+        return pa.Array.from_buffers(arrow_type, n, buffers, nulls)
+    if arrow_type in _INT_CODES:
+        data = array(_INT_CODES[arrow_type], values)
+        return pa.Array.from_buffers(arrow_type, n, [valid, pa.py_buffer(data)], nulls)
+    if pa.types.is_boolean(arrow_type):
+        data = _bitmap(bytes(v is True for v in values))
+        return pa.Array.from_buffers(arrow_type, n, [valid, data], nulls)
+    if arrow_type == _TIMESTAMP:
+        micros = array(
+            "q", [(v - (_EPOCH_UTC if v.tzinfo else _EPOCH)) // _MICROSECOND for v in values]
+        )
+        return pa.Array.from_buffers(arrow_type, n, [valid, pa.py_buffer(micros)], nulls)
+    if pa.types.is_list(arrow_type):
+        offsets = array("i", accumulate(map(len, values), initial=0))
+        child = to_arrow(list(chain.from_iterable(values)), arrow_type.value_type)
+        return pa.Array.from_buffers(
+            arrow_type, n, [valid, pa.py_buffer(offsets)], nulls, children=[child]
+        )
+    if pa.types.is_struct(arrow_type):
+        children = [
+            to_arrow(list(map(dict.get, values, repeat(f.name))), f.type) for f in arrow_type
+        ]
+        return pa.Array.from_buffers(arrow_type, n, [valid], nulls, children=children)
+    raise TypeError(f"to_arrow: no conversion to {arrow_type}")
+
+
 def row_udf(fn: Callable, return_type: T.DataType):
     """``fn`` applied per row as ONE Arrow UDF of type ``return_type``: the
     one form of every per-row Python step.  Each batch's columns reach
     Python as plain lists (``to_pylist``: lists and dicts, no numpy or
-    pandas) and ``fn(*row)`` values go back as one Arrow array.  A NULL
-    first argument gives NULL without calling ``fn``.  After each batch the
+    pandas) and ``fn(*row)`` values go back as one Arrow array built by
+    :func:`to_arrow` from raw buffers, not by ``pa.array``, whose first
+    call on Python objects loads pandas into the worker.  A NULL first
+    argument gives NULL without calling ``fn``.  After each batch the
     worker settles its heap (``_pyworker.settle``)."""
     arrow_type = to_arrow_type(return_type)
 
     @F.arrow_udf(return_type)
     def per_row(first: pa.Array, *rest: pa.Array) -> pa.Array:
         rows = zip(first.to_pylist(), *(c.to_pylist() for c in rest))
-        out = pa.array(
+        out = to_arrow(
             [None if head is None else fn(head, *tail) for head, *tail in rows],
-            type=arrow_type,
+            arrow_type,
         )
         _pyworker.settle()
         return out

@@ -3,7 +3,7 @@
 Pins the classic Sennrich et al. 2016 behavior (the low/lower/newest/widest
 corpus), training determinism, the sequential-vs-priority encode
 equivalence the DuckDB oracle relies on, and the Spark corpus paths
-(word_freqs reduction, mapInPandas encode)."""
+(word_freqs reduction, mapInArrow encode)."""
 
 import random
 from collections import Counter

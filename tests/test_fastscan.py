@@ -18,7 +18,7 @@ from html_parser_spark.dom import decode_html_bytes, parse_html
 from html_parser_spark.formats.fastscan import scan_format_a
 from html_parser_spark.formats.format_a import parse_format_a_doc
 from html_parser_spark.formats.format_a import post_process
-from html_parser_spark.formats.textflat import extract_text_doc
+from html_parser_spark.formats.textflat import extract_text, extract_text_doc
 
 _FIXTURE_GROUPS = [
     ("lez-rus-35k/dictionary/letters", ".html"),
@@ -313,3 +313,19 @@ def test_fastscan_declines_empty_text():
     """No P20-visible text → None (the DOM path owns the body fallback)."""
     assert scan_format_a("<div>no paragraphs here</div>") is None
     assert scan_format_a('<p class="af1"></p>') is None
+
+
+@pytest.mark.parametrize(
+    "page, want",
+    [
+        ("<p>\xa0a \xa0</p><p>b</p>", "\xa0a b"),
+        ("<p>\u2003кьил\x85</p>", "\u2003кьил\x85"),
+        ("<p> \t a\x1f</p>", "a\x1f"),
+    ],
+)
+def test_line_edges_strip_only_collapsed_whitespace(page, want):
+    """innerText trims each line of the spaces, tabs and segment breaks it
+    collapses, not of NBSP, U+001C–U+001F, U+0085 or U+2000–U+200A
+    (which ``str.strip()`` also removes); the DOM path and fastscan agree."""
+    assert extract_text(page) == want
+    assert scan_format_a(page)[0] == want

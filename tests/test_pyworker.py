@@ -10,6 +10,7 @@ import inspect
 import os
 import subprocess
 import sys
+import types
 import zipfile
 import zipimport
 
@@ -17,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F, types as T
 
 import html_parser_spark
+from html_parser_spark import _pyworker
 from html_parser_spark.spark.pipeline import kernel_stage
 
 
@@ -168,6 +170,23 @@ def test_settle_collects_cycles_then_freezes_once():
         cwd=root, env=env, capture_output=True, text=True, timeout=120,
     )
     assert proc.returncode == 0, proc.stderr
+
+
+def test_settle_reads_the_freeze_count_once(monkeypatch):
+    """``gc.get_freeze_count()`` walks the whole permanent generation, and
+    settle() runs after every batch: only its first call may read it."""
+    calls = []
+    fake_gc = types.SimpleNamespace(
+        get_freeze_count=lambda: calls.append("get_freeze_count") or 0,
+        collect=lambda: calls.append("collect"),
+        freeze=lambda: calls.append("freeze"),
+    )
+    monkeypatch.setattr(_pyworker, "gc", fake_gc)
+    monkeypatch.setattr(_pyworker, "_settled", False)
+    _pyworker.settle()
+    assert calls == ["get_freeze_count", "collect", "freeze"]
+    _pyworker.settle()
+    assert calls == ["get_freeze_count", "collect", "freeze"]
 
 
 def test_worker_heap_frozen_after_a_kernel_task(spark):

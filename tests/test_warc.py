@@ -247,10 +247,10 @@ def test_fetch_warc_records_by_index(spark, tmp_path):
         ts, body = orig[r["url"]]
         assert bytes(r["html"]) == body and r["warc_ts"] == ts
         assert r["http_status"] == 200 and r["warc_type"] == "response"
-    # plan shape: index-side exchange only (tiny), then one mapInPandas —
+    # plan shape: index-side exchange only (tiny), then one mapInArrow —
     # the archive files themselves are never rescanned
     plan = fetch_warc_records(wanted)._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
 
 
 def test_request_record_http_split():
